@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Bench main (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
@@ -13,41 +13,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * plan. (The previous `count()` method let Catalyst eliminate top-level
   * sorts and unused left joins under the count aggregate — it understated
   * ORDER BY-heavy queries; that artifact made r02's q_star_fact look 2.4×
-  * faster than the real build.) Set SPARK_GRAFT_BENCH_MODE=count for a
-  * side-by-side run with the old method (continuity with r01–r03 numbers).
+  * faster than the real build.)
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val mode = sys.env.getOrElse("SPARK_GRAFT_BENCH_MODE", "noop")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Use the sort-based shuffle writer at every partition count (r14).
-      // The default bypass-merge writer opens numPartitions temp files per
-      // map task and then concatenates them — an O(maps × reducers)
-      // tiny-file syscall storm (guide §2.2's quadratic block growth, paid
-      // as open()/copyFileStreamNIO, measured at ~60% of sampled task time
-      // across the suite at local[32]). The sort writer emits ONE data +
-      // index file per map task. Production shuffles run >200 partitions,
-      // above the bypass threshold, so the sort path is also what a real
-      // cluster executes — this aligns local runs with that posture.
-      // Parameterized for A/B; results are unaffected (writer choice only).
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
-      .getOrCreate()
-    // ERROR, not WARN: setLogLevel overrides log4j2.properties at runtime,
-    // and WindowExec WARNs (bounded frames, documented in SCALE.md) would
-    // re-flood the tail the driver parses the result line from.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
 
     // Execute the user-visible plan: noop sink consumes every row/column.
-    def run(df: DataFrame): Unit =
-      if (mode == "count") { df.count(): Unit }
-      else df.write.format("noop").mode("overwrite").save()
+    def run(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
     // untimed warmup: exercises parquet reader, codegen, broadcast, noop sink
     try SparkEntry.queries.get("q_j1_broadcast_join")

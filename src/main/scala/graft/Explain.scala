@@ -1,23 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints the formatted physical plan of selected queries
   * so the scale posture is inspectable (broadcast joins, pushed filters,
   * pruned schemas, whole-stage codegen spans). Usage:
   *   runMain graft.Explain <sfDir> [queryName ...]
+  * The session is `Session.local()`: local[$SPARK_GRAFT_CPUS].
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     names.foreach { n =>
       SparkEntry.queries.get(n).foreach { fn =>
         println(s"\n========== $n ==========")

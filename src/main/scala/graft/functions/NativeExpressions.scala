@@ -1,13 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions (SURVEY §7.3: cosine is "the only place a
@@ -602,139 +601,37 @@ object NativeExpressions {
       copy(child = newChild)
   }
 
-  /** Register the native functions on a session (idempotent). The library
-    * deployment path is [[GraftExtensions]] via spark.sql.extensions; this
-    * direct registration serves sessions the engine did not construct.
+  /** Column-API entry points. Each installs the native functions on
+    * `spark` first, a no-op once they are in (see [[GraftExtensions.install]]).
     */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_sim",
-      (children: Seq[Expression]) => CosineSimilarity(children(0), children(1)),
-      "built-in")
-    reg.createOrReplaceTempFunction("simhash",
-      (children: Seq[Expression]) =>
-        if (children.length > 1)
-          SimHash64(children.head, children(1).eval().asInstanceOf[Int])
-        else SimHash64(children.head),
-      "built-in")
-    reg.createOrReplaceTempFunction("shingle_hashes",
-      (children: Seq[Expression]) =>
-        if (children.length > 1)
-          ShingleHashes(children.head, children(1).eval().asInstanceOf[Int])
-        else ShingleHashes(children.head),
-      "built-in")
-    reg.createOrReplaceTempFunction("char_gram_hashes",
-      (children: Seq[Expression]) => CharGramHashes(children.head),
-      "built-in")
-    reg.createOrReplaceTempFunction("minhash_sigs",
-      (children: Seq[Expression]) => MinHashSigs(children(0),
-        children(1).eval().asInstanceOf[Int]),
-      "built-in")
-    reg.createOrReplaceTempFunction("simhash_from_hashes",
-      (children: Seq[Expression]) =>
-        if (children.length > 1)
-          SimHashFromHashes(children.head, children(1).eval().asInstanceOf[Int])
-        else SimHashFromHashes(children.head),
-      "built-in")
-    reg.createOrReplaceTempFunction("shingle_hashes_md5",
-      (children: Seq[Expression]) =>
-        if (children.length > 1)
-          ShingleHashes(children.head, children(1).eval().asInstanceOf[Int],
-            md5 = true)
-        else ShingleHashes(children.head, md5 = true),
-      "built-in")
-    reg.createOrReplaceTempFunction("char_gram_hashes_md5",
-      (children: Seq[Expression]) => CharGramHashes(children.head, md5 = true),
-      "built-in")
-    reg.createOrReplaceTempFunction("token_hashes_md5",
-      (children: Seq[Expression]) => StringArrayHashes(children.head, md5 = true),
-      "built-in")
-    reg.createOrReplaceTempFunction("approx_hint",
-      (children: Seq[Expression]) => ApproxHint(children.head),
-      "built-in")
-    reg.createOrReplaceTempFunction("jaro_winkler",
-      (children: Seq[Expression]) => JaroWinkler(children(0), children(1)),
-      "built-in")
+  private def call(spark: SparkSession, name: String, args: Column*): Column = {
+    GraftExtensions.install(spark)
+    call_function(name, args: _*)
   }
-
-  /** Column-API entry points. */
-  def cosineSim(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark); call_function("cosine_sim", a, b)
-  }
-  def approxHint(spark: SparkSession, c: Column): Column = {
-    register(spark); call_function("approx_hint", c)
-  }
-  def simhashNative(spark: SparkSession, toks: Column, bits: Int = 64): Column = {
-    register(spark)
-    call_function("simhash", toks, org.apache.spark.sql.functions.lit(bits))
-  }
-  def shingleHashes(spark: SparkSession, toks: Column): Column = {
-    register(spark); call_function("shingle_hashes", toks)
-  }
-  def shingleHashes(spark: SparkSession, toks: Column, n: Int): Column = {
-    register(spark)
-    call_function("shingle_hashes", toks,
-      org.apache.spark.sql.functions.lit(n))
-  }
-  def charGramHashes(spark: SparkSession, text: Column): Column = {
-    register(spark); call_function("char_gram_hashes", text)
-  }
-  def minHashSigs(spark: SparkSession, hashes: Column, numHashes: Int): Column = {
-    register(spark)
-    call_function("minhash_sigs", hashes, org.apache.spark.sql.functions.lit(numHashes))
-  }
-  def simhashFromHashes(spark: SparkSession, hashes: Column, bits: Int = 64): Column = {
-    register(spark)
-    call_function("simhash_from_hashes", hashes, org.apache.spark.sql.functions.lit(bits))
-  }
-  def shingleHashesMd5(spark: SparkSession, toks: Column): Column = {
-    register(spark); call_function("shingle_hashes_md5", toks)
-  }
-  def shingleHashesMd5(spark: SparkSession, toks: Column, n: Int): Column = {
-    register(spark)
-    call_function("shingle_hashes_md5", toks,
-      org.apache.spark.sql.functions.lit(n))
-  }
-  def charGramHashesMd5(spark: SparkSession, text: Column): Column = {
-    register(spark); call_function("char_gram_hashes_md5", text)
-  }
-  def tokenHashesMd5(spark: SparkSession, toks: Column): Column = {
-    register(spark); call_function("token_hashes_md5", toks)
-  }
-  def jaroWinkler(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark); call_function("jaro_winkler", a, b)
-  }
-}
-
-/** `spark.sql.extensions=graft.functions.GraftExtensions` installs the
-  * native functions into every session of a deployment.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(NativeExpressions.CosineSimilarity.getClass.getName, "cosine_sim"),
-      (children: Seq[Expression]) =>
-        NativeExpressions.CosineSimilarity(children(0), children(1))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash"),
-      new ExpressionInfo(NativeExpressions.SimHash64.getClass.getName, "simhash"),
-      (children: Seq[Expression]) => NativeExpressions.SimHash64(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("approx_hint"),
-      new ExpressionInfo(NativeExpressions.ApproxHint.getClass.getName, "approx_hint"),
-      (children: Seq[Expression]) => NativeExpressions.ApproxHint(children.head)))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(NativeExpressions.JaroWinkler.getClass.getName, "jaro_winkler"),
-      (children: Seq[Expression]) =>
-        NativeExpressions.JaroWinkler(children(0), children(1))))
-    // lands in the operator-optimization batches — before Catalyst's own
-    // RewriteDistinctAggregates, so count(DISTINCT) is still intact when
-    // the rule pattern-matches (see ApproxDistinctRewrite's scaladoc).
-    ext.injectOptimizerRule(graft.plans.ApproxDistinctRewrite)
-    // whole-operator plan: TopKPerKeyPlan → TopKPerKeyExec (heap-based
-    // per-key top-k, no sort — see graft.plans.TopKPerKey)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
-  }
+  def cosineSim(spark: SparkSession, a: Column, b: Column): Column =
+    call(spark, "cosine_sim", a, b)
+  def approxHint(spark: SparkSession, c: Column): Column =
+    call(spark, "approx_hint", c)
+  def simhashNative(spark: SparkSession, toks: Column, bits: Int = 64): Column =
+    call(spark, "simhash", toks, lit(bits))
+  def shingleHashes(spark: SparkSession, toks: Column): Column =
+    call(spark, "shingle_hashes", toks)
+  def shingleHashes(spark: SparkSession, toks: Column, n: Int): Column =
+    call(spark, "shingle_hashes", toks, lit(n))
+  def charGramHashes(spark: SparkSession, text: Column): Column =
+    call(spark, "char_gram_hashes", text)
+  def minHashSigs(spark: SparkSession, hashes: Column, numHashes: Int): Column =
+    call(spark, "minhash_sigs", hashes, lit(numHashes))
+  def simhashFromHashes(spark: SparkSession, hashes: Column, bits: Int = 64): Column =
+    call(spark, "simhash_from_hashes", hashes, lit(bits))
+  def shingleHashesMd5(spark: SparkSession, toks: Column): Column =
+    call(spark, "shingle_hashes_md5", toks)
+  def shingleHashesMd5(spark: SparkSession, toks: Column, n: Int): Column =
+    call(spark, "shingle_hashes_md5", toks, lit(n))
+  def charGramHashesMd5(spark: SparkSession, text: Column): Column =
+    call(spark, "char_gram_hashes_md5", text)
+  def tokenHashesMd5(spark: SparkSession, toks: Column): Column =
+    call(spark, "token_hashes_md5", toks)
+  def jaroWinkler(spark: SparkSession, a: Column, b: Column): Column =
+    call(spark, "jaro_winkler", a, b)
 }

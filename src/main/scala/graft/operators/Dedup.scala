@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scratch
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -241,12 +242,7 @@ object Dedup {
     val sig = sigFrame(base, "hs", numHashes)
     val candidates =
       bandedCandidatesCapped(sig, numHashes, rowsPerBand, maxBucket, hasher)
-    val shA = base.select(col("id").as("id_a"), col("hs").as("hs_a"))
-    val shB = base.select(col("id").as("id_b"), col("hs").as("hs_b"))
-    candidates.join(shA, Seq("id_a")).join(shB, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(jaccard(col("hs_a"), col("hs_b")), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    verifyJaccard(candidates, base, "hs", threshold)
   }
 
   /** Signature-agreement prefilter: keep candidate pairs whose minhash
@@ -280,6 +276,22 @@ object Dedup {
     when(uni === 0, 0.0).otherwise(inter / uni)
   }
 
+  /** The exact-Jaccard verify on candidate pairs: re-attach each side's
+    * hash array (column `arr` of the (id, arr) frame `base`) to the
+    * (id_a, id_b) candidates and keep (id_a, id_b, jaccard) at ≥
+    * `threshold`, jaccard rounded to 6 places. The arrays hold 64-bit
+    * hashes, not strings: collisions are negligible and longs shuffle and
+    * intersect far cheaper.
+    */
+  private def verifyJaccard(candidates: DataFrame, base: DataFrame, arr: String,
+                            threshold: Double): DataFrame =
+    candidates
+      .join(base.select(col("id").as("id_a"), col(arr).as("hs_a")), Seq("id_a"))
+      .join(base.select(col("id").as("id_b"), col(arr).as("hs_b")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        round(jaccard(col("hs_a"), col("hs_b")), 6).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+
   /** MinHash+LSH near-duplicate pairs with verified Jaccard ≥ threshold.
     *
     * Pipeline: tokens → shingles → shingle hashes → minhash sigs → band
@@ -301,14 +313,7 @@ object Dedup {
       .persistTracked()
     val sig = sigFrame(base, "hs", numHashes)
     val candidates = bandedCandidates(sig, numHashes, rowsPerBand, hasher)
-    // exact-Jaccard verify over the HASH arrays (64-bit collisions are
-    // negligible and longs shuffle/intersect far cheaper than strings)
-    val shA = base.select(col("id").as("id_a"), col("hs").as("hs_a"))
-    val shB = base.select(col("id").as("id_b"), col("hs").as("hs_b"))
-    candidates.join(shA, Seq("id_a")).join(shB, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(jaccard(col("hs_a"), col("hs_b")), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    verifyJaccard(candidates, base, "hs", threshold)
   }
 
   /** WEIGHTED-JACCARD near-duplicates (tf-weighted shingles): the
@@ -434,12 +439,7 @@ object Dedup {
       .persistTracked()
     val sig = sigFrame(base, "hs", numHashes)
     val candidates = bandedCandidates(sig, numHashes, rowsPerBand, hasher)
-    val shA = base.select(col("id").as("id_a"), col("hs").as("hs_a"))
-    val shB = base.select(col("id").as("id_b"), col("hs").as("hs_b"))
-    candidates.join(shA, Seq("id_a")).join(shB, Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(jaccard(col("hs_a"), col("hs_b")), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    verifyJaccard(candidates, base, "hs", threshold)
   }
 
   /** SimHash bits from a MATERIALIZED token-hash array: per-bit majority
@@ -870,12 +870,7 @@ object Dedup {
     val candidates = bandedCandidates(sig, numHashes, rowsPerBand, hasher)
     val minAgree = math.ceil(numHashes * (threshold - 0.2)).toInt
     val surviving = agreementFilter(candidates, sig, numHashes, minAgree)
-    surviving
-      .join(withGrams.select(col("id").as("id_a"), col("grams").as("g_a")), Seq("id_a"))
-      .join(withGrams.select(col("id").as("id_b"), col("grams").as("g_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(jaccard(col("g_a"), col("g_b")), 6).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    verifyJaccard(surviving, withGrams, "grams", threshold)
   }
 
   /** (id, band, key) band-key frame from a signature frame — the exploded
@@ -1142,12 +1137,7 @@ object Dedup {
           least(col("a.sz") - col("a.rn"), col("b.sz") - col("b.rn")) + 1 >=
             oBound)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
-    cand
-      .join(base.select(col("id").as("id_a"), col("hs").as("hs_a")), Seq("id_a"))
-      .join(base.select(col("id").as("id_b"), col("hs").as("hs_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        round(jaccard(col("hs_a"), col("hs_b")), 6).as("jaccard"))
-      .filter(col("jaccard") >= tau)
+    verifyJaccard(cand, base, "hs", tau)
   }
 
   /** Containment (asymmetric-Jaccard) near-dups — doc-IN-doc detection:
@@ -1891,7 +1881,7 @@ object Dedup {
       val l2 = docs.filter(col("doc_id") % 3 === 0).select("doc_id", "text")
         .unionByName(exactCopies).unionByName(nearCopies)
         .repartition(spread, col("doc_id"))
-      val storePath = "/root/repo/target/scratch/dedup_fp_store"
+      val storePath = Scratch.dir("dedup_fp_store")
       buildFingerprintStore(l1, hasher = Md5Hash)
         .write.mode("overwrite").parquet(storePath)
       incrementalDedup(l2, s.read.parquet(storePath), hasher = Md5Hash)

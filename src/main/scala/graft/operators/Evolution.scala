@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scratch
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -588,7 +589,7 @@ object Evolution {
     // parquet write so the audited footer is the artifact a downstream
     // reader would actually see.
     "q_schema_drift" -> { (s, d) =>
-      val scratch = "/root/repo/target/scratch/schema_b"
+      val scratch = Scratch.dir("schema_b")
       s.read.parquet(s"$d/orders.parquet")
         .select(col("o_orderkey"), col("o_custkey").cast("int").as("o_custkey"),
           col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),

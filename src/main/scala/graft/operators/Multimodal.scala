@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scratch
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -90,7 +91,7 @@ object Multimodal {
     // flow (16-byte md5 + path-derived metadata), never payloads, into
     // one map-side-combined groupBy at content cardinality.
     "q_mm_dedup" -> { (s, d) =>
-      val root = "/root/repo/target/scratch/mm_blobs"
+      val root = Scratch.dir("mm_blobs")
       graft.sources.Sources.rmDir(root)
       val rows = Tables.documents(s, d).filter(col("doc_id") < 24)
         .select("doc_id", "text").collect()

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Scratch
 import graft.CacheScope.TrackedDataset
 
 /** The reference DAG re-expressed as ONE end-to-end driver (SURVEY §2.10;
@@ -208,7 +209,7 @@ object Pipeline {
     // duplication (a broken guard or non-idempotent load) shows up as a
     // count mismatch.
     "q_pipeline_idempotence" -> { (s, d) =>
-      val wh = "/root/repo/target/scratch/pipeline_wh"
+      val wh = Scratch.dir("pipeline_wh")
       reset(wh)
       runOnce(s, d, wh)
       runOnce(s, d, wh)
@@ -222,7 +223,7 @@ object Pipeline {
     // (c) zero NULL FKs in the star fact — the exact failure the frozen
     // skip-guard would produce on augmented data.
     "q_pipeline_incremental" -> { (s, d) =>
-      val wh = "/root/repo/target/scratch/pipeline_inc_wh"
+      val wh = Scratch.dir("pipeline_inc_wh")
       reset(wh)
       val subset = col("l_orderkey") % 2 === 0
       runIncremental(s, d, wh, Some(subset))

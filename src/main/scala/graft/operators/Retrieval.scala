@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scratch
 import graft.Tables
 import graft.operators.TextAnalysis.{enStopwords, tokens}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -282,7 +283,7 @@ object Retrieval {
     // incremental-dedup/HLL-store pattern applied to the search index.
     "q_index_incremental" -> { (s, d) =>
       val docs = Tables.documents(s, d)
-      val store = "/root/repo/target/scratch/df_store"
+      val store = Scratch.dir("df_store")
       documentFrequency(docs.filter(col("doc_id") % 3 =!= 0))
         .write.mode("overwrite").parquet(store)
       documentFrequency(docs.filter(col("doc_id") % 3 === 0))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Scratch
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -195,7 +196,7 @@ object Sketches {
     "q_hll_incremental" -> { (s, d) =>
       val ev = Tables.events(s, d)
         .select(col("event_type"), col("user_id"), col("event_id"))
-      val storePath = "/root/repo/target/scratch/hll_store"
+      val storePath = Scratch.dir("hll_store")
       ev.filter(col("event_id") % 2 === 0)
         .groupBy("event_type").agg(hll_sketch_agg(col("user_id")).as("sk"))
         .write.mode("overwrite").parquet(storePath)
@@ -232,7 +233,7 @@ object Sketches {
       val ev = Tables.events(s, d)
         .select(col("event_type").as("grp"),
           col("value").cast("double").as("x"), col("event_id"))
-      val storePath = "/root/repo/target/scratch/kll_store"
+      val storePath = Scratch.dir("kll_store")
       ev.filter(col("event_id") % 2 === 0)
         .groupBy("grp").agg(kllB(col("x")).as("sk"))
         .write.mode("overwrite").parquet(storePath)
@@ -392,20 +393,17 @@ object Sketches {
           (col("mx") <= 1.0 / nb + 0.03 &&
             col("mn") >= 1.0 / nb - 0.03).as("within_balance"))
     },
-    // The OPTIMIZER-REWRITE path to the same sketch: install
-    // ApproxDistinctRewrite (here via experimental.extraOptimizations —
-    // the spark.sql.extensions deployment injects it at session boot),
-    // mark one count(DISTINCT) with approx_hint, and verify the rewritten
-    // aggregate honors the 2% HLL++ contract against the un-hinted exact
-    // twin. Two separate Aggregate nodes on purpose: a single node with
+    // The OPTIMIZER-REWRITE path to the same sketch: mark one
+    // count(DISTINCT) with approx_hint, whose helper installs
+    // ApproxDistinctRewrite (GraftExtensions.install puts it in
+    // experimental.extraOptimizations; the spark.sql.extensions deployment
+    // injects it at session boot), and verify the rewritten aggregate
+    // honors the 2% HLL++ contract against the un-hinted exact twin. Two
+    // separate Aggregate nodes on purpose: a single node with
     // two distinct groups is expanded by Catalyst's
     // RewriteDistinctAggregates before the end-placed user batch runs
     // (the injected-extension path has no such constraint).
     "q_approx_rewrite" -> { (s, d) =>
-      if (!s.experimental.extraOptimizations
-            .exists(_.isInstanceOf[graft.plans.ApproxDistinctRewrite]))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ graft.plans.ApproxDistinctRewrite(s)
       val o = Tables.orders(s, d)
       val exact = o.agg(countDistinct(col("o_custkey")).as("exact_distinct"))
       val approx = o.agg(countDistinct(graft.functions.NativeExpressions

@@ -584,7 +584,7 @@ object Training {
     import graft.CacheScope.TrackedDataset
     // spread before the n×n distance fan-out: the single-row-group scan
     // otherwise leaves the WHOLE crossJoin dot-product pass in one task
-    // (ProfileQ r14: one 2.5 s single-task stage, 31 cores idle)
+    // (stage profile on 32 cores: one 2.5 s single-task stage, 31 cores idle)
     val p = quantizeEmbeddings(emb
         .repartition(emb.sparkSession.sparkContext.defaultParallelism))
       .select(col("vec_id"), col("codes"),
@@ -819,7 +819,7 @@ object Training {
     "q_embed_quant" -> { (s, d) =>
       // single-row-group local table: spread before the per-vector
       // quantize + two 64-term folds, which otherwise run in ONE task
-      // (ProfileQ r14: the whole query was 2 sequential single-task
+      // (stage profile: the whole query was 2 sequential single-task
       // stages, ~3 s of single-threaded CPU). At cluster scale the scan
       // is already many-partition; the raw-row shuffle is noise.
       quantizeEmbeddings(Tables.embeddings(s, d)

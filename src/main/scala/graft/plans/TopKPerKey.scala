@@ -73,7 +73,7 @@ object TopKStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   *
   * In-memory state is an on-heap HashMap of k-element heaps of copied
   * UnsafeRows. When the retained-row count crosses `spillRows` (default
-  * 4M; `graft.topk.spillRows` system property), the pass flushes every
+  * [[DefaultSpillRows]], 4M), the pass flushes every
   * current survivor to a local spill file — keys written in their
   * UnsafeRow BYTE order, each key's ≤ k rows contiguous — and clears the
   * map. At the end, the spill files plus a final flush are k-way MERGED
@@ -85,8 +85,7 @@ object TopKStrategy extends org.apache.spark.sql.execution.SparkStrategy {
   * no-spill fast path is unchanged — zero extra copies, zero I/O.
   */
 private[plans] object TopKHeapPass {
-  def defaultSpillRows: Int =
-    sys.props.get("graft.topk.spillRows").map(_.toInt).getOrElse(1 << 22)
+  val DefaultSpillRows: Int = 1 << 22
 
   private val keyBytesOrd: Ordering[Array[Byte]] = new Ordering[Array[Byte]] {
     override def compare(a: Array[Byte], b: Array[Byte]): Int = {
@@ -131,7 +130,7 @@ private[plans] object TopKHeapPass {
 
   def run(childOutput: Seq[Attribute], grouping: Seq[Expression],
           order: Seq[SortOrder], k: Int,
-          spillRows: Int = defaultSpillRows,
+          spillRows: Int = DefaultSpillRows,
           onSpill: Int => Unit = _ => ())(
           iter: Iterator[InternalRow]): Iterator[InternalRow] = {
     val keyProj = UnsafeProjection.create(grouping, childOutput)
@@ -244,6 +243,34 @@ private[plans] object TopKHeapPass {
   }
 }
 
+/** The heap pass as a physical node. The map-side partial and the final
+  * exec run the same pass with the same spill metrics; they differ only in
+  * the distribution they require.
+  */
+sealed trait TopKHeapExec extends UnaryExecNode {
+  def grouping: Seq[Expression]
+  def order: Seq[SortOrder]
+  def k: Int
+  def spillRows: Int
+
+  override lazy val metrics: Map[String, org.apache.spark.sql.execution.metric.SQLMetric] = Map(
+    "spillEpochs" -> org.apache.spark.sql.execution.metric.SQLMetrics
+      .createMetric(sparkContext, "spill epochs"),
+    "spilledRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
+      .createMetric(sparkContext, "spilled rows"))
+
+  override def output: Seq[Attribute] = child.output
+  override def outputPartitioning: Partitioning = child.outputPartitioning
+
+  override protected def doExecute(): RDD[InternalRow] = {
+    val (childOutput, groupingExprs, orderExprs, kk, sr) =
+      (child.output, grouping, order, k, spillRows)
+    val (me, mr) = (metrics("spillEpochs"), metrics("spilledRows"))
+    child.execute().mapPartitions(TopKHeapPass.run(childOutput, groupingExprs,
+      orderExprs, kk, sr, onSpill = n => { me.add(1); mr.add(n) }))
+  }
+}
+
 /** Map-side partial: top-k per key within each incoming partition, no
   * distribution requirement — runs before the exchange and shrinks what
   * the shuffle carries to ≤ k rows per key per mapper.
@@ -253,25 +280,7 @@ case class TopKPerKeyPartialExec(
     order: Seq[SortOrder],
     k: Int,
     spillRows: Int,
-    child: SparkPlan) extends UnaryExecNode {
-
-  override lazy val metrics: Map[String, org.apache.spark.sql.execution.metric.SQLMetric] = Map(
-    "spillEpochs" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "spill epochs"),
-    "spilledRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "spilled rows"))
-
-  override def output: Seq[Attribute] = child.output
-  override def outputPartitioning: Partitioning = child.outputPartitioning
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val (childOutput, groupingExprs, orderExprs, kk, sr) =
-      (child.output, grouping, order, k, spillRows)
-    val (me, mr) = (metrics("spillEpochs"), metrics("spilledRows"))
-    child.execute().mapPartitions(TopKHeapPass.run(childOutput, groupingExprs,
-      orderExprs, kk, sr, onSpill = n => { me.add(1); mr.add(n) }))
-  }
-
+    child: SparkPlan) extends TopKHeapExec {
   override protected def withNewChildInternal(newChild: SparkPlan): TopKPerKeyPartialExec =
     copy(child = newChild)
 }
@@ -281,30 +290,13 @@ case class TopKPerKeyExec(
     order: Seq[SortOrder],
     k: Int,
     spillRows: Int,
-    child: SparkPlan) extends UnaryExecNode {
-
-  override lazy val metrics: Map[String, org.apache.spark.sql.execution.metric.SQLMetric] = Map(
-    "spillEpochs" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "spill epochs"),
-    "spilledRows" -> org.apache.spark.sql.execution.metric.SQLMetrics
-      .createMetric(sparkContext, "spilled rows"))
-
-  override def output: Seq[Attribute] = child.output
+    child: SparkPlan) extends TopKHeapExec {
 
   /** The one exchange: cluster by key. NO required ordering — that is the
     * point (the window plan would demand a full sort here).
     */
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(grouping) :: Nil
-  override def outputPartitioning: Partitioning = child.outputPartitioning
-
-  override protected def doExecute(): RDD[InternalRow] = {
-    val (childOutput, groupingExprs, orderExprs, kk, sr) =
-      (child.output, grouping, order, k, spillRows)
-    val (me, mr) = (metrics("spillEpochs"), metrics("spilledRows"))
-    child.execute().mapPartitions(TopKHeapPass.run(childOutput, groupingExprs,
-      orderExprs, kk, sr, onSpill = n => { me.add(1); mr.add(n) }))
-  }
 
   override protected def withNewChildInternal(newChild: SparkPlan): TopKPerKeyExec =
     copy(child = newChild)
@@ -314,23 +306,14 @@ object TopKPerKey {
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending}
 
-  /** Install [[TopKStrategy]] on the session (idempotent). A deployment
-    * does this once via `spark.sql.extensions=graft.functions.
-    * GraftExtensions`; this path serves ad-hoc sessions.
-    */
-  def install(s: SparkSession): Unit =
-    if (!s.experimental.extraStrategies.contains(TopKStrategy))
-      s.experimental.extraStrategies =
-        s.experimental.extraStrategies :+ TopKStrategy
-
   /** Top-k rows per key group, `order` as (column, ascending) pairs —
     * the caller includes a unique tie-break column for determinism.
     */
   def topKPerKey(df: DataFrame, keys: Seq[String],
                  order: Seq[(String, Boolean)], k: Int,
-                 spillRows: Int = TopKHeapPass.defaultSpillRows): DataFrame = {
+                 spillRows: Int = TopKHeapPass.DefaultSpillRows): DataFrame = {
     val s = df.sparkSession
-    install(s)
+    graft.functions.GraftExtensions.install(s)
     val lp = df.queryExecution.analyzed
     def attr(n: String) = lp.output.find(_.name == n).getOrElse(
       throw new IllegalArgumentException(

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.Scratch
 import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -28,7 +29,7 @@ object Sources {
     * identical). Scratch lives under target/ (gitignored).
     */
   def csvRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val tmp = "/root/repo/target/scratch/csv_orders"
+    val tmp = Scratch.dir("csv_orders")
     Tables.orders(s, d)
       .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate")
       .write.mode("overwrite")
@@ -58,7 +59,7 @@ object Sources {
     * produces anyway. Schema is declared, never inferred.
     */
   def csvQuotedRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val tmp = "/root/repo/target/scratch/csv_quoted"
+    val tmp = Scratch.dir("csv_quoted")
     val planted = Tables.documents(s, d)
       .filter(col("doc_id") < 50)
       .select(col("doc_id"),
@@ -89,7 +90,7 @@ object Sources {
     * digest). Schema declared, never inferred.
     */
   def csvLatin1Roundtrip(s: SparkSession, d: String): DataFrame = {
-    val tmp = "/root/repo/target/scratch/csv_latin1"
+    val tmp = Scratch.dir("csv_latin1")
     val planted = Tables.documents(s, d)
       .filter(col("doc_id") < 30)
       .select(col("doc_id"),
@@ -113,7 +114,7 @@ object Sources {
     * dags/etl_crash_traffic.py:641-654).
     */
   def idempotentWriteRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val path = "/root/repo/target/scratch/idempotent_orders"
+    val path = Scratch.dir("idempotent_orders")
     val dir = new java.io.File(path)
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm)
@@ -171,7 +172,7 @@ object Sources {
     * fit the driver hash; counts + decimal sums suffice and match SQL).
     */
   def jsonlRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val path = "/root/repo/target/scratch/jsonl_docs"
+    val path = Scratch.dir("jsonl_docs")
     rmDir(path)
     Tables.documents(s, d)
       .select("doc_id", "lang", "source", "text")
@@ -200,7 +201,7 @@ object Sources {
     * digest/length audit is the standard ingest fixity check.
     */
   def binaryIngest(s: SparkSession, d: String): DataFrame = {
-    val dir = "/root/repo/target/scratch/blobs"
+    val dir = Scratch.dir("blobs")
     rmDir(dir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     // fixture: 20 small files on the driver (fixture setup, not the
@@ -238,7 +239,7 @@ object Sources {
   def jdbcRoundtrip(s: SparkSession, d: String): DataFrame = {
     // keep derby.log out of the repo root (read at engine boot; this is
     // the only Derby user in the JVM)
-    System.setProperty("derby.system.home", "/root/repo/target/scratch")
+    System.setProperty("derby.system.home", Scratch.root)
     val url = "jdbc:derby:memory:graftdb;create=true"
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
@@ -263,7 +264,7 @@ object Sources {
     * q_zorder_layout (file-internal clustering below the partition grain).
     */
   def partitionedPrunedScan(s: SparkSession, d: String): DataFrame = {
-    val path = "/root/repo/target/scratch/orders_by_year"
+    val path = Scratch.dir("orders_by_year")
     rmDir(path)
     Tables.orders(s, d)
       .withColumn("o_year", year(col("o_orderdate")))
@@ -294,8 +295,8 @@ object Sources {
     * plus the compaction effect itself (fewer files, oracle-pinned TRUE).
     */
   def compactionRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val src = "/root/repo/target/scratch/compact_src"
-    val dst = "/root/repo/target/scratch/compact_dst"
+    val src = Scratch.dir("compact_src")
+    val dst = Scratch.dir("compact_dst")
     rmDir(src); rmDir(dst)
     Tables.documents(s, d).select("doc_id", "lang", "text")
       .repartition(32).write.parquet(src) // the accreted small files
@@ -328,7 +329,7 @@ object Sources {
     * source. Config is restored after the write (no cross-query bleed).
     */
   def partitionDynamicOverwrite(s: SparkSession, d: String): DataFrame = {
-    val path = "/root/repo/target/scratch/orders_dyn_overwrite"
+    val path = Scratch.dir("orders_dyn_overwrite")
     rmDir(path)
     val base = Tables.orders(s, d)
       .withColumn("o_year", year(col("o_orderdate")))
@@ -363,7 +364,7 @@ object Sources {
     * the `rewritten` flag marks which partitions were touched.
     */
   def erasureRewrite(s: SparkSession, d: String): DataFrame = {
-    val path = "/root/repo/target/scratch/orders_erasure"
+    val path = Scratch.dir("orders_erasure")
     rmDir(path)
     val subject = col("o_custkey") % 10000 === 7
     val base = Tables.orders(s, d)
@@ -408,7 +409,7 @@ object Sources {
     * quarantine + count, not fail or drop).
     */
   def corruptRecordScan(s: SparkSession, d: String): DataFrame = {
-    val path = "/root/repo/target/scratch/csv_corrupt"
+    val path = Scratch.dir("csv_corrupt")
     rmDir(path)
     Tables.orders(s, d).select("o_orderkey", "o_totalprice")
       .coalesce(1).write.option("header", true).csv(path)
@@ -436,7 +437,7 @@ object Sources {
     * null (the additive-evolution contract of a long-lived lake table).
     */
   def schemaMergeScan(s: SparkSession, d: String): DataFrame = {
-    val base = "/root/repo/target/scratch/schema_merge"
+    val base = Scratch.dir("schema_merge")
     rmDir(base)
     val o = Tables.orders(s, d)
     o.filter(col("o_orderkey") % 2 === 0).select("o_orderkey")
@@ -455,7 +456,7 @@ object Sources {
     * the ORC round-trip (type mapping, timestamp encoding) breaks the hash.
     */
   def orcRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val path = "/root/repo/target/scratch/orc_lineitem"
+    val path = Scratch.dir("orc_lineitem")
     rmDir(path)
     Tables.lineitem(s, d).filter(col("l_quantity") > 40)
       .write.orc(path)
@@ -478,7 +479,7 @@ object Sources {
     * relational plan.
     */
   def xmlRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val path = "/root/repo/target/scratch/xml_nation"
+    val path = Scratch.dir("xml_nation")
     rmDir(path)
     Tables.nation(s, d)
       .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))

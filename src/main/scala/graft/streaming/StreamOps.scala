@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Scratch
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -73,7 +74,7 @@ object StreamOps {
     val q = agg.writeStream
       .format("memory").queryName(name)
       .outputMode("complete")
-      .option("checkpointLocation", s"/root/repo/target/scratch/ckpt_$name")
+      .option("checkpointLocation", Scratch.dir(s"ckpt_$name"))
       .trigger(Trigger.AvailableNow())
       .start()
     awaitAndUnload(q)
@@ -234,7 +235,7 @@ object StreamOps {
   }
 
   private def cleanCheckpoint(name: String): Unit = {
-    val dir = new java.io.File(s"/root/repo/target/scratch/ckpt_$name")
+    val dir = new java.io.File(Scratch.dir(s"ckpt_$name"))
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm)
       f.delete(): Unit
@@ -629,8 +630,7 @@ object StreamOps {
           |r_ts > l_ts AND r_ts <= l_ts + interval 10 minutes""".stripMargin))
       val q = pairs.writeStream.format("memory").queryName("stream_interval_join")
         .outputMode("append")
-        .option("checkpointLocation",
-          "/root/repo/target/scratch/ckpt_stream_interval_join")
+        .option("checkpointLocation", Scratch.dir("ckpt_stream_interval_join"))
         .trigger(Trigger.AvailableNow())
         .start()
       awaitAndUnload(q)
@@ -653,7 +653,7 @@ object StreamOps {
     // from the result; the oracle is the plain batch LEFT JOIN.
     "q_stream_left_join" -> { (s, d) => withStatePartitions(s, 8) {
       cleanCheckpoint("stream_left_join")
-      val scratch = "/root/repo/target/scratch/left_join_src"
+      val scratch = Scratch.dir("left_join_src")
       rmPath(scratch); new java.io.File(scratch).mkdirs()
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$d/events.parquet"),
@@ -696,8 +696,7 @@ object StreamOps {
           "left_outer")
       val q = pairs.writeStream.format("memory").queryName("stream_left_join")
         .outputMode("append")
-        .option("checkpointLocation",
-          "/root/repo/target/scratch/ckpt_stream_left_join")
+        .option("checkpointLocation", Scratch.dir("ckpt_stream_left_join"))
         .trigger(Trigger.AvailableNow())
         .start()
       awaitAndUnload(q)
@@ -733,8 +732,7 @@ object StreamOps {
       val q = cells.writeStream.format("memory")
         .queryName("stream_countmin")
         .outputMode("update")
-        .option("checkpointLocation",
-          "/root/repo/target/scratch/ckpt_stream_countmin")
+        .option("checkpointLocation", Scratch.dir("ckpt_stream_countmin"))
         .trigger(Trigger.AvailableNow())
         .start()
       awaitAndUnload(q)
@@ -750,8 +748,7 @@ object StreamOps {
       val q = runningUserTotals(eventsStream(s, d)).toDF()
         .writeStream.format("memory").queryName("stream_state_totals")
         .outputMode("update")
-        .option("checkpointLocation",
-          "/root/repo/target/scratch/ckpt_stream_state_totals")
+        .option("checkpointLocation", Scratch.dir("ckpt_stream_state_totals"))
         .trigger(Trigger.AvailableNow())
         .start()
       awaitAndUnload(q)
@@ -772,8 +769,7 @@ object StreamOps {
         val q = runningUserTotalsTws(eventsStream(s, d)).toDF()
           .writeStream.format("memory").queryName("stream_tws_totals")
           .outputMode("update")
-          .option("checkpointLocation",
-            "/root/repo/target/scratch/ckpt_stream_tws_totals")
+          .option("checkpointLocation", Scratch.dir("ckpt_stream_tws_totals"))
           .trigger(Trigger.AvailableNow())
           .start()
         awaitAndUnload(q)
@@ -799,8 +795,7 @@ object StreamOps {
         val q = streamingKllMedian(eventsStream(s, d), 512).toDF()
           .writeStream.format("memory").queryName("stream_kll_median")
           .outputMode("update")
-          .option("checkpointLocation",
-            "/root/repo/target/scratch/ckpt_stream_kll_median")
+          .option("checkpointLocation", Scratch.dir("ckpt_stream_kll_median"))
           .trigger(Trigger.AvailableNow())
           .start()
         awaitAndUnload(q)
@@ -834,8 +829,7 @@ object StreamOps {
         val q = streamingTopUsersTws(eventsStream(s, d), 3).toDF()
           .writeStream.format("memory").queryName("stream_top_users_tws")
           .outputMode("update")
-          .option("checkpointLocation",
-            "/root/repo/target/scratch/ckpt_stream_top_users_tws")
+          .option("checkpointLocation", Scratch.dir("ckpt_stream_top_users_tws"))
           .trigger(Trigger.AvailableNow())
           .start()
         awaitAndUnload(q)
@@ -867,8 +861,7 @@ object StreamOps {
         val q = streamingTopUsersMg(eventsStream(s, d), 3, cap).toDF()
           .writeStream.format("memory").queryName("stream_top_users_mg")
           .outputMode("update")
-          .option("checkpointLocation",
-            "/root/repo/target/scratch/ckpt_stream_top_users_mg")
+          .option("checkpointLocation", Scratch.dir("ckpt_stream_top_users_mg"))
           .trigger(Trigger.AvailableNow())
           .start()
         awaitAndUnload(q)
@@ -903,7 +896,7 @@ object StreamOps {
     "q_stream_state_reader" -> { (s, d) => withStatePartitions(s, 8) {
       withRocksDbState(s) {
         cleanCheckpoint("stream_state_reader")
-        val ckpt = "/root/repo/target/scratch/ckpt_stream_state_reader"
+        val ckpt = Scratch.dir("ckpt_stream_state_reader")
         val q = streamingTopUsersMg(eventsStream(s, d), 3, exactCapacity(s, d)).toDF()
           .writeStream.format("memory").queryName("stream_state_reader")
           .outputMode("update")
@@ -934,8 +927,7 @@ object StreamOps {
       val q = streamingTopUsers(eventsStream(s, d), 3).toDF()
         .writeStream.format("memory").queryName("stream_top_users")
         .outputMode("update")
-        .option("checkpointLocation",
-          "/root/repo/target/scratch/ckpt_stream_top_users")
+        .option("checkpointLocation", Scratch.dir("ckpt_stream_top_users"))
         .trigger(Trigger.AvailableNow())
         .start()
       awaitAndUnload(q)
@@ -954,13 +946,13 @@ object StreamOps {
     // final snapshot must equal the batch aggregate.
     "q_stream_topic_sink" -> { (s, d) => withStatePartitions(s, 8) {
       cleanCheckpoint("stream_topic_sink")
-      val sinkPath = "/root/repo/target/scratch/topic_accidents_by_time"
+      val sinkPath = Scratch.dir("topic_accidents_by_time")
       val agg = eventsStream(s, d)
         .groupBy(hour(col("ts")).as("h"))
         .agg(count(lit(1)).as("cnt"))
       val q = agg.writeStream
         .outputMode("complete")
-        .option("checkpointLocation", "/root/repo/target/scratch/ckpt_stream_topic_sink")
+        .option("checkpointLocation", Scratch.dir("ckpt_stream_topic_sink"))
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.select(KafkaBridge.encodeMessage(col("h"), col("cnt")).as("payload"))
@@ -1000,8 +992,8 @@ object StreamOps {
     "q_stream_cdc_apply" -> { (s, d) => withStatePartitions(s, 8) {
       import org.apache.spark.sql.types._
       cleanCheckpoint("stream_cdc")
-      val dir = "/root/repo/target/scratch/cdc_log"
-      val store = "/root/repo/target/scratch/cdc_store"
+      val dir = Scratch.dir("cdc_log")
+      val store = Scratch.dir("cdc_store")
       rmPath(dir); rmPath(store); rmPath(store + ".tmp")
       val base = Tables.orders(s, d).select(col("o_orderkey").as("k"),
         col("o_orderstatus").as("status"),
@@ -1029,8 +1021,7 @@ object StreamOps {
       val q = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(dir)
         .writeStream
-        .option("checkpointLocation",
-          "/root/repo/target/scratch/ckpt_stream_cdc")
+        .option("checkpointLocation", Scratch.dir("ckpt_stream_cdc"))
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, _: Long) =>
           cdcBatchMerge(batch, store)
@@ -1046,12 +1037,12 @@ object StreamOps {
 
     "q_stream_upsert" -> { (s, d) => withStatePartitions(s, 8) {
       cleanCheckpoint("stream_upsert")
-      val store = "/root/repo/target/scratch/upsert_store"
+      val store = Scratch.dir("upsert_store")
       rmPath(store); rmPath(store + ".tmp")
       val q = eventsStream(s, d)
         .select("user_id", "event_type", "value", "ts", "event_id")
         .writeStream
-        .option("checkpointLocation", "/root/repo/target/scratch/ckpt_stream_upsert")
+        .option("checkpointLocation", Scratch.dir("ckpt_stream_upsert"))
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, _: Long) =>
           upsertLatest(batch, store)
@@ -1086,7 +1077,7 @@ object StreamOps {
     // open-window frontier only.
     "q_stream_late_drop" -> { (s, d) => withStatePartitions(s, 8) {
       cleanCheckpoint("stream_late_drop")
-      val scratch = "/root/repo/target/scratch/late_drop_src"
+      val scratch = Scratch.dir("late_drop_src")
       rmPath(scratch); new java.io.File(scratch).mkdirs()
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$d/events.parquet"),
@@ -1115,8 +1106,7 @@ object StreamOps {
         .agg(count(lit(1)).as("cnt"))
       val q = agg.writeStream.format("memory").queryName("stream_late_drop")
         .outputMode("append")
-        .option("checkpointLocation",
-          "/root/repo/target/scratch/ckpt_stream_late_drop")
+        .option("checkpointLocation", Scratch.dir("ckpt_stream_late_drop"))
         .trigger(Trigger.AvailableNow())
         .start()
       awaitAndUnload(q)
@@ -1138,7 +1128,7 @@ object StreamOps {
     // so never appear in the output.
     "q_stream_chained" -> { (s, d) => withStatePartitions(s, 8) {
       cleanCheckpoint("stream_chained")
-      val scratch = "/root/repo/target/scratch/chained_src"
+      val scratch = Scratch.dir("chained_src")
       rmPath(scratch); new java.io.File(scratch).mkdirs()
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$d/events.parquet"),
@@ -1164,8 +1154,7 @@ object StreamOps {
         .agg(max(col("cnt")).as("peak_hourly"), sum(col("cnt")).as("total"))
       val q = rollup.writeStream.format("memory").queryName("stream_chained")
         .outputMode("append")
-        .option("checkpointLocation",
-          "/root/repo/target/scratch/ckpt_stream_chained")
+        .option("checkpointLocation", Scratch.dir("ckpt_stream_chained"))
         .trigger(Trigger.AvailableNow())
         .start()
       awaitAndUnload(q)

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
 
@@ -14,6 +15,9 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
   *    AvailableNow query's providers are otherwise cached forever (heap
   *    state + checkpoint-file-manager thread pool + maintenance-scan
   *    slice per provider — see StreamOps.awaitAndUnload).
+  *  - [[extensionRegistry]]: the function registry a session booted with
+  *    `ext` starts from (`SparkSessionExtensions.registerFunctions` is
+  *    `private[sql]`).
   */
 object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -21,4 +25,7 @@ object Bridge {
 
   def unloadAllStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
+
+  def extensionRegistry(ext: SparkSessionExtensions): FunctionRegistry =
+    ext.registerFunctions(FunctionRegistry.builtin.clone())
 }

@@ -79,7 +79,7 @@ class ContractSpec extends SparkSpec {
   }
 
   test("partitioned write enables partition pruning at the scan") {
-    val path = "/root/repo/target/scratch/orders_partitioned"
+    val path = Scratch.dir("orders_partitioned")
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm)
       f.delete(): Unit

@@ -1,7 +1,11 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.NativeExpressions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.types.{ArrayType, StringType}
+import graft.functions.{GraftExtensions, NativeExpressions}
 import graft.plans.ApproxDistinctRewrite
 
 /** ApproxDistinctRewrite (custom Rule[LogicalPlan], the
@@ -9,12 +13,6 @@ import graft.plans.ApproxDistinctRewrite
   * HLL++ accuracy contract, and graceful degradation without the rule.
   */
 class PlansSpec extends SparkSpec {
-
-  private def installRule(): Unit =
-    if (!spark.experimental.extraOptimizations
-          .exists(_.isInstanceOf[ApproxDistinctRewrite]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ApproxDistinctRewrite(spark)
 
   test("approx_hint is a pure identity expression") {
     val rows = Tables.orders(spark, sfDir).limit(20)
@@ -26,7 +24,7 @@ class PlansSpec extends SparkSpec {
   }
 
   test("hinted count(DISTINCT) rewrites to HLL++ and stays within 2%") {
-    installRule()
+    GraftExtensions.install(spark)
     val o = Tables.orders(spark, sfDir)
     val exact = o.agg(countDistinct(col("o_custkey"))).head.getLong(0)
     val hinted = o.agg(countDistinct(
@@ -40,7 +38,7 @@ class PlansSpec extends SparkSpec {
   }
 
   test("un-hinted count(DISTINCT) stays exact with the rule installed") {
-    installRule()
+    GraftExtensions.install(spark)
     val df = Tables.orders(spark, sfDir)
       .agg(countDistinct(col("o_custkey")).as("d"))
     val plan = df.queryExecution.optimizedPlan.toString
@@ -48,7 +46,7 @@ class PlansSpec extends SparkSpec {
   }
 
   test("session flag rewrites every single-child count(DISTINCT)") {
-    installRule()
+    GraftExtensions.install(spark)
     spark.conf.set("spark.graft.approxDistinct", "true")
     try {
       val df = Tables.orders(spark, sfDir)
@@ -59,7 +57,7 @@ class PlansSpec extends SparkSpec {
   }
 
   test("multi-child count(DISTINCT a, b) is left exact under the flag") {
-    installRule()
+    GraftExtensions.install(spark)
     spark.conf.set("spark.graft.approxDistinct", "true")
     try {
       val df = Tables.orders(spark, sfDir)
@@ -113,28 +111,20 @@ class PlansSpec extends SparkSpec {
     // every row its own key (the spill-less heap's worst case) plus a few
     // repeated keys; a 64-row spill threshold forces multiple epochs per
     // partition, exercising flush + key-merge on both exec passes
-    val prev = sys.props.get("graft.topk.spillRows")
-    sys.props("graft.topk.spillRows") = "64"
-    try {
-      val rows = (1 to 5000).map(i => (s"k$i", i.toLong, (i % 13).toDouble)) ++
-        (1 to 300).map(i => ("dup", (90000 + i).toLong, (i % 5).toDouble))
-      val df = rows.toDF("key", "id", "v")
-      val got = graft.plans.TopKPerKey
-        .topKPerKey(df, Seq("key"), Seq(("v", false), ("id", true)), k = 3)
-        .orderBy("key", "id").collect().toSeq
-      val want = {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("key").orderBy(desc("v"), col("id"))
-        df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-          .drop("rn").orderBy("key", "id").collect().toSeq
-      }
-      assert(got.size == want.size && got == want)
-    } finally {
-      prev match {
-        case Some(p) => sys.props("graft.topk.spillRows") = p
-        case None => sys.props.remove("graft.topk.spillRows"): Unit
-      }
+    val rows = (1 to 5000).map(i => (s"k$i", i.toLong, (i % 13).toDouble)) ++
+      (1 to 300).map(i => ("dup", (90000 + i).toLong, (i % 5).toDouble))
+    val df = rows.toDF("key", "id", "v")
+    val got = graft.plans.TopKPerKey
+      .topKPerKey(df, Seq("key"), Seq(("v", false), ("id", true)), k = 3,
+        spillRows = 64)
+      .orderBy("key", "id").collect().toSeq
+    val want = {
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("key").orderBy(desc("v"), col("id"))
+      df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+        .drop("rn").orderBy("key", "id").collect().toSeq
     }
+    assert(got.size == want.size && got == want)
   }
 
   test("TopKPerKey spill metrics surface epochs and rows") {
@@ -222,11 +212,55 @@ class PlansSpec extends SparkSpec {
   }
 
   test("GraftExtensions installs the strategy at session boot (deployment path)") {
+    // the install path used by sessions the deployment did not boot
     val s2 = SparkSpec.session.newSession()
-    new graft.functions.GraftExtensions().apply(
-      new org.apache.spark.sql.SparkSessionExtensions) // constructs cleanly
-    // the experimental-install path used by ad-hoc sessions
-    graft.plans.TopKPerKey.install(s2)
+    GraftExtensions.install(s2)
     assert(s2.experimental.extraStrategies.contains(graft.plans.TopKStrategy))
+    assert(s2.experimental.extraOptimizations.exists(_.isInstanceOf[ApproxDistinctRewrite]))
+  }
+
+  test("GraftExtensions alone injects every native function; simhash keeps its width") {
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val reg = org.apache.spark.sql.graft.Bridge.extensionRegistry(ext)
+    val builtin = FunctionRegistry.builtin.listFunction().toSet
+    assert(reg.listFunction().filterNot(builtin).map(_.funcName).toSet == Set(
+      "cosine_sim", "simhash", "shingle_hashes", "char_gram_hashes", "minhash_sigs",
+      "simhash_from_hashes", "shingle_hashes_md5", "char_gram_hashes_md5",
+      "token_hashes_md5", "approx_hint", "jaro_winkler"))
+    // simhash(t, 32) through the deployment registry ≡ the column helper
+    import spark.implicits._
+    val docs = Seq(Seq("the", "quick", "brown", "fox"), Seq("lorem", "ipsum"), Seq("a"))
+    val simhash = reg.lookupFunctionBuilder(FunctionIdentifier("simhash")).get
+    val got = docs.map(t => simhash(Seq(Literal.create(t, ArrayType(StringType)),
+      Literal(32))).eval())
+    val want = docs.toDF("t")
+      .select(NativeExpressions.simhashNative(spark, col("t"), 32)).as[Long].collect().toSeq
+    assert(got == want)
+  }
+
+  test("a second helper call leaves the registered cosine_sim builder unchanged") {
+    val s2 = SparkSpec.session.newSession()
+    val reg = s2.sessionState.functionRegistry
+    val id = FunctionIdentifier("cosine_sim")
+    NativeExpressions.cosineSim(s2, col("a"), col("b"))
+    val first = reg.lookupFunctionBuilder(id).get
+    NativeExpressions.cosineSim(s2, col("a"), col("b"))
+    assert(reg.lookupFunctionBuilder(id).get eq first)
+  }
+
+  test("native helpers and TopKPerKey work on a fresh session") {
+    val s2 = SparkSpec.session.newSession()
+    import s2.implicits._
+    val vecs = Seq((Array(3f, 4f), Array(3f, 4f)), (Array(1f, 0f), Array(0f, 1f)))
+      .toDF("a", "b")
+    assert(vecs.select(NativeExpressions.cosineSim(s2, col("a"), col("b")))
+      .as[Double].collect().toSeq == Seq(1.0, 0.0))
+    val top = graft.plans.TopKPerKey.topKPerKey(
+      Seq(("x", 1L, 2.0), ("x", 2L, 1.0), ("y", 3L, 0.5)).toDF("key", "id", "v"),
+      Seq("key"), Seq(("v", false), ("id", true)), k = 1)
+    assert(top.queryExecution.executedPlan.toString.contains("TopKPerKey"))
+    assert(top.orderBy("key").as[(String, Long, Double)].collect().toSeq ==
+      Seq(("x", 1L, 2.0), ("y", 3L, 0.5)))
   }
 }

@@ -68,7 +68,7 @@ class Round7Spec extends SparkSpec {
     // the driver's generator has shipped events.ts as INT64 raw nanos AND
     // as TIMESTAMP(MICROS) NTZ across rounds; the loaders must read either
     // into identical session-UTC timestamps
-    val base = "/root/repo/target/scratch/tslayout"
+    val base = Scratch.dir("tslayout")
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm); f.delete(): Unit
     }

@@ -95,8 +95,8 @@ class Round7bSpec extends SparkSpec {
   }
 
   test("schema drift classifies added/removed/type_changed from footers") {
-    val a = "/root/repo/target/scratch/r7b_schema_a"
-    val b = "/root/repo/target/scratch/r7b_schema_b"
+    val a = Scratch.dir("r7b_schema_a")
+    val b = Scratch.dir("r7b_schema_b")
     Seq((1L, "x", 1.0)).toDF("id", "name", "score").write
       .mode("overwrite").parquet(a)
     Seq((1, "x", true)).toDF("id", "flag", "extra").write

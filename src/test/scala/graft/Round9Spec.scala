@@ -375,7 +375,7 @@ class Round9Spec extends SparkSpec {
     // (seq 1): the tombstone must survive both later merges, and a key
     // whose update arrives before its insert must land on the update.
     import org.apache.spark.sql.types.DecimalType
-    val store = "/root/repo/target/scratch/cdc_spec_store"
+    val store = Scratch.dir("cdc_spec_store")
     graft.sources.Sources.rmDir(store)
     graft.sources.Sources.rmDir(store + ".tmp")
     def wave(rows: Seq[(Long, String, java.math.BigDecimal, Long, String)]) =

@@ -184,7 +184,7 @@ class ScaleSpec extends SparkSpec {
     // build the partitioned copy, then assert the year filter lands in
     // PartitionFilters (directory pruning) — not as a post-scan Filter
     Sources.partitionedPrunedScan(spark, sfDir).collect()
-    val path = "/root/repo/target/scratch/orders_by_year"
+    val path = Scratch.dir("orders_by_year")
     val slice = spark.read.parquet(path).filter(col("o_year") === 1995)
     val scan = slice.queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters") && scan.contains("o_year"),

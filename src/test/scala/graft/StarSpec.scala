@@ -123,7 +123,7 @@ class StarSpec extends SparkSpec {
 
   test("full DAG chain is idempotent: second run changes no warehouse count") {
     import graft.operators.Pipeline
-    val wh = "/root/repo/target/scratch/pipeline_wh_test"
+    val wh = Scratch.dir("pipeline_wh_test")
     Pipeline.reset(wh)
     Pipeline.runOnce(spark, sfDir, wh)
     val c1 = Pipeline.warehouseCounts(spark, wh).collect()

@@ -110,7 +110,7 @@ class StreamingSpec extends SparkSpec {
   test("foreachBatch upsert keeps per-key latest across out-of-order batches") {
     implicit val sqlCtx = spark.sqlContext
     def ts(s: String) = Timestamp.valueOf(s)
-    val store = "/root/repo/target/scratch/upsert_store_test"
+    val store = Scratch.dir("upsert_store_test")
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rm)
       f.delete(): Unit
