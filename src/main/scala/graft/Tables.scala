@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet loaders for the driver-generated test tables (TESTDATA.md).
   *
@@ -11,12 +15,84 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Scale posture: plain parquet scans — Catalyst's V2ScanRelationPushDown
   * prunes columns and pushes predicates into the scan, so callers just
-  * `.select`/`.filter` and the 100 TB read stays minimal. No caching here:
-  * each query composes its own plan so the optimizer sees end-to-end.
+  * `.select`/`.filter` and the 100 TB read stays minimal. No data is
+  * cached here: each query composes its own plan so the optimizer sees
+  * end-to-end. Only each file's schema is remembered (see [[load]]).
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** Session confs that change the schema Spark infers from a footer. */
+  private val InferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.files.ignoreCorruptFiles")
+
+  /** A table's identity: every file under it as (qualified path, length,
+    * modification time), plus the inference confs in force.
+    */
+  private case class SchemaKey(files: Seq[(String, Long, Long)],
+                               confs: Seq[Option[String]])
+
+  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** `$dir/$name.parquet` read with its schema known. Without a schema,
+    * `spark.read.parquet` infers one with a one-task Spark job (footer
+    * merge) before the DataFrame exists; a table is loaded dozens of times
+    * per pipeline run. So the schema Spark infers on the first load is
+    * remembered, keyed by the file's identity and the inference confs,
+    * and later loads pass it to the reader: no job, the same relation
+    * (Spark makes a given schema all-nullable exactly as it does an
+    * inferred one). A replaced or rewritten file, or a changed conf,
+    * misses and infers again. A missing path goes straight to Spark,
+    * which raises its own error.
+    */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = fileKey(spark, path)
+    key.flatMap(k => Option(schemas.get(k))) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        key.foreach(schemas.put(_, df.schema))
+        df
+    }
+  }
+
+  /** One driver-side status call for a file, one recursive listing for a
+    * directory; None when the path does not exist.
+    */
+  private def fileKey(spark: SparkSession, path: String): Option[SchemaKey] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val st = fs.getFileStatus(p)
+      val files =
+        if (!st.isDirectory) Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+        else {
+          val it = fs.listFiles(p, true)
+          val b = Seq.newBuilder[(String, Long, Long)]
+          while (it.hasNext) {
+            val f = it.next()
+            b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+          }
+          b.result().sorted
+        }
+      Some(SchemaKey(files, InferenceConfs.map(spark.conf.getOption)))
+    } catch { case _: java.io.FileNotFoundException => None }
+  }
+
+  /** Whether a table the engine writes is there yet: the skip-guards and
+    * first-load checks. The engine's writes are sequential and complete
+    * before the next phase reads them, so presence of the directory is the
+    * signal. On a real deployment this is one FileSystem.exists RPC. A
+    * schema probe instead would be a Spark job, and catching the read's
+    * failure on a missing path logs a stack trace.
+    */
+  def exists(path: String): Boolean = new java.io.File(path).exists()
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

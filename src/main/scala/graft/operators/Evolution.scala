@@ -590,7 +590,7 @@ object Evolution {
     // reader would actually see.
     "q_schema_drift" -> { (s, d) =>
       val scratch = Scratch.dir("schema_b")
-      s.read.parquet(s"$d/orders.parquet")
+      Tables.orders(s, d)
         .select(col("o_orderkey"), col("o_custkey").cast("int").as("o_custkey"),
           col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
           lit("web").as("o_channel"))

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Scratch
+import graft.{Scratch, Tables}
 import graft.CacheScope.TrackedDataset
 
 /** The reference DAG re-expressed as ONE end-to-end driver (SURVEY §2.10;
@@ -22,15 +22,6 @@ import graft.CacheScope.TrackedDataset
   * reference's Postgres tables (SURVEY S4).
   */
 object Pipeline {
-
-  /** Skip-guard existence check. A `read.parquet(path).schema` probe costs
-    * a driver-side footer read per call (~40 ms × ~20 calls per gated
-    * query); the DAG's writes are sequential-and-complete before the next
-    * phase reads (runConcurrently awaits), so directory presence is the
-    * same signal. On a real deployment this is one FileSystem.exists RPC.
-    */
-  private def exists(s: SparkSession, path: String): Boolean =
-    new java.io.File(path).exists()
 
   /** Delete a scratch warehouse (fresh-run setup; the reference's DDL
     * CREATE-IF-NOT-EXISTS plays this role).
@@ -75,11 +66,13 @@ object Pipeline {
     val flat = StarPipeline.flatFact(s, d)
     // idempotent load: only rows whose key is absent get appended
     Star.idempotentWrite(flat, s"$warehouse/flat_fact", factKeys)
-    // the loaded fact feeds up to 8 dim builds + the FK resolve — persist
-    // so those are in-memory scans of one materialization, not 9 parquet
-    // re-reads (at 100 TB this is the standard cache-the-hot-stage move;
-    // columnar MEMORY_AND_DISK spills gracefully if it doesn't fit)
-    val loadedFlat = s.read.parquet(s"$warehouse/flat_fact") // PERSIST-OFF-TEST
+    // the loaded fact feeds up to 8 dim builds + the FK resolve, each a
+    // plain parquet re-read that scans only its own columns (the
+    // runIncremental argument). Every warehouse read-back takes the schema
+    // of the frame that wrote the table, so none runs an inference job
+    // (Spark makes a given schema all-nullable, as it does an inferred one,
+    // so Star.resolveDims takes the same null-safe branch).
+    val loadedFlat = s.read.schema(flat.schema).parquet(s"$warehouse/flat_fact")
     // dimension builds, skip-guarded: an existing dim is NOT rebuilt (the
     // reference checks row counts before inserting; surrogate ids must
     // stay stable across runs for the fact FKs to remain valid)
@@ -89,7 +82,7 @@ object Pipeline {
     runConcurrently(StarPipeline.dimSpecs.map { case (name, keys) =>
       () => {
         val path = s"$warehouse/$name"
-        if (!exists(s, path))
+        if (!Tables.exists(path))
           Star.buildDim(loadedFlat, keys, name + "_id")
             .write.parquet(path)
       }
@@ -101,16 +94,14 @@ object Pipeline {
     // anti join. Resolution is row-local (key-unique broadcast left
     // joins), so delta-then-resolve ≡ the reference's resolve-then-
     // ON-CONFLICT order. (r05: cut the idempotence gate's second run.)
-    val dims = StarPipeline.dimSpecs.map { case (name, keys) =>
-      (s.read.parquet(s"$warehouse/$name"), keys)
-    }
+    val dims = loadedDims(s, warehouse, loadedFlat)
     val factPath = s"$warehouse/star_fact"
     val pendingFlat =
-      if (!exists(s, factPath)) loadedFlat
+      if (!Tables.exists(factPath)) loadedFlat
       else loadedFlat.join(
         // keys are unique in star_fact by construction — no distinct
         // (a distinct here would add a full key shuffle before the anti)
-        s.read.parquet(factPath).select(factKeys.map(col): _*),
+        loadedFactKeys(s, factPath, loadedFlat),
         factKeys, "left_anti")
     val fact = Star.resolveDims(pendingFlat, dims).select(
       (factKeys.map(col) ++
@@ -119,6 +110,25 @@ object Pipeline {
     fact.write.mode(SaveMode.Append).parquet(factPath)
     // await the topic snapshots submitted at entry (see above)
     topicFutures.foreach(Await.result(_, Duration.Inf))
+  }
+
+  /** The 8 loaded dims, each read back with the schema its builder writes
+    * (an extension appends rows of the same schema, Star.newDimRows).
+    */
+  private def loadedDims(s: SparkSession, warehouse: String,
+                         loadedFlat: DataFrame): Seq[(DataFrame, Seq[String])] =
+    StarPipeline.dimSpecs.map { case (name, keys) =>
+      (s.read.schema(Star.buildDim(loadedFlat, keys, name + "_id").schema)
+        .parquet(s"$warehouse/$name"), keys)
+    }
+
+  /** The key projection of the loaded star fact; reading only the key
+    * columns' schema leaves the other columns unread.
+    */
+  private def loadedFactKeys(s: SparkSession, factPath: String,
+                             loadedFlat: DataFrame): DataFrame = {
+    val keys = loadedFlat.select(factKeys.map(col): _*)
+    s.read.schema(keys.schema).parquet(factPath)
   }
 
   /** Submit independent actions concurrently and wait for all (Spark's
@@ -152,19 +162,17 @@ object Pipeline {
     // scan only their own key columns off the parquet (column pruning);
     // a persist would serialize them behind one all-column cache build
     // (measured 12.1 s → 15.8 s at sf0.1)
-    val loadedFlat = s.read.parquet(s"$warehouse/flat_fact")
+    val loadedFlat = s.read.schema(flat.schema).parquet(s"$warehouse/flat_fact")
     runConcurrently(StarPipeline.dimSpecs.map { case (name, keys) =>
       () => {
         val path = s"$warehouse/$name"
-        if (!exists(s, path))
+        if (!Tables.exists(path))
           Star.buildDim(loadedFlat, keys, name + "_id").write.parquet(path)
         else
           Star.extendDim(s, path, loadedFlat, keys, name + "_id")
       }
     })
-    val dims = StarPipeline.dimSpecs.map { case (name, keys) =>
-      (s.read.parquet(s"$warehouse/$name"), keys)
-    }
+    val dims = loadedDims(s, warehouse, loadedFlat)
     // resolve ONLY the not-yet-loaded delta: anti-join FIRST, then run the
     // 8 dim joins on the fresh rows alone. runOnce resolves everything and
     // lets the load's anti join discard duplicates (the reference-faithful
@@ -174,13 +182,13 @@ object Pipeline {
     // joins), so delta-then-resolve ≡ resolve-then-delta.
     val factPath = s"$warehouse/star_fact"
     val freshFlat =
-      try loadedFlat.join(
+      if (!Tables.exists(factPath)) loadedFlat // first load
+      else loadedFlat.join(
         // keys are unique in star_fact by construction (the runOnce
         // argument) — and a left_anti is key-multiplicity-insensitive
         // anyway, so the old distinct here was a pure extra key shuffle
-        s.read.parquet(factPath).select(factKeys.map(col): _*),
+        loadedFactKeys(s, factPath, loadedFlat),
         factKeys, "left_anti")
-      catch { case _: org.apache.spark.sql.AnalysisException => loadedFlat } // first load
     val fact = Star.resolveDims(freshFlat, dims).select(
       (factKeys.map(col) ++
         StarPipeline.dimSpecs.map { case (n, _) => col(n + "_id") } ++

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Star-schema building blocks (SURVEY.md §2.3/§2.4/§2.5: A4, W3, J2, J3).
   *
@@ -103,7 +104,8 @@ object Star {
     */
   def extendDim(spark: org.apache.spark.sql.SparkSession, path: String,
                 src: DataFrame, natKey: Seq[String], idCol: String): Unit =
-    newDimRows(spark.read.parquet(path), src, natKey, idCol)
+    newDimRows(spark.read.schema(buildDim(src, natKey, idCol).schema).parquet(path),
+      src, natKey, idCol)
       .write.mode(SaveMode.Append).parquet(path)
 
   /** J3 — idempotent append: keep only incoming rows whose key is absent
@@ -128,8 +130,8 @@ object Star {
   def idempotentWrite(incoming: DataFrame, path: String, keys: Seq[String]): Unit = {
     val spark = incoming.sparkSession
     val fresh =
-      try idempotentAppend(incoming, spark.read.parquet(path), keys)
-      catch { case _: org.apache.spark.sql.AnalysisException => incoming } // first load
+      if (!Tables.exists(path)) incoming // first load
+      else idempotentAppend(incoming, spark.read.schema(incoming.schema).parquet(path), keys)
     fresh.write.mode(SaveMode.Append).parquet(path)
   }
 }

@@ -32,8 +32,9 @@ object StreamOps {
     * `ts` layout (file streams need an explicit schema). The driver's
     * testdata has shipped `ts` both as INT64 TIMESTAMP(NANOS) — readable
     * only as raw long — and as TIMESTAMP(MICROS) NTZ, so the schema is
-    * probed from the batch footer (one cheap metadata read) rather than
-    * hardcoded; see [[graft.Tables.events]].
+    * probed from the file's footer rather than hardcoded; see
+    * [[graft.Tables.events]]. The probe goes through [[graft.Tables.load]]:
+    * an inference job on a file's first load, none after.
     */
   def eventsRawSchema(tsType: DataType): StructType = StructType(Seq(
     StructField("event_id", LongType), StructField("ts", tsType),
@@ -43,7 +44,7 @@ object StreamOps {
   /** The physical type of `ts` in this dir's events.parquet. */
   def eventsTsType(s: SparkSession, dir: String): DataType = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    s.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    Tables.load(s, dir, "events").schema("ts").dataType
   }
 
   /** Normalize a raw `ts` column to session-zone TimestampType (the
@@ -113,14 +114,16 @@ object StreamOps {
         col("r.ts"), col("r.event_id"))
 
   /** The foreachBatch merge body: collapse the incoming batch, union the
-    * existing store, keep the per-key latest, swap via a staging dir.
+    * existing store, keep the per-key latest, swap via a staging dir. The
+    * store holds what earlier batches wrote, so it is read back with the
+    * incoming schema.
     */
   def upsertLatest(batch: DataFrame, store: String): Unit = {
     val s = batch.sparkSession
     val incoming = latestPerKey(batch)
     val merged =
-      try latestPerKey(s.read.parquet(store).unionByName(incoming))
-      catch { case _: org.apache.spark.sql.AnalysisException => incoming }
+      if (!Tables.exists(store)) incoming
+      else latestPerKey(s.read.schema(incoming.schema).parquet(store).unionByName(incoming))
     merged.write.mode("overwrite").parquet(store + ".tmp")
     rmPath(store)
     if (!new java.io.File(store + ".tmp").renameTo(new java.io.File(store)))
@@ -133,14 +136,14 @@ object StreamOps {
     * would let a late-arriving lower-seq insert resurrect the key in a
     * later batch. Deletes filter once, at read time. n accumulates the
     * versions seen per key across batches (the q_cdc_merge n_versions
-    * contract). Same swap discipline as [[upsertLatest]].
+    * contract). Same swap and read-back discipline as [[upsertLatest]].
     */
   def cdcBatchMerge(batch: DataFrame, store: String): Unit = {
     val s = batch.sparkSession
     val incoming = batch.withColumn("n", lit(1L))
     val all =
-      try s.read.parquet(store).unionByName(incoming)
-      catch { case _: org.apache.spark.sql.AnalysisException => incoming }
+      if (!Tables.exists(store)) incoming
+      else s.read.schema(incoming.schema).parquet(store).unionByName(incoming)
     val merged = all.groupBy("k")
       .agg(sum(col("n")).as("n"),
         max(struct(col("seq"), col("op"), col("status"), col("price")))

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graft.SparkInternals
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -7,6 +9,22 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** The local properties of every Spark job started while `body` ran. */
+  def jobsDuring(body: => Unit): Seq[java.util.Properties] = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[java.util.Properties]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).getOrElse(new java.util.Properties))
+    }
+    SparkInternals.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try { body; SparkInternals.waitUntilEmpty(sc) }
+    finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.toSeq
+  }
 }
 
 object SparkSpec {

@@ -141,4 +141,22 @@ class StarSpec extends SparkSpec {
       }.reduce(_ || _)).count()
     assert(unresolved == 0)
   }
+
+  test("a DAG run starts every Spark job inside a SQL execution") {
+    import graft.operators.Pipeline
+    // the source tables' schemas are known once each table was loaded
+    // (events first: it sets the conf the other loads are keyed under)
+    Tables.events(spark, sfDir)
+    Seq("region", "nation", "customer", "supplier", "part", "orders",
+      "lineitem").foreach(Tables.load(spark, sfDir, _))
+    val wh = Scratch.dir("pipeline_wh_jobs_test")
+    Pipeline.reset(wh)
+    val jobs = jobsDuring {
+      Pipeline.runOnce(spark, sfDir, wh)
+      Pipeline.runIncremental(spark, sfDir, wh)
+    }
+    val bare = jobs.filter(_.getProperty("spark.sql.execution.id") == null)
+    assert(jobs.nonEmpty)
+    assert(bare.size == 0, s"of ${jobs.size} jobs, this many ran outside a SQL execution")
+  }
 }
