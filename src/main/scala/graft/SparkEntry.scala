@@ -5,12 +5,15 @@ import graft.operators.{Analytics, BboxSummary, Curation, Dedup, Evolution, Grap
 import graft.sources.Sources
 import graft.streaming.StreamOps
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The engine's query contract (SURVEY.md §7).
   *
-  * `queries` maps one entry per implemented operator (SURVEY.md §2 ids in
-  * the names); `oracleSql` carries the DuckDB-equivalent SQL for the
-  * driver's correctness compare. Column aliases match between the two by
-  * construction (the driver sorts columns by name before hashing).
+  * Every query is one [[Q]] entry of a [[QueryModule]]: its name, its
+  * Spark builder and its DuckDB oracle, declared together. `queries` and
+  * `oracleSql` both derive from [[modules]], so each query has exactly one
+  * oracle, and a name listed twice, in one module or across two, fails the
+  * build of either map. Column aliases match between builder and oracle by
+  * construction (the correctness compare sorts columns by name before
+  * hashing).
   */
 object SparkEntry {
 
@@ -21,26 +24,18 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     StarPipeline.fact(spark, "/root/testdata/sf0.001")
 
+  /** The query modules, each listed once. */
+  def modules: Seq[QueryModule] = Seq(
+    Sources, Relational, StarPipeline, Topics, Analytics, TextAnalysis, Dedup,
+    Similarity, Multimodal, StreamOps, BboxSummary, TemporalJoins, Pipeline,
+    Training, Curation, Scd, Sketches, SqlSurface, Retrieval, Evolution, Graph)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Sources.queries ++ Relational.queries ++ StarPipeline.queries ++
-      Topics.queries ++ Analytics.queries ++ TextAnalysis.queries ++
-      Dedup.queries ++ Similarity.queries ++ Multimodal.queries ++
-      StreamOps.queries ++ BboxSummary.queries ++ TemporalJoins.queries ++
-      Pipeline.queries ++ Training.queries ++ Curation.queries ++ Scd.queries ++
-      Sketches.queries ++ SqlSurface.queries ++ Retrieval.queries ++
-      Evolution.queries ++ Graph.queries
+    Q.queries(modules.flatMap(_.entries))
 
-  /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted only for non-SQL-expressible ops
-    * (driver then records a weaker rows-only check).
+  /** For each key in `queries`, its oracle: equivalent SQL that DuckDB runs
+    * on the same parquet tables.
     */
-  def oracleSql: Map[String, String] =
-    Sources.oracles ++ Relational.oracles ++ StarPipeline.oracles ++
-      Topics.oracles ++ Analytics.oracles ++ TextAnalysis.oracles ++
-      Dedup.oracles ++ Similarity.oracles ++ Multimodal.oracles ++
-      StreamOps.oracles ++ BboxSummary.oracles ++ TemporalJoins.oracles ++
-      Pipeline.oracles ++ Training.oracles ++ Curation.oracles ++ Scd.oracles ++
-      Sketches.oracles ++ SqlSurface.oracles ++ Retrieval.oracles ++
-      Evolution.oracles ++ Graph.oracles
+  def oracleSql: Map[String, String] = Q.oracles(modules.flatMap(_.entries))
 }

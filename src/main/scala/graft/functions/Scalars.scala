@@ -97,13 +97,6 @@ object Scalars {
   def parsePyDict(c: Column): Column =
     from_json(regexp_replace(c, "'", "\""), MapType(StringType, StringType))
 
-  /** P16 — structured-address fallback: city → town → village → hamlet.
-    * Ref: dags/etl_crash_traffic.py:414-418.
-    */
-  def addressCity(m: Column): Column =
-    coalesce(m.getItem("city"), m.getItem("town"),
-             m.getItem("village"), m.getItem("hamlet"))
-
   /** P7 — '' → NULL (reference `replace({'': None})`).
     * Ref: dags/etl_crash_traffic.py:603-604.
     */

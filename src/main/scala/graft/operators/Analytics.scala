@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,7 +16,7 @@ import graft.CacheScope.TrackedDataset
   * order — plain `corr()` over doubles is non-deterministic in the last bits
   * across partitionings and would flake the oracle hash.
   */
-object Analytics {
+object Analytics extends QueryModule {
 
   /** Pearson correlation from exact decimal moments; both engines evaluate
     * the same IEEE double expression over identical exact inputs. The
@@ -1965,11 +1965,13 @@ object Analytics {
     strata.unionByName(pooled).unionByName(adjusted).orderBy("scope")
   }
 
-  /** Kaplan-Meier fold over an events frame (see q_kaplan_meier): spans
-    * ending on the corpus boundary are right-censored; the product folds
-    * as a cumulative DECIMAL sum of 6dp ln terms on the duration spine.
+  /** The duration spine Kaplan-Meier and Nelson-Aalen fold over: one row
+    * per distinct user span `dur` (days from a user's first to last
+    * event) with `d` uncensored spans ending there, `n_ending` all spans
+    * ending there and `n_at_risk` the spans still open at its start. A
+    * span ending on the corpus's last day is right-censored.
     */
-  def kaplanMeier(events: DataFrame): DataFrame = {
+  private def survivalByDuration(events: DataFrame): DataFrame = {
     val ev = events.select(col("user_id"), to_date(col("ts")).as("dt"))
     val mx = ev.agg(max(col("dt")).as("mx"))
     val per = ev.crossJoin(broadcast(mx))
@@ -1979,14 +1981,22 @@ object Analytics {
     val byDur = per.groupBy("dur")
       .agg(sum(when(!col("censored"), 1L).otherwise(0L)).as("d"),
         count(lit(1)).as("n_ending"))
-    val w = Window.orderBy("dur")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wPrev = Window.orderBy("dur")
       .rowsBetween(Window.unboundedPreceding, -1)
     val total = per.agg(count(lit(1)).as("n_total"))
     byDur.crossJoin(broadcast(total))
       .withColumn("n_at_risk",
         col("n_total") - coalesce(sum(col("n_ending")).over(wPrev), lit(0L)))
+  }
+
+  /** Kaplan-Meier fold over an events frame (see q_kaplan_meier): spans
+    * ending on the corpus boundary are right-censored; the product folds
+    * as a cumulative DECIMAL sum of 6dp ln terms on the duration spine.
+    */
+  def kaplanMeier(events: DataFrame): DataFrame = {
+    val w = Window.orderBy("dur")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    survivalByDuration(events)
       .withColumn("term",
         when(col("d") < col("n_at_risk"),
           round(log(lit(1.0) - col("d").cast("double") /
@@ -2661,23 +2671,9 @@ object Analytics {
     * the end. Same shuffles as KM: user-cardinality, then spine-sized.
     */
   def nelsonAalen(events: DataFrame): DataFrame = {
-    val ev = events.select(col("user_id"), to_date(col("ts")).as("dt"))
-    val mx = ev.agg(max(col("dt")).as("mx"))
-    val per = ev.crossJoin(broadcast(mx))
-      .groupBy("user_id")
-      .agg(datediff(max(col("dt")), min(col("dt"))).as("dur"),
-        (max(col("dt")) === max(col("mx"))).as("censored"))
-    val byDur = per.groupBy("dur")
-      .agg(sum(when(!col("censored"), 1L).otherwise(0L)).as("d"),
-        count(lit(1)).as("n_ending"))
     val w = Window.orderBy("dur")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wPrev = Window.orderBy("dur")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val total = per.agg(count(lit(1)).as("n_total"))
-    byDur.crossJoin(broadcast(total))
-      .withColumn("n_at_risk",
-        col("n_total") - coalesce(sum(col("n_ending")).over(wPrev), lit(0L)))
+    survivalByDuration(events)
       .withColumn("term",
         round(col("d").cast("double") / col("n_at_risk").cast("double"), 6)
           .cast(DecimalType(18, 6)))
@@ -5146,1647 +5142,6 @@ object Analytics {
         .as("sba_forecast"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Croston/SBA intermittent-demand forecast for the most-traded part.
-    "q_croston" -> { (s, d) => croston(Tables.lineitem(s, d)) },
-    // Tie-corrected Mann-Kendall monotone-trend verdict (theil_sen's twin).
-    "q_mann_kendall" -> { (s, d) => mannKendall(Tables.orders(s, d)) },
-    // Rank-based Pettitt single-changepoint test with change date.
-    "q_pettitt" -> { (s, d) => pettitt(Tables.orders(s, d)) },
-    // Empirical-Bayes shrinkage of noisy per-part return rates.
-    "q_james_stein" -> { (s, d) => jamesStein(Tables.lineitem(s, d)) },
-    // Long-memory R/S Hurst exponent of daily revenue.
-    "q_hurst" -> { (s, d) => hurst(Tables.orders(s, d)) },
-    // Normality gate for daily revenue (skew/kurtosis, χ²(2) tail).
-    "q_jarque_bera" -> { (s, d) => jarqueBera(Tables.orders(s, d)) },
-    // Encouragement-design Wald/IV estimate of click -> spend.
-    "q_iv_wald" -> { (s, d) => ivWald(Tables.events(s, d)) },
-    // Bass diffusion p/q/m from the first-order customer-adoption spine.
-    "q_bass_diffusion" -> { (s, d) => bassDiffusion(Tables.orders(s, d)) },
-    // Purchase-vs-click lead/lag cross-correlation, k = -7..7.
-    "q_ccf_daily" -> { (s, d) => ccfDaily(Tables.events(s, d)) },
-    // Log-log demand elasticity of quantity on unit price.
-    "q_price_elasticity" -> { (s, d) =>
-      priceElasticity(Tables.lineitem(s, d)) },
-    // Weekly SAX symbols + recurring 3-week motif counts.
-    "q_sax_motifs" -> { (s, d) => saxMotifs(Tables.orders(s, d)) },
-    // Weekly/monthly harmonic variance share of daily revenue.
-    "q_harmonic_power" -> { (s, d) => harmonicPower(Tables.orders(s, d)) },
-    // Two-regime GMM of daily revenue (3 unrolled EM iterations).
-    "q_gmm_daily" -> { (s, d) => gmmDaily(Tables.orders(s, d)) },
-    // Unpaired purchase-vs-click day shift: HL estimate + Mann-Whitney U.
-    "q_hodges_lehmann" -> { (s, d) => hodgesLehmann(Tables.events(s, d)) },
-    // Ordered dose-response trend of return rate across quantity doses.
-    "q_cochran_armitage" -> { (s, d) =>
-      cochranArmitage(Tables.lineitem(s, d)) },
-    // Peaks-over-threshold GPD fit of the order-total tail + VaR99.
-    "q_tail_gpd" -> { (s, d) => tailGpd(Tables.orders(s, d)) },
-    // Sharp RDD at the quantity price break: local-linear jump estimate.
-    "q_rdd" -> { (s, d) => rdd(Tables.lineitem(s, d)) },
-    // Queen-adjacency spatial autocorrelation of the customer-density grid.
-    "q_morans_i" -> { (s, d) => moransI(Tables.customer(s, d)) },
-    // Median-of-pairwise-slopes robust trend of trailing daily revenue.
-    "q_theil_sen" -> { (s, d) => theilSen(Tables.orders(s, d)) },
-    // Counterfactual policy value from logged traffic (IPS + SNIPS).
-    "q_ips_offpolicy" -> { (s, d) => ipsOffPolicy(Tables.events(s, d)) },
-    // Two-regressor OLS from one Gram-sums pass (distributed normal eqs).
-    "q_ols_multi" -> { (s, d) => olsMulti(Tables.lineitem(s, d)) },
-    // Area under the KM curve to day 14: the censoring-safe retention mean.
-    "q_rmst" -> { (s, d) => rmst(Tables.events(s, d)) },
-    // Chain-counterfactual channel credit: conversion-probability drop
-    // when each event type is removed from the session Markov chain.
-    "q_markov_attribution" -> { (s, d) =>
-      markovAttribution(Tables.events(s, d)) },
-    // Two-arm ratio-metric lift with user-grain delta-method CI.
-    "q_ratio_lift_ci" -> { (s, d) => ratioLiftCi(Tables.events(s, d)) },
-    // Matched-model Laspeyres/Paasche/Fisher price indices.
-    "q_price_index" -> { (s, d) => priceIndex(Tables.lineitem(s, d)) },
-    // Long-run session attention: stationary vector of the event chain.
-    "q_markov_stationary" -> { (s, d) =>
-      markovStationary(Tables.events(s, d)) },
-    // Pareto/ABC revenue classes over the part dimension.
-    "q_abc_classes" -> { (s, d) => abcClasses(Tables.lineitem(s, d)) },
-    // Paired nonparametric daily purchase-vs-click location test.
-    "q_wilcoxon_signed" -> { (s, d) => wilcoxonSigned(Tables.events(s, d)) },
-    // Portmanteau white-noise test over the first 7 daily-revenue ACFs.
-    "q_ljung_box" -> { (s, d) => ljungBox(Tables.orders(s, d)) },
-    // Blocked nonparametric k-treatment test (days as blocks).
-    "q_friedman" -> { (s, d) => friedman(Tables.events(s, d)) },
-    // Equivalence/non-inferiority readout: is B within ±$5 of A?
-    "q_tost_equivalence" -> { (s, d) =>
-      tostEquivalence(Tables.events(s, d)) },
-    // Seasonal/trend strength of the daily-revenue decomposition.
-    "q_seasonal_strength" -> { (s, d) =>
-      seasonalStrength(Tables.orders(s, d)) },
-    // Paired model comparison: McNemar χ² on the disagreement cells of
-    // two rule classifiers over the same events (one-pass 2×2 table).
-    "q_mcnemar" -> { (s, d) => mcnemar(Tables.events(s, d)) },
-    // Fisher randomization test: is the purchase−click value gap real?
-    // (hash-seeded Bernoulli reassignment, B=48 sharded replicates)
-    "q_permutation_test" -> { (s, d) => randomizationTest(Tables.events(s, d)) },
-    // Coarsened-exact-matching ATT: priority effect on order value,
-    // matched within (status × quarter) strata — one groupBy, no pairs.
-    "q_cem_att" -> { (s, d) => cemAtt(Tables.orders(s, d)) },
-    // DeLong CI on the q_auc_length AUC (length predicting is-English).
-    "q_auc_delong_ci" -> { (s, d) =>
-      aucDelongCi(Tables.documents(s, d), col("n_chars"),
-        col("lang") === "en") },
-    // Adversarial validation (split hygiene): can a drift-prone feature
-    // predict the held-out flag? Healthy split -> AUC CI straddles 0.5.
-    "q_adversarial_valid" -> { (s, d) =>
-      aucDelongCi(Tables.documents(s, d), col("n_chars"),
-        conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-          .cast("long") % 5 === 0) },
-    // Bayesian A/B: P(B beats A) + credible interval of the lift
-    // (normal posterior on exact moment sums, portable A&S Phi).
-    "q_bayes_ab" -> { (s, d) => bayesAb(Tables.events(s, d)) },
-    // Kneedle chord knee of the Lorenz concentration curve: the decile
-    // where cumulative spend share bends away from proportional.
-    "q_knee_lorenz" -> { (s, d) =>
-      kneePoint(lorenzDeciles(Tables.orders(s, d)), "decile",
-        "cum_share_ppm") },
-    // O'Brien-Fleming 5-look group-sequential monitor on the
-    // purchase-vs-click value gap (calendar information fractions).
-    "q_obrien_fleming" -> { (s, d) => obrienFleming(Tables.events(s, d)) },
-    // Pinball-loss quantile backtest on the daily-revenue spine
-    // (train quantiles as forecasts, held-out proper scoring).
-    "q_pinball_loss" -> { (s, d) => pinballLoss(Tables.orders(s, d)) },
-    // NB method-of-moments fit of daily purchase counts (zeros kept
-    // via the all-events day spine).
-    "q_nb_fit" -> { (s, d) => nbFit(Tables.events(s, d)) },
-    // Seasonal-naive MASE benchmark on the daily-revenue spine.
-    "q_mase_naive" -> { (s, d) => maseNaive(Tables.orders(s, d)) },
-    "q_split_finder" -> { (s, d) => splitFinder(Tables.documents(s, d)) },
-    "q_pr_auc" -> { (s, d) => prAuc(Tables.documents(s, d)) },
-    "q_kendall_tau" -> { (s, d) => kendallTau(Tables.documents(s, d)) },
-    "q_nelson_aalen" -> { (s, d) => nelsonAalen(Tables.events(s, d)) },
-    "q_holt_winters" -> { (s, d) => holtWinters(Tables.orders(s, d)) },
-    "q_cohort_ltv" -> { (s, d) => cohortLtv(Tables.orders(s, d)) },
-    "q_max_drawdown" -> { (s, d) => maxDrawdown(Tables.orders(s, d)) },
-    "q_lorenz_deciles" -> { (s, d) => lorenzDeciles(Tables.orders(s, d)) },
-    "q_logrank" -> { (s, d) => logrank(Tables.events(s, d)) },
-    "q_shapley_attr" -> { (s, d) => shapleyAttr(Tables.events(s, d)) },
-    "q_fdr_bh" -> { (s, d) => fdrBh(Tables.documents(s, d)) },
-    "q_overdispersion" -> { (s, d) => overdispersion(Tables.events(s, d)) },
-    // Kruskal–Wallis: does doc length DISTRIBUTION differ across sources
-    // (rank-based — the q_anova_lang readout without normality)?
-    "q_kruskal_wallis" -> { (s, d) =>
-      kruskalWallis(Tables.documents(s, d), "source", col("n_chars"))
-    },
-    // Brown–Forsythe: is doc-length VARIANCE homogeneous across sources
-    // (the validity gate for the ANOVA F beside it)?
-    "q_levene_bf" -> { (s, d) =>
-      brownForsythe(Tables.documents(s, d), "source", "n_chars")
-    },
-    // Granger-style lag-1 predictability: order count → next-day revenue.
-    "q_granger_daily" -> { (s, d) => grangerDaily(Tables.orders(s, d)) },
-    // A6 — the one-call wide describe over lineitem's measures + flags.
-    "q_a6_describe_all" -> { (s, d) =>
-      describeAll(Tables.lineitem(s, d),
-        numeric = Seq("l_quantity", "l_extendedprice", "l_discount"),
-        categorical = Seq("l_returnflag", "l_linestatus"))
-    },
-    // A6 — describe(include='all') at FULL width: every column of the
-    // table in one call — all numerics in one aggregate pass, ALL string
-    // columns (including the per-row-unique c_name — the high-cardinality
-    // regime where a per-column loop would be ruinous) through the single
-    // melt. Passes over the table stay at two regardless of column count.
-    "q_a6_describe_all_strings" -> { (s, d) =>
-      describeAll(Tables.customer(s, d),
-        numeric = Seq("c_acctbal", "c_custkey", "c_nationkey"),
-        categorical = Seq("c_mktsegment", "c_name"))
-    },
-    // A8 — correlation (exact-moment Pearson).
-    "q_a8_corr" -> { (s, d) =>
-      exactCorr(Tables.lineitem(s, d), "l_quantity", "l_extendedprice")
-    },
-    // A8 — the full correlation matrix over the numeric measures (the
-    // reference's notebooks/002_EDA_csv.ipynb cell 37 corr() heatmap),
-    // unpivoted to (x, y, corr) rows. ONE scan for all 6 pairs.
-    "q_a8_corr_matrix" -> { (s, d) =>
-      exactCorrMatrix(Tables.lineitem(s, d),
-        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
-    },
-    // A9 — rolling 7-day revenue (trailing-window dashboard metric). The
-    // window runs over the PER-DAY pre-aggregate — calendar-bounded
-    // cardinality (same argument as dimension windows), never the fact
-    // table; the frame sums DECIMALs (exact in any addition order —
-    // DuckDB's segment-tree window vs Spark's running scan would drift
-    // doubles) and casts once at the end.
-    "q_rolling_revenue" -> { (s, d) =>
-      val daily = Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("dt"))
-      val w = Window.orderBy("day_num").rangeBetween(-6, 0)
-      daily
-        .withColumn("day_num", datediff(col("day"), lit("1970-01-01").cast("date")))
-        .withColumn("rolling_7d", sum(col("dt")).over(w).cast("double"))
-        .select(col("day"), col("dt").cast("double").as("daily_total"),
-          col("rolling_7d"))
-        .orderBy("day")
-    },
-    // CUPED VARIANCE REDUCTION (Deng et al., WSDM 2013 — "Improving the
-    // Sensitivity of Online Controlled Experiments"): per-user pre-period
-    // spend x (first half-window) as covariate for post-period spend y;
-    // θ = cov(x,y)/var(x), adjusted variance var(y)−cov²/var(x). The
-    // experimentation-platform primitive that shrinks A/B CIs without
-    // more traffic. ONE per-user aggregate (map-side combined), then one
-    // moment fold — moments are EXACT integers (cents as DECIMAL(38,0))
-    // cast to double once, so every division is IEEE-identical across
-    // engines (the q_partial_corr convention).
-    "q_cuped" -> { (s, d) => cuped(Tables.events(s, d)) },
-    // Post-stratification adjusted lift (strata + pooled + adjusted rows).
-    "q_post_strat" -> { (s, d) => postStrat(Tables.events(s, d)) },
-    // Always-valid mSPRT monitor: the day-by-day llr trajectory + flag.
-    "q_msprt" -> { (s, d) => msprt(Tables.events(s, d)) },
-    // Delete-one-bucket jackknife SE for revenue/event (vs q_ratio_ci).
-    "q_jackknife_ratio" -> { (s, d) => jackknifeRatio(Tables.events(s, d)) },
-    // Cluster-randomization ICC + Kish design effect (nation clusters).
-    "q_design_effect" -> { (s, d) =>
-      designEffect(Tables.orders(s, d), Tables.customer(s, d))
-    },
-    // Simpson's-paradox audit: segment A vs B mean order value, pooled
-    // and per priority stratum, with the direction-reversal flag.
-    "q_simpson_check" -> { (s, d) =>
-      simpsonCheck(Tables.orders(s, d), Tables.customer(s, d))
-    },
-    // RFM SEGMENTATION (Hughes 1994; the classic CRM cube): per-user
-    // Recency / Frequency / Monetary, quartile-scored 1..4 through the
-    // distributed exact-percentile engine (quantile_cont parity, the
-    // q_decile_report pattern), then segment counts. Everything after
-    // the per-user aggregate runs on user-cardinality frames; the nine
-    // thresholds ride one broadcast row.
-    "q_rfm" -> { (s, d) =>
-      import graft.CacheScope.TrackedDataset
-      val ev = Tables.events(s, d)
-        .filter(col("event_type") === "purchase" && col("value").isNotNull)
-        .select(col("user_id"), to_date(col("ts")).as("dt"),
-          (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
-      val mx = ev.agg(max(col("dt")).as("mx"))
-      val per = ev.crossJoin(broadcast(mx))
-        .groupBy("user_id")
-        .agg(datediff(max(col("mx")), max(col("dt"))).cast("double").as("r"),
-          count(lit(1)).cast("double").as("f"),
-          sum(col("cents")).cast("double").as("m"))
-        .coalesce(1).persistTracked() // user-cardinality; see markov note
-      val qs = Seq(0.25, 0.5, 0.75)
-      def thr(c: String) = exactPercentiles(per, c,
-        qs.zipWithIndex.map { case (q, i) => s"$c${i + 1}" -> q })
-      def score(c: String) = lit(1) +
-        (1 to 3).map(i => when(col(c) > col(s"$c$i"), 1).otherwise(0))
-          .reduce(_ + _)
-      per.crossJoin(broadcast(thr("r"))).crossJoin(broadcast(thr("f")))
-        .crossJoin(broadcast(thr("m")))
-        .select(score("r").as("r_score"), score("f").as("f_score"),
-          score("m").as("m_score"))
-        .groupBy("r_score", "f_score", "m_score")
-        .agg(count(lit(1)).as("n_users"))
-        .orderBy("r_score", "f_score", "m_score")
-    },
-    // KAPLAN-MEIER SURVIVAL over user activity spans (Kaplan & Meier
-    // 1958): duration = last-minus-first active day; users whose last
-    // activity touches the corpus boundary are right-CENSORED (they count
-    // in the at-risk denominator, never as churn). The KM product folds
-    // as a cumulative DECIMAL sum of 6dp-rounded ln terms over the
-    // duration spine (order-independent; a raw double Π would drift) —
-    // the spine is duration-bounded (≤ calendar days), so both
-    // unpartitioned windows run on a provably small frame. A d=n step
-    // drives survival to exact 0 via the flag, not ln(0).
-    "q_kaplan_meier" -> { (s, d) => kaplanMeier(Tables.events(s, d)) },
-    // DIFFERENCE-IN-DIFFERENCES (Card & Krueger 1994 canonical form):
-    // deterministic md5 treatment split × pre/post half-window, four
-    // cell means from ONE map-side-combined aggregate over purchases,
-    // effect = (T_post − T_pre) − (C_post − C_pre). Cell sums are exact
-    // cents; the four divisions happen once on the single result row.
-    "q_did" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-        .filter(col("event_type") === "purchase" && col("value").isNotNull)
-        .select(col("user_id"),
-          datediff(to_date(col("ts")), lit("1970-01-01")).as("day"),
-          (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
-      val mid = ev.agg(((min(col("day")) + max(col("day"))) / 2)
-        .cast("long").as("mid"))
-      val bucket = conv(substring(md5(col("user_id").cast("string")), 1, 4),
-        16, 10).cast("long") % 100
-      val cells = ev.crossJoin(broadcast(mid))
-        .select((bucket < 50).as("treated"), (col("day") > col("mid")).as("post"),
-          col("cents"))
-        .groupBy("treated", "post")
-        .agg(count(lit(1)).as("n"),
-          sum(col("cents").cast(DecimalType(38, 0))).as("s"))
-      def cell(t: Boolean, p: Boolean, c: String) =
-        max(when(col("treated") === t && col("post") === p, col(c)))
-      val one = cells.agg(
-        cell(true, false, "n").as("n_t_pre"), cell(true, true, "n").as("n_t_post"),
-        cell(false, false, "n").as("n_c_pre"), cell(false, true, "n").as("n_c_post"),
-        cell(true, false, "s").as("s_t_pre"), cell(true, true, "s").as("s_t_post"),
-        cell(false, false, "s").as("s_c_pre"), cell(false, true, "s").as("s_c_post"))
-      def mean(sc: String, nc: String) =
-        col(sc).cast("double") / col(nc).cast("double") / 100.0
-      one.select(col("n_t_pre"), col("n_t_post"), col("n_c_pre"), col("n_c_post"),
-        round((mean("s_t_post", "n_t_post") - mean("s_t_pre", "n_t_pre")) -
-          (mean("s_c_post", "n_c_post") - mean("s_c_pre", "n_c_pre")), 6)
-          .as("did_estimate"))
-    },
-    // MINIMUM DETECTABLE EFFECT at alpha=0.05 / power=0.8 for a
-    // two-arm split of the order stream — the "is this experiment even
-    // worth running" scalar every platform computes next to q_ab_test:
-    // MDE = (z_{0.975} + z_{0.8}) * sqrt(2 sigma^2 / n). One exact-moment
-    // aggregate; constants are 6dp literals shared with the oracle.
-    "q_mde" -> { (s, d) =>
-      val o = Tables.orders(s, d)
-        .select((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"))
-      def dec(c: Column) = c.cast(DecimalType(38, 0))
-      val m = o.agg(count(lit(1)).as("n"), sum(dec(col("cents"))).as("sx"),
-        sum(dec(col("cents")) * dec(col("cents"))).as("sxx"))
-      val nD = dec(col("n"))
-      val vx = (nD * col("sxx") - col("sx") * col("sx")).cast("double")
-      val n2 = col("n").cast("double") * col("n").cast("double")
-      val variance = vx / n2 / 10000.0 // dollars^2, population
-      val mean = col("sx").cast("double") / col("n").cast("double") / 100.0
-      val nArm = expr("n div 2")
-      val mde = lit(2.801585) * // z_{0.975} + z_{0.8}, 6dp literal
-        sqrt(lit(2.0) * variance / nArm.cast("double"))
-      m.select(nArm.as("n_per_arm"), round(mean, 6).as("mean"),
-        round(variance, 6).as("variance"),
-        round(mde, 6).as("mde_abs"),
-        round(mde / mean * 100.0, 6).as("mde_rel_pct"))
-    },
-    // RATIO-METRIC CI via the DELTA METHOD (Deng et al. 2017 "Trustworthy
-    // online controlled experiments" lineage): most product metrics are
-    // ratios of user-level sums (revenue per event here, r = ΣX/ΣY), and
-    // naive row-level variance is wrong because the unit of randomization
-    // is the USER. SE² = (varX + r²·varY − 2r·covXY) / (n·ȳ²) from
-    // user-level moments. Every moment is an exact integer/decimal sum
-    // (cents; X², XY, Y² fit DECIMAL(38,0) at any realistic scale), then
-    // ONE double expression tree for r, SE and the 95% bounds — the
-    // analytical companion to q_bootstrap_ci at a fraction of the cost
-    // (one pass, no replicates).
-    "q_ratio_ci" -> { (s, d) =>
-      val perUser = Tables.events(s, d).filter(col("value").isNotNull)
-        .select(col("user_id"),
-          (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("xc"))
-        .groupBy("user_id")
-        .agg(sum(col("xc")).as("x"), count(lit(1)).as("y"))
-      def dec(c: Column) = c.cast(DecimalType(38, 0))
-      val m = perUser.agg(count(lit(1)).as("n"),
-        sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
-        sum(dec(col("x")) * dec(col("x"))).as("sxx"),
-        sum(dec(col("y")) * dec(col("y"))).as("syy"),
-        sum(dec(col("x")) * dec(col("y"))).as("sxy"))
-      val nD = col("n").cast("double")
-      val xb = col("sx").cast("double") / nD
-      val yb = col("sy").cast("double") / nD
-      val varX = col("sxx").cast("double") / nD - xb * xb
-      val varY = col("syy").cast("double") / nD - yb * yb
-      val covXY = col("sxy").cast("double") / nD - xb * yb
-      val r = col("sx").cast("double") / col("sy").cast("double")
-      val se = sqrt((varX + r * r * varY - lit(2.0) * r * covXY) /
-        (nD * yb * yb))
-      m.select(col("n").as("n_users"),
-          round(r / 100.0, 6).as("ratio"),
-          round(se / 100.0, 6).as("se"),
-          round((r - lit(1.959964) * se) / 100.0, 6).as("ci_lo"),
-          round((r + lit(1.959964) * se) / 100.0, 6).as("ci_hi"))
-    },
-
-    // POWER CURVE — q_mde's scalar generalized to the planning table:
-    // the minimum detectable effect at n/4, n/2, n, 2n and 4n per-arm
-    // sample sizes (same alpha .05 / power .8 constant, same exact
-    // moments, one scan) — the "how long must this experiment run"
-    // readout. The n-multiples explode from a 5-element literal array,
-    // so the cost over q_mde is five map-side rows.
-    "q_power_curve" -> { (s, d) =>
-      val o = Tables.orders(s, d)
-        .select((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"))
-      def dec(c: Column) = c.cast(DecimalType(38, 0))
-      val m = o.agg(count(lit(1)).as("n"), sum(dec(col("cents"))).as("sx"),
-        sum(dec(col("cents")) * dec(col("cents"))).as("sxx"))
-      val vx = (dec(col("n")) * col("sxx") - col("sx") * col("sx"))
-        .cast("double")
-      val n2 = col("n").cast("double") * col("n").cast("double")
-      val variance = vx / n2 / 10000.0
-      val mean = col("sx").cast("double") / col("n").cast("double") / 100.0
-      val nArm = expr("(n div 2) * mult_num div mult_den")
-      val mde = lit(2.801585) *
-        sqrt(lit(2.0) * variance / nArm.cast("double"))
-      m.select(col("n"), col("sx"), col("sxx"),
-          explode(array(
-            struct(lit("0.25x").as("scale"), lit(1L).as("mult_num"), lit(4L).as("mult_den")),
-            struct(lit("0.5x").as("scale"), lit(1L).as("mult_num"), lit(2L).as("mult_den")),
-            struct(lit("1x").as("scale"), lit(1L).as("mult_num"), lit(1L).as("mult_den")),
-            struct(lit("2x").as("scale"), lit(2L).as("mult_num"), lit(1L).as("mult_den")),
-            struct(lit("4x").as("scale"), lit(4L).as("mult_num"), lit(1L).as("mult_den")))).as("s"))
-        .select(col("n"), col("sx"), col("sxx"),
-          col("s.scale").as("scale"), col("s.mult_num").as("mult_num"),
-          col("s.mult_den").as("mult_den"))
-        .select(col("scale"), nArm.as("n_per_arm"),
-          round(mde, 6).as("mde_abs"),
-          round(mde / mean * 100.0, 6).as("mde_rel_pct"))
-        .orderBy("scale")
-    },
-
-    // QUANTILE TREATMENT EFFECTS — effects beyond the mean: the per-arm
-    // exact p25/p50/p75 (the distributed X4 percentile engine, grouped
-    // by the md5 arm assignment) and their differences. A treatment that
-    // moves the tail but not the median (or vice versa) is invisible to
-    // q_ab_test's mean difference; QTE is the standard readout for it.
-    "q_qte" -> { (s, d) =>
-      val bucket = conv(substring(md5(col("user_id").cast("string")), 1, 4),
-        16, 10).cast("long") % 2
-      val ev = Tables.events(s, d).filter(col("value").isNotNull)
-        .select(when(bucket === 0, "a").otherwise("b").as("arm"), col("value"))
-      val g = groupedExactPercentiles(ev, "arm", "value",
-        Seq("p25" -> 0.25, "p50" -> 0.5, "p75" -> 0.75))
-      val a = g.filter(col("arm") === "a")
-        .select(col("p25").as("a25"), col("p50").as("a50"), col("p75").as("a75"))
-      val b = g.filter(col("arm") === "b")
-        .select(col("p25").as("b25"), col("p50").as("b50"), col("p75").as("b75"))
-      a.crossJoin(broadcast(b))
-        .selectExpr("stack(3, 'p25', a25, b25, 'p50', a50, b50, " +
-          "'p75', a75, b75) as (quantile, q_a, q_b)")
-        .select(col("quantile"), col("q_a"), col("q_b"),
-          round(col("q_b") - col("q_a"), 6).as("qte"))
-        .orderBy("quantile")
-    },
-
-    // SAMPLE-RATIO MISMATCH guardrail (the first trust check of every
-    // experiment readout): md5-split users 50/50 (the q_ab_test
-    // assignment), then χ² with 1 dof against the expected split —
-    // χ² > 3.841459 (95%) flags a broken randomizer/logging pipe before
-    // anyone reads the metric. Exact integer counts; one double tree.
-    "q_srm_check" -> { (s, d) =>
-      val bucket = conv(substring(md5(col("user_id").cast("string")), 1, 4),
-        16, 10).cast("long") % 2
-      val c = Tables.events(s, d)
-        .select(col("user_id")).distinct()
-        .select(when(bucket === 0, "a").otherwise("b").as("arm"))
-        .groupBy("arm").agg(count(lit(1)).as("cnt"))
-      val w = c.agg(
-        coalesce(sum(when(col("arm") === "a", col("cnt"))), lit(0L)).as("na"),
-        coalesce(sum(when(col("arm") === "b", col("cnt"))), lit(0L)).as("nb"))
-      val nD = (col("na") + col("nb")).cast("double")
-      val e = nD / 2.0
-      val chi2 = (col("na").cast("double") - e) * (col("na").cast("double") - e) / e +
-        (col("nb").cast("double") - e) * (col("nb").cast("double") - e) / e
-      w.select(col("na"), col("nb"), round(chi2, 6).as("chi2"),
-        (chi2 > 3.841459).as("srm_detected"))
-    },
-
-    // DISTRIBUTION-FREE MEDIAN CI (order statistics; Hahn & Meeker):
-    // the 95% CI for the median needs NO bootstrap and no normality —
-    // binomial order-statistic ranks l = ⌊(n − z√n)/2⌋ and
-    // u = ⌈1 + (n + z√n)/2⌉ bracket it (normal approximation to the
-    // binomial ranks, the standard large-n form). Rank selection runs on
-    // the DISTRIBUTED cumulative-value frame (X4's range-partitioned
-    // percentile shape — min v with cum ≥ rank; no single-task sort, no
-    // value buffering), so the whole CI costs the same as one exact
-    // percentile pass. Contrast with q_bootstrap_ci: that one re-weights
-    // the data B times for the MEAN; this reads it once for the median.
-    // SPLIT CONFORMAL PREDICTION (Papadopoulos et al. 2002; Vovk et al.
-    // 2005; Angelopoulos & Bates 2021 survey): the distribution-free
-    // prediction-interval recipe — fit any predictor on a train split
-    // (here: per-event-type exact median), take the ⌈(n+1)(1−α)⌉-th
-    // smallest nonconformity score |y − ŷ| on a CALIBRATION split, and
-    // intervals ŷ ± q̂ cover new points with probability ≥ 1−α, no
-    // distributional assumptions. The query MEASURES realized coverage on
-    // a held-out test split (α = 0.1; the md5 hash split is the
-    // q_group_split idiom) rather than trusting the theorem.
-    // Scale shape: the predictor is a type-cardinality broadcast; q̂ is
-    // ONE order statistic selected by rank on the X4 range-partitioned
-    // cumulative frame (no single-task sort at any calibration size);
-    // coverage is one counting pass.
-    "q_conformal_coverage" -> { (s, d) =>
-      val bucket = conv(substring(md5(col("event_id").cast("string")), 1, 4),
-        16, 10).cast("long") % 100
-      // persisted: the split frame feeds the predictor fit, n_train, the
-      // calibration scores, and the coverage pass — four consumers
-      val e = Tables.events(s, d).filter(col("value").isNotNull)
-        .select(col("event_type"), col("value").cast("double").as("v"),
-          bucket.as("b"))
-        .persistTracked()
-      val tr = e.filter(col("b") < 50)
-      val cal = e.filter(col("b") >= 50 && col("b") < 75)
-      val te = e.filter(col("b") >= 75)
-      val med = groupedExactPercentiles(tr, "event_type", "v", Seq("m" -> 0.5))
-      val cs = cal.join(broadcast(med), Seq("event_type"))
-        .select(abs(col("v") - col("m")).as("sc"))
-      val cum = cumulativeValueCounts(cs, Nil, "sc")
-      val k = ceil((col("n") + 1) * lit(0.9))
-      val qh = cum.agg(max(col("n")).as("n_cal"),
-        min(when(col("cum") >= k, col("v"))).as("qhat"))
-      val cov = te.join(broadcast(med), Seq("event_type"))
-        .crossJoin(broadcast(qh))
-        .groupBy("n_cal", "qhat")
-        .agg(count(lit(1)).as("n_test"),
-          coalesce(sum(when(abs(col("v") - col("m")) <= col("qhat"), 1L)),
-            lit(0L)).as("ncov"))
-      tr.agg(count(lit(1)).as("n_train"))
-        .crossJoin(broadcast(cov))
-        .select(col("n_train"), col("n_cal"), col("n_test"),
-          round(col("qhat"), 6).as("qhat"),
-          round(col("ncov").cast("double") / col("n_test"), 6).as("coverage"),
-          (col("ncov").cast("double") / col("n_test") >= 0.88)
-            .as("covered_at_nominal"))
-    },
-
-    "q_median_ci" -> { (s, d) =>
-      val cum = cumulativeValueCounts(Tables.orders(s, d), Nil, "o_totalprice")
-      val nD = col("n").cast("double")
-      val z = lit(1.959964)
-      val lRank = greatest(floor((nD - z * sqrt(nD)) / 2.0), lit(1L))
-      val uRank = least(ceil(lit(1.0) + (nD + z * sqrt(nD)) / 2.0),
-        col("n"))
-      val mRank = expr("(n + 1) div 2") // type-1 lower median rank
-      cum.agg(max(col("n")).as("n"),
-          min(when(col("cum") >= mRank, col("v"))).as("median"),
-          min(when(col("cum") >= lRank, col("v"))).as("ci_lo"),
-          min(when(col("cum") >= uRank, col("v"))).as("ci_hi"))
-        .select(col("n"), col("median"), col("ci_lo"), col("ci_hi"),
-          lit(0.95).as("conf"))
-    },
-
-    // NEYMAN SAMPLING ALLOCATION (Neyman 1934): split a fixed audit/
-    // labeling budget across strata ∝ N_k·σ_k — the variance-optimal
-    // design for estimating the overall mean, vs the naive proportional
-    // split (emitted alongside for contrast; high-variance strata earn
-    // more than their row share). One exact-moment aggregate per stratum
-    // (integer cents, the q_mde pattern); per-stratum weights round to
-    // 6dp and fold as DECIMAL so the total is order-independent; the
-    // final floor() allocations are identical doubles on both engines.
-    "q_neyman_alloc" -> { (s, d) =>
-      val B = 1000L
-      val ev = Tables.events(s, d).filter(col("value").isNotNull)
-        .select(col("event_type"),
-          (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
-      def dec(c: Column) = c.cast(DecimalType(38, 0))
-      val m = ev.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(dec(col("cents"))).as("sx"),
-          sum(dec(col("cents")) * dec(col("cents"))).as("sxx"))
-      val vx = (dec(col("n")) * col("sxx") - col("sx") * col("sx"))
-        .cast("double")
-      val n2 = col("n").cast("double") * col("n").cast("double")
-      val sigma = sqrt(vx / n2 / 10000.0)
-      val w = m.select(col("event_type"), col("n"),
-        round(sigma, 6).as("sigma"),
-        round(col("n").cast("double") * sigma, 6)
-          .cast(DecimalType(28, 6)).as("w"))
-      val tw = w.agg(sum(col("w")).as("tw"), sum(col("n")).as("tn"))
-      w.crossJoin(broadcast(tw))
-        .select(col("event_type"), col("n").as("n_rows"), col("sigma"),
-          floor(lit(B).cast("double") * col("w").cast("double") /
-            col("tw").cast("double")).cast("long").as("neyman_n"),
-          expr(s"($B * n) div tn").as("prop_n"))
-        .orderBy("event_type")
-    },
-    // POISSON BOOTSTRAP 95% CI of mean order value (Chamandy et al.,
-    // "Estimating Uncertainty for Massive Data Streams", Google 2012 —
-    // the distributed bootstrap: resampling n-with-replacement doesn't
-    // shard, but giving each row an independent Poisson(1) weight per
-    // replicate does, and is equivalent for large n). Weights are
-    // DETERMINISTIC: ONE md5 per (row, digest-group) yields FOUR 32-bit
-    // words (32 hex chars = 4×8) → four replicate uniforms, inverted
-    // through the Poisson(1) CDF (threshold literals generated from one
-    // Scala source into BOTH engines, so comparisons are bit-identical).
-    // The md5 is the dominant per-row cost, so 4 replicates per digest
-    // cuts the constant 4× vs one-hash-per-replicate (r07 plan audit).
-    // B=48 replicates (12 digests × 4) explode map-side; each replicate
-    // folds to exact integer (Σw·cents, Σw) pairs — the only shuffle
-    // carries 48 partial pairs per task. CI bounds are type-1 percentiles
-    // of the 48-row replicate-mean frame (ceil(0.025·48)=2nd,
-    // ceil(0.975·48)=47th).
-    "q_bootstrap_ci" -> { (s, d) =>
-      val B = 48
-      val cdf = { // cumulative Poisson(1) probabilities for k = 0..5
-        val pmf = (0 to 5).scanLeft(math.exp(-1.0))((p, k) => p / (k + 1)).tail
-        pmf.scanLeft(0.0)(_ + _).tail
-      }
-      // single-row-group local table: spread before the ×12 md5 explode
-      // (the query's whole CPU cost — measured 6 s in one task)
-      val rows = Tables.orders(s, d).select(col("o_orderkey"),
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"))
-        .repartition(s.sparkContext.defaultParallelism)
-      val w = cdf.zipWithIndex
-        .foldRight(lit(6): Column) { case ((c, k), e) =>
-          when(col("u") < c, k).otherwise(e)
-        }
-      val reps = rows
-        .select(col("o_orderkey"), col("cents"),
-          explode(sequence(lit(1), lit(B / 4))).as("g"))
-        .withColumn("h", md5(concat_ws(":", col("o_orderkey"), col("g"))))
-        .select(col("cents"), col("g"),
-          posexplode(array((0 until 4).map(sl =>
-            substring(col("h"), sl * 8 + 1, 8)): _*)).as(Seq("sl", "hx")))
-        .select(((col("g") - 1) * 4 + col("sl") + 1).as("b"), col("cents"),
-          ((conv(col("hx"), 16, 10).cast("long").cast("double") + 0.5) /
-            4294967296.0).as("u"))
-        .withColumn("w", w)
-        .groupBy("b")
-        .agg(round(sum(col("w").cast("long") * col("cents")).cast("double") /
-          sum(col("w").cast("long")) / 100.0, 6).as("mean_b"))
-      val rn = row_number().over(Window.orderBy(col("mean_b"), col("b")))
-      val ci = reps.withColumn("rn", rn)
-        .agg(max(when(col("rn") === 2, col("mean_b"))).as("ci_lo"),
-          max(when(col("rn") === B - 1, col("mean_b"))).as("ci_hi"))
-      val full = rows.agg(round(sum(col("cents")).cast("double") /
-        count(lit(1)) / 100.0, 6).as("mean"))
-      full.crossJoin(broadcast(ci))
-    },
-    // LAST-TOUCH ATTRIBUTION — each purchase credits the latest
-    // non-purchase event by the same user within the preceding 24 h
-    // ('none' if nothing qualifies). Candidates come from a per-user
-    // time-range join (bounded by per-user event density, the as-of
-    // shape); the winner per purchase is max(struct(ts, type)) —
-    // latest-then-type, the same deterministic tie-break row_number
-    // replays in the oracle. Left-join misses collapse to NULL before
-    // the max so empty groups surface as NULL, not a null-field struct.
-    "q_attribution" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
-      val purch = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("p_id"), col("ts").as("p_ts"))
-      val qual = ev.filter(col("event_type") =!= "purchase")
-        .select(col("user_id"), col("ts").as("q_ts"), col("event_type").as("q_type"))
-      purch.join(qual,
-          purch("user_id") === qual("user_id") &&
-            col("q_ts") < col("p_ts") &&
-            col("q_ts") >= col("p_ts") - expr("INTERVAL 24 HOURS"), "left")
-        .groupBy("p_id")
-        .agg(max(when(col("q_ts").isNotNull,
-          struct(col("q_ts"), col("q_type")))).as("b"))
-        .select(coalesce(col("b.q_type"), lit("none")).as("attributed_type"))
-        .groupBy("attributed_type").agg(count(lit(1)).as("n_purchases"))
-        .orderBy("attributed_type")
-    },
-    // A9 — rolling 7-day MEDIAN revenue: the robust twin of the rolling
-    // sum (one outlier day can't drag it). No median window function in
-    // Spark — collect the ≤ 7 trailing day-cents into an array (bounded
-    // by the frame, never by data) and index the sorted middle; even
-    // frames interpolate as (m1+m2)/2 in exact-cents double, matching
-    // DuckDB's quantile_cont semantics bit-for-bit. Day-spine window,
-    // same justification as q_rolling_revenue.
-    "q_rolling_median" -> { (s, d) =>
-      val daily = Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-          .cast("long").as("dc"))
-      val w = Window.orderBy("day_num").rangeBetween(-6, 0)
-      val arr = sort_array(collect_list(col("dc")).over(w))
-      val n = size(arr)
-      val med = when(n % 2 === 1,
-          element_at(arr, ((n + 1) / 2).cast("int")).cast("double"))
-        .otherwise((element_at(arr, (n / 2).cast("int")) +
-          element_at(arr, (n / 2).cast("int") + 1)) / 2.0)
-      daily
-        .withColumn("day_num", datediff(col("day"), lit("1970-01-01").cast("date")))
-        .withColumn("median_7d", med / 100.0)
-        .select(col("day"), (col("dc") / 100.0).as("daily_total"),
-          col("median_7d"))
-        .orderBy("day")
-    },
-    // TIME-BOXED funnel — the strict version of q_funnel: each step must
-    // happen within 72 h of the PREVIOUS step's first completion, and
-    // "first view after signup" is the min over qualifying events, not
-    // the global min (a user whose only view predates signup doesn't
-    // convert). Three user-keyed aggregates chained by joins — each pass
-    // shuffles events once on user_id; the step frames are
-    // user-cardinality-sized.
-    "q_funnel_windowed" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), col("event_type"), col("ts"))
-      val win = expr("INTERVAL 72 HOURS")
-      val tA = ev.filter(col("event_type") === "signup")
-        .groupBy("user_id").agg(min(col("ts")).as("t_a"))
-      val tB = ev.filter(col("event_type") === "view")
-        .join(tA, Seq("user_id"))
-        .filter(col("ts") > col("t_a") && col("ts") <= col("t_a") + win)
-        .groupBy("user_id").agg(min(col("ts")).as("t_b"))
-      val tC = ev.filter(col("event_type") === "purchase")
-        .join(tB, Seq("user_id"))
-        .filter(col("ts") > col("t_b") && col("ts") <= col("t_b") + win)
-        .groupBy("user_id").agg(min(col("ts")).as("t_c"))
-      tA.agg(count(lit(1)).as("n_signup"))
-        .crossJoin(broadcast(tB.agg(count(lit(1)).as("n_view_72h"))))
-        .crossJoin(broadcast(tC.agg(count(lit(1)).as("n_purchase_72h"))))
-    },
-    // A9 — EWMA-smoothed daily revenue (α = 0.5), the recursive smoother
-    // a rolling mean can't express: ewma_t = (x_t + ewma_{t−1})/2. The
-    // per-day pre-aggregate is calendar-bounded (the q_rolling_revenue
-    // argument), so ONE ordered array + one sequential fold is O(days).
-    // The recursion runs in exact integer CENTS with floor division —
-    // zero float in the state, so there is no per-step rounding to
-    // disagree across engines (a round(x,6) recurrence measurably
-    // diverged on half-ties); last(acc) carries the state.
-    "q_ewma_daily" -> { (s, d) =>
-      Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("dt"))
-        .select(col("day"), col("dt").cast("double").as("rev"),
-          (col("dt") * 100).cast("long").as("rc"))
-        .agg(array_sort(collect_list(struct(col("day"), col("rev"),
-          col("rc")))).as("a"))
-        .selectExpr(
-          """inline(aggregate(
-            |  a,
-            |  cast(array() as array<struct<day:date,rev:double,ewma_u:bigint>>),
-            |  (acc, e) -> array_append(acc, named_struct(
-            |    'day', e.day, 'rev', e.rev,
-            |    'ewma_u', case when size(acc) = 0 then e.rc
-            |              else (e.rc + element_at(acc, -1).ewma_u) div 2
-            |              end))))""".stripMargin)
-        .select(col("day"), col("rev"),
-          (col("ewma_u").cast("double") / 100.0).as("ewma"))
-        .orderBy("day")
-    },
-
-    // ADDITIVE SEASONAL DECOMPOSITION (classical, Kendall & Stuart):
-    // trend = centered 7-day moving average on the day spine (edges
-    // with fewer than 7 observations drop — the textbook contract),
-    // detrended = y − trend, and the per-ISO-weekday mean of the
-    // detrended series IS the additive seasonal component — the
-    // decomposition artifact behind q_dow_seasonality's one-number
-    // index and q_anomaly_daily's adjustment. Exact integers
-    // end-to-end; the one subtlety is that detrended values go
-    // NEGATIVE, where integer division's floor-vs-truncate semantics
-    // can differ across engines — so the group mean runs on
-    // 2^40-offset values (positive by construction, where both agree)
-    // and shifts back, the q_embed_outliers +127 idiom. Scale:
-    // day-spine windows only (calendar-bounded), then a ≤7-row group.
-    "q_seasonal_decompose" -> { (s, d) =>
-      val K = 1099511627776L // 2^40
-      val daily = Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-          .cast("long").as("rc"))
-      val w7 = Window.orderBy("day").rowsBetween(-3, 3)
-      val det = daily
-        .withColumn("cnt7", count(lit(1)).over(w7))
-        .withColumn("s7", sum(col("rc")).over(w7))
-        .filter(col("cnt7") === 7)
-        .select(col("day"), (col("rc") - expr("s7 div 7")).as("det"))
-      det.groupBy((weekday(col("day")) + 1).as("dow"))
-        .agg(count(lit(1)).as("n_days"),
-          sum(col("det") + K).as("so"))
-        .select(col("dow"), col("n_days"),
-          (expr("so div n_days") - K).as("seasonal_cents"))
-        .orderBy("dow")
-    },
-
-    // CUSUM CONTROL CHART (Page 1954) over daily revenue — the
-    // sequential drift detector beside q_anomaly_daily's pointwise
-    // seasonal z and q_changepoint's retrospective split: S⁺/S⁻
-    // accumulate deviations beyond an allowance k = σ/2 and alarm at
-    // h = 4σ (the classic (k, h) operating point), resetting after
-    // each alarm. Catches slow drifts no single-day outlier test sees.
-    // Exactness: the recursion state is INTEGER CENTS (μ is the floor
-    // mean; k and h floor once from the exact-moment σ — the only two
-    // doubles, floored identically in both engines), so the whole fold
-    // replays bit-for-bit (the q_ewma_daily contract). Scale: one
-    // day-spine fold (calendar-bounded array aggregate), moments from
-    // one scalar pass.
-    "q_cusum" -> { (s, d) =>
-      cusumOfDaily(Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-          .cast("long").as("rc")))
-    },
-
-    // SAX SYMBOLIC REPRESENTATION of the daily-revenue series (Lin,
-    // Keogh, Lonardi & Chiu 2003): PAA-compress the n-day series into
-    // 30 equal segments, z-normalize, and quantize into a 4-symbol
-    // alphabet at the standard Gaussian breakpoints (−0.6745, 0,
-    // 0.6745) — the discretization behind motif discovery / novelty
-    // search over time series at scale (symbols index into suffix
-    // structures; raw doubles don't). Exactness: per-segment sums and
-    // the global moments are exact integers (Σc as Long, Σc² as
-    // DECIMAL/HUGEINT — the q_cuped idiom), z-scores are one fixed
-    // double tree from them, and the SYMBOL is assigned from the
-    // 6dp-ROUNDED z so the bin edges can't flip on a 1-ulp cross-engine
-    // wobble. PAA-then-normalize ≡ normalize-then-PAA (z is affine).
-    // Scale: day-spine windows only (calendar-bounded); moments join as
-    // one broadcast scalar row.
-    "q_sax_symbolic" -> { (s, d) =>
-      saxSymbolic(Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-          .cast("long").as("c")))
-    },
-
-    // ROLLING-ORIGIN FORECAST BACKTEST — the "does the forecaster work"
-    // harness next to q_ewma_daily/q_holt_forecast: at every origin day
-    // t, the one-step-ahead EWMA forecast (= ewma_{t-1}, the value the
-    // smoother would have shipped that morning) is compared to the
-    // realized revenue; MAE/MAPE plus the skill vs the naive
-    // carry-forward baseline (forecast = yesterday's actual — the bar
-    // any forecaster must beat). Errors are exact integer cents (the
-    // ewma state is integer), so every sum is order-independent; MAPE
-    // folds 9dp-rounded per-day ratios as DECIMAL. The lag window runs
-    // on the calendar-bounded day spine (the q_rolling_revenue
-    // argument), never on orders.
-    "q_forecast_backtest" -> { (s, d) =>
-      val ew = Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("dt"))
-        .select(col("day"), (col("dt") * 100).cast("long").as("rc"))
-        .agg(array_sort(collect_list(struct(col("day"), col("rc")))).as("a"))
-        .selectExpr(
-          """inline(aggregate(
-            |  a,
-            |  cast(array() as array<struct<day:date,rc:bigint,ewma_u:bigint>>),
-            |  (acc, e) -> array_append(acc, named_struct(
-            |    'day', e.day, 'rc', e.rc,
-            |    'ewma_u', case when size(acc) = 0 then e.rc
-            |              else (e.rc + element_at(acc, -1).ewma_u) div 2
-            |              end))))""".stripMargin)
-      val w = Window.orderBy("day")
-      val bt = ew
-        .withColumn("prev_ewma", lag(col("ewma_u"), 1).over(w))
-        .withColumn("prev_rc", lag(col("rc"), 1).over(w))
-        .filter(col("prev_ewma").isNotNull)
-        .select(col("rc"),
-          abs(col("rc") - col("prev_ewma")).as("err_c"),
-          abs(col("rc") - col("prev_rc")).as("naive_c"))
-      bt.agg(count(lit(1)).as("n_days"),
-          sum(col("err_c")).as("se"), sum(col("naive_c")).as("sn"),
-          sum(round(col("err_c").cast("double") / col("rc").cast("double")
-            * 100.0, 9).cast(DecimalType(28, 9))).as("sm"))
-        .select(col("n_days"),
-          round(col("se").cast("double") / col("n_days") / 100.0, 6)
-            .as("mae"),
-          round(col("sm").cast("double") / col("n_days"), 6).as("mape_pct"),
-          round(col("sn").cast("double") / col("n_days") / 100.0, 6)
-            .as("naive_mae"),
-          round(lit(1.0) - col("se").cast("double") /
-            col("sn").cast("double"), 6).as("skill_vs_naive"))
-    },
-
-    // SPLIT-CONFORMAL PREDICTION INTERVAL for the one-step EWMA
-    // forecaster (Vovk et al. 2005; Lei et al. 2018) — the TIME-SERIES
-    // member of the conformal pair: q_conformal_coverage calibrates a
-    // static per-type predictor on an exchangeable md5 hash split
-    // (where the ≥ 1−α guarantee holds exactly); this one calibrates a
-    // SEQUENTIAL forecaster on a temporal split, the case every
-    // forecasting deployment actually faces. Calibrate q̂ as the
-    // ⌈0.9·(n_cal+1)⌉-th smallest absolute residual on the first 70%
-    // of days, then MEASURE the empirical coverage of ŷ ± q̂ on the
-    // held-out last 30%. Honest caveat in the readout: a time split is
-    // not exchangeable, so the ≥ 90% marginal guarantee is approximate
-    // here — which is exactly why coverage is MEASURED, not assumed
-    // (target_ppm rides alongside). Exactness:
-    // residuals are integer cents, q̂ is an exact order statistic
-    // (integer rank math — no interpolated quantile), coverage is
-    // integer ppm; no float enters until the reported q̂. Scale: the
-    // residual spine is day-cardinality (calendar-bounded windows);
-    // q̂ broadcasts back as a scalar.
-    "q_conformal_interval" -> { (s, d) =>
-      val ew = Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("dt"))
-        .select(col("day"), (col("dt") * 100).cast("long").as("rc"))
-        .agg(array_sort(collect_list(struct(col("day"), col("rc")))).as("a"))
-        .selectExpr(
-          """inline(aggregate(
-            |  a,
-            |  cast(array() as array<struct<day:date,rc:bigint,ewma_u:bigint>>),
-            |  (acc, e) -> array_append(acc, named_struct(
-            |    'day', e.day, 'rc', e.rc,
-            |    'ewma_u', case when size(acc) = 0 then e.rc
-            |              else (e.rc + element_at(acc, -1).ewma_u) div 2
-            |              end))))""".stripMargin)
-      val w = Window.orderBy("day")
-      val res = ew
-        .withColumn("prev_ewma", lag(col("ewma_u"), 1).over(w))
-        .filter(col("prev_ewma").isNotNull)
-        .select(col("day"), abs(col("rc") - col("prev_ewma")).as("err_c"))
-        .withColumn("rn", row_number().over(Window.orderBy("day")))
-      val tot = res.agg(count(lit(1)).as("n"))
-      val marked = res.crossJoin(broadcast(tot))
-        .withColumn("n_cal", expr("(7 * n) div 10"))
-      val qhat = marked.filter(col("rn") <= col("n_cal"))
-        .withColumn("rr",
-          row_number().over(Window.orderBy("err_c", "day")))
-        .filter(col("rr") === expr("(9 * (n_cal + 1) + 9) div 10"))
-        .select(col("err_c").as("q_c"))
-      marked.filter(col("rn") > col("n_cal"))
-        .crossJoin(broadcast(qhat))
-        .agg(max(col("n_cal")).as("n_cal"), count(lit(1)).as("n_eval"),
-          max(col("q_c")).as("qc"),
-          sum(when(col("err_c") <= col("q_c"), 1L).otherwise(0L)).as("cov"))
-        .select(col("n_cal"), col("n_eval"),
-          round(col("qc").cast("double") / 100.0, 6).as("qhat"),
-          expr("cov * 1000000 div n_eval").as("coverage_ppm"),
-          lit(900000L).as("target_ppm"))
-    },
-
-    // A9 — Holt double-exponential forecast (α = β = ½): level+trend
-    // recursion over the daily series, then a 7-day linear forecast.
-    // Same exactness contract as q_ewma_daily — the state is integer
-    // CENTS, halved with TRUNCATING integer division on both engines
-    // (Spark `div` and DuckDB `//` both round toward zero; the trend can
-    // go NEGATIVE, where mixing truncation with a floor-semantics shift
-    // or `FLOOR(x/2)` would diverge — empirically caught at sf0.01). Init:
-    // l₁ = y₁, b₁ = 0. The fold runs once over the calendar-bounded
-    // ordered array; output is the 7 forecast rows.
-    "q_holt_forecast" -> { (s, d) =>
-      Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg(((sum(col("o_totalprice").cast(DecimalType(18, 2)))) * 100)
-          .cast("long").as("rc"))
-        .agg(array_sort(collect_list(struct(col("day"), col("rc")))).as("a"))
-        .selectExpr(
-          """aggregate(
-            |  a,
-            |  named_struct('d', cast(null as date),
-            |               'l', cast(0 as bigint), 'b', cast(0 as bigint),
-            |               'init', false),
-            |  (acc, e) -> if(NOT acc.init,
-            |    named_struct('d', e.day, 'l', e.rc, 'b', cast(0 as bigint),
-            |                 'init', true),
-            |    named_struct('d', e.day,
-            |      'l', (e.rc + acc.l + acc.b) div 2,
-            |      'b', ((e.rc + acc.l + acc.b) div 2
-            |             - acc.l + acc.b) div 2,
-            |      'init', true))) AS st""".stripMargin)
-        .selectExpr("st.d AS last_day", "st.l AS l", "st.b AS b",
-          "explode(sequence(1, 7)) AS h")
-        .select(col("h").cast("long").as("h"),
-          date_add(col("last_day"), col("h").cast("int")).as("day"),
-          ((col("l") + col("h") * col("b")).cast("double") / 100.0)
-            .as("forecast"))
-        .orderBy("h")
-    },
-
-    // A6/EDA — the distribution plot as data: 20 equi-width bins over
-    // order totals (two-pass, integer-cents edges).
-    "q_histogram" -> { (s, d) =>
-      equiWidthHistogram(Tables.orders(s, d), "o_totalprice", 20)
-    },
-    // A6/EDA — per-priority outlier audit at |z| > 2.
-    "q_zscore_outliers" -> { (s, d) =>
-      zscoreOutliers(Tables.orders(s, d), "o_orderpriority", "o_totalprice", 2.0)
-    },
-
-    // ROBUST OUTLIERS — median-absolute-deviation audit (the
-    // heavy-tail-safe twin of q_zscore_outliers: mean/std are themselves
-    // dragged by the outliers they're meant to find; median/MAD aren't).
-    // Both medians run through the distributed exact-percentile engine
-    // (no value buffering), each threshold broadcasts back as a 1-row
-    // dimension, and the flag pass is map-side — three bounded passes
-    // over the column at any corpus size. 4.4478 = 3σ × the 1.4826
-    // normal-consistency constant, pinned as ONE double literal so both
-    // engines parse the identical constant (no cross-engine
-    // constant-folding drift).
-    "q_mad_outliers" -> { (s, d) =>
-      madOutliers(Tables.orders(s, d), "o_totalprice")
-    },
-
-    // TRIMMED MEAN — the mean of the inner 5%–95% of the distribution
-    // (q_winsorize's sibling: drop the tails instead of clipping them).
-    // Thresholds come from the distributed exact percentile and
-    // broadcast back; the trimmed sum is exact-DECIMAL (addition-order
-    // immune) cast to double once — same parity recipe as q_a6_describe.
-    "q_trimmed_mean" -> { (s, d) =>
-      trimmedMean(Tables.orders(s, d), "o_totalprice")
-    },
-
-    // GINI COEFFICIENT — the concentration/imbalance report (how skewed
-    // is spend across orders; the same statistic audits token-count
-    // concentration across sources before training). Computed from the
-    // scale-safe cumulative value-count frame: value v occupies ranks
-    // (cum−c+1)..cum, whose sum is c·(2·cum−c+1)/2 — so Σ rank·x needs
-    // no per-row ranking, just one pass over DISTINCT values. All sums
-    // are exact DECIMAL (rank terms are integers, values 2dp) cast to
-    // double once at the end — no float accumulation anywhere, no
-    // single-task sort at any cardinality. G = Σc(2cum−c+1)v/(n·Σx) −
-    // (n+1)/n, the standard sorted-rank identity with the /2 folded out.
-    "q_gini" -> { (s, d) =>
-      gini(Tables.orders(s, d), "o_totalprice")
-    },
-
-    // Per-source document-length concentration — the data-mix balance
-    // audit over the training corpus (a source whose length Gini spikes
-    // is dominated by a few giant documents).
-    "q_gini_by_source" -> { (s, d) =>
-      groupedGini(Tables.documents(s, d), "source", "n_chars")
-    },
-
-    // Source-mix diversity — entropy + effective source count over the
-    // corpus source distribution (the one-number summary of "is this mix
-    // dominated by a single source"; complements q_source_mix's shares).
-    "q_mix_entropy" -> { (s, d) =>
-      mixEntropy(Tables.documents(s, d), "source")
-    },
-
-    // Drift monitor: PSI of the document-length distribution, English
-    // slice vs everything else (the per-ingest-batch distribution check
-    // a training pipeline runs before accepting a new shard).
-    "q_drift_psi" -> { (s, d) =>
-      driftPsi(Tables.documents(s, d), length(col("text")),
-        col("lang") === "en", 10)
-    },
-
-    // Drift monitor, per-source: JS divergence of each source's length
-    // distribution vs the whole corpus — the "which shard drifted"
-    // follow-up to q_drift_psi's single A/B number, bounded in [0,1] bit
-    // so sources are directly comparable.
-    "q_js_divergence" -> { (s, d) =>
-      jsDivergence(Tables.documents(s, d), length(col("text")), "source", 10)
-    },
-
-    // Classical hypothesis tests over corpus slices — the "is this
-    // difference real" layer on top of the drift monitors.
-    // Does document length vary by language beyond chance? (one-way ANOVA)
-    "q_anova_lang" -> { (s, d) =>
-      anova(Tables.documents(s, d), length(col("text")), "lang")
-    },
-    // Are language and source independent? (χ² + mutual information —
-    // MI near 0 bits means the source mix is language-balanced.)
-    "q_chi2_contingency" -> { (s, d) =>
-      contingencyStats(Tables.documents(s, d), "lang", "source")
-    },
-    // Distribution-free two-sample test: English vs non-English length
-    // distributions (the KS complement to q_drift_psi's binned view).
-    "q_ks_test" -> { (s, d) =>
-      ksTest(Tables.documents(s, d), length(col("text")), col("lang") === "en")
-    },
-    // METRIC DIAGNOSIS / root-cause contribution (the Adtributor shape —
-    // Bhagwan et al., NSDI 2014): a dashboard moved between two periods;
-    // for each segment of a dimension, report how much of the TOTAL
-    // delta it explains (EP = segment delta / total delta, signed — a
-    // segment moving against the trend gets a negative EP) and how
-    // SURPRISING its mix shift is (per-segment Jensen-Shannon term
-    // between the period-share distributions: a big but proportional
-    // segment is unsurprising; a small segment that doubled is). Periods
-    // = first vs second half of the month, metric = Σ value by
-    // event_type. All inputs are exact DECIMAL cent sums; the JS/EP
-    // terms are per-ROW double expressions of those exact sums (no
-    // cross-row float accumulation), rounded at 6dp on both engines.
-    // Scale posture: one fact pass to a (dimension × 2)-cardinality
-    // frame; totals broadcast back as scalars.
-    "q_metric_attribution" -> { (s, d) =>
-      val ev = Tables.events(s, d).filter(col("value").isNotNull)
-        .select(col("event_type"),
-          (dayofmonth(col("ts")) <= 15).as("pa"),
-          (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-            .as("cents"))
-      val seg = ev.groupBy("event_type")
-        .agg(coalesce(sum(when(col("pa"), col("cents"))), lit(0L)).as("ca"),
-          coalesce(sum(when(!col("pa"), col("cents"))), lit(0L)).as("cb"))
-      val tot = seg.agg(sum(col("ca")).as("ta"), sum(col("cb")).as("tb"))
-      val p = col("ca").cast("double") / col("ta").cast("double")
-      val q = col("cb").cast("double") / col("tb").cast("double")
-      val js = lit(0.5) * (
-        when(p === 0.0, 0.0).otherwise(p * log2(lit(2.0) * p / (p + q))) +
-          when(q === 0.0, 0.0).otherwise(q * log2(lit(2.0) * q / (p + q))))
-      seg.crossJoin(broadcast(tot))
-        .select(col("event_type"),
-          (col("ca").cast("double") / 100.0).as("va"),
-          (col("cb").cast("double") / 100.0).as("vb"),
-          ((col("cb") - col("ca")).cast("double") / 100.0).as("delta"),
-          round((col("cb") - col("ca")).cast("double") /
-            (col("tb") - col("ta")).cast("double"), 6).as("ep"),
-          round(js, 6).as("surprise"))
-        .orderBy("event_type")
-    },
-
-    // WASSERSTEIN-1 (earth mover's) distance between the same two slices
-    // the KS test compares — the drift metric that weighs HOW FAR mass
-    // moved, not just the worst CDF gap (a small shift of all mass and a
-    // large shift of a sliver can tie on KS; W1 separates them). For 1-D
-    // empirical CDFs, W1 = Σ over the merged value spine of
-    // Δv·|F_A − F_B| — the KS cumulative frame with the sup replaced by
-    // a decimal-folded integral (6dp terms, order-independent sum).
-    // Same scale posture as KS: everything lives on the distinct-value
-    // spine; the fact pass is one map-side-combined groupBy.
-    "q_wasserstein_drift" -> { (s, d) =>
-      wasserstein1(Tables.documents(s, d), length(col("text")),
-        col("lang") === "en")
-    },
-
-    // Closed-form modeling layer on top of the test pack.
-    // Is revenue trending, per market segment? (exact-moment OLS)
-    "q_ols_trend" -> { (s, d) =>
-      olsTrend(Tables.orders(s, d), Tables.customer(s, d))
-    },
-    // Is the trend robust to outlier months? (Theil–Sen + Mann–Kendall —
-    // the distribution-free complement to q_ols_trend.)
-    "q_trend_robust" -> { (s, d) =>
-      robustTrend(Tables.orders(s, d), Tables.customer(s, d))
-    },
-    // How much weekly structure does daily revenue have? (ACF lags 1..7)
-    "q_acf_daily" -> { (s, d) =>
-      acfDaily(Tables.orders(s, d), 7)
-    },
-    // How well does raw length separate English from the rest? (rank AUC
-    // — the effect-size companion to q_ks_test's significance.)
-    "q_auc_length" -> { (s, d) =>
-      aucRank(Tables.documents(s, d), length(col("text")),
-        col("lang") === "en")
-    },
-    // Does the money column look organic? (Benford leading-digit audit —
-    // a synthetic uniform price generator fails it loudly, which is
-    // itself the interesting report on this corpus.)
-    "q_benford" -> { (s, d) =>
-      benford(Tables.orders(s, d), "o_totalprice")
-    },
-    // Which brands sell together? (support / confidence / lift over
-    // order baskets.)
-    "q_assoc_rules" -> { (s, d) =>
-      assocRules(Tables.lineitem(s, d), Tables.part(s, d))
-    },
-    // Where does each document sit in the corpus length distribution?
-    // (mid-rank CDF position — the quantile-normalized feature)
-    "q_quantile_normalize" -> { (s, d) =>
-      quantileNormalize(Tables.documents(s, d), "doc_id", "n_chars", 100L)
-    },
-    // How big is the en/non-en length difference, in pooled SDs?
-    // (Cohen's d — the effect size next to q_ks_test's significance.)
-    "q_effect_size" -> { (s, d) =>
-      cohensD(Tables.documents(s, d), length(col("text")),
-        col("lang") === "en")
-    },
-    // Shape of the order-value distribution per priority class: exact
-    // one-pass skewness + excess kurtosis (describe's missing moments).
-    "q_moments" -> { (s, d) =>
-      skewKurtosis(Tables.orders(s, d), "o_orderpriority", "o_totalprice")
-    },
-    // Does quantity still track line value once discount is controlled
-    // for? (first-order partial correlation, one moment pass)
-    "q_partial_corr" -> { (s, d) =>
-      partialCorr(Tables.lineitem(s, d),
-        "l_quantity", "l_extendedprice", "l_discount")
-    },
-    // Is the daily up/down pattern random? (Wald–Wolfowitz runs test)
-    "q_runs_test" -> { (s, d) =>
-      runsTest(Tables.orders(s, d))
-    },
-    // What price point moves the units? (quantity-weighted price
-    // quartiles — exact, interpolation-free, tie-deterministic.)
-    "q_weighted_median" -> { (s, d) =>
-      weightedPercentiles(Tables.lineitem(s, d),
-        "l_extendedprice", "l_quantity")
-    },
-    // Does quantity drive line value monotonically? (tie-corrected
-    // Spearman ρ — the rank-based complement to q_a8_corr's Pearson.)
-    "q_spearman" -> { (s, d) =>
-      spearman(Tables.lineitem(s, d), "l_quantity", "l_extendedprice")
-    },
-    // How cliquish is the co-purchase graph? (triangle census over the
-    // lift>1 brand graph — the graph-analytics complement to the rules.)
-    "q_triangle_census" -> { (s, d) =>
-      coPurchaseTriangles(Tables.lineitem(s, d), Tables.part(s, d))
-    },
-    // Which weekdays carry the revenue? (multiplicative seasonality index)
-    "q_dow_seasonality" -> { (s, d) =>
-      dowSeasonality(Tables.orders(s, d))
-    },
-    // Where does the revenue level shift? (exact-integer CUSUM argmax)
-    "q_changepoint" -> { (s, d) =>
-      cusumChangepoint(Tables.orders(s, d))
-    },
-    // Which days page the on-call? (dow-adjusted |z| > 2 on daily counts)
-    "q_anomaly_daily" -> { (s, d) =>
-      dailyAnomalies(Tables.events(s, d))
-    },
-    // Which event types anchor user journeys? (integer fixed-point
-    // PageRank over the session transition graph.)
-    "q_pagerank" -> { (s, d) =>
-      pagerankTransitions(Tables.events(s, d))
-    },
-    // Degree distribution of the session-transition graph (distinct
-    // in/out neighbors per node, then node counts per degree) — the
-    // third graph report alongside PageRank and the triangle census.
-    // Everything after the shared corpus-sized sessionize pass runs on
-    // the event-type²-bounded edge frame.
-    "q_graph_degree" -> { (s, d) =>
-      val edges = sessionTransitions(Tables.events(s, d))
-        .select("src", "dst").persistTracked()
-      def dist(keyCol: String, dir: String) = edges
-        .groupBy(col(keyCol).as("node"))
-        .agg(countDistinct(if (keyCol == "src") col("dst") else col("src"))
-          .as("degree"))
-        .groupBy("degree").agg(count(lit(1)).as("n_nodes"))
-        .select(lit(dir).as("direction"), col("degree"), col("n_nodes"))
-      dist("src", "out").unionByName(dist("dst", "in"))
-        .orderBy("direction", "degree")
-    },
-    // Mutual information I(event_type; weekday) with marginal entropies
-    // — the feature-relevance audit (does behavior depend on day?).
-    // Joint counts collapse to a ≤ |types|·7 cell frame in one map-side-
-    // combined shuffle; marginals re-aggregate the cells; per-cell info
-    // terms round to 9 dp and fold as DECIMAL so the sums are
-    // aggregation-order-independent on both engines.
-    "q_mutual_info" -> { (s, d) =>
-      val cells = Tables.events(s, d)
-        .select(col("event_type").as("x"), (weekday(col("ts")) + 1).as("y"))
-        .groupBy("x", "y").agg(count(lit(1)).as("cxy"))
-        .persistTracked()
-      val cx = cells.groupBy("x").agg(sum("cxy").as("cx"))
-      val cy = cells.groupBy("y").agg(sum("cxy").as("cy"))
-      val n = cells.agg(sum("cxy").as("n"))
-      def infoFold(term: Column) =
-        round(sum(round(term, 9).cast(DecimalType(28, 9))).cast("double"), 6)
-      val mi = cells.join(broadcast(cx), Seq("x")).join(broadcast(cy), Seq("y"))
-        .crossJoin(broadcast(n))
-        .agg(infoFold((col("cxy").cast("double") / col("n")) *
-          log2(col("cxy").cast("double") * col("n") /
-            (col("cx").cast("double") * col("cy")))).as("mi"))
-      def entropy(marg: DataFrame, c: String) = marg.crossJoin(broadcast(n))
-        .agg(infoFold((col(c).cast("double") / col("n")) *
-          log2(col("n").cast("double") / col(c))).as(s"h_$c"))
-      mi.crossJoin(broadcast(entropy(cx, "cx")))
-        .crossJoin(broadcast(entropy(cy, "cy")))
-        .select(col("mi"), col("h_cx").as("h_x"), col("h_cy").as("h_y"))
-    },
-
-    // A9 — the full dashboard lattice in ONE pass: CUBE(year, status)
-    // computes detail + BOTH one-dimension subtotals + grand total in a
-    // single aggregate — four dashboard queries, one scan, one shuffle
-    // (Expand multiplies rows before the exchange, but the map-side
-    // combine collapses them to group cardinality). Complements
-    // q_rollup_dashboard's strict hierarchy; grouping_id bit semantics
-    // pinned against DuckDB's GROUPING.
-    "q_cube_dashboard" -> { (s, d) =>
-      Tables.orders(s, d)
-        .cube(year(col("o_orderdate")).as("y"), col("o_orderstatus").as("st"))
-        .agg(grouping_id().as("gid"), count(lit(1)).as("cnt"),
-          sumDec(col("o_totalprice")).as("total"))
-        .select(col("gid"), col("y"), col("st"), col("cnt"), col("total"))
-        .orderBy(col("gid"), col("y").asc_nulls_last, col("st").asc_nulls_last)
-    },
-
-    // A9 — the dashboard hierarchy in ONE pass: ROLLUP(year, priority)
-    // computes detail + per-year subtotal + grand total in a single
-    // aggregate (one scan, one shuffle) instead of the three separate
-    // dashboard queries a naive port would run; grouping_id
-    // disambiguates the levels (bit semantics verified identical to
-    // DuckDB's GROUPING). Null placement pinned NULLS LAST on both
-    // engines — rollup's subtotal rows are null-keyed by construction.
-    "q_rollup_dashboard" -> { (s, d) =>
-      Tables.orders(s, d)
-        .rollup(year(col("o_orderdate")).as("y"),
-          col("o_orderpriority").as("prio"))
-        .agg(grouping_id().as("gid"), count(lit(1)).as("cnt"),
-          sumDec(col("o_totalprice")).as("total"))
-        .select(col("gid"), col("y"), col("prio"), col("cnt"), col("total"))
-        .orderBy(col("gid"), col("y").asc_nulls_last, col("prio").asc_nulls_last)
-    },
-
-    // A9 — dashboard: totals by year ("Injury and Fatality Trends by Year").
-    // SESSION PATH ANALYSIS — the most common event-type sequences per
-    // session (the "user journey" report): sessionize with the same
-    // strict->gap rule as q_sessionize, render each session's ordered
-    // type sequence as a path string, count sessions per path. Ordering
-    // inside a session is total — (ts, event_id) — so equal-timestamp
-    // events render identically in both engines. The per-session
-    // collect_list is session-length-bounded; the path rollup shuffles
-    // path-cardinality keys; the final top-20 sorts a path-count frame.
-    "q_session_paths" -> { (s, d) =>
-      val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val evs = Tables.events(s, d)
-        .withColumn("ts", date_trunc("second", col("ts")))
-        .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
-        .withColumn("new_sess",
-          when(col("prev_ts").isNull ||
-            (unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts"))) > 1800, 1)
-            .otherwise(0))
-        .withColumn("sess_no", sum(col("new_sess")).over(byUser))
-      evs.groupBy("user_id", "sess_no")
-        .agg(concat_ws("->",
-          transform(
-            sort_array(collect_list(struct(col("ts"), col("event_id"),
-              col("event_type")))),
-            e => e.getField("event_type"))).as("path"))
-        .groupBy("path").agg(count(lit(1)).as("n_sessions"))
-        .orderBy(desc("n_sessions"), col("path"))
-        .limit(20)
-    },
-
-    // SESSION TRANSITION MATRIX — first-order Markov counts over event
-    // types within sessions (the "what do users do next" report, and the
-    // input to any journey-graph / next-action model). Same sessionize
-    // block as q_session_paths / q_sessionize; the in-session lag runs
-    // over the TOTAL order (ts, event_id) so tied timestamps resolve
-    // identically in both engines. Scale shape: two user-partitioned
-    // windows (user-bounded partitions), then a groupBy on (src, dst) —
-    // type-cardinality² keys, map-side combined, so the only full-data
-    // shuffle is the sessionize window itself.
-    "q_session_transitions" -> { (s, d) =>
-      sessionTransitions(Tables.events(s, d))
-    },
-
-    // THINK-TIME DISTRIBUTION — P50/P90/P99 of the seconds between
-    // consecutive events inside a session (the engagement/latency
-    // report, and the empirical basis for choosing the session gap
-    // threshold itself). Gaps are integer seconds from the same total
-    // (ts, event_id) in-session order as q_session_transitions, so tied
-    // timestamps contribute exact-0 gaps in both engines; percentiles
-    // run through the distributed exact engine (value-count shuffle +
-    // interpolation — no value buffering at any cardinality, unlike the
-    // builtin `percentile` aggregate).
-    "q_think_time" -> { (s, d) =>
-      thinkTime(Tables.events(s, d))
-    },
-
-    // A/B EXPERIMENT READOUT — two-proportion z-test on purchase
-    // conversion under a deterministic md5 user split (the same
-    // hash-bucket assignment family as q_sample_split, so variant
-    // membership is reproducible across engines and runs). One
-    // user-keyed aggregate (bounded by user cardinality), then a scalar
-    // conditional rollup — no joins, no windows. The z-score is a fixed
-    // IEEE-double expression tree evaluated identically in both engines
-    // and rounded to 6dp (the q_drift_psi float-parity convention).
-    "q_ab_test" -> { (s, d) =>
-      abTest(Tables.events(s, d))
-    },
-
-    // UPLIFT QINI CURVE (Radcliffe 2007) — the targeting readout: rank
-    // users by a score, and at each decile depth ask how many EXTRA
-    // responders the treated group shows over the control baseline
-    // scaled to its size: Qini(k) = Rt(k) − Rc(k)·Nt(k)/Nc(k). The
-    // harness contract is the CURVE machinery (a real deployment plugs
-    // in a model score; here score = activity = events-per-user, and
-    // responder = above-median purchase count, so both paths are
-    // non-degenerate at any SF). Sort-free at scale: deciles come from
-    // 9 broadcast exact-percentile thresholds + a map-side when-chain
-    // (the q_decile_report idiom — never a global ntile sort over
-    // users); cumulatives run on the 10-row decile spine. Counts exact
-    // integers; qini is one rounded double per row.
-    "q_uplift_qini" -> { (s, d) =>
-      val perUser = Tables.events(s, d)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_ev"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("m"))
-      val med = exactPercentiles(perUser, "m", Seq("med" -> 0.5))
-      val u = perUser.crossJoin(broadcast(med))
-        .select(
-          (conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
-            .cast("long") % 2).as("arm"),
-          (col("m") > col("med")).as("resp"),
-          col("n_ev").cast("double").as("score"))
-      val thr = exactPercentiles(u, "score",
-        (1 to 9).map(i => s"t$i" -> i / 10.0))
-      val bucketed = u.crossJoin(broadcast(thr))
-        .withColumn("decile", lit(1) +
-          (1 to 9).map(i => when(col("score") > col(s"t$i"), 1).otherwise(0))
-            .reduce(_ + _))
-      val perD = bucketed.groupBy("decile").agg(
-        count(when(col("arm") === 1, 1)).as("nt"),
-        count(when(col("arm") === 0, 1)).as("nc"),
-        sum(when(col("arm") === 1 && col("resp"), 1L).otherwise(0L))
-          .as("rt"),
-        sum(when(col("arm") === 0 && col("resp"), 1L).otherwise(0L))
-          .as("rc"))
-      // cumulate from the BEST decile down (decile 10 = highest score)
-      val w = Window.orderBy(desc("decile"))
-      perD
-        .select(row_number().over(w).as("k"),
-          sum(col("nt")).over(w).as("cnt"), sum(col("nc")).over(w).as("cnc"),
-          sum(col("rt")).over(w).as("crt"), sum(col("rc")).over(w).as("crc"))
-        .select(col("k"), col("cnt").as("n_t"), col("cnc").as("n_c"),
-          col("crt").as("resp_t"), col("crc").as("resp_c"),
-          round(col("crt").cast("double") -
-            col("crc").cast("double") * col("cnt").cast("double") /
-              col("cnc").cast("double"), 6).as("qini"))
-        .orderBy("k")
-    },
-
-    // WINSORIZED LIFT — the heavy-tail-robust experiment readout: per
-    // user revenue clipped at the POOLED exact p99 before the
-    // two-sample z (one whale in one arm can flip a raw-mean readout;
-    // clipping at a pooled quantile bounds any single user's influence
-    // while using the same threshold for both arms, so it cannot bias
-    // the comparison). Kohavi et al.'s standard metric-capping
-    // practice. Exactness: per-user revenue is exact integer cents; the
-    // p99 threshold comes from the distributed exact-percentile engine
-    // and broadcasts back; clipped values round to 2dp DECIMAL so the
-    // arm sums are order-independent; the z tree is one double
-    // expression from those decimal moments. Scale: one user-keyed
-    // aggregate + one percentile pass + one scalar rollup.
-    "q_winsorized_lift" -> { (s, d) =>
-      val perUser = Tables.events(s, d).filter(col("value").isNotNull)
-        .groupBy("user_id")
-        .agg(sum((col("value").cast(DecimalType(18, 2)) * 100)
-          .cast("long")).as("sc"))
-        .select(col("user_id"),
-          (col("sc").cast("double") / 100.0).as("v"))
-      val p99 = exactPercentiles(perUser, "v", Seq("p99" -> 0.99))
-      val clipped = perUser.crossJoin(broadcast(p99))
-        .select(col("p99"),
-          (conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
-            .cast("long") % 2).as("arm"),
-          round(least(col("v"), col("p99")), 2)
-            .cast(DecimalType(18, 2)).as("w"))
-      val agg = clipped.groupBy("p99").agg(
-        count(when(col("arm") === 0, 1)).as("n_c"),
-        sum(when(col("arm") === 0, col("w"))).as("s_c"),
-        sum(when(col("arm") === 0, col("w") * col("w"))).as("ss_c"),
-        count(when(col("arm") === 1, 1)).as("n_t"),
-        sum(when(col("arm") === 1, col("w"))).as("s_t"),
-        sum(when(col("arm") === 1, col("w") * col("w"))).as("ss_t"))
-      def mean(sc: String, n: String) =
-        col(sc).cast("double") / col(n).cast("double")
-      def variance(ss: String, sc: String, n: String) =
-        (col(ss).cast("double") -
-          col(sc).cast("double") * col(sc).cast("double") /
-            col(n).cast("double")) / (col(n).cast("double") - lit(1.0))
-      val se = sqrt(variance("ss_c", "s_c", "n_c") / col("n_c").cast("double")
-        + variance("ss_t", "s_t", "n_t") / col("n_t").cast("double"))
-      agg.select(col("n_c"), col("n_t"), round(col("p99"), 6).as("clip_at"),
-        round(mean("s_c", "n_c"), 6).as("mean_c"),
-        round(mean("s_t", "n_t"), 6).as("mean_t"),
-        when(se > 0, round((mean("s_t", "n_t") - mean("s_c", "n_c")) / se, 6))
-          .as("z"))
-    },
-
-    // MARKOV ENTROPY RATE of in-session event sequences — how
-    // predictable is the next event given the current one? The plug-in
-    // estimator Σ_i π̂_i·H(dst | src=i) over the q_session_transitions
-    // matrix (π̂ = empirical source frequency), reported beside the
-    // log2(k) ceiling — the sequence-predictability readout behind
-    // next-event prefetching and session-model sanity checks. Exactness:
-    // all counts exact; each −p·log2(p) term and each π_i·H_i product
-    // rounds to 6dp DECIMAL before its fold (order-independent, the
-    // q_mix_entropy convention). Scale: the transition matrix is
-    // state²-bounded (windows on it are trivially bounded); everything
-    // upstream is the sessionize shuffle the transitions query already
-    // pays.
-    "q_entropy_rate" -> { (s, d) =>
-      val tr = sessionTransitions(Tables.events(s, d))
-        .withColumnRenamed("n", "nij")
-      val bySrc = tr.withColumn("ni",
-        sum(col("nij")).over(Window.partitionBy("src")))
-      val p = col("nij").cast("double") / col("ni").cast("double")
-      val hi = bySrc.groupBy("src")
-        .agg(max(col("ni")).as("ni"),
-          sum(round(-(p * log2(p)), 6).cast(DecimalType(18, 6))).as("hd"))
-      val tot = hi.agg(sum(col("ni")).as("nt"),
-        count(lit(1)).as("n_states"))
-      hi.crossJoin(broadcast(tot))
-        .select(col("nt"), col("n_states"),
-          round(col("ni").cast("double") / col("nt").cast("double") *
-            col("hd").cast("double"), 6).cast(DecimalType(18, 6)).as("term"))
-        .groupBy("n_states", "nt")
-        .agg(sum(col("term")).as("r"))
-        .select(col("n_states"), col("nt").as("n_transitions"),
-          col("r").cast("double").as("entropy_rate_bits"),
-          round(log2(col("n_states").cast("double")), 6).as("max_bits"))
-    },
-
-    // LIFT-HETEROGENEITY READOUT (fixed-effect meta-analysis across
-    // user segments — Cochran 1954's Q, Higgins & Thompson 2002's I²):
-    // the per-segment treatment lifts on purchases-per-user are pooled
-    // inverse-variance, and Q = Σwθ² − (Σwθ)²/Σw tests whether the
-    // segments genuinely disagree (Q > χ²₀.₀₅(k−1) ⇒ one global lift
-    // number is hiding real segment structure — ship per-segment
-    // readouts instead). The standard "is the effect uniform" gate run
-    // before rolling out a winner measured on the pooled population.
-    // Determinism: per-segment moments are exact integer (Σx, Σx²
-    // Longs); θ/w doubles derive from them identically in both engines;
-    // the cross-segment folds round each term to 9dp DECIMAL first
-    // (order-independent sums — the q_jackknife convention). Scale: one
-    // user-keyed aggregate, one (segment × arm)-cardinality rollup,
-    // then a k-row fold. No joins.
-    "q_lift_heterogeneity" -> { (s, d) =>
-      val k = 4
-      val perUser = Tables.events(s, d)
-        .groupBy("user_id")
-        .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("m"))
-        .select(col("m"), (col("user_id") % k).as("seg"),
-          (conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
-            .cast("long") % 2).as("arm"))
-      val bySeg = perUser.groupBy("seg").agg(
-        count(when(col("arm") === 0, 1)).as("n_c"),
-        sum(when(col("arm") === 0, col("m")).otherwise(0L)).as("s_c"),
-        sum(when(col("arm") === 0, col("m") * col("m")).otherwise(0L))
-          .as("ss_c"),
-        count(when(col("arm") === 1, 1)).as("n_t"),
-        sum(when(col("arm") === 1, col("m")).otherwise(0L)).as("s_t"),
-        sum(when(col("arm") === 1, col("m") * col("m")).otherwise(0L))
-          .as("ss_t"))
-      def m(sc: String, n: String) =
-        col(sc).cast("double") / col(n).cast("double")
-      def v(ss: String, sc: String, n: String) =
-        (col(ss).cast("double") -
-          col(sc).cast("double") * col(sc).cast("double") /
-            col(n).cast("double")) / (col(n).cast("double") - lit(1.0))
-      val theta = m("s_t", "n_t") - m("s_c", "n_c")
-      val varT = v("ss_t", "s_t", "n_t") / col("n_t").cast("double") +
-        v("ss_c", "s_c", "n_c") / col("n_c").cast("double")
-      val w = lit(1.0) / varT
-      bySeg
-        .select(
-          round(w, 9).cast(DecimalType(28, 9)).as("w"),
-          round(w * theta, 9).cast(DecimalType(28, 9)).as("wt"),
-          round(w * theta * theta, 9).cast(DecimalType(28, 9)).as("wt2"))
-        .agg(count(lit(1)).as("k_segments"),
-          sum(col("w")).as("sw"), sum(col("wt")).as("swt"),
-          sum(col("wt2")).as("swt2"))
-        .select(col("k_segments"),
-          round(col("swt").cast("double") / col("sw").cast("double"), 6)
-            .as("pooled_lift"),
-          round(col("swt2").cast("double") -
-            col("swt").cast("double") * col("swt").cast("double") /
-              col("sw").cast("double"), 6).as("q_stat"),
-          (round(col("swt2").cast("double") -
-            col("swt").cast("double") * col("swt").cast("double") /
-              col("sw").cast("double"), 6) > lit(7.814728))
-            .as("heterogeneous"))
-        .withColumn("i2",
-          round(greatest(lit(0.0),
-            (col("q_stat") - (col("k_segments") - lit(1)).cast("double")) /
-              col("q_stat")), 6))
-        .select("k_segments", "pooled_lift", "q_stat", "i2",
-          "heterogeneous")
-    },
-
-    // A/A NEGATIVE CONTROL — q_ab_test's split machinery replayed under
-    // 5 salted null splits; any unhealthy row indicts the assignment
-    // stack, not an experiment. Same single user-keyed aggregate as
-    // q_ab_test with the K-way explode AFTER per-user reduction.
-    "q_aa_check" -> { (s, d) =>
-      aaCheck(Tables.events(s, d))
-    },
-
-    // CONVERSION FUNNEL — ordered step completion (signup → view →
-    // purchase by FIRST occurrence per user): one user-keyed aggregate
-    // computes all step timestamps in a single pass (conditional mins,
-    // map-side combined), then a scalar rollup counts stage survivors.
-    // No self-joins, no per-user windows — the classic funnel at 100 TB
-    // is two aggregates, the first keyed by user (bounded by user
-    // cardinality), the second scalar.
-    "q_funnel" -> { (s, d) =>
-      Tables.events(s, d)
-        .groupBy("user_id")
-        .agg(
-          min(when(col("event_type") === "signup", col("ts"))).as("t_signup"),
-          min(when(col("event_type") === "view", col("ts"))).as("t_view"),
-          min(when(col("event_type") === "purchase", col("ts"))).as("t_purchase"))
-        .agg(
-          count(col("t_signup")).as("n_signup"),
-          count(when(col("t_view") > col("t_signup"), 1)).as("n_signup_then_view"),
-          count(when(col("t_view") > col("t_signup") &&
-            col("t_purchase") > col("t_view"), 1)).as("n_full_funnel"))
-    },
-
-    // FUNNEL LIFT BY ARM — q_funnel's step counts split by the
-    // q_ab_test md5 assignment, with per-step treatment/control rate
-    // ratios: the readout that says WHICH funnel step an experiment
-    // moves, not just the end-to-end conversion delta. One user-keyed
-    // aggregate (the funnel's conditional mins plus the arm column),
-    // then a 2-group rollup reshaped to one row per step; rates are
-    // integer ppm and the ratio is the single rounded double. No joins.
-    "q_funnel_lift" -> { (s, d) =>
-      val perUser = Tables.events(s, d)
-        .groupBy("user_id")
-        .agg(
-          min(when(col("event_type") === "signup", col("ts"))).as("ts1"),
-          min(when(col("event_type") === "view", col("ts"))).as("ts2"),
-          min(when(col("event_type") === "purchase", col("ts"))).as("ts3"))
-        .select(
-          (conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
-            .cast("long") % 2).as("arm"),
-          col("ts1").isNotNull.as("s_signup"),
-          (col("ts2") > col("ts1")).as("s_view"),
-          (col("ts2") > col("ts1") && col("ts3") > col("ts2"))
-            .as("s_purchase"))
-      val agg = perUser.groupBy("arm").agg(
-        count(lit(1)).as("n"),
-        sum(when(col("s_signup"), 1L).otherwise(0L)).as("k1"),
-        sum(when(col("s_view"), 1L).otherwise(0L)).as("k2"),
-        sum(when(col("s_purchase"), 1L).otherwise(0L)).as("k3"))
-      val steps = agg.select(col("arm"), col("n"),
-        explode(array(
-          struct(lit(1).as("step"), col("k1").as("k")),
-          struct(lit(2).as("step"), col("k2").as("k")),
-          struct(lit(3).as("step"), col("k3").as("k")))).as("e"))
-        .select(col("arm"), col("n"), col("e.step"), col("e.k"))
-      val wide = steps.groupBy("step").agg(
-        max(when(col("arm") === 0, col("n"))).as("n_c"),
-        max(when(col("arm") === 0, col("k"))).as("k_c"),
-        max(when(col("arm") === 1, col("n"))).as("n_t"),
-        max(when(col("arm") === 1, col("k"))).as("k_t"))
-      wide.select(col("step"), col("n_c"), col("k_c"), col("n_t"),
-          col("k_t"),
-          expr("k_c * 1000000 div n_c").as("rate_c_ppm"),
-          expr("k_t * 1000000 div n_t").as("rate_t_ppm"))
-        .withColumn("lift_ratio",
-          when(col("rate_c_ppm") > 0,
-            round(col("rate_t_ppm").cast("double") /
-              col("rate_c_ppm").cast("double"), 6)))
-        .orderBy("step")
-    },
-
-    // COHORT RETENTION — users grouped by first-active week, activity
-    // counted per subsequent week (the retention matrix). The first-seen
-    // frame is user-cardinality-sized and broadcasts back onto events;
-    // the matrix aggregate shuffles on (cohort, week) — bounded by
-    // weeks², not events. Week anchors are Mondays in both engines, so
-    // the day-difference is an exact multiple of 7.
-    "q_cohort_retention" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-        .select(col("user_id"), date_trunc("week", col("ts")).as("wk"))
-      val firstSeen = ev.groupBy("user_id").agg(min(col("wk")).as("cohort_wk"))
-      ev.join(broadcast(firstSeen), Seq("user_id"))
-        .groupBy("cohort_wk", "wk")
-        .agg(count_distinct(col("user_id")).as("n_active"))
-        .select(col("cohort_wk").cast("date").as("cohort_wk"),
-          (datediff(col("wk"), col("cohort_wk")) / lit(7)).cast("int").as("week_no"),
-          col("n_active"))
-        .orderBy("cohort_wk", "week_no")
-    },
-
-    // TIME-SERIES RESAMPLING to hourly bars with ORDERED first/last —
-    // open = first value in the bar, close = last (the OHLC/dashboard
-    // downsample). min_by/max_by over a (ts, event_id) struct gives the
-    // ordered endpoints as a plain hash aggregate: one shuffle on the
-    // bar key with map-side partials, NO per-bar sort and no window —
-    // the endpoints ride the aggregation buffer. The id in the struct
-    // makes the order total (equal-ts events tie-break deterministically).
-    // Raw values pass through untouched (no accumulation), so doubles
-    // compare exactly across engines.
-    "q_resample_bars" -> { (s, d) =>
-      Tables.events(s, d)
-        .groupBy(date_trunc("hour", col("ts")).as("bar_ts"))
-        .agg(
-          min_by(col("value"), struct(col("ts"), col("event_id"))).as("open"),
-          max_by(col("value"), struct(col("ts"), col("event_id"))).as("close"),
-          min(col("value")).as("lo"), max(col("value")).as("hi"),
-          count(lit(1)).as("n"))
-        .orderBy("bar_ts")
-    },
-
-    "q_a9_by_year" -> { (s, d) =>
-      Tables.orders(s, d)
-        .groupBy(year(col("o_orderdate")).as("y"))
-        .agg(sumDec(col("o_totalprice")).as("total"), count(lit(1)).as("cnt"))
-        .orderBy("y")
-    },
-    // A9 — dashboard: weekday × status matrix ("Accidents by day of week /
-    // severity by road type" shape).
-    "q_a9_weekday_matrix" -> { (s, d) =>
-      Tables.orders(s, d)
-        .groupBy(date_format(col("o_orderdate"), "EEEE").as("dayname"),
-          col("o_orderstatus"))
-        .agg(count(lit(1)).as("cnt"))
-        .orderBy("dayname", "o_orderstatus")
-    },
-    // A9 — dashboard: month × priority injury sums ("Evolution of Injuries
-    // by Year" / monthly breakdown shape).
-    "q_a9_month_breakdown" -> { (s, d) =>
-      Tables.orders(s, d)
-        .groupBy(month(col("o_orderdate")).as("m"),
-          col("o_orderpriority"))
-        .agg(sumDec(col("o_totalprice")).as("total"))
-        .orderBy("m", "o_orderpriority")
-    }
-  )
-
   private def describeAllSql(table: String, numeric: Seq[String],
                              categorical: Seq[String]): String = {
     val numSelects = numeric.map { c =>
@@ -6952,10 +5307,11 @@ object Analytics {
       |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cuml
       | FROM s)""".stripMargin
 
-  def oracles: Map[String, String] = Map(
+  def entries: Seq[Q] = Seq(
+    // Croston/SBA intermittent-demand forecast for the most-traded part.
     // same target pick, same closed-form EWMA weights with the shared
     // ln(1-α) literal, same 9dp DECIMAL folds
-    "q_croston" -> {
+    Q("q_croston", { (s, d) => croston(Tables.lineitem(s, d)) }, {
       val lnb = math.log(0.9)
       s"""WITH target AS (
          | SELECT l_partkey AS part, count(*) AS nl FROM lineitem
@@ -7000,10 +5356,11 @@ object Analytics {
          |  round(0.95 * (CAST(z AS DOUBLE) / CAST(p AS DOUBLE)), 6) END
          |  AS sba_forecast
          |FROM a""".stripMargin
-    },
+    }),
+    // Tie-corrected Mann-Kendall monotone-trend verdict (theil_sen's twin).
     // same trailing window, same exact S / tie integers, same guarded
     // variance and Φ tail, same trend labels
-    "q_mann_kendall" ->
+    Q("q_mann_kendall", { (s, d) => mannKendall(Tables.orders(s, d)) },
       s"""WITH daily AS (
          | SELECT datediff('day', DATE '1970-01-01',
          |   CAST(o_orderdate AS DATE)) AS t,
@@ -7037,9 +5394,10 @@ object Analytics {
          | CASE WHEN v > 0 AND p < 0.05 AND s > 0 THEN 'increasing'
          |  WHEN v > 0 AND p < 0.05 AND s < 0 THEN 'decreasing'
          |  ELSE 'none' END AS trend
-         |FROM h""".stripMargin,
+         |FROM h""".stripMargin),
+    // Rank-based Pettitt single-changepoint test with change date.
     // same doubled midranks, same integer U_t spine, same clamped tail
-    "q_pettitt" ->
+    Q("q_pettitt", { (s, d) => pettitt(Tables.orders(s, d)) },
       """WITH daily AS (
         | SELECT CAST(o_orderdate AS DATE) AS day,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -7065,9 +5423,10 @@ object Analytics {
         |  / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
         |     + CAST(n AS DOUBLE) * CAST(n AS DOUBLE))), 1.0), 6)
         |  AS p_value
-        |FROM k""".stripMargin,
+        |FROM k""".stripMargin),
+    // Empirical-Bayes shrinkage of noisy per-part return rates.
     // same 6dp rate freeze, same clamped MOM prior, same shrink tree
-    "q_james_stein" ->
+    Q("q_james_stein", { (s, d) => jamesStein(Tables.lineitem(s, d)) },
       """WITH per AS (
         | SELECT l_partkey AS part, count(*) AS n,
         |  CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
@@ -7094,10 +5453,11 @@ object Analytics {
         | round(abs((CAST(x AS DOUBLE) + mu * st)
         |  / (CAST(n AS DOUBLE) + st) - r), 6) AS correction
         |FROM rates, pr
-        |ORDER BY correction DESC, part LIMIT 10""".stripMargin,
+        |ORDER BY correction DESC, part LIMIT 10""".stripMargin),
+    // Long-memory R/S Hurst exponent of daily revenue.
     // same integer block deviations, same R/S tree, same 4-point
     // log-log slope with the safe determinant
-    "q_hurst" -> {
+    Q("q_hurst", { (s, d) => hurst(Tables.orders(s, d)) }, {
       def kSql(k: Int) =
         s"""c$k AS (
            | SELECT b, dv, sum(dv) OVER (PARTITION BY b ORDER BY t
@@ -7149,9 +5509,10 @@ object Analytics {
          |   / (CASE WHEN abs($det) > 0 THEN $det ELSE 1.0 END), 4) END
          |  AS hurst
          |FROM mo""".stripMargin
-    },
+    }),
+    // Normality gate for daily revenue (skew/kurtosis, χ²(2) tail).
     // same floor-mean shift, same HUGEINT power sums, same moment tree
-    "q_jarque_bera" ->
+    Q("q_jarque_bera", { (s, d) => jarqueBera(Tables.orders(s, d)) },
       """WITH daily AS (
         | SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100
         |   AS BIGINT) // 100 AS y
@@ -7195,10 +5556,11 @@ object Analytics {
         | CASE WHEN m2 > 0 THEN round(kx, 6) END AS kurtosis_excess,
         | CASE WHEN m2 > 0 THEN round(jb, 6) END AS jb_stat,
         | CASE WHEN m2 > 0 THEN round(exp(-0.5 * jb), 6) END AS p_value
-        |FROM f4""".stripMargin,
+        |FROM f4""".stripMargin),
+    // Encouragement-design Wald/IV estimate of click -> spend.
     // same md5 encouragement arm, same exact per-arm moments, same
     // ITT-ratio tree with the weak-instrument withhold
-    "q_iv_wald" ->
+    Q("q_iv_wald", { (s, d) => ivWald(Tables.events(s, d)) },
       """WITH per AS (
         | SELECT user_id,
         |  CASE WHEN sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0
@@ -7233,10 +5595,11 @@ object Analytics {
         | (abs(itx) <= 0.01) AS weak_instrument,
         | CASE WHEN NOT abs(itx) <= 0.01 THEN round(ity / itx, 6) END
         |  AS late_dollars
-        |FROM f""".stripMargin,
+        |FROM f""".stripMargin),
+    // Bass diffusion p/q/m from the first-order customer-adoption spine.
     // same adoption spine, same shared Cramer strings over HUGEINT
     // Gram sums, same guarded root extraction
-    "q_bass_diffusion" ->
+    Q("q_bass_diffusion", { (s, d) => bassDiffusion(Tables.orders(s, d)) },
       s"""WITH fst AS (SELECT o_custkey, min(CAST(o_orderdate AS DATE))
          |  AS d0
          | FROM orders GROUP BY 1),
@@ -7287,9 +5650,10 @@ object Analytics {
          | CASE WHEN abs(det) > 0 AND disc > 0 AND c < 0
          |   AND abs(mkt) > 0 THEN round(b + a / mkt, 6) END
          |  AS imitation_q
-         |FROM h""".stripMargin,
+         |FROM h""".stripMargin),
+    // Purchase-vs-click lead/lag cross-correlation, k = -7..7.
     // same day-spine lag keys, same HUGEINT moment differencing
-    "q_ccf_daily" ->
+    Q("q_ccf_daily", { (s, d) => ccfDaily(Tables.events(s, d)) },
       """WITH daily AS (
         | SELECT CAST(ts AS DATE) AS day,
         |  CAST(sum(CASE WHEN event_type = 'purchase'
@@ -7320,9 +5684,11 @@ object Analytics {
         |  round(CAST(n * spc - sp * sc AS DOUBLE)
         |   / sqrt(CAST(n * spp - sp * sp AS DOUBLE)
         |      * CAST(n * scc - sc * sc AS DOUBLE)), 6) END AS ccf
-        |FROM mo ORDER BY lag""".stripMargin,
+        |FROM mo ORDER BY lag""".stripMargin),
+    // Log-log demand elasticity of quantity on unit price.
     // same ⌊ln·2^20⌋ fixed-point freeze, same HUGEINT Gram differencing
-    "q_price_elasticity" ->
+    Q("q_price_elasticity", { (s, d) =>
+      priceElasticity(Tables.lineitem(s, d)) },
       """WITH mo AS (
         | SELECT CAST(count(*) AS HUGEINT) AS n,
         |  sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
@@ -7345,10 +5711,11 @@ object Analytics {
         |    * CAST(n * sxy - sx * sy AS DOUBLE)
         |   / (CAST(n * sxx - sx * sx AS DOUBLE)
         |      * CAST(n * syy - sy * sy AS DOUBLE)), 6) END AS r2
-        |FROM mo""".stripMargin,
+        |FROM mo""".stripMargin),
+    // Weekly SAX symbols + recurring 3-week motif counts.
     // same complete-week sums, same type-1 tercile cuts, same trigram
     // windows on the week spine
-    "q_sax_motifs" ->
+    Q("q_sax_motifs", { (s, d) => saxMotifs(Tables.orders(s, d)) },
       """WITH daily AS (
         | SELECT CAST(o_orderdate AS DATE) AS day,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -7384,10 +5751,11 @@ object Analytics {
         |SELECT motif, count(*) AS n,
         | CAST(CAST(count(*) AS HUGEINT) * 1000000 // max(tot) AS BIGINT)
         |  AS share_ppm
-        |FROM m2, tot GROUP BY motif ORDER BY n DESC, motif""".stripMargin,
+        |FROM m2, tot GROUP BY motif ORDER BY n DESC, motif""".stripMargin),
+    // Weekly/monthly harmonic variance share of daily revenue.
     // same integer z = n·y − Σy centering, same literal cos/sin tables
     // (no in-engine trig), same 6dp DECIMAL projection folds
-    "q_harmonic_power" -> {
+    Q("q_harmonic_power", { (s, d) => harmonicPower(Tables.orders(s, d)) }, {
       def caseSql(p: Int, tab: IndexedSeq[Double]) =
         s"(CASE t % $p " +
           (0 until p).map(j => s"WHEN $j THEN ${tab(j)}").mkString(" ") +
@@ -7424,10 +5792,11 @@ object Analytics {
          |  AS var_share
          |FROM (SELECT * FROM h7 UNION ALL SELECT * FROM h30)
          |ORDER BY period""".stripMargin
-    },
+    }),
+    // Two-regime GMM of daily revenue (3 unrolled EM iterations).
     // same exact q25/q75/variance init, same unrolled EM iterations
     // (9dp responsibilities, DECIMAL M-folds, 6dp param rounding)
-    "q_gmm_daily" -> {
+    Q("q_gmm_daily", { (s, d) => gmmDaily(Tables.orders(s, d)) }, {
       def fSql(y: String, mu: String, s: String) =
         s"exp(-0.5 * ($y - $mu) * ($y - $mu) / $s) / sqrt($s)"
       def iterSql(t: Int): String = {
@@ -7520,10 +5889,11 @@ object Analytics {
          | round(sqrt(CASE WHEN mu1 <= mu2 THEN s2 ELSE s1 END)
          |  / 100.0, 2) AS sigma_hi_dollars
          |FROM p3""".stripMargin
-    },
+    }),
+    // Unpaired purchase-vs-click day shift: HL estimate + Mann-Whitney U.
     // same day-spine samples, same pairwise-difference median spine,
     // same doubled-midrank integers, same Φ tail
-    "q_hodges_lehmann" ->
+    Q("q_hodges_lehmann", { (s, d) => hodgesLehmann(Tables.events(s, d)) },
       s"""WITH daily AS (
          | SELECT CAST(ts AS DATE) AS day, event_type,
          |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
@@ -7577,9 +5947,11 @@ object Analytics {
         "abs(num / sqrt(v2))")}, 6) END AS p_value,
          | round(CAST((SELECT hl FROM hl) AS DOUBLE) / 100.0, 6)
          |  AS hl_shift_dollars
-         |FROM f2""".stripMargin,
+         |FROM f2""".stripMargin),
+    // Ordered dose-response trend of return rate across quantity doses.
     // same 5 exact dose moments, same z tree
-    "q_cochran_armitage" ->
+    Q("q_cochran_armitage", { (s, d) =>
+      cochranArmitage(Tables.lineitem(s, d)) },
       s"""WITH g AS (
          | SELECT CAST((CAST(l_quantity AS BIGINT) - 1) // 10 AS BIGINT)
          |   + 1 AS t,
@@ -7609,10 +5981,11 @@ object Analytics {
          | CASE WHEN den > 0 THEN round(num / sqrt(den), 6) END AS z,
          | CASE WHEN den > 0 THEN round(${pTwoSidedSql(
         "abs(num / sqrt(den))")}, 6) END AS p_value
-         |FROM f""".stripMargin,
+         |FROM f""".stripMargin),
+    // Peaks-over-threshold GPD fit of the order-total tail + VaR99.
     // same type-1 p95 threshold, same HUGEINT excess moments, same
     // exp(−ξ·ln x) pow tree
-    "q_tail_gpd" ->
+    Q("q_tail_gpd", { (s, d) => tailGpd(Tables.orders(s, d)) },
       """WITH v AS (
         | SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
         |   AS v
@@ -7656,9 +6029,10 @@ object Analytics {
         |  round((CAST(u AS DOUBLE) + beta / xi
         |    * (exp(-1.0 * xi * ln(tailp)) - 1.0)) / 100.0, 2) END
         |  AS var99_dollars
-        |FROM g""".stripMargin,
+        |FROM g""".stripMargin),
+    // Sharp RDD at the quantity price break: local-linear jump estimate.
     // same integer half-unit recentring, same HUGEINT Gram differencing
-    "q_rdd" ->
+    Q("q_rdd", { (s, d) => rdd(Tables.lineitem(s, d)) },
       """WITH base AS (
         | SELECT CAST(l_quantity AS BIGINT) * 2 - 51 AS x,
         |  CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -7695,10 +6069,11 @@ object Analytics {
         | round((yr - yl) / 100.0, 4) AS jump_dollars,
         | round(sl * 2 / 100.0, 4) AS slope_left_per_qty,
         | round(sr * 2 / 100.0, 4) AS slope_right_per_qty
-        |FROM one""".stripMargin,
+        |FROM one""".stripMargin),
+    // Queen-adjacency spatial autocorrelation of the customer-density grid.
     // occupied-cell lattice + queen-adjacency join twin; HUGEINT cross
     // products mirror the Spark DECIMAL(38,0) folds
-    "q_morans_i" ->
+    Q("q_morans_i", { (s, d) => moransI(Tables.customer(s, d)) },
       """WITH cells AS (
         | SELECT CAST(floor(c_acctbal / 500.0) AS BIGINT) AS li,
         |  CAST(c_custkey % 12 AS BIGINT) AS gi, count(*) AS x
@@ -7723,10 +6098,11 @@ object Analytics {
         | CASE WHEN n_cells > 1 THEN
         |  round(-1.0 / (CAST(n_cells AS DOUBLE) - 1.0), 6) END
         |  AS expected_i
-        |FROM num, den""".stripMargin,
+        |FROM num, den""".stripMargin),
+    // Median-of-pairwise-slopes robust trend of trailing daily revenue.
     // same day spine, same shifted non-negative floor division, same
     // type-1 order statistic off the distinct-slope count spine
-    "q_theil_sen" ->
+    Q("q_theil_sen", { (s, d) => theilSen(Tables.orders(s, d)) },
       """WITH daily AS (
         | SELECT datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
         |   AS t,
@@ -7751,11 +6127,120 @@ object Analytics {
         |SELECT max(n_days) AS n_days, max(n_pairs) AS n_pairs,
         | round(CAST(min(s_fp) AS DOUBLE) / 10000.0, 6)
         |  AS slope_dollars_per_day
-        |FROM cum, tot WHERE cum * 2 >= n_pairs""".stripMargin,
+        |FROM cum, tot WHERE cum * 2 >= n_pairs""".stripMargin),
+    // Counterfactual policy value from logged traffic (IPS + SNIPS).
+    // same per-action fold: terms at fixed DECIMAL scale, n cancels
+    Q("q_ips_offpolicy", { (s, d) => ipsOffPolicy(Tables.events(s, d)) },
+      """WITH base AS (
+        | SELECT event_type AS a,
+        |  CASE WHEN hour(ts) >= 18 AND hour(ts) <= 23 THEN 'purchase'
+        |       WHEN hour(ts) >= 9 AND hour(ts) <= 17 THEN 'click'
+        |       ELSE 'view' END = event_type AS m,
+        |  CAST(CAST(COALESCE(value, 0.0) AS DECIMAL(18,2)) * 100 AS BIGINT)
+        |   AS cents
+        | FROM events WHERE ts IS NOT NULL),
+        |per AS (
+        | SELECT a, count(*) AS na,
+        |  CAST(sum(CASE WHEN m THEN 1 ELSE 0 END) AS BIGINT) AS ma,
+        |  CAST(sum(CASE WHEN m THEN cents ELSE 0 END) AS BIGINT) AS sa
+        | FROM base GROUP BY 1),
+        |agg AS (
+        | SELECT CAST(sum(na) AS BIGINT) AS n,
+        |  CAST(sum(ma) AS BIGINT) AS n_matched,
+        |  CAST(sum(CAST(round(CAST(ma AS DOUBLE) / CAST(na AS DOUBLE), 12)
+        |    AS DECIMAL(28,12))) AS DOUBLE) AS sw,
+        |  CAST(sum(CAST(round(CAST(sa AS DOUBLE) / CAST(na AS DOUBLE), 6)
+        |    AS DECIMAL(28,6))) AS DOUBLE) AS swr,
+        |  CAST(sum(CAST(round(CAST(ma AS DOUBLE)
+        |     / (CAST(na AS DOUBLE) * CAST(na AS DOUBLE)), 12)
+        |    AS DECIMAL(28,12))) AS DOUBLE) AS sw2
+        | FROM per)
+        |SELECT n, n_matched,
+        | round(swr / 100.0, 6) AS ips_value,
+        | CASE WHEN sw > 0 THEN round(swr / sw / 100.0, 6) END
+        |  AS snips_value,
+        | CASE WHEN sw2 > 0 THEN round(sw * sw / sw2, 6) END AS ess,
+        | round(CAST(n_matched AS DOUBLE) / CAST(n AS DOUBLE), 6)
+        |  AS match_rate
+        |FROM agg""".stripMargin),
+    // Two-regressor OLS from one Gram-sums pass (distributed normal eqs).
+    // same exact HUGEINT moments, IDENTICAL Cramer strings (shared consts)
+    Q("q_ols_multi", { (s, d) => olsMulti(Tables.lineitem(s, d)) },
+      s"""WITH base AS (
+         | SELECT CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
+         |   AS BIGINT) AS y,
+         |  CAST(l_quantity AS BIGINT) AS x,
+         |  CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT) AS z
+         | FROM lineitem),
+         |m AS (
+         | SELECT count(*) AS cn,
+         |  sum(CAST(x AS HUGEINT)) AS msx, sum(CAST(z AS HUGEINT)) AS msz,
+         |  sum(CAST(y AS HUGEINT)) AS msy,
+         |  sum(CAST(x AS HUGEINT) * x) AS msxx,
+         |  sum(CAST(z AS HUGEINT) * z) AS mszz,
+         |  sum(CAST(x AS HUGEINT) * z) AS msxz,
+         |  sum(CAST(x AS HUGEINT) * y) AS msxy,
+         |  sum(CAST(z AS HUGEINT) * y) AS mszy,
+         |  sum(CAST(y AS HUGEINT) * y) AS msyy
+         | FROM base),
+         |dd AS (
+         | SELECT cn, CAST(cn AS DOUBLE) AS n, CAST(msx AS DOUBLE) AS sx,
+         |  CAST(msz AS DOUBLE) AS sz, CAST(msy AS DOUBLE) AS sy,
+         |  CAST(msxx AS DOUBLE) AS sxx, CAST(mszz AS DOUBLE) AS szz,
+         |  CAST(msxz AS DOUBLE) AS sxz, CAST(msxy AS DOUBLE) AS sxy,
+         |  CAST(mszy AS DOUBLE) AS szy, CAST(msyy AS DOUBLE) AS syy
+         | FROM m),
+         |sol AS (
+         | SELECT cn, n, sy, sxy, szy, syy,
+         |  $olsDet AS det, $olsD0 AS d0, $olsD1 AS d1, $olsD2 AS d2
+         | FROM dd)
+         |SELECT cn AS n,
+         | CASE WHEN abs(det) > 0 THEN round(d0 / det / 100.0, 6) END
+         |  AS intercept_usd,
+         | CASE WHEN abs(det) > 0 THEN round(d1 / det / 100.0, 6) END
+         |  AS per_qty_usd,
+         | CASE WHEN abs(det) > 0 THEN round(d2 / det, 6) END
+         |  AS per_discount_usd,
+         | CASE WHEN abs(det) > 0
+         |   AND syy - sy * sy / n > 0 THEN
+         |  round(1.0 - (syy - d0 / det * sy - d1 / det * sxy
+         |    - d2 / det * szy) / (syy - sy * sy / n), 6) END AS r2
+         |FROM sol""".stripMargin),
+    // Area under the KM curve to day 14: the censoring-safe retention mean.
+    // KM step integral: same spine, lag(survival, 1, 1.0) left-endpoint
+    // rectangles clamped at tau, plus the censored tail rectangle
+    Q("q_rmst", { (s, d) => rmst(Tables.events(s, d)) },
+      ("WITH " + kmCtesSql + ",\n" +
+        """km AS (
+          | SELECT dur,
+          |  CASE WHEN dead = 1 THEN 0.0
+          |   ELSE round(exp(CAST(cuml AS DOUBLE)), 6) END AS survival
+          | FROM c WHERE d > 0),
+          |terms AS (
+          | SELECT CAST(CASE WHEN lag(dur, 1, 0) OVER (ORDER BY dur) < 14
+          |   THEN round(lag(survival, 1, 1.0) OVER (ORDER BY dur)
+          |    * CAST(least(dur, 14) - lag(dur, 1, 0) OVER (ORDER BY dur)
+          |       AS DOUBLE), 6)
+          |   ELSE 0.0 END AS DECIMAL(18,6)) AS t
+          | FROM km),
+          |tl AS (
+          | SELECT CAST(CASE WHEN dur < 14
+          |   THEN round(survival * CAST(14 - dur AS DOUBLE), 6)
+          |   ELSE 0.0 END AS DECIMAL(18,6)) AS tail_t
+          | FROM km ORDER BY dur DESC LIMIT 1),
+          |agg AS (SELECT count(*) AS n_steps,
+          |        CAST(sum(t) AS DOUBLE) AS st FROM terms)
+          |SELECT CAST(14 AS INTEGER) AS tau, n_steps,
+          | round(st + CAST(tail_t AS DOUBLE), 6) AS rmst_days,
+          | round((st + CAST(tail_t AS DOUBLE)) / 14.0, 6) AS rmst_share
+          |FROM agg CROSS JOIN tl""".stripMargin)),
+    // Chain-counterfactual channel credit: conversion-probability drop
+    // when each event type is removed from the session Markov chain.
     // same sessionize CTEs, same S=1e12 value iteration unrolled per
     // round (the q_markov_stationary generated-CTE idiom), same integer
     // removal-effect division
-    "q_markov_attribution" -> {
+    Q("q_markov_attribution", { (s, d) =>
+      markovAttribution(Tables.events(s, d)) }, {
       val S = "1000000000000"
       def roundSql(t: Int) =
         s"""x$t AS (
@@ -7819,154 +6304,9 @@ object Analytics {
          | END AS removal_effect_ppm
          |FROM pv CROSS JOIN pfull WHERE rm <> '(none)'
          |ORDER BY rm""".stripMargin
-    },
-    // same exact HUGEINT moments, IDENTICAL Cramer strings (shared consts)
-    "q_ols_multi" ->
-      s"""WITH base AS (
-         | SELECT CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
-         |   AS BIGINT) AS y,
-         |  CAST(l_quantity AS BIGINT) AS x,
-         |  CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT) AS z
-         | FROM lineitem),
-         |m AS (
-         | SELECT count(*) AS cn,
-         |  sum(CAST(x AS HUGEINT)) AS msx, sum(CAST(z AS HUGEINT)) AS msz,
-         |  sum(CAST(y AS HUGEINT)) AS msy,
-         |  sum(CAST(x AS HUGEINT) * x) AS msxx,
-         |  sum(CAST(z AS HUGEINT) * z) AS mszz,
-         |  sum(CAST(x AS HUGEINT) * z) AS msxz,
-         |  sum(CAST(x AS HUGEINT) * y) AS msxy,
-         |  sum(CAST(z AS HUGEINT) * y) AS mszy,
-         |  sum(CAST(y AS HUGEINT) * y) AS msyy
-         | FROM base),
-         |dd AS (
-         | SELECT cn, CAST(cn AS DOUBLE) AS n, CAST(msx AS DOUBLE) AS sx,
-         |  CAST(msz AS DOUBLE) AS sz, CAST(msy AS DOUBLE) AS sy,
-         |  CAST(msxx AS DOUBLE) AS sxx, CAST(mszz AS DOUBLE) AS szz,
-         |  CAST(msxz AS DOUBLE) AS sxz, CAST(msxy AS DOUBLE) AS sxy,
-         |  CAST(mszy AS DOUBLE) AS szy, CAST(msyy AS DOUBLE) AS syy
-         | FROM m),
-         |sol AS (
-         | SELECT cn, n, sy, sxy, szy, syy,
-         |  $olsDet AS det, $olsD0 AS d0, $olsD1 AS d1, $olsD2 AS d2
-         | FROM dd)
-         |SELECT cn AS n,
-         | CASE WHEN abs(det) > 0 THEN round(d0 / det / 100.0, 6) END
-         |  AS intercept_usd,
-         | CASE WHEN abs(det) > 0 THEN round(d1 / det / 100.0, 6) END
-         |  AS per_qty_usd,
-         | CASE WHEN abs(det) > 0 THEN round(d2 / det, 6) END
-         |  AS per_discount_usd,
-         | CASE WHEN abs(det) > 0
-         |   AND syy - sy * sy / n > 0 THEN
-         |  round(1.0 - (syy - d0 / det * sy - d1 / det * sxy
-         |    - d2 / det * szy) / (syy - sy * sy / n), 6) END AS r2
-         |FROM sol""".stripMargin,
-    // same per-action fold: terms at fixed DECIMAL scale, n cancels
-    "q_ips_offpolicy" ->
-      """WITH base AS (
-        | SELECT event_type AS a,
-        |  CASE WHEN hour(ts) >= 18 AND hour(ts) <= 23 THEN 'purchase'
-        |       WHEN hour(ts) >= 9 AND hour(ts) <= 17 THEN 'click'
-        |       ELSE 'view' END = event_type AS m,
-        |  CAST(CAST(COALESCE(value, 0.0) AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |   AS cents
-        | FROM events WHERE ts IS NOT NULL),
-        |per AS (
-        | SELECT a, count(*) AS na,
-        |  CAST(sum(CASE WHEN m THEN 1 ELSE 0 END) AS BIGINT) AS ma,
-        |  CAST(sum(CASE WHEN m THEN cents ELSE 0 END) AS BIGINT) AS sa
-        | FROM base GROUP BY 1),
-        |agg AS (
-        | SELECT CAST(sum(na) AS BIGINT) AS n,
-        |  CAST(sum(ma) AS BIGINT) AS n_matched,
-        |  CAST(sum(CAST(round(CAST(ma AS DOUBLE) / CAST(na AS DOUBLE), 12)
-        |    AS DECIMAL(28,12))) AS DOUBLE) AS sw,
-        |  CAST(sum(CAST(round(CAST(sa AS DOUBLE) / CAST(na AS DOUBLE), 6)
-        |    AS DECIMAL(28,6))) AS DOUBLE) AS swr,
-        |  CAST(sum(CAST(round(CAST(ma AS DOUBLE)
-        |     / (CAST(na AS DOUBLE) * CAST(na AS DOUBLE)), 12)
-        |    AS DECIMAL(28,12))) AS DOUBLE) AS sw2
-        | FROM per)
-        |SELECT n, n_matched,
-        | round(swr / 100.0, 6) AS ips_value,
-        | CASE WHEN sw > 0 THEN round(swr / sw / 100.0, 6) END
-        |  AS snips_value,
-        | CASE WHEN sw2 > 0 THEN round(sw * sw / sw2, 6) END AS ess,
-        | round(CAST(n_matched AS DOUBLE) / CAST(n AS DOUBLE), 6)
-        |  AS match_rate
-        |FROM agg""".stripMargin,
-    "q_mcnemar" ->
-      """WITH c AS (
-        | SELECT (event_type = 'purchase') AS truth,
-        |  (COALESCE(value, 0.0) > 50.0) AS pa,
-        |  (hour(ts) % 2 = 0) AS pb
-        | FROM events WHERE ts IS NOT NULL),
-        |t AS (
-        | SELECT count(*) AS n,
-        |  CAST(sum(CASE WHEN pa = truth AND pb = truth THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS both_correct,
-        |  CAST(sum(CASE WHEN pa = truth AND pb <> truth THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS a_only,
-        |  CAST(sum(CASE WHEN pa <> truth AND pb = truth THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS b_only,
-        |  CAST(sum(CASE WHEN pa <> truth AND pb <> truth THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS both_wrong
-        | FROM c)
-        |SELECT n, both_correct, a_only, b_only, both_wrong,
-        | round(CAST(both_correct + a_only AS DOUBLE) / n, 6) AS acc_a,
-        | round(CAST(both_correct + b_only AS DOUBLE) / n, 6) AS acc_b,
-        | CASE WHEN a_only + b_only > 0 THEN
-        |  round(pow(CAST(abs(a_only - b_only) AS DOUBLE) - 1.0, 2)
-        |    / CAST(a_only + b_only AS DOUBLE), 6) END AS mcnemar_chi2
-        |FROM t""".stripMargin,
-    "q_permutation_test" ->
-      s"""WITH rows0 AS (
-         | SELECT event_id, (event_type = 'purchase') AS t,
-         |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-         | FROM events
-         | WHERE event_type IN ('purchase', 'click') AND value IS NOT NULL),
-         |obs AS (
-         | SELECT
-         |  CAST(sum(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-         |  CAST(sum(CASE WHEN t THEN 0 ELSE 1 END) AS BIGINT) AS n0,
-         |  CAST(sum(CASE WHEN t THEN cents ELSE 0 END) AS BIGINT) AS s1,
-         |  CAST(sum(CASE WHEN t THEN 0 ELSE cents END) AS BIGINT) AS s0
-         | FROM rows0),
-         |o2 AS (
-         | SELECT n1, n0,
-         |  CAST(s1 AS DOUBLE) / n1 - CAST(s0 AS DOUBLE) / n0 AS d_obs,
-         |  CAST(n1 AS DOUBLE) / CAST(n1 + n0 AS DOUBLE) AS phat
-         | FROM obs),
-         |reps AS (
-         | SELECT r.cents, (g.g - 1) * 4 + s.s + 1 AS b,
-         |  (CAST(('0x' || substr(md5(concat_ws(':', r.event_id, g.g)),
-         |    s.s * 8 + 1, 8)) AS BIGINT) + 0.5) / 4294967296.0 AS u
-         | FROM rows0 r CROSS JOIN range(1, 13) g(g)
-         |  CROSS JOIN range(0, 4) s(s)),
-         |pr AS (
-         | SELECT b,
-         |  CASE WHEN sum(CASE WHEN g1 THEN 1 ELSE 0 END) > 0
-         |        AND sum(CASE WHEN g1 THEN 0 ELSE 1 END) > 0 THEN
-         |   CAST(sum(CASE WHEN g1 THEN cents ELSE 0 END) AS DOUBLE)
-         |     / sum(CASE WHEN g1 THEN 1 ELSE 0 END)
-         |   - CAST(sum(CASE WHEN g1 THEN 0 ELSE cents END) AS DOUBLE)
-         |     / sum(CASE WHEN g1 THEN 0 ELSE 1 END) END AS d_b
-         | FROM (SELECT b, cents, u < (SELECT phat FROM o2) AS g1 FROM reps)
-         | GROUP BY b),
-         |agg AS (
-         | SELECT count(*) AS b_reps,
-         |  CAST(sum(CASE WHEN COALESCE(abs(d_b) >=
-         |    (SELECT abs(d_obs) FROM o2), TRUE) THEN 1 ELSE 0 END)
-         |   AS BIGINT) AS n_extreme
-         | FROM pr)
-         |SELECT o2.n1 AS n_treat, o2.n0 AS n_ctrl,
-         | round(o2.d_obs / 100.0, 6) AS diff_obs,
-         | agg.b_reps, agg.n_extreme,
-         | round(CAST(agg.n_extreme + 1 AS DOUBLE)
-         |   / CAST(agg.b_reps + 1 AS DOUBLE), 6) AS p_value
-         |FROM o2 CROSS JOIN agg""".stripMargin,
-    "q_ratio_lift_ci" -> {
+    }),
+    // Two-arm ratio-metric lift with user-grain delta-method CI.
+    Q("q_ratio_lift_ci", { (s, d) => ratioLiftCi(Tables.events(s, d)) }, {
       def r(p: String) = s"(CAST(${p}_sx AS DOUBLE) / CAST(${p}_sy AS DOUBLE))"
       // Bessel n/(n-1): sample moments (Deng et al.), matching the Spark
       // tree's (central_moment) * bessel association exactly
@@ -8025,8 +6365,9 @@ object Analytics {
          | round((rb - ra + 1.959964 * se) / 100.0, 6) AS ci_hi,
          | abs(rb - ra) > 1.959964 * se AS significant
          |FROM f""".stripMargin
-    },
-    "q_price_index" ->
+    }),
+    // Matched-model Laspeyres/Paasche/Fisher price indices.
+    Q("q_price_index", { (s, d) => priceIndex(Tables.lineitem(s, d)) },
       """WITH py AS (
         | SELECT l_partkey AS part, CAST(year(l_shipdate) AS INTEGER) AS y,
         |  CAST(sum(CAST(CAST(l_quantity AS DECIMAL(18,2)) * 100
@@ -8063,8 +6404,10 @@ object Analytics {
         | round(ln2 / ld, 6) AS laspeyres,
         | round(pn / pd, 6) AS paasche,
         | round(sqrt(ln2 / ld * (pn / pd)), 6) AS fisher
-        |FROM a""".stripMargin,
-    "q_markov_stationary" -> {
+        |FROM a""".stripMargin),
+    // Long-run session attention: stationary vector of the event chain.
+    Q("q_markov_stationary", { (s, d) =>
+      markovStationary(Tables.events(s, d)) }, {
       val S = "1000000000000"
       def roundSql(t: Int) = {
         val prev = s"pi${t - 1}"
@@ -8112,8 +6455,9 @@ object Analytics {
          | CAST(coalesce(pi4.pi, 0) * 1000000 // $S AS BIGINT) AS share_ppm
          |FROM states st LEFT JOIN pi4 ON st.state = pi4.state
          |ORDER BY st.state""".stripMargin
-    },
-    "q_abc_classes" ->
+    }),
+    // Pareto/ABC revenue classes over the part dimension.
+    Q("q_abc_classes", { (s, d) => abcClasses(Tables.lineitem(s, d)) },
       """WITH rev AS (
         | SELECT l_partkey,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -8135,8 +6479,9 @@ object Analytics {
         | CAST(sum(rc) AS BIGINT) AS revenue_cents,
         | CAST(CAST(sum(rc) AS HUGEINT) * 1000000 // max(tot) AS BIGINT)
         |  AS share_ppm
-        |FROM cl GROUP BY 1 ORDER BY abc""".stripMargin,
-    "q_wilcoxon_signed" ->
+        |FROM cl GROUP BY 1 ORDER BY abc""".stripMargin),
+    // Paired nonparametric daily purchase-vs-click location test.
+    Q("q_wilcoxon_signed", { (s, d) => wilcoxonSigned(Tables.events(s, d)) },
       s"""WITH daily AS (
          | SELECT CAST(ts AS DATE) AS day,
          |  CAST(sum(CASE WHEN event_type = 'purchase'
@@ -8175,8 +6520,9 @@ object Analytics {
          |  THEN round((CAST(w2 AS DOUBLE) - mu2) / sqrt(var2), 6) END AS z,
          | CASE WHEN var2 > 0 THEN round(${pTwoSidedSql(
         "abs((CAST(w2 AS DOUBLE) - mu2) / sqrt(var2))")}, 6) END AS p_value
-         |FROM f""".stripMargin,
-    "q_ljung_box" ->
+         |FROM f""".stripMargin),
+    // Portmanteau white-noise test over the first 7 daily-revenue ACFs.
+    Q("q_ljung_box", { (s, d) => ljungBox(Tables.orders(s, d)) },
       """WITH d AS (
         | SELECT o_orderdate AS day,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -8216,8 +6562,9 @@ object Analytics {
         | round(CAST(n AS DOUBLE) * CAST(n + 2 AS DOUBLE)
         |   * CAST(sum(t) AS DOUBLE), 6) AS q_stat,
         | count(*) AS dof
-        |FROM terms GROUP BY n""".stripMargin,
-    "q_friedman" ->
+        |FROM terms GROUP BY n""".stripMargin),
+    // Blocked nonparametric k-treatment test (days as blocks).
+    Q("q_friedman", { (s, d) => friedman(Tables.events(s, d)) },
       """WITH base AS (
         | SELECT CAST(ts AS DATE) AS day, event_type AS t,
         |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
@@ -8265,8 +6612,10 @@ object Analytics {
         |    / (CAST(n_blocks AS DOUBLE) * CAST(k AS DOUBLE)
         |       * (CAST(k AS DOUBLE) * CAST(k AS DOUBLE) - 1))), 6)
         | END AS q_tie_adj
-        |FROM a CROSS JOIN ties""".stripMargin,
-    "q_tost_equivalence" -> {
+        |FROM a CROSS JOIN ties""".stripMargin),
+    // Equivalence/non-inferiority readout: is B within ±$5 of A?
+    Q("q_tost_equivalence", { (s, d) =>
+      tostEquivalence(Tables.events(s, d)) }, {
       val diff = "(CAST(sb AS DOUBLE) / nb - CAST(sa AS DOUBLE) / na)"
       val se = """sqrt(((CAST(ssb AS DOUBLE) - CAST(sb AS DOUBLE)
                  |    * CAST(sb AS DOUBLE) / CAST(nb AS DOUBLE))
@@ -8308,8 +6657,10 @@ object Analytics {
          | round(greatest(p_lo, p_up), 6) AS p_tost,
          | greatest(p_lo, p_up) < 0.05 AS equivalent
          |FROM p""".stripMargin
-    },
-    "q_seasonal_strength" ->
+    }),
+    // Seasonal/trend strength of the daily-revenue decomposition.
+    Q("q_seasonal_strength", { (s, d) =>
+      seasonalStrength(Tables.orders(s, d)) },
       """WITH d AS (
         | SELECT CAST(o_orderdate AS DATE) AS day,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -8356,62 +6707,190 @@ object Analytics {
         |SELECT n AS n_days,
         | round(greatest(0.0, 1.0 - v_rem / v_det), 6) AS seasonal_strength,
         | round(greatest(0.0, 1.0 - v_rem / v_tr), 6) AS trend_strength
-        |FROM v""".stripMargin,
-    "q_nb_fit" ->
-      """WITH daily AS (
-        | SELECT CAST(ts AS DATE) AS day,
-        |  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-        |   AS BIGINT) AS c
-        | FROM events GROUP BY 1),
-        |m AS (
-        | SELECT count(*) AS n, CAST(sum(c) AS BIGINT) AS s,
-        |  CAST(sum(c * c) AS BIGINT) AS ss,
-        |  CAST(sum(CASE WHEN c = 0 THEN 1 ELSE 0 END) AS BIGINT) AS z
-        | FROM daily),
-        |f AS (
-        | SELECT n, z, CAST(s AS DOUBLE) / n AS mean,
-        |  (CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-        |    / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0) AS vr
-        | FROM m)
-        |SELECT n AS n_days, round(mean, 6) AS mean, round(vr, 6) AS variance,
-        | CASE WHEN vr > mean THEN round(mean * mean / (vr - mean), 6) END
-        |  AS nb_r,
-        | CASE WHEN vr > mean THEN round(mean / vr, 6) END AS nb_p,
-        | round(CAST(z AS DOUBLE) / CAST(n AS DOUBLE), 6) AS zero_share_obs,
-        | round(exp(-mean), 6) AS zero_share_poisson
-        |FROM f""".stripMargin,
-    "q_mase_naive" ->
-      """WITH daily AS (
-        | SELECT CAST(o_orderdate AS DATE) AS day,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
-        |   AS dc
-        | FROM orders GROUP BY 1),
-        |n AS (SELECT count(*) AS nd FROM daily),
-        |idx AS (
-        | SELECT row_number() OVER (ORDER BY day) <= (nd * 7) // 10
-        |   AS is_train,
-        |  abs(dc - lag(dc, 7) OVER (ORDER BY day)) AS ae,
-        |  lag(dc, 7) OVER (ORDER BY day) AS lag7
-        | FROM daily CROSS JOIN n),
-        |a AS (
-        | SELECT
-        |  CAST(sum(CASE WHEN is_train THEN 1 ELSE 0 END) AS BIGINT)
-        |   AS n_train,
-        |  CAST(sum(CASE WHEN is_train THEN ae ELSE 0 END) AS BIGINT)
-        |   AS ae_train,
-        |  CAST(sum(CASE WHEN is_train THEN 0 ELSE 1 END) AS BIGINT)
-        |   AS n_test,
-        |  CAST(sum(CASE WHEN is_train THEN 0 ELSE ae END) AS BIGINT)
-        |   AS ae_test
-        | FROM idx WHERE lag7 IS NOT NULL)
-        |SELECT n_train AS n_train_terms, n_test AS n_test_terms,
-        | round(CAST(ae_train AS DOUBLE) / n_train / 100.0, 6) AS mae_train,
-        | round(CAST(ae_test AS DOUBLE) / n_test / 100.0, 6) AS mae_test,
-        | CASE WHEN ae_train > 0 THEN
-        |  round((CAST(ae_test AS DOUBLE) / n_test)
-        |    / (CAST(ae_train AS DOUBLE) / n_train), 6) END AS mase
-        |FROM a""".stripMargin,
-    "q_knee_lorenz" ->
+        |FROM v""".stripMargin),
+    // Paired model comparison: McNemar χ² on the disagreement cells of
+    // two rule classifiers over the same events (one-pass 2×2 table).
+    Q("q_mcnemar", { (s, d) => mcnemar(Tables.events(s, d)) },
+      """WITH c AS (
+        | SELECT (event_type = 'purchase') AS truth,
+        |  (COALESCE(value, 0.0) > 50.0) AS pa,
+        |  (hour(ts) % 2 = 0) AS pb
+        | FROM events WHERE ts IS NOT NULL),
+        |t AS (
+        | SELECT count(*) AS n,
+        |  CAST(sum(CASE WHEN pa = truth AND pb = truth THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS both_correct,
+        |  CAST(sum(CASE WHEN pa = truth AND pb <> truth THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS a_only,
+        |  CAST(sum(CASE WHEN pa <> truth AND pb = truth THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS b_only,
+        |  CAST(sum(CASE WHEN pa <> truth AND pb <> truth THEN 1 ELSE 0 END)
+        |    AS BIGINT) AS both_wrong
+        | FROM c)
+        |SELECT n, both_correct, a_only, b_only, both_wrong,
+        | round(CAST(both_correct + a_only AS DOUBLE) / n, 6) AS acc_a,
+        | round(CAST(both_correct + b_only AS DOUBLE) / n, 6) AS acc_b,
+        | CASE WHEN a_only + b_only > 0 THEN
+        |  round(pow(CAST(abs(a_only - b_only) AS DOUBLE) - 1.0, 2)
+        |    / CAST(a_only + b_only AS DOUBLE), 6) END AS mcnemar_chi2
+        |FROM t""".stripMargin),
+    // Fisher randomization test: is the purchase−click value gap real?
+    // (hash-seeded Bernoulli reassignment, B=48 sharded replicates)
+    Q("q_permutation_test", { (s, d) => randomizationTest(Tables.events(s, d)) },
+      s"""WITH rows0 AS (
+         | SELECT event_id, (event_type = 'purchase') AS t,
+         |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+         | FROM events
+         | WHERE event_type IN ('purchase', 'click') AND value IS NOT NULL),
+         |obs AS (
+         | SELECT
+         |  CAST(sum(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+         |  CAST(sum(CASE WHEN t THEN 0 ELSE 1 END) AS BIGINT) AS n0,
+         |  CAST(sum(CASE WHEN t THEN cents ELSE 0 END) AS BIGINT) AS s1,
+         |  CAST(sum(CASE WHEN t THEN 0 ELSE cents END) AS BIGINT) AS s0
+         | FROM rows0),
+         |o2 AS (
+         | SELECT n1, n0,
+         |  CAST(s1 AS DOUBLE) / n1 - CAST(s0 AS DOUBLE) / n0 AS d_obs,
+         |  CAST(n1 AS DOUBLE) / CAST(n1 + n0 AS DOUBLE) AS phat
+         | FROM obs),
+         |reps AS (
+         | SELECT r.cents, (g.g - 1) * 4 + s.s + 1 AS b,
+         |  (CAST(('0x' || substr(md5(concat_ws(':', r.event_id, g.g)),
+         |    s.s * 8 + 1, 8)) AS BIGINT) + 0.5) / 4294967296.0 AS u
+         | FROM rows0 r CROSS JOIN range(1, 13) g(g)
+         |  CROSS JOIN range(0, 4) s(s)),
+         |pr AS (
+         | SELECT b,
+         |  CASE WHEN sum(CASE WHEN g1 THEN 1 ELSE 0 END) > 0
+         |        AND sum(CASE WHEN g1 THEN 0 ELSE 1 END) > 0 THEN
+         |   CAST(sum(CASE WHEN g1 THEN cents ELSE 0 END) AS DOUBLE)
+         |     / sum(CASE WHEN g1 THEN 1 ELSE 0 END)
+         |   - CAST(sum(CASE WHEN g1 THEN 0 ELSE cents END) AS DOUBLE)
+         |     / sum(CASE WHEN g1 THEN 0 ELSE 1 END) END AS d_b
+         | FROM (SELECT b, cents, u < (SELECT phat FROM o2) AS g1 FROM reps)
+         | GROUP BY b),
+         |agg AS (
+         | SELECT count(*) AS b_reps,
+         |  CAST(sum(CASE WHEN COALESCE(abs(d_b) >=
+         |    (SELECT abs(d_obs) FROM o2), TRUE) THEN 1 ELSE 0 END)
+         |   AS BIGINT) AS n_extreme
+         | FROM pr)
+         |SELECT o2.n1 AS n_treat, o2.n0 AS n_ctrl,
+         | round(o2.d_obs / 100.0, 6) AS diff_obs,
+         | agg.b_reps, agg.n_extreme,
+         | round(CAST(agg.n_extreme + 1 AS DOUBLE)
+         |   / CAST(agg.b_reps + 1 AS DOUBLE), 6) AS p_value
+         |FROM o2 CROSS JOIN agg""".stripMargin),
+    // Coarsened-exact-matching ATT: priority effect on order value,
+    // matched within (status × quarter) strata — one groupBy, no pairs.
+    Q("q_cem_att", { (s, d) => cemAtt(Tables.orders(s, d)) },
+      """WITH rows0 AS (
+        | SELECT (o_orderpriority IN ('1-URGENT', '2-HIGH')) AS t,
+        |  o_orderstatus AS st,
+        |  year(o_orderdate) * 10 + quarter(o_orderdate) AS qtr,
+        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+        | FROM orders),
+        |strata AS (
+        | SELECT st, qtr,
+        |  CAST(sum(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS nt,
+        |  CAST(sum(CASE WHEN t THEN 0 ELSE 1 END) AS BIGINT) AS nc,
+        |  CAST(sum(CASE WHEN t THEN cents ELSE 0 END) AS BIGINT) AS sct,
+        |  CAST(sum(CASE WHEN t THEN 0 ELSE cents END) AS BIGINT) AS scc
+        | FROM rows0 GROUP BY 1, 2),
+        |naive AS (
+        | SELECT CAST(sum(CASE WHEN t THEN cents ELSE 0 END) AS DOUBLE)
+        |    / sum(CASE WHEN t THEN 1 ELSE 0 END)
+        |  - CAST(sum(CASE WHEN t THEN 0 ELSE cents END) AS DOUBLE)
+        |    / sum(CASE WHEN t THEN 0 ELSE 1 END) AS naive
+        | FROM rows0),
+        |agg AS (
+        | SELECT count(*) AS n_strata,
+        |  CAST(sum(CASE WHEN nt > 0 AND nc > 0 THEN 1 ELSE 0 END)
+        |   AS BIGINT) AS n_strata_matched,
+        |  CAST(sum(CASE WHEN nt > 0 AND nc > 0 THEN nt ELSE 0 END)
+        |   AS BIGINT) AS n_treated,
+        |  CAST(sum(CASE WHEN nt > 0 AND nc > 0 THEN nc ELSE 0 END)
+        |   AS BIGINT) AS n_control,
+        |  CAST(sum(CASE WHEN nt > 0 AND nc > 0 THEN sct ELSE 0 END)
+        |   AS BIGINT) AS st_sum,
+        |  sum(CASE WHEN nt > 0 AND nc > 0 THEN
+        |    CAST(round(CAST(nt AS DOUBLE) * scc / nc, 6) AS DECIMAL(28,6))
+        |   ELSE CAST(0 AS DECIMAL(28,6)) END) AS wc_sum
+        | FROM strata)
+        |SELECT n_strata, n_strata_matched, n_treated, n_control,
+        | CASE WHEN n_treated > 0 THEN
+        |  round((CAST(st_sum AS DOUBLE) / n_treated
+        |    - CAST(wc_sum AS DOUBLE) / n_treated) / 100.0, 6) END AS att,
+        | round(naive / 100.0, 6) AS naive_diff
+        |FROM agg CROSS JOIN naive""".stripMargin),
+    // DeLong CI on the q_auc_length AUC (length predicting is-English).
+    Q("q_auc_delong_ci", { (s, d) =>
+      aucDelongCi(Tables.documents(s, d), col("n_chars"),
+        col("lang") === "en") },
+      delongSql("lang = 'en'",
+        "n_chars IS NOT NULL AND lang IS NOT NULL")),
+    // Adversarial validation (split hygiene): can a drift-prone feature
+    // predict the held-out flag? Healthy split -> AUC CI straddles 0.5.
+    // split-hygiene check: a drift-prone feature should NOT predict the
+    // held-out flag (healthy split -> AUC CI straddles 0.5)
+    Q("q_adversarial_valid", { (s, d) =>
+      aucDelongCi(Tables.documents(s, d), col("n_chars"),
+        conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
+          .cast("long") % 5 === 0) },
+      delongSql(
+        "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))" +
+          " AS BIGINT) % 5 = 0",
+        "n_chars IS NOT NULL")),
+    // Bayesian A/B: P(B beats A) + credible interval of the lift
+    // (normal posterior on exact moment sums, portable A&S Phi).
+    Q("q_bayes_ab", { (s, d) => bayesAb(Tables.events(s, d)) }, {
+      val z = "(((CAST(sb AS DOUBLE) / nb - CAST(sa AS DOUBLE) / na)) / se)"
+      s"""WITH rows0 AS (
+         | SELECT (event_type = 'purchase') AS t,
+         |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+         | FROM events
+         | WHERE event_type IN ('purchase', 'click') AND value IS NOT NULL),
+         |m AS (
+         | SELECT
+         |  CAST(sum(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS nb,
+         |  CAST(sum(CASE WHEN t THEN 0 ELSE 1 END) AS BIGINT) AS na,
+         |  CAST(sum(CASE WHEN t THEN cents ELSE 0 END) AS BIGINT) AS sb,
+         |  CAST(sum(CASE WHEN t THEN 0 ELSE cents END) AS BIGINT) AS sa,
+         |  sum(CASE WHEN t THEN CAST(cents * cents AS HUGEINT)
+         |      ELSE CAST(0 AS HUGEINT) END) AS ssb,
+         |  sum(CASE WHEN t THEN CAST(0 AS HUGEINT)
+         |      ELSE CAST(cents * cents AS HUGEINT) END) AS ssa
+         | FROM rows0),
+         |s AS (
+         | SELECT na, nb, sa, sb,
+         |  sqrt(((CAST(ssb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS
+         |    DOUBLE) / CAST(nb AS DOUBLE)) / (CAST(nb AS DOUBLE) - 1.0))
+         |    / CAST(nb AS DOUBLE)
+         |   + ((CAST(ssa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS
+         |    DOUBLE) / CAST(na AS DOUBLE)) / (CAST(na AS DOUBLE) - 1.0))
+         |    / CAST(na AS DOUBLE)) AS se
+         | FROM m)
+         |SELECT na AS n_a, nb AS n_b,
+         | round(CAST(sa AS DOUBLE) / na / 100.0, 6) AS mean_a,
+         | round(CAST(sb AS DOUBLE) / nb / 100.0, 6) AS mean_b,
+         | round((CAST(sb AS DOUBLE) / nb - CAST(sa AS DOUBLE) / na)
+         |   / 100.0, 6) AS lift,
+         | round(((CAST(sb AS DOUBLE) / nb - CAST(sa AS DOUBLE) / na)
+         |   - 1.959964 * se) / 100.0, 6) AS ci_lo,
+         | round(((CAST(sb AS DOUBLE) / nb - CAST(sa AS DOUBLE) / na)
+         |   + 1.959964 * se) / 100.0, 6) AS ci_hi,
+         | round(CASE WHEN $z >= 0
+         |  THEN 1.0 - ${pTwoSidedSql(s"abs($z)")} / 2.0
+         |  ELSE ${pTwoSidedSql(s"abs($z)")} / 2.0 END, 6)
+         |  AS prob_b_beats_a
+         |FROM s""".stripMargin
+    }),
+    // Kneedle chord knee of the Lorenz concentration curve: the decile
+    // where cumulative spend share bends away from proportional.
+    Q("q_knee_lorenz", { (s, d) =>
+      kneePoint(lorenzDeciles(Tables.orders(s, d)), "decile",
+        "cum_share_ppm") },
       """WITH per AS (
         | SELECT o_custkey,
         |  CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
@@ -8441,8 +6920,10 @@ object Analytics {
         | round(abs((CAST(decile AS DOUBLE) - x0) / (x1 - x0)
         |   - (CAST(cum_share_ppm AS DOUBLE) - y0) / (y1 - y0)), 6) AS gap
         |FROM curve CROSS JOIN mm
-        |ORDER BY gap DESC, decile LIMIT 1""".stripMargin,
-    "q_obrien_fleming" ->
+        |ORDER BY gap DESC, decile LIMIT 1""".stripMargin),
+    // O'Brien-Fleming 5-look group-sequential monitor on the
+    // purchase-vs-click value gap (calendar information fractions).
+    Q("q_obrien_fleming", { (s, d) => obrienFleming(Tables.events(s, d)) },
       """WITH rows0 AS (
         | SELECT CAST(ts AS DATE) AS day, (event_type = 'purchase') AS t,
         |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -8485,8 +6966,10 @@ object Analytics {
         | FROM c)
         |SELECT look, n_days, na, nb, z, boundary,
         | abs(z) >= boundary AS crossed
-        |FROM zf ORDER BY look""".stripMargin,
-    "q_pinball_loss" ->
+        |FROM zf ORDER BY look""".stripMargin),
+    // Pinball-loss quantile backtest on the daily-revenue spine
+    // (train quantiles as forecasts, held-out proper scoring).
+    Q("q_pinball_loss", { (s, d) => pinballLoss(Tables.orders(s, d)) },
       """WITH daily AS (
         | SELECT CAST(o_orderdate AS DATE) AS day,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
@@ -8519,100 +7002,65 @@ object Analytics {
         | round(CAST(sum(loss) AS DOUBLE) / count(*) / 1000.0, 6)
         |  AS pinball_loss,
         | round(CAST(sum(over) AS DOUBLE) / count(*), 6) AS exceed_rate
-        |FROM terms GROUP BY k ORDER BY q""".stripMargin,
-    "q_bayes_ab" -> {
-      val z = "(((CAST(sb AS DOUBLE) / nb - CAST(sa AS DOUBLE) / na)) / se)"
-      s"""WITH rows0 AS (
-         | SELECT (event_type = 'purchase') AS t,
-         |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-         | FROM events
-         | WHERE event_type IN ('purchase', 'click') AND value IS NOT NULL),
-         |m AS (
-         | SELECT
-         |  CAST(sum(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS nb,
-         |  CAST(sum(CASE WHEN t THEN 0 ELSE 1 END) AS BIGINT) AS na,
-         |  CAST(sum(CASE WHEN t THEN cents ELSE 0 END) AS BIGINT) AS sb,
-         |  CAST(sum(CASE WHEN t THEN 0 ELSE cents END) AS BIGINT) AS sa,
-         |  sum(CASE WHEN t THEN CAST(cents * cents AS HUGEINT)
-         |      ELSE CAST(0 AS HUGEINT) END) AS ssb,
-         |  sum(CASE WHEN t THEN CAST(0 AS HUGEINT)
-         |      ELSE CAST(cents * cents AS HUGEINT) END) AS ssa
-         | FROM rows0),
-         |s AS (
-         | SELECT na, nb, sa, sb,
-         |  sqrt(((CAST(ssb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS
-         |    DOUBLE) / CAST(nb AS DOUBLE)) / (CAST(nb AS DOUBLE) - 1.0))
-         |    / CAST(nb AS DOUBLE)
-         |   + ((CAST(ssa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS
-         |    DOUBLE) / CAST(na AS DOUBLE)) / (CAST(na AS DOUBLE) - 1.0))
-         |    / CAST(na AS DOUBLE)) AS se
-         | FROM m)
-         |SELECT na AS n_a, nb AS n_b,
-         | round(CAST(sa AS DOUBLE) / na / 100.0, 6) AS mean_a,
-         | round(CAST(sb AS DOUBLE) / nb / 100.0, 6) AS mean_b,
-         | round((CAST(sb AS DOUBLE) / nb - CAST(sa AS DOUBLE) / na)
-         |   / 100.0, 6) AS lift,
-         | round(((CAST(sb AS DOUBLE) / nb - CAST(sa AS DOUBLE) / na)
-         |   - 1.959964 * se) / 100.0, 6) AS ci_lo,
-         | round(((CAST(sb AS DOUBLE) / nb - CAST(sa AS DOUBLE) / na)
-         |   + 1.959964 * se) / 100.0, 6) AS ci_hi,
-         | round(CASE WHEN $z >= 0
-         |  THEN 1.0 - ${pTwoSidedSql(s"abs($z)")} / 2.0
-         |  ELSE ${pTwoSidedSql(s"abs($z)")} / 2.0 END, 6)
-         |  AS prob_b_beats_a
-         |FROM s""".stripMargin
-    },
-    "q_auc_delong_ci" ->
-      delongSql("lang = 'en'",
-        "n_chars IS NOT NULL AND lang IS NOT NULL"),
-    // split-hygiene check: a drift-prone feature should NOT predict the
-    // held-out flag (healthy split -> AUC CI straddles 0.5)
-    "q_adversarial_valid" ->
-      delongSql(
-        "CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4))" +
-          " AS BIGINT) % 5 = 0",
-        "n_chars IS NOT NULL"),
-    "q_cem_att" ->
-      """WITH rows0 AS (
-        | SELECT (o_orderpriority IN ('1-URGENT', '2-HIGH')) AS t,
-        |  o_orderstatus AS st,
-        |  year(o_orderdate) * 10 + quarter(o_orderdate) AS qtr,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        | FROM orders),
-        |strata AS (
-        | SELECT st, qtr,
-        |  CAST(sum(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS nt,
-        |  CAST(sum(CASE WHEN t THEN 0 ELSE 1 END) AS BIGINT) AS nc,
-        |  CAST(sum(CASE WHEN t THEN cents ELSE 0 END) AS BIGINT) AS sct,
-        |  CAST(sum(CASE WHEN t THEN 0 ELSE cents END) AS BIGINT) AS scc
-        | FROM rows0 GROUP BY 1, 2),
-        |naive AS (
-        | SELECT CAST(sum(CASE WHEN t THEN cents ELSE 0 END) AS DOUBLE)
-        |    / sum(CASE WHEN t THEN 1 ELSE 0 END)
-        |  - CAST(sum(CASE WHEN t THEN 0 ELSE cents END) AS DOUBLE)
-        |    / sum(CASE WHEN t THEN 0 ELSE 1 END) AS naive
-        | FROM rows0),
-        |agg AS (
-        | SELECT count(*) AS n_strata,
-        |  CAST(sum(CASE WHEN nt > 0 AND nc > 0 THEN 1 ELSE 0 END)
-        |   AS BIGINT) AS n_strata_matched,
-        |  CAST(sum(CASE WHEN nt > 0 AND nc > 0 THEN nt ELSE 0 END)
-        |   AS BIGINT) AS n_treated,
-        |  CAST(sum(CASE WHEN nt > 0 AND nc > 0 THEN nc ELSE 0 END)
-        |   AS BIGINT) AS n_control,
-        |  CAST(sum(CASE WHEN nt > 0 AND nc > 0 THEN sct ELSE 0 END)
-        |   AS BIGINT) AS st_sum,
-        |  sum(CASE WHEN nt > 0 AND nc > 0 THEN
-        |    CAST(round(CAST(nt AS DOUBLE) * scc / nc, 6) AS DECIMAL(28,6))
-        |   ELSE CAST(0 AS DECIMAL(28,6)) END) AS wc_sum
-        | FROM strata)
-        |SELECT n_strata, n_strata_matched, n_treated, n_control,
-        | CASE WHEN n_treated > 0 THEN
-        |  round((CAST(st_sum AS DOUBLE) / n_treated
-        |    - CAST(wc_sum AS DOUBLE) / n_treated) / 100.0, 6) END AS att,
-        | round(naive / 100.0, 6) AS naive_diff
-        |FROM agg CROSS JOIN naive""".stripMargin,
-    "q_split_finder" -> {
+        |FROM terms GROUP BY k ORDER BY q""".stripMargin),
+    // NB method-of-moments fit of daily purchase counts (zeros kept
+    // via the all-events day spine).
+    Q("q_nb_fit", { (s, d) => nbFit(Tables.events(s, d)) },
+      """WITH daily AS (
+        | SELECT CAST(ts AS DATE) AS day,
+        |  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+        |   AS BIGINT) AS c
+        | FROM events GROUP BY 1),
+        |m AS (
+        | SELECT count(*) AS n, CAST(sum(c) AS BIGINT) AS s,
+        |  CAST(sum(c * c) AS BIGINT) AS ss,
+        |  CAST(sum(CASE WHEN c = 0 THEN 1 ELSE 0 END) AS BIGINT) AS z
+        | FROM daily),
+        |f AS (
+        | SELECT n, z, CAST(s AS DOUBLE) / n AS mean,
+        |  (CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
+        |    / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1.0) AS vr
+        | FROM m)
+        |SELECT n AS n_days, round(mean, 6) AS mean, round(vr, 6) AS variance,
+        | CASE WHEN vr > mean THEN round(mean * mean / (vr - mean), 6) END
+        |  AS nb_r,
+        | CASE WHEN vr > mean THEN round(mean / vr, 6) END AS nb_p,
+        | round(CAST(z AS DOUBLE) / CAST(n AS DOUBLE), 6) AS zero_share_obs,
+        | round(exp(-mean), 6) AS zero_share_poisson
+        |FROM f""".stripMargin),
+    // Seasonal-naive MASE benchmark on the daily-revenue spine.
+    Q("q_mase_naive", { (s, d) => maseNaive(Tables.orders(s, d)) },
+      """WITH daily AS (
+        | SELECT CAST(o_orderdate AS DATE) AS day,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)
+        |   AS dc
+        | FROM orders GROUP BY 1),
+        |n AS (SELECT count(*) AS nd FROM daily),
+        |idx AS (
+        | SELECT row_number() OVER (ORDER BY day) <= (nd * 7) // 10
+        |   AS is_train,
+        |  abs(dc - lag(dc, 7) OVER (ORDER BY day)) AS ae,
+        |  lag(dc, 7) OVER (ORDER BY day) AS lag7
+        | FROM daily CROSS JOIN n),
+        |a AS (
+        | SELECT
+        |  CAST(sum(CASE WHEN is_train THEN 1 ELSE 0 END) AS BIGINT)
+        |   AS n_train,
+        |  CAST(sum(CASE WHEN is_train THEN ae ELSE 0 END) AS BIGINT)
+        |   AS ae_train,
+        |  CAST(sum(CASE WHEN is_train THEN 0 ELSE 1 END) AS BIGINT)
+        |   AS n_test,
+        |  CAST(sum(CASE WHEN is_train THEN 0 ELSE ae END) AS BIGINT)
+        |   AS ae_test
+        | FROM idx WHERE lag7 IS NOT NULL)
+        |SELECT n_train AS n_train_terms, n_test AS n_test_terms,
+        | round(CAST(ae_train AS DOUBLE) / n_train / 100.0, 6) AS mae_train,
+        | round(CAST(ae_test AS DOUBLE) / n_test / 100.0, 6) AS mae_test,
+        | CASE WHEN ae_train > 0 THEN
+        |  round((CAST(ae_test AS DOUBLE) / n_test)
+        |    / (CAST(ae_train AS DOUBLE) / n_train), 6) END AS mase
+        |FROM a""".stripMargin),
+    Q("q_split_finder", { (s, d) => splitFinder(Tables.documents(s, d)) }, {
       val gl = giniSql("pl", "cl")
       val gr = giniSql("np - pl", "n - cl")
       val gp = giniSql("np", "n")
@@ -8642,8 +7090,8 @@ object Analytics {
          | round($gp, 6) AS gini_parent, gini_split,
          | round($gp - gini_split, 6) AS gini_gain
          |FROM best""".stripMargin
-    },
-    "q_pr_auc" ->
+    }),
+    Q("q_pr_auc", { (s, d) => prAuc(Tables.documents(s, d)) },
       """WITH cells AS (
         | SELECT CAST(n_chars AS BIGINT) AS v,
         |  CAST(count(*) AS BIGINT) AS c,
@@ -8671,8 +7119,8 @@ object Analytics {
         | FROM cum CROSS JOIN tot)
         |SELECT np AS n_positives,
         | round(CAST(sum(t) AS DOUBLE), 6) AS pr_auc
-        |FROM terms GROUP BY np""".stripMargin,
-    "q_kendall_tau" ->
+        |FROM terms GROUP BY np""".stripMargin),
+    Q("q_kendall_tau", { (s, d) => kendallTau(Tables.documents(s, d)) },
       s"""WITH cells AS (
         | SELECT CAST(len(${TextAnalysis.tokensSql("text")}) AS BIGINT) AS x,
         |  CAST(n_chars AS BIGINT) // 32 AS y,
@@ -8705,8 +7153,8 @@ object Analytics {
         |     * (CAST(nn AS DOUBLE) * (CAST(nn AS DOUBLE) - 1) / 2
         |      - CAST(ty2 AS DOUBLE) / 2)), 6)
         | END AS tau_b
-        |FROM conc CROSS JOIN disc CROSS JOIN tx CROSS JOIN ty""".stripMargin,
-    "q_nelson_aalen" ->
+        |FROM conc CROSS JOIN disc CROSS JOIN tx CROSS JOIN ty""".stripMargin),
+    Q("q_nelson_aalen", { (s, d) => nelsonAalen(Tables.events(s, d)) },
       """WITH ev AS (
         | SELECT user_id, CAST(ts AS DATE) AS dt FROM events),
         |mx AS (SELECT max(dt) AS mx FROM ev),
@@ -8735,9 +7183,9 @@ object Analytics {
         | FROM risk)
         |SELECT dur, n_at_risk, d, ch AS cum_hazard,
         | round(exp(-ch), 6) AS fh_survival
-        |FROM terms WHERE d > 0 ORDER BY dur""".stripMargin,
-    "q_holt_winters" -> holtWintersSql,
-    "q_cohort_ltv" ->
+        |FROM terms WHERE d > 0 ORDER BY dur""".stripMargin),
+    Q("q_holt_winters", { (s, d) => holtWinters(Tables.orders(s, d)) }, holtWintersSql),
+    Q("q_cohort_ltv", { (s, d) => cohortLtv(Tables.orders(s, d)) },
       """WITH per AS (
         | SELECT o_custkey,
         |  CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m,
@@ -8755,8 +7203,8 @@ object Analytics {
         | age_months, n_orders, rev_cents,
         | CAST(sum(rev_cents) OVER (PARTITION BY cm ORDER BY age_months
         |   ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_rev_cents
-        |FROM g ORDER BY cohort_month, age_months""".stripMargin,
-    "q_max_drawdown" ->
+        |FROM g ORDER BY cohort_month, age_months""".stripMargin),
+    Q("q_max_drawdown", { (s, d) => maxDrawdown(Tables.orders(s, d)) },
       """WITH d AS (
         | SELECT CAST(o_orderdate AS DATE) AS day,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rc
@@ -8776,8 +7224,8 @@ object Analytics {
         | peak AS peak_cents, rc AS trough_cents,
         | dd AS max_drawdown_cents,
         | CAST(dd * 1000000 // peak AS BIGINT) AS dd_ppm
-        |FROM x WHERE rnk = 1""".stripMargin,
-    "q_lorenz_deciles" ->
+        |FROM x WHERE rnk = 1""".stripMargin),
+    Q("q_lorenz_deciles", { (s, d) => lorenzDeciles(Tables.orders(s, d)) },
       """WITH per AS (
         | SELECT o_custkey,
         |  CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
@@ -8797,8 +7245,8 @@ object Analytics {
         | CAST(CAST(sum(spend_cents) OVER (ORDER BY decile
         |   ROWS UNBOUNDED PRECEDING) AS BIGINT) * 1000000 // tot AS BIGINT)
         |  AS cum_share_ppm
-        |FROM g CROSS JOIN t ORDER BY decile""".stripMargin,
-    "q_logrank" ->
+        |FROM g CROSS JOIN t ORDER BY decile""".stripMargin),
+    Q("q_logrank", { (s, d) => logrank(Tables.events(s, d)) },
       """WITH ev AS (
         | SELECT user_id, CAST(ts AS DATE) AS dt FROM events),
         |mx AS (SELECT max(dt) AS mx FROM ev),
@@ -8848,8 +7296,8 @@ object Analytics {
         |SELECT nt AS n_users, nc AS n_control, n_deaths, n_deaths_control,
         | round(soe, 6) AS o_minus_e, round(svr, 6) AS var_logrank,
         | CASE WHEN svr > 0 THEN round(soe / sqrt(svr), 6) END AS z
-        |FROM a CROSS JOIN tot""".stripMargin,
-    "q_shapley_attr" ->
+        |FROM a CROSS JOIN tot""".stripMargin),
+    Q("q_shapley_attr", { (s, d) => shapleyAttr(Tables.events(s, d)) },
       """WITH fp AS (
         | SELECT user_id,
         |  min(struct_pack(ts := ts, event_id := event_id)) AS fp
@@ -8897,8 +7345,8 @@ object Analytics {
         | round(CAST(phi6 AS DOUBLE) / 6.0, 6) AS phi_conversions,
         | CASE WHEN vall > 0 THEN CAST(phi6 * 1000000 // (6 * vall) AS BIGINT)
         | END AS share_ppm
-        |FROM un CROSS JOIN tots ORDER BY channel""".stripMargin,
-    "q_fdr_bh" -> {
+        |FROM un CROSS JOIN tots ORDER BY channel""".stripMargin),
+    Q("q_fdr_bh", { (s, d) => fdrBh(Tables.documents(s, d)) }, {
       val z = """((CAST(s AS DOUBLE) / CAST(n AS DOUBLE)
         |   - CAST(ss AS DOUBLE) / CAST(nn AS DOUBLE))
         |  / (sqrt((CAST(qt AS DOUBLE) - CAST(ss AS DOUBLE)
@@ -8935,8 +7383,8 @@ object Analytics {
          |SELECT source, n_docs, z, round(praw, 12) AS p_value, p_rank,
          | p_rank <= COALESCE(kmax, 0) AS significant
          |FROM k ORDER BY p_rank""".stripMargin
-    },
-    "q_overdispersion" ->
+    }),
+    Q("q_overdispersion", { (s, d) => overdispersion(Tables.events(s, d)) },
       """WITH daily AS (
         | SELECT CAST(ts AS DATE) AS day, event_type,
         |  CAST(count(*) AS BIGINT) AS c
@@ -8967,8 +7415,12 @@ object Analytics {
         |     / CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) - 1))
         |   / (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) > 1.5 END
         |  AS overdispersed
-        |FROM g ORDER BY event_type""".stripMargin,
-    "q_kruskal_wallis" ->
+        |FROM g ORDER BY event_type""".stripMargin),
+    // Kruskal–Wallis: does doc length DISTRIBUTION differ across sources
+    // (rank-based — the q_anova_lang readout without normality)?
+    Q("q_kruskal_wallis", { (s, d) =>
+      kruskalWallis(Tables.documents(s, d), "source", col("n_chars"))
+    },
       """WITH base AS (
         | SELECT source AS g, CAST(n_chars AS BIGINT) AS v FROM documents
         | WHERE source IS NOT NULL AND n_chars IS NOT NULL),
@@ -9007,8 +7459,12 @@ object Analytics {
         |    / (CAST(n_rows AS DOUBLE) * CAST(n_rows AS DOUBLE)
         |       * CAST(n_rows AS DOUBLE) - CAST(n_rows AS DOUBLE))), 6)
         | END AS h_tie_adj
-        |FROM a CROSS JOIN ties""".stripMargin,
-    "q_levene_bf" ->
+        |FROM a CROSS JOIN ties""".stripMargin),
+    // Brown–Forsythe: is doc-length VARIANCE homogeneous across sources
+    // (the validity gate for the ANOVA F beside it)?
+    Q("q_levene_bf", { (s, d) =>
+      brownForsythe(Tables.documents(s, d), "source", "n_chars")
+    },
       """WITH meds AS (
         | SELECT source,
         |  CAST(round(quantile_cont(CAST(n_chars AS DOUBLE), 0.5) * 2, 0)
@@ -9046,8 +7502,9 @@ object Analytics {
         |   / ((CAST(q AS DOUBLE) - CAST(t AS DOUBLE))
         |    / CAST(n_rows - k_groups AS DOUBLE)), 6)
         | END AS w_stat
-        |FROM a""".stripMargin,
-    "q_granger_daily" ->
+        |FROM a""".stripMargin),
+    // Granger-style lag-1 predictability: order count → next-day revenue.
+    Q("q_granger_daily", { (s, d) => grangerDaily(Tables.orders(s, d)) },
       """WITH daily AS (
         | SELECT CAST(o_orderdate AS DATE) AS day,
         |  CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
@@ -9098,79 +7555,84 @@ object Analytics {
         |  round(((cyy - c1y * c1y / c11) - (cyy - b1 * c1y - b2 * c2y))
         |   / ((cyy - b1 * c1y - b2 * c2y) / (CAST(n AS DOUBLE) - 3)), 6)
         | END AS f_stat
-        |FROM b""".stripMargin,
-    "q_a6_describe_all" -> describeAllSql("lineitem",
+        |FROM b""".stripMargin),
+    // A6 — the one-call wide describe over lineitem's measures + flags.
+    Q("q_a6_describe_all", { (s, d) =>
+      describeAll(Tables.lineitem(s, d),
+        numeric = Seq("l_quantity", "l_extendedprice", "l_discount"),
+        categorical = Seq("l_returnflag", "l_linestatus"))
+    },
+      describeAllSql("lineitem",
       Seq("l_quantity", "l_extendedprice", "l_discount"),
-      Seq("l_returnflag", "l_linestatus")),
-    "q_a6_describe_all_strings" -> describeAllSql("customer",
+      Seq("l_returnflag", "l_linestatus"))),
+    // A6 — describe(include='all') at FULL width: every column of the
+    // table in one call — all numerics in one aggregate pass, ALL string
+    // columns (including the per-row-unique c_name — the high-cardinality
+    // regime where a per-column loop would be ruinous) through the single
+    // melt. Passes over the table stay at two regardless of column count.
+    Q("q_a6_describe_all_strings", { (s, d) =>
+      describeAll(Tables.customer(s, d),
+        numeric = Seq("c_acctbal", "c_custkey", "c_nationkey"),
+        categorical = Seq("c_mktsegment", "c_name"))
+    },
+      describeAllSql("customer",
       Seq("c_acctbal", "c_custkey", "c_nationkey"),
-      Seq("c_mktsegment", "c_name")),
-    "q_a8_corr" -> exactCorrSql("l_quantity", "l_extendedprice", "lineitem"),
-    "q_a8_corr_matrix" -> {
+      Seq("c_mktsegment", "c_name"))),
+    // A8 — correlation (exact-moment Pearson).
+    Q("q_a8_corr", { (s, d) =>
+      exactCorr(Tables.lineitem(s, d), "l_quantity", "l_extendedprice")
+    },
+      exactCorrSql("l_quantity", "l_extendedprice", "lineitem")),
+    // A8 — the full correlation matrix over the numeric measures (the
+    // reference's notebooks/002_EDA_csv.ipynb cell 37 corr() heatmap),
+    // unpivoted to (x, y, corr) rows. ONE scan for all 6 pairs.
+    Q("q_a8_corr_matrix", { (s, d) =>
+      exactCorrMatrix(Tables.lineitem(s, d),
+        Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax"))
+    }, {
       val cols = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
       val pairs = for (x <- cols; y <- cols if x < y) yield (x, y)
       pairs.map { case (x, y) =>
         s"SELECT '$x' AS x, '$y' AS y, \"corr\" FROM (${exactCorrSql(x, y, "lineitem")})"
       }.mkString("", "\nUNION ALL\n", "\nORDER BY x, y")
+    }),
+    // A9 — rolling 7-day revenue (trailing-window dashboard metric). The
+    // window runs over the PER-DAY pre-aggregate — calendar-bounded
+    // cardinality (same argument as dimension windows), never the fact
+    // table; the frame sums DECIMALs (exact in any addition order —
+    // DuckDB's segment-tree window vs Spark's running scan would drift
+    // doubles) and casts once at the end.
+    Q("q_rolling_revenue", { (s, d) =>
+      val daily = Tables.orders(s, d)
+        .groupBy(col("o_orderdate").cast("date").as("day"))
+        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("dt"))
+      val w = Window.orderBy("day_num").rangeBetween(-6, 0)
+      daily
+        .withColumn("day_num", datediff(col("day"), lit("1970-01-01").cast("date")))
+        .withColumn("rolling_7d", sum(col("dt")).over(w).cast("double"))
+        .select(col("day"), col("dt").cast("double").as("daily_total"),
+          col("rolling_7d"))
+        .orderBy("day")
     },
-    "q_rfm" -> {
-      val caseFor = (c: String) => s"1 + (CASE WHEN $c > ${c}1 THEN 1 ELSE 0 END" +
-        s" + CASE WHEN $c > ${c}2 THEN 1 ELSE 0 END" +
-        s" + CASE WHEN $c > ${c}3 THEN 1 ELSE 0 END)"
-      val thrCols = Seq("r", "f", "m").flatMap { c =>
-        Seq(0.25, 0.5, 0.75).zipWithIndex.map { case (q, i) =>
-          s"quantile_cont($c, $q) AS $c${i + 1}" }
-      }.mkString(", ")
-      s"""WITH e AS (
-         | SELECT user_id, CAST(ts AS DATE) AS dt,
-         |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-         | FROM events WHERE event_type = 'purchase' AND value IS NOT NULL),
-         |mx AS (SELECT max(dt) AS mx FROM e),
-         |p AS (
-         | SELECT user_id,
-         |  CAST(datediff('day', max(dt), max(mx)) AS DOUBLE) AS r,
-         |  CAST(count(*) AS DOUBLE) AS f,
-         |  CAST(sum(cents) AS DOUBLE) AS m
-         | FROM e, mx GROUP BY 1),
-         |t AS (SELECT $thrCols FROM p)
-         |SELECT ${caseFor("r")} AS r_score, ${caseFor("f")} AS f_score,
-         | ${caseFor("m")} AS m_score, count(*) AS n_users
-         |FROM p, t GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
-    },
-    "q_kaplan_meier" ->
-      ("WITH " + kmCtesSql + "\n" +
-        """SELECT dur, n_at_risk, d,
-          | CASE WHEN dead = 1 THEN 0.0
-          |  ELSE round(exp(CAST(cuml AS DOUBLE)), 6) END AS survival
-          |FROM c WHERE d > 0 ORDER BY dur""".stripMargin),
-    // KM step integral: same spine, lag(survival, 1, 1.0) left-endpoint
-    // rectangles clamped at tau, plus the censored tail rectangle
-    "q_rmst" ->
-      ("WITH " + kmCtesSql + ",\n" +
-        """km AS (
-          | SELECT dur,
-          |  CASE WHEN dead = 1 THEN 0.0
-          |   ELSE round(exp(CAST(cuml AS DOUBLE)), 6) END AS survival
-          | FROM c WHERE d > 0),
-          |terms AS (
-          | SELECT CAST(CASE WHEN lag(dur, 1, 0) OVER (ORDER BY dur) < 14
-          |   THEN round(lag(survival, 1, 1.0) OVER (ORDER BY dur)
-          |    * CAST(least(dur, 14) - lag(dur, 1, 0) OVER (ORDER BY dur)
-          |       AS DOUBLE), 6)
-          |   ELSE 0.0 END AS DECIMAL(18,6)) AS t
-          | FROM km),
-          |tl AS (
-          | SELECT CAST(CASE WHEN dur < 14
-          |   THEN round(survival * CAST(14 - dur AS DOUBLE), 6)
-          |   ELSE 0.0 END AS DECIMAL(18,6)) AS tail_t
-          | FROM km ORDER BY dur DESC LIMIT 1),
-          |agg AS (SELECT count(*) AS n_steps,
-          |        CAST(sum(t) AS DOUBLE) AS st FROM terms)
-          |SELECT CAST(14 AS INTEGER) AS tau, n_steps,
-          | round(st + CAST(tail_t AS DOUBLE), 6) AS rmst_days,
-          | round((st + CAST(tail_t AS DOUBLE)) / 14.0, 6) AS rmst_share
-          |FROM agg CROSS JOIN tl""".stripMargin),
-    "q_did" ->
+      """WITH daily AS (
+        | SELECT CAST(o_orderdate AS DATE) AS day,
+        |  sum(CAST(o_totalprice AS DECIMAL(18,2))) AS dt
+        | FROM orders GROUP BY 1)
+        |SELECT day, CAST(dt AS DOUBLE) AS daily_total,
+        | CAST(sum(dt) OVER (ORDER BY day
+        |   RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW) AS DOUBLE)
+        |  AS rolling_7d
+        |FROM daily ORDER BY day""".stripMargin),
+    // CUPED VARIANCE REDUCTION (Deng et al., WSDM 2013 — "Improving the
+    // Sensitivity of Online Controlled Experiments"): per-user pre-period
+    // spend x (first half-window) as covariate for post-period spend y;
+    // θ = cov(x,y)/var(x), adjusted variance var(y)−cov²/var(x). The
+    // experimentation-platform primitive that shrinks A/B CIs without
+    // more traffic. ONE per-user aggregate (map-side combined), then one
+    // moment fold — moments are EXACT integers (cents as DECIMAL(38,0))
+    // cast to double once, so every division is IEEE-identical across
+    // engines (the q_partial_corr convention).
+    Q("q_cuped", { (s, d) => cuped(Tables.events(s, d)) },
       """WITH e AS (
         | SELECT user_id,
         |  datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
@@ -9178,403 +7640,37 @@ object Analytics {
         | FROM events WHERE event_type = 'purchase' AND value IS NOT NULL),
         |m AS (SELECT CAST(floor((min(day) + max(day)) / 2.0) AS BIGINT)
         |       AS mid FROM e),
-        |c AS (
-        | SELECT CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 4))
-        |    AS BIGINT) % 100 < 50 AS treated,
-        |  day > mid AS post, cents
-        | FROM e, m),
-        |g AS (
-        | SELECT treated, post, count(*) AS n,
-        |  CAST(sum(cents) AS HUGEINT) AS s
-        | FROM c GROUP BY 1, 2),
-        |w AS (
-        | SELECT
-        |  max(CASE WHEN treated AND NOT post THEN n END) AS n_t_pre,
-        |  max(CASE WHEN treated AND post THEN n END) AS n_t_post,
-        |  max(CASE WHEN NOT treated AND NOT post THEN n END) AS n_c_pre,
-        |  max(CASE WHEN NOT treated AND post THEN n END) AS n_c_post,
-        |  max(CASE WHEN treated AND NOT post THEN s END) AS s_t_pre,
-        |  max(CASE WHEN treated AND post THEN s END) AS s_t_post,
-        |  max(CASE WHEN NOT treated AND NOT post THEN s END) AS s_c_pre,
-        |  max(CASE WHEN NOT treated AND post THEN s END) AS s_c_post
-        | FROM g)
-        |SELECT n_t_pre, n_t_post, n_c_pre, n_c_post,
-        | round((CAST(s_t_post AS DOUBLE) / CAST(n_t_post AS DOUBLE) / 100.0
-        |   - CAST(s_t_pre AS DOUBLE) / CAST(n_t_pre AS DOUBLE) / 100.0)
-        |  - (CAST(s_c_post AS DOUBLE) / CAST(n_c_post AS DOUBLE) / 100.0
-        |   - CAST(s_c_pre AS DOUBLE) / CAST(n_c_pre AS DOUBLE) / 100.0), 6)
-        |  AS did_estimate
-        |FROM w""".stripMargin,
-    "q_ratio_ci" ->
-      """WITH pu AS (
+        |p AS (
         | SELECT user_id,
-        |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
-        |   AS BIGINT) AS x,
-        |  CAST(count(*) AS BIGINT) AS y
-        | FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |m AS (
-        | SELECT CAST(count(*) AS HUGEINT) AS n,
-        |  CAST(sum(x) AS HUGEINT) AS sx, CAST(sum(y) AS HUGEINT) AS sy,
-        |  sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx,
-        |  sum(CAST(y AS HUGEINT) * CAST(y AS HUGEINT)) AS syy,
-        |  sum(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy
-        | FROM pu),
-        |t AS (
-        | SELECT CAST(n AS BIGINT) AS n_users,
-        |  CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE) AS r,
-        |  sqrt(((CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE)
-        |     - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-        |       * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))
-        |   + (CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE))
-        |     * (CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE))
-        |     * (CAST(syy AS DOUBLE) / CAST(n AS DOUBLE)
-        |        - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-        |          * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))
-        |   - 2.0 * (CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE))
-        |     * (CAST(sxy AS DOUBLE) / CAST(n AS DOUBLE)
-        |        - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-        |          * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))))
-        |  / (CAST(n AS DOUBLE) * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-        |     * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))) AS se
-        | FROM m)
-        |SELECT n_users, round(r / 100.0, 6) AS ratio,
-        | round(se / 100.0, 6) AS se,
-        | round((r - 1.959964 * se) / 100.0, 6) AS ci_lo,
-        | round((r + 1.959964 * se) / 100.0, 6) AS ci_hi
-        |FROM t""".stripMargin,
-    "q_power_curve" ->
-      """WITH o AS (
-        | SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |  AS cents FROM orders),
-        |m AS (
-        | SELECT CAST(count(*) AS HUGEINT) AS n,
-        |  CAST(sum(cents) AS HUGEINT) AS sx,
-        |  sum(CAST(cents AS HUGEINT) * CAST(cents AS HUGEINT)) AS sxx
-        | FROM o),
-        |s AS (
-        | SELECT * FROM (VALUES ('0.25x', 1, 4), ('0.5x', 1, 2),
-        |  ('1x', 1, 1), ('2x', 2, 1), ('4x', 4, 1))
-        |  AS t(scale, mult_num, mult_den)),
-        |x AS (
-        | SELECT scale,
-        |  (CAST(n AS BIGINT) // 2) * mult_num // mult_den AS n_per_arm,
-        |  CAST(n * sxx - sx * sx AS DOUBLE)
-        |   / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 10000.0 AS variance,
-        |  CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) / 100.0 AS mean
-        | FROM m, s)
-        |SELECT scale, n_per_arm,
-        | round(2.801585 * sqrt(2.0 * variance / CAST(n_per_arm AS DOUBLE)), 6)
-        |  AS mde_abs,
-        | round(2.801585 * sqrt(2.0 * variance / CAST(n_per_arm AS DOUBLE))
-        |  / mean * 100.0, 6) AS mde_rel_pct
-        |FROM x ORDER BY scale""".stripMargin,
-    "q_qte" ->
-      """WITH e AS (
-        | SELECT CASE WHEN CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)),
-        |    1, 4)) AS BIGINT) % 2 = 0 THEN 'a' ELSE 'b' END AS arm, value
-        | FROM events WHERE value IS NOT NULL),
-        |g AS (
-        | SELECT arm, quantile_cont(value, 0.25) AS p25,
-        |  quantile_cont(value, 0.5) AS p50,
-        |  quantile_cont(value, 0.75) AS p75
-        | FROM e GROUP BY 1),
-        |a AS (SELECT * FROM g WHERE arm = 'a'),
-        |b AS (SELECT * FROM g WHERE arm = 'b'),
-        |q AS (
-        | SELECT 'p25' AS quantile, a.p25 AS q_a, b.p25 AS q_b FROM a, b
-        | UNION ALL SELECT 'p50', a.p50, b.p50 FROM a, b
-        | UNION ALL SELECT 'p75', a.p75, b.p75 FROM a, b)
-        |SELECT quantile, q_a, q_b, round(q_b - q_a, 6) AS qte
-        |FROM q ORDER BY quantile""".stripMargin,
-    "q_srm_check" ->
-      """WITH u AS (SELECT DISTINCT user_id FROM events),
-        |arms AS (
-        | SELECT CASE WHEN CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)),
-        |   1, 4)) AS BIGINT) % 2 = 0 THEN 'a' ELSE 'b' END AS arm
-        | FROM u),
-        |c AS (
-        | SELECT
-        |  CAST(COALESCE(sum(CASE WHEN arm = 'a' THEN 1 ELSE 0 END), 0)
-        |   AS BIGINT) AS na,
-        |  CAST(COALESCE(sum(CASE WHEN arm = 'b' THEN 1 ELSE 0 END), 0)
-        |   AS BIGINT) AS nb
-        | FROM arms)
-        |SELECT na, nb,
-        | round((CAST(na AS DOUBLE) - CAST(na + nb AS DOUBLE) / 2.0)
-        |   * (CAST(na AS DOUBLE) - CAST(na + nb AS DOUBLE) / 2.0)
-        |   / (CAST(na + nb AS DOUBLE) / 2.0)
-        |  + (CAST(nb AS DOUBLE) - CAST(na + nb AS DOUBLE) / 2.0)
-        |   * (CAST(nb AS DOUBLE) - CAST(na + nb AS DOUBLE) / 2.0)
-        |   / (CAST(na + nb AS DOUBLE) / 2.0), 6) AS chi2,
-        | ((CAST(na AS DOUBLE) - CAST(na + nb AS DOUBLE) / 2.0)
-        |   * (CAST(na AS DOUBLE) - CAST(na + nb AS DOUBLE) / 2.0)
-        |   / (CAST(na + nb AS DOUBLE) / 2.0)
-        |  + (CAST(nb AS DOUBLE) - CAST(na + nb AS DOUBLE) / 2.0)
-        |   * (CAST(nb AS DOUBLE) - CAST(na + nb AS DOUBLE) / 2.0)
-        |   / (CAST(na + nb AS DOUBLE) / 2.0)) > 3.841459 AS srm_detected
-        |FROM c""".stripMargin,
-    "q_conformal_coverage" ->
-      """WITH e AS (
-        | SELECT event_type, CAST(value AS DOUBLE) AS v,
-        |  CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 4))
-        |   AS BIGINT) % 100 AS b
-        | FROM events WHERE value IS NOT NULL),
-        |tr AS (SELECT * FROM e WHERE b < 50),
-        |cal AS (SELECT * FROM e WHERE b >= 50 AND b < 75),
-        |te AS (SELECT * FROM e WHERE b >= 75),
-        |med AS (SELECT event_type, quantile_cont(v, 0.5) AS m
-        |        FROM tr GROUP BY 1),
-        |cs AS (SELECT abs(v - m) AS sc FROM cal JOIN med USING (event_type)),
-        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n_cal FROM cs),
-        |rk AS (SELECT sc, row_number() OVER (ORDER BY sc) AS rn FROM cs),
-        |qh AS (SELECT min(sc) AS qhat FROM rk, nn
-        |       WHERE rn >= CAST(ceil((n_cal + 1) * 0.9) AS BIGINT)),
-        |cov AS (
-        | SELECT CAST(count(*) AS BIGINT) AS n_test,
-        |  CAST(COALESCE(sum(CASE WHEN abs(v - m) <= qhat THEN 1 ELSE 0 END),
-        |   0) AS BIGINT) AS ncov
-        | FROM te JOIN med USING (event_type) CROSS JOIN qh)
-        |SELECT (SELECT count(*) FROM tr) AS n_train, nn.n_cal, cov.n_test,
-        | round((SELECT qhat FROM qh), 6) AS qhat,
-        | round(CAST(ncov AS DOUBLE) / n_test, 6) AS coverage,
-        | CAST(ncov AS DOUBLE) / n_test >= 0.88 AS covered_at_nominal
-        |FROM nn, cov""".stripMargin,
-    "q_median_ci" ->
-      """WITH v AS (
-        | SELECT CAST(o_totalprice AS DOUBLE) AS v FROM orders
-        | WHERE o_totalprice IS NOT NULL),
-        |r AS (
-        | SELECT v, row_number() OVER (ORDER BY v) AS rn,
-        |  CAST(count(*) OVER () AS BIGINT) AS n
-        | FROM v)
-        |SELECT max(n) AS n,
-        | min(CASE WHEN rn >= (n + 1) // 2 THEN v END) AS median,
-        | min(CASE WHEN rn >= greatest(CAST(floor(
-        |   (CAST(n AS DOUBLE) - 1.959964 * sqrt(CAST(n AS DOUBLE))) / 2.0)
-        |   AS BIGINT), 1) THEN v END) AS ci_lo,
-        | min(CASE WHEN rn >= least(CAST(ceil(
-        |   1.0 + (CAST(n AS DOUBLE) + 1.959964 * sqrt(CAST(n AS DOUBLE)))
-        |    / 2.0) AS BIGINT), n) THEN v END) AS ci_hi,
-        | 0.95 AS conf
-        |FROM r""".stripMargin,
-    "q_neyman_alloc" ->
-      """WITH e AS (
-        | SELECT event_type,
-        |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        | FROM events WHERE value IS NOT NULL),
-        |m AS (
-        | SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(cents) AS HUGEINT) AS sx,
-        |  sum(CAST(cents AS HUGEINT) * CAST(cents AS HUGEINT)) AS sxx
-        | FROM e GROUP BY 1),
-        |w AS (
-        | SELECT event_type, n,
-        |  round(sqrt(CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS DOUBLE)
-        |   / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 10000.0), 6) AS sigma,
-        |  CAST(round(CAST(n AS DOUBLE)
-        |   * sqrt(CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS DOUBLE)
-        |      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 10000.0), 6)
-        |   AS DECIMAL(28,6)) AS w
-        | FROM m),
-        |t AS (SELECT sum(w) AS tw, CAST(sum(n) AS BIGINT) AS tn FROM w)
-        |SELECT event_type, n AS n_rows, sigma,
-        | CAST(floor(1000.0 * CAST(w AS DOUBLE) / CAST(tw AS DOUBLE))
-        |  AS BIGINT) AS neyman_n,
-        | (1000 * n) // tn AS prop_n
-        |FROM w CROSS JOIN t ORDER BY event_type""".stripMargin,
-    "q_mde" ->
-      """WITH o AS (
-        | SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |  AS cents FROM orders),
-        |m AS (
-        | SELECT CAST(count(*) AS HUGEINT) AS n,
-        |  CAST(sum(cents) AS HUGEINT) AS sx,
-        |  sum(CAST(cents AS HUGEINT) * CAST(cents AS HUGEINT)) AS sxx
-        | FROM o)
-        |SELECT CAST(n AS BIGINT) // 2 AS n_per_arm,
-        | round(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) / 100.0, 6) AS mean,
-        | round(CAST(n * sxx - sx * sx AS DOUBLE)
-        |  / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 10000.0, 6) AS variance,
-        | round(2.801585 * sqrt(2.0
-        |  * (CAST(n * sxx - sx * sx AS DOUBLE)
-        |     / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 10000.0)
-        |  / CAST(CAST(n AS BIGINT) // 2 AS DOUBLE)), 6) AS mde_abs,
-        | round(2.801585 * sqrt(2.0
-        |  * (CAST(n * sxx - sx * sx AS DOUBLE)
-        |     / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 10000.0)
-        |  / CAST(CAST(n AS BIGINT) // 2 AS DOUBLE))
-        |  / (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) / 100.0) * 100.0, 6)
-        |  AS mde_rel_pct
-        |FROM m""".stripMargin,
-    "q_design_effect" ->
-      """WITH j AS (
-        | SELECT c_nationkey,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
-        | FROM orders JOIN customer ON o_custkey = c_custkey),
-        |g AS (
-        | SELECT c_nationkey, count(*) AS ng, sum(v) AS sg,
-        |  sum(v * v) AS qg
-        | FROM j GROUP BY 1),
-        |terms AS (
-        | SELECT ng, sg, qg,
-        |  CAST(round(CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE)
-        |   / CAST(ng AS DOUBLE), 6) AS DECIMAL(28,6)) AS tg,
-        |  ng * ng AS ng2
-        | FROM g),
-        |a AS (
-        | SELECT count(*) AS gk, sum(ng) AS n, sum(sg) AS s, sum(qg) AS q,
-        |  sum(tg) AS t, sum(ng2) AS n2
-        | FROM terms),
-        |f AS (
-        | SELECT CAST(gk AS BIGINT) AS g_clusters, CAST(n AS BIGINT)
-        |   AS n_rows,
-        |  CAST(gk AS DOUBLE) AS gd, CAST(n AS DOUBLE) AS nd,
-        |  CAST(t AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-        |   / CAST(n AS DOUBLE) AS ssb,
-        |  CAST(q AS DOUBLE) - CAST(t AS DOUBLE) AS ssw,
-        |  (CAST(n AS DOUBLE) - CAST(n2 AS DOUBLE) / CAST(n AS DOUBLE))
-        |   / (CAST(gk AS DOUBLE) - 1.0) AS n0
-        | FROM a),
-        |i AS (
-        | SELECT g_clusters, n_rows, gd, nd, ssw, n0,
-        |  (ssb / (gd - 1.0) - ssw / (nd - gd))
-        |   / (ssb / (gd - 1.0) + (n0 - 1.0) * (ssw / (nd - gd))) AS icc
-        | FROM f)
-        |SELECT g_clusters, n_rows, round(nd / gd, 6) AS mean_cluster_size,
-        | round(n0, 6) AS n0,
-        | CASE WHEN g_clusters > 1 AND ssw > 0 THEN round(icc, 6) END
-        |  AS icc,
-        | CASE WHEN g_clusters > 1 AND ssw > 0
-        |  THEN round(1.0 + (nd / gd - 1.0) * icc, 6) END AS deff
-        |FROM i""".stripMargin,
-    "q_jackknife_ratio" ->
-      """WITH per AS (
-        | SELECT user_id,
-        |  sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS x,
-        |  count(*) AS y
-        | FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |b AS (
-        | SELECT CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
-        |   AS BIGINT) % 32 AS b,
-        |  sum(x) AS sx, sum(y) AS sy
-        | FROM per GROUP BY 1),
-        |tot AS (SELECT sum(sx) AS tx, sum(sy) AS ty FROM b),
-        |jr AS (
-        | SELECT CAST(round(CAST(t.tx - b.sx AS DOUBLE)
-        |   / CAST(t.ty - b.sy AS DOUBLE) / 100.0, 6)
-        |  AS DECIMAL(18,6)) AS thr
-        | FROM b, tot t),
-        |m1 AS (SELECT count(*) AS bn, sum(thr) AS s1 FROM jr),
-        |v AS (
-        | SELECT max(m.bn) AS bn,
-        |  sum(CAST(round((CAST(thr AS DOUBLE)
-        |    - CAST(m.s1 AS DOUBLE) / CAST(m.bn AS DOUBLE))
-        |   * (CAST(thr AS DOUBLE)
-        |    - CAST(m.s1 AS DOUBLE) / CAST(m.bn AS DOUBLE)), 10)
-        |   AS DECIMAL(28,10))) AS sdev
-        | FROM jr, m1 m),
-        |f AS (
-        | SELECT CAST(v.bn AS BIGINT) AS n_buckets,
-        |  CAST(t.tx AS DOUBLE) / CAST(t.ty AS DOUBLE) / 100.0 AS r,
-        |  sqrt(greatest((CAST(v.bn AS DOUBLE) - 1.0)
-        |    / CAST(v.bn AS DOUBLE) * CAST(v.sdev AS DOUBLE), 0.0)) AS se
-        | FROM v, tot t)
-        |SELECT n_buckets, round(r, 6) AS ratio, round(se, 6) AS se,
-        | round(r - 1.96 * se, 6) AS lo, round(r + 1.96 * se, 6) AS hi
-        |FROM f""".stripMargin,
-    "q_msprt" ->
-      """WITH pu AS (
-        | SELECT user_id,
-        |  CASE WHEN CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)),
-        |   1, 4)) AS BIGINT) % 2 = 0 THEN 'c' ELSE 't' END AS arm,
-        |  min(CAST(ts AS DATE)) AS first_dt,
-        |  min(CASE WHEN event_type = 'purchase' THEN CAST(ts AS DATE)
-        |      END) AS conv_dt
-        | FROM events GROUP BY 1, 2),
-        |days AS (SELECT DISTINCT CAST(ts AS DATE) AS dt FROM events),
-        |grid AS (SELECT dt, arm FROM days,
-        |         (SELECT 'c' AS arm UNION ALL SELECT 't') a),
-        |joins AS (SELECT first_dt AS dt, arm, count(*) AS joined
-        |          FROM pu GROUP BY 1, 2),
-        |convs AS (SELECT conv_dt AS dt, arm, count(*) AS converted
-        |          FROM pu WHERE conv_dt IS NOT NULL GROUP BY 1, 2),
-        |byday AS (
-        | SELECT g.dt, g.arm, coalesce(j.joined, 0) AS joined,
-        |  coalesce(c.converted, 0) AS converted
-        | FROM grid g LEFT JOIN joins j ON g.dt = j.dt AND g.arm = j.arm
-        |  LEFT JOIN convs c ON g.dt = c.dt AND g.arm = c.arm),
-        |cum AS (
-        | SELECT dt, arm,
-        |  sum(joined) OVER (PARTITION BY arm ORDER BY dt) AS n,
-        |  sum(converted) OVER (PARTITION BY arm ORDER BY dt) AS x
-        | FROM byday),
-        |piv AS (
-        | SELECT dt,
-        |  CAST(max(CASE WHEN arm = 'c' THEN n END) AS BIGINT) AS n_c,
-        |  CAST(max(CASE WHEN arm = 'c' THEN x END) AS BIGINT) AS x_c,
-        |  CAST(max(CASE WHEN arm = 't' THEN n END) AS BIGINT) AS n_t,
-        |  CAST(max(CASE WHEN arm = 't' THEN x END) AS BIGINT) AS x_t
-        | FROM cum GROUP BY 1),
-        |stat AS (
-        | SELECT dt, n_c, x_c, n_t, x_t,
-        |  CAST(x_c + x_t AS DOUBLE)
-        |   / (CAST(n_c AS DOUBLE) + CAST(n_t AS DOUBLE)) AS p,
-        |  CAST(x_t AS DOUBLE) / CAST(n_t AS DOUBLE)
-        |   - CAST(x_c AS DOUBLE) / CAST(n_c AS DOUBLE) AS dlt
-        | FROM piv),
-        |s2t AS (
-        | SELECT dt, n_c, x_c, n_t, x_t, dlt,
-        |  p * (1.0 - p) * (1.0 / CAST(n_c AS DOUBLE)
-        |                   + 1.0 / CAST(n_t AS DOUBLE)) AS s2
-        | FROM stat),
-        |lt AS (
-        | SELECT dt, n_c, x_c, n_t, x_t, s2,
-        |  CASE WHEN s2 > 0 THEN
-        |   0.5 * ln(s2 / (s2 + 0.01 * 0.01)) + dlt * dlt * (0.01 * 0.01)
-        |    / (2.0 * s2 * (s2 + 0.01 * 0.01)) END AS llr
-        | FROM s2t),
-        |sg AS (
-        | SELECT dt, n_c, x_c, n_t, x_t,
-        |  CASE WHEN s2 > 0 THEN round(llr, 6) END AS llr,
-        |  CASE WHEN s2 > 0 THEN llr >= ln(1.0 / 0.05)
-        |   ELSE false END AS sig_today
-        | FROM lt)
-        |SELECT dt, n_c, x_c, n_t, x_t, llr, sig_today,
-        | max(CASE WHEN sig_today THEN 1 ELSE 0 END)
-        |  OVER (ORDER BY dt) = 1 AS crossed
-        |FROM sg ORDER BY dt""".stripMargin,
-    "q_simpson_check" ->
-      """WITH j AS (
-        | SELECT o_orderpriority AS stratum,
-        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |   AS cents,
-        |  c_mktsegment = 'AUTOMOBILE' AS ia
-        | FROM orders JOIN customer ON o_custkey = c_custkey
-        | WHERE c_mktsegment IN ('AUTOMOBILE', 'BUILDING')),
-        |per AS (
-        | SELECT stratum,
-        |  sum(CASE WHEN ia THEN 1 ELSE 0 END) AS n_a,
-        |  sum(CASE WHEN ia THEN cents ELSE 0 END) AS sa,
-        |  sum(CASE WHEN ia THEN 0 ELSE 1 END) AS n_b,
-        |  sum(CASE WHEN ia THEN 0 ELSE cents END) AS sb
-        | FROM j GROUP BY 1),
-        |uni AS (
-        | SELECT stratum, n_a, sa, n_b, sb FROM per
-        | UNION ALL
-        | SELECT 'pooled', sum(n_a), sum(sa), sum(n_b), sum(sb) FROM per),
-        |g AS (
-        | SELECT stratum, CAST(n_a AS BIGINT) AS n_a,
-        |  CAST(n_b AS BIGINT) AS n_b,
-        |  CAST(sa AS DOUBLE) / CAST(n_a AS DOUBLE) / 100.0 AS ma,
-        |  CAST(sb AS DOUBLE) / CAST(n_b AS DOUBLE) / 100.0 AS mb
-        | FROM uni),
-        |pd AS (SELECT ma - mb AS pooled_diff FROM g
-        |       WHERE stratum = 'pooled')
-        |SELECT stratum, n_a, n_b, round(ma, 6) AS mean_a,
-        | round(mb, 6) AS mean_b, round(ma - mb, 6) AS diff,
-        | (ma - mb) * pooled_diff < 0 AS opposes_pooled
-        |FROM g, pd ORDER BY stratum""".stripMargin,
-    "q_post_strat" ->
+        |  COALESCE(CAST(sum(CASE WHEN day <= mid THEN cents END) AS HUGEINT),
+        |   0) AS x,
+        |  COALESCE(CAST(sum(CASE WHEN day > mid THEN cents END) AS HUGEINT),
+        |   0) AS y
+        | FROM e, m GROUP BY 1),
+        |mo AS (
+        | SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx, sum(y) AS sy,
+        |  sum(x * x) AS sxx, sum(y * y) AS syy, sum(x * y) AS sxy
+        | FROM p)
+        |SELECT CAST(n AS BIGINT) AS n_users,
+        | CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE) > 0 THEN
+        |  round(CAST(n * sxy - sx * sy AS DOUBLE)
+        |   / CAST(n * sxx - sx * sx AS DOUBLE), 6) END AS theta,
+        | round(CAST(n * syy - sy * sy AS DOUBLE)
+        |  / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 10000.0, 6) AS var_y,
+        | CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE) > 0 THEN
+        |  round((CAST(n * syy - sy * sy AS DOUBLE)
+        |    - CAST(n * sxy - sx * sy AS DOUBLE) * CAST(n * sxy - sx * sy AS DOUBLE)
+        |      / CAST(n * sxx - sx * sx AS DOUBLE))
+        |   / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 10000.0, 6) END AS var_adj,
+        | CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE) > 0
+        |       AND CAST(n * syy - sy * sy AS DOUBLE) > 0 THEN
+        |  round(CAST(n * sxy - sx * sy AS DOUBLE) * CAST(n * sxy - sx * sy AS DOUBLE)
+        |   / CAST(n * sxx - sx * sx AS DOUBLE)
+        |   / CAST(n * syy - sy * sy AS DOUBLE) * 100.0, 6) END
+        |  AS var_reduction_pct
+        |FROM mo""".stripMargin),
+    // Post-stratification adjusted lift (strata + pooled + adjusted rows).
+    Q("q_post_strat", { (s, d) => postStrat(Tables.events(s, d)) },
       """WITH e AS (
         | SELECT user_id,
         |  datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
@@ -9634,8 +7730,290 @@ object Analytics {
         | round(rt, 6) AS rate_t, round(rt - rc, 6) AS lift FROM r
         |UNION ALL
         |SELECT scope, n_users, rate_c, rate_t, lift FROM adj
-        |ORDER BY scope""".stripMargin,
-    "q_cuped" ->
+        |ORDER BY scope""".stripMargin),
+    // Always-valid mSPRT monitor: the day-by-day llr trajectory + flag.
+    Q("q_msprt", { (s, d) => msprt(Tables.events(s, d)) },
+      """WITH pu AS (
+        | SELECT user_id,
+        |  CASE WHEN CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)),
+        |   1, 4)) AS BIGINT) % 2 = 0 THEN 'c' ELSE 't' END AS arm,
+        |  min(CAST(ts AS DATE)) AS first_dt,
+        |  min(CASE WHEN event_type = 'purchase' THEN CAST(ts AS DATE)
+        |      END) AS conv_dt
+        | FROM events GROUP BY 1, 2),
+        |days AS (SELECT DISTINCT CAST(ts AS DATE) AS dt FROM events),
+        |grid AS (SELECT dt, arm FROM days,
+        |         (SELECT 'c' AS arm UNION ALL SELECT 't') a),
+        |joins AS (SELECT first_dt AS dt, arm, count(*) AS joined
+        |          FROM pu GROUP BY 1, 2),
+        |convs AS (SELECT conv_dt AS dt, arm, count(*) AS converted
+        |          FROM pu WHERE conv_dt IS NOT NULL GROUP BY 1, 2),
+        |byday AS (
+        | SELECT g.dt, g.arm, coalesce(j.joined, 0) AS joined,
+        |  coalesce(c.converted, 0) AS converted
+        | FROM grid g LEFT JOIN joins j ON g.dt = j.dt AND g.arm = j.arm
+        |  LEFT JOIN convs c ON g.dt = c.dt AND g.arm = c.arm),
+        |cum AS (
+        | SELECT dt, arm,
+        |  sum(joined) OVER (PARTITION BY arm ORDER BY dt) AS n,
+        |  sum(converted) OVER (PARTITION BY arm ORDER BY dt) AS x
+        | FROM byday),
+        |piv AS (
+        | SELECT dt,
+        |  CAST(max(CASE WHEN arm = 'c' THEN n END) AS BIGINT) AS n_c,
+        |  CAST(max(CASE WHEN arm = 'c' THEN x END) AS BIGINT) AS x_c,
+        |  CAST(max(CASE WHEN arm = 't' THEN n END) AS BIGINT) AS n_t,
+        |  CAST(max(CASE WHEN arm = 't' THEN x END) AS BIGINT) AS x_t
+        | FROM cum GROUP BY 1),
+        |stat AS (
+        | SELECT dt, n_c, x_c, n_t, x_t,
+        |  CAST(x_c + x_t AS DOUBLE)
+        |   / (CAST(n_c AS DOUBLE) + CAST(n_t AS DOUBLE)) AS p,
+        |  CAST(x_t AS DOUBLE) / CAST(n_t AS DOUBLE)
+        |   - CAST(x_c AS DOUBLE) / CAST(n_c AS DOUBLE) AS dlt
+        | FROM piv),
+        |s2t AS (
+        | SELECT dt, n_c, x_c, n_t, x_t, dlt,
+        |  p * (1.0 - p) * (1.0 / CAST(n_c AS DOUBLE)
+        |                   + 1.0 / CAST(n_t AS DOUBLE)) AS s2
+        | FROM stat),
+        |lt AS (
+        | SELECT dt, n_c, x_c, n_t, x_t, s2,
+        |  CASE WHEN s2 > 0 THEN
+        |   0.5 * ln(s2 / (s2 + 0.01 * 0.01)) + dlt * dlt * (0.01 * 0.01)
+        |    / (2.0 * s2 * (s2 + 0.01 * 0.01)) END AS llr
+        | FROM s2t),
+        |sg AS (
+        | SELECT dt, n_c, x_c, n_t, x_t,
+        |  CASE WHEN s2 > 0 THEN round(llr, 6) END AS llr,
+        |  CASE WHEN s2 > 0 THEN llr >= ln(1.0 / 0.05)
+        |   ELSE false END AS sig_today
+        | FROM lt)
+        |SELECT dt, n_c, x_c, n_t, x_t, llr, sig_today,
+        | max(CASE WHEN sig_today THEN 1 ELSE 0 END)
+        |  OVER (ORDER BY dt) = 1 AS crossed
+        |FROM sg ORDER BY dt""".stripMargin),
+    // Delete-one-bucket jackknife SE for revenue/event (vs q_ratio_ci).
+    Q("q_jackknife_ratio", { (s, d) => jackknifeRatio(Tables.events(s, d)) },
+      """WITH per AS (
+        | SELECT user_id,
+        |  sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS x,
+        |  count(*) AS y
+        | FROM events WHERE value IS NOT NULL GROUP BY 1),
+        |b AS (
+        | SELECT CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))
+        |   AS BIGINT) % 32 AS b,
+        |  sum(x) AS sx, sum(y) AS sy
+        | FROM per GROUP BY 1),
+        |tot AS (SELECT sum(sx) AS tx, sum(sy) AS ty FROM b),
+        |jr AS (
+        | SELECT CAST(round(CAST(t.tx - b.sx AS DOUBLE)
+        |   / CAST(t.ty - b.sy AS DOUBLE) / 100.0, 6)
+        |  AS DECIMAL(18,6)) AS thr
+        | FROM b, tot t),
+        |m1 AS (SELECT count(*) AS bn, sum(thr) AS s1 FROM jr),
+        |v AS (
+        | SELECT max(m.bn) AS bn,
+        |  sum(CAST(round((CAST(thr AS DOUBLE)
+        |    - CAST(m.s1 AS DOUBLE) / CAST(m.bn AS DOUBLE))
+        |   * (CAST(thr AS DOUBLE)
+        |    - CAST(m.s1 AS DOUBLE) / CAST(m.bn AS DOUBLE)), 10)
+        |   AS DECIMAL(28,10))) AS sdev
+        | FROM jr, m1 m),
+        |f AS (
+        | SELECT CAST(v.bn AS BIGINT) AS n_buckets,
+        |  CAST(t.tx AS DOUBLE) / CAST(t.ty AS DOUBLE) / 100.0 AS r,
+        |  sqrt(greatest((CAST(v.bn AS DOUBLE) - 1.0)
+        |    / CAST(v.bn AS DOUBLE) * CAST(v.sdev AS DOUBLE), 0.0)) AS se
+        | FROM v, tot t)
+        |SELECT n_buckets, round(r, 6) AS ratio, round(se, 6) AS se,
+        | round(r - 1.96 * se, 6) AS lo, round(r + 1.96 * se, 6) AS hi
+        |FROM f""".stripMargin),
+    // Cluster-randomization ICC + Kish design effect (nation clusters).
+    Q("q_design_effect", { (s, d) =>
+      designEffect(Tables.orders(s, d), Tables.customer(s, d))
+    },
+      """WITH j AS (
+        | SELECT c_nationkey,
+        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
+        | FROM orders JOIN customer ON o_custkey = c_custkey),
+        |g AS (
+        | SELECT c_nationkey, count(*) AS ng, sum(v) AS sg,
+        |  sum(v * v) AS qg
+        | FROM j GROUP BY 1),
+        |terms AS (
+        | SELECT ng, sg, qg,
+        |  CAST(round(CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE)
+        |   / CAST(ng AS DOUBLE), 6) AS DECIMAL(28,6)) AS tg,
+        |  ng * ng AS ng2
+        | FROM g),
+        |a AS (
+        | SELECT count(*) AS gk, sum(ng) AS n, sum(sg) AS s, sum(qg) AS q,
+        |  sum(tg) AS t, sum(ng2) AS n2
+        | FROM terms),
+        |f AS (
+        | SELECT CAST(gk AS BIGINT) AS g_clusters, CAST(n AS BIGINT)
+        |   AS n_rows,
+        |  CAST(gk AS DOUBLE) AS gd, CAST(n AS DOUBLE) AS nd,
+        |  CAST(t AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
+        |   / CAST(n AS DOUBLE) AS ssb,
+        |  CAST(q AS DOUBLE) - CAST(t AS DOUBLE) AS ssw,
+        |  (CAST(n AS DOUBLE) - CAST(n2 AS DOUBLE) / CAST(n AS DOUBLE))
+        |   / (CAST(gk AS DOUBLE) - 1.0) AS n0
+        | FROM a),
+        |i AS (
+        | SELECT g_clusters, n_rows, gd, nd, ssw, n0,
+        |  (ssb / (gd - 1.0) - ssw / (nd - gd))
+        |   / (ssb / (gd - 1.0) + (n0 - 1.0) * (ssw / (nd - gd))) AS icc
+        | FROM f)
+        |SELECT g_clusters, n_rows, round(nd / gd, 6) AS mean_cluster_size,
+        | round(n0, 6) AS n0,
+        | CASE WHEN g_clusters > 1 AND ssw > 0 THEN round(icc, 6) END
+        |  AS icc,
+        | CASE WHEN g_clusters > 1 AND ssw > 0
+        |  THEN round(1.0 + (nd / gd - 1.0) * icc, 6) END AS deff
+        |FROM i""".stripMargin),
+    // Simpson's-paradox audit: segment A vs B mean order value, pooled
+    // and per priority stratum, with the direction-reversal flag.
+    Q("q_simpson_check", { (s, d) =>
+      simpsonCheck(Tables.orders(s, d), Tables.customer(s, d))
+    },
+      """WITH j AS (
+        | SELECT o_orderpriority AS stratum,
+        |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+        |   AS cents,
+        |  c_mktsegment = 'AUTOMOBILE' AS ia
+        | FROM orders JOIN customer ON o_custkey = c_custkey
+        | WHERE c_mktsegment IN ('AUTOMOBILE', 'BUILDING')),
+        |per AS (
+        | SELECT stratum,
+        |  sum(CASE WHEN ia THEN 1 ELSE 0 END) AS n_a,
+        |  sum(CASE WHEN ia THEN cents ELSE 0 END) AS sa,
+        |  sum(CASE WHEN ia THEN 0 ELSE 1 END) AS n_b,
+        |  sum(CASE WHEN ia THEN 0 ELSE cents END) AS sb
+        | FROM j GROUP BY 1),
+        |uni AS (
+        | SELECT stratum, n_a, sa, n_b, sb FROM per
+        | UNION ALL
+        | SELECT 'pooled', sum(n_a), sum(sa), sum(n_b), sum(sb) FROM per),
+        |g AS (
+        | SELECT stratum, CAST(n_a AS BIGINT) AS n_a,
+        |  CAST(n_b AS BIGINT) AS n_b,
+        |  CAST(sa AS DOUBLE) / CAST(n_a AS DOUBLE) / 100.0 AS ma,
+        |  CAST(sb AS DOUBLE) / CAST(n_b AS DOUBLE) / 100.0 AS mb
+        | FROM uni),
+        |pd AS (SELECT ma - mb AS pooled_diff FROM g
+        |       WHERE stratum = 'pooled')
+        |SELECT stratum, n_a, n_b, round(ma, 6) AS mean_a,
+        | round(mb, 6) AS mean_b, round(ma - mb, 6) AS diff,
+        | (ma - mb) * pooled_diff < 0 AS opposes_pooled
+        |FROM g, pd ORDER BY stratum""".stripMargin),
+    // RFM SEGMENTATION (Hughes 1994; the classic CRM cube): per-user
+    // Recency / Frequency / Monetary, quartile-scored 1..4 through the
+    // distributed exact-percentile engine (quantile_cont parity, the
+    // q_decile_report pattern), then segment counts. Everything after
+    // the per-user aggregate runs on user-cardinality frames; the nine
+    // thresholds ride one broadcast row.
+    Q("q_rfm", { (s, d) =>
+      import graft.CacheScope.TrackedDataset
+      val ev = Tables.events(s, d)
+        .filter(col("event_type") === "purchase" && col("value").isNotNull)
+        .select(col("user_id"), to_date(col("ts")).as("dt"),
+          (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
+      val mx = ev.agg(max(col("dt")).as("mx"))
+      val per = ev.crossJoin(broadcast(mx))
+        .groupBy("user_id")
+        .agg(datediff(max(col("mx")), max(col("dt"))).cast("double").as("r"),
+          count(lit(1)).cast("double").as("f"),
+          sum(col("cents")).cast("double").as("m"))
+        .coalesce(1).persistTracked() // user-cardinality; see markov note
+      val qs = Seq(0.25, 0.5, 0.75)
+      def thr(c: String) = exactPercentiles(per, c,
+        qs.zipWithIndex.map { case (q, i) => s"$c${i + 1}" -> q })
+      def score(c: String) = lit(1) +
+        (1 to 3).map(i => when(col(c) > col(s"$c$i"), 1).otherwise(0))
+          .reduce(_ + _)
+      per.crossJoin(broadcast(thr("r"))).crossJoin(broadcast(thr("f")))
+        .crossJoin(broadcast(thr("m")))
+        .select(score("r").as("r_score"), score("f").as("f_score"),
+          score("m").as("m_score"))
+        .groupBy("r_score", "f_score", "m_score")
+        .agg(count(lit(1)).as("n_users"))
+        .orderBy("r_score", "f_score", "m_score")
+    }, {
+      val caseFor = (c: String) => s"1 + (CASE WHEN $c > ${c}1 THEN 1 ELSE 0 END" +
+        s" + CASE WHEN $c > ${c}2 THEN 1 ELSE 0 END" +
+        s" + CASE WHEN $c > ${c}3 THEN 1 ELSE 0 END)"
+      val thrCols = Seq("r", "f", "m").flatMap { c =>
+        Seq(0.25, 0.5, 0.75).zipWithIndex.map { case (q, i) =>
+          s"quantile_cont($c, $q) AS $c${i + 1}" }
+      }.mkString(", ")
+      s"""WITH e AS (
+         | SELECT user_id, CAST(ts AS DATE) AS dt,
+         |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+         | FROM events WHERE event_type = 'purchase' AND value IS NOT NULL),
+         |mx AS (SELECT max(dt) AS mx FROM e),
+         |p AS (
+         | SELECT user_id,
+         |  CAST(datediff('day', max(dt), max(mx)) AS DOUBLE) AS r,
+         |  CAST(count(*) AS DOUBLE) AS f,
+         |  CAST(sum(cents) AS DOUBLE) AS m
+         | FROM e, mx GROUP BY 1),
+         |t AS (SELECT $thrCols FROM p)
+         |SELECT ${caseFor("r")} AS r_score, ${caseFor("f")} AS f_score,
+         | ${caseFor("m")} AS m_score, count(*) AS n_users
+         |FROM p, t GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin
+    }),
+    // KAPLAN-MEIER SURVIVAL over user activity spans (Kaplan & Meier
+    // 1958): duration = last-minus-first active day; users whose last
+    // activity touches the corpus boundary are right-CENSORED (they count
+    // in the at-risk denominator, never as churn). The KM product folds
+    // as a cumulative DECIMAL sum of 6dp-rounded ln terms over the
+    // duration spine (order-independent; a raw double Π would drift) —
+    // the spine is duration-bounded (≤ calendar days), so both
+    // unpartitioned windows run on a provably small frame. A d=n step
+    // drives survival to exact 0 via the flag, not ln(0).
+    Q("q_kaplan_meier", { (s, d) => kaplanMeier(Tables.events(s, d)) },
+      ("WITH " + kmCtesSql + "\n" +
+        """SELECT dur, n_at_risk, d,
+          | CASE WHEN dead = 1 THEN 0.0
+          |  ELSE round(exp(CAST(cuml AS DOUBLE)), 6) END AS survival
+          |FROM c WHERE d > 0 ORDER BY dur""".stripMargin)),
+    // DIFFERENCE-IN-DIFFERENCES (Card & Krueger 1994 canonical form):
+    // deterministic md5 treatment split × pre/post half-window, four
+    // cell means from ONE map-side-combined aggregate over purchases,
+    // effect = (T_post − T_pre) − (C_post − C_pre). Cell sums are exact
+    // cents; the four divisions happen once on the single result row.
+    Q("q_did", { (s, d) =>
+      val ev = Tables.events(s, d)
+        .filter(col("event_type") === "purchase" && col("value").isNotNull)
+        .select(col("user_id"),
+          datediff(to_date(col("ts")), lit("1970-01-01")).as("day"),
+          (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
+      val mid = ev.agg(((min(col("day")) + max(col("day"))) / 2)
+        .cast("long").as("mid"))
+      val bucket = conv(substring(md5(col("user_id").cast("string")), 1, 4),
+        16, 10).cast("long") % 100
+      val cells = ev.crossJoin(broadcast(mid))
+        .select((bucket < 50).as("treated"), (col("day") > col("mid")).as("post"),
+          col("cents"))
+        .groupBy("treated", "post")
+        .agg(count(lit(1)).as("n"),
+          sum(col("cents").cast(DecimalType(38, 0))).as("s"))
+      def cell(t: Boolean, p: Boolean, c: String) =
+        max(when(col("treated") === t && col("post") === p, col(c)))
+      val one = cells.agg(
+        cell(true, false, "n").as("n_t_pre"), cell(true, true, "n").as("n_t_post"),
+        cell(false, false, "n").as("n_c_pre"), cell(false, true, "n").as("n_c_post"),
+        cell(true, false, "s").as("s_t_pre"), cell(true, true, "s").as("s_t_post"),
+        cell(false, false, "s").as("s_c_pre"), cell(false, true, "s").as("s_c_post"))
+      def mean(sc: String, nc: String) =
+        col(sc).cast("double") / col(nc).cast("double") / 100.0
+      one.select(col("n_t_pre"), col("n_t_post"), col("n_c_pre"), col("n_c_post"),
+        round((mean("s_t_post", "n_t_post") - mean("s_t_pre", "n_t_pre")) -
+          (mean("s_c_post", "n_c_post") - mean("s_c_pre", "n_c_pre")), 6)
+          .as("did_estimate"))
+    },
       """WITH e AS (
         | SELECT user_id,
         |  datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day,
@@ -9643,36 +8021,532 @@ object Analytics {
         | FROM events WHERE event_type = 'purchase' AND value IS NOT NULL),
         |m AS (SELECT CAST(floor((min(day) + max(day)) / 2.0) AS BIGINT)
         |       AS mid FROM e),
-        |p AS (
+        |c AS (
+        | SELECT CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 4))
+        |    AS BIGINT) % 100 < 50 AS treated,
+        |  day > mid AS post, cents
+        | FROM e, m),
+        |g AS (
+        | SELECT treated, post, count(*) AS n,
+        |  CAST(sum(cents) AS HUGEINT) AS s
+        | FROM c GROUP BY 1, 2),
+        |w AS (
+        | SELECT
+        |  max(CASE WHEN treated AND NOT post THEN n END) AS n_t_pre,
+        |  max(CASE WHEN treated AND post THEN n END) AS n_t_post,
+        |  max(CASE WHEN NOT treated AND NOT post THEN n END) AS n_c_pre,
+        |  max(CASE WHEN NOT treated AND post THEN n END) AS n_c_post,
+        |  max(CASE WHEN treated AND NOT post THEN s END) AS s_t_pre,
+        |  max(CASE WHEN treated AND post THEN s END) AS s_t_post,
+        |  max(CASE WHEN NOT treated AND NOT post THEN s END) AS s_c_pre,
+        |  max(CASE WHEN NOT treated AND post THEN s END) AS s_c_post
+        | FROM g)
+        |SELECT n_t_pre, n_t_post, n_c_pre, n_c_post,
+        | round((CAST(s_t_post AS DOUBLE) / CAST(n_t_post AS DOUBLE) / 100.0
+        |   - CAST(s_t_pre AS DOUBLE) / CAST(n_t_pre AS DOUBLE) / 100.0)
+        |  - (CAST(s_c_post AS DOUBLE) / CAST(n_c_post AS DOUBLE) / 100.0
+        |   - CAST(s_c_pre AS DOUBLE) / CAST(n_c_pre AS DOUBLE) / 100.0), 6)
+        |  AS did_estimate
+        |FROM w""".stripMargin),
+    // MINIMUM DETECTABLE EFFECT at alpha=0.05 / power=0.8 for a
+    // two-arm split of the order stream — the "is this experiment even
+    // worth running" scalar every platform computes next to q_ab_test:
+    // MDE = (z_{0.975} + z_{0.8}) * sqrt(2 sigma^2 / n). One exact-moment
+    // aggregate; constants are 6dp literals shared with the oracle.
+    Q("q_mde", { (s, d) =>
+      val o = Tables.orders(s, d)
+        .select((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
+          .cast("long").as("cents"))
+      def dec(c: Column) = c.cast(DecimalType(38, 0))
+      val m = o.agg(count(lit(1)).as("n"), sum(dec(col("cents"))).as("sx"),
+        sum(dec(col("cents")) * dec(col("cents"))).as("sxx"))
+      val nD = dec(col("n"))
+      val vx = (nD * col("sxx") - col("sx") * col("sx")).cast("double")
+      val n2 = col("n").cast("double") * col("n").cast("double")
+      val variance = vx / n2 / 10000.0 // dollars^2, population
+      val mean = col("sx").cast("double") / col("n").cast("double") / 100.0
+      val nArm = expr("n div 2")
+      val mde = lit(2.801585) * // z_{0.975} + z_{0.8}, 6dp literal
+        sqrt(lit(2.0) * variance / nArm.cast("double"))
+      m.select(nArm.as("n_per_arm"), round(mean, 6).as("mean"),
+        round(variance, 6).as("variance"),
+        round(mde, 6).as("mde_abs"),
+        round(mde / mean * 100.0, 6).as("mde_rel_pct"))
+    },
+      """WITH o AS (
+        | SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+        |  AS cents FROM orders),
+        |m AS (
+        | SELECT CAST(count(*) AS HUGEINT) AS n,
+        |  CAST(sum(cents) AS HUGEINT) AS sx,
+        |  sum(CAST(cents AS HUGEINT) * CAST(cents AS HUGEINT)) AS sxx
+        | FROM o)
+        |SELECT CAST(n AS BIGINT) // 2 AS n_per_arm,
+        | round(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) / 100.0, 6) AS mean,
+        | round(CAST(n * sxx - sx * sx AS DOUBLE)
+        |  / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 10000.0, 6) AS variance,
+        | round(2.801585 * sqrt(2.0
+        |  * (CAST(n * sxx - sx * sx AS DOUBLE)
+        |     / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 10000.0)
+        |  / CAST(CAST(n AS BIGINT) // 2 AS DOUBLE)), 6) AS mde_abs,
+        | round(2.801585 * sqrt(2.0
+        |  * (CAST(n * sxx - sx * sx AS DOUBLE)
+        |     / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 10000.0)
+        |  / CAST(CAST(n AS BIGINT) // 2 AS DOUBLE))
+        |  / (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) / 100.0) * 100.0, 6)
+        |  AS mde_rel_pct
+        |FROM m""".stripMargin),
+    // RATIO-METRIC CI via the DELTA METHOD (Deng et al. 2017 "Trustworthy
+    // online controlled experiments" lineage): most product metrics are
+    // ratios of user-level sums (revenue per event here, r = ΣX/ΣY), and
+    // naive row-level variance is wrong because the unit of randomization
+    // is the USER. SE² = (varX + r²·varY − 2r·covXY) / (n·ȳ²) from
+    // user-level moments. Every moment is an exact integer/decimal sum
+    // (cents; X², XY, Y² fit DECIMAL(38,0) at any realistic scale), then
+    // ONE double expression tree for r, SE and the 95% bounds — the
+    // analytical companion to q_bootstrap_ci at a fraction of the cost
+    // (one pass, no replicates).
+    Q("q_ratio_ci", { (s, d) =>
+      val perUser = Tables.events(s, d).filter(col("value").isNotNull)
+        .select(col("user_id"),
+          (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("xc"))
+        .groupBy("user_id")
+        .agg(sum(col("xc")).as("x"), count(lit(1)).as("y"))
+      def dec(c: Column) = c.cast(DecimalType(38, 0))
+      val m = perUser.agg(count(lit(1)).as("n"),
+        sum(dec(col("x"))).as("sx"), sum(dec(col("y"))).as("sy"),
+        sum(dec(col("x")) * dec(col("x"))).as("sxx"),
+        sum(dec(col("y")) * dec(col("y"))).as("syy"),
+        sum(dec(col("x")) * dec(col("y"))).as("sxy"))
+      val nD = col("n").cast("double")
+      val xb = col("sx").cast("double") / nD
+      val yb = col("sy").cast("double") / nD
+      val varX = col("sxx").cast("double") / nD - xb * xb
+      val varY = col("syy").cast("double") / nD - yb * yb
+      val covXY = col("sxy").cast("double") / nD - xb * yb
+      val r = col("sx").cast("double") / col("sy").cast("double")
+      val se = sqrt((varX + r * r * varY - lit(2.0) * r * covXY) /
+        (nD * yb * yb))
+      m.select(col("n").as("n_users"),
+          round(r / 100.0, 6).as("ratio"),
+          round(se / 100.0, 6).as("se"),
+          round((r - lit(1.959964) * se) / 100.0, 6).as("ci_lo"),
+          round((r + lit(1.959964) * se) / 100.0, 6).as("ci_hi"))
+    },
+      """WITH pu AS (
         | SELECT user_id,
-        |  COALESCE(CAST(sum(CASE WHEN day <= mid THEN cents END) AS HUGEINT),
-        |   0) AS x,
-        |  COALESCE(CAST(sum(CASE WHEN day > mid THEN cents END) AS HUGEINT),
-        |   0) AS y
-        | FROM e, m GROUP BY 1),
-        |mo AS (
-        | SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx, sum(y) AS sy,
-        |  sum(x * x) AS sxx, sum(y * y) AS syy, sum(x * y) AS sxy
-        | FROM p)
-        |SELECT CAST(n AS BIGINT) AS n_users,
-        | CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE) > 0 THEN
-        |  round(CAST(n * sxy - sx * sy AS DOUBLE)
-        |   / CAST(n * sxx - sx * sx AS DOUBLE), 6) END AS theta,
-        | round(CAST(n * syy - sy * sy AS DOUBLE)
-        |  / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 10000.0, 6) AS var_y,
-        | CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE) > 0 THEN
-        |  round((CAST(n * syy - sy * sy AS DOUBLE)
-        |    - CAST(n * sxy - sx * sy AS DOUBLE) * CAST(n * sxy - sx * sy AS DOUBLE)
-        |      / CAST(n * sxx - sx * sx AS DOUBLE))
-        |   / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 10000.0, 6) END AS var_adj,
-        | CASE WHEN CAST(n * sxx - sx * sx AS DOUBLE) > 0
-        |       AND CAST(n * syy - sy * sy AS DOUBLE) > 0 THEN
-        |  round(CAST(n * sxy - sx * sy AS DOUBLE) * CAST(n * sxy - sx * sy AS DOUBLE)
-        |   / CAST(n * sxx - sx * sx AS DOUBLE)
-        |   / CAST(n * syy - sy * sy AS DOUBLE) * 100.0, 6) END
-        |  AS var_reduction_pct
-        |FROM mo""".stripMargin,
-    "q_bootstrap_ci" -> {
+        |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
+        |   AS BIGINT) AS x,
+        |  CAST(count(*) AS BIGINT) AS y
+        | FROM events WHERE value IS NOT NULL GROUP BY 1),
+        |m AS (
+        | SELECT CAST(count(*) AS HUGEINT) AS n,
+        |  CAST(sum(x) AS HUGEINT) AS sx, CAST(sum(y) AS HUGEINT) AS sy,
+        |  sum(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx,
+        |  sum(CAST(y AS HUGEINT) * CAST(y AS HUGEINT)) AS syy,
+        |  sum(CAST(x AS HUGEINT) * CAST(y AS HUGEINT)) AS sxy
+        | FROM pu),
+        |t AS (
+        | SELECT CAST(n AS BIGINT) AS n_users,
+        |  CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE) AS r,
+        |  sqrt(((CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE)
+        |     - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
+        |       * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))
+        |   + (CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE))
+        |     * (CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE))
+        |     * (CAST(syy AS DOUBLE) / CAST(n AS DOUBLE)
+        |        - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
+        |          * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))
+        |   - 2.0 * (CAST(sx AS DOUBLE) / CAST(sy AS DOUBLE))
+        |     * (CAST(sxy AS DOUBLE) / CAST(n AS DOUBLE)
+        |        - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
+        |          * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))))
+        |  / (CAST(n AS DOUBLE) * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
+        |     * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))) AS se
+        | FROM m)
+        |SELECT n_users, round(r / 100.0, 6) AS ratio,
+        | round(se / 100.0, 6) AS se,
+        | round((r - 1.959964 * se) / 100.0, 6) AS ci_lo,
+        | round((r + 1.959964 * se) / 100.0, 6) AS ci_hi
+        |FROM t""".stripMargin),
+
+    // POWER CURVE — q_mde's scalar generalized to the planning table:
+    // the minimum detectable effect at n/4, n/2, n, 2n and 4n per-arm
+    // sample sizes (same alpha .05 / power .8 constant, same exact
+    // moments, one scan) — the "how long must this experiment run"
+    // readout. The n-multiples explode from a 5-element literal array,
+    // so the cost over q_mde is five map-side rows.
+    Q("q_power_curve", { (s, d) =>
+      val o = Tables.orders(s, d)
+        .select((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
+          .cast("long").as("cents"))
+      def dec(c: Column) = c.cast(DecimalType(38, 0))
+      val m = o.agg(count(lit(1)).as("n"), sum(dec(col("cents"))).as("sx"),
+        sum(dec(col("cents")) * dec(col("cents"))).as("sxx"))
+      val vx = (dec(col("n")) * col("sxx") - col("sx") * col("sx"))
+        .cast("double")
+      val n2 = col("n").cast("double") * col("n").cast("double")
+      val variance = vx / n2 / 10000.0
+      val mean = col("sx").cast("double") / col("n").cast("double") / 100.0
+      val nArm = expr("(n div 2) * mult_num div mult_den")
+      val mde = lit(2.801585) *
+        sqrt(lit(2.0) * variance / nArm.cast("double"))
+      m.select(col("n"), col("sx"), col("sxx"),
+          explode(array(
+            struct(lit("0.25x").as("scale"), lit(1L).as("mult_num"), lit(4L).as("mult_den")),
+            struct(lit("0.5x").as("scale"), lit(1L).as("mult_num"), lit(2L).as("mult_den")),
+            struct(lit("1x").as("scale"), lit(1L).as("mult_num"), lit(1L).as("mult_den")),
+            struct(lit("2x").as("scale"), lit(2L).as("mult_num"), lit(1L).as("mult_den")),
+            struct(lit("4x").as("scale"), lit(4L).as("mult_num"), lit(1L).as("mult_den")))).as("s"))
+        .select(col("n"), col("sx"), col("sxx"),
+          col("s.scale").as("scale"), col("s.mult_num").as("mult_num"),
+          col("s.mult_den").as("mult_den"))
+        .select(col("scale"), nArm.as("n_per_arm"),
+          round(mde, 6).as("mde_abs"),
+          round(mde / mean * 100.0, 6).as("mde_rel_pct"))
+        .orderBy("scale")
+    },
+      """WITH o AS (
+        | SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+        |  AS cents FROM orders),
+        |m AS (
+        | SELECT CAST(count(*) AS HUGEINT) AS n,
+        |  CAST(sum(cents) AS HUGEINT) AS sx,
+        |  sum(CAST(cents AS HUGEINT) * CAST(cents AS HUGEINT)) AS sxx
+        | FROM o),
+        |s AS (
+        | SELECT * FROM (VALUES ('0.25x', 1, 4), ('0.5x', 1, 2),
+        |  ('1x', 1, 1), ('2x', 2, 1), ('4x', 4, 1))
+        |  AS t(scale, mult_num, mult_den)),
+        |x AS (
+        | SELECT scale,
+        |  (CAST(n AS BIGINT) // 2) * mult_num // mult_den AS n_per_arm,
+        |  CAST(n * sxx - sx * sx AS DOUBLE)
+        |   / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 10000.0 AS variance,
+        |  CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) / 100.0 AS mean
+        | FROM m, s)
+        |SELECT scale, n_per_arm,
+        | round(2.801585 * sqrt(2.0 * variance / CAST(n_per_arm AS DOUBLE)), 6)
+        |  AS mde_abs,
+        | round(2.801585 * sqrt(2.0 * variance / CAST(n_per_arm AS DOUBLE))
+        |  / mean * 100.0, 6) AS mde_rel_pct
+        |FROM x ORDER BY scale""".stripMargin),
+
+    // QUANTILE TREATMENT EFFECTS — effects beyond the mean: the per-arm
+    // exact p25/p50/p75 (the distributed X4 percentile engine, grouped
+    // by the md5 arm assignment) and their differences. A treatment that
+    // moves the tail but not the median (or vice versa) is invisible to
+    // q_ab_test's mean difference; QTE is the standard readout for it.
+    Q("q_qte", { (s, d) =>
+      val bucket = conv(substring(md5(col("user_id").cast("string")), 1, 4),
+        16, 10).cast("long") % 2
+      val ev = Tables.events(s, d).filter(col("value").isNotNull)
+        .select(when(bucket === 0, "a").otherwise("b").as("arm"), col("value"))
+      val g = groupedExactPercentiles(ev, "arm", "value",
+        Seq("p25" -> 0.25, "p50" -> 0.5, "p75" -> 0.75))
+      val a = g.filter(col("arm") === "a")
+        .select(col("p25").as("a25"), col("p50").as("a50"), col("p75").as("a75"))
+      val b = g.filter(col("arm") === "b")
+        .select(col("p25").as("b25"), col("p50").as("b50"), col("p75").as("b75"))
+      a.crossJoin(broadcast(b))
+        .selectExpr("stack(3, 'p25', a25, b25, 'p50', a50, b50, " +
+          "'p75', a75, b75) as (quantile, q_a, q_b)")
+        .select(col("quantile"), col("q_a"), col("q_b"),
+          round(col("q_b") - col("q_a"), 6).as("qte"))
+        .orderBy("quantile")
+    },
+      """WITH e AS (
+        | SELECT CASE WHEN CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)),
+        |    1, 4)) AS BIGINT) % 2 = 0 THEN 'a' ELSE 'b' END AS arm, value
+        | FROM events WHERE value IS NOT NULL),
+        |g AS (
+        | SELECT arm, quantile_cont(value, 0.25) AS p25,
+        |  quantile_cont(value, 0.5) AS p50,
+        |  quantile_cont(value, 0.75) AS p75
+        | FROM e GROUP BY 1),
+        |a AS (SELECT * FROM g WHERE arm = 'a'),
+        |b AS (SELECT * FROM g WHERE arm = 'b'),
+        |q AS (
+        | SELECT 'p25' AS quantile, a.p25 AS q_a, b.p25 AS q_b FROM a, b
+        | UNION ALL SELECT 'p50', a.p50, b.p50 FROM a, b
+        | UNION ALL SELECT 'p75', a.p75, b.p75 FROM a, b)
+        |SELECT quantile, q_a, q_b, round(q_b - q_a, 6) AS qte
+        |FROM q ORDER BY quantile""".stripMargin),
+
+    // SAMPLE-RATIO MISMATCH guardrail (the first trust check of every
+    // experiment readout): md5-split users 50/50 (the q_ab_test
+    // assignment), then χ² with 1 dof against the expected split —
+    // χ² > 3.841459 (95%) flags a broken randomizer/logging pipe before
+    // anyone reads the metric. Exact integer counts; one double tree.
+    Q("q_srm_check", { (s, d) =>
+      val bucket = conv(substring(md5(col("user_id").cast("string")), 1, 4),
+        16, 10).cast("long") % 2
+      val c = Tables.events(s, d)
+        .select(col("user_id")).distinct()
+        .select(when(bucket === 0, "a").otherwise("b").as("arm"))
+        .groupBy("arm").agg(count(lit(1)).as("cnt"))
+      val w = c.agg(
+        coalesce(sum(when(col("arm") === "a", col("cnt"))), lit(0L)).as("na"),
+        coalesce(sum(when(col("arm") === "b", col("cnt"))), lit(0L)).as("nb"))
+      val nD = (col("na") + col("nb")).cast("double")
+      val e = nD / 2.0
+      val chi2 = (col("na").cast("double") - e) * (col("na").cast("double") - e) / e +
+        (col("nb").cast("double") - e) * (col("nb").cast("double") - e) / e
+      w.select(col("na"), col("nb"), round(chi2, 6).as("chi2"),
+        (chi2 > 3.841459).as("srm_detected"))
+    },
+      """WITH u AS (SELECT DISTINCT user_id FROM events),
+        |arms AS (
+        | SELECT CASE WHEN CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)),
+        |   1, 4)) AS BIGINT) % 2 = 0 THEN 'a' ELSE 'b' END AS arm
+        | FROM u),
+        |c AS (
+        | SELECT
+        |  CAST(COALESCE(sum(CASE WHEN arm = 'a' THEN 1 ELSE 0 END), 0)
+        |   AS BIGINT) AS na,
+        |  CAST(COALESCE(sum(CASE WHEN arm = 'b' THEN 1 ELSE 0 END), 0)
+        |   AS BIGINT) AS nb
+        | FROM arms)
+        |SELECT na, nb,
+        | round((CAST(na AS DOUBLE) - CAST(na + nb AS DOUBLE) / 2.0)
+        |   * (CAST(na AS DOUBLE) - CAST(na + nb AS DOUBLE) / 2.0)
+        |   / (CAST(na + nb AS DOUBLE) / 2.0)
+        |  + (CAST(nb AS DOUBLE) - CAST(na + nb AS DOUBLE) / 2.0)
+        |   * (CAST(nb AS DOUBLE) - CAST(na + nb AS DOUBLE) / 2.0)
+        |   / (CAST(na + nb AS DOUBLE) / 2.0), 6) AS chi2,
+        | ((CAST(na AS DOUBLE) - CAST(na + nb AS DOUBLE) / 2.0)
+        |   * (CAST(na AS DOUBLE) - CAST(na + nb AS DOUBLE) / 2.0)
+        |   / (CAST(na + nb AS DOUBLE) / 2.0)
+        |  + (CAST(nb AS DOUBLE) - CAST(na + nb AS DOUBLE) / 2.0)
+        |   * (CAST(nb AS DOUBLE) - CAST(na + nb AS DOUBLE) / 2.0)
+        |   / (CAST(na + nb AS DOUBLE) / 2.0)) > 3.841459 AS srm_detected
+        |FROM c""".stripMargin),
+
+    // DISTRIBUTION-FREE MEDIAN CI (order statistics; Hahn & Meeker):
+    // the 95% CI for the median needs NO bootstrap and no normality —
+    // binomial order-statistic ranks l = ⌊(n − z√n)/2⌋ and
+    // u = ⌈1 + (n + z√n)/2⌉ bracket it (normal approximation to the
+    // binomial ranks, the standard large-n form). Rank selection runs on
+    // the DISTRIBUTED cumulative-value frame (X4's range-partitioned
+    // percentile shape — min v with cum ≥ rank; no single-task sort, no
+    // value buffering), so the whole CI costs the same as one exact
+    // percentile pass. Contrast with q_bootstrap_ci: that one re-weights
+    // the data B times for the MEAN; this reads it once for the median.
+    // SPLIT CONFORMAL PREDICTION (Papadopoulos et al. 2002; Vovk et al.
+    // 2005; Angelopoulos & Bates 2021 survey): the distribution-free
+    // prediction-interval recipe — fit any predictor on a train split
+    // (here: per-event-type exact median), take the ⌈(n+1)(1−α)⌉-th
+    // smallest nonconformity score |y − ŷ| on a CALIBRATION split, and
+    // intervals ŷ ± q̂ cover new points with probability ≥ 1−α, no
+    // distributional assumptions. The query MEASURES realized coverage on
+    // a held-out test split (α = 0.1; the md5 hash split is the
+    // q_group_split idiom) rather than trusting the theorem.
+    // Scale shape: the predictor is a type-cardinality broadcast; q̂ is
+    // ONE order statistic selected by rank on the X4 range-partitioned
+    // cumulative frame (no single-task sort at any calibration size);
+    // coverage is one counting pass.
+    Q("q_conformal_coverage", { (s, d) =>
+      val bucket = conv(substring(md5(col("event_id").cast("string")), 1, 4),
+        16, 10).cast("long") % 100
+      // persisted: the split frame feeds the predictor fit, n_train, the
+      // calibration scores, and the coverage pass — four consumers
+      val e = Tables.events(s, d).filter(col("value").isNotNull)
+        .select(col("event_type"), col("value").cast("double").as("v"),
+          bucket.as("b"))
+        .persistTracked()
+      val tr = e.filter(col("b") < 50)
+      val cal = e.filter(col("b") >= 50 && col("b") < 75)
+      val te = e.filter(col("b") >= 75)
+      val med = groupedExactPercentiles(tr, "event_type", "v", Seq("m" -> 0.5))
+      val cs = cal.join(broadcast(med), Seq("event_type"))
+        .select(abs(col("v") - col("m")).as("sc"))
+      val cum = cumulativeValueCounts(cs, Nil, "sc")
+      val k = ceil((col("n") + 1) * lit(0.9))
+      val qh = cum.agg(max(col("n")).as("n_cal"),
+        min(when(col("cum") >= k, col("v"))).as("qhat"))
+      val cov = te.join(broadcast(med), Seq("event_type"))
+        .crossJoin(broadcast(qh))
+        .groupBy("n_cal", "qhat")
+        .agg(count(lit(1)).as("n_test"),
+          coalesce(sum(when(abs(col("v") - col("m")) <= col("qhat"), 1L)),
+            lit(0L)).as("ncov"))
+      tr.agg(count(lit(1)).as("n_train"))
+        .crossJoin(broadcast(cov))
+        .select(col("n_train"), col("n_cal"), col("n_test"),
+          round(col("qhat"), 6).as("qhat"),
+          round(col("ncov").cast("double") / col("n_test"), 6).as("coverage"),
+          (col("ncov").cast("double") / col("n_test") >= 0.88)
+            .as("covered_at_nominal"))
+    },
+      """WITH e AS (
+        | SELECT event_type, CAST(value AS DOUBLE) AS v,
+        |  CAST(('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 4))
+        |   AS BIGINT) % 100 AS b
+        | FROM events WHERE value IS NOT NULL),
+        |tr AS (SELECT * FROM e WHERE b < 50),
+        |cal AS (SELECT * FROM e WHERE b >= 50 AND b < 75),
+        |te AS (SELECT * FROM e WHERE b >= 75),
+        |med AS (SELECT event_type, quantile_cont(v, 0.5) AS m
+        |        FROM tr GROUP BY 1),
+        |cs AS (SELECT abs(v - m) AS sc FROM cal JOIN med USING (event_type)),
+        |nn AS (SELECT CAST(count(*) AS BIGINT) AS n_cal FROM cs),
+        |rk AS (SELECT sc, row_number() OVER (ORDER BY sc) AS rn FROM cs),
+        |qh AS (SELECT min(sc) AS qhat FROM rk, nn
+        |       WHERE rn >= CAST(ceil((n_cal + 1) * 0.9) AS BIGINT)),
+        |cov AS (
+        | SELECT CAST(count(*) AS BIGINT) AS n_test,
+        |  CAST(COALESCE(sum(CASE WHEN abs(v - m) <= qhat THEN 1 ELSE 0 END),
+        |   0) AS BIGINT) AS ncov
+        | FROM te JOIN med USING (event_type) CROSS JOIN qh)
+        |SELECT (SELECT count(*) FROM tr) AS n_train, nn.n_cal, cov.n_test,
+        | round((SELECT qhat FROM qh), 6) AS qhat,
+        | round(CAST(ncov AS DOUBLE) / n_test, 6) AS coverage,
+        | CAST(ncov AS DOUBLE) / n_test >= 0.88 AS covered_at_nominal
+        |FROM nn, cov""".stripMargin),
+    Q("q_median_ci", { (s, d) =>
+      val cum = cumulativeValueCounts(Tables.orders(s, d), Nil, "o_totalprice")
+      val nD = col("n").cast("double")
+      val z = lit(1.959964)
+      val lRank = greatest(floor((nD - z * sqrt(nD)) / 2.0), lit(1L))
+      val uRank = least(ceil(lit(1.0) + (nD + z * sqrt(nD)) / 2.0),
+        col("n"))
+      val mRank = expr("(n + 1) div 2") // type-1 lower median rank
+      cum.agg(max(col("n")).as("n"),
+          min(when(col("cum") >= mRank, col("v"))).as("median"),
+          min(when(col("cum") >= lRank, col("v"))).as("ci_lo"),
+          min(when(col("cum") >= uRank, col("v"))).as("ci_hi"))
+        .select(col("n"), col("median"), col("ci_lo"), col("ci_hi"),
+          lit(0.95).as("conf"))
+    },
+      """WITH v AS (
+        | SELECT CAST(o_totalprice AS DOUBLE) AS v FROM orders
+        | WHERE o_totalprice IS NOT NULL),
+        |r AS (
+        | SELECT v, row_number() OVER (ORDER BY v) AS rn,
+        |  CAST(count(*) OVER () AS BIGINT) AS n
+        | FROM v)
+        |SELECT max(n) AS n,
+        | min(CASE WHEN rn >= (n + 1) // 2 THEN v END) AS median,
+        | min(CASE WHEN rn >= greatest(CAST(floor(
+        |   (CAST(n AS DOUBLE) - 1.959964 * sqrt(CAST(n AS DOUBLE))) / 2.0)
+        |   AS BIGINT), 1) THEN v END) AS ci_lo,
+        | min(CASE WHEN rn >= least(CAST(ceil(
+        |   1.0 + (CAST(n AS DOUBLE) + 1.959964 * sqrt(CAST(n AS DOUBLE)))
+        |    / 2.0) AS BIGINT), n) THEN v END) AS ci_hi,
+        | 0.95 AS conf
+        |FROM r""".stripMargin),
+
+    // NEYMAN SAMPLING ALLOCATION (Neyman 1934): split a fixed audit/
+    // labeling budget across strata ∝ N_k·σ_k — the variance-optimal
+    // design for estimating the overall mean, vs the naive proportional
+    // split (emitted alongside for contrast; high-variance strata earn
+    // more than their row share). One exact-moment aggregate per stratum
+    // (integer cents, the q_mde pattern); per-stratum weights round to
+    // 6dp and fold as DECIMAL so the total is order-independent; the
+    // final floor() allocations are identical doubles on both engines.
+    Q("q_neyman_alloc", { (s, d) =>
+      val B = 1000L
+      val ev = Tables.events(s, d).filter(col("value").isNotNull)
+        .select(col("event_type"),
+          (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
+      def dec(c: Column) = c.cast(DecimalType(38, 0))
+      val m = ev.groupBy("event_type")
+        .agg(count(lit(1)).as("n"), sum(dec(col("cents"))).as("sx"),
+          sum(dec(col("cents")) * dec(col("cents"))).as("sxx"))
+      val vx = (dec(col("n")) * col("sxx") - col("sx") * col("sx"))
+        .cast("double")
+      val n2 = col("n").cast("double") * col("n").cast("double")
+      val sigma = sqrt(vx / n2 / 10000.0)
+      val w = m.select(col("event_type"), col("n"),
+        round(sigma, 6).as("sigma"),
+        round(col("n").cast("double") * sigma, 6)
+          .cast(DecimalType(28, 6)).as("w"))
+      val tw = w.agg(sum(col("w")).as("tw"), sum(col("n")).as("tn"))
+      w.crossJoin(broadcast(tw))
+        .select(col("event_type"), col("n").as("n_rows"), col("sigma"),
+          floor(lit(B).cast("double") * col("w").cast("double") /
+            col("tw").cast("double")).cast("long").as("neyman_n"),
+          expr(s"($B * n) div tn").as("prop_n"))
+        .orderBy("event_type")
+    },
+      """WITH e AS (
+        | SELECT event_type,
+        |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+        | FROM events WHERE value IS NOT NULL),
+        |m AS (
+        | SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(cents) AS HUGEINT) AS sx,
+        |  sum(CAST(cents AS HUGEINT) * CAST(cents AS HUGEINT)) AS sxx
+        | FROM e GROUP BY 1),
+        |w AS (
+        | SELECT event_type, n,
+        |  round(sqrt(CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS DOUBLE)
+        |   / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 10000.0), 6) AS sigma,
+        |  CAST(round(CAST(n AS DOUBLE)
+        |   * sqrt(CAST(CAST(n AS HUGEINT) * sxx - sx * sx AS DOUBLE)
+        |      / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) / 10000.0), 6)
+        |   AS DECIMAL(28,6)) AS w
+        | FROM m),
+        |t AS (SELECT sum(w) AS tw, CAST(sum(n) AS BIGINT) AS tn FROM w)
+        |SELECT event_type, n AS n_rows, sigma,
+        | CAST(floor(1000.0 * CAST(w AS DOUBLE) / CAST(tw AS DOUBLE))
+        |  AS BIGINT) AS neyman_n,
+        | (1000 * n) // tn AS prop_n
+        |FROM w CROSS JOIN t ORDER BY event_type""".stripMargin),
+    // POISSON BOOTSTRAP 95% CI of mean order value (Chamandy et al.,
+    // "Estimating Uncertainty for Massive Data Streams", Google 2012 —
+    // the distributed bootstrap: resampling n-with-replacement doesn't
+    // shard, but giving each row an independent Poisson(1) weight per
+    // replicate does, and is equivalent for large n). Weights are
+    // DETERMINISTIC: ONE md5 per (row, digest-group) yields FOUR 32-bit
+    // words (32 hex chars = 4×8) → four replicate uniforms, inverted
+    // through the Poisson(1) CDF (threshold literals generated from one
+    // Scala source into BOTH engines, so comparisons are bit-identical).
+    // The md5 is the dominant per-row cost, so 4 replicates per digest
+    // cuts the constant 4× vs one-hash-per-replicate.
+    // B=48 replicates (12 digests × 4) explode map-side; each replicate
+    // folds to exact integer (Σw·cents, Σw) pairs — the only shuffle
+    // carries 48 partial pairs per task. CI bounds are type-1 percentiles
+    // of the 48-row replicate-mean frame (ceil(0.025·48)=2nd,
+    // ceil(0.975·48)=47th).
+    Q("q_bootstrap_ci", { (s, d) =>
+      val B = 48
+      val cdf = { // cumulative Poisson(1) probabilities for k = 0..5
+        val pmf = (0 to 5).scanLeft(math.exp(-1.0))((p, k) => p / (k + 1)).tail
+        pmf.scanLeft(0.0)(_ + _).tail
+      }
+      // single-row-group local table: spread before the ×12 md5 explode
+      // (the query's whole CPU cost — measured 6 s in one task)
+      val rows = Tables.orders(s, d).select(col("o_orderkey"),
+        (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
+          .cast("long").as("cents"))
+        .repartition(s.sparkContext.defaultParallelism)
+      val w = cdf.zipWithIndex
+        .foldRight(lit(6): Column) { case ((c, k), e) =>
+          when(col("u") < c, k).otherwise(e)
+        }
+      val reps = rows
+        .select(col("o_orderkey"), col("cents"),
+          explode(sequence(lit(1), lit(B / 4))).as("g"))
+        .withColumn("h", md5(concat_ws(":", col("o_orderkey"), col("g"))))
+        .select(col("cents"), col("g"),
+          posexplode(array((0 until 4).map(sl =>
+            substring(col("h"), sl * 8 + 1, 8)): _*)).as(Seq("sl", "hx")))
+        .select(((col("g") - 1) * 4 + col("sl") + 1).as("b"), col("cents"),
+          ((conv(col("hx"), 16, 10).cast("long").cast("double") + 0.5) /
+            4294967296.0).as("u"))
+        .withColumn("w", w)
+        .groupBy("b")
+        .agg(round(sum(col("w").cast("long") * col("cents")).cast("double") /
+          sum(col("w").cast("long")) / 100.0, 6).as("mean_b"))
+      val rn = row_number().over(Window.orderBy(col("mean_b"), col("b")))
+      val ci = reps.withColumn("rn", rn)
+        .agg(max(when(col("rn") === 2, col("mean_b"))).as("ci_lo"),
+          max(when(col("rn") === B - 1, col("mean_b"))).as("ci_hi"))
+      val full = rows.agg(round(sum(col("cents")).cast("double") /
+        count(lit(1)) / 100.0, 6).as("mean"))
+      full.crossJoin(broadcast(ci))
+    }, {
       val B = 48 // 12 md5 digests × 4 replicate words — mirrors the Spark side
       val pmf = (0 to 5).scanLeft(math.exp(-1.0))((p, k) => p / (k + 1)).tail
       val cdf = pmf.scanLeft(0.0)(_ + _).tail
@@ -9703,8 +8577,33 @@ object Analytics {
          | (SELECT mean_b FROM ranked WHERE rn = 2) AS ci_lo,
          | (SELECT mean_b FROM ranked WHERE rn = ${B - 1}) AS ci_hi
          |FROM f""".stripMargin
+    }),
+    // LAST-TOUCH ATTRIBUTION — each purchase credits the latest
+    // non-purchase event by the same user within the preceding 24 h
+    // ('none' if nothing qualifies). Candidates come from a per-user
+    // time-range join (bounded by per-user event density, the as-of
+    // shape); the winner per purchase is max(struct(ts, type)) —
+    // latest-then-type, the same deterministic tie-break row_number
+    // replays in the oracle. Left-join misses collapse to NULL before
+    // the max so empty groups surface as NULL, not a null-field struct.
+    Q("q_attribution", { (s, d) =>
+      val ev = Tables.events(s, d)
+        .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
+      val purch = ev.filter(col("event_type") === "purchase")
+        .select(col("user_id"), col("event_id").as("p_id"), col("ts").as("p_ts"))
+      val qual = ev.filter(col("event_type") =!= "purchase")
+        .select(col("user_id"), col("ts").as("q_ts"), col("event_type").as("q_type"))
+      purch.join(qual,
+          purch("user_id") === qual("user_id") &&
+            col("q_ts") < col("p_ts") &&
+            col("q_ts") >= col("p_ts") - expr("INTERVAL 24 HOURS"), "left")
+        .groupBy("p_id")
+        .agg(max(when(col("q_ts").isNotNull,
+          struct(col("q_ts"), col("q_type")))).as("b"))
+        .select(coalesce(col("b.q_type"), lit("none")).as("attributed_type"))
+        .groupBy("attributed_type").agg(count(lit(1)).as("n_purchases"))
+        .orderBy("attributed_type")
     },
-    "q_attribution" ->
       """WITH ev AS (
         | SELECT user_id, event_type, ts, event_id FROM events),
         |p AS (SELECT user_id, event_id AS p_id, ts AS p_ts FROM ev
@@ -9720,8 +8619,33 @@ object Analytics {
         |SELECT COALESCE(q_type, 'none') AS attributed_type,
         | count(*) AS n_purchases
         |FROM cand WHERE rn = 1
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_rolling_median" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    // A9 — rolling 7-day MEDIAN revenue: the robust twin of the rolling
+    // sum (one outlier day can't drag it). No median window function in
+    // Spark — collect the ≤ 7 trailing day-cents into an array (bounded
+    // by the frame, never by data) and index the sorted middle; even
+    // frames interpolate as (m1+m2)/2 in exact-cents double, matching
+    // DuckDB's quantile_cont semantics bit-for-bit. Day-spine window,
+    // same justification as q_rolling_revenue.
+    Q("q_rolling_median", { (s, d) =>
+      val daily = Tables.orders(s, d)
+        .groupBy(col("o_orderdate").cast("date").as("day"))
+        .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
+          .cast("long").as("dc"))
+      val w = Window.orderBy("day_num").rangeBetween(-6, 0)
+      val arr = sort_array(collect_list(col("dc")).over(w))
+      val n = size(arr)
+      val med = when(n % 2 === 1,
+          element_at(arr, ((n + 1) / 2).cast("int")).cast("double"))
+        .otherwise((element_at(arr, (n / 2).cast("int")) +
+          element_at(arr, (n / 2).cast("int") + 1)) / 2.0)
+      daily
+        .withColumn("day_num", datediff(col("day"), lit("1970-01-01").cast("date")))
+        .withColumn("median_7d", med / 100.0)
+        .select(col("day"), (col("dc") / 100.0).as("daily_total"),
+          col("median_7d"))
+        .orderBy("day")
+    },
       """WITH daily AS (
         | SELECT CAST(o_orderdate AS DATE) AS day,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS dc
@@ -9730,8 +8654,32 @@ object Analytics {
         | median(dc) OVER (ORDER BY day
         |   RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW) / 100.0
         |  AS median_7d
-        |FROM daily ORDER BY day""".stripMargin,
-    "q_funnel_windowed" ->
+        |FROM daily ORDER BY day""".stripMargin),
+    // TIME-BOXED funnel — the strict version of q_funnel: each step must
+    // happen within 72 h of the PREVIOUS step's first completion, and
+    // "first view after signup" is the min over qualifying events, not
+    // the global min (a user whose only view predates signup doesn't
+    // convert). Three user-keyed aggregates chained by joins — each pass
+    // shuffles events once on user_id; the step frames are
+    // user-cardinality-sized.
+    Q("q_funnel_windowed", { (s, d) =>
+      val ev = Tables.events(s, d)
+        .select(col("user_id"), col("event_type"), col("ts"))
+      val win = expr("INTERVAL 72 HOURS")
+      val tA = ev.filter(col("event_type") === "signup")
+        .groupBy("user_id").agg(min(col("ts")).as("t_a"))
+      val tB = ev.filter(col("event_type") === "view")
+        .join(tA, Seq("user_id"))
+        .filter(col("ts") > col("t_a") && col("ts") <= col("t_a") + win)
+        .groupBy("user_id").agg(min(col("ts")).as("t_b"))
+      val tC = ev.filter(col("event_type") === "purchase")
+        .join(tB, Seq("user_id"))
+        .filter(col("ts") > col("t_b") && col("ts") <= col("t_b") + win)
+        .groupBy("user_id").agg(min(col("ts")).as("t_c"))
+      tA.agg(count(lit(1)).as("n_signup"))
+        .crossJoin(broadcast(tB.agg(count(lit(1)).as("n_view_72h"))))
+        .crossJoin(broadcast(tC.agg(count(lit(1)).as("n_purchase_72h"))))
+    },
       """WITH ta AS (
         | SELECT user_id, min(ts) AS t_a FROM events
         | WHERE event_type = 'signup' GROUP BY 1),
@@ -9749,18 +8697,424 @@ object Analytics {
         | GROUP BY 1)
         |SELECT (SELECT count(*) FROM ta) AS n_signup,
         | (SELECT count(*) FROM tb) AS n_view_72h,
-        | (SELECT count(*) FROM tc) AS n_purchase_72h""".stripMargin,
-    "q_rolling_revenue" ->
-      """WITH daily AS (
-        | SELECT CAST(o_orderdate AS DATE) AS day,
+        | (SELECT count(*) FROM tc) AS n_purchase_72h""".stripMargin),
+    // A9 — EWMA-smoothed daily revenue (α = 0.5), the recursive smoother
+    // a rolling mean can't express: ewma_t = (x_t + ewma_{t−1})/2. The
+    // per-day pre-aggregate is calendar-bounded (the q_rolling_revenue
+    // argument), so ONE ordered array + one sequential fold is O(days).
+    // The recursion runs in exact integer CENTS with floor division —
+    // zero float in the state, so there is no per-step rounding to
+    // disagree across engines (a round(x,6) recurrence measurably
+    // diverged on half-ties); last(acc) carries the state.
+    Q("q_ewma_daily", { (s, d) =>
+      Tables.orders(s, d)
+        .groupBy(col("o_orderdate").cast("date").as("day"))
+        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("dt"))
+        .select(col("day"), col("dt").cast("double").as("rev"),
+          (col("dt") * 100).cast("long").as("rc"))
+        .agg(array_sort(collect_list(struct(col("day"), col("rev"),
+          col("rc")))).as("a"))
+        .selectExpr(
+          """inline(aggregate(
+            |  a,
+            |  cast(array() as array<struct<day:date,rev:double,ewma_u:bigint>>),
+            |  (acc, e) -> array_append(acc, named_struct(
+            |    'day', e.day, 'rev', e.rev,
+            |    'ewma_u', case when size(acc) = 0 then e.rc
+            |              else (e.rc + element_at(acc, -1).ewma_u) div 2
+            |              end))))""".stripMargin)
+        .select(col("day"), col("rev"),
+          (col("ewma_u").cast("double") / 100.0).as("ewma"))
+        .orderBy("day")
+    },
+      """WITH RECURSIVE d AS (
+        | SELECT o_orderdate AS day,
         |  sum(CAST(o_totalprice AS DECIMAL(18,2))) AS dt
-        | FROM orders GROUP BY 1)
-        |SELECT day, CAST(dt AS DOUBLE) AS daily_total,
-        | CAST(sum(dt) OVER (ORDER BY day
-        |   RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW) AS DOUBLE)
-        |  AS rolling_7d
-        |FROM daily ORDER BY day""".stripMargin,
-    "q_histogram" ->
+        | FROM orders GROUP BY 1),
+        |i AS (
+        | SELECT day, CAST(dt AS DOUBLE) AS rev,
+        |  CAST(dt * 100 AS BIGINT) AS rc,
+        |  row_number() OVER (ORDER BY day) AS rn FROM d),
+        |e AS (
+        | SELECT rn, day, rev, rc AS ewma_u FROM i WHERE rn = 1
+        | UNION ALL
+        | SELECT i.rn, i.day, i.rev, (i.rc + e.ewma_u) // 2
+        | FROM e JOIN i ON i.rn = e.rn + 1)
+        |SELECT day, rev, CAST(ewma_u AS DOUBLE) / 100.0 AS ewma
+        |FROM e ORDER BY day""".stripMargin),
+
+    // ADDITIVE SEASONAL DECOMPOSITION (classical, Kendall & Stuart):
+    // trend = centered 7-day moving average on the day spine (edges
+    // with fewer than 7 observations drop — the textbook contract),
+    // detrended = y − trend, and the per-ISO-weekday mean of the
+    // detrended series IS the additive seasonal component — the
+    // decomposition artifact behind q_dow_seasonality's one-number
+    // index and q_anomaly_daily's adjustment. Exact integers
+    // end-to-end; the one subtlety is that detrended values go
+    // NEGATIVE, where integer division's floor-vs-truncate semantics
+    // can differ across engines — so the group mean runs on
+    // 2^40-offset values (positive by construction, where both agree)
+    // and shifts back, the q_embed_outliers +127 idiom. Scale:
+    // day-spine windows only (calendar-bounded), then a ≤7-row group.
+    Q("q_seasonal_decompose", { (s, d) =>
+      val K = 1099511627776L // 2^40
+      val daily = Tables.orders(s, d)
+        .groupBy(col("o_orderdate").cast("date").as("day"))
+        .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
+          .cast("long").as("rc"))
+      val w7 = Window.orderBy("day").rowsBetween(-3, 3)
+      val det = daily
+        .withColumn("cnt7", count(lit(1)).over(w7))
+        .withColumn("s7", sum(col("rc")).over(w7))
+        .filter(col("cnt7") === 7)
+        .select(col("day"), (col("rc") - expr("s7 div 7")).as("det"))
+      det.groupBy((weekday(col("day")) + 1).as("dow"))
+        .agg(count(lit(1)).as("n_days"),
+          sum(col("det") + K).as("so"))
+        .select(col("dow"), col("n_days"),
+          (expr("so div n_days") - K).as("seasonal_cents"))
+        .orderBy("dow")
+    },
+      """WITH d AS (
+        | SELECT o_orderdate AS day,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rc
+        | FROM orders GROUP BY 1),
+        |t AS (
+        | SELECT day, rc,
+        |  count(*) OVER w7 AS cnt7,
+        |  CAST(sum(rc) OVER w7 AS BIGINT) // 7 AS trend
+        | FROM d
+        | WINDOW w7 AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
+        |de AS (SELECT day, rc - trend AS det FROM t WHERE cnt7 = 7)
+        |SELECT CAST(isodow(day) AS INTEGER) AS dow, count(*) AS n_days,
+        | CAST(sum(det + 1099511627776) AS BIGINT) // count(*)
+        |  - 1099511627776 AS seasonal_cents
+        |FROM de GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    // CUSUM CONTROL CHART (Page 1954) over daily revenue — the
+    // sequential drift detector beside q_anomaly_daily's pointwise
+    // seasonal z and q_changepoint's retrospective split: S⁺/S⁻
+    // accumulate deviations beyond an allowance k = σ/2 and alarm at
+    // h = 4σ (the classic (k, h) operating point), resetting after
+    // each alarm. Catches slow drifts no single-day outlier test sees.
+    // Exactness: the recursion state is INTEGER CENTS (μ is the floor
+    // mean; k and h floor once from the exact-moment σ — the only two
+    // doubles, floored identically in both engines), so the whole fold
+    // replays bit-for-bit (the q_ewma_daily contract). Scale: one
+    // day-spine fold (calendar-bounded array aggregate), moments from
+    // one scalar pass.
+    Q("q_cusum", { (s, d) =>
+      cusumOfDaily(Tables.orders(s, d)
+        .groupBy(col("o_orderdate").cast("date").as("day"))
+        .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
+          .cast("long").as("rc")))
+    },
+      """WITH RECURSIVE d AS (
+        | SELECT o_orderdate AS day,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rc
+        | FROM orders GROUP BY 1),
+        |i AS (SELECT rc, row_number() OVER (ORDER BY day) AS rn FROM d),
+        |m AS (
+        | SELECT count(*) AS n, CAST(sum(rc) AS BIGINT) AS sc,
+        |  CAST(sum(rc) AS BIGINT) // count(*) AS mu,
+        |  CAST(floor(sqrt((CAST(sum(CAST(rc AS HUGEINT) * rc) AS DOUBLE)
+        |    - CAST(CAST(sum(rc) AS BIGINT) AS DOUBLE) * CAST(CAST(sum(rc) AS BIGINT) AS DOUBLE)
+        |      / CAST(count(*) AS DOUBLE)) / CAST(count(*) AS DOUBLE)) / 2.0)
+        |   AS BIGINT) AS kc,
+        |  CAST(floor(sqrt((CAST(sum(CAST(rc AS HUGEINT) * rc) AS DOUBLE)
+        |    - CAST(CAST(sum(rc) AS BIGINT) AS DOUBLE) * CAST(CAST(sum(rc) AS BIGINT) AS DOUBLE)
+        |      / CAST(count(*) AS DOUBLE)) / CAST(count(*) AS DOUBLE)) * 4.0)
+        |   AS BIGINT) AS hc
+        | FROM d),
+        |f AS (
+        | SELECT 0 AS rn, CAST(0 AS BIGINT) AS sp, CAST(0 AS BIGINT) AS sn,
+        |  CAST(0 AS BIGINT) AS al, CAST(0 AS BIGINT) AS msp,
+        |  CAST(0 AS BIGINT) AS msn
+        | UNION ALL
+        | SELECT i.rn,
+        |  CASE WHEN greatest(0, f.sp + (i.rc - m.mu) - m.kc) > m.hc THEN 0
+        |       ELSE greatest(0, f.sp + (i.rc - m.mu) - m.kc) END,
+        |  CASE WHEN greatest(0, f.sn + (m.mu - i.rc) - m.kc) > m.hc THEN 0
+        |       ELSE greatest(0, f.sn + (m.mu - i.rc) - m.kc) END,
+        |  f.al + (CASE WHEN greatest(0, f.sp + (i.rc - m.mu) - m.kc) > m.hc
+        |            OR greatest(0, f.sn + (m.mu - i.rc) - m.kc) > m.hc
+        |          THEN 1 ELSE 0 END),
+        |  greatest(f.msp, greatest(0, f.sp + (i.rc - m.mu) - m.kc)),
+        |  greatest(f.msn, greatest(0, f.sn + (m.mu - i.rc) - m.kc))
+        | FROM f JOIN i ON i.rn = f.rn + 1 CROSS JOIN m)
+        |SELECT (SELECT n FROM m) AS n_days, (SELECT kc FROM m) AS k_cents,
+        | (SELECT hc FROM m) AS h_cents, al AS n_alarms,
+        | msp AS max_sp, msn AS max_sn
+        |FROM f ORDER BY rn DESC LIMIT 1""".stripMargin),
+
+    // SAX SYMBOLIC REPRESENTATION of the daily-revenue series (Lin,
+    // Keogh, Lonardi & Chiu 2003): PAA-compress the n-day series into
+    // 30 equal segments, z-normalize, and quantize into a 4-symbol
+    // alphabet at the standard Gaussian breakpoints (−0.6745, 0,
+    // 0.6745) — the discretization behind motif discovery / novelty
+    // search over time series at scale (symbols index into suffix
+    // structures; raw doubles don't). Exactness: per-segment sums and
+    // the global moments are exact integers (Σc as Long, Σc² as
+    // DECIMAL/HUGEINT — the q_cuped idiom), z-scores are one fixed
+    // double tree from them, and the SYMBOL is assigned from the
+    // 6dp-ROUNDED z so the bin edges can't flip on a 1-ulp cross-engine
+    // wobble. PAA-then-normalize ≡ normalize-then-PAA (z is affine).
+    // Scale: day-spine windows only (calendar-bounded); moments join as
+    // one broadcast scalar row.
+    Q("q_sax_symbolic", { (s, d) =>
+      saxSymbolic(Tables.orders(s, d)
+        .groupBy(col("o_orderdate").cast("date").as("day"))
+        .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
+          .cast("long").as("c")))
+    },
+      """WITH d AS (
+        | SELECT o_orderdate AS day,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS c
+        | FROM orders GROUP BY 1),
+        |i AS (SELECT day, c, row_number() OVER (ORDER BY day) AS rn FROM d),
+        |m AS (SELECT count(*) AS n, CAST(sum(c) AS BIGINT) AS s,
+        |       sum(CAST(c AS HUGEINT) * c) AS ss FROM d),
+        |g AS (
+        | SELECT ((rn - 1) * 30) // (SELECT n FROM m) AS seg,
+        |  count(*) AS n_days, CAST(sum(c) AS BIGINT) AS sc
+        | FROM i GROUP BY 1),
+        |z AS (
+        | SELECT seg, n_days,
+        |  round((CAST(sc AS DOUBLE) / CAST(n_days AS DOUBLE)
+        |    - CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
+        |   / sqrt((CAST(ss AS DOUBLE)
+        |     - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
+        |    / CAST(n AS DOUBLE)), 6) AS paa_z
+        | FROM g, m)
+        |SELECT seg, n_days, paa_z,
+        | CASE WHEN paa_z < -0.6745 THEN 'a' WHEN paa_z < 0.0 THEN 'b'
+        |      WHEN paa_z < 0.6745 THEN 'c' ELSE 'd' END AS symbol
+        |FROM z ORDER BY seg""".stripMargin),
+
+    // ROLLING-ORIGIN FORECAST BACKTEST — the "does the forecaster work"
+    // harness next to q_ewma_daily/q_holt_forecast: at every origin day
+    // t, the one-step-ahead EWMA forecast (= ewma_{t-1}, the value the
+    // smoother would have shipped that morning) is compared to the
+    // realized revenue; MAE/MAPE plus the skill vs the naive
+    // carry-forward baseline (forecast = yesterday's actual — the bar
+    // any forecaster must beat). Errors are exact integer cents (the
+    // ewma state is integer), so every sum is order-independent; MAPE
+    // folds 9dp-rounded per-day ratios as DECIMAL. The lag window runs
+    // on the calendar-bounded day spine (the q_rolling_revenue
+    // argument), never on orders.
+    Q("q_forecast_backtest", { (s, d) =>
+      val ew = Tables.orders(s, d)
+        .groupBy(col("o_orderdate").cast("date").as("day"))
+        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("dt"))
+        .select(col("day"), (col("dt") * 100).cast("long").as("rc"))
+        .agg(array_sort(collect_list(struct(col("day"), col("rc")))).as("a"))
+        .selectExpr(
+          """inline(aggregate(
+            |  a,
+            |  cast(array() as array<struct<day:date,rc:bigint,ewma_u:bigint>>),
+            |  (acc, e) -> array_append(acc, named_struct(
+            |    'day', e.day, 'rc', e.rc,
+            |    'ewma_u', case when size(acc) = 0 then e.rc
+            |              else (e.rc + element_at(acc, -1).ewma_u) div 2
+            |              end))))""".stripMargin)
+      val w = Window.orderBy("day")
+      val bt = ew
+        .withColumn("prev_ewma", lag(col("ewma_u"), 1).over(w))
+        .withColumn("prev_rc", lag(col("rc"), 1).over(w))
+        .filter(col("prev_ewma").isNotNull)
+        .select(col("rc"),
+          abs(col("rc") - col("prev_ewma")).as("err_c"),
+          abs(col("rc") - col("prev_rc")).as("naive_c"))
+      bt.agg(count(lit(1)).as("n_days"),
+          sum(col("err_c")).as("se"), sum(col("naive_c")).as("sn"),
+          sum(round(col("err_c").cast("double") / col("rc").cast("double")
+            * 100.0, 9).cast(DecimalType(28, 9))).as("sm"))
+        .select(col("n_days"),
+          round(col("se").cast("double") / col("n_days") / 100.0, 6)
+            .as("mae"),
+          round(col("sm").cast("double") / col("n_days"), 6).as("mape_pct"),
+          round(col("sn").cast("double") / col("n_days") / 100.0, 6)
+            .as("naive_mae"),
+          round(lit(1.0) - col("se").cast("double") /
+            col("sn").cast("double"), 6).as("skill_vs_naive"))
+    },
+      """WITH RECURSIVE d AS (
+        | SELECT o_orderdate AS day,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rc
+        | FROM orders GROUP BY 1),
+        |i AS (SELECT day, rc, row_number() OVER (ORDER BY day) AS rn FROM d),
+        |e AS (
+        | SELECT rn, day, rc, rc AS ewma_u FROM i WHERE rn = 1
+        | UNION ALL
+        | SELECT i.rn, i.day, i.rc, (i.rc + e.ewma_u) // 2
+        | FROM e JOIN i ON i.rn = e.rn + 1),
+        |bt AS (
+        | SELECT c.rc,
+        |  abs(c.rc - p.ewma_u) AS err_c,
+        |  abs(c.rc - p.rc) AS naive_c
+        | FROM e c JOIN e p ON p.rn = c.rn - 1),
+        |m AS (
+        | SELECT CAST(count(*) AS BIGINT) AS n_days,
+        |  CAST(sum(err_c) AS BIGINT) AS se,
+        |  CAST(sum(naive_c) AS BIGINT) AS sn,
+        |  sum(CAST(round(CAST(err_c AS DOUBLE) / CAST(rc AS DOUBLE)
+        |    * 100.0, 9) AS DECIMAL(28,9))) AS sm
+        | FROM bt)
+        |SELECT n_days,
+        | round(CAST(se AS DOUBLE) / n_days / 100.0, 6) AS mae,
+        | round(CAST(sm AS DOUBLE) / n_days, 6) AS mape_pct,
+        | round(CAST(sn AS DOUBLE) / n_days / 100.0, 6) AS naive_mae,
+        | round(1.0 - CAST(se AS DOUBLE) / CAST(sn AS DOUBLE), 6)
+        |  AS skill_vs_naive
+        |FROM m""".stripMargin),
+
+    // SPLIT-CONFORMAL PREDICTION INTERVAL for the one-step EWMA
+    // forecaster (Vovk et al. 2005; Lei et al. 2018) — the TIME-SERIES
+    // member of the conformal pair: q_conformal_coverage calibrates a
+    // static per-type predictor on an exchangeable md5 hash split
+    // (where the ≥ 1−α guarantee holds exactly); this one calibrates a
+    // SEQUENTIAL forecaster on a temporal split, the case every
+    // forecasting deployment actually faces. Calibrate q̂ as the
+    // ⌈0.9·(n_cal+1)⌉-th smallest absolute residual on the first 70%
+    // of days, then MEASURE the empirical coverage of ŷ ± q̂ on the
+    // held-out last 30%. Honest caveat in the readout: a time split is
+    // not exchangeable, so the ≥ 90% marginal guarantee is approximate
+    // here — which is exactly why coverage is MEASURED, not assumed
+    // (target_ppm rides alongside). Exactness:
+    // residuals are integer cents, q̂ is an exact order statistic
+    // (integer rank math — no interpolated quantile), coverage is
+    // integer ppm; no float enters until the reported q̂. Scale: the
+    // residual spine is day-cardinality (calendar-bounded windows);
+    // q̂ broadcasts back as a scalar.
+    Q("q_conformal_interval", { (s, d) =>
+      val ew = Tables.orders(s, d)
+        .groupBy(col("o_orderdate").cast("date").as("day"))
+        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("dt"))
+        .select(col("day"), (col("dt") * 100).cast("long").as("rc"))
+        .agg(array_sort(collect_list(struct(col("day"), col("rc")))).as("a"))
+        .selectExpr(
+          """inline(aggregate(
+            |  a,
+            |  cast(array() as array<struct<day:date,rc:bigint,ewma_u:bigint>>),
+            |  (acc, e) -> array_append(acc, named_struct(
+            |    'day', e.day, 'rc', e.rc,
+            |    'ewma_u', case when size(acc) = 0 then e.rc
+            |              else (e.rc + element_at(acc, -1).ewma_u) div 2
+            |              end))))""".stripMargin)
+      val w = Window.orderBy("day")
+      val res = ew
+        .withColumn("prev_ewma", lag(col("ewma_u"), 1).over(w))
+        .filter(col("prev_ewma").isNotNull)
+        .select(col("day"), abs(col("rc") - col("prev_ewma")).as("err_c"))
+        .withColumn("rn", row_number().over(Window.orderBy("day")))
+      val tot = res.agg(count(lit(1)).as("n"))
+      val marked = res.crossJoin(broadcast(tot))
+        .withColumn("n_cal", expr("(7 * n) div 10"))
+      val qhat = marked.filter(col("rn") <= col("n_cal"))
+        .withColumn("rr",
+          row_number().over(Window.orderBy("err_c", "day")))
+        .filter(col("rr") === expr("(9 * (n_cal + 1) + 9) div 10"))
+        .select(col("err_c").as("q_c"))
+      marked.filter(col("rn") > col("n_cal"))
+        .crossJoin(broadcast(qhat))
+        .agg(max(col("n_cal")).as("n_cal"), count(lit(1)).as("n_eval"),
+          max(col("q_c")).as("qc"),
+          sum(when(col("err_c") <= col("q_c"), 1L).otherwise(0L)).as("cov"))
+        .select(col("n_cal"), col("n_eval"),
+          round(col("qc").cast("double") / 100.0, 6).as("qhat"),
+          expr("cov * 1000000 div n_eval").as("coverage_ppm"),
+          lit(900000L).as("target_ppm"))
+    },
+      """WITH RECURSIVE d AS (
+        | SELECT o_orderdate AS day,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rc
+        | FROM orders GROUP BY 1),
+        |i AS (SELECT day, rc, row_number() OVER (ORDER BY day) AS rn FROM d),
+        |e AS (
+        | SELECT rn, day, rc, rc AS ewma_u FROM i WHERE rn = 1
+        | UNION ALL
+        | SELECT i.rn, i.day, i.rc, (i.rc + e.ewma_u) // 2
+        | FROM e JOIN i ON i.rn = e.rn + 1),
+        |res AS (
+        | SELECT c.day, abs(c.rc - p.ewma_u) AS err_c,
+        |  row_number() OVER (ORDER BY c.day) AS rn
+        | FROM e c JOIN e p ON p.rn = c.rn - 1),
+        |t AS (SELECT count(*) AS n, (7 * count(*)) // 10 AS n_cal FROM res),
+        |cal AS (
+        | SELECT err_c, row_number() OVER (ORDER BY err_c, day) AS rr
+        | FROM res, t WHERE rn <= n_cal),
+        |q AS (SELECT err_c AS q_c FROM cal, t
+        |      WHERE rr = (9 * (n_cal + 1) + 9) // 10),
+        |ev AS (SELECT err_c FROM res, t WHERE rn > n_cal)
+        |SELECT (SELECT n_cal FROM t) AS n_cal,
+        | count(*) AS n_eval,
+        | round(CAST((SELECT q_c FROM q) AS DOUBLE) / 100.0, 6) AS qhat,
+        | CAST(sum(CASE WHEN err_c <= (SELECT q_c FROM q) THEN 1 ELSE 0 END)
+        |  AS BIGINT) * 1000000 // count(*) AS coverage_ppm,
+        | CAST(900000 AS BIGINT) AS target_ppm
+        |FROM ev""".stripMargin),
+
+    // A9 — Holt double-exponential forecast (α = β = ½): level+trend
+    // recursion over the daily series, then a 7-day linear forecast.
+    // Same exactness contract as q_ewma_daily — the state is integer
+    // CENTS, halved with TRUNCATING integer division on both engines
+    // (Spark `div` and DuckDB `//` both round toward zero; the trend can
+    // go NEGATIVE, where mixing truncation with a floor-semantics shift
+    // or `FLOOR(x/2)` would diverge — empirically caught at sf0.01). Init:
+    // l₁ = y₁, b₁ = 0. The fold runs once over the calendar-bounded
+    // ordered array; output is the 7 forecast rows.
+    Q("q_holt_forecast", { (s, d) =>
+      Tables.orders(s, d)
+        .groupBy(col("o_orderdate").cast("date").as("day"))
+        .agg(((sum(col("o_totalprice").cast(DecimalType(18, 2)))) * 100)
+          .cast("long").as("rc"))
+        .agg(array_sort(collect_list(struct(col("day"), col("rc")))).as("a"))
+        .selectExpr(
+          """aggregate(
+            |  a,
+            |  named_struct('d', cast(null as date),
+            |               'l', cast(0 as bigint), 'b', cast(0 as bigint),
+            |               'init', false),
+            |  (acc, e) -> if(NOT acc.init,
+            |    named_struct('d', e.day, 'l', e.rc, 'b', cast(0 as bigint),
+            |                 'init', true),
+            |    named_struct('d', e.day,
+            |      'l', (e.rc + acc.l + acc.b) div 2,
+            |      'b', ((e.rc + acc.l + acc.b) div 2
+            |             - acc.l + acc.b) div 2,
+            |      'init', true))) AS st""".stripMargin)
+        .selectExpr("st.d AS last_day", "st.l AS l", "st.b AS b",
+          "explode(sequence(1, 7)) AS h")
+        .select(col("h").cast("long").as("h"),
+          date_add(col("last_day"), col("h").cast("int")).as("day"),
+          ((col("l") + col("h") * col("b")).cast("double") / 100.0)
+            .as("forecast"))
+        .orderBy("h")
+    },
+      """WITH RECURSIVE d AS (
+        | SELECT o_orderdate AS day,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rc
+        | FROM orders GROUP BY 1),
+        |i AS (SELECT day, rc, row_number() OVER (ORDER BY day) AS rn FROM d),
+        |e AS (
+        | SELECT rn, day, rc AS l, CAST(0 AS BIGINT) AS b FROM i WHERE rn = 1
+        | UNION ALL
+        | SELECT i.rn, i.day,
+        |  (i.rc + e.l + e.b) // 2,
+        |  ((i.rc + e.l + e.b) // 2 - e.l + e.b) // 2
+        | FROM e JOIN i ON i.rn = e.rn + 1),
+        |f AS (SELECT day AS last_day, l, b FROM e ORDER BY rn DESC LIMIT 1)
+        |SELECT CAST(h.h AS BIGINT) AS h,
+        | CAST(last_day AS DATE) + CAST(h.h AS INTEGER) AS day,
+        | CAST(l + h.h * b AS DOUBLE) / 100.0 AS forecast
+        |FROM f CROSS JOIN (SELECT unnest(range(1, 8)) AS h) h
+        |ORDER BY h""".stripMargin),
+
+    // A6/EDA — the distribution plot as data: 20 equi-width bins over
+    // order totals (two-pass, integer-cents edges).
+    Q("q_histogram", { (s, d) =>
+      equiWidthHistogram(Tables.orders(s, d), "o_totalprice", 20)
+    },
       """WITH c AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
         |           FROM orders),
         |b AS (SELECT min(c) AS mn, max(c) AS mx, count(c) AS n FROM c),
@@ -9774,8 +9128,11 @@ object Analytics {
         | round(CAST(mn + bin * w AS DOUBLE) / 100, 2) AS lo,
         | round(CAST(mn + (bin + 1) * w AS DOUBLE) / 100, 2) AS hi,
         | round(CAST(count(*) AS DOUBLE) / n, 6) AS share
-        |FROM binned GROUP BY bin, mn, w, n ORDER BY bin""".stripMargin,
-    "q_zscore_outliers" ->
+        |FROM binned GROUP BY bin, mn, w, n ORDER BY bin""".stripMargin),
+    // A6/EDA — per-priority outlier audit at |z| > 2.
+    Q("q_zscore_outliers", { (s, d) =>
+      zscoreOutliers(Tables.orders(s, d), "o_orderpriority", "o_totalprice", 2.0)
+    },
       """WITH m AS (
         | SELECT o_orderpriority, count(*) AS n,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sx,
@@ -9788,8 +9145,125 @@ object Analytics {
         | count(CASE WHEN abs((o.o_totalprice - s.mean) / s.std) > 2 THEN 1 END) AS n_outliers,
         | round(max(abs((o.o_totalprice - s.mean) / s.std)), 6) AS max_abs_z
         |FROM orders o JOIN s USING (o_orderpriority)
-        |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-    "q_drift_psi" ->
+        |GROUP BY 1, 2 ORDER BY 1""".stripMargin),
+
+    // ROBUST OUTLIERS — median-absolute-deviation audit (the
+    // heavy-tail-safe twin of q_zscore_outliers: mean/std are themselves
+    // dragged by the outliers they're meant to find; median/MAD aren't).
+    // Both medians run through the distributed exact-percentile engine
+    // (no value buffering), each threshold broadcasts back as a 1-row
+    // dimension, and the flag pass is map-side — three bounded passes
+    // over the column at any corpus size. 4.4478 = 3σ × the 1.4826
+    // normal-consistency constant, pinned as ONE double literal so both
+    // engines parse the identical constant (no cross-engine
+    // constant-folding drift).
+    Q("q_mad_outliers", { (s, d) =>
+      madOutliers(Tables.orders(s, d), "o_totalprice")
+    },
+      """WITH m AS (SELECT quantile_cont(o_totalprice, 0.5) AS med FROM orders),
+        |d AS (SELECT med, abs(o_totalprice - med) AS adev FROM orders, m),
+        |md AS (SELECT quantile_cont(adev, 0.5) AS mad FROM d)
+        |SELECT med, mad, count(*) AS n_total,
+        | CAST(sum(CASE WHEN adev > CAST(4.4478 AS DOUBLE) * mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
+        |FROM d, md GROUP BY med, mad""".stripMargin),
+
+    // TRIMMED MEAN — the mean of the inner 5%–95% of the distribution
+    // (q_winsorize's sibling: drop the tails instead of clipping them).
+    // Thresholds come from the distributed exact percentile and
+    // broadcast back; the trimmed sum is exact-DECIMAL (addition-order
+    // immune) cast to double once — same parity recipe as q_a6_describe.
+    Q("q_trimmed_mean", { (s, d) =>
+      trimmedMean(Tables.orders(s, d), "o_totalprice")
+    },
+      """WITH t AS (SELECT quantile_cont(o_totalprice, 0.05) AS p05,
+        |  quantile_cont(o_totalprice, 0.95) AS p95 FROM orders)
+        |SELECT p05, p95,
+        | count(CASE WHEN o_totalprice >= p05 AND o_totalprice <= p95 THEN 1 END) AS n_kept,
+        | count(*) AS n_total,
+        | CAST(sum(CAST(CASE WHEN o_totalprice >= p05 AND o_totalprice <= p95
+        |   THEN o_totalprice END AS DECIMAL(18,2))) AS DOUBLE)
+        |  / count(CASE WHEN o_totalprice >= p05 AND o_totalprice <= p95 THEN 1 END) AS mean_trimmed
+        |FROM orders, t GROUP BY p05, p95""".stripMargin),
+
+    // GINI COEFFICIENT — the concentration/imbalance report (how skewed
+    // is spend across orders; the same statistic audits token-count
+    // concentration across sources before training). Computed from the
+    // scale-safe cumulative value-count frame: value v occupies ranks
+    // (cum−c+1)..cum, whose sum is c·(2·cum−c+1)/2 — so Σ rank·x needs
+    // no per-row ranking, just one pass over DISTINCT values. All sums
+    // are exact DECIMAL (rank terms are integers, values 2dp) cast to
+    // double once at the end — no float accumulation anywhere, no
+    // single-task sort at any cardinality. G = Σc(2cum−c+1)v/(n·Σx) −
+    // (n+1)/n, the standard sorted-rank identity with the /2 folded out.
+    Q("q_gini", { (s, d) =>
+      gini(Tables.orders(s, d), "o_totalprice")
+    },
+      """WITH c AS (
+        | SELECT o_totalprice AS v, count(*) AS c FROM orders
+        | WHERE o_totalprice IS NOT NULL GROUP BY 1),
+        |r AS (
+        | SELECT v, c, sum(c) OVER (ORDER BY v
+        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM c),
+        |a AS (
+        | SELECT CAST(max(cum) AS BIGINT) AS n_rows,
+        |  CAST(sum(CAST(v AS DECIMAL(18,2)) * c) AS DOUBLE) AS sx,
+        |  CAST(sum(CAST(v AS DECIMAL(18,2))
+        |    * CAST(c * (2 * cum - c + 1) AS DECIMAL(38,0))) AS DOUBLE) AS s2
+        | FROM r)
+        |SELECT n_rows,
+        | round(s2 / (CAST(n_rows AS DOUBLE) * sx)
+        |   - (CAST(n_rows AS DOUBLE) + 1) / CAST(n_rows AS DOUBLE), 6) AS gini
+        |FROM a""".stripMargin),
+
+    // Per-source document-length concentration — the data-mix balance
+    // audit over the training corpus (a source whose length Gini spikes
+    // is dominated by a few giant documents).
+    Q("q_gini_by_source", { (s, d) =>
+      groupedGini(Tables.documents(s, d), "source", "n_chars")
+    },
+      """WITH c AS (
+        | SELECT source, n_chars AS v, count(*) AS c FROM documents
+        | WHERE n_chars IS NOT NULL AND source IS NOT NULL GROUP BY 1, 2),
+        |r AS (
+        | SELECT source, v, c, sum(c) OVER (PARTITION BY source ORDER BY v
+        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM c),
+        |a AS (
+        | SELECT source, CAST(max(cum) AS BIGINT) AS n_rows,
+        |  CAST(sum(CAST(v AS DECIMAL(18,2)) * c) AS DOUBLE) AS sx,
+        |  CAST(sum(CAST(v AS DECIMAL(18,2))
+        |    * CAST(c * (2 * cum - c + 1) AS DECIMAL(38,0))) AS DOUBLE) AS s2
+        | FROM r GROUP BY 1)
+        |SELECT source, n_rows,
+        | round(s2 / (CAST(n_rows AS DOUBLE) * sx)
+        |   - (CAST(n_rows AS DOUBLE) + 1) / CAST(n_rows AS DOUBLE), 6) AS gini
+        |FROM a ORDER BY source""".stripMargin),
+
+    // Source-mix diversity — entropy + effective source count over the
+    // corpus source distribution (the one-number summary of "is this mix
+    // dominated by a single source"; complements q_source_mix's shares).
+    Q("q_mix_entropy", { (s, d) =>
+      mixEntropy(Tables.documents(s, d), "source")
+    },
+      """WITH c AS (
+        | SELECT source, count(*) AS c FROM documents
+        | WHERE source IS NOT NULL GROUP BY 1),
+        |t AS (SELECT sum(c) AS n FROM c),
+        |p AS (
+        | SELECT CAST(c.c AS DOUBLE) / CAST(t.n AS DOUBLE) AS p FROM c, t),
+        |a AS (
+        | SELECT count(*) AS n_cats,
+        |  sum(CAST(round(-(p * log2(p)), 6) AS DECIMAL(18,6))) AS hd FROM p)
+        |SELECT n_cats, CAST(hd AS DOUBLE) AS entropy_bits,
+        | round(pow(2.0, CAST(hd AS DOUBLE)), 6) AS effective_cats
+        |FROM a""".stripMargin),
+
+    // Drift monitor: PSI of the document-length distribution, English
+    // slice vs everything else (the per-ingest-batch distribution check
+    // a training pipeline runs before accepting a new shard).
+    Q("q_drift_psi", { (s, d) =>
+      driftPsi(Tables.documents(s, d), length(col("text")),
+        col("lang") === "en", 10)
+    },
       """WITH v AS (SELECT CAST(length(text) AS BIGINT) AS c,
         |            (lang = 'en') AS ga FROM documents),
         |b AS (SELECT min(c) AS mn, max(c) AS mx,
@@ -9816,8 +9290,15 @@ object Analytics {
         |        - CAST(cb + 1 AS DOUBLE) / CAST(nb + 10 AS DOUBLE))
         |   * ln((CAST(ca + 1 AS DOUBLE) / CAST(na + 10 AS DOUBLE))
         |        / (CAST(cb + 1 AS DOUBLE) / CAST(nb + 10 AS DOUBLE))), 6) AS psi_contrib
-        |FROM f ORDER BY bin""".stripMargin,
-    "q_js_divergence" ->
+        |FROM f ORDER BY bin""".stripMargin),
+
+    // Drift monitor, per-source: JS divergence of each source's length
+    // distribution vs the whole corpus — the "which shard drifted"
+    // follow-up to q_drift_psi's single A/B number, bounded in [0,1] bit
+    // so sources are directly comparable.
+    Q("q_js_divergence", { (s, d) =>
+      jsDivergence(Tables.documents(s, d), length(col("text")), "source", 10)
+    },
       """WITH v AS (
         | SELECT source AS src, CAST(length(text) AS BIGINT) AS c
         | FROM documents
@@ -9860,8 +9341,14 @@ object Analytics {
         | FROM f)
         |SELECT src AS source, max(ns) AS n_docs,
         | CAST(sum(t) AS DOUBLE) AS js_bits
-        |FROM t GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_anova_lang" ->
+        |FROM t GROUP BY 1 ORDER BY 1""".stripMargin),
+
+    // Classical hypothesis tests over corpus slices — the "is this
+    // difference real" layer on top of the drift monitors.
+    // Does document length vary by language beyond chance? (one-way ANOVA)
+    Q("q_anova_lang", { (s, d) =>
+      anova(Tables.documents(s, d), length(col("text")), "lang")
+    },
       """WITH g AS (
         | SELECT lang, CAST(count(*) AS BIGINT) AS ng,
         |  CAST(sum(v) AS BIGINT) AS sg, CAST(sum(v * v) AS BIGINT) AS qg
@@ -9891,8 +9378,12 @@ object Analytics {
         |   / ((CAST(q AS DOUBLE) - CAST(t AS DOUBLE))
         |    / CAST(n_rows - k_groups AS DOUBLE)), 6)
         | END AS f_stat
-        |FROM a""".stripMargin,
-    "q_chi2_contingency" ->
+        |FROM a""".stripMargin),
+    // Are language and source independent? (χ² + mutual information —
+    // MI near 0 bits means the source mix is language-balanced.)
+    Q("q_chi2_contingency", { (s, d) =>
+      contingencyStats(Tables.documents(s, d), "lang", "source")
+    },
       """WITH cells AS (
         | SELECT lang AS r, source AS c, CAST(count(*) AS BIGINT) AS o
         | FROM documents WHERE lang IS NOT NULL AND source IS NOT NULL
@@ -9929,180 +9420,77 @@ object Analytics {
         |    * CAST(least(count(DISTINCT r) - 1, count(DISTINCT c) - 1)
         |        AS DOUBLE))), 6)
         | END AS cramers_v
-        |FROM t""".stripMargin,
-    "q_ewma_daily" ->
-      """WITH RECURSIVE d AS (
-        | SELECT o_orderdate AS day,
-        |  sum(CAST(o_totalprice AS DECIMAL(18,2))) AS dt
-        | FROM orders GROUP BY 1),
-        |i AS (
-        | SELECT day, CAST(dt AS DOUBLE) AS rev,
-        |  CAST(dt * 100 AS BIGINT) AS rc,
-        |  row_number() OVER (ORDER BY day) AS rn FROM d),
-        |e AS (
-        | SELECT rn, day, rev, rc AS ewma_u FROM i WHERE rn = 1
-        | UNION ALL
-        | SELECT i.rn, i.day, i.rev, (i.rc + e.ewma_u) // 2
-        | FROM e JOIN i ON i.rn = e.rn + 1)
-        |SELECT day, rev, CAST(ewma_u AS DOUBLE) / 100.0 AS ewma
-        |FROM e ORDER BY day""".stripMargin,
-    "q_forecast_backtest" ->
-      """WITH RECURSIVE d AS (
-        | SELECT o_orderdate AS day,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rc
-        | FROM orders GROUP BY 1),
-        |i AS (SELECT day, rc, row_number() OVER (ORDER BY day) AS rn FROM d),
-        |e AS (
-        | SELECT rn, day, rc, rc AS ewma_u FROM i WHERE rn = 1
-        | UNION ALL
-        | SELECT i.rn, i.day, i.rc, (i.rc + e.ewma_u) // 2
-        | FROM e JOIN i ON i.rn = e.rn + 1),
-        |bt AS (
-        | SELECT c.rc,
-        |  abs(c.rc - p.ewma_u) AS err_c,
-        |  abs(c.rc - p.rc) AS naive_c
-        | FROM e c JOIN e p ON p.rn = c.rn - 1),
-        |m AS (
-        | SELECT CAST(count(*) AS BIGINT) AS n_days,
-        |  CAST(sum(err_c) AS BIGINT) AS se,
-        |  CAST(sum(naive_c) AS BIGINT) AS sn,
-        |  sum(CAST(round(CAST(err_c AS DOUBLE) / CAST(rc AS DOUBLE)
-        |    * 100.0, 9) AS DECIMAL(28,9))) AS sm
-        | FROM bt)
-        |SELECT n_days,
-        | round(CAST(se AS DOUBLE) / n_days / 100.0, 6) AS mae,
-        | round(CAST(sm AS DOUBLE) / n_days, 6) AS mape_pct,
-        | round(CAST(sn AS DOUBLE) / n_days / 100.0, 6) AS naive_mae,
-        | round(1.0 - CAST(se AS DOUBLE) / CAST(sn AS DOUBLE), 6)
-        |  AS skill_vs_naive
-        |FROM m""".stripMargin,
-    "q_seasonal_decompose" ->
-      """WITH d AS (
-        | SELECT o_orderdate AS day,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rc
-        | FROM orders GROUP BY 1),
-        |t AS (
-        | SELECT day, rc,
-        |  count(*) OVER w7 AS cnt7,
-        |  CAST(sum(rc) OVER w7 AS BIGINT) // 7 AS trend
-        | FROM d
-        | WINDOW w7 AS (ORDER BY day ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)),
-        |de AS (SELECT day, rc - trend AS det FROM t WHERE cnt7 = 7)
-        |SELECT CAST(isodow(day) AS INTEGER) AS dow, count(*) AS n_days,
-        | CAST(sum(det + 1099511627776) AS BIGINT) // count(*)
-        |  - 1099511627776 AS seasonal_cents
-        |FROM de GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_cusum" ->
-      """WITH RECURSIVE d AS (
-        | SELECT o_orderdate AS day,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rc
-        | FROM orders GROUP BY 1),
-        |i AS (SELECT rc, row_number() OVER (ORDER BY day) AS rn FROM d),
-        |m AS (
-        | SELECT count(*) AS n, CAST(sum(rc) AS BIGINT) AS sc,
-        |  CAST(sum(rc) AS BIGINT) // count(*) AS mu,
-        |  CAST(floor(sqrt((CAST(sum(CAST(rc AS HUGEINT) * rc) AS DOUBLE)
-        |    - CAST(CAST(sum(rc) AS BIGINT) AS DOUBLE) * CAST(CAST(sum(rc) AS BIGINT) AS DOUBLE)
-        |      / CAST(count(*) AS DOUBLE)) / CAST(count(*) AS DOUBLE)) / 2.0)
-        |   AS BIGINT) AS kc,
-        |  CAST(floor(sqrt((CAST(sum(CAST(rc AS HUGEINT) * rc) AS DOUBLE)
-        |    - CAST(CAST(sum(rc) AS BIGINT) AS DOUBLE) * CAST(CAST(sum(rc) AS BIGINT) AS DOUBLE)
-        |      / CAST(count(*) AS DOUBLE)) / CAST(count(*) AS DOUBLE)) * 4.0)
-        |   AS BIGINT) AS hc
-        | FROM d),
-        |f AS (
-        | SELECT 0 AS rn, CAST(0 AS BIGINT) AS sp, CAST(0 AS BIGINT) AS sn,
-        |  CAST(0 AS BIGINT) AS al, CAST(0 AS BIGINT) AS msp,
-        |  CAST(0 AS BIGINT) AS msn
-        | UNION ALL
-        | SELECT i.rn,
-        |  CASE WHEN greatest(0, f.sp + (i.rc - m.mu) - m.kc) > m.hc THEN 0
-        |       ELSE greatest(0, f.sp + (i.rc - m.mu) - m.kc) END,
-        |  CASE WHEN greatest(0, f.sn + (m.mu - i.rc) - m.kc) > m.hc THEN 0
-        |       ELSE greatest(0, f.sn + (m.mu - i.rc) - m.kc) END,
-        |  f.al + (CASE WHEN greatest(0, f.sp + (i.rc - m.mu) - m.kc) > m.hc
-        |            OR greatest(0, f.sn + (m.mu - i.rc) - m.kc) > m.hc
-        |          THEN 1 ELSE 0 END),
-        |  greatest(f.msp, greatest(0, f.sp + (i.rc - m.mu) - m.kc)),
-        |  greatest(f.msn, greatest(0, f.sn + (m.mu - i.rc) - m.kc))
-        | FROM f JOIN i ON i.rn = f.rn + 1 CROSS JOIN m)
-        |SELECT (SELECT n FROM m) AS n_days, (SELECT kc FROM m) AS k_cents,
-        | (SELECT hc FROM m) AS h_cents, al AS n_alarms,
-        | msp AS max_sp, msn AS max_sn
-        |FROM f ORDER BY rn DESC LIMIT 1""".stripMargin,
-    "q_sax_symbolic" ->
-      """WITH d AS (
-        | SELECT o_orderdate AS day,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS c
-        | FROM orders GROUP BY 1),
-        |i AS (SELECT day, c, row_number() OVER (ORDER BY day) AS rn FROM d),
-        |m AS (SELECT count(*) AS n, CAST(sum(c) AS BIGINT) AS s,
-        |       sum(CAST(c AS HUGEINT) * c) AS ss FROM d),
-        |g AS (
-        | SELECT ((rn - 1) * 30) // (SELECT n FROM m) AS seg,
-        |  count(*) AS n_days, CAST(sum(c) AS BIGINT) AS sc
-        | FROM i GROUP BY 1),
-        |z AS (
-        | SELECT seg, n_days,
-        |  round((CAST(sc AS DOUBLE) / CAST(n_days AS DOUBLE)
-        |    - CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-        |   / sqrt((CAST(ss AS DOUBLE)
-        |     - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-        |    / CAST(n AS DOUBLE)), 6) AS paa_z
-        | FROM g, m)
-        |SELECT seg, n_days, paa_z,
-        | CASE WHEN paa_z < -0.6745 THEN 'a' WHEN paa_z < 0.0 THEN 'b'
-        |      WHEN paa_z < 0.6745 THEN 'c' ELSE 'd' END AS symbol
-        |FROM z ORDER BY seg""".stripMargin,
-    "q_conformal_interval" ->
-      """WITH RECURSIVE d AS (
-        | SELECT o_orderdate AS day,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rc
-        | FROM orders GROUP BY 1),
-        |i AS (SELECT day, rc, row_number() OVER (ORDER BY day) AS rn FROM d),
-        |e AS (
-        | SELECT rn, day, rc, rc AS ewma_u FROM i WHERE rn = 1
-        | UNION ALL
-        | SELECT i.rn, i.day, i.rc, (i.rc + e.ewma_u) // 2
-        | FROM e JOIN i ON i.rn = e.rn + 1),
-        |res AS (
-        | SELECT c.day, abs(c.rc - p.ewma_u) AS err_c,
-        |  row_number() OVER (ORDER BY c.day) AS rn
-        | FROM e c JOIN e p ON p.rn = c.rn - 1),
-        |t AS (SELECT count(*) AS n, (7 * count(*)) // 10 AS n_cal FROM res),
-        |cal AS (
-        | SELECT err_c, row_number() OVER (ORDER BY err_c, day) AS rr
-        | FROM res, t WHERE rn <= n_cal),
-        |q AS (SELECT err_c AS q_c FROM cal, t
-        |      WHERE rr = (9 * (n_cal + 1) + 9) // 10),
-        |ev AS (SELECT err_c FROM res, t WHERE rn > n_cal)
-        |SELECT (SELECT n_cal FROM t) AS n_cal,
-        | count(*) AS n_eval,
-        | round(CAST((SELECT q_c FROM q) AS DOUBLE) / 100.0, 6) AS qhat,
-        | CAST(sum(CASE WHEN err_c <= (SELECT q_c FROM q) THEN 1 ELSE 0 END)
-        |  AS BIGINT) * 1000000 // count(*) AS coverage_ppm,
-        | CAST(900000 AS BIGINT) AS target_ppm
-        |FROM ev""".stripMargin,
-    "q_holt_forecast" ->
-      """WITH RECURSIVE d AS (
-        | SELECT o_orderdate AS day,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS rc
-        | FROM orders GROUP BY 1),
-        |i AS (SELECT day, rc, row_number() OVER (ORDER BY day) AS rn FROM d),
-        |e AS (
-        | SELECT rn, day, rc AS l, CAST(0 AS BIGINT) AS b FROM i WHERE rn = 1
-        | UNION ALL
-        | SELECT i.rn, i.day,
-        |  (i.rc + e.l + e.b) // 2,
-        |  ((i.rc + e.l + e.b) // 2 - e.l + e.b) // 2
-        | FROM e JOIN i ON i.rn = e.rn + 1),
-        |f AS (SELECT day AS last_day, l, b FROM e ORDER BY rn DESC LIMIT 1)
-        |SELECT CAST(h.h AS BIGINT) AS h,
-        | CAST(last_day AS DATE) + CAST(h.h AS INTEGER) AS day,
-        | CAST(l + h.h * b AS DOUBLE) / 100.0 AS forecast
-        |FROM f CROSS JOIN (SELECT unnest(range(1, 8)) AS h) h
-        |ORDER BY h""".stripMargin,
-    "q_metric_attribution" ->
+        |FROM t""".stripMargin),
+    // Distribution-free two-sample test: English vs non-English length
+    // distributions (the KS complement to q_drift_psi's binned view).
+    Q("q_ks_test", { (s, d) =>
+      ksTest(Tables.documents(s, d), length(col("text")), col("lang") === "en")
+    },
+      """WITH v AS (
+        | SELECT CAST(length(text) AS BIGINT) AS v, (lang = 'en') AS ga
+        | FROM documents
+        | WHERE length(text) IS NOT NULL AND (lang = 'en') IS NOT NULL),
+        |c AS (
+        | SELECT v, sum(CASE WHEN ga THEN 1 ELSE 0 END) AS ca,
+        |  sum(CASE WHEN ga THEN 0 ELSE 1 END) AS cb
+        | FROM v GROUP BY 1),
+        |cum AS (
+        | SELECT v,
+        |  sum(ca) OVER (ORDER BY v
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cuma,
+        |  sum(cb) OVER (ORDER BY v
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumb,
+        |  CAST(sum(ca) OVER () AS BIGINT) AS na,
+        |  CAST(sum(cb) OVER () AS BIGINT) AS nb
+        | FROM c),
+        |d AS (
+        | SELECT na, nb,
+        |  max(round(abs(CAST(cuma AS DOUBLE) / CAST(na AS DOUBLE)
+        |    - CAST(cumb AS DOUBLE) / CAST(nb AS DOUBLE)), 6)) AS ks_d
+        | FROM cum GROUP BY 1, 2)
+        |SELECT na, nb, ks_d,
+        | round(ks_d * sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)
+        |   / CAST(na + nb AS DOUBLE)), 6) AS ks_stat
+        |FROM d""".stripMargin),
+    // METRIC DIAGNOSIS / root-cause contribution (the Adtributor shape —
+    // Bhagwan et al., NSDI 2014): a dashboard moved between two periods;
+    // for each segment of a dimension, report how much of the TOTAL
+    // delta it explains (EP = segment delta / total delta, signed — a
+    // segment moving against the trend gets a negative EP) and how
+    // SURPRISING its mix shift is (per-segment Jensen-Shannon term
+    // between the period-share distributions: a big but proportional
+    // segment is unsurprising; a small segment that doubled is). Periods
+    // = first vs second half of the month, metric = Σ value by
+    // event_type. All inputs are exact DECIMAL cent sums; the JS/EP
+    // terms are per-ROW double expressions of those exact sums (no
+    // cross-row float accumulation), rounded at 6dp on both engines.
+    // Scale posture: one fact pass to a (dimension × 2)-cardinality
+    // frame; totals broadcast back as scalars.
+    Q("q_metric_attribution", { (s, d) =>
+      val ev = Tables.events(s, d).filter(col("value").isNotNull)
+        .select(col("event_type"),
+          (dayofmonth(col("ts")) <= 15).as("pa"),
+          (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
+            .as("cents"))
+      val seg = ev.groupBy("event_type")
+        .agg(coalesce(sum(when(col("pa"), col("cents"))), lit(0L)).as("ca"),
+          coalesce(sum(when(!col("pa"), col("cents"))), lit(0L)).as("cb"))
+      val tot = seg.agg(sum(col("ca")).as("ta"), sum(col("cb")).as("tb"))
+      val p = col("ca").cast("double") / col("ta").cast("double")
+      val q = col("cb").cast("double") / col("tb").cast("double")
+      val js = lit(0.5) * (
+        when(p === 0.0, 0.0).otherwise(p * log2(lit(2.0) * p / (p + q))) +
+          when(q === 0.0, 0.0).otherwise(q * log2(lit(2.0) * q / (p + q))))
+      seg.crossJoin(broadcast(tot))
+        .select(col("event_type"),
+          (col("ca").cast("double") / 100.0).as("va"),
+          (col("cb").cast("double") / 100.0).as("vb"),
+          ((col("cb") - col("ca")).cast("double") / 100.0).as("delta"),
+          round((col("cb") - col("ca")).cast("double") /
+            (col("tb") - col("ta")).cast("double"), 6).as("ep"),
+          round(js, 6).as("surprise"))
+        .orderBy("event_type")
+    },
       """WITH e AS (
         | SELECT event_type, day(ts) <= 15 AS pa,
         |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -10127,8 +9515,21 @@ object Analytics {
         |   (CAST(cb AS DOUBLE) / tb) * log2(2.0 * (CAST(cb AS DOUBLE) / tb)
         |    / (CAST(ca AS DOUBLE) / ta + CAST(cb AS DOUBLE) / tb)) END), 6)
         |  AS surprise
-        |FROM seg CROSS JOIN tot ORDER BY event_type""".stripMargin,
-    "q_wasserstein_drift" ->
+        |FROM seg CROSS JOIN tot ORDER BY event_type""".stripMargin),
+
+    // WASSERSTEIN-1 (earth mover's) distance between the same two slices
+    // the KS test compares — the drift metric that weighs HOW FAR mass
+    // moved, not just the worst CDF gap (a small shift of all mass and a
+    // large shift of a sliver can tie on KS; W1 separates them). For 1-D
+    // empirical CDFs, W1 = Σ over the merged value spine of
+    // Δv·|F_A − F_B| — the KS cumulative frame with the sup replaced by
+    // a decimal-folded integral (6dp terms, order-independent sum).
+    // Same scale posture as KS: everything lives on the distinct-value
+    // spine; the fact pass is one map-side-combined groupBy.
+    Q("q_wasserstein_drift", { (s, d) =>
+      wasserstein1(Tables.documents(s, d), length(col("text")),
+        col("lang") === "en")
+    },
       """WITH v AS (
         | SELECT CAST(length(text) AS BIGINT) AS v, (lang = 'en') AS ga
         | FROM documents
@@ -10155,35 +9556,13 @@ object Analytics {
         | FROM cum WHERE nv IS NOT NULL)
         |SELECT na, nb,
         | COALESCE(CAST(sum(term) AS DOUBLE), 0.0) AS w1
-        |FROM t GROUP BY 1, 2""".stripMargin,
-    "q_ks_test" ->
-      """WITH v AS (
-        | SELECT CAST(length(text) AS BIGINT) AS v, (lang = 'en') AS ga
-        | FROM documents
-        | WHERE length(text) IS NOT NULL AND (lang = 'en') IS NOT NULL),
-        |c AS (
-        | SELECT v, sum(CASE WHEN ga THEN 1 ELSE 0 END) AS ca,
-        |  sum(CASE WHEN ga THEN 0 ELSE 1 END) AS cb
-        | FROM v GROUP BY 1),
-        |cum AS (
-        | SELECT v,
-        |  sum(ca) OVER (ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cuma,
-        |  sum(cb) OVER (ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumb,
-        |  CAST(sum(ca) OVER () AS BIGINT) AS na,
-        |  CAST(sum(cb) OVER () AS BIGINT) AS nb
-        | FROM c),
-        |d AS (
-        | SELECT na, nb,
-        |  max(round(abs(CAST(cuma AS DOUBLE) / CAST(na AS DOUBLE)
-        |    - CAST(cumb AS DOUBLE) / CAST(nb AS DOUBLE)), 6)) AS ks_d
-        | FROM cum GROUP BY 1, 2)
-        |SELECT na, nb, ks_d,
-        | round(ks_d * sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)
-        |   / CAST(na + nb AS DOUBLE)), 6) AS ks_stat
-        |FROM d""".stripMargin,
-    "q_ols_trend" ->
+        |FROM t GROUP BY 1, 2""".stripMargin),
+
+    // Closed-form modeling layer on top of the test pack.
+    // Is revenue trending, per market segment? (exact-moment OLS)
+    Q("q_ols_trend", { (s, d) =>
+      olsTrend(Tables.orders(s, d), Tables.customer(s, d))
+    },
       """WITH m AS (
         | SELECT c_mktsegment AS segment,
         |  CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS x,
@@ -10218,8 +9597,12 @@ object Analytics {
         |  round(((dn * sxy - sx * sy) * (dn * sxy - sx * sy))
         |    / ((dn * sxx - sx * sx) * (dn * syy - sy * sy)), 6)
         | END AS r2
-        |FROM a ORDER BY segment""".stripMargin,
-    "q_trend_robust" ->
+        |FROM a ORDER BY segment""".stripMargin),
+    // Is the trend robust to outlier months? (Theil–Sen + Mann–Kendall —
+    // the distribution-free complement to q_ols_trend.)
+    Q("q_trend_robust", { (s, d) =>
+      robustTrend(Tables.orders(s, d), Tables.customer(s, d))
+    },
       """WITH m AS (
         | SELECT c_mktsegment AS segment,
         |  CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS x,
@@ -10257,8 +9640,11 @@ object Analytics {
         |    THEN (CAST(s_stat AS DOUBLE) + 1) / sqrt(mkvar)
         |   ELSE 0.0 END, 6)
         | END AS mk_z
-        |FROM s JOIN v ON s.segment = v.segment ORDER BY 1""".stripMargin,
-    "q_acf_daily" ->
+        |FROM s JOIN v ON s.segment = v.segment ORDER BY 1""".stripMargin),
+    // How much weekly structure does daily revenue have? (ACF lags 1..7)
+    Q("q_acf_daily", { (s, d) =>
+      acfDaily(Tables.orders(s, d), 7)
+    },
       """WITH d AS (
         | SELECT o_orderdate AS day,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS yc
@@ -10285,8 +9671,13 @@ object Analytics {
         |  round((dm * sxy - sx * sy)
         |    / sqrt((dm * sxx - sx * sx) * (dm * syy - sy * sy)), 6)
         | END AS acf
-        |FROM a ORDER BY lag""".stripMargin,
-    "q_auc_length" ->
+        |FROM a ORDER BY lag""".stripMargin),
+    // How well does raw length separate English from the rest? (rank AUC
+    // — the effect-size companion to q_ks_test's significance.)
+    Q("q_auc_length", { (s, d) =>
+      aucRank(Tables.documents(s, d), length(col("text")),
+        col("lang") === "en")
+    },
       """WITH v AS (
         | SELECT CAST(length(text) AS BIGINT) AS v,
         |  CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS pos
@@ -10305,8 +9696,13 @@ object Analytics {
         |  round((rp2 - CAST(np AS DOUBLE) * (CAST(np AS DOUBLE) + 1))
         |    / (2.0 * CAST(np AS DOUBLE) * CAST(n - np AS DOUBLE)), 6)
         | END AS auc
-        |FROM a""".stripMargin,
-    "q_benford" ->
+        |FROM a""".stripMargin),
+    // Does the money column look organic? (Benford leading-digit audit —
+    // a synthetic uniform price generator fails it loudly, which is
+    // itself the interesting report on this corpus.)
+    Q("q_benford", { (s, d) =>
+      benford(Tables.orders(s, d), "o_totalprice")
+    },
       """WITH o AS (
         | SELECT CAST(substr(CAST(o_totalprice AS VARCHAR), 1, 1) AS INTEGER)
         |   AS digit, count(*) AS c
@@ -10325,8 +9721,36 @@ object Analytics {
         |    - CAST(n AS DOUBLE) * log10(1.0 + 1.0 / CAST(digit AS DOUBLE)))
         |  / (CAST(n AS DOUBLE) * log10(1.0 + 1.0 / CAST(digit AS DOUBLE))), 6)
         |  AS chi2_term
-        |FROM s ORDER BY digit""".stripMargin,
-    "q_quantile_normalize" ->
+        |FROM s ORDER BY digit""".stripMargin),
+    // Which brands sell together? (support / confidence / lift over
+    // order baskets.)
+    Q("q_assoc_rules", { (s, d) =>
+      assocRules(Tables.lineitem(s, d), Tables.part(s, d))
+    },
+      """WITH items AS (
+        | SELECT DISTINCT l_orderkey AS ok, p_brand AS brand
+        | FROM lineitem JOIN part ON l_partkey = p_partkey),
+        |t AS (SELECT CAST(count(DISTINCT ok) AS BIGINT) AS n_orders FROM items),
+        |bc AS (SELECT brand, CAST(count(*) AS BIGINT) AS nb FROM items GROUP BY 1),
+        |p AS (
+        | SELECT a.brand AS brand_a, b.brand AS brand_b,
+        |  CAST(count(*) AS BIGINT) AS n_ab
+        | FROM items a JOIN items b ON a.ok = b.ok AND a.brand < b.brand
+        | GROUP BY 1, 2)
+        |SELECT brand_a, brand_b, n_ab,
+        | round(CAST(n_ab AS DOUBLE) / CAST(n_orders AS DOUBLE), 6) AS support,
+        | round(CAST(n_ab AS DOUBLE) / CAST(ca.nb AS DOUBLE), 6) AS conf_ab,
+        | round((CAST(n_ab AS DOUBLE) * CAST(n_orders AS DOUBLE))
+        |   / (CAST(ca.nb AS DOUBLE) * CAST(cb.nb AS DOUBLE)), 6) AS lift
+        |FROM p CROSS JOIN t
+        | JOIN bc ca ON p.brand_a = ca.brand
+        | JOIN bc cb ON p.brand_b = cb.brand
+        |ORDER BY brand_a, brand_b""".stripMargin),
+    // Where does each document sit in the corpus length distribution?
+    // (mid-rank CDF position — the quantile-normalized feature)
+    Q("q_quantile_normalize", { (s, d) =>
+      quantileNormalize(Tables.documents(s, d), "doc_id", "n_chars", 100L)
+    },
       """WITH c AS (
         | SELECT CAST(n_chars AS DOUBLE) AS v, count(*) AS c FROM documents
         | WHERE n_chars IS NOT NULL GROUP BY 1),
@@ -10339,8 +9763,13 @@ object Analytics {
         | round(CAST(2 * cum - c + 1 AS DOUBLE)
         |   / CAST(2 * n AS DOUBLE), 6) AS q
         |FROM documents JOIN r ON CAST(n_chars AS DOUBLE) = r.v
-        |WHERE doc_id < 100 ORDER BY doc_id""".stripMargin,
-    "q_effect_size" ->
+        |WHERE doc_id < 100 ORDER BY doc_id""".stripMargin),
+    // How big is the en/non-en length difference, in pooled SDs?
+    // (Cohen's d — the effect size next to q_ks_test's significance.)
+    Q("q_effect_size", { (s, d) =>
+      cohensD(Tables.documents(s, d), length(col("text")),
+        col("lang") === "en")
+    },
       """WITH v AS (
         | SELECT CAST(length(text) AS BIGINT) AS v, (lang = 'en') AS ga
         | FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL),
@@ -10364,8 +9793,12 @@ object Analytics {
         |      + (qb - sb * sb / CAST(nb AS DOUBLE)))
         |     / (CAST(na AS DOUBLE) + CAST(nb AS DOUBLE) - 2)), 6)
         | END AS cohens_d
-        |FROM a""".stripMargin,
-    "q_moments" ->
+        |FROM a""".stripMargin),
+    // Shape of the order-value distribution per priority class: exact
+    // one-pass skewness + excess kurtosis (describe's missing moments).
+    Q("q_moments", { (s, d) =>
+      skewKurtosis(Tables.orders(s, d), "o_orderpriority", "o_totalprice")
+    },
       """WITH c AS (
         | SELECT o_orderpriority,
         |  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
@@ -10392,8 +9825,13 @@ object Analytics {
         |SELECT o_orderpriority, n,
         | CASE WHEN m2 > 0 THEN round(m3 / (m2 * sqrt(m2)), 6) END AS skewness,
         | CASE WHEN m2 > 0 THEN round(m4 / (m2 * m2) - 3.0, 6) END AS kurtosis_excess
-        |FROM mm ORDER BY o_orderpriority""".stripMargin,
-    "q_partial_corr" ->
+        |FROM mm ORDER BY o_orderpriority""".stripMargin),
+    // Does quantity still track line value once discount is controlled
+    // for? (first-order partial correlation, one moment pass)
+    Q("q_partial_corr", { (s, d) =>
+      partialCorr(Tables.lineitem(s, d),
+        "l_quantity", "l_extendedprice", "l_discount")
+    },
       """WITH a AS (
         | SELECT CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sx,
@@ -10433,8 +9871,11 @@ object Analytics {
         |  THEN round((rxy - rxz * ryz)
         |    / sqrt((1.0 - rxz * rxz) * (1.0 - ryz * ryz)), 6)
         | END AS r_xy_given_z
-        |FROM r""".stripMargin,
-    "q_runs_test" ->
+        |FROM r""".stripMargin),
+    // Is the daily up/down pattern random? (Wald–Wolfowitz runs test)
+    Q("q_runs_test", { (s, d) =>
+      runsTest(Tables.orders(s, d))
+    },
       """WITH d AS (
         | SELECT o_orderdate AS day,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS yc
@@ -10470,8 +9911,13 @@ object Analytics {
         |       * (CAST(n_pos AS DOUBLE) + CAST(n_neg AS DOUBLE))
         |       * ((CAST(n_pos AS DOUBLE) + CAST(n_neg AS DOUBLE)) - 1))), 6)
         | END AS z
-        |FROM a""".stripMargin,
-    "q_weighted_median" ->
+        |FROM a""".stripMargin),
+    // What price point moves the units? (quantity-weighted price
+    // quartiles — exact, interpolation-free, tie-deterministic.)
+    Q("q_weighted_median", { (s, d) =>
+      weightedPercentiles(Tables.lineitem(s, d),
+        "l_extendedprice", "l_quantity")
+    },
       """WITH c AS (
         | SELECT CAST(l_extendedprice AS DOUBLE) AS v,
         |  sum(CAST(l_quantity AS BIGINT)) AS c
@@ -10486,8 +9932,12 @@ object Analytics {
         | min(CASE WHEN 4 * cum >= n THEN v END) AS wp25,
         | min(CASE WHEN 2 * cum >= n THEN v END) AS wp50,
         | min(CASE WHEN 4 * cum >= 3 * n THEN v END) AS wp75
-        |FROM r CROSS JOIN t GROUP BY t.n""".stripMargin,
-    "q_spearman" ->
+        |FROM r CROSS JOIN t GROUP BY t.n""".stripMargin),
+    // Does quantity drive line value monotonically? (tie-corrected
+    // Spearman ρ — the rank-based complement to q_a8_corr's Pearson.)
+    Q("q_spearman", { (s, d) =>
+      spearman(Tables.lineitem(s, d), "l_quantity", "l_extendedprice")
+    },
       """WITH r AS (
         | SELECT CAST(l_quantity AS DOUBLE) AS xv,
         |  CAST(l_extendedprice AS DOUBLE) AS yv
@@ -10524,8 +9974,12 @@ object Analytics {
         |    / sqrt((CAST(n AS DOUBLE) * sxx - sx * sx)
         |        * (CAST(n AS DOUBLE) * syy - sy * sy)), 6)
         | END AS rho
-        |FROM a""".stripMargin,
-    "q_triangle_census" ->
+        |FROM a""".stripMargin),
+    // How cliquish is the co-purchase graph? (triangle census over the
+    // lift>1 brand graph — the graph-analytics complement to the rules.)
+    Q("q_triangle_census", { (s, d) =>
+      coPurchaseTriangles(Tables.lineitem(s, d), Tables.part(s, d))
+    },
       """WITH items AS (
         | SELECT DISTINCT l_orderkey AS ok, p_brand AS brand
         | FROM lineitem JOIN part ON l_partkey = p_partkey),
@@ -10559,8 +10013,52 @@ object Analytics {
         |  round(3.0 * CAST(n_triangles AS DOUBLE)
         |    / CAST(n_triples AS DOUBLE), 6)
         | END AS clustering_coeff
-        |FROM st CROSS JOIN tri""".stripMargin,
-    "q_anomaly_daily" ->
+        |FROM st CROSS JOIN tri""".stripMargin),
+    // Which weekdays carry the revenue? (multiplicative seasonality index)
+    Q("q_dow_seasonality", { (s, d) =>
+      dowSeasonality(Tables.orders(s, d))
+    },
+      """WITH d AS (
+        | SELECT o_orderdate AS day,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS yc
+        | FROM orders GROUP BY 1),
+        |b AS (
+        | SELECT CAST(isodow(day) AS INTEGER) AS dow,
+        |  CAST(count(*) AS BIGINT) AS n_days, sum(yc) AS s
+        | FROM d GROUP BY 1),
+        |t AS (SELECT CAST(count(*) AS BIGINT) AS n, sum(yc) AS st FROM d)
+        |SELECT dow, n_days,
+        | round(CAST(s AS DOUBLE) / CAST(n_days AS DOUBLE) / 100.0, 6) AS avg_rev,
+        | round((CAST(s AS DOUBLE) * CAST(n AS DOUBLE))
+        |   / (CAST(n_days AS DOUBLE) * CAST(st AS DOUBLE)), 6) AS index
+        |FROM b CROSS JOIN t ORDER BY dow""".stripMargin),
+    // Where does the revenue level shift? (exact-integer CUSUM argmax)
+    Q("q_changepoint", { (s, d) =>
+      cusumChangepoint(Tables.orders(s, d))
+    },
+      """WITH d AS (
+        | SELECT o_orderdate AS day,
+        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS yc
+        | FROM orders GROUP BY 1),
+        |c AS (
+        | SELECT day,
+        |  sum(yc) OVER (ORDER BY day
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pre,
+        |  CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS t
+        | FROM d),
+        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n, sum(yc) AS s FROM d),
+        |x AS (
+        | SELECT day, n,
+        |  CAST(n AS HUGEINT) * CAST(pre AS HUGEINT)
+        |    - CAST(t AS HUGEINT) * CAST(s AS HUGEINT) AS dt
+        | FROM c CROSS JOIN tot)
+        |SELECT day, n AS n_days,
+        | round(CAST(dt AS DOUBLE) / CAST(n AS DOUBLE) / 100.0, 6) AS cusum
+        |FROM x ORDER BY abs(dt) DESC, day LIMIT 1""".stripMargin),
+    // Which days page the on-call? (dow-adjusted |z| > 2 on daily counts)
+    Q("q_anomaly_daily", { (s, d) =>
+      dailyAnomalies(Tables.events(s, d))
+    },
       """WITH d AS (
         | SELECT CAST(ts AS DATE) AS day, count(*) AS y FROM events GROUP BY 1),
         |b AS (
@@ -10585,44 +10083,30 @@ object Analytics {
         |        * (CAST(sa AS DOUBLE) / CAST(nd AS DOUBLE))), 6) AS z
         | FROM a CROSS JOIN m)
         |SELECT day, dow, y, adj6 AS adj, z
-        |FROM z WHERE abs(z) > 2.0 ORDER BY day""".stripMargin,
-    "q_dow_seasonality" ->
-      """WITH d AS (
-        | SELECT o_orderdate AS day,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS yc
-        | FROM orders GROUP BY 1),
-        |b AS (
-        | SELECT CAST(isodow(day) AS INTEGER) AS dow,
-        |  CAST(count(*) AS BIGINT) AS n_days, sum(yc) AS s
-        | FROM d GROUP BY 1),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n, sum(yc) AS st FROM d)
-        |SELECT dow, n_days,
-        | round(CAST(s AS DOUBLE) / CAST(n_days AS DOUBLE) / 100.0, 6) AS avg_rev,
-        | round((CAST(s AS DOUBLE) * CAST(n AS DOUBLE))
-        |   / (CAST(n_days AS DOUBLE) * CAST(st AS DOUBLE)), 6) AS index
-        |FROM b CROSS JOIN t ORDER BY dow""".stripMargin,
-    "q_changepoint" ->
-      """WITH d AS (
-        | SELECT o_orderdate AS day,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS yc
-        | FROM orders GROUP BY 1),
-        |c AS (
-        | SELECT day,
-        |  sum(yc) OVER (ORDER BY day
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pre,
-        |  CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS t
-        | FROM d),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n, sum(yc) AS s FROM d),
-        |x AS (
-        | SELECT day, n,
-        |  CAST(n AS HUGEINT) * CAST(pre AS HUGEINT)
-        |    - CAST(t AS HUGEINT) * CAST(s AS HUGEINT) AS dt
-        | FROM c CROSS JOIN tot)
-        |SELECT day, n AS n_days,
-        | round(CAST(dt AS DOUBLE) / CAST(n AS DOUBLE) / 100.0, 6) AS cusum
-        |FROM x ORDER BY abs(dt) DESC, day LIMIT 1""".stripMargin,
-    "q_pagerank" -> pagerankSql(10),
-    "q_graph_degree" ->
+        |FROM z WHERE abs(z) > 2.0 ORDER BY day""".stripMargin),
+    // Which event types anchor user journeys? (integer fixed-point
+    // PageRank over the session transition graph.)
+    Q("q_pagerank", { (s, d) =>
+      pagerankTransitions(Tables.events(s, d))
+    },
+      pagerankSql(10)),
+    // Degree distribution of the session-transition graph (distinct
+    // in/out neighbors per node, then node counts per degree) — the
+    // third graph report alongside PageRank and the triangle census.
+    // Everything after the shared corpus-sized sessionize pass runs on
+    // the event-type²-bounded edge frame.
+    Q("q_graph_degree", { (s, d) =>
+      val edges = sessionTransitions(Tables.events(s, d))
+        .select("src", "dst").persistTracked()
+      def dist(keyCol: String, dir: String) = edges
+        .groupBy(col(keyCol).as("node"))
+        .agg(countDistinct(if (keyCol == "src") col("dst") else col("src"))
+          .as("degree"))
+        .groupBy("degree").agg(count(lit(1)).as("n_nodes"))
+        .select(lit(dir).as("direction"), col("degree"), col("n_nodes"))
+      dist("src", "out").unionByName(dist("dst", "in"))
+        .orderBy("direction", "degree")
+    },
       s"""WITH $transitionEdgesSql,
          |eg AS (SELECT DISTINCT src, dst FROM edges),
          |outd AS (
@@ -10636,8 +10120,35 @@ object Analytics {
          |SELECT 'out' AS direction, degree, n_nodes FROM outd
          |UNION ALL
          |SELECT 'in' AS direction, degree, n_nodes FROM ind
-         |ORDER BY direction, degree""".stripMargin,
-    "q_mutual_info" ->
+         |ORDER BY direction, degree""".stripMargin),
+    // Mutual information I(event_type; weekday) with marginal entropies
+    // — the feature-relevance audit (does behavior depend on day?).
+    // Joint counts collapse to a ≤ |types|·7 cell frame in one map-side-
+    // combined shuffle; marginals re-aggregate the cells; per-cell info
+    // terms round to 9 dp and fold as DECIMAL so the sums are
+    // aggregation-order-independent on both engines.
+    Q("q_mutual_info", { (s, d) =>
+      val cells = Tables.events(s, d)
+        .select(col("event_type").as("x"), (weekday(col("ts")) + 1).as("y"))
+        .groupBy("x", "y").agg(count(lit(1)).as("cxy"))
+        .persistTracked()
+      val cx = cells.groupBy("x").agg(sum("cxy").as("cx"))
+      val cy = cells.groupBy("y").agg(sum("cxy").as("cy"))
+      val n = cells.agg(sum("cxy").as("n"))
+      def infoFold(term: Column) =
+        round(sum(round(term, 9).cast(DecimalType(28, 9))).cast("double"), 6)
+      val mi = cells.join(broadcast(cx), Seq("x")).join(broadcast(cy), Seq("y"))
+        .crossJoin(broadcast(n))
+        .agg(infoFold((col("cxy").cast("double") / col("n")) *
+          log2(col("cxy").cast("double") * col("n") /
+            (col("cx").cast("double") * col("cy")))).as("mi"))
+      def entropy(marg: DataFrame, c: String) = marg.crossJoin(broadcast(n))
+        .agg(infoFold((col(c).cast("double") / col("n")) *
+          log2(col("n").cast("double") / col(c))).as(s"h_$c"))
+      mi.crossJoin(broadcast(entropy(cx, "cx")))
+        .crossJoin(broadcast(entropy(cy, "cy")))
+        .select(col("mi"), col("h_cx").as("h_x"), col("h_cy").as("h_y"))
+    },
       """WITH cells AS (
         | SELECT event_type AS x, CAST(isodow(ts) AS INTEGER) AS y,
         |  count(*) AS cxy
@@ -10661,42 +10172,82 @@ object Analytics {
         |   (CAST(cy AS DOUBLE) / n) * log2(CAST(n AS DOUBLE) / cy), 9)
         |   AS DECIMAL(28,9))) AS DOUBLE), 6) AS h_y
         | FROM cy, n)
-        |SELECT mi, h_x, h_y FROM mi, hx, hy""".stripMargin,
-    "q_assoc_rules" ->
-      """WITH items AS (
-        | SELECT DISTINCT l_orderkey AS ok, p_brand AS brand
-        | FROM lineitem JOIN part ON l_partkey = p_partkey),
-        |t AS (SELECT CAST(count(DISTINCT ok) AS BIGINT) AS n_orders FROM items),
-        |bc AS (SELECT brand, CAST(count(*) AS BIGINT) AS nb FROM items GROUP BY 1),
-        |p AS (
-        | SELECT a.brand AS brand_a, b.brand AS brand_b,
-        |  CAST(count(*) AS BIGINT) AS n_ab
-        | FROM items a JOIN items b ON a.ok = b.ok AND a.brand < b.brand
-        | GROUP BY 1, 2)
-        |SELECT brand_a, brand_b, n_ab,
-        | round(CAST(n_ab AS DOUBLE) / CAST(n_orders AS DOUBLE), 6) AS support,
-        | round(CAST(n_ab AS DOUBLE) / CAST(ca.nb AS DOUBLE), 6) AS conf_ab,
-        | round((CAST(n_ab AS DOUBLE) * CAST(n_orders AS DOUBLE))
-        |   / (CAST(ca.nb AS DOUBLE) * CAST(cb.nb AS DOUBLE)), 6) AS lift
-        |FROM p CROSS JOIN t
-        | JOIN bc ca ON p.brand_a = ca.brand
-        | JOIN bc cb ON p.brand_b = cb.brand
-        |ORDER BY brand_a, brand_b""".stripMargin,
-    "q_cube_dashboard" ->
+        |SELECT mi, h_x, h_y FROM mi, hx, hy""".stripMargin),
+
+    // A9 — the full dashboard lattice in ONE pass: CUBE(year, status)
+    // computes detail + BOTH one-dimension subtotals + grand total in a
+    // single aggregate — four dashboard queries, one scan, one shuffle
+    // (Expand multiplies rows before the exchange, but the map-side
+    // combine collapses them to group cardinality). Complements
+    // q_rollup_dashboard's strict hierarchy; grouping_id bit semantics
+    // pinned against DuckDB's GROUPING.
+    Q("q_cube_dashboard", { (s, d) =>
+      Tables.orders(s, d)
+        .cube(year(col("o_orderdate")).as("y"), col("o_orderstatus").as("st"))
+        .agg(grouping_id().as("gid"), count(lit(1)).as("cnt"),
+          sumDec(col("o_totalprice")).as("total"))
+        .select(col("gid"), col("y"), col("st"), col("cnt"), col("total"))
+        .orderBy(col("gid"), col("y").asc_nulls_last, col("st").asc_nulls_last)
+    },
       s"""SELECT GROUPING(y, st) AS gid, y, st, count(*) AS cnt,
          | ${sumDecSql("o_totalprice")} AS total
          |FROM (SELECT CAST(year(o_orderdate) AS INTEGER) AS y,
          |       o_orderstatus AS st, o_totalprice FROM orders)
          |GROUP BY CUBE(y, st)
-         |ORDER BY gid, y NULLS LAST, st NULLS LAST""".stripMargin,
-    "q_rollup_dashboard" ->
+         |ORDER BY gid, y NULLS LAST, st NULLS LAST""".stripMargin),
+
+    // A9 — the dashboard hierarchy in ONE pass: ROLLUP(year, priority)
+    // computes detail + per-year subtotal + grand total in a single
+    // aggregate (one scan, one shuffle) instead of the three separate
+    // dashboard queries a naive port would run; grouping_id
+    // disambiguates the levels (bit semantics verified identical to
+    // DuckDB's GROUPING). Null placement pinned NULLS LAST on both
+    // engines — rollup's subtotal rows are null-keyed by construction.
+    Q("q_rollup_dashboard", { (s, d) =>
+      Tables.orders(s, d)
+        .rollup(year(col("o_orderdate")).as("y"),
+          col("o_orderpriority").as("prio"))
+        .agg(grouping_id().as("gid"), count(lit(1)).as("cnt"),
+          sumDec(col("o_totalprice")).as("total"))
+        .select(col("gid"), col("y"), col("prio"), col("cnt"), col("total"))
+        .orderBy(col("gid"), col("y").asc_nulls_last, col("prio").asc_nulls_last)
+    },
       s"""SELECT GROUPING(y, prio) AS gid, y, prio, count(*) AS cnt,
          | ${sumDecSql("o_totalprice")} AS total
          |FROM (SELECT CAST(year(o_orderdate) AS INTEGER) AS y,
          |       o_orderpriority AS prio, o_totalprice FROM orders)
          |GROUP BY ROLLUP(y, prio)
-         |ORDER BY gid, y NULLS LAST, prio NULLS LAST""".stripMargin,
-    "q_session_paths" ->
+         |ORDER BY gid, y NULLS LAST, prio NULLS LAST""".stripMargin),
+
+    // A9 — dashboard: totals by year ("Injury and Fatality Trends by Year").
+    // SESSION PATH ANALYSIS — the most common event-type sequences per
+    // session (the "user journey" report): sessionize with the same
+    // strict->gap rule as q_sessionize, render each session's ordered
+    // type sequence as a path string, count sessions per path. Ordering
+    // inside a session is total — (ts, event_id) — so equal-timestamp
+    // events render identically in both engines. The per-session
+    // collect_list is session-length-bounded; the path rollup shuffles
+    // path-cardinality keys; the final top-20 sorts a path-count frame.
+    Q("q_session_paths", { (s, d) =>
+      val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
+      val evs = Tables.events(s, d)
+        .withColumn("ts", date_trunc("second", col("ts")))
+        .withColumn("prev_ts", lag(col("ts"), 1).over(byUser))
+        .withColumn("new_sess",
+          when(col("prev_ts").isNull ||
+            (unix_timestamp(col("ts")) - unix_timestamp(col("prev_ts"))) > 1800, 1)
+            .otherwise(0))
+        .withColumn("sess_no", sum(col("new_sess")).over(byUser))
+      evs.groupBy("user_id", "sess_no")
+        .agg(concat_ws("->",
+          transform(
+            sort_array(collect_list(struct(col("ts"), col("event_id"),
+              col("event_type")))),
+            e => e.getField("event_type"))).as("path"))
+        .groupBy("path").agg(count(lit(1)).as("n_sessions"))
+        .orderBy(desc("n_sessions"), col("path"))
+        .limit(20)
+    },
       """WITH e AS (
         | SELECT user_id, event_id, event_type,
         |  date_trunc('second', ts) AS ts FROM events),
@@ -10713,8 +10264,20 @@ object Analytics {
         |  string_agg(event_type, '->' ORDER BY ts, event_id) AS path
         | FROM s GROUP BY 1, 2)
         |SELECT path, count(*) AS n_sessions
-        |FROM p GROUP BY 1 ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin,
-    "q_session_transitions" ->
+        |FROM p GROUP BY 1 ORDER BY n_sessions DESC, path LIMIT 20""".stripMargin),
+
+    // SESSION TRANSITION MATRIX — first-order Markov counts over event
+    // types within sessions (the "what do users do next" report, and the
+    // input to any journey-graph / next-action model). Same sessionize
+    // block as q_session_paths / q_sessionize; the in-session lag runs
+    // over the TOTAL order (ts, event_id) so tied timestamps resolve
+    // identically in both engines. Scale shape: two user-partitioned
+    // windows (user-bounded partitions), then a groupBy on (src, dst) —
+    // type-cardinality² keys, map-side combined, so the only full-data
+    // shuffle is the sessionize window itself.
+    Q("q_session_transitions", { (s, d) =>
+      sessionTransitions(Tables.events(s, d))
+    },
       """WITH e AS (
         | SELECT user_id, event_id, event_type,
         |  date_trunc('second', ts) AS ts FROM events),
@@ -10731,41 +10294,20 @@ object Analytics {
         |   PARTITION BY user_id, sess_no ORDER BY ts, event_id) AS src
         | FROM s)
         |SELECT src, dst, count(*) AS n FROM t
-        |WHERE src IS NOT NULL GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_entropy_rate" ->
-      """WITH e AS (
-        | SELECT user_id, event_id, event_type,
-        |  date_trunc('second', ts) AS ts FROM events),
-        |g AS (
-        | SELECT *, CASE WHEN lag(ts) OVER w IS NULL
-        |   OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1 ELSE 0 END AS new_sess
-        | FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        | SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_no
-        | FROM g),
-        |t AS (
-        | SELECT event_type AS dst, lag(event_type) OVER (
-        |   PARTITION BY user_id, sess_no ORDER BY ts, event_id) AS src
-        | FROM s),
-        |tr AS (SELECT src, dst, count(*) AS nij FROM t
-        |       WHERE src IS NOT NULL GROUP BY 1, 2),
-        |ni AS (SELECT src, CAST(sum(nij) AS BIGINT) AS ni FROM tr GROUP BY 1),
-        |h AS (
-        | SELECT tr.src, max(ni.ni) AS ni,
-        |  sum(CAST(round(-((CAST(nij AS DOUBLE) / CAST(ni.ni AS DOUBLE))
-        |    * log2(CAST(nij AS DOUBLE) / CAST(ni.ni AS DOUBLE))), 6)
-        |   AS DECIMAL(18,6))) AS hd
-        | FROM tr JOIN ni ON tr.src = ni.src GROUP BY 1),
-        |tt AS (SELECT CAST(sum(ni) AS BIGINT) AS nt, count(*) AS n_states
-        |       FROM h)
-        |SELECT n_states, nt AS n_transitions,
-        | CAST(sum(CAST(round(CAST(ni AS DOUBLE) / CAST(nt AS DOUBLE)
-        |   * CAST(hd AS DOUBLE), 6) AS DECIMAL(18,6))) AS DOUBLE)
-        |  AS entropy_rate_bits,
-        | round(log2(CAST(n_states AS DOUBLE)), 6) AS max_bits
-        |FROM h, tt GROUP BY 1, 2""".stripMargin,
-    "q_think_time" ->
+        |WHERE src IS NOT NULL GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+
+    // THINK-TIME DISTRIBUTION — P50/P90/P99 of the seconds between
+    // consecutive events inside a session (the engagement/latency
+    // report, and the empirical basis for choosing the session gap
+    // threshold itself). Gaps are integer seconds from the same total
+    // (ts, event_id) in-session order as q_session_transitions, so tied
+    // timestamps contribute exact-0 gaps in both engines; percentiles
+    // run through the distributed exact engine (value-count shuffle +
+    // interpolation — no value buffering at any cardinality, unlike the
+    // builtin `percentile` aggregate).
+    Q("q_think_time", { (s, d) =>
+      thinkTime(Tables.events(s, d))
+    },
       """WITH e AS (
         | SELECT user_id, event_id, date_trunc('second', ts) AS ts FROM events),
         |g AS (
@@ -10784,8 +10326,19 @@ object Analytics {
         | quantile_cont(gap, 0.5) AS p50,
         | quantile_cont(gap, 0.9) AS p90,
         | quantile_cont(gap, 0.99) AS p99
-        |FROM gp WHERE gap IS NOT NULL""".stripMargin,
-    "q_ab_test" ->
+        |FROM gp WHERE gap IS NOT NULL""".stripMargin),
+
+    // A/B EXPERIMENT READOUT — two-proportion z-test on purchase
+    // conversion under a deterministic md5 user split (the same
+    // hash-bucket assignment family as q_sample_split, so variant
+    // membership is reproducible across engines and runs). One
+    // user-keyed aggregate (bounded by user cardinality), then a scalar
+    // conditional rollup — no joins, no windows. The z-score is a fixed
+    // IEEE-double expression tree evaluated identically in both engines
+    // and rounded to 6dp (the q_drift_psi float-parity convention).
+    Q("q_ab_test", { (s, d) =>
+      abTest(Tables.events(s, d))
+    },
       """WITH u AS (
         | SELECT user_id,
         |  max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS converted
@@ -10811,8 +10364,59 @@ object Analytics {
         |SELECT n_c, x_c, n_t, x_t,
         | round(rc, 6) AS rate_c, round(rt, 6) AS rate_t,
         | CASE WHEN se > 0 THEN round((rt - rc) / se, 6) END AS z
-        |FROM b""".stripMargin,
-    "q_uplift_qini" -> {
+        |FROM b""".stripMargin),
+
+    // UPLIFT QINI CURVE (Radcliffe 2007) — the targeting readout: rank
+    // users by a score, and at each decile depth ask how many EXTRA
+    // responders the treated group shows over the control baseline
+    // scaled to its size: Qini(k) = Rt(k) − Rc(k)·Nt(k)/Nc(k). The
+    // harness contract is the CURVE machinery (a real deployment plugs
+    // in a model score; here score = activity = events-per-user, and
+    // responder = above-median purchase count, so both paths are
+    // non-degenerate at any SF). Sort-free at scale: deciles come from
+    // 9 broadcast exact-percentile thresholds + a map-side when-chain
+    // (the q_decile_report idiom — never a global ntile sort over
+    // users); cumulatives run on the 10-row decile spine. Counts exact
+    // integers; qini is one rounded double per row.
+    Q("q_uplift_qini", { (s, d) =>
+      val perUser = Tables.events(s, d)
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("n_ev"),
+          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
+            .as("m"))
+      val med = exactPercentiles(perUser, "m", Seq("med" -> 0.5))
+      val u = perUser.crossJoin(broadcast(med))
+        .select(
+          (conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
+            .cast("long") % 2).as("arm"),
+          (col("m") > col("med")).as("resp"),
+          col("n_ev").cast("double").as("score"))
+      val thr = exactPercentiles(u, "score",
+        (1 to 9).map(i => s"t$i" -> i / 10.0))
+      val bucketed = u.crossJoin(broadcast(thr))
+        .withColumn("decile", lit(1) +
+          (1 to 9).map(i => when(col("score") > col(s"t$i"), 1).otherwise(0))
+            .reduce(_ + _))
+      val perD = bucketed.groupBy("decile").agg(
+        count(when(col("arm") === 1, 1)).as("nt"),
+        count(when(col("arm") === 0, 1)).as("nc"),
+        sum(when(col("arm") === 1 && col("resp"), 1L).otherwise(0L))
+          .as("rt"),
+        sum(when(col("arm") === 0 && col("resp"), 1L).otherwise(0L))
+          .as("rc"))
+      // cumulate from the BEST decile down (decile 10 = highest score)
+      val w = Window.orderBy(desc("decile"))
+      perD
+        .select(row_number().over(w).as("k"),
+          sum(col("nt")).over(w).as("cnt"), sum(col("nc")).over(w).as("cnc"),
+          sum(col("rt")).over(w).as("crt"), sum(col("rc")).over(w).as("crc"))
+        .select(col("k"), col("cnt").as("n_t"), col("cnc").as("n_c"),
+          col("crt").as("resp_t"), col("crc").as("resp_c"),
+          round(col("crt").cast("double") -
+            col("crc").cast("double") * col("cnt").cast("double") /
+              col("cnc").cast("double"), 6).as("qini"))
+        .orderBy("k")
+    }, {
       val thrCols = (1 to 9)
         .map(i => s"quantile_cont(score, 0.$i) AS t$i").mkString(", ")
       val caseSum = (1 to 9)
@@ -10851,8 +10455,55 @@ object Analytics {
          |  - CAST(resp_c AS DOUBLE) * CAST(n_t AS DOUBLE) / CAST(n_c AS DOUBLE), 6)
          |  AS qini
          |FROM c ORDER BY k""".stripMargin
+    }),
+
+    // WINSORIZED LIFT — the heavy-tail-robust experiment readout: per
+    // user revenue clipped at the POOLED exact p99 before the
+    // two-sample z (one whale in one arm can flip a raw-mean readout;
+    // clipping at a pooled quantile bounds any single user's influence
+    // while using the same threshold for both arms, so it cannot bias
+    // the comparison). Kohavi et al.'s standard metric-capping
+    // practice. Exactness: per-user revenue is exact integer cents; the
+    // p99 threshold comes from the distributed exact-percentile engine
+    // and broadcasts back; clipped values round to 2dp DECIMAL so the
+    // arm sums are order-independent; the z tree is one double
+    // expression from those decimal moments. Scale: one user-keyed
+    // aggregate + one percentile pass + one scalar rollup.
+    Q("q_winsorized_lift", { (s, d) =>
+      val perUser = Tables.events(s, d).filter(col("value").isNotNull)
+        .groupBy("user_id")
+        .agg(sum((col("value").cast(DecimalType(18, 2)) * 100)
+          .cast("long")).as("sc"))
+        .select(col("user_id"),
+          (col("sc").cast("double") / 100.0).as("v"))
+      val p99 = exactPercentiles(perUser, "v", Seq("p99" -> 0.99))
+      val clipped = perUser.crossJoin(broadcast(p99))
+        .select(col("p99"),
+          (conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
+            .cast("long") % 2).as("arm"),
+          round(least(col("v"), col("p99")), 2)
+            .cast(DecimalType(18, 2)).as("w"))
+      val agg = clipped.groupBy("p99").agg(
+        count(when(col("arm") === 0, 1)).as("n_c"),
+        sum(when(col("arm") === 0, col("w"))).as("s_c"),
+        sum(when(col("arm") === 0, col("w") * col("w"))).as("ss_c"),
+        count(when(col("arm") === 1, 1)).as("n_t"),
+        sum(when(col("arm") === 1, col("w"))).as("s_t"),
+        sum(when(col("arm") === 1, col("w") * col("w"))).as("ss_t"))
+      def mean(sc: String, n: String) =
+        col(sc).cast("double") / col(n).cast("double")
+      def variance(ss: String, sc: String, n: String) =
+        (col(ss).cast("double") -
+          col(sc).cast("double") * col(sc).cast("double") /
+            col(n).cast("double")) / (col(n).cast("double") - lit(1.0))
+      val se = sqrt(variance("ss_c", "s_c", "n_c") / col("n_c").cast("double")
+        + variance("ss_t", "s_t", "n_t") / col("n_t").cast("double"))
+      agg.select(col("n_c"), col("n_t"), round(col("p99"), 6).as("clip_at"),
+        round(mean("s_c", "n_c"), 6).as("mean_c"),
+        round(mean("s_t", "n_t"), 6).as("mean_t"),
+        when(se > 0, round((mean("s_t", "n_t") - mean("s_c", "n_c")) / se, 6))
+          .as("z"))
     },
-    "q_winsorized_lift" ->
       """WITH u AS (
         | SELECT user_id,
         |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS sc
@@ -10884,8 +10535,141 @@ object Analytics {
         |SELECT n_c, n_t, round(p99, 6) AS clip_at,
         | round(mc, 6) AS mean_c, round(mt, 6) AS mean_t,
         | CASE WHEN se > 0 THEN round((mt - mc) / se, 6) END AS z
-        |FROM b""".stripMargin,
-    "q_lift_heterogeneity" ->
+        |FROM b""".stripMargin),
+
+    // MARKOV ENTROPY RATE of in-session event sequences — how
+    // predictable is the next event given the current one? The plug-in
+    // estimator Σ_i π̂_i·H(dst | src=i) over the q_session_transitions
+    // matrix (π̂ = empirical source frequency), reported beside the
+    // log2(k) ceiling — the sequence-predictability readout behind
+    // next-event prefetching and session-model sanity checks. Exactness:
+    // all counts exact; each −p·log2(p) term and each π_i·H_i product
+    // rounds to 6dp DECIMAL before its fold (order-independent, the
+    // q_mix_entropy convention). Scale: the transition matrix is
+    // state²-bounded (windows on it are trivially bounded); everything
+    // upstream is the sessionize shuffle the transitions query already
+    // pays.
+    Q("q_entropy_rate", { (s, d) =>
+      val tr = sessionTransitions(Tables.events(s, d))
+        .withColumnRenamed("n", "nij")
+      val bySrc = tr.withColumn("ni",
+        sum(col("nij")).over(Window.partitionBy("src")))
+      val p = col("nij").cast("double") / col("ni").cast("double")
+      val hi = bySrc.groupBy("src")
+        .agg(max(col("ni")).as("ni"),
+          sum(round(-(p * log2(p)), 6).cast(DecimalType(18, 6))).as("hd"))
+      val tot = hi.agg(sum(col("ni")).as("nt"),
+        count(lit(1)).as("n_states"))
+      hi.crossJoin(broadcast(tot))
+        .select(col("nt"), col("n_states"),
+          round(col("ni").cast("double") / col("nt").cast("double") *
+            col("hd").cast("double"), 6).cast(DecimalType(18, 6)).as("term"))
+        .groupBy("n_states", "nt")
+        .agg(sum(col("term")).as("r"))
+        .select(col("n_states"), col("nt").as("n_transitions"),
+          col("r").cast("double").as("entropy_rate_bits"),
+          round(log2(col("n_states").cast("double")), 6).as("max_bits"))
+    },
+      """WITH e AS (
+        | SELECT user_id, event_id, event_type,
+        |  date_trunc('second', ts) AS ts FROM events),
+        |g AS (
+        | SELECT *, CASE WHEN lag(ts) OVER w IS NULL
+        |   OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1 ELSE 0 END AS new_sess
+        | FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |s AS (
+        | SELECT *, sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
+        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_no
+        | FROM g),
+        |t AS (
+        | SELECT event_type AS dst, lag(event_type) OVER (
+        |   PARTITION BY user_id, sess_no ORDER BY ts, event_id) AS src
+        | FROM s),
+        |tr AS (SELECT src, dst, count(*) AS nij FROM t
+        |       WHERE src IS NOT NULL GROUP BY 1, 2),
+        |ni AS (SELECT src, CAST(sum(nij) AS BIGINT) AS ni FROM tr GROUP BY 1),
+        |h AS (
+        | SELECT tr.src, max(ni.ni) AS ni,
+        |  sum(CAST(round(-((CAST(nij AS DOUBLE) / CAST(ni.ni AS DOUBLE))
+        |    * log2(CAST(nij AS DOUBLE) / CAST(ni.ni AS DOUBLE))), 6)
+        |   AS DECIMAL(18,6))) AS hd
+        | FROM tr JOIN ni ON tr.src = ni.src GROUP BY 1),
+        |tt AS (SELECT CAST(sum(ni) AS BIGINT) AS nt, count(*) AS n_states
+        |       FROM h)
+        |SELECT n_states, nt AS n_transitions,
+        | CAST(sum(CAST(round(CAST(ni AS DOUBLE) / CAST(nt AS DOUBLE)
+        |   * CAST(hd AS DOUBLE), 6) AS DECIMAL(18,6))) AS DOUBLE)
+        |  AS entropy_rate_bits,
+        | round(log2(CAST(n_states AS DOUBLE)), 6) AS max_bits
+        |FROM h, tt GROUP BY 1, 2""".stripMargin),
+
+    // LIFT-HETEROGENEITY READOUT (fixed-effect meta-analysis across
+    // user segments — Cochran 1954's Q, Higgins & Thompson 2002's I²):
+    // the per-segment treatment lifts on purchases-per-user are pooled
+    // inverse-variance, and Q = Σwθ² − (Σwθ)²/Σw tests whether the
+    // segments genuinely disagree (Q > χ²₀.₀₅(k−1) ⇒ one global lift
+    // number is hiding real segment structure — ship per-segment
+    // readouts instead). The standard "is the effect uniform" gate run
+    // before rolling out a winner measured on the pooled population.
+    // Determinism: per-segment moments are exact integer (Σx, Σx²
+    // Longs); θ/w doubles derive from them identically in both engines;
+    // the cross-segment folds round each term to 9dp DECIMAL first
+    // (order-independent sums — the q_jackknife convention). Scale: one
+    // user-keyed aggregate, one (segment × arm)-cardinality rollup,
+    // then a k-row fold. No joins.
+    Q("q_lift_heterogeneity", { (s, d) =>
+      val k = 4
+      val perUser = Tables.events(s, d)
+        .groupBy("user_id")
+        .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
+          .as("m"))
+        .select(col("m"), (col("user_id") % k).as("seg"),
+          (conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
+            .cast("long") % 2).as("arm"))
+      val bySeg = perUser.groupBy("seg").agg(
+        count(when(col("arm") === 0, 1)).as("n_c"),
+        sum(when(col("arm") === 0, col("m")).otherwise(0L)).as("s_c"),
+        sum(when(col("arm") === 0, col("m") * col("m")).otherwise(0L))
+          .as("ss_c"),
+        count(when(col("arm") === 1, 1)).as("n_t"),
+        sum(when(col("arm") === 1, col("m")).otherwise(0L)).as("s_t"),
+        sum(when(col("arm") === 1, col("m") * col("m")).otherwise(0L))
+          .as("ss_t"))
+      def m(sc: String, n: String) =
+        col(sc).cast("double") / col(n).cast("double")
+      def v(ss: String, sc: String, n: String) =
+        (col(ss).cast("double") -
+          col(sc).cast("double") * col(sc).cast("double") /
+            col(n).cast("double")) / (col(n).cast("double") - lit(1.0))
+      val theta = m("s_t", "n_t") - m("s_c", "n_c")
+      val varT = v("ss_t", "s_t", "n_t") / col("n_t").cast("double") +
+        v("ss_c", "s_c", "n_c") / col("n_c").cast("double")
+      val w = lit(1.0) / varT
+      bySeg
+        .select(
+          round(w, 9).cast(DecimalType(28, 9)).as("w"),
+          round(w * theta, 9).cast(DecimalType(28, 9)).as("wt"),
+          round(w * theta * theta, 9).cast(DecimalType(28, 9)).as("wt2"))
+        .agg(count(lit(1)).as("k_segments"),
+          sum(col("w")).as("sw"), sum(col("wt")).as("swt"),
+          sum(col("wt2")).as("swt2"))
+        .select(col("k_segments"),
+          round(col("swt").cast("double") / col("sw").cast("double"), 6)
+            .as("pooled_lift"),
+          round(col("swt2").cast("double") -
+            col("swt").cast("double") * col("swt").cast("double") /
+              col("sw").cast("double"), 6).as("q_stat"),
+          (round(col("swt2").cast("double") -
+            col("swt").cast("double") * col("swt").cast("double") /
+              col("sw").cast("double"), 6) > lit(7.814728))
+            .as("heterogeneous"))
+        .withColumn("i2",
+          round(greatest(lit(0.0),
+            (col("q_stat") - (col("k_segments") - lit(1)).cast("double")) /
+              col("q_stat")), 6))
+        .select("k_segments", "pooled_lift", "q_stat", "i2",
+          "heterogeneous")
+    },
       """WITH u AS (
         | SELECT user_id,
         |  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS m
@@ -10926,8 +10710,15 @@ object Analytics {
         |SELECT k_segments, pooled_lift, q_stat,
         | round(greatest(0.0, (q_stat - (k_segments - 1)) / q_stat), 6) AS i2,
         | q_stat > 7.814728 AS heterogeneous
-        |FROM r""".stripMargin,
-    "q_aa_check" ->
+        |FROM r""".stripMargin),
+
+    // A/A NEGATIVE CONTROL — q_ab_test's split machinery replayed under
+    // 5 salted null splits; any unhealthy row indicts the assignment
+    // stack, not an experiment. Same single user-keyed aggregate as
+    // q_ab_test with the K-way explode AFTER per-user reduction.
+    Q("q_aa_check", { (s, d) =>
+      aaCheck(Tables.events(s, d))
+    },
       """WITH u AS (
         | SELECT user_id,
         |  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS m
@@ -10957,72 +10748,28 @@ object Analytics {
         | round(ma, 6) AS mean_a, round(mb, 6) AS mean_b,
         | CASE WHEN se > 0 THEN round((mb - ma) / se, 6) END AS z,
         | (se <= 0 OR abs(round((mb - ma) / se, 6)) < 1.96) AS healthy
-        |FROM b ORDER BY salt""".stripMargin,
-    "q_mad_outliers" ->
-      """WITH m AS (SELECT quantile_cont(o_totalprice, 0.5) AS med FROM orders),
-        |d AS (SELECT med, abs(o_totalprice - med) AS adev FROM orders, m),
-        |md AS (SELECT quantile_cont(adev, 0.5) AS mad FROM d)
-        |SELECT med, mad, count(*) AS n_total,
-        | CAST(sum(CASE WHEN adev > CAST(4.4478 AS DOUBLE) * mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-        |FROM d, md GROUP BY med, mad""".stripMargin,
-    "q_trimmed_mean" ->
-      """WITH t AS (SELECT quantile_cont(o_totalprice, 0.05) AS p05,
-        |  quantile_cont(o_totalprice, 0.95) AS p95 FROM orders)
-        |SELECT p05, p95,
-        | count(CASE WHEN o_totalprice >= p05 AND o_totalprice <= p95 THEN 1 END) AS n_kept,
-        | count(*) AS n_total,
-        | CAST(sum(CAST(CASE WHEN o_totalprice >= p05 AND o_totalprice <= p95
-        |   THEN o_totalprice END AS DECIMAL(18,2))) AS DOUBLE)
-        |  / count(CASE WHEN o_totalprice >= p05 AND o_totalprice <= p95 THEN 1 END) AS mean_trimmed
-        |FROM orders, t GROUP BY p05, p95""".stripMargin,
-    "q_gini" ->
-      """WITH c AS (
-        | SELECT o_totalprice AS v, count(*) AS c FROM orders
-        | WHERE o_totalprice IS NOT NULL GROUP BY 1),
-        |r AS (
-        | SELECT v, c, sum(c) OVER (ORDER BY v
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM c),
-        |a AS (
-        | SELECT CAST(max(cum) AS BIGINT) AS n_rows,
-        |  CAST(sum(CAST(v AS DECIMAL(18,2)) * c) AS DOUBLE) AS sx,
-        |  CAST(sum(CAST(v AS DECIMAL(18,2))
-        |    * CAST(c * (2 * cum - c + 1) AS DECIMAL(38,0))) AS DOUBLE) AS s2
-        | FROM r)
-        |SELECT n_rows,
-        | round(s2 / (CAST(n_rows AS DOUBLE) * sx)
-        |   - (CAST(n_rows AS DOUBLE) + 1) / CAST(n_rows AS DOUBLE), 6) AS gini
-        |FROM a""".stripMargin,
-    "q_gini_by_source" ->
-      """WITH c AS (
-        | SELECT source, n_chars AS v, count(*) AS c FROM documents
-        | WHERE n_chars IS NOT NULL AND source IS NOT NULL GROUP BY 1, 2),
-        |r AS (
-        | SELECT source, v, c, sum(c) OVER (PARTITION BY source ORDER BY v
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM c),
-        |a AS (
-        | SELECT source, CAST(max(cum) AS BIGINT) AS n_rows,
-        |  CAST(sum(CAST(v AS DECIMAL(18,2)) * c) AS DOUBLE) AS sx,
-        |  CAST(sum(CAST(v AS DECIMAL(18,2))
-        |    * CAST(c * (2 * cum - c + 1) AS DECIMAL(38,0))) AS DOUBLE) AS s2
-        | FROM r GROUP BY 1)
-        |SELECT source, n_rows,
-        | round(s2 / (CAST(n_rows AS DOUBLE) * sx)
-        |   - (CAST(n_rows AS DOUBLE) + 1) / CAST(n_rows AS DOUBLE), 6) AS gini
-        |FROM a ORDER BY source""".stripMargin,
-    "q_mix_entropy" ->
-      """WITH c AS (
-        | SELECT source, count(*) AS c FROM documents
-        | WHERE source IS NOT NULL GROUP BY 1),
-        |t AS (SELECT sum(c) AS n FROM c),
-        |p AS (
-        | SELECT CAST(c.c AS DOUBLE) / CAST(t.n AS DOUBLE) AS p FROM c, t),
-        |a AS (
-        | SELECT count(*) AS n_cats,
-        |  sum(CAST(round(-(p * log2(p)), 6) AS DECIMAL(18,6))) AS hd FROM p)
-        |SELECT n_cats, CAST(hd AS DOUBLE) AS entropy_bits,
-        | round(pow(2.0, CAST(hd AS DOUBLE)), 6) AS effective_cats
-        |FROM a""".stripMargin,
-    "q_funnel" ->
+        |FROM b ORDER BY salt""".stripMargin),
+
+    // CONVERSION FUNNEL — ordered step completion (signup → view →
+    // purchase by FIRST occurrence per user): one user-keyed aggregate
+    // computes all step timestamps in a single pass (conditional mins,
+    // map-side combined), then a scalar rollup counts stage survivors.
+    // No self-joins, no per-user windows — the classic funnel at 100 TB
+    // is two aggregates, the first keyed by user (bounded by user
+    // cardinality), the second scalar.
+    Q("q_funnel", { (s, d) =>
+      Tables.events(s, d)
+        .groupBy("user_id")
+        .agg(
+          min(when(col("event_type") === "signup", col("ts"))).as("t_signup"),
+          min(when(col("event_type") === "view", col("ts"))).as("t_view"),
+          min(when(col("event_type") === "purchase", col("ts"))).as("t_purchase"))
+        .agg(
+          count(col("t_signup")).as("n_signup"),
+          count(when(col("t_view") > col("t_signup"), 1)).as("n_signup_then_view"),
+          count(when(col("t_view") > col("t_signup") &&
+            col("t_purchase") > col("t_view"), 1)).as("n_full_funnel"))
+    },
       """WITH f AS (
         | SELECT user_id,
         |  min(CASE WHEN event_type = 'signup' THEN ts END) AS t_signup,
@@ -11032,8 +10779,55 @@ object Analytics {
         |SELECT count(t_signup) AS n_signup,
         | count(CASE WHEN t_view > t_signup THEN 1 END) AS n_signup_then_view,
         | count(CASE WHEN t_view > t_signup AND t_purchase > t_view THEN 1 END) AS n_full_funnel
-        |FROM f""".stripMargin,
-    "q_funnel_lift" ->
+        |FROM f""".stripMargin),
+
+    // FUNNEL LIFT BY ARM — q_funnel's step counts split by the
+    // q_ab_test md5 assignment, with per-step treatment/control rate
+    // ratios: the readout that says WHICH funnel step an experiment
+    // moves, not just the end-to-end conversion delta. One user-keyed
+    // aggregate (the funnel's conditional mins plus the arm column),
+    // then a 2-group rollup reshaped to one row per step; rates are
+    // integer ppm and the ratio is the single rounded double. No joins.
+    Q("q_funnel_lift", { (s, d) =>
+      val perUser = Tables.events(s, d)
+        .groupBy("user_id")
+        .agg(
+          min(when(col("event_type") === "signup", col("ts"))).as("ts1"),
+          min(when(col("event_type") === "view", col("ts"))).as("ts2"),
+          min(when(col("event_type") === "purchase", col("ts"))).as("ts3"))
+        .select(
+          (conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
+            .cast("long") % 2).as("arm"),
+          col("ts1").isNotNull.as("s_signup"),
+          (col("ts2") > col("ts1")).as("s_view"),
+          (col("ts2") > col("ts1") && col("ts3") > col("ts2"))
+            .as("s_purchase"))
+      val agg = perUser.groupBy("arm").agg(
+        count(lit(1)).as("n"),
+        sum(when(col("s_signup"), 1L).otherwise(0L)).as("k1"),
+        sum(when(col("s_view"), 1L).otherwise(0L)).as("k2"),
+        sum(when(col("s_purchase"), 1L).otherwise(0L)).as("k3"))
+      val steps = agg.select(col("arm"), col("n"),
+        explode(array(
+          struct(lit(1).as("step"), col("k1").as("k")),
+          struct(lit(2).as("step"), col("k2").as("k")),
+          struct(lit(3).as("step"), col("k3").as("k")))).as("e"))
+        .select(col("arm"), col("n"), col("e.step"), col("e.k"))
+      val wide = steps.groupBy("step").agg(
+        max(when(col("arm") === 0, col("n"))).as("n_c"),
+        max(when(col("arm") === 0, col("k"))).as("k_c"),
+        max(when(col("arm") === 1, col("n"))).as("n_t"),
+        max(when(col("arm") === 1, col("k"))).as("k_t"))
+      wide.select(col("step"), col("n_c"), col("k_c"), col("n_t"),
+          col("k_t"),
+          expr("k_c * 1000000 div n_c").as("rate_c_ppm"),
+          expr("k_t * 1000000 div n_t").as("rate_t_ppm"))
+        .withColumn("lift_ratio",
+          when(col("rate_c_ppm") > 0,
+            round(col("rate_t_ppm").cast("double") /
+              col("rate_c_ppm").cast("double"), 6)))
+        .orderBy("step")
+    },
       """WITH f AS (
         | SELECT user_id,
         |  min(CASE WHEN event_type = 'signup' THEN ts END) AS ts1,
@@ -11069,8 +10863,26 @@ object Analytics {
         | CASE WHEN k_c * 1000000 // n_c > 0
         |  THEN round(CAST(k_t * 1000000 // n_t AS DOUBLE)
         |   / CAST(k_c * 1000000 // n_c AS DOUBLE), 6) END AS lift_ratio
-        |FROM w ORDER BY step""".stripMargin,
-    "q_cohort_retention" ->
+        |FROM w ORDER BY step""".stripMargin),
+
+    // COHORT RETENTION — users grouped by first-active week, activity
+    // counted per subsequent week (the retention matrix). The first-seen
+    // frame is user-cardinality-sized and broadcasts back onto events;
+    // the matrix aggregate shuffles on (cohort, week) — bounded by
+    // weeks², not events. Week anchors are Mondays in both engines, so
+    // the day-difference is an exact multiple of 7.
+    Q("q_cohort_retention", { (s, d) =>
+      val ev = Tables.events(s, d)
+        .select(col("user_id"), date_trunc("week", col("ts")).as("wk"))
+      val firstSeen = ev.groupBy("user_id").agg(min(col("wk")).as("cohort_wk"))
+      ev.join(broadcast(firstSeen), Seq("user_id"))
+        .groupBy("cohort_wk", "wk")
+        .agg(count_distinct(col("user_id")).as("n_active"))
+        .select(col("cohort_wk").cast("date").as("cohort_wk"),
+          (datediff(col("wk"), col("cohort_wk")) / lit(7)).cast("int").as("week_no"),
+          col("n_active"))
+        .orderBy("cohort_wk", "week_no")
+    },
       """WITH e AS (
         | SELECT user_id, date_trunc('week', ts) AS wk FROM events),
         |first_seen AS (
@@ -11079,8 +10891,27 @@ object Analytics {
         | CAST(date_diff('day', cohort_wk, wk) / 7 AS INTEGER) AS week_no,
         | count(DISTINCT user_id) AS n_active
         |FROM e JOIN first_seen USING (user_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_resample_bars" ->
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+
+    // TIME-SERIES RESAMPLING to hourly bars with ORDERED first/last —
+    // open = first value in the bar, close = last (the OHLC/dashboard
+    // downsample). min_by/max_by over a (ts, event_id) struct gives the
+    // ordered endpoints as a plain hash aggregate: one shuffle on the
+    // bar key with map-side partials, NO per-bar sort and no window —
+    // the endpoints ride the aggregation buffer. The id in the struct
+    // makes the order total (equal-ts events tie-break deterministically).
+    // Raw values pass through untouched (no accumulation), so doubles
+    // compare exactly across engines.
+    Q("q_resample_bars", { (s, d) =>
+      Tables.events(s, d)
+        .groupBy(date_trunc("hour", col("ts")).as("bar_ts"))
+        .agg(
+          min_by(col("value"), struct(col("ts"), col("event_id"))).as("open"),
+          max_by(col("value"), struct(col("ts"), col("event_id"))).as("close"),
+          min(col("value")).as("lo"), max(col("value")).as("hi"),
+          count(lit(1)).as("n"))
+        .orderBy("bar_ts")
+    },
       """WITH r AS (
         | SELECT date_trunc('hour', ts) AS bar_ts, value,
         |  row_number() OVER (PARTITION BY date_trunc('hour', ts)
@@ -11092,17 +10923,38 @@ object Analytics {
         | max(CASE WHEN rn_a = 1 THEN value END) AS open,
         | max(CASE WHEN rn_d = 1 THEN value END) AS close,
         | min(value) AS lo, max(value) AS hi, count(*) AS n
-        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_a9_by_year" ->
+        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin),
+    Q("q_a9_by_year", { (s, d) =>
+      Tables.orders(s, d)
+        .groupBy(year(col("o_orderdate")).as("y"))
+        .agg(sumDec(col("o_totalprice")).as("total"), count(lit(1)).as("cnt"))
+        .orderBy("y")
+    },
       s"""SELECT CAST(year(o_orderdate) AS INTEGER) AS y, ${sumDecSql("o_totalprice")} AS total,
          | count(*) AS cnt
-         |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_a9_weekday_matrix" ->
+         |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
+    // A9 — dashboard: weekday × status matrix ("Accidents by day of week /
+    // severity by road type" shape).
+    Q("q_a9_weekday_matrix", { (s, d) =>
+      Tables.orders(s, d)
+        .groupBy(date_format(col("o_orderdate"), "EEEE").as("dayname"),
+          col("o_orderstatus"))
+        .agg(count(lit(1)).as("cnt"))
+        .orderBy("dayname", "o_orderstatus")
+    },
       """SELECT dayname(o_orderdate) AS dayname, o_orderstatus, count(*) AS cnt
-        |FROM orders GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "q_a9_month_breakdown" ->
+        |FROM orders GROUP BY 1,2 ORDER BY 1,2""".stripMargin),
+    // A9 — dashboard: month × priority injury sums ("Evolution of Injuries
+    // by Year" / monthly breakdown shape).
+    Q("q_a9_month_breakdown", { (s, d) =>
+      Tables.orders(s, d)
+        .groupBy(month(col("o_orderdate")).as("m"),
+          col("o_orderpriority"))
+        .agg(sumDec(col("o_totalprice")).as("total"))
+        .orderBy("m", "o_orderpriority")
+    },
       s"""SELECT CAST(month(o_orderdate) AS INTEGER) AS m, o_orderpriority,
          | ${sumDecSql("o_totalprice")} AS total
-         |FROM orders GROUP BY 1,2 ORDER BY 1,2""".stripMargin
+         |FROM orders GROUP BY 1,2 ORDER BY 1,2""".stripMargin)
   )
 }

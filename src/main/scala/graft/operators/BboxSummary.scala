@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import graft.functions.Scalars._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,7 +23,7 @@ import graft.CacheScope.TrackedDataset
   * geocode join is broadcast. The 36-bbox output is dimension-sized at any
   * input scale.
   */
-object BboxSummary {
+object BboxSummary extends QueryModule {
 
   /** category ← event_type (the reference's 4-category whitelist filter,
     * P4; dags/etl_crash_traffic.py:431).
@@ -252,19 +252,6 @@ object BboxSummary {
       .orderBy("cluster_id")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_s6_bbox_summary" -> { (s, d) => summary(s, d).orderBy("bbox_label") },
-    // Grid-density clusters over the event point cloud (DBSCAN-lite).
-    "q_grid_clusters" -> { (s, d) => gridClusters(s, d) },
-    "q_s7_geocode_join" -> { (s, d) =>
-      val bboxes = rawNodes(s, d).select("bbox_label", "lat_bin").distinct()
-      geocodeLookup(s, d, bboxes).orderBy("bbox_label")
-    },
-    // Spatial NN: every crossing's nearest hospital within the 3×3 grid
-    // neighborhood (bounded-radius contract, exact integer distances).
-    "q_nn_join" -> { (s, d) => nearestHospital(s, d) }
-  )
-
   // ---- DuckDB oracle ----
 
   private def rawNodesSql: String = {
@@ -306,92 +293,98 @@ object BboxSummary {
        |LEFT JOIN (SELECT n_nationkey, n_name, r_name FROM nation
        |           JOIN region ON n_regionkey = r_regionkey) ON nkey = n_nationkey""".stripMargin
 
-  def oracles: Map[String, String] = {
-    val pivotCols = countColumns.map { c =>
-      val expr =
-        if (c.startsWith("category_"))
-          s"COALESCE(CAST(sum(cnt) FILTER (WHERE gv = '$c') AS BIGINT), 0)"
-        else
-          s"COALESCE(CAST(sum(cnt) FILTER (WHERE gv = '$c') AS BIGINT), 0)"
-      s"""$expr AS "$c""""
-    }.mkString(",\n ")
-    Map(
-      "q_s6_bbox_summary" ->
-        s"""WITH raw_nodes AS ($rawNodesSql),
-           |nodes AS (SELECT * FROM raw_nodes
-           |          WHERE category IN ('school','hospital','traffic_signals','crossing')),
-           |u AS (
-           | SELECT bbox_label, 'category_' || category AS gv, count(*) AS cnt
-           | FROM nodes WHERE category IN ('school','hospital') GROUP BY 1,2
-           | UNION ALL
-           | SELECT bbox_label, 'traffic_signals_' || $signalNormSql AS gv, count(*) AS cnt
-           | FROM nodes WHERE category = 'traffic_signals' GROUP BY 1,2
-           | UNION ALL
-           | SELECT bbox_label, 'crossing_' || $crossingNormSql AS gv, count(*) AS cnt
-           | FROM nodes WHERE category = 'crossing' GROUP BY 1,2),
-           |p AS (
-           | SELECT bbox_label,
-           | $pivotCols
-           | FROM u GROUP BY bbox_label),
-           |geo AS ($geocodeSql)
-           |SELECT p.*, geo.city, geo.county, geo.state, geo.postcode
-           |FROM p LEFT JOIN geo USING (bbox_label)
-           |ORDER BY bbox_label""".stripMargin,
-      "q_s7_geocode_join" ->
-        s"""WITH raw_nodes AS ($rawNodesSql)
-           |$geocodeSql
-           |ORDER BY bbox_label""".stripMargin,
-      "q_grid_clusters" ->
-        """WITH RECURSIVE cells AS (
-          | SELECT CAST(round(value * 1000, 0) AS BIGINT) // 20000 AS bx,
-          |  CAST(user_id AS BIGINT) // 100 AS by,
-          |  CAST(count(*) AS BIGINT) AS cnt
-          | FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-          |thr AS (
-          | SELECT (sum(cnt) + count(*) - 1) // count(*) AS minpts FROM cells),
-          |dense AS (
-          | SELECT bx * 1000000 + by AS cid, bx, by, cnt
-          | FROM cells CROSS JOIN thr WHERE cnt >= minpts),
-          |e AS (
-          | SELECT a.cid AS src, b.cid AS dst
-          | FROM dense a
-          |  CROSS JOIN (SELECT unnest(range(-1, 2)) AS dx) dxs
-          |  CROSS JOIN (SELECT unnest(range(-1, 2)) AS dy) dys
-          |  JOIN dense b ON b.bx = a.bx + dxs.dx AND b.by = a.by + dys.dy
-          | WHERE NOT (dxs.dx = 0 AND dys.dy = 0)),
-          |reach(a, b) AS (
-          | SELECT cid, cid FROM dense
-          | UNION
-          | SELECT reach.a, e.dst FROM reach JOIN e ON reach.b = e.src),
-          |labels AS (SELECT a AS cid, min(b) AS cluster_id FROM reach GROUP BY 1)
-          |SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_cells,
-          | CAST(sum(cnt) AS BIGINT) AS n_points
-          |FROM labels JOIN dense USING (cid)
-          |GROUP BY 1 ORDER BY 1""".stripMargin,
-      "q_nn_join" ->
-        """WITH l AS (
-          | SELECT event_id AS id, CAST(round(value * 1000, 0) AS BIGINT) AS la,
-          |  CAST(user_id AS BIGINT) AS ln
-          | FROM events WHERE event_type = 'view' AND value IS NOT NULL),
-          |r AS (
-          | SELECT event_id AS rid, CAST(round(value * 1000, 0) AS BIGINT) AS rla,
-          |  CAST(user_id AS BIGINT) AS rln
-          | FROM events WHERE event_type = 'purchase' AND value IS NOT NULL),
-          |c AS (
-          | SELECT l.id, r.rid,
-          |  (l.la - r.rla) * (l.la - r.rla)
-          |   + (l.ln - r.rln) * (l.ln - r.rln) AS d2
-          | FROM l
-          |  CROSS JOIN (SELECT unnest(range(-1, 2)) AS dx) dxs
-          |  CROSS JOIN (SELECT unnest(range(-1, 2)) AS dy) dys
-          |  JOIN r ON r.rla // 20000 = l.la // 20000 + dxs.dx
-          |        AND r.rln // 100 = l.ln // 100 + dys.dy),
-          |m AS (SELECT id, min(d2) AS d2 FROM c GROUP BY 1),
-          |nn AS (
-          | SELECT c.id, c.d2, min(c.rid) AS nn_id
-          | FROM c JOIN m ON c.id = m.id AND c.d2 = m.d2 GROUP BY 1, 2)
-          |SELECT l.id, nn.d2, nn.nn_id
-          |FROM l LEFT JOIN nn ON l.id = nn.id ORDER BY l.id""".stripMargin
-    )
-  }
+  // The bbox-summary oracle's pivot: one count column per contract column
+  private def pivotCols: String = countColumns.map { c =>
+    val expr =
+      if (c.startsWith("category_"))
+        s"COALESCE(CAST(sum(cnt) FILTER (WHERE gv = '$c') AS BIGINT), 0)"
+      else
+        s"COALESCE(CAST(sum(cnt) FILTER (WHERE gv = '$c') AS BIGINT), 0)"
+    s"""$expr AS "$c""""
+  }.mkString(",\n ")
+
+  def entries: Seq[Q] = Seq(
+    Q("q_s6_bbox_summary", { (s, d) => summary(s, d).orderBy("bbox_label") },
+      s"""WITH raw_nodes AS ($rawNodesSql),
+         |nodes AS (SELECT * FROM raw_nodes
+         |          WHERE category IN ('school','hospital','traffic_signals','crossing')),
+         |u AS (
+         | SELECT bbox_label, 'category_' || category AS gv, count(*) AS cnt
+         | FROM nodes WHERE category IN ('school','hospital') GROUP BY 1,2
+         | UNION ALL
+         | SELECT bbox_label, 'traffic_signals_' || $signalNormSql AS gv, count(*) AS cnt
+         | FROM nodes WHERE category = 'traffic_signals' GROUP BY 1,2
+         | UNION ALL
+         | SELECT bbox_label, 'crossing_' || $crossingNormSql AS gv, count(*) AS cnt
+         | FROM nodes WHERE category = 'crossing' GROUP BY 1,2),
+         |p AS (
+         | SELECT bbox_label,
+         | $pivotCols
+         | FROM u GROUP BY bbox_label),
+         |geo AS ($geocodeSql)
+         |SELECT p.*, geo.city, geo.county, geo.state, geo.postcode
+         |FROM p LEFT JOIN geo USING (bbox_label)
+         |ORDER BY bbox_label""".stripMargin),
+    // Grid-density clusters over the event point cloud (DBSCAN-lite).
+    Q("q_grid_clusters", { (s, d) => gridClusters(s, d) },
+      """WITH RECURSIVE cells AS (
+        | SELECT CAST(round(value * 1000, 0) AS BIGINT) // 20000 AS bx,
+        |  CAST(user_id AS BIGINT) // 100 AS by,
+        |  CAST(count(*) AS BIGINT) AS cnt
+        | FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
+        |thr AS (
+        | SELECT (sum(cnt) + count(*) - 1) // count(*) AS minpts FROM cells),
+        |dense AS (
+        | SELECT bx * 1000000 + by AS cid, bx, by, cnt
+        | FROM cells CROSS JOIN thr WHERE cnt >= minpts),
+        |e AS (
+        | SELECT a.cid AS src, b.cid AS dst
+        | FROM dense a
+        |  CROSS JOIN (SELECT unnest(range(-1, 2)) AS dx) dxs
+        |  CROSS JOIN (SELECT unnest(range(-1, 2)) AS dy) dys
+        |  JOIN dense b ON b.bx = a.bx + dxs.dx AND b.by = a.by + dys.dy
+        | WHERE NOT (dxs.dx = 0 AND dys.dy = 0)),
+        |reach(a, b) AS (
+        | SELECT cid, cid FROM dense
+        | UNION
+        | SELECT reach.a, e.dst FROM reach JOIN e ON reach.b = e.src),
+        |labels AS (SELECT a AS cid, min(b) AS cluster_id FROM reach GROUP BY 1)
+        |SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_cells,
+        | CAST(sum(cnt) AS BIGINT) AS n_points
+        |FROM labels JOIN dense USING (cid)
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Q("q_s7_geocode_join", { (s, d) =>
+      val bboxes = rawNodes(s, d).select("bbox_label", "lat_bin").distinct()
+      geocodeLookup(s, d, bboxes).orderBy("bbox_label")
+    },
+      s"""WITH raw_nodes AS ($rawNodesSql)
+         |$geocodeSql
+         |ORDER BY bbox_label""".stripMargin),
+    // Spatial NN: every crossing's nearest hospital within the 3×3 grid
+    // neighborhood (bounded-radius contract, exact integer distances).
+    Q("q_nn_join", { (s, d) => nearestHospital(s, d) },
+      """WITH l AS (
+        | SELECT event_id AS id, CAST(round(value * 1000, 0) AS BIGINT) AS la,
+        |  CAST(user_id AS BIGINT) AS ln
+        | FROM events WHERE event_type = 'view' AND value IS NOT NULL),
+        |r AS (
+        | SELECT event_id AS rid, CAST(round(value * 1000, 0) AS BIGINT) AS rla,
+        |  CAST(user_id AS BIGINT) AS rln
+        | FROM events WHERE event_type = 'purchase' AND value IS NOT NULL),
+        |c AS (
+        | SELECT l.id, r.rid,
+        |  (l.la - r.rla) * (l.la - r.rla)
+        |   + (l.ln - r.rln) * (l.ln - r.rln) AS d2
+        | FROM l
+        |  CROSS JOIN (SELECT unnest(range(-1, 2)) AS dx) dxs
+        |  CROSS JOIN (SELECT unnest(range(-1, 2)) AS dy) dys
+        |  JOIN r ON r.rla // 20000 = l.la // 20000 + dxs.dx
+        |        AND r.rln // 100 = l.ln // 100 + dys.dy),
+        |m AS (SELECT id, min(d2) AS d2 FROM c GROUP BY 1),
+        |nn AS (
+        | SELECT c.id, c.d2, min(c.rid) AS nn_id
+        | FROM c JOIN m ON c.id = m.id AND c.d2 = m.d2 GROUP BY 1, 2)
+        |SELECT l.id, nn.d2, nn.nn_id
+        |FROM l LEFT JOIN nn ON l.id = nn.id ORDER BY l.id""".stripMargin)
+  )
 }

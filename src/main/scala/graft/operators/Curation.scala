@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   *  - Source mix: one groupBy(source) at domain cardinality; the share
   *    normalization is a single-row total broadcast, not a global window.
   */
-object Curation {
+object Curation extends QueryModule {
 
   // ===== eval-set decontamination =====
 
@@ -784,566 +784,6 @@ object Curation {
         round(lit(1.0) / col("hhi"), 6).as("effective_sources"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ucb_mix" -> { (s, d) => ucbMix(Tables.documents(s, d)) },
-    // DoReMi-shape source reweighting: softmax of corpus-LM excess loss.
-    "q_domain_reweight" -> { (s, d) =>
-      domainReweight(Tables.documents(s, d)) },
-    // CCNet head/middle/tail perplexity thirds, per-source shares.
-    "q_ccnet_buckets" -> { (s, d) =>
-      ccnetBuckets(Tables.documents(s, d)) },
-    "q_loso_impact" -> { (s, d) => losoImpact(Tables.documents(s, d)) },
-    // IPF/raking: uniform-source × observed-lang mix calibration.
-    "q_ipf_raking" -> { (s, d) => ipfRaking(Tables.documents(s, d)) },
-    // Inter-annotator agreement between the two length heuristics.
-    "q_cohen_kappa" -> { (s, d) => cohenKappa(Tables.documents(s, d)) },
-    // Three-rater Fleiss' kappa over the length-heuristic panel.
-    "q_fleiss_kappa" -> { (s, d) => fleissKappa(Tables.documents(s, d)) },
-    // The per-source datasheet row (volume, shape, language, dup rate).
-    "q_data_card" -> { (s, d) => dataCard(Tables.documents(s, d)) },
-
-    // END-TO-END CURATION FUNNEL — the composed pipeline run: blocklist
-    // strict keep → quality cut (≥ 0.4) → exact dedup (min-id keeper)
-    // → per-source cap (100 best-by-length). One row per stage with the
-    // surviving doc count — the release-notes funnel every curated
-    // corpus publishes, and the gate that the stages actually COMPOSE
-    // (each stage consumes the previous stage's survivors, not the raw
-    // table). Stage frames persist once; counts are scalar aggregates;
-    // the cap runs on the native TopKPerKey exec.
-    "q_curation_funnel" -> { (s, d) =>
-      curationFunnel(Tables.documents(s, d))
-    },
-    // SKYLINE (Pareto frontier) DOC SELECTION (Börzsönyi et al. 2001 —
-    // the classic DB operator Spark has no built-in for): the documents
-    // not dominated in (token count ↑, distinct-token ratio ↑) — "no
-    // other doc is at least as long AND at least as lexically rich,
-    // strictly better in one". The multi-objective shortlist a curation
-    // pass keeps when length and quality trade off.
-    //
-    // Scale path (vs the oracle's obviously-correct O(n²) NOT EXISTS):
-    // grid-prune first — bucket docs by ⌊tokens/8⌋, broadcast the ~100-row
-    // per-bucket max-ratio table, and drop any doc whose ratio ≤ the
-    // running max over STRICTLY higher buckets (every doc there is
-    // strictly longer, so ≥ ratio ⇒ dominated; no frontier point can be
-    // pruned). One corpus map pass + a broadcast join kills ~all rows;
-    // the exact dominance anti-join then runs on the surviving
-    // frontier-candidate set only (dimension-class), never all-pairs.
-    "q_skyline" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("a"),
-          round(size(array_distinct(TextAnalysis.tokens(lower(col("text")))))
-            .cast("double") /
-            TextAnalysis.tokenCount(col("text")).cast("double"), 6).as("b"))
-        .filter(col("a") > 0)
-      val bmax = docs.select(expr("a div 8").as("bk"), col("b"))
-        .groupBy("bk").agg(max(col("b")).as("bm"))
-      val W = org.apache.spark.sql.expressions.Window
-      val wDesc = W.orderBy(desc("bk")).rowsBetween(W.unboundedPreceding, -1)
-      // running max of bm over STRICTLY higher buckets (window over the
-      // ~100-row bucket frame, not the corpus)
-      val cm = bmax.withColumn("cm_higher", max(col("bm")).over(wDesc))
-      val surv = docs.withColumn("bk", expr("a div 8"))
-        .join(broadcast(cm.select(col("bk"), col("cm_higher"))), Seq("bk"))
-        .filter(col("cm_higher").isNull || col("b") > col("cm_higher"))
-        .select("doc_id", "a", "b")
-      val e = surv.select(col("a").as("ea"), col("b").as("eb"))
-      surv.join(broadcast(e),
-          col("ea") >= col("a") && col("eb") >= col("b") &&
-            (col("ea") > col("a") || col("eb") > col("b")), "left_anti")
-        .select(col("doc_id"), col("a").as("n_tokens"),
-          col("b").as("uniq_ratio"))
-        .orderBy("doc_id")
-    },
-
-    // DETERMINISTIC NEGATIVE SAMPLING for contrastive training: per
-    // anchor document, k pseudo-random negatives drawn by ranking
-    // candidates on md5(anchor:candidate) — uniform, rerun/partitioning/
-    // engine-stable (resumable training needs the SAME negatives every
-    // epoch-0 rebuild) — with a same-source exclusion so near-context
-    // docs can't leak in as "negatives" (the false-negative screen;
-    // production swaps in the dup-cluster exclusion from q_dedup_clusters
-    // the same way). Scale posture: anchors broadcast over one corpus
-    // scan; the per-anchor k-smallest-hash selection runs on the native
-    // TopKPerKey exec — map-side k-bounded heaps, the shuffle carries ≤ k
-    // candidates per anchor per mapper, never a per-anchor sort.
-    "q_negative_sample" -> { (s, d) =>
-      val docs = Tables.documents(s, d).select("doc_id", "source")
-      val anchors = docs.filter(col("doc_id") < 5)
-        .select(col("doc_id").as("qid"), col("source").as("qsrc"))
-      val cand = docs.crossJoin(broadcast(anchors))
-        .filter(col("doc_id") =!= col("qid") && col("source") =!= col("qsrc"))
-        .select(col("qid"), col("doc_id").as("neg_id"),
-          md5(concat_ws(":", col("qid"), col("doc_id"))).as("sample_key"))
-      graft.plans.TopKPerKey.topKPerKey(cand, keys = Seq("qid"),
-          order = Seq(("sample_key", true), ("neg_id", true)), k = 5)
-        .orderBy("qid", "sample_key")
-    },
-    // HRW resharding beats mod-hash by ~8x on moved keys at N=8 -> 9.
-    "q_rendezvous_shard" -> { (s, d) =>
-      reshardAudit(Tables.documents(s, d))
-    },
-    // Exact-k weighted sampling per source (A-ES) on the native top-k exec.
-    "q_weighted_sample_k" -> { (s, d) =>
-      weightedSampleK(Tables.documents(s, d), k = 10)
-    },
-    // Decontamination: eval set = first 20 docs verbatim; report every
-    // corpus doc sharing a 5-gram with them (the 20 themselves plus any
-    // natural 5-gram collisions in the synthetic vocabulary).
-    "q_decontaminate" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      contaminationReport(docs, docs.filter(col("doc_id") < 20),
-          hasher = Dedup.Md5Hash)
-        .orderBy("doc_id")
-    },
-    // Crawl novelty decay: first-seen 5-gram fraction per ingest batch.
-    "q_novelty_decay" -> { (s, d) =>
-      noveltyDecay(Tables.documents(s, d))
-    },
-
-    // HEAPS'-LAW FIT — q_novelty_decay's extrapolation partner: distinct
-    // 5-gram vocabulary growth V(N) ≈ K·N^β fit by ln-ln OLS over the
-    // cumulative (grams-seen, distinct-grams-seen) curve at ingest-batch
-    // checkpoints. β near 1 = the crawl is nowhere near saturation
-    // (every batch still mints new grams); β falling toward 0.5 = the
-    // classic sublinear regime where doubling the crawl stops doubling
-    // the vocabulary. Fit on SHINGLES, not word tokens: this corpus's
-    // 31-word vocabulary saturates in batch 0, and a zero-variance
-    // series has no slope (guarded: NULL r2/k instead of a divide —
-    // Spark 4 ANSI throws even on double division by exact zero).
-    // Exactness:
-    // checkpoints are exact integers; ln values round to 6dp DECIMAL
-    // and all OLS moments are exact decimal sums (the q_zipf_fit
-    // convention); exp() once on the final intercept. Scale: the gram
-    // stream collapses map-side to gram/batch-sized frames; windows run
-    // on the batch spine only.
-    "q_heaps_fit" -> { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      import graft.CacheScope.TrackedDataset
-      val dec = org.apache.spark.sql.types.DecimalType(18, 6)
-      // single-row-group local table: spread BEFORE the tokenize+shingle
-      // explode so the cache build (the query's whole CPU cost, measured
-      // 6.2 s single-task) uses every core; groupBy results are
-      // partitioning-independent
-      val tok = Tables.documents(s, d)
-        .repartition(s.sparkContext.defaultParallelism)
-        .select(expr("doc_id div 100").as("batch"),
-          explode(Dedup.shingles(
-            TextAnalysis.tokens(col("text")), 5)).as("g"))
-        .persistTracked()
-      val perBatch = tok.groupBy("batch").agg(count(lit(1)).as("nt"))
-      val firstSeen = tok.groupBy("g").agg(min(col("batch")).as("fb"))
-        .groupBy(col("fb").as("batch")).agg(count(lit(1)).as("nv"))
-      val w = Window.orderBy("batch")
-      val spine = perBatch.join(firstSeen, Seq("batch"), "left")
-        .na.fill(0L, Seq("nv"))
-        .select(col("batch"), sum(col("nt")).over(w).as("cn"),
-          sum(col("nv")).over(w).as("cv"))
-      val sums = spine.select(
-          round(log(col("cn").cast("double")), 6).cast(dec).as("x"),
-          round(log(col("cv").cast("double")), 6).cast(dec).as("y"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-          sum(col("x") * col("y")).as("sxy"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("y") * col("y")).as("syy"))
-      val nD = col("n").cast("double")
-      val (sx, sy, sxy, sxx, syy) =
-        (col("sx").cast("double"), col("sy").cast("double"),
-          col("sxy").cast("double"), col("sxx").cast("double"),
-          col("syy").cast("double"))
-      val num = nD * sxy - sx * sy
-      val den = nD * sxx - sx * sx
-      val slope = num / den
-      val den2 = den * (nD * syy - sy * sy)
-      sums.select(col("n").as("n_points"),
-        when(den =!= 0.0, round(slope, 6)).as("beta"),
-        when(den =!= 0.0,
-          round(exp((sy - slope * sx) / nD), 6)).as("k"),
-        when(den2 =!= 0.0, round((num * num) / den2, 6)).as("r2"))
-    },
-
-    // WATER-FILLING MIX ALLOCATION — spend a token budget of half the
-    // corpus by capping every source at a COMMON level λ: sources with
-    // avail ≤ λ keep everything (small sources are protected), heavy
-    // sources are cut to λ, and λ is chosen so Σ min(avail, λ) = B.
-    // The third mix-balancing primitive beside q_token_budget (uniform
-    // split) and q_source_cap (fixed per-source row cap) — this one
-    // derives the cap FROM the budget. Exact integer throughout: the
-    // candidate level for "k smallest sources kept whole" is
-    // λ_k = (B − P_k) div (n − k) on the sorted source spine (prefix
-    // sums + one lag), and the unique k with prev_avail ≤ λ_k < avail
-    // wins; floors mean Σ alloc ∈ (B − n, B]. Scale: the spine is
-    // source-cardinality (bounded window); the corpus pays ONE
-    // token-count aggregate.
-    "q_waterfill_mix" -> { (s, d) =>
-      waterfillMix(Tables.documents(s, d)
-        .groupBy("source")
-        .agg(sum(TextAnalysis.tokenCount(col("text")).cast("long"))
-          .as("avail")))
-    },
-    // PII audit over a corpus with planted PII (the synthetic text has
-    // none): first 20 docs get an email + phone + ip appended.
-    "q_pii_audit" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val planted = docs.select(col("doc_id"),
-        when(col("doc_id") < 20,
-          concat(col("text"),
-            concat(lit(" contact user"), col("doc_id"),
-              lit("@example.com or 555-123-4567 at 192.168.0.1"))))
-          .otherwise(col("text")).as("text"))
-      piiAudit(planted)
-        .filter(col("n_email") + col("n_phone") + col("n_ipv4") > 0)
-        .orderBy("doc_id")
-    },
-    // Source-mix report with uniform-target resampling rates.
-    "q_source_mix" -> { (s, d) =>
-      sourceMix(Tables.documents(s, d)).orderBy("source")
-    },
-    // HERFINDAHL–HIRSCHMAN CONCENTRATION of the source token mix — the
-    // antitrust-standard scalar beside q_gini_by_source's inequality
-    // curve: HHI = Σ share², effective sources = 1/HHI (the "how many
-    // sources do we REALLY have" number that decides whether the corpus
-    // survives losing its biggest supplier). One source-cardinality
-    // aggregate; HHI folds 6dp-decimal share² terms.
-    "q_hhi_sources" -> { (s, d) => hhiSources(Tables.documents(s, d)) },
-    // Did the curated mix land on the uniform target? χ² GOF + worst
-    // single-source deviation.
-    "q_mix_gof" -> { (s, d) => mixGof(Tables.documents(s, d)) },
-    // Temperature-flattened sampling weights (α = 0.5) — the mix the
-    // sampler actually draws from, vs q_source_mix's uniform target.
-    "q_mix_temperature" -> { (s, d) =>
-      temperatureMix(Tables.documents(s, d))
-    },
-
-    // DATA-CONSTRAINED REPETITION PLAN (Muennighoff et al. 2023, "Scaling
-    // Data-Constrained Language Models", arXiv:2305.16264: repeated data
-    // holds value up to ~4 epochs, then returns decay to ~zero): given a
-    // token budget of 3× the corpus's unique tokens and the sqrt-
-    // temperature mix (the q_mix_temperature weights — sqrt, not pow(τ):
-    // pow is not IEEE-correctly-rounded cross-engine), allocate each
-    // source its target tokens, cap epochs at R_max = 4, and report the
-    // DEFICIT the cap strands — the actionable column: deficit > 0 means
-    // "go acquire more of this source", not "repeat it harder".
-    // Scale posture: one fact pass to source-cardinality sums; everything
-    // after lives on the ~|sources|-row frame with two broadcast scalars.
-    "q_repetition_plan" -> { (s, d) =>
-      import org.apache.spark.sql.types.DecimalType
-      val rMax = 4.0
-      val mult = 3.0
-      // planted scarce source: the natural corpus is uniform, so no source
-      // ever hits the repetition cap — 3 docs re-labeled 'tiny_planted'
-      // give the sqrt-temperature boost a genuinely data-constrained
-      // source and exercise capped=true + deficit > 0 for real
-      val docs = Tables.documents(s, d)
-      val corpus = docs.select("source", "text").unionByName(
-        docs.filter(col("doc_id") < 3)
-          .select(lit("tiny_planted").as("source"), col("text")))
-      val bySrc = corpus.filter(col("source").isNotNull)
-        .groupBy("source")
-        .agg(sum(TextAnalysis.tokenCount(col("text")).cast("long")).as("u"))
-      val tot = bySrc.agg(sum(col("u")).as("tu"))
-      val share = col("u").cast("double") / col("tu").cast("double")
-      val f = bySrc.crossJoin(broadcast(tot))
-        .select(col("source"), col("u"), col("tu"),
-          round(sqrt(share), 6).cast(DecimalType(18, 6)).as("w"))
-      val sw = f.agg(sum(col("w")).as("sw"))
-      val p = col("w").cast("double") / col("sw").cast("double")
-      val tgt = p * mult * col("tu").cast("double")
-      val epochsRaw = tgt / col("u").cast("double")
-      f.crossJoin(broadcast(sw))
-        .select(col("source"), col("u").as("unique_tokens"),
-          round(p, 6).as("p_temp"),
-          round(tgt, 6).as("target_tokens"),
-          round(least(epochsRaw, lit(rMax)), 6).as("epochs"),
-          (epochsRaw > rMax).as("capped"),
-          round(greatest(tgt - col("u").cast("double") * rMax, lit(0.0)), 6)
-            .as("deficit_tokens"))
-        .orderBy("source")
-    },
-
-    // PER-SOURCE DOCUMENT CAP — the pretraining-mix move that keeps any
-    // one crawl domain from dominating the corpus: at most k docs per
-    // source, best-first (longest doc wins, ties to the lower id). Runs
-    // on the custom TopKPerKey operator, so the plan is the partial-heap
-    // → single exchange → final-heap shape with NO per-source sort and a
-    // shuffle that carries ≤ k docs per source per mapper — at 100 TB
-    // the cap decides survivors while moving candidate rows only.
-    "q_source_cap" -> { (s, d) =>
-      graft.plans.TopKPerKey.topKPerKey(
-          Tables.documents(s, d).select("doc_id", "source", "n_chars"),
-          keys = Seq("source"),
-          order = Seq(("n_chars", false), ("doc_id", true)), k = 10)
-        .orderBy("source", "doc_id")
-    },
-
-    // BLOCKLIST HIT-RATE FILTER (the C4 "bad words" screen, Raffel et al.
-    // 2020 §2.2 — docs with any hit dropped; RefinedWeb keeps a ratio):
-    // per-doc hit counts against a small term list, computed as ONE
-    // map-side projection — `size(filter(tokens, t ∈ blocked))` — so the
-    // plan has ZERO exchanges before the output sort (the r07 shape
-    // exploded every token, shuffled doc-cardinality counts, and joined
-    // back: two shuffles + a join for what a single codegen'd HOF pass
-    // computes; PlansSpec asserts the no-Exchange shape). The term list
-    // embeds as an array literal (dictionary-sized — a real blocklist is
-    // a few thousand terms, still literal/broadcast class); deployment
-    // swaps the stand-in terms for the real list.
-    "q_blocklist" -> { (s, d) =>
-      val blockedArr = array(Seq("slow", "dup", "broken").map(lit): _*)
-      Tables.documents(s, d)
-        .select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).cast("long").as("n"),
-          size(filter(TextAnalysis.tokens(lower(col("text"))),
-            t => array_contains(blockedArr, t))).cast("long").as("n_hits"))
-        .select(col("doc_id"), col("n_hits"),
-          (col("n_hits") === 0).as("keep_strict"),
-          // RefinedWeb-style ratio keep: under 5% of tokens blocked
-          (col("n") > 0 &&
-            col("n_hits") * 100 < col("n") * lit(5)).as("keep_ratio"))
-        .orderBy("doc_id")
-    },
-
-    // TOKEN-BUDGET EPOCH PLAN — given a training budget of 2× the corpus
-    // token mass split uniformly across sources, how many epochs (passes)
-    // does each source run? The repeat-factor table behind every
-    // fixed-budget pretraining mix (sources under their share get
-    // epochs > 1, heavy sources get < 1 = subsampled). Exact integer
-    // arithmetic end-to-end (BIGINT div), so the plan is hash-stable:
-    // one token-count aggregate at source cardinality, scalar broadcast.
-    "q_token_budget" -> { (s, d) =>
-      val perSrc = Tables.documents(s, d)
-        .select(col("source"), TextAnalysis.tokenCount(col("text"))
-          .cast("long").as("tok"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum(col("tok")).as("tokens"))
-      val tot = perSrc.agg(sum(col("tokens")).as("total_tokens"),
-        count(lit(1)).as("n_sources"))
-      perSrc.crossJoin(broadcast(tot))
-        .select(col("source"), col("n_docs"), col("tokens"),
-          expr("(2 * total_tokens) div n_sources").as("budget_tokens"),
-          expr("((2 * total_tokens) div n_sources) * 1000000 div tokens")
-            .as("epochs_ppm"))
-        .withColumn("oversampled", col("epochs_ppm") > 1000000L)
-        .orderBy("source")
-    },
-
-    // CONTEXT-LENGTH TRUNCATION PLAN — given a model context of L
-    // tokens, what does each source lose under truncate-at-L, and how
-    // much of it should be SPLIT into multiple examples instead
-    // (docs > 2L, where a single truncation discards the majority of
-    // the document)? The per-source readout that decides the
-    // truncate-vs-split policy before tokenizing a 100 TB corpus.
-    // L=32 here: the synthetic corpus is 10–99 whitespace tokens per
-    // doc (median 56), so 32 exercises BOTH tiers at every SF the way
-    // a 2k–8k context would on real documents.
-    // Exact integer arithmetic end-to-end (least/greatest on BIGINT
-    // token counts, ppm via BIGINT div) — hash-stable. Scale posture:
-    // one map pass to per-doc token counts, one source-cardinality
-    // aggregate (map-side combined), no joins.
-    "q_truncation_plan" -> { (s, d) =>
-      val L = 32L
-      val perDoc = Tables.documents(s, d)
-        .select(col("source"), TextAnalysis.tokenCount(col("text"))
-          .cast("long").as("tok"))
-      perDoc.groupBy("source").agg(
-          count(lit(1)).as("n_docs"),
-          sum(when(col("tok") > L, 1L).otherwise(0L)).as("n_trunc"),
-          sum(when(col("tok") > 2 * L, 1L).otherwise(0L)).as("n_split"),
-          sum(col("tok")).as("tokens"),
-          sum(least(col("tok"), lit(L))).as("tokens_kept"),
-          sum(greatest(col("tok") - L, lit(0L))).as("tokens_dropped"))
-        .withColumn("kept_ppm",
-          expr("tokens_kept * 1000000 div tokens"))
-        .orderBy("source")
-    },
-
-    // DSIR — Data Selection via Importance Resampling (Xie et al. 2023,
-    // arXiv:2302.03169): weight every raw document by how target-like its
-    // hashed-n-gram distribution is, log w(x) = Σ_f log(p_target(f) /
-    // p_raw(f)) under add-one-smoothed bag-of-hashed-ngrams models
-    // (unigrams + bigrams hashed to 256 buckets; the paper's 10k-bucket
-    // knob, scaled to this corpus). Target slice = lang='en' docs — the
-    // in-domain sample a curator actually has. selected = logw ≥ exact
-    // p90 (the deterministic stand-in for the paper's Gumbel resampling;
-    // the weight table is the artifact either consumer uses).
-    // Float determinism: each per-feature log term rounds to 6dp DECIMAL
-    // before the order-independent per-doc decimal sum (the q_lm_score
-    // idiom); the only doubles are ln() of exact integers.
-    // Scale posture: features flow as (doc_id, bucket) longs — never
-    // n-gram text; the model is a 256-row broadcast; the threshold is
-    // one X4 exact-percentile pass over the doc-cardinality weight frame.
-    "q_dsir_weights" -> { (s, d) =>
-      val perDoc = dsirPerDoc(s, d)
-      val thr = Analytics.exactPercentiles(perDoc, "lw", Seq("p90" -> 0.9))
-      perDoc.crossJoin(broadcast(thr))
-        .select(col("doc_id"), col("n_feats"), round(col("lw"), 6).as("logw"),
-          (col("lw") >= col("p90")).as("selected"))
-        .orderBy("doc_id")
-    },
-
-    // EFFECTIVE SAMPLE SIZE of the DSIR importance weights, PER SOURCE
-    // (Kong 1992): ESS = (Σw)²/Σw² with w = exp(logw − max_s logw) —
-    // the self-normalized form, shifted by the per-source max so exp
-    // never overflows and the ratio is scale-invariant. THE diagnostic
-    // importance resampling ships with: ESS/n near 1 means the source's
-    // docs are exchangeable under the target; near 0 means a handful of
-    // docs would dominate a resample (variance blow-up — cap weights or
-    // re-model before trusting the mix). Shifted weights round to 6dp
-    // DECIMAL (order-safe sums; w·w an exact decimal product); ESS is
-    // one final double tree. Reuses the dsirPerDoc frame + a doc-
-    // cardinality source join + source-cardinality aggregates.
-    "q_ess_weights" -> { (s, d) =>
-      import org.apache.spark.sql.types.DecimalType
-      val per = dsirPerDoc(s, d)
-        .join(Tables.documents(s, d).select("doc_id", "source"), Seq("doc_id"))
-      val mx = per.groupBy("source").agg(max(col("lw")).as("mxl"))
-      val w = round(exp(col("lw") - col("mxl")), 6).cast(DecimalType(18, 6))
-      val g = per.join(broadcast(mx), Seq("source"))
-        .select(col("source"), w.as("w"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"), sum(col("w")).as("sw"),
-          sum(col("w") * col("w")).as("sww"))
-      def db(c: String) = col(c).cast("double")
-      g.select(col("source"), col("n_docs"),
-          round(db("sw") * db("sw") / db("sww"), 6).as("ess"),
-          round(db("sw") * db("sw") / db("sww") / db("n_docs"), 6)
-            .as("ess_ratio"))
-        .orderBy("source")
-    },
-
-    // OUT-OF-TIME (temporal) SPLIT + measured leakage audit — the holdout
-    // forecast/time-series training needs (q_forecast_backtest consumes
-    // exactly this boundary discipline): train < 80%-of-range, val < 90%,
-    // test after, with boundaries computed in INTEGER seconds (lo + range
-    // * 8 div 10) so both engines derive bit-identical cut points. The
-    // audit follows q_group_split's measure-don't-assume posture, made
-    // non-vacuous by being TWO-PASS: the assignment frame is joined back
-    // to an independent re-read of the fact by event_id and future_leaks
-    // counts train/val rows whose re-read timestamp lands at/after their
-    // split's upper boundary — a timezone/normalization drift between the
-    // assignment job and a consumer job (the classic temporal-split bug)
-    // fails this gate loudly instead of silently training on the future.
-    // users_spanning is reported per split and EXPECTED > 0 here: a
-    // temporal split does not give entity disjointness — that column is
-    // the printed reason q_group_split exists beside it.
-    // Scale posture: bounds is a broadcast scalar row; the audit join is
-    // key-partitioned fact-vs-fact (the one real shuffle, and it IS the
-    // deliverable); user frames are user-cardinality.
-    "q_temporal_split" -> { (s, d) =>
-      val evRaw = Tables.events(s, d)
-      val base = evRaw.select(col("event_id"), col("user_id"),
-        unix_timestamp(col("ts")).as("sec"))
-      val bounds = base.agg(min(col("sec")).as("lo"), max(col("sec")).as("hi"))
-        .select(expr("lo + (hi - lo) * 8 div 10").as("b1"),
-          expr("lo + (hi - lo) * 9 div 10").as("b2"))
-      val assign = base.crossJoin(broadcast(bounds))
-        .select(col("event_id"), col("user_id"), col("b1"), col("b2"),
-          when(col("sec") < col("b1"), "train")
-            .when(col("sec") < col("b2"), "val")
-            .otherwise("test").as("split"))
-      val audit = evRaw.select(col("event_id"),
-          unix_timestamp(col("ts")).as("sec_audit"))
-        .join(assign, Seq("event_id"))
-      val perSplit = audit.groupBy("split")
-        .agg(count(lit(1)).as("n_events"),
-          coalesce(sum(when(
-            (col("split") === "train" && col("sec_audit") >= col("b1")) ||
-              (col("split") === "val" && col("sec_audit") >= col("b2")), 1L)),
-            lit(0L)).as("future_leaks"))
-      val us = assign.select("user_id", "split").distinct()
-      val perUser = us.groupBy("user_id").agg(count(lit(1)).as("n_splits"))
-      val users = us.join(perUser, Seq("user_id"))
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_users"),
-          coalesce(sum(when(col("n_splits") > 1, 1L)), lit(0L))
-            .as("users_spanning"))
-      perSplit.join(users, Seq("split"))
-        .select("split", "n_events", "future_leaks", "n_users",
-          "users_spanning")
-        .orderBy("split")
-    },
-
-    // GROUP-AWARE K-FOLD — the cross-validation generalization of
-    // q_group_split: fold = md5-bucket of the USER (k=5), so every
-    // user's history lives in exactly one fold (GroupKFold semantics).
-    // Measured, not assumed: users_spanning must be 0 per fold, and the
-    // balance columns expose the hash split's actual evenness (CV
-    // variance estimates assume near-equal folds; a skewed hash would
-    // silently widen them). Frames after the distinct are
-    // user-cardinality; one fact pass for event counts.
-    "q_group_kfold" -> { (s, d) =>
-      val k = 5
-      val fold = (conv(substring(md5(col("user_id").cast("string")), 1, 4),
-        16, 10).cast("long") % k).cast("int")
-      val ev = Tables.events(s, d).select(col("user_id"), fold.as("fold"))
-      val us = ev.distinct()
-      val perUser = us.groupBy("user_id").agg(count(lit(1)).as("n_folds"))
-      val users = us.join(perUser, Seq("user_id"))
-        .groupBy("fold")
-        .agg(count(lit(1)).as("n_users"),
-          coalesce(sum(when(col("n_folds") > 1, 1L)), lit(0L))
-            .as("users_spanning"))
-      ev.groupBy("fold").agg(count(lit(1)).as("n_events"))
-        .join(users, Seq("fold"))
-        .orderBy("fold")
-    },
-
-    // GROUP-AWARE SPLIT — the leakage-safe train/val/test split: the
-    // unit of assignment is the USER, not the event, so no user's
-    // history straddles splits (the GroupShuffleSplit contract; an
-    // event-level hash split leaks session context across the boundary).
-    // The report proves it: per split, event and user counts plus the
-    // count of users observed in more than one split — structurally 0
-    // because split is a pure function of user_id, and the query
-    // MEASURES it rather than assuming it (a refactor that switches the
-    // hash input to event_id fails this gate loudly). Frames after the
-    // first distinct are user-cardinality; the md5 bucket is the same
-    // cross-engine-deterministic idiom as q_sample_split.
-    "q_group_split" -> { (s, d) =>
-      val bucket = conv(substring(md5(col("user_id").cast("string")), 1, 4),
-        16, 10).cast("long") % 100
-      val split = when(bucket < 80, "train").when(bucket < 90, "val")
-        .otherwise("test")
-      val ev = Tables.events(s, d).select(col("user_id"), split.as("split"))
-      val us = ev.distinct()
-      val perUser = us.groupBy("user_id")
-        .agg(count(lit(1)).as("n_splits"))
-      val users = us.join(perUser, Seq("user_id"))
-        .groupBy("split")
-        .agg(count(lit(1)).as("n_users"),
-          coalesce(sum(when(col("n_splits") > 1, 1L)), lit(0L))
-            .as("users_spanning"))
-      ev.groupBy("split").agg(count(lit(1)).as("n_events"))
-        .join(users, Seq("split"))
-        .orderBy("split")
-    },
-
-    // Boilerplate stripping — URL and markup removal, the standard web-
-    // corpus cleaning step (synthetic text has neither, so the first 20
-    // docs get both planted, like the PII audit). Pure codegen'd regexp
-    // map work, zero shuffles; patterns stay in the Java-regex ∩ RE2
-    // subset so the oracle replays them (DuckDB needs the 'g' flag —
-    // its regexp_replace is first-match by default, Spark's is global).
-    "q_boilerplate" -> { (s, d) =>
-      val planted = Tables.documents(s, d).select(col("doc_id"),
-        when(col("doc_id") < 20,
-          concat(lit("<div class=x> "), col("text"),
-            lit(" see https://example.com/a?b=1 and http://foo.bar/z </div>")))
-          .otherwise(col("text")).as("text"))
-      val url = "https?://[^ ]+"
-      val tag = "<[^>]*>"
-      val clean = trim(regexp_replace(regexp_replace(regexp_replace(
-        col("text"), url, " "), tag, " "), "[ \\t]+", " "))
-      planted.select(col("doc_id"),
-          size(regexp_extract_all(col("text"), lit(url), lit(0))).cast("long").as("n_urls"),
-          size(regexp_extract_all(col("text"), lit(tag), lit(0))).cast("long").as("n_tags"),
-          length(col("text")).cast("long").as("orig_chars"),
-          length(clean).cast("long").as("clean_chars"))
-        .filter(col("n_urls") + col("n_tags") > 0)
-        .orderBy("doc_id")
-    }
-  )
-
   // ===== DuckDB oracles =====
 
   private val toksSql =
@@ -1391,13 +831,13 @@ object Curation {
       |   AS DECIMAL(18,6))) AS DOUBLE) AS lw
       | FROM feats JOIN stats USING (h) CROSS JOIN tot GROUP BY doc_id)""".stripMargin
 
-  def oracles: Map[String, String] = {
-    // DuckDB twin of [[hrwShard]]: the same packed-BIGINT argmax
-    def hrwSql(n: Int): String = (0 until n).map { sh =>
-      s"CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':$sh'), 1, 13) AS BIGINT) * 16 + $sh"
-    }.mkString("greatest(", ", ", ") % 16")
-    Map(
-    "q_ucb_mix" ->
+  // DuckDB twin of [[hrwShard]]: the same packed-BIGINT argmax
+  private def hrwSql(n: Int): String = (0 until n).map { sh =>
+    s"CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':$sh'), 1, 13) AS BIGINT) * 16 + $sh"
+  }.mkString("greatest(", ", ", ") % 16")
+
+  def entries: Seq[Q] = Seq(
+    Q("q_ucb_mix", { (s, d) => ucbMix(Tables.documents(s, d)) },
       """WITH g AS (
         | SELECT source, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(CASE WHEN n_chars >= 256 THEN 1 ELSE 0 END) AS BIGINT)
@@ -1416,8 +856,68 @@ object Curation {
         |         ORDER BY ucb DESC, source ASC LIMIT 1)
         |SELECT source, n_docs, keeps, keep_ppm, ucb,
         | source = chosen_src AS chosen
-        |FROM sc CROSS JOIN best ORDER BY source""".stripMargin,
-    "q_loso_impact" ->
+        |FROM sc CROSS JOIN best ORDER BY source""".stripMargin),
+    // DoReMi-shape source reweighting: softmax of corpus-LM excess loss.
+    // same KN surprisal frame (shared CTE strings), same 6dp/12dp folds
+    Q("q_domain_reweight", { (s, d) =>
+      domainReweight(Tables.documents(s, d)) },
+      ("WITH " + TextAnalysis.knCountCtesSql + ",\n" +
+        TextAnalysis.knTermsCteSql + ",\n" +
+        """sur AS (
+          | SELECT source, count(*) AS n_bigrams,
+          |  round(CAST(sum(t) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
+          |   AS kn_bits
+          | FROM terms GROUP BY 1),
+          |tot AS (
+          | SELECT CAST(sum(n_bigrams) AS BIGINT) AS tb,
+          |  sum(CAST(round(kn_bits * CAST(n_bigrams AS DOUBLE), 6)
+          |    AS DECIMAL(28,6))) AS wb,
+          |  count(*) AS k
+          | FROM sur),
+          |rw AS (
+          | SELECT source, n_bigrams, kn_bits, k,
+          |  kn_bits - CAST(wb AS DOUBLE) / CAST(tb AS DOUBLE) AS excess,
+          |  CAST(round(exp(1.0 * (kn_bits
+          |    - CAST(wb AS DOUBLE) / CAST(tb AS DOUBLE))), 12)
+          |   AS DECIMAL(28,12)) AS term
+          | FROM sur CROSS JOIN tot),
+          |sw AS (SELECT sum(term) AS sumw FROM rw)
+          |SELECT source, n_bigrams, kn_bits,
+          | round(excess, 6) AS excess_bits,
+          | round(CAST(term AS DOUBLE) / CAST(sumw AS DOUBLE), 6) AS weight,
+          | round((1.0 - 0.2) * (CAST(term AS DOUBLE)
+          |   / CAST(sumw AS DOUBLE)) + 0.2 / CAST(k AS DOUBLE), 6) AS alpha
+          |FROM rw CROSS JOIN sw ORDER BY source""".stripMargin)),
+    // CCNet head/middle/tail perplexity thirds, per-source shares.
+    // same per-doc KN surprisal (shared CTEs), same integer tercile cuts
+    Q("q_ccnet_buckets", { (s, d) =>
+      ccnetBuckets(Tables.documents(s, d)) },
+      ("WITH " + TextAnalysis.knCountCtesSql + ",\n" +
+        TextAnalysis.knTermsCteSql + ",\n" +
+        TextAnalysis.knDocCteSql + ",\n" +
+        """per AS (
+          | SELECT source,
+          |  CAST(round(kn_bits * 100, 0) AS BIGINT) AS cb2
+          | FROM docsur),
+          |spine AS (
+          | SELECT cb2, CAST(sum(count(*)) OVER (ORDER BY cb2
+          |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+          |  AS cum
+          | FROM per GROUP BY 1),
+          |tot AS (SELECT count(*) AS n FROM per),
+          |bk AS (
+          | SELECT source,
+          |  CASE WHEN cum * 3 <= n THEN 'head'
+          |       WHEN cum * 3 <= n * 2 THEN 'middle'
+          |       ELSE 'tail' END AS bucket
+          | FROM per JOIN spine USING (cb2) CROSS JOIN tot),
+          |bs AS (SELECT source, count(*) AS src_docs FROM bk GROUP BY 1)
+          |SELECT source, bucket, count(*) AS n_docs,
+          | CAST(count(*) * 1000000 // src_docs AS BIGINT) AS share_ppm
+          |FROM bk JOIN bs USING (source)
+          |GROUP BY source, bucket, src_docs
+          |ORDER BY source, bucket""".stripMargin)),
+    Q("q_loso_impact", { (s, d) => losoImpact(Tables.documents(s, d)) },
       """WITH g AS (
         | SELECT source, CAST(count(*) AS BIGINT) AS n,
         |  CAST(sum(n_chars) AS BIGINT) AS sc,
@@ -1434,8 +934,9 @@ object Curation {
         | round((CAST(net AS DOUBLE) - CAST(ne AS DOUBLE))
         |   / (CAST(nt AS DOUBLE) - CAST(n AS DOUBLE))
         |  - CAST(net AS DOUBLE) / CAST(nt AS DOUBLE), 6) AS delta_en_share
-        |FROM g CROSS JOIN t ORDER BY source""".stripMargin,
-    "q_ipf_raking" -> {
+        |FROM g CROSS JOIN t ORDER BY source""".stripMargin),
+    // IPF/raking: uniform-source × observed-lang mix calibration.
+    Q("q_ipf_raking", { (s, d) => ipfRaking(Tables.documents(s, d)) }, {
       val rounds = (1 to 3).map(ipfRoundSql).mkString(",\n")
       s"""WITH cells AS (
          | SELECT source, lang, CAST(sum(n_chars) AS BIGINT) AS n
@@ -1454,34 +955,9 @@ object Curation {
          |SELECT source, lang, n AS n_chars_total, w AS weight_mass,
          | CAST(CAST(w AS HUGEINT) * 1000000 // w0 AS BIGINT) AS ratio_ppm
          |FROM c3 ORDER BY 1, 2""".stripMargin
-    },
-    "q_fleiss_kappa" ->
-      s"""WITH per AS (
-         | SELECT (CASE WHEN n_chars >= 280 THEN 1 ELSE 0 END
-         |  + CASE WHEN len(${TextAnalysis.tokensSql("text")}) >= 45
-         |     THEN 1 ELSE 0 END
-         |  + CASE WHEN len(regexp_extract_all(text,
-         |     '${TextAnalysis.bpeTokenPattern}')) >= 60
-         |     THEN 1 ELSE 0 END) AS pos
-         | FROM documents),
-         |m AS (
-         | SELECT count(*) AS n,
-         |  sum(pos * pos + (3 - pos) * (3 - pos)) AS ssq,
-         |  sum(pos) AS tpos
-         | FROM per),
-         |r AS (
-         | SELECT CAST(n AS BIGINT) AS n_items,
-         |  (CAST(ssq AS DOUBLE) - 3.0 * CAST(n AS DOUBLE))
-         |   / (6.0 * CAST(n AS DOUBLE)) AS po,
-         |  CAST(tpos AS DOUBLE) / (3.0 * CAST(n AS DOUBLE)) AS pj
-         | FROM m)
-         |SELECT n_items, round(po, 6) AS po,
-         | round(pj * pj + (1 - pj) * (1 - pj), 6) AS pe,
-         | CASE WHEN pj * pj + (1 - pj) * (1 - pj) = 1 THEN NULL
-         |  ELSE round((po - (pj * pj + (1 - pj) * (1 - pj)))
-         |   / (1 - (pj * pj + (1 - pj) * (1 - pj))), 6) END AS kappa
-         |FROM r""".stripMargin,
-    "q_cohen_kappa" ->
+    }),
+    // Inter-annotator agreement between the two length heuristics.
+    Q("q_cohen_kappa", { (s, d) => cohenKappa(Tables.documents(s, d)) },
       s"""WITH cell AS (
          | SELECT source,
          |  CASE WHEN n_chars >= 280 THEN 1 ELSE 0 END AS a,
@@ -1508,20 +984,78 @@ object Curation {
          | CASE WHEN p1 * p2 + (1 - p1) * (1 - p2) = 1 THEN NULL
          |  ELSE round((po - (p1 * p2 + (1 - p1) * (1 - p2)))
          |   / (1 - (p1 * p2 + (1 - p1) * (1 - p2))), 6) END AS kappa
-         |FROM r ORDER BY source""".stripMargin,
-    "q_skyline" ->
-      s"""WITH d AS (
-         | SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS a,
-         |  round(CAST(len(list_distinct(list_filter(
-         |    string_split_regex(lower(text), '\\s+'), t -> t <> ''))) AS DOUBLE)
-         |   / CAST(len($toksSql) AS DOUBLE), 6) AS b
-         | FROM documents WHERE len($toksSql) > 0)
-         |SELECT doc_id, a AS n_tokens, b AS uniq_ratio FROM d
-         |WHERE NOT EXISTS (
-         | SELECT 1 FROM d e WHERE e.a >= d.a AND e.b >= d.b
-         |  AND (e.a > d.a OR e.b > d.b))
-         |ORDER BY doc_id""".stripMargin,
-    "q_curation_funnel" ->
+         |FROM r ORDER BY source""".stripMargin),
+    // Three-rater Fleiss' kappa over the length-heuristic panel.
+    Q("q_fleiss_kappa", { (s, d) => fleissKappa(Tables.documents(s, d)) },
+      s"""WITH per AS (
+         | SELECT (CASE WHEN n_chars >= 280 THEN 1 ELSE 0 END
+         |  + CASE WHEN len(${TextAnalysis.tokensSql("text")}) >= 45
+         |     THEN 1 ELSE 0 END
+         |  + CASE WHEN len(regexp_extract_all(text,
+         |     '${TextAnalysis.bpeTokenPattern}')) >= 60
+         |     THEN 1 ELSE 0 END) AS pos
+         | FROM documents),
+         |m AS (
+         | SELECT count(*) AS n,
+         |  sum(pos * pos + (3 - pos) * (3 - pos)) AS ssq,
+         |  sum(pos) AS tpos
+         | FROM per),
+         |r AS (
+         | SELECT CAST(n AS BIGINT) AS n_items,
+         |  (CAST(ssq AS DOUBLE) - 3.0 * CAST(n AS DOUBLE))
+         |   / (6.0 * CAST(n AS DOUBLE)) AS po,
+         |  CAST(tpos AS DOUBLE) / (3.0 * CAST(n AS DOUBLE)) AS pj
+         | FROM m)
+         |SELECT n_items, round(po, 6) AS po,
+         | round(pj * pj + (1 - pj) * (1 - pj), 6) AS pe,
+         | CASE WHEN pj * pj + (1 - pj) * (1 - pj) = 1 THEN NULL
+         |  ELSE round((po - (pj * pj + (1 - pj) * (1 - pj)))
+         |   / (1 - (pj * pj + (1 - pj) * (1 - pj))), 6) END AS kappa
+         |FROM r""".stripMargin),
+    // The per-source datasheet row (volume, shape, language, dup rate).
+    Q("q_data_card", { (s, d) => dataCard(Tables.documents(s, d)) },
+      s"""WITH base AS (
+         | SELECT doc_id, source, COALESCE(lang, 'unknown') AS lang,
+         |  CAST(len($toksSql) AS BIGINT) AS tok,
+         |  md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS efp
+         | FROM documents),
+         |vol AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+         |        CAST(sum(tok) AS BIGINT) AS tokens FROM base GROUP BY 1),
+         |med AS (
+         | SELECT source, tok AS p50_tokens FROM (
+         |  SELECT source, tok,
+         |   row_number() OVER (PARTITION BY source ORDER BY tok, doc_id) AS rn,
+         |   count(*) OVER (PARTITION BY source) AS cnt
+         |  FROM base) WHERE rn = (cnt + 1) // 2),
+         |lc AS (SELECT source, lang, CAST(count(*) AS BIGINT) AS ln
+         |       FROM base GROUP BY 1, 2),
+         |tl AS (
+         | SELECT source, lang AS top_lang, ln FROM (
+         |  SELECT source, lang, ln, row_number() OVER (PARTITION BY source
+         |    ORDER BY ln DESC, lang DESC) AS rn
+         |  FROM lc) WHERE rn = 1),
+         |dupfp AS (SELECT efp FROM base GROUP BY efp HAVING count(*) > 1),
+         |dup AS (
+         | SELECT source, CAST(count(*) AS BIGINT) AS dup_docs FROM base
+         | WHERE efp IN (SELECT efp FROM dupfp) GROUP BY 1)
+         |SELECT v.source, n_docs, tokens, p50_tokens, top_lang,
+         | ln * 1000000 // n_docs AS top_lang_ppm,
+         | COALESCE(dup_docs, 0) AS dup_docs,
+         | COALESCE(dup_docs, 0) * 1000000 // n_docs AS dup_ppm
+         |FROM vol v JOIN med USING (source) JOIN tl USING (source)
+         |LEFT JOIN dup USING (source) ORDER BY source""".stripMargin),
+
+    // END-TO-END CURATION FUNNEL — the composed pipeline run: blocklist
+    // strict keep → quality cut (≥ 0.4) → exact dedup (min-id keeper)
+    // → per-source cap (100 best-by-length). One row per stage with the
+    // surviving doc count — the release-notes funnel every curated
+    // corpus publishes, and the gate that the stages actually COMPOSE
+    // (each stage consumes the previous stage's survivors, not the raw
+    // table). Stage frames persist once; counts are scalar aggregates;
+    // the cap runs on the native TopKPerKey exec.
+    Q("q_curation_funnel", { (s, d) =>
+      curationFunnel(Tables.documents(s, d))
+    },
       s"""WITH s0 AS (SELECT doc_id, source, n_chars, text FROM documents),
          |s1 AS (
          | SELECT * FROM s0
@@ -1552,8 +1086,84 @@ object Curation {
          | CAST((SELECT count(*) FROM s3) AS BIGINT)
          |UNION ALL SELECT 5, 'source_cap',
          | CAST((SELECT count(*) FROM s4) AS BIGINT)
-         |ORDER BY stage_order""".stripMargin,
-    "q_negative_sample" ->
+         |ORDER BY stage_order""".stripMargin),
+    // SKYLINE (Pareto frontier) DOC SELECTION (Börzsönyi et al. 2001 —
+    // the classic DB operator Spark has no built-in for): the documents
+    // not dominated in (token count ↑, distinct-token ratio ↑) — "no
+    // other doc is at least as long AND at least as lexically rich,
+    // strictly better in one". The multi-objective shortlist a curation
+    // pass keeps when length and quality trade off.
+    //
+    // Scale path (vs the oracle's obviously-correct O(n²) NOT EXISTS):
+    // grid-prune first — bucket docs by ⌊tokens/8⌋, broadcast the ~100-row
+    // per-bucket max-ratio table, and drop any doc whose ratio ≤ the
+    // running max over STRICTLY higher buckets (every doc there is
+    // strictly longer, so ≥ ratio ⇒ dominated; no frontier point can be
+    // pruned). One corpus map pass + a broadcast join kills ~all rows;
+    // the exact dominance anti-join then runs on the surviving
+    // frontier-candidate set only (dimension-class), never all-pairs.
+    Q("q_skyline", { (s, d) =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"),
+          TextAnalysis.tokenCount(col("text")).cast("long").as("a"),
+          round(size(array_distinct(TextAnalysis.tokens(lower(col("text")))))
+            .cast("double") /
+            TextAnalysis.tokenCount(col("text")).cast("double"), 6).as("b"))
+        .filter(col("a") > 0)
+      val bmax = docs.select(expr("a div 8").as("bk"), col("b"))
+        .groupBy("bk").agg(max(col("b")).as("bm"))
+      val W = org.apache.spark.sql.expressions.Window
+      val wDesc = W.orderBy(desc("bk")).rowsBetween(W.unboundedPreceding, -1)
+      // running max of bm over STRICTLY higher buckets (window over the
+      // ~100-row bucket frame, not the corpus)
+      val cm = bmax.withColumn("cm_higher", max(col("bm")).over(wDesc))
+      val surv = docs.withColumn("bk", expr("a div 8"))
+        .join(broadcast(cm.select(col("bk"), col("cm_higher"))), Seq("bk"))
+        .filter(col("cm_higher").isNull || col("b") > col("cm_higher"))
+        .select("doc_id", "a", "b")
+      val e = surv.select(col("a").as("ea"), col("b").as("eb"))
+      surv.join(broadcast(e),
+          col("ea") >= col("a") && col("eb") >= col("b") &&
+            (col("ea") > col("a") || col("eb") > col("b")), "left_anti")
+        .select(col("doc_id"), col("a").as("n_tokens"),
+          col("b").as("uniq_ratio"))
+        .orderBy("doc_id")
+    },
+      s"""WITH d AS (
+         | SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS a,
+         |  round(CAST(len(list_distinct(list_filter(
+         |    string_split_regex(lower(text), '\\s+'), t -> t <> ''))) AS DOUBLE)
+         |   / CAST(len($toksSql) AS DOUBLE), 6) AS b
+         | FROM documents WHERE len($toksSql) > 0)
+         |SELECT doc_id, a AS n_tokens, b AS uniq_ratio FROM d
+         |WHERE NOT EXISTS (
+         | SELECT 1 FROM d e WHERE e.a >= d.a AND e.b >= d.b
+         |  AND (e.a > d.a OR e.b > d.b))
+         |ORDER BY doc_id""".stripMargin),
+
+    // DETERMINISTIC NEGATIVE SAMPLING for contrastive training: per
+    // anchor document, k pseudo-random negatives drawn by ranking
+    // candidates on md5(anchor:candidate) — uniform, rerun/partitioning/
+    // engine-stable (resumable training needs the SAME negatives every
+    // epoch-0 rebuild) — with a same-source exclusion so near-context
+    // docs can't leak in as "negatives" (the false-negative screen;
+    // production swaps in the dup-cluster exclusion from q_dedup_clusters
+    // the same way). Scale posture: anchors broadcast over one corpus
+    // scan; the per-anchor k-smallest-hash selection runs on the native
+    // TopKPerKey exec — map-side k-bounded heaps, the shuffle carries ≤ k
+    // candidates per anchor per mapper, never a per-anchor sort.
+    Q("q_negative_sample", { (s, d) =>
+      val docs = Tables.documents(s, d).select("doc_id", "source")
+      val anchors = docs.filter(col("doc_id") < 5)
+        .select(col("doc_id").as("qid"), col("source").as("qsrc"))
+      val cand = docs.crossJoin(broadcast(anchors))
+        .filter(col("doc_id") =!= col("qid") && col("source") =!= col("qsrc"))
+        .select(col("qid"), col("doc_id").as("neg_id"),
+          md5(concat_ws(":", col("qid"), col("doc_id"))).as("sample_key"))
+      graft.plans.TopKPerKey.topKPerKey(cand, keys = Seq("qid"),
+          order = Seq(("sample_key", true), ("neg_id", true)), k = 5)
+        .orderBy("qid", "sample_key")
+    },
       """WITH a AS (
         | SELECT doc_id AS qid, source AS qsrc FROM documents
         | WHERE doc_id < 5),
@@ -1566,39 +1176,11 @@ object Curation {
         | SELECT qid, neg_id, sample_key,
         |  row_number() OVER (PARTITION BY qid
         |    ORDER BY sample_key, neg_id) AS rn
-        | FROM c) WHERE rn <= 5 ORDER BY qid, sample_key""".stripMargin,
-    "q_data_card" ->
-      s"""WITH base AS (
-         | SELECT doc_id, source, COALESCE(lang, 'unknown') AS lang,
-         |  CAST(len($toksSql) AS BIGINT) AS tok,
-         |  md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS efp
-         | FROM documents),
-         |vol AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         |        CAST(sum(tok) AS BIGINT) AS tokens FROM base GROUP BY 1),
-         |med AS (
-         | SELECT source, tok AS p50_tokens FROM (
-         |  SELECT source, tok,
-         |   row_number() OVER (PARTITION BY source ORDER BY tok, doc_id) AS rn,
-         |   count(*) OVER (PARTITION BY source) AS cnt
-         |  FROM base) WHERE rn = (cnt + 1) // 2),
-         |lc AS (SELECT source, lang, CAST(count(*) AS BIGINT) AS ln
-         |       FROM base GROUP BY 1, 2),
-         |tl AS (
-         | SELECT source, lang AS top_lang, ln FROM (
-         |  SELECT source, lang, ln, row_number() OVER (PARTITION BY source
-         |    ORDER BY ln DESC, lang DESC) AS rn
-         |  FROM lc) WHERE rn = 1),
-         |dupfp AS (SELECT efp FROM base GROUP BY efp HAVING count(*) > 1),
-         |dup AS (
-         | SELECT source, CAST(count(*) AS BIGINT) AS dup_docs FROM base
-         | WHERE efp IN (SELECT efp FROM dupfp) GROUP BY 1)
-         |SELECT v.source, n_docs, tokens, p50_tokens, top_lang,
-         | ln * 1000000 // n_docs AS top_lang_ppm,
-         | COALESCE(dup_docs, 0) AS dup_docs,
-         | COALESCE(dup_docs, 0) * 1000000 // n_docs AS dup_ppm
-         |FROM vol v JOIN med USING (source) JOIN tl USING (source)
-         |LEFT JOIN dup USING (source) ORDER BY source""".stripMargin,
-    "q_rendezvous_shard" ->
+        | FROM c) WHERE rn <= 5 ORDER BY qid, sample_key""".stripMargin),
+    // HRW resharding beats mod-hash by ~8x on moved keys at N=8 -> 9.
+    Q("q_rendezvous_shard", { (s, d) =>
+      reshardAudit(Tables.documents(s, d))
+    },
       s"""WITH a AS (
          | SELECT
          |  ${hrwSql(8)} AS hrw8, ${hrwSql(9)} AS hrw9,
@@ -1620,8 +1202,11 @@ object Curation {
          |SELECT n_docs, hrw_moved, hrw_moved * 1000000 // n_docs AS hrw_moved_ppm,
          | mod_moved, mod_moved * 1000000 // n_docs AS mod_moved_ppm,
          | hrw_max_shard, hrw_min_shard
-         |FROM m CROSS JOIN b""".stripMargin,
-    "q_weighted_sample_k" ->
+         |FROM m CROSS JOIN b""".stripMargin),
+    // Exact-k weighted sampling per source (A-ES) on the native top-k exec.
+    Q("q_weighted_sample_k", { (s, d) =>
+      weightedSampleK(Tables.documents(s, d), k = 10)
+    },
       """WITH s AS (
         | SELECT source, doc_id,
         |  round(log2((CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
@@ -1634,8 +1219,338 @@ object Curation {
         |SELECT source, doc_id, es_key FROM (
         | SELECT *, row_number() OVER (PARTITION BY source
         |   ORDER BY es_key DESC, doc_id) AS rn FROM s)
-        |WHERE rn <= 10 ORDER BY source, es_key DESC, doc_id""".stripMargin,
-    "q_repetition_plan" ->
+        |WHERE rn <= 10 ORDER BY source, es_key DESC, doc_id""".stripMargin),
+    // Decontamination: eval set = first 20 docs verbatim; report every
+    // corpus doc sharing a 5-gram with them (the 20 themselves plus any
+    // natural 5-gram collisions in the synthetic vocabulary).
+    Q("q_decontaminate", { (s, d) =>
+      val docs = Tables.documents(s, d)
+      contaminationReport(docs, docs.filter(col("doc_id") < 20),
+          hasher = Dedup.Md5Hash)
+        .orderBy("doc_id")
+    },
+      s"""WITH shs AS (
+         | SELECT doc_id, ${shinglesSql(toksSql, 5)} AS shs FROM documents),
+         |hs AS (
+         | SELECT doc_id, unnest(list_transform(shs, sh -> ${h64("sh")})) AS h
+         | FROM shs),
+         |ev AS (SELECT DISTINCT h FROM hs WHERE doc_id < 20)
+         |SELECT doc_id, count(*) AS n_shared
+         |FROM hs WHERE h IN (SELECT h FROM ev)
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+    // Crawl novelty decay: first-seen 5-gram fraction per ingest batch.
+    Q("q_novelty_decay", { (s, d) =>
+      noveltyDecay(Tables.documents(s, d))
+    },
+      s"""WITH shs AS (
+         | SELECT doc_id, ${shinglesSql(toksSql, 5)} AS shs FROM documents),
+         |hs AS (
+         | SELECT doc_id // 100 AS batch,
+         |  unnest(list_transform(shs, sh -> ${h64("sh")})) AS h
+         | FROM shs),
+         |f AS (SELECT h, min(batch) AS fb FROM hs GROUP BY 1)
+         |SELECT batch, count(*) AS n_grams,
+         | CAST(sum(CASE WHEN fb = batch THEN 1 ELSE 0 END) AS BIGINT) AS novel,
+         | CAST(sum(CASE WHEN fb = batch THEN 1 ELSE 0 END) AS BIGINT)
+         |  * 1000000 // count(*) AS novelty_ppm
+         |FROM hs JOIN f USING (h)
+         |GROUP BY batch ORDER BY batch""".stripMargin),
+
+    // HEAPS'-LAW FIT — q_novelty_decay's extrapolation partner: distinct
+    // 5-gram vocabulary growth V(N) ≈ K·N^β fit by ln-ln OLS over the
+    // cumulative (grams-seen, distinct-grams-seen) curve at ingest-batch
+    // checkpoints. β near 1 = the crawl is nowhere near saturation
+    // (every batch still mints new grams); β falling toward 0.5 = the
+    // classic sublinear regime where doubling the crawl stops doubling
+    // the vocabulary. Fit on SHINGLES, not word tokens: this corpus's
+    // 31-word vocabulary saturates in batch 0, and a zero-variance
+    // series has no slope (guarded: NULL r2/k instead of a divide —
+    // Spark 4 ANSI throws even on double division by exact zero).
+    // Exactness:
+    // checkpoints are exact integers; ln values round to 6dp DECIMAL
+    // and all OLS moments are exact decimal sums (the q_zipf_fit
+    // convention); exp() once on the final intercept. Scale: the gram
+    // stream collapses map-side to gram/batch-sized frames; windows run
+    // on the batch spine only.
+    Q("q_heaps_fit", { (s, d) =>
+      import org.apache.spark.sql.expressions.Window
+      import graft.CacheScope.TrackedDataset
+      val dec = org.apache.spark.sql.types.DecimalType(18, 6)
+      // single-row-group local table: spread BEFORE the tokenize+shingle
+      // explode so the cache build (the query's whole CPU cost, measured
+      // 6.2 s single-task) uses every core; groupBy results are
+      // partitioning-independent
+      val tok = Tables.documents(s, d)
+        .repartition(s.sparkContext.defaultParallelism)
+        .select(expr("doc_id div 100").as("batch"),
+          explode(Dedup.shingles(
+            TextAnalysis.tokens(col("text")), 5)).as("g"))
+        .persistTracked()
+      val perBatch = tok.groupBy("batch").agg(count(lit(1)).as("nt"))
+      val firstSeen = tok.groupBy("g").agg(min(col("batch")).as("fb"))
+        .groupBy(col("fb").as("batch")).agg(count(lit(1)).as("nv"))
+      val w = Window.orderBy("batch")
+      val spine = perBatch.join(firstSeen, Seq("batch"), "left")
+        .na.fill(0L, Seq("nv"))
+        .select(col("batch"), sum(col("nt")).over(w).as("cn"),
+          sum(col("nv")).over(w).as("cv"))
+      val sums = spine.select(
+          round(log(col("cn").cast("double")), 6).cast(dec).as("x"),
+          round(log(col("cv").cast("double")), 6).cast(dec).as("y"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("x")).as("sx"), sum(col("y")).as("sy"),
+          sum(col("x") * col("y")).as("sxy"),
+          sum(col("x") * col("x")).as("sxx"),
+          sum(col("y") * col("y")).as("syy"))
+      val nD = col("n").cast("double")
+      val (sx, sy, sxy, sxx, syy) =
+        (col("sx").cast("double"), col("sy").cast("double"),
+          col("sxy").cast("double"), col("sxx").cast("double"),
+          col("syy").cast("double"))
+      val num = nD * sxy - sx * sy
+      val den = nD * sxx - sx * sx
+      val slope = num / den
+      val den2 = den * (nD * syy - sy * sy)
+      sums.select(col("n").as("n_points"),
+        when(den =!= 0.0, round(slope, 6)).as("beta"),
+        when(den =!= 0.0,
+          round(exp((sy - slope * sx) / nD), 6)).as("k"),
+        when(den2 =!= 0.0, round((num * num) / den2, 6)).as("r2"))
+    },
+      s"""WITH shs AS (
+         | SELECT doc_id // 100 AS batch, ${shinglesSql(toksSql, 5)} AS shs
+         | FROM documents),
+         |tok AS (SELECT batch, unnest(shs) AS g FROM shs),
+         |pb AS (SELECT batch, count(*) AS nt FROM tok GROUP BY 1),
+         |fs AS (SELECT min(batch) AS fb FROM tok GROUP BY g),
+         |nv AS (SELECT fb AS batch, count(*) AS nv FROM fs GROUP BY 1),
+         |sp AS (
+         | SELECT pb.batch,
+         |  CAST(sum(pb.nt) OVER (ORDER BY pb.batch
+         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cn,
+         |  CAST(sum(COALESCE(nv.nv, 0)) OVER (ORDER BY pb.batch
+         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cv
+         | FROM pb LEFT JOIN nv USING (batch)),
+         |p AS (SELECT
+         |  CAST(round(ln(CAST(cn AS DOUBLE)), 6) AS DECIMAL(18,6)) AS x,
+         |  CAST(round(ln(CAST(cv AS DOUBLE)), 6) AS DECIMAL(18,6)) AS y
+         | FROM sp),
+         |s AS (SELECT count(*) AS n,
+         |  CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
+         |  CAST(sum(x*y) AS DOUBLE) AS sxy, CAST(sum(x*x) AS DOUBLE) AS sxx,
+         |  CAST(sum(y*y) AS DOUBLE) AS syy FROM p)
+         |SELECT n AS n_points,
+         | CASE WHEN n*sxx - sx*sx <> 0.0
+         |  THEN round((n*sxy - sx*sy) / (n*sxx - sx*sx), 6) END AS beta,
+         | CASE WHEN n*sxx - sx*sx <> 0.0
+         |  THEN round(exp((sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n), 6)
+         |  END AS k,
+         | CASE WHEN (n*sxx - sx*sx) * (n*syy - sy*sy) <> 0.0
+         |  THEN round(((n*sxy - sx*sy) * (n*sxy - sx*sy))
+         |   / ((n*sxx - sx*sx) * (n*syy - sy*sy)), 6) END AS r2
+         |FROM s""".stripMargin),
+
+    // WATER-FILLING MIX ALLOCATION — spend a token budget of half the
+    // corpus by capping every source at a COMMON level λ: sources with
+    // avail ≤ λ keep everything (small sources are protected), heavy
+    // sources are cut to λ, and λ is chosen so Σ min(avail, λ) = B.
+    // The third mix-balancing primitive beside q_token_budget (uniform
+    // split) and q_source_cap (fixed per-source row cap) — this one
+    // derives the cap FROM the budget. Exact integer throughout: the
+    // candidate level for "k smallest sources kept whole" is
+    // λ_k = (B − P_k) div (n − k) on the sorted source spine (prefix
+    // sums + one lag), and the unique k with prev_avail ≤ λ_k < avail
+    // wins; floors mean Σ alloc ∈ (B − n, B]. Scale: the spine is
+    // source-cardinality (bounded window); the corpus pays ONE
+    // token-count aggregate.
+    Q("q_waterfill_mix", { (s, d) =>
+      waterfillMix(Tables.documents(s, d)
+        .groupBy("source")
+        .agg(sum(TextAnalysis.tokenCount(col("text")).cast("long"))
+          .as("avail")))
+    },
+      s"""WITH a AS (
+         | SELECT source, CAST(sum(len($toksSql)) AS BIGINT) AS avail
+         | FROM documents GROUP BY 1),
+         |t AS (SELECT CAST(sum(avail) AS BIGINT) AS total,
+         |       count(*) AS n FROM a),
+         |sp AS (
+         | SELECT source, avail,
+         |  row_number() OVER (ORDER BY avail, source) AS r,
+         |  CAST(sum(avail) OVER (ORDER BY avail, source
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pk,
+         |  COALESCE(lag(avail) OVER (ORDER BY avail, source), 0) AS prev_avail
+         | FROM a),
+         |l AS (
+         | SELECT CAST(min((total // 2 - (pk - avail)) // (n - r + 1)) AS BIGINT)
+         |   AS lambda
+         | FROM sp, t
+         | WHERE (total // 2 - (pk - avail)) // (n - r + 1) >= prev_avail
+         |   AND (total // 2 - (pk - avail)) // (n - r + 1) < avail)
+         |SELECT source, avail AS avail_tokens,
+         | least(avail, lambda) AS alloc_tokens,
+         | lambda AS cap_level, avail > lambda AS capped
+         |FROM a, l ORDER BY source""".stripMargin),
+    // PII audit over a corpus with planted PII (the synthetic text has
+    // none): first 20 docs get an email + phone + ip appended.
+    Q("q_pii_audit", { (s, d) =>
+      val docs = Tables.documents(s, d)
+      val planted = docs.select(col("doc_id"),
+        when(col("doc_id") < 20,
+          concat(col("text"),
+            concat(lit(" contact user"), col("doc_id"),
+              lit("@example.com or 555-123-4567 at 192.168.0.1"))))
+          .otherwise(col("text")).as("text"))
+      piiAudit(planted)
+        .filter(col("n_email") + col("n_phone") + col("n_ipv4") > 0)
+        .orderBy("doc_id")
+    }, {
+      val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
+      val phone = "[0-9]{3}-[0-9]{3}-[0-9]{4}"
+      val ipv4 = "([0-9]{1,3}\\.){3}[0-9]{1,3}"
+      s"""WITH planted AS (
+         | SELECT doc_id,
+         |  CASE WHEN doc_id < 20 THEN text || ' contact user' || doc_id ||
+         |   '@example.com or 555-123-4567 at 192.168.0.1' ELSE text END AS text
+         | FROM documents),
+         |audited AS (
+         | SELECT doc_id,
+         |  len(regexp_extract_all(text, '$email')) AS n_email,
+         |  len(regexp_extract_all(text, '$phone')) AS n_phone,
+         |  len(regexp_extract_all(text, '$ipv4')) AS n_ipv4,
+         |  md5(regexp_replace(regexp_replace(regexp_replace(text,
+         |    '$email', '[EMAIL]', 'g'),
+         |    '$phone', '[PHONE]', 'g'),
+         |    '$ipv4', '[IP]', 'g')) AS redacted_fp
+         | FROM planted)
+         |SELECT * FROM audited
+         |WHERE n_email + n_phone + n_ipv4 > 0 ORDER BY doc_id""".stripMargin
+    }),
+    // Source-mix report with uniform-target resampling rates.
+    Q("q_source_mix", { (s, d) =>
+      sourceMix(Tables.documents(s, d)).orderBy("source")
+    },
+      s"""WITH per_source AS (
+         | SELECT source, count(*) AS n_docs,
+         |  CAST(sum(len($toksSql)) AS BIGINT) AS n_tokens
+         | FROM documents GROUP BY source),
+         |totals AS (
+         | SELECT CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
+         |  count(*) AS n_sources FROM per_source)
+         |SELECT source, n_docs, n_tokens,
+         | round(CAST(n_tokens AS DOUBLE) / total_tokens, 6) AS token_share,
+         | round(least(1.0, (1.0 / n_sources) /
+         |   (CAST(n_tokens AS DOUBLE) / total_tokens)), 6) AS sample_rate
+         |FROM per_source CROSS JOIN totals ORDER BY source""".stripMargin),
+    // HERFINDAHL–HIRSCHMAN CONCENTRATION of the source token mix — the
+    // antitrust-standard scalar beside q_gini_by_source's inequality
+    // curve: HHI = Σ share², effective sources = 1/HHI (the "how many
+    // sources do we REALLY have" number that decides whether the corpus
+    // survives losing its biggest supplier). One source-cardinality
+    // aggregate; HHI folds 6dp-decimal share² terms.
+    Q("q_hhi_sources", { (s, d) => hhiSources(Tables.documents(s, d)) },
+      s"""WITH per AS (
+         | SELECT source, CAST(sum(len($toksSql)) AS BIGINT) AS nt
+         | FROM documents GROUP BY 1),
+         |tot AS (SELECT CAST(sum(nt) AS BIGINT) AS tt, count(*) AS k
+         |        FROM per),
+         |terms AS (
+         | SELECT k, CAST(round((CAST(nt AS DOUBLE) / CAST(tt AS DOUBLE))
+         |   * (CAST(nt AS DOUBLE) / CAST(tt AS DOUBLE)), 6)
+         |  AS DECIMAL(18,6)) AS t
+         | FROM per CROSS JOIN tot)
+         |SELECT k AS n_sources,
+         | round(CAST(sum(t) AS DOUBLE), 6) AS hhi,
+         | round(1.0 / CAST(sum(t) AS DOUBLE), 6) AS effective_sources
+         |FROM terms GROUP BY k""".stripMargin),
+    // Did the curated mix land on the uniform target? χ² GOF + worst
+    // single-source deviation.
+    Q("q_mix_gof", { (s, d) => mixGof(Tables.documents(s, d)) },
+      s"""WITH per AS (
+         | SELECT source, CAST(sum(len($toksSql)) AS BIGINT) AS nt
+         | FROM documents GROUP BY 1),
+         |tot AS (SELECT CAST(sum(nt) AS BIGINT) AS tt, count(*) AS k
+         |        FROM per),
+         |terms AS (
+         | SELECT k,
+         |  CAST(round((CAST(nt AS DOUBLE) - CAST(tt AS DOUBLE)
+         |      / CAST(k AS DOUBLE))
+         |    * (CAST(nt AS DOUBLE) - CAST(tt AS DOUBLE) / CAST(k AS DOUBLE))
+         |    / (CAST(tt AS DOUBLE) / CAST(k AS DOUBLE)), 6)
+         |   AS DECIMAL(28,6)) AS t,
+         |  abs(CAST(nt AS HUGEINT) * 1000000 // tt - 1000000 // k) AS dev
+         | FROM per CROSS JOIN tot)
+         |SELECT k AS n_sources, k - 1 AS dof,
+         | round(CAST(sum(t) AS DOUBLE), 6) AS chi2,
+         | CAST(max(dev) AS BIGINT) AS max_dev_ppm
+         |FROM terms GROUP BY k""".stripMargin),
+    // Temperature-flattened sampling weights (α = 0.5) — the mix the
+    // sampler actually draws from, vs q_source_mix's uniform target.
+    Q("q_mix_temperature", { (s, d) =>
+      temperatureMix(Tables.documents(s, d))
+    },
+      """WITH b AS (
+        | SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        |  sum(n_chars) AS tok
+        | FROM documents WHERE source IS NOT NULL GROUP BY 1),
+        |t AS (SELECT sum(tok) AS tt FROM b),
+        |f AS (
+        | SELECT source, n_docs,
+        |  CAST(tok AS DOUBLE) / CAST(tt AS DOUBLE) AS share_raw,
+        |  CAST(round(sqrt(CAST(tok AS DOUBLE) / CAST(tt AS DOUBLE)), 6)
+        |    AS DECIMAL(18,6)) AS w
+        | FROM b CROSS JOIN t),
+        |s AS (SELECT sum(w) AS sw FROM f)
+        |SELECT source, n_docs, round(share_raw, 6) AS share,
+        | round(CAST(w AS DOUBLE) / CAST(sw AS DOUBLE), 6) AS p_temp,
+        | round(CAST(w AS DOUBLE) / CAST(sw AS DOUBLE) / share_raw, 6) AS boost
+        |FROM f CROSS JOIN s ORDER BY source""".stripMargin),
+
+    // DATA-CONSTRAINED REPETITION PLAN (Muennighoff et al. 2023, "Scaling
+    // Data-Constrained Language Models", arXiv:2305.16264: repeated data
+    // holds value up to ~4 epochs, then returns decay to ~zero): given a
+    // token budget of 3× the corpus's unique tokens and the sqrt-
+    // temperature mix (the q_mix_temperature weights — sqrt, not pow(τ):
+    // pow is not IEEE-correctly-rounded cross-engine), allocate each
+    // source its target tokens, cap epochs at R_max = 4, and report the
+    // DEFICIT the cap strands — the actionable column: deficit > 0 means
+    // "go acquire more of this source", not "repeat it harder".
+    // Scale posture: one fact pass to source-cardinality sums; everything
+    // after lives on the ~|sources|-row frame with two broadcast scalars.
+    Q("q_repetition_plan", { (s, d) =>
+      import org.apache.spark.sql.types.DecimalType
+      val rMax = 4.0
+      val mult = 3.0
+      // planted scarce source: the natural corpus is uniform, so no source
+      // ever hits the repetition cap — 3 docs re-labeled 'tiny_planted'
+      // give the sqrt-temperature boost a genuinely data-constrained
+      // source and exercise capped=true + deficit > 0 for real
+      val docs = Tables.documents(s, d)
+      val corpus = docs.select("source", "text").unionByName(
+        docs.filter(col("doc_id") < 3)
+          .select(lit("tiny_planted").as("source"), col("text")))
+      val bySrc = corpus.filter(col("source").isNotNull)
+        .groupBy("source")
+        .agg(sum(TextAnalysis.tokenCount(col("text")).cast("long")).as("u"))
+      val tot = bySrc.agg(sum(col("u")).as("tu"))
+      val share = col("u").cast("double") / col("tu").cast("double")
+      val f = bySrc.crossJoin(broadcast(tot))
+        .select(col("source"), col("u"), col("tu"),
+          round(sqrt(share), 6).cast(DecimalType(18, 6)).as("w"))
+      val sw = f.agg(sum(col("w")).as("sw"))
+      val p = col("w").cast("double") / col("sw").cast("double")
+      val tgt = p * mult * col("tu").cast("double")
+      val epochsRaw = tgt / col("u").cast("double")
+      f.crossJoin(broadcast(sw))
+        .select(col("source"), col("u").as("unique_tokens"),
+          round(p, 6).as("p_temp"),
+          round(tgt, 6).as("target_tokens"),
+          round(least(epochsRaw, lit(rMax)), 6).as("epochs"),
+          (epochsRaw > rMax).as("capped"),
+          round(greatest(tgt - col("u").cast("double") * rMax, lit(0.0)), 6)
+            .as("deficit_tokens"))
+        .orderBy("source")
+    },
       s"""WITH corpus AS (
          | SELECT source, text FROM documents
          | UNION ALL
@@ -1662,32 +1577,54 @@ object Curation {
          | round(greatest(CAST(w AS DOUBLE) / CAST(sw AS DOUBLE) * 3.0
          |   * CAST(tu AS DOUBLE) - 4.0 * CAST(u AS DOUBLE), 0.0), 6)
          |  AS deficit_tokens
-         |FROM f CROSS JOIN s ORDER BY source""".stripMargin,
-    "q_mix_temperature" ->
-      """WITH b AS (
-        | SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  sum(n_chars) AS tok
-        | FROM documents WHERE source IS NOT NULL GROUP BY 1),
-        |t AS (SELECT sum(tok) AS tt FROM b),
-        |f AS (
-        | SELECT source, n_docs,
-        |  CAST(tok AS DOUBLE) / CAST(tt AS DOUBLE) AS share_raw,
-        |  CAST(round(sqrt(CAST(tok AS DOUBLE) / CAST(tt AS DOUBLE)), 6)
-        |    AS DECIMAL(18,6)) AS w
-        | FROM b CROSS JOIN t),
-        |s AS (SELECT sum(w) AS sw FROM f)
-        |SELECT source, n_docs, round(share_raw, 6) AS share,
-        | round(CAST(w AS DOUBLE) / CAST(sw AS DOUBLE), 6) AS p_temp,
-        | round(CAST(w AS DOUBLE) / CAST(sw AS DOUBLE) / share_raw, 6) AS boost
-        |FROM f CROSS JOIN s ORDER BY source""".stripMargin,
-    "q_source_cap" ->
+         |FROM f CROSS JOIN s ORDER BY source""".stripMargin),
+
+    // PER-SOURCE DOCUMENT CAP — the pretraining-mix move that keeps any
+    // one crawl domain from dominating the corpus: at most k docs per
+    // source, best-first (longest doc wins, ties to the lower id). Runs
+    // on the custom TopKPerKey operator, so the plan is the partial-heap
+    // → single exchange → final-heap shape with NO per-source sort and a
+    // shuffle that carries ≤ k docs per source per mapper — at 100 TB
+    // the cap decides survivors while moving candidate rows only.
+    Q("q_source_cap", { (s, d) =>
+      graft.plans.TopKPerKey.topKPerKey(
+          Tables.documents(s, d).select("doc_id", "source", "n_chars"),
+          keys = Seq("source"),
+          order = Seq(("n_chars", false), ("doc_id", true)), k = 10)
+        .orderBy("source", "doc_id")
+    },
       """SELECT doc_id, source, n_chars FROM (
         | SELECT doc_id, source, n_chars,
         |  row_number() OVER (PARTITION BY source
         |    ORDER BY n_chars DESC, doc_id) AS rn
         | FROM documents)
-        |WHERE rn <= 10 ORDER BY source, doc_id""".stripMargin,
-    "q_blocklist" ->
+        |WHERE rn <= 10 ORDER BY source, doc_id""".stripMargin),
+
+    // BLOCKLIST HIT-RATE FILTER (the C4 "bad words" screen, Raffel et al.
+    // 2020 §2.2 — docs with any hit dropped; RefinedWeb keeps a ratio):
+    // per-doc hit counts against a small term list, computed as ONE
+    // map-side projection — `size(filter(tokens, t ∈ blocked))` — so the
+    // plan has ZERO exchanges before the output sort (an earlier shape
+    // exploded every token, shuffled doc-cardinality counts, and joined
+    // back: two shuffles + a join for what a single codegen'd HOF pass
+    // computes; PlansSpec asserts the no-Exchange shape). The term list
+    // embeds as an array literal (dictionary-sized — a real blocklist is
+    // a few thousand terms, still literal/broadcast class); deployment
+    // swaps the stand-in terms for the real list.
+    Q("q_blocklist", { (s, d) =>
+      val blockedArr = array(Seq("slow", "dup", "broken").map(lit): _*)
+      Tables.documents(s, d)
+        .select(col("doc_id"),
+          TextAnalysis.tokenCount(col("text")).cast("long").as("n"),
+          size(filter(TextAnalysis.tokens(lower(col("text"))),
+            t => array_contains(blockedArr, t))).cast("long").as("n_hits"))
+        .select(col("doc_id"), col("n_hits"),
+          (col("n_hits") === 0).as("keep_strict"),
+          // RefinedWeb-style ratio keep: under 5% of tokens blocked
+          (col("n") > 0 &&
+            col("n_hits") * 100 < col("n") * lit(5)).as("keep_ratio"))
+        .orderBy("doc_id")
+    },
       s"""WITH tok AS (
          | SELECT doc_id, unnest(list_filter(
          |   string_split_regex(lower(text), '\\s+'), t -> t <> '')) AS token
@@ -1703,22 +1640,31 @@ object Curation {
          | COALESCE(n_hits, 0) = 0 AS keep_strict,
          | n > 0 AND COALESCE(n_hits, 0) * 100 < n * 5 AS keep_ratio
          |FROM n LEFT JOIN h ON n.doc_id = h.doc_id
-         |ORDER BY n.doc_id""".stripMargin,
-    "q_truncation_plan" ->
-      s"""WITH d AS (
-         | SELECT source, CAST(len($toksSql) AS BIGINT) AS tok
-         | FROM documents)
-         |SELECT source,
-         | count(*) AS n_docs,
-         | CAST(sum(CASE WHEN tok > 32 THEN 1 ELSE 0 END) AS BIGINT) AS n_trunc,
-         | CAST(sum(CASE WHEN tok > 64 THEN 1 ELSE 0 END) AS BIGINT) AS n_split,
-         | CAST(sum(tok) AS BIGINT) AS tokens,
-         | CAST(sum(least(tok, 32)) AS BIGINT) AS tokens_kept,
-         | CAST(sum(greatest(tok - 32, 0)) AS BIGINT) AS tokens_dropped,
-         | CAST(sum(least(tok, 32)) AS BIGINT) * 1000000
-         |  // CAST(sum(tok) AS BIGINT) AS kept_ppm
-         |FROM d GROUP BY source ORDER BY source""".stripMargin,
-    "q_token_budget" ->
+         |ORDER BY n.doc_id""".stripMargin),
+
+    // TOKEN-BUDGET EPOCH PLAN — given a training budget of 2× the corpus
+    // token mass split uniformly across sources, how many epochs (passes)
+    // does each source run? The repeat-factor table behind every
+    // fixed-budget pretraining mix (sources under their share get
+    // epochs > 1, heavy sources get < 1 = subsampled). Exact integer
+    // arithmetic end-to-end (BIGINT div), so the plan is hash-stable:
+    // one token-count aggregate at source cardinality, scalar broadcast.
+    Q("q_token_budget", { (s, d) =>
+      val perSrc = Tables.documents(s, d)
+        .select(col("source"), TextAnalysis.tokenCount(col("text"))
+          .cast("long").as("tok"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_docs"), sum(col("tok")).as("tokens"))
+      val tot = perSrc.agg(sum(col("tokens")).as("total_tokens"),
+        count(lit(1)).as("n_sources"))
+      perSrc.crossJoin(broadcast(tot))
+        .select(col("source"), col("n_docs"), col("tokens"),
+          expr("(2 * total_tokens) div n_sources").as("budget_tokens"),
+          expr("((2 * total_tokens) div n_sources) * 1000000 div tokens")
+            .as("epochs_ppm"))
+        .withColumn("oversampled", col("epochs_ppm") > 1000000L)
+        .orderBy("source")
+    },
       s"""WITH b AS (
          | SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
          |  CAST(sum(len($toksSql)) AS BIGINT) AS tokens
@@ -1731,13 +1677,108 @@ object Curation {
          |  AS epochs_ppm,
          | ((2 * total_tokens) // n_sources) * 1000000 // tokens > 1000000
          |  AS oversampled
-         |FROM b CROSS JOIN t ORDER BY source""".stripMargin,
-    "q_dsir_weights" ->
+         |FROM b CROSS JOIN t ORDER BY source""".stripMargin),
+
+    // CONTEXT-LENGTH TRUNCATION PLAN — given a model context of L
+    // tokens, what does each source lose under truncate-at-L, and how
+    // much of it should be SPLIT into multiple examples instead
+    // (docs > 2L, where a single truncation discards the majority of
+    // the document)? The per-source readout that decides the
+    // truncate-vs-split policy before tokenizing a 100 TB corpus.
+    // L=32 here: the synthetic corpus is 10–99 whitespace tokens per
+    // doc (median 56), so 32 exercises BOTH tiers at every SF the way
+    // a 2k–8k context would on real documents.
+    // Exact integer arithmetic end-to-end (least/greatest on BIGINT
+    // token counts, ppm via BIGINT div) — hash-stable. Scale posture:
+    // one map pass to per-doc token counts, one source-cardinality
+    // aggregate (map-side combined), no joins.
+    Q("q_truncation_plan", { (s, d) =>
+      val L = 32L
+      val perDoc = Tables.documents(s, d)
+        .select(col("source"), TextAnalysis.tokenCount(col("text"))
+          .cast("long").as("tok"))
+      perDoc.groupBy("source").agg(
+          count(lit(1)).as("n_docs"),
+          sum(when(col("tok") > L, 1L).otherwise(0L)).as("n_trunc"),
+          sum(when(col("tok") > 2 * L, 1L).otherwise(0L)).as("n_split"),
+          sum(col("tok")).as("tokens"),
+          sum(least(col("tok"), lit(L))).as("tokens_kept"),
+          sum(greatest(col("tok") - L, lit(0L))).as("tokens_dropped"))
+        .withColumn("kept_ppm",
+          expr("tokens_kept * 1000000 div tokens"))
+        .orderBy("source")
+    },
+      s"""WITH d AS (
+         | SELECT source, CAST(len($toksSql) AS BIGINT) AS tok
+         | FROM documents)
+         |SELECT source,
+         | count(*) AS n_docs,
+         | CAST(sum(CASE WHEN tok > 32 THEN 1 ELSE 0 END) AS BIGINT) AS n_trunc,
+         | CAST(sum(CASE WHEN tok > 64 THEN 1 ELSE 0 END) AS BIGINT) AS n_split,
+         | CAST(sum(tok) AS BIGINT) AS tokens,
+         | CAST(sum(least(tok, 32)) AS BIGINT) AS tokens_kept,
+         | CAST(sum(greatest(tok - 32, 0)) AS BIGINT) AS tokens_dropped,
+         | CAST(sum(least(tok, 32)) AS BIGINT) * 1000000
+         |  // CAST(sum(tok) AS BIGINT) AS kept_ppm
+         |FROM d GROUP BY source ORDER BY source""".stripMargin),
+
+    // DSIR — Data Selection via Importance Resampling (Xie et al. 2023,
+    // arXiv:2302.03169): weight every raw document by how target-like its
+    // hashed-n-gram distribution is, log w(x) = Σ_f log(p_target(f) /
+    // p_raw(f)) under add-one-smoothed bag-of-hashed-ngrams models
+    // (unigrams + bigrams hashed to 256 buckets; the paper's 10k-bucket
+    // knob, scaled to this corpus). Target slice = lang='en' docs — the
+    // in-domain sample a curator actually has. selected = logw ≥ exact
+    // p90 (the deterministic stand-in for the paper's Gumbel resampling;
+    // the weight table is the artifact either consumer uses).
+    // Float determinism: each per-feature log term rounds to 6dp DECIMAL
+    // before the order-independent per-doc decimal sum (the q_lm_score
+    // idiom); the only doubles are ln() of exact integers.
+    // Scale posture: features flow as (doc_id, bucket) longs — never
+    // n-gram text; the model is a 256-row broadcast; the threshold is
+    // one X4 exact-percentile pass over the doc-cardinality weight frame.
+    Q("q_dsir_weights", { (s, d) =>
+      val perDoc = dsirPerDoc(s, d)
+      val thr = Analytics.exactPercentiles(perDoc, "lw", Seq("p90" -> 0.9))
+      perDoc.crossJoin(broadcast(thr))
+        .select(col("doc_id"), col("n_feats"), round(col("lw"), 6).as("logw"),
+          (col("lw") >= col("p90")).as("selected"))
+        .orderBy("doc_id")
+    },
       (s"WITH $dsirPdCtes,\n" +
         """thr AS (SELECT quantile_cont(lw, 0.9) AS p90 FROM pd)
           |SELECT doc_id, n_feats, round(lw, 6) AS logw, lw >= p90 AS selected
-          |FROM pd, thr ORDER BY doc_id""".stripMargin),
-    "q_ess_weights" ->
+          |FROM pd, thr ORDER BY doc_id""".stripMargin)),
+
+    // EFFECTIVE SAMPLE SIZE of the DSIR importance weights, PER SOURCE
+    // (Kong 1992): ESS = (Σw)²/Σw² with w = exp(logw − max_s logw) —
+    // the self-normalized form, shifted by the per-source max so exp
+    // never overflows and the ratio is scale-invariant. THE diagnostic
+    // importance resampling ships with: ESS/n near 1 means the source's
+    // docs are exchangeable under the target; near 0 means a handful of
+    // docs would dominate a resample (variance blow-up — cap weights or
+    // re-model before trusting the mix). Shifted weights round to 6dp
+    // DECIMAL (order-safe sums; w·w an exact decimal product); ESS is
+    // one final double tree. Reuses the dsirPerDoc frame + a doc-
+    // cardinality source join + source-cardinality aggregates.
+    Q("q_ess_weights", { (s, d) =>
+      import org.apache.spark.sql.types.DecimalType
+      val per = dsirPerDoc(s, d)
+        .join(Tables.documents(s, d).select("doc_id", "source"), Seq("doc_id"))
+      val mx = per.groupBy("source").agg(max(col("lw")).as("mxl"))
+      val w = round(exp(col("lw") - col("mxl")), 6).cast(DecimalType(18, 6))
+      val g = per.join(broadcast(mx), Seq("source"))
+        .select(col("source"), w.as("w"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_docs"), sum(col("w")).as("sw"),
+          sum(col("w") * col("w")).as("sww"))
+      def db(c: String) = col(c).cast("double")
+      g.select(col("source"), col("n_docs"),
+          round(db("sw") * db("sw") / db("sww"), 6).as("ess"),
+          round(db("sw") * db("sw") / db("sww") / db("n_docs"), 6)
+            .as("ess_ratio"))
+        .orderBy("source")
+    },
       (s"WITH $dsirPdCtes,\n" +
         """per AS (
           | SELECT pd.doc_id, pd.lw, d.source
@@ -1756,8 +1797,59 @@ object Curation {
           |   / CAST(sww AS DOUBLE), 6) AS ess,
           | round(CAST(sw AS DOUBLE) * CAST(sw AS DOUBLE)
           |   / CAST(sww AS DOUBLE) / CAST(n_docs AS DOUBLE), 6) AS ess_ratio
-          |FROM g ORDER BY source""".stripMargin),
-    "q_temporal_split" ->
+          |FROM g ORDER BY source""".stripMargin)),
+
+    // OUT-OF-TIME (temporal) SPLIT + measured leakage audit — the holdout
+    // forecast/time-series training needs (q_forecast_backtest consumes
+    // exactly this boundary discipline): train < 80%-of-range, val < 90%,
+    // test after, with boundaries computed in INTEGER seconds (lo + range
+    // * 8 div 10) so both engines derive bit-identical cut points. The
+    // audit follows q_group_split's measure-don't-assume posture, made
+    // non-vacuous by being TWO-PASS: the assignment frame is joined back
+    // to an independent re-read of the fact by event_id and future_leaks
+    // counts train/val rows whose re-read timestamp lands at/after their
+    // split's upper boundary — a timezone/normalization drift between the
+    // assignment job and a consumer job (the classic temporal-split bug)
+    // fails this gate loudly instead of silently training on the future.
+    // users_spanning is reported per split and EXPECTED > 0 here: a
+    // temporal split does not give entity disjointness — that column is
+    // the printed reason q_group_split exists beside it.
+    // Scale posture: bounds is a broadcast scalar row; the audit join is
+    // key-partitioned fact-vs-fact (the one real shuffle, and it IS the
+    // deliverable); user frames are user-cardinality.
+    Q("q_temporal_split", { (s, d) =>
+      val evRaw = Tables.events(s, d)
+      val base = evRaw.select(col("event_id"), col("user_id"),
+        unix_timestamp(col("ts")).as("sec"))
+      val bounds = base.agg(min(col("sec")).as("lo"), max(col("sec")).as("hi"))
+        .select(expr("lo + (hi - lo) * 8 div 10").as("b1"),
+          expr("lo + (hi - lo) * 9 div 10").as("b2"))
+      val assign = base.crossJoin(broadcast(bounds))
+        .select(col("event_id"), col("user_id"), col("b1"), col("b2"),
+          when(col("sec") < col("b1"), "train")
+            .when(col("sec") < col("b2"), "val")
+            .otherwise("test").as("split"))
+      val audit = evRaw.select(col("event_id"),
+          unix_timestamp(col("ts")).as("sec_audit"))
+        .join(assign, Seq("event_id"))
+      val perSplit = audit.groupBy("split")
+        .agg(count(lit(1)).as("n_events"),
+          coalesce(sum(when(
+            (col("split") === "train" && col("sec_audit") >= col("b1")) ||
+              (col("split") === "val" && col("sec_audit") >= col("b2")), 1L)),
+            lit(0L)).as("future_leaks"))
+      val us = assign.select("user_id", "split").distinct()
+      val perUser = us.groupBy("user_id").agg(count(lit(1)).as("n_splits"))
+      val users = us.join(perUser, Seq("user_id"))
+        .groupBy("split")
+        .agg(count(lit(1)).as("n_users"),
+          coalesce(sum(when(col("n_splits") > 1, 1L)), lit(0L))
+            .as("users_spanning"))
+      perSplit.join(users, Seq("split"))
+        .select("split", "n_events", "future_leaks", "n_users",
+          "users_spanning")
+        .orderBy("split")
+    },
       """WITH base AS (
         | SELECT event_id, user_id,
         |  CAST(floor(epoch(ts)) AS BIGINT) AS sec
@@ -1790,8 +1882,32 @@ object Curation {
         |    AS BIGINT), 0) AS users_spanning
         | FROM us JOIN pu USING (user_id) GROUP BY 1)
         |SELECT split, n_events, future_leaks, n_users, users_spanning
-        |FROM per_split JOIN u USING (split) ORDER BY split""".stripMargin,
-    "q_group_kfold" ->
+        |FROM per_split JOIN u USING (split) ORDER BY split""".stripMargin),
+
+    // GROUP-AWARE K-FOLD — the cross-validation generalization of
+    // q_group_split: fold = md5-bucket of the USER (k=5), so every
+    // user's history lives in exactly one fold (GroupKFold semantics).
+    // Measured, not assumed: users_spanning must be 0 per fold, and the
+    // balance columns expose the hash split's actual evenness (CV
+    // variance estimates assume near-equal folds; a skewed hash would
+    // silently widen them). Frames after the distinct are
+    // user-cardinality; one fact pass for event counts.
+    Q("q_group_kfold", { (s, d) =>
+      val k = 5
+      val fold = (conv(substring(md5(col("user_id").cast("string")), 1, 4),
+        16, 10).cast("long") % k).cast("int")
+      val ev = Tables.events(s, d).select(col("user_id"), fold.as("fold"))
+      val us = ev.distinct()
+      val perUser = us.groupBy("user_id").agg(count(lit(1)).as("n_folds"))
+      val users = us.join(perUser, Seq("user_id"))
+        .groupBy("fold")
+        .agg(count(lit(1)).as("n_users"),
+          coalesce(sum(when(col("n_folds") > 1, 1L)), lit(0L))
+            .as("users_spanning"))
+      ev.groupBy("fold").agg(count(lit(1)).as("n_events"))
+        .join(users, Seq("fold"))
+        .orderBy("fold")
+    },
       """WITH ev AS (
         | SELECT user_id,
         |  CAST(CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 4))
@@ -1806,8 +1922,37 @@ object Curation {
         | FROM us JOIN pu USING (user_id) GROUP BY 1),
         |e AS (SELECT fold, count(*) AS n_events FROM ev GROUP BY 1)
         |SELECT fold, n_events, n_users, users_spanning
-        |FROM e JOIN u USING (fold) ORDER BY fold""".stripMargin,
-    "q_group_split" ->
+        |FROM e JOIN u USING (fold) ORDER BY fold""".stripMargin),
+
+    // GROUP-AWARE SPLIT — the leakage-safe train/val/test split: the
+    // unit of assignment is the USER, not the event, so no user's
+    // history straddles splits (the GroupShuffleSplit contract; an
+    // event-level hash split leaks session context across the boundary).
+    // The report proves it: per split, event and user counts plus the
+    // count of users observed in more than one split — structurally 0
+    // because split is a pure function of user_id, and the query
+    // MEASURES it rather than assuming it (a refactor that switches the
+    // hash input to event_id fails this gate loudly). Frames after the
+    // first distinct are user-cardinality; the md5 bucket is the same
+    // cross-engine-deterministic idiom as q_sample_split.
+    Q("q_group_split", { (s, d) =>
+      val bucket = conv(substring(md5(col("user_id").cast("string")), 1, 4),
+        16, 10).cast("long") % 100
+      val split = when(bucket < 80, "train").when(bucket < 90, "val")
+        .otherwise("test")
+      val ev = Tables.events(s, d).select(col("user_id"), split.as("split"))
+      val us = ev.distinct()
+      val perUser = us.groupBy("user_id")
+        .agg(count(lit(1)).as("n_splits"))
+      val users = us.join(perUser, Seq("user_id"))
+        .groupBy("split")
+        .agg(count(lit(1)).as("n_users"),
+          coalesce(sum(when(col("n_splits") > 1, 1L)), lit(0L))
+            .as("users_spanning"))
+      ev.groupBy("split").agg(count(lit(1)).as("n_events"))
+        .join(users, Seq("split"))
+        .orderBy("split")
+    },
       """WITH ev AS (
         | SELECT user_id, CASE
         |  WHEN CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 4)) AS BIGINT) % 100 < 80 THEN 'train'
@@ -1823,110 +1968,32 @@ object Curation {
         | FROM us JOIN pu USING (user_id) GROUP BY 1),
         |e AS (SELECT split, count(*) AS n_events FROM ev GROUP BY 1)
         |SELECT split, n_events, n_users, users_spanning
-        |FROM e JOIN u USING (split) ORDER BY split""".stripMargin,
-    "q_decontaminate" ->
-      s"""WITH shs AS (
-         | SELECT doc_id, ${shinglesSql(toksSql, 5)} AS shs FROM documents),
-         |hs AS (
-         | SELECT doc_id, unnest(list_transform(shs, sh -> ${h64("sh")})) AS h
-         | FROM shs),
-         |ev AS (SELECT DISTINCT h FROM hs WHERE doc_id < 20)
-         |SELECT doc_id, count(*) AS n_shared
-         |FROM hs WHERE h IN (SELECT h FROM ev)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "q_waterfill_mix" ->
-      s"""WITH a AS (
-         | SELECT source, CAST(sum(len($toksSql)) AS BIGINT) AS avail
-         | FROM documents GROUP BY 1),
-         |t AS (SELECT CAST(sum(avail) AS BIGINT) AS total,
-         |       count(*) AS n FROM a),
-         |sp AS (
-         | SELECT source, avail,
-         |  row_number() OVER (ORDER BY avail, source) AS r,
-         |  CAST(sum(avail) OVER (ORDER BY avail, source
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pk,
-         |  COALESCE(lag(avail) OVER (ORDER BY avail, source), 0) AS prev_avail
-         | FROM a),
-         |l AS (
-         | SELECT CAST(min((total // 2 - (pk - avail)) // (n - r + 1)) AS BIGINT)
-         |   AS lambda
-         | FROM sp, t
-         | WHERE (total // 2 - (pk - avail)) // (n - r + 1) >= prev_avail
-         |   AND (total // 2 - (pk - avail)) // (n - r + 1) < avail)
-         |SELECT source, avail AS avail_tokens,
-         | least(avail, lambda) AS alloc_tokens,
-         | lambda AS cap_level, avail > lambda AS capped
-         |FROM a, l ORDER BY source""".stripMargin,
-    "q_heaps_fit" ->
-      s"""WITH shs AS (
-         | SELECT doc_id // 100 AS batch, ${shinglesSql(toksSql, 5)} AS shs
-         | FROM documents),
-         |tok AS (SELECT batch, unnest(shs) AS g FROM shs),
-         |pb AS (SELECT batch, count(*) AS nt FROM tok GROUP BY 1),
-         |fs AS (SELECT min(batch) AS fb FROM tok GROUP BY g),
-         |nv AS (SELECT fb AS batch, count(*) AS nv FROM fs GROUP BY 1),
-         |sp AS (
-         | SELECT pb.batch,
-         |  CAST(sum(pb.nt) OVER (ORDER BY pb.batch
-         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cn,
-         |  CAST(sum(COALESCE(nv.nv, 0)) OVER (ORDER BY pb.batch
-         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cv
-         | FROM pb LEFT JOIN nv USING (batch)),
-         |p AS (SELECT
-         |  CAST(round(ln(CAST(cn AS DOUBLE)), 6) AS DECIMAL(18,6)) AS x,
-         |  CAST(round(ln(CAST(cv AS DOUBLE)), 6) AS DECIMAL(18,6)) AS y
-         | FROM sp),
-         |s AS (SELECT count(*) AS n,
-         |  CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
-         |  CAST(sum(x*y) AS DOUBLE) AS sxy, CAST(sum(x*x) AS DOUBLE) AS sxx,
-         |  CAST(sum(y*y) AS DOUBLE) AS syy FROM p)
-         |SELECT n AS n_points,
-         | CASE WHEN n*sxx - sx*sx <> 0.0
-         |  THEN round((n*sxy - sx*sy) / (n*sxx - sx*sx), 6) END AS beta,
-         | CASE WHEN n*sxx - sx*sx <> 0.0
-         |  THEN round(exp((sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n), 6)
-         |  END AS k,
-         | CASE WHEN (n*sxx - sx*sx) * (n*syy - sy*sy) <> 0.0
-         |  THEN round(((n*sxy - sx*sy) * (n*sxy - sx*sy))
-         |   / ((n*sxx - sx*sx) * (n*syy - sy*sy)), 6) END AS r2
-         |FROM s""".stripMargin,
-    "q_novelty_decay" ->
-      s"""WITH shs AS (
-         | SELECT doc_id, ${shinglesSql(toksSql, 5)} AS shs FROM documents),
-         |hs AS (
-         | SELECT doc_id // 100 AS batch,
-         |  unnest(list_transform(shs, sh -> ${h64("sh")})) AS h
-         | FROM shs),
-         |f AS (SELECT h, min(batch) AS fb FROM hs GROUP BY 1)
-         |SELECT batch, count(*) AS n_grams,
-         | CAST(sum(CASE WHEN fb = batch THEN 1 ELSE 0 END) AS BIGINT) AS novel,
-         | CAST(sum(CASE WHEN fb = batch THEN 1 ELSE 0 END) AS BIGINT)
-         |  * 1000000 // count(*) AS novelty_ppm
-         |FROM hs JOIN f USING (h)
-         |GROUP BY batch ORDER BY batch""".stripMargin,
-    "q_pii_audit" -> {
-      val email = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-      val phone = "[0-9]{3}-[0-9]{3}-[0-9]{4}"
-      val ipv4 = "([0-9]{1,3}\\.){3}[0-9]{1,3}"
-      s"""WITH planted AS (
-         | SELECT doc_id,
-         |  CASE WHEN doc_id < 20 THEN text || ' contact user' || doc_id ||
-         |   '@example.com or 555-123-4567 at 192.168.0.1' ELSE text END AS text
-         | FROM documents),
-         |audited AS (
-         | SELECT doc_id,
-         |  len(regexp_extract_all(text, '$email')) AS n_email,
-         |  len(regexp_extract_all(text, '$phone')) AS n_phone,
-         |  len(regexp_extract_all(text, '$ipv4')) AS n_ipv4,
-         |  md5(regexp_replace(regexp_replace(regexp_replace(text,
-         |    '$email', '[EMAIL]', 'g'),
-         |    '$phone', '[PHONE]', 'g'),
-         |    '$ipv4', '[IP]', 'g')) AS redacted_fp
-         | FROM planted)
-         |SELECT * FROM audited
-         |WHERE n_email + n_phone + n_ipv4 > 0 ORDER BY doc_id""".stripMargin
+        |FROM e JOIN u USING (split) ORDER BY split""".stripMargin),
+
+    // Boilerplate stripping — URL and markup removal, the standard web-
+    // corpus cleaning step (synthetic text has neither, so the first 20
+    // docs get both planted, like the PII audit). Pure codegen'd regexp
+    // map work, zero shuffles; patterns stay in the Java-regex ∩ RE2
+    // subset so the oracle replays them (DuckDB needs the 'g' flag —
+    // its regexp_replace is first-match by default, Spark's is global).
+    Q("q_boilerplate", { (s, d) =>
+      val planted = Tables.documents(s, d).select(col("doc_id"),
+        when(col("doc_id") < 20,
+          concat(lit("<div class=x> "), col("text"),
+            lit(" see https://example.com/a?b=1 and http://foo.bar/z </div>")))
+          .otherwise(col("text")).as("text"))
+      val url = "https?://[^ ]+"
+      val tag = "<[^>]*>"
+      val clean = trim(regexp_replace(regexp_replace(regexp_replace(
+        col("text"), url, " "), tag, " "), "[ \\t]+", " "))
+      planted.select(col("doc_id"),
+          size(regexp_extract_all(col("text"), lit(url), lit(0))).cast("long").as("n_urls"),
+          size(regexp_extract_all(col("text"), lit(tag), lit(0))).cast("long").as("n_tags"),
+          length(col("text")).cast("long").as("orig_chars"),
+          length(clean).cast("long").as("clean_chars"))
+        .filter(col("n_urls") + col("n_tags") > 0)
+        .orderBy("doc_id")
     },
-    "q_boilerplate" ->
       """WITH planted AS (
         | SELECT doc_id,
         |  CASE WHEN doc_id < 20 THEN '<div class=x> ' || text ||
@@ -1942,110 +2009,6 @@ object Curation {
         |    text, 'https?://[^ ]+', ' ', 'g'), '<[^>]*>', ' ', 'g'),
         |    '[ \t]+', ' ', 'g'))) AS BIGINT) AS clean_chars
         | FROM planted)
-        |SELECT * FROM r WHERE n_urls + n_tags > 0 ORDER BY doc_id""".stripMargin,
-    // same per-doc KN surprisal (shared CTEs), same integer tercile cuts
-    "q_ccnet_buckets" ->
-      ("WITH " + TextAnalysis.knCountCtesSql + ",\n" +
-        TextAnalysis.knTermsCteSql + ",\n" +
-        TextAnalysis.knDocCteSql + ",\n" +
-        """per AS (
-          | SELECT source,
-          |  CAST(round(kn_bits * 100, 0) AS BIGINT) AS cb2
-          | FROM docsur),
-          |spine AS (
-          | SELECT cb2, CAST(sum(count(*)) OVER (ORDER BY cb2
-          |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-          |  AS cum
-          | FROM per GROUP BY 1),
-          |tot AS (SELECT count(*) AS n FROM per),
-          |bk AS (
-          | SELECT source,
-          |  CASE WHEN cum * 3 <= n THEN 'head'
-          |       WHEN cum * 3 <= n * 2 THEN 'middle'
-          |       ELSE 'tail' END AS bucket
-          | FROM per JOIN spine USING (cb2) CROSS JOIN tot),
-          |bs AS (SELECT source, count(*) AS src_docs FROM bk GROUP BY 1)
-          |SELECT source, bucket, count(*) AS n_docs,
-          | CAST(count(*) * 1000000 // src_docs AS BIGINT) AS share_ppm
-          |FROM bk JOIN bs USING (source)
-          |GROUP BY source, bucket, src_docs
-          |ORDER BY source, bucket""".stripMargin),
-    // same KN surprisal frame (shared CTE strings), same 6dp/12dp folds
-    "q_domain_reweight" ->
-      ("WITH " + TextAnalysis.knCountCtesSql + ",\n" +
-        TextAnalysis.knTermsCteSql + ",\n" +
-        """sur AS (
-          | SELECT source, count(*) AS n_bigrams,
-          |  round(CAST(sum(t) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-          |   AS kn_bits
-          | FROM terms GROUP BY 1),
-          |tot AS (
-          | SELECT CAST(sum(n_bigrams) AS BIGINT) AS tb,
-          |  sum(CAST(round(kn_bits * CAST(n_bigrams AS DOUBLE), 6)
-          |    AS DECIMAL(28,6))) AS wb,
-          |  count(*) AS k
-          | FROM sur),
-          |rw AS (
-          | SELECT source, n_bigrams, kn_bits, k,
-          |  kn_bits - CAST(wb AS DOUBLE) / CAST(tb AS DOUBLE) AS excess,
-          |  CAST(round(exp(1.0 * (kn_bits
-          |    - CAST(wb AS DOUBLE) / CAST(tb AS DOUBLE))), 12)
-          |   AS DECIMAL(28,12)) AS term
-          | FROM sur CROSS JOIN tot),
-          |sw AS (SELECT sum(term) AS sumw FROM rw)
-          |SELECT source, n_bigrams, kn_bits,
-          | round(excess, 6) AS excess_bits,
-          | round(CAST(term AS DOUBLE) / CAST(sumw AS DOUBLE), 6) AS weight,
-          | round((1.0 - 0.2) * (CAST(term AS DOUBLE)
-          |   / CAST(sumw AS DOUBLE)) + 0.2 / CAST(k AS DOUBLE), 6) AS alpha
-          |FROM rw CROSS JOIN sw ORDER BY source""".stripMargin),
-    "q_mix_gof" ->
-      s"""WITH per AS (
-         | SELECT source, CAST(sum(len($toksSql)) AS BIGINT) AS nt
-         | FROM documents GROUP BY 1),
-         |tot AS (SELECT CAST(sum(nt) AS BIGINT) AS tt, count(*) AS k
-         |        FROM per),
-         |terms AS (
-         | SELECT k,
-         |  CAST(round((CAST(nt AS DOUBLE) - CAST(tt AS DOUBLE)
-         |      / CAST(k AS DOUBLE))
-         |    * (CAST(nt AS DOUBLE) - CAST(tt AS DOUBLE) / CAST(k AS DOUBLE))
-         |    / (CAST(tt AS DOUBLE) / CAST(k AS DOUBLE)), 6)
-         |   AS DECIMAL(28,6)) AS t,
-         |  abs(CAST(nt AS HUGEINT) * 1000000 // tt - 1000000 // k) AS dev
-         | FROM per CROSS JOIN tot)
-         |SELECT k AS n_sources, k - 1 AS dof,
-         | round(CAST(sum(t) AS DOUBLE), 6) AS chi2,
-         | CAST(max(dev) AS BIGINT) AS max_dev_ppm
-         |FROM terms GROUP BY k""".stripMargin,
-    "q_hhi_sources" ->
-      s"""WITH per AS (
-         | SELECT source, CAST(sum(len($toksSql)) AS BIGINT) AS nt
-         | FROM documents GROUP BY 1),
-         |tot AS (SELECT CAST(sum(nt) AS BIGINT) AS tt, count(*) AS k
-         |        FROM per),
-         |terms AS (
-         | SELECT k, CAST(round((CAST(nt AS DOUBLE) / CAST(tt AS DOUBLE))
-         |   * (CAST(nt AS DOUBLE) / CAST(tt AS DOUBLE)), 6)
-         |  AS DECIMAL(18,6)) AS t
-         | FROM per CROSS JOIN tot)
-         |SELECT k AS n_sources,
-         | round(CAST(sum(t) AS DOUBLE), 6) AS hhi,
-         | round(1.0 / CAST(sum(t) AS DOUBLE), 6) AS effective_sources
-         |FROM terms GROUP BY k""".stripMargin,
-    "q_source_mix" ->
-      s"""WITH per_source AS (
-         | SELECT source, count(*) AS n_docs,
-         |  CAST(sum(len($toksSql)) AS BIGINT) AS n_tokens
-         | FROM documents GROUP BY source),
-         |totals AS (
-         | SELECT CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-         |  count(*) AS n_sources FROM per_source)
-         |SELECT source, n_docs, n_tokens,
-         | round(CAST(n_tokens AS DOUBLE) / total_tokens, 6) AS token_share,
-         | round(least(1.0, (1.0 / n_sources) /
-         |   (CAST(n_tokens AS DOUBLE) / total_tokens)), 6) AS sample_rate
-         |FROM per_source CROSS JOIN totals ORDER BY source""".stripMargin
-    )
-  }
+        |SELECT * FROM r WHERE n_urls + n_tags > 0 ORDER BY doc_id""".stripMargin)
+  )
 }

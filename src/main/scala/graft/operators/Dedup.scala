@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Scratch
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.CacheScope.TrackedDataset
@@ -29,7 +29,7 @@ import graft.CacheScope.TrackedDataset
   * hash each shingle once to a long, then derive the k minhashes by
   * hashing the long (cheap) rather than re-hashing the string k times.
   */
-object Dedup {
+object Dedup extends QueryModule {
 
   /** A 64-bit hash family over one or more columns. */
   sealed trait HashFamily {
@@ -820,12 +820,6 @@ object Dedup {
       .select(col("id"), col("cluster_id"), col("name"), col("canonical_name"),
         (col("id") === col("cluster_id")).as("is_canonical"))
   }
-
-  /** Character n-grams (distinct) over a materialized normalized column. */
-  def charGrams(normed: Column, n: Int = 4): Column =
-    array_distinct(transform(
-      sequence(lit(1), greatest(length(normed) - (n - 1), lit(1))),
-      i => normed.substr(i, lit(n))))
 
   /** id + char-gram-hash array. XxHash routes through the native
     * single-pass expression; Md5Hash hashes the materialized gram strings
@@ -1751,355 +1745,6 @@ object Dedup {
         col("max_cross_jaccard"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Eval-contamination audit: near-dup pairs straddling the 1-in-5
-    // md5 held-out split, over the planted corpus.
-    "q_split_leakage" -> { (s, d) => splitLeakage(Tables.documents(s, d)) },
-    // Cross-source shingle containment matrix (ordered source pairs).
-    "q_source_overlap" -> { (s, d) => sourceOverlap(Tables.documents(s, d)) },
-    // Same matrix with corpus-universal boilerplate shingles pruned
-    // (doc-frequency stop set, excluded from numerator AND denominator).
-    "q_source_overlap_pruned" -> { (s, d) =>
-      sourceOverlapPruned(Tables.documents(s, d)) },
-    // Chapman capture-recapture: what share of the TRUE near-dup pair
-    // population does each detector catch?
-    "q_capture_recapture" -> { (s, d) =>
-      captureRecapture(plantedCorpus(Tables.documents(s, d)))
-    },
-    "q_fs_linkage" -> { (s, d) => fsLinkage(Tables.customer(s, d)) },
-    // LSH banding tuning table for the shipped (4 bands × 4 rows) tier.
-    "q_lsh_curve" -> { (s, _) => lshCurve(s) },
-
-    // Sorted-neighborhood blocking (w=8) scored with the same native
-    // Jaro–Winkler as q_jaro_match — the third blocking family's
-    // recall/candidate trade-off, directly comparable. Threshold 0.88:
-    // sort-adjacent names share prefixes JW already rewards, so the
-    // operating point sits below key-equality blocking's 0.93.
-    "q_sorted_blocking" -> { (s, d) =>
-      val names = Tables.part(s, d)
-        .select(lower(col("p_name")).as("name")).distinct()
-      sortedNeighborhoodPairs(names)
-        .withColumn("jw", round(graft.functions.NativeExpressions
-          .jaroWinkler(s, col("name_a"), col("name_b")), 6))
-        .filter(col("jw") >= 0.88)
-        .orderBy("name_a", "name_b")
-    },
-    "q_dedup_eval" -> { (s, d) => dedupEval(Tables.documents(s, d)) },
-    // Near-exact tier: variants of the first 20 docs are planted with
-    // case flips, injected punctuation and trailing junk — invisible to
-    // the raw exact fingerprint, collapsed by normalization.
-    "q_dedup_norm" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val variants = docs.filter(col("doc_id") < 20)
-        .select((col("doc_id") + 20000000L).as("doc_id"),
-          concat(upper(regexp_replace(col("text"), " ", ", ")), lit(" !!"))
-            .as("text"))
-      normalizedDedupPairs(
-        docs.select("doc_id", "text").unionByName(variants))
-    },
-    "q_dedup_prefix" -> { (s, d) =>
-      prefixJaccardNearDups(plantedCorpus(Tables.documents(s, d)),
-          "doc_id", "text", hasher = Md5Hash)
-        .orderBy("id_a", "id_b")
-    },
-    // Doc-in-doc tier: hosts are planted as doc_i ++ ' ' ++ doc_{i+20}
-    // (i < 10) — every quote's shingle set sits fully inside its host,
-    // containment = 1.0, while Jaccard stays far below any symmetric
-    // near-dup threshold (the class only this tier catches).
-    "q_dedup_containment" -> { (s, d) =>
-      val docs = Tables.documents(s, d).select("doc_id", "text")
-      val hosts = docs.as("a")
-        .filter(col("a.doc_id") < 10)
-        .join(docs.as("b"), col("b.doc_id") === col("a.doc_id") + 20)
-        .select((col("a.doc_id") + 30000000L).as("doc_id"),
-          concat(col("a.text"), lit(" "), col("b.text")).as("text"))
-      containmentNearDups(docs.unionByName(hosts), "doc_id", "text",
-          hasher = Md5Hash)
-        .orderBy("id_a", "id_b")
-    },
-    // Keep-best-within-time-bucket dedup: one event per (user, hour),
-    // highest value wins (event_id tie-break) — the "best observation per
-    // entity per window" collapse every feed-ingest pipeline runs.
-    // Composed on the native TopKPerKey exec at k=1: map-side partial
-    // heaps ship ONE row per (user, hour) per mapper through the shuffle,
-    // no window sort anywhere.
-    "q_window_dedup" -> { (s, d) =>
-      import org.apache.spark.sql.functions.{col, date_trunc}
-      graft.plans.TopKPerKey.topKPerKey(
-          graft.Tables.events(s, d)
-            .select(col("event_id"), col("user_id"),
-              date_trunc("hour", col("ts")).as("hour"), col("value")),
-          keys = Seq("user_id", "hour"),
-          order = Seq(("value", false), ("event_id", true)), k = 1)
-        .orderBy("user_id", "hour")
-    },
-    // Substring-level duplicated-span inventory on the planted corpus —
-    // the planted mutated copies share long verbatim runs with their
-    // originals, so their spans show up as duplicated.
-    "q_span_dedup" -> { (s, d) =>
-      spanInventory(plantedCorpus(Tables.documents(s, d)), "doc_id", "text",
-          w = 64, stride = 32)
-        .orderBy("doc_id")
-    },
-    // Exact dedup over a corpus with planted exact copies (documents ∪
-    // first-20 verbatim) — groups of 2 for planted ids, 1 otherwise.
-    "q_dedup_exact" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val copies = docs.filter(col("doc_id") < 20)
-        .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
-      val corpus = docs.select("doc_id", "text").unionByName(copies)
-      exactDedup(corpus).orderBy("keep_id")
-    },
-    // Leakage matrix on a corpus with the first 30 docs mirrored into a
-    // synthetic 'mirror' source — every source holding a doc_id<30 doc
-    // must show up as a (mirror, src) pair with its leaked-content count.
-    "q_cross_source_dup" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val mirror = docs.filter(col("doc_id") < 30)
-        .select(col("text"), lit("mirror").as("source"))
-      crossSourceLeakage(docs.select("text", "source").unionByName(mirror))
-    },
-    // Cross-load incremental dedup: load1 = doc_id % 3 ≠ 0 builds the
-    // persisted fingerprint store (REAL parquet roundtrip); load2 =
-    // doc_id % 3 = 0 plus planted cross-load exact copies (first 30 load1
-    // docs, ids +10^7) and near-dup mutations (load1 docs 30-59, ids
-    // +2·10^7, one token appended). The second load must drop exactly the
-    // planted overlaps and keep every base doc.
-    "q_dedup_incremental" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val spread = s.sparkContext.defaultParallelism
-      val l1 = docs.filter(col("doc_id") % 3 =!= 0).select("doc_id", "text")
-        .repartition(spread, col("doc_id"))
-      val exactCopies = docs
-        .filter(col("doc_id") % 3 =!= 0 && col("doc_id") < 30)
-        .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
-      val nearCopies = docs
-        .filter(col("doc_id") % 3 =!= 0 &&
-          col("doc_id") >= 30 && col("doc_id") < 60)
-        .select((col("doc_id") + 20000000L).as("doc_id"),
-          concat(col("text"), lit(" appended")).as("text"))
-      val l2 = docs.filter(col("doc_id") % 3 === 0).select("doc_id", "text")
-        .unionByName(exactCopies).unionByName(nearCopies)
-        .repartition(spread, col("doc_id"))
-      val storePath = Scratch.dir("dedup_fp_store")
-      buildFingerprintStore(l1, hasher = Md5Hash)
-        .write.mode("overwrite").parquet(storePath)
-      incrementalDedup(l2, s.read.parquet(storePath), hasher = Md5Hash)
-        .orderBy("doc_id")
-    },
-    // DEDUP-THRESHOLD SWEEP — the q_quality_sweep counterpart for the
-    // near-dup knob: verified pairs surviving each candidate Jaccard
-    // cut (0.5–0.9), from ONE detector run (the sweep explodes over the
-    // verified PAIR frame, which banding already bounded — never a
-    // re-run per threshold). Raising the cut trades recall for
-    // precision; this emits the whole curve so the banding config
-    // (S-curve steep point) can be chosen against it.
-    "q_dedup_sweep" -> { (s, d) =>
-      val thr = Seq(0.5, 0.6, 0.7, 0.8, 0.9)
-      val pairs = minhashNearDups(plantedCorpus(Tables.documents(s, d)),
-        "doc_id", "text", hasher = Md5Hash)
-      val sw = pairs
-        .select(explode(array(thr.map(lit): _*)).as("threshold"),
-          col("jaccard"))
-        .filter(col("jaccard") >= col("threshold"))
-        .groupBy("threshold").agg(count(lit(1)).as("n_pairs"))
-      pairs.agg(count(lit(1)).as("tot"))
-        .select(explode(array(thr.map(lit): _*)).as("threshold"))
-        .join(sw, Seq("threshold"), "left")
-        .na.fill(0L, Seq("n_pairs"))
-        .orderBy("threshold")
-    },
-
-    // The tier-stack deliverable on the NATURAL corpus (no planting):
-    // total + marginal pairs per tier, exact tiers counted not
-    // materialized.
-    "q_dedup_tiers" -> { (s, d) =>
-      dedupTierReport(Tables.documents(s, d))
-    },
-    // EXACT-SUBSTRING tier on a corpus with planted cross-doc quotes:
-    // every ≥50-token doc among doc_id < 40 is re-published verbatim
-    // inside a wrapper (3-token attribution prefix + 2-token suffix,
-    // id + 4·10^7). Each source/copy pair must merge to exactly ONE
-    // maximal span per side — tokens 1..n in the source, 4..n+3 in the
-    // copy, span_tokens = n on both — proving window→island extension,
-    // not just window matching.
-    "q_dedup_substr" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val quoted = docs
-        .filter(col("doc_id") < 40 &&
-          size(TextAnalysis.tokens(col("text"))) >= 50)
-        .select((col("doc_id") + 40000000L).as("doc_id"),
-          concat(lit("quoted from upstream: "), col("text"),
-            lit(" end quote")).as("text"))
-      val spread = s.sparkContext.defaultParallelism
-      val corpus = docs.select("doc_id", "text").unionByName(quoted)
-        .repartition(spread, col("doc_id"))
-      exactSubstrSpans(corpus, "doc_id", "text", w = 50)
-        .orderBy("doc_id", "start_tok")
-    },
-    // MinHash+LSH near-dups on the planted corpus: must recover all 20
-    // planted pairs (high-Jaccard mutations). The gated queries run the
-    // md5 hash family so DuckDB replicates shingle→minhash→band→Jaccard
-    // END-TO-END (full rows+schema+hash oracle); the xxhash64 fast path is
-    // covered by the bit-equality + recall ScalaTests.
-    "q_dedup_minhash" -> { (s, d) =>
-      minhashNearDups(plantedCorpus(Tables.documents(s, d)), "doc_id", "text",
-          hasher = Md5Hash)
-        .orderBy("id_a", "id_b")
-    },
-    // The df-pruned variant, with boilerplate PLANTED on every third doc
-    // (the synthetic corpus has no natural >20%-df shingles — measured
-    // max 1.5%): the footer's interior shingles hit ~33% doc frequency
-    // and land in the stop set, so the gate exercises the real prune
-    // path, including pairs where only ONE side carries the footer (the
-    // prune cleans their Jaccard instead of diluting it). The oracle
-    // replays the identical plant + prune.
-    "q_dedup_minhash_pruned" -> { (s, d) =>
-      val withFooter = plantedCorpus(Tables.documents(s, d))
-        .withColumn("text",
-          when(col("doc_id") % 3 === 0,
-            concat(col("text"),
-              lit(" subscribe to our newsletter terms privacy contact")))
-            .otherwise(col("text")))
-      minhashNearDupsPruned(withFooter, "doc_id", "text",
-          maxDfFrac = 0.2, hasher = Md5Hash)
-        .orderBy("id_a", "id_b")
-    },
-
-    // The OTHER boilerplate defense on the same storm fixture: no shingle
-    // pruning, but (band, key) buckets over 8 members drop before the
-    // candidate self-join — one hot bucket otherwise yields b² pairs.
-    // Planted-pair buckets have 2 members, so recall survives the cap.
-    "q_dedup_minhash_capped" -> { (s, d) =>
-      val withFooter = plantedCorpus(Tables.documents(s, d))
-        .withColumn("text",
-          when(col("doc_id") % 3 === 0,
-            concat(col("text"),
-              lit(" subscribe to our newsletter terms privacy contact")))
-            .otherwise(col("text")))
-      minhashNearDupsCapped(withFooter, "doc_id", "text",
-          maxBucket = 8, hasher = Md5Hash)
-        .orderBy("id_a", "id_b")
-    },
-
-    // 60-bit fingerprint: 32 bits saturate on a shared-vocabulary corpus
-    // (measured 13% of ALL sf0.1 pairs within d≤6 of 32 bits — not a
-    // near-dup criterion); d≤6 of 60 bits is discriminative, and 60 keeps
-    // every value non-negative so DuckDB's arithmetic >> matches the
-    // engine's logical shift.
-    "q_dedup_simhash" -> { (s, d) =>
-      simhashNearDups(plantedCorpus(Tables.documents(s, d)), "doc_id", "text",
-          maxHamming = 6, bits = 60, hasher = Md5Hash)
-        .orderBy("id_a", "id_b")
-    },
-    "q_dedup_ngram" -> { (s, d) =>
-      ngramJaccardNearDups(plantedCorpus(Tables.documents(s, d)), "doc_id", "text",
-          hasher = Md5Hash)
-        .orderBy("id_a", "id_b")
-    },
-    // tf-weighted Jaccard tier: the standard plant (near-identical
-    // " appended" pairs, wJ ≈ 1) plus a DOUBLED plant (text repeated
-    // twice, id+20M) whose every shingle mass doubles — set-Jaccard
-    // calls those pairs ~1.0, weighted-Jaccard exposes them at ≈ ½
-    // (min w / max 2w), which is exactly what the tier is for.
-    "q_dedup_wjaccard" -> { (s, d) =>
-      val base = Tables.documents(s, d)
-      val doubled = base.filter(col("doc_id") < 20)
-        .select((col("doc_id") + 20000000L).as("doc_id"),
-          concat(col("text"), lit(" "), col("text")).as("text"))
-      weightedJaccardNearDups(
-          plantedCorpus(base).unionByName(doubled), "doc_id", "text",
-          hasher = Md5Hash)
-        .orderBy("id_a", "id_b")
-    },
-    // Near-dup PAIRS → duplicate CLUSTERS (connected components, min-id
-    // canonical): the end-to-end dedup deliverable over the minhash
-    // pipeline's candidate graph.
-    "q_dedup_clusters" -> { (s, d) =>
-      dedupClusters(
-          minhashNearDups(plantedCorpus(Tables.documents(s, d)), "doc_id", "text",
-            hasher = Md5Hash))
-        .orderBy("cluster_id")
-    },
-    // Survivor selection: longest-text-wins (ties to lower id) per
-    // cluster — on the planted corpus the appended copies are longer, so
-    // the policy demonstrably picks a different survivor than min-id.
-    "q_dedup_survivors" -> { (s, d) =>
-      val corpus = plantedCorpus(Tables.documents(s, d))
-      dedupSurvivors(corpus, "doc_id", "text",
-          minhashNearDups(corpus, "doc_id", "text", hasher = Md5Hash))
-        .orderBy("cluster_id")
-    },
-
-    // Edit-distance fuzzy matching over the DISTINCT name vocabulary with
-    // two-key blocking (3-char prefix + 3-char suffix, union'd): pairs are
-    // generated only within blocks — two bounded equi-joins, never a
-    // cartesian — and the exact levenshtein verify runs on candidates
-    // only. Same candidate-generation posture as the minhash pipeline:
-    // at 100 TB the distinct-name table is vocabulary-sized (dedup first,
-    // then match), the block key is the shuffle key, and a hot prefix
-    // block is an AQE-splittable skew, not a plan change. The two-key
-    // union recovers pairs a single prefix block misses (edits in the
-    // first 3 chars); recall is a blocking contract, not exhaustive —
-    // documented, and mirrored exactly in the oracle.
-    // Entity resolution over a dirty registry: part names plus one planted
-    // typo variant per early part (5th char deleted, id + 10^7). Variants
-    // must land in their original's cluster with the original as
-    // canonical; untouched singletons stay their own canonical.
-    "q_er_resolve" -> { (s, d) =>
-      val base = Tables.part(s, d)
-        .select(col("p_partkey").as("id"), lower(col("p_name")).as("name"))
-      val dirty = base.unionByName(
-        base.filter(col("id") < 20)
-          .select((col("id") + 10000000L).as("id"),
-            concat(substring(col("name"), 1, 4),
-              expr("substring(name, 6)")).as("name")))
-      entityResolve(dirty).orderBy("id")
-    },
-    "q_fuzzy_match" -> { (s, d) =>
-      val names = Tables.part(s, d)
-        .select(lower(col("p_name")).as("name")).distinct()
-      def blocked(key: org.apache.spark.sql.Column) = {
-        val b = names.withColumn("blk", key)
-        b.select(col("blk"), col("name").as("name_a"))
-          .join(b.select(col("blk"), col("name").as("name_b")), Seq("blk"))
-          .filter(col("name_a") < col("name_b"))
-          .select("name_a", "name_b")
-      }
-      blocked(substring(col("name"), 1, 3))
-        .unionByName(blocked(substring(col("name"), -3, 3)))
-        .distinct()
-        .withColumn("dist", levenshtein(col("name_a"), col("name_b")).cast("long"))
-        .filter(col("dist") <= 2)
-        .orderBy("name_a", "name_b")
-    },
-    // The prefix-weighted twin of q_fuzzy_match: same blocked candidate
-    // generation, verified with the native codegen'd JARO-WINKLER
-    // expression (functions/NativeExpressions.JaroWinkler) instead of
-    // levenshtein — the metric that rewards shared prefixes, pinned
-    // byte-for-byte against DuckDB's jaro_winkler_similarity (same
-    // window, transposition, empty-input and >0.7-boost semantics;
-    // Round9Spec holds the probe values). Rounded to 6dp on both sides.
-    "q_jaro_match" -> { (s, d) =>
-      val names = Tables.part(s, d)
-        .select(lower(col("p_name")).as("name")).distinct()
-      def blocked(key: org.apache.spark.sql.Column) = {
-        val b = names.withColumn("blk", key)
-        b.select(col("blk"), col("name").as("name_a"))
-          .join(b.select(col("blk"), col("name").as("name_b")), Seq("blk"))
-          .filter(col("name_a") < col("name_b"))
-          .select("name_a", "name_b")
-      }
-      blocked(substring(col("name"), 1, 3))
-        .unionByName(blocked(substring(col("name"), -3, 3)))
-        .distinct()
-        .withColumn("jw", round(graft.functions.NativeExpressions
-          .jaroWinkler(s, col("name_a"), col("name_b")), 6))
-        .filter(col("jw") >= 0.93)
-        .orderBy("name_a", "name_b")
-    }
-  )
-
   // ===== DuckDB oracle SQL (generated — mirrors the md5 hash family) =====
 
   /** DuckDB rendering of [[Md5Hash]] over a single string expression. */
@@ -2225,77 +1870,12 @@ object Dedup {
        |labels AS (
        | SELECT id, least(id, min(r)) AS cluster_id FROM reach GROUP BY id)""".stripMargin
 
-  def oracles: Map[String, String] = Map(
-    // same 3-token shingles, same md5-60 hashes, same distinct
-    // (source, shingle) frame and integral ppm containment
-    "q_source_overlap" -> {
-      s"""WITH t AS (
-         | SELECT source,
-         |  list_filter(string_split_regex(text, '\\s+'), x -> x <> '')
-         |   AS toks
-         | FROM documents WHERE text IS NOT NULL AND source IS NOT NULL),
-         |shsets AS (
-         | SELECT source, list_distinct(
-         |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-         |       ELSE list_transform(range(1, len(toks) - 1),
-         |              i -> array_to_string(list_slice(toks, i, i + 2), ' ')) END) AS sarr
-         | FROM t),
-         |sh AS (
-         | SELECT DISTINCT source, ${h64("u.sh")} AS h
-         | FROM shsets, unnest(sarr) AS u(sh)),
-         |tot AS (SELECT source, CAST(count(*) AS BIGINT) AS nsh
-         |        FROM sh GROUP BY 1),
-         |pr AS (
-         | SELECT a.source AS src_a, b.source AS src_b,
-         |  CAST(count(*) AS BIGINT) AS n_shared
-         | FROM sh a JOIN sh b ON a.h = b.h AND a.source <> b.source
-         | GROUP BY 1, 2)
-         |SELECT src_a, src_b, nsh AS nsh_a, n_shared,
-         | CAST(CAST(n_shared AS HUGEINT) * 1000000 // nsh AS BIGINT)
-         |  AS containment_ppm
-         |FROM pr JOIN tot ON tot.source = pr.src_a
-         |ORDER BY src_a, src_b""".stripMargin
-    },
-    // the q_source_overlap chain with the doc-frequency stop-shingle
-    // prune applied before the distinct (source, h) frame — pruned
-    // shingles leave BOTH the numerator and the denominator
-    "q_source_overlap_pruned" -> {
-      s"""WITH t AS (
-         | SELECT doc_id, source,
-         |  list_filter(string_split_regex(text, '\\s+'), x -> x <> '')
-         |   AS toks
-         | FROM documents WHERE text IS NOT NULL AND source IS NOT NULL),
-         |shsets AS (
-         | SELECT doc_id, source, list_distinct(
-         |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-         |       ELSE list_transform(range(1, len(toks) - 1),
-         |              i -> array_to_string(list_slice(toks, i, i + 2), ' ')) END) AS sarr
-         | FROM t),
-         |dsh AS (
-         | SELECT doc_id, source, ${h64("u.sh")} AS h
-         | FROM shsets, unnest(sarr) AS u(sh)),
-         |nd AS (SELECT count(DISTINCT doc_id) AS n FROM dsh),
-         |df AS (SELECT h, count(*) AS df FROM dsh GROUP BY 1),
-         |stop AS (SELECT h FROM df, nd WHERE df > n * 0.2),
-         |sh AS (
-         | SELECT DISTINCT source, h FROM dsh
-         | WHERE h NOT IN (SELECT h FROM stop)),
-         |tot AS (SELECT source, CAST(count(*) AS BIGINT) AS nsh
-         |        FROM sh GROUP BY 1),
-         |pr AS (
-         | SELECT a.source AS src_a, b.source AS src_b,
-         |  CAST(count(*) AS BIGINT) AS n_shared
-         | FROM sh a JOIN sh b ON a.h = b.h AND a.source <> b.source
-         | GROUP BY 1, 2)
-         |SELECT src_a, src_b, nsh AS nsh_a, n_shared,
-         | CAST(CAST(n_shared AS HUGEINT) * 1000000 // nsh AS BIGINT)
-         |  AS containment_ppm
-         |FROM pr JOIN tot ON tot.source = pr.src_a
-         |ORDER BY src_a, src_b""".stripMargin
-    },
+  def entries: Seq[Q] = Seq(
+    // Eval-contamination audit: near-dup pairs straddling the 1-in-5
+    // md5 held-out split, over the planted corpus.
     // the q_dedup_minhash chain verbatim, then the md5 split flags and
     // one scalar summary (leak ppm via guarded integral division)
-    "q_split_leakage" -> {
+    Q("q_split_leakage", { (s, d) => splitLeakage(Tables.documents(s, d)) }, {
       s"""WITH $corpusToksSql,
          |shs AS (
          | SELECT id, list_distinct(
@@ -2329,10 +1909,85 @@ object Dedup {
          |  ELSE 0 END AS BIGINT) AS leak_ppm,
          | max(CASE WHEN xs THEN jaccard END) AS max_cross_jaccard
          |FROM f""".stripMargin
-    },
+    }),
+    // Cross-source shingle containment matrix (ordered source pairs).
+    // same 3-token shingles, same md5-60 hashes, same distinct
+    // (source, shingle) frame and integral ppm containment
+    Q("q_source_overlap", { (s, d) => sourceOverlap(Tables.documents(s, d)) }, {
+      s"""WITH t AS (
+         | SELECT source,
+         |  list_filter(string_split_regex(text, '\\s+'), x -> x <> '')
+         |   AS toks
+         | FROM documents WHERE text IS NOT NULL AND source IS NOT NULL),
+         |shsets AS (
+         | SELECT source, list_distinct(
+         |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
+         |       ELSE list_transform(range(1, len(toks) - 1),
+         |              i -> array_to_string(list_slice(toks, i, i + 2), ' ')) END) AS sarr
+         | FROM t),
+         |sh AS (
+         | SELECT DISTINCT source, ${h64("u.sh")} AS h
+         | FROM shsets, unnest(sarr) AS u(sh)),
+         |tot AS (SELECT source, CAST(count(*) AS BIGINT) AS nsh
+         |        FROM sh GROUP BY 1),
+         |pr AS (
+         | SELECT a.source AS src_a, b.source AS src_b,
+         |  CAST(count(*) AS BIGINT) AS n_shared
+         | FROM sh a JOIN sh b ON a.h = b.h AND a.source <> b.source
+         | GROUP BY 1, 2)
+         |SELECT src_a, src_b, nsh AS nsh_a, n_shared,
+         | CAST(CAST(n_shared AS HUGEINT) * 1000000 // nsh AS BIGINT)
+         |  AS containment_ppm
+         |FROM pr JOIN tot ON tot.source = pr.src_a
+         |ORDER BY src_a, src_b""".stripMargin
+    }),
+    // Same matrix with corpus-universal boilerplate shingles pruned
+    // (doc-frequency stop set, excluded from numerator AND denominator).
+    // the q_source_overlap chain with the doc-frequency stop-shingle
+    // prune applied before the distinct (source, h) frame — pruned
+    // shingles leave BOTH the numerator and the denominator
+    Q("q_source_overlap_pruned", { (s, d) =>
+      sourceOverlapPruned(Tables.documents(s, d)) }, {
+      s"""WITH t AS (
+         | SELECT doc_id, source,
+         |  list_filter(string_split_regex(text, '\\s+'), x -> x <> '')
+         |   AS toks
+         | FROM documents WHERE text IS NOT NULL AND source IS NOT NULL),
+         |shsets AS (
+         | SELECT doc_id, source, list_distinct(
+         |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
+         |       ELSE list_transform(range(1, len(toks) - 1),
+         |              i -> array_to_string(list_slice(toks, i, i + 2), ' ')) END) AS sarr
+         | FROM t),
+         |dsh AS (
+         | SELECT doc_id, source, ${h64("u.sh")} AS h
+         | FROM shsets, unnest(sarr) AS u(sh)),
+         |nd AS (SELECT count(DISTINCT doc_id) AS n FROM dsh),
+         |df AS (SELECT h, count(*) AS df FROM dsh GROUP BY 1),
+         |stop AS (SELECT h FROM df, nd WHERE df > n * 0.2),
+         |sh AS (
+         | SELECT DISTINCT source, h FROM dsh
+         | WHERE h NOT IN (SELECT h FROM stop)),
+         |tot AS (SELECT source, CAST(count(*) AS BIGINT) AS nsh
+         |        FROM sh GROUP BY 1),
+         |pr AS (
+         | SELECT a.source AS src_a, b.source AS src_b,
+         |  CAST(count(*) AS BIGINT) AS n_shared
+         | FROM sh a JOIN sh b ON a.h = b.h AND a.source <> b.source
+         | GROUP BY 1, 2)
+         |SELECT src_a, src_b, nsh AS nsh_a, n_shared,
+         | CAST(CAST(n_shared AS HUGEINT) * 1000000 // nsh AS BIGINT)
+         |  AS containment_ppm
+         |FROM pr JOIN tot ON tot.source = pr.src_a
+         |ORDER BY src_a, src_b""".stripMargin
+    }),
+    // Chapman capture-recapture: what share of the TRUE near-dup pair
+    // population does each detector catch?
     // both detector chains verbatim (minhash pred + simhash bands) on
     // the shared planted-corpus toks, then the Chapman estimator
-    "q_capture_recapture" -> {
+    Q("q_capture_recapture", { (s, d) =>
+      captureRecapture(plantedCorpus(Tables.documents(s, d)))
+    }, {
       val bits = 60
       val simExpr = (0 until bits).map { b =>
         s"CASE WHEN list_sum(list_transform(ths, h -> ((h >> $b) & 1) * 2 - 1)) > 0 THEN ${1L << b} ELSE 0 END"
@@ -2382,8 +2037,8 @@ object Dedup {
          | CASE WHEN est > 0
          |  THEN round(CAST(n_det2 AS DOUBLE) / est, 6) END AS coverage_det2
          |FROM e""".stripMargin
-    },
-    "q_fs_linkage" ->
+    }),
+    Q("q_fs_linkage", { (s, d) => fsLinkage(Tables.customer(s, d)) },
       """WITH c AS (
         | SELECT c_custkey AS k, c_nationkey AS nat, c_mktsegment AS seg,
         |  (CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
@@ -2416,8 +2071,9 @@ object Dedup {
         |SELECT seg_agree, hb_agree, n_pairs, round(wgt, 6) AS fs_weight,
         | CASE WHEN wgt >= 2 THEN 'match' WHEN wgt >= 0 THEN 'possible'
         |      ELSE 'nonmatch' END AS class
-        |FROM w ORDER BY 1, 2""".stripMargin,
-    "q_lsh_curve" -> {
+        |FROM w ORDER BY 1, 2""".stripMargin),
+    // LSH banding tuning table for the shipped (4 bands × 4 rows) tier.
+    Q("q_lsh_curve", { (s, _) => lshCurve(s) }, {
       val branches = Seq((16, 1), (8, 2), (4, 4), (2, 8), (1, 16))
         .map { case (b, r) =>
           val sv = "(CAST(s_x10 AS DOUBLE) / 10.0)"
@@ -2430,9 +2086,87 @@ object Dedup {
          | SELECT CAST(unnest(range(1, 10)) AS BIGINT) AS s_x10)
          |$branches
          |ORDER BY bands, s_x10""".stripMargin
+    }),
+
+    // Sorted-neighborhood blocking (w=8) scored with the same native
+    // Jaro–Winkler as q_jaro_match — the third blocking family's
+    // recall/candidate trade-off, directly comparable. Threshold 0.88:
+    // sort-adjacent names share prefixes JW already rewards, so the
+    // operating point sits below key-equality blocking's 0.93.
+    Q("q_sorted_blocking", { (s, d) =>
+      val names = Tables.part(s, d)
+        .select(lower(col("p_name")).as("name")).distinct()
+      sortedNeighborhoodPairs(names)
+        .withColumn("jw", round(graft.functions.NativeExpressions
+          .jaroWinkler(s, col("name_a"), col("name_b")), 6))
+        .filter(col("jw") >= 0.88)
+        .orderBy("name_a", "name_b")
     },
+      """WITH names AS (SELECT DISTINCT lower(p_name) AS name FROM part),
+        |rk AS (SELECT name, substr(name, 1, 1) AS blk,
+        |  row_number() OVER (PARTITION BY substr(name, 1, 1)
+        |   ORDER BY name) AS rk FROM names),
+        |sz AS (SELECT blk, max(rk) AS sz FROM rk GROUP BY 1),
+        |spine AS (SELECT blk, sz, lead(blk) OVER (ORDER BY blk) AS nblk
+        |          FROM sz),
+        |intra AS (
+        | SELECT a.name AS name_a, b.name AS name_b
+        | FROM rk a JOIN rk b
+        |  ON a.blk = b.blk AND b.rk > a.rk AND b.rk - a.rk < 8),
+        |crossb AS (
+        | SELECT a.name AS name_a, b.name AS name_b
+        | FROM rk a JOIN spine s ON a.blk = s.blk
+        |  JOIN rk b ON b.blk = s.nblk
+        | WHERE (s.sz - a.rk) + b.rk < 8),
+        |cand AS (SELECT * FROM intra UNION ALL SELECT * FROM crossb)
+        |SELECT name_a, name_b,
+        | round(jaro_winkler_similarity(name_a, name_b), 6) AS jw
+        |FROM cand
+        |WHERE round(jaro_winkler_similarity(name_a, name_b), 6) >= 0.88
+        |ORDER BY name_a, name_b""".stripMargin),
+    // same md5 chain as q_dedup_minhash, then set-compare the verified
+    // pairs against the planted truth (doc_id < 20 ↔ doc_id + 10^7)
+    Q("q_dedup_eval", { (s, d) => dedupEval(Tables.documents(s, d)) },
+      s"""WITH $corpusToksSql,
+         |shs AS (
+         | SELECT id, list_distinct(
+         |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
+         |       ELSE list_transform(range(1, len(toks) - 1),
+         |              i -> array_to_string(list_slice(toks, i, i + 2), ' ')) END) AS shs
+         | FROM toks),
+         |hs AS (SELECT id, list_transform(shs, sh -> ${h64("sh")}) AS hs FROM shs),
+         |${minhashSigSql(16)},
+         |${candidatesSql(16, 2)},
+         |pred AS (
+         | SELECT c.id_a, c.id_b FROM candidates c
+         | JOIN hs a ON c.id_a = a.id
+         | JOIN hs b ON c.id_b = b.id
+         | WHERE $jaccardSql >= 0.5),
+         |m AS (
+         | SELECT count(*) AS tp FROM pred
+         | JOIN (SELECT doc_id AS id_a, doc_id + 10000000 AS id_b
+         |       FROM documents WHERE doc_id < 20) t USING (id_a, id_b)),
+         |np AS (SELECT count(*) AS n_pred FROM pred),
+         |nt AS (SELECT count(*) AS n_truth FROM documents WHERE doc_id < 20)
+         |SELECT n_pred, n_truth, tp, n_pred - tp AS fp, n_truth - tp AS fn,
+         | CASE WHEN n_pred = 0 THEN 0.0
+         |      ELSE round(CAST(tp AS DOUBLE) / n_pred, 6) END AS prec,
+         | CASE WHEN n_truth = 0 THEN 0.0
+         |      ELSE round(CAST(tp AS DOUBLE) / n_truth, 6) END AS rec
+         |FROM m, np, nt""".stripMargin),
+    // Near-exact tier: variants of the first 20 docs are planted with
+    // case flips, injected punctuation and trailing junk — invisible to
+    // the raw exact fingerprint, collapsed by normalization.
     // same planted variants, same two fingerprints, same min-id survivor
-    "q_dedup_norm" ->
+    Q("q_dedup_norm", { (s, d) =>
+      val docs = Tables.documents(s, d)
+      val variants = docs.filter(col("doc_id") < 20)
+        .select((col("doc_id") + 20000000L).as("doc_id"),
+          concat(upper(regexp_replace(col("text"), " ", ", ")), lit(" !!"))
+            .as("text"))
+      normalizedDedupPairs(
+        docs.select("doc_id", "text").unionByName(variants))
+    },
       """WITH corpus AS (
         | SELECT doc_id, text FROM documents
         | UNION ALL
@@ -2452,15 +2186,133 @@ object Dedup {
         |SELECT f.id AS dup_id, g.keep_id,
         | e.efp_min_id < f.id AS caught_by_exact
         |FROM fps f JOIN grp g USING (nfp) JOIN emin e ON f.efp = e.efp
-        |WHERE f.id <> g.keep_id ORDER BY dup_id""".stripMargin,
-    "q_window_dedup" ->
+        |WHERE f.id <> g.keep_id ORDER BY dup_id""".stripMargin),
+    // exact replay of the prefix-filter pipeline over the SAME md5 hash
+    // chain as q_dedup_minhash: per-doc (df, hash)-ordered prefixes,
+    // size-compatibility, then the shared hash-array Jaccard verify
+    Q("q_dedup_prefix", { (s, d) =>
+      prefixJaccardNearDups(plantedCorpus(Tables.documents(s, d)),
+          "doc_id", "text", hasher = Md5Hash)
+        .orderBy("id_a", "id_b")
+    },
+      s"""WITH $corpusToksSql,
+        |shs AS (
+        | SELECT id, list_distinct(
+        |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
+        |       ELSE list_transform(range(1, len(toks) - 1),
+        |              i -> array_to_string(list_slice(toks, i, i + 2), ' ')) END) AS shs
+        | FROM toks),
+        |hs AS (SELECT id, list_transform(shs, sh -> ${h64("sh")}) AS hs FROM shs),
+        |ex AS (SELECT id, unnest(hs) AS h FROM hs),
+        |dfc AS (SELECT h, count(*) AS df FROM ex GROUP BY 1),
+        |ranked AS (
+        | SELECT id, h,
+        |  row_number() OVER (PARTITION BY id ORDER BY df, h) AS rn,
+        |  count(*) OVER (PARTITION BY id) AS sz
+        | FROM ex JOIN dfc USING (h)),
+        |pref AS (
+        | SELECT id, sz, h, rn FROM ranked
+        | WHERE rn <= sz - ceil(sz * 0.5) + 1),
+        |cand AS (
+        | SELECT DISTINCT p.id AS id_a, q.id AS id_b
+        | FROM pref p JOIN pref q ON p.h = q.h AND p.id < q.id
+        |  AND q.sz >= ceil(p.sz * 0.5) AND p.sz >= ceil(q.sz * 0.5)
+        |  AND least(p.sz - p.rn, q.sz - q.rn) + 1 >=
+        |   ceil((p.sz + q.sz) * ${0.5 / 1.5}))
+        |SELECT c.id_a, c.id_b, $jaccardSql AS jaccard
+        |FROM cand c
+        |JOIN hs a ON c.id_a = a.id
+        |JOIN hs b ON c.id_b = b.id
+        |WHERE $jaccardSql >= 0.5
+        |ORDER BY id_a, id_b""".stripMargin),
+    // Doc-in-doc tier: hosts are planted as doc_i ++ ' ' ++ doc_{i+20}
+    // (i < 10) — every quote's shingle set sits fully inside its host,
+    // containment = 1.0, while Jaccard stays far below any symmetric
+    // near-dup threshold (the class only this tier catches).
+    // asymmetric twin: A-prefix against FULL postings, exact containment
+    Q("q_dedup_containment", { (s, d) =>
+      val docs = Tables.documents(s, d).select("doc_id", "text")
+      val hosts = docs.as("a")
+        .filter(col("a.doc_id") < 10)
+        .join(docs.as("b"), col("b.doc_id") === col("a.doc_id") + 20)
+        .select((col("a.doc_id") + 30000000L).as("doc_id"),
+          concat(col("a.text"), lit(" "), col("b.text")).as("text"))
+      containmentNearDups(docs.unionByName(hosts), "doc_id", "text",
+          hasher = Md5Hash)
+        .orderBy("id_a", "id_b")
+    },
+      s"""WITH corpus AS (
+         | SELECT doc_id, text FROM documents
+         | UNION ALL
+         | SELECT a.doc_id + 30000000 AS doc_id,
+         |  a.text || ' ' || b.text AS text
+         | FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 20
+         | WHERE a.doc_id < 10),
+         |toks AS (
+         | SELECT doc_id AS id,
+         |  list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS toks
+         | FROM corpus),
+         |shs AS (
+         | SELECT id, list_distinct(
+         |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
+         |       ELSE list_transform(range(1, len(toks) - 1),
+         |              i -> array_to_string(list_slice(toks, i, i + 2), ' ')) END) AS shs
+         | FROM toks),
+         |hs AS (SELECT id, list_transform(shs, sh -> ${h64("sh")}) AS hs FROM shs),
+         |ex AS (SELECT id, unnest(hs) AS h FROM hs),
+         |dfc AS (SELECT h, count(*) AS df FROM ex GROUP BY 1),
+         |ranked AS (
+         | SELECT id, h,
+         |  row_number() OVER (PARTITION BY id ORDER BY df, h) AS rn,
+         |  count(*) OVER (PARTITION BY id) AS sz
+         | FROM ex JOIN dfc USING (h)),
+         |pref AS (
+         | SELECT id AS id_a, sz AS sz_a, h FROM ranked
+         | WHERE rn <= sz - ceil(sz * 0.9) + 1),
+         |cand AS (
+         | SELECT DISTINCT p.id_a, q.id AS id_b
+         | FROM pref p JOIN ranked q ON p.h = q.h AND p.id_a <> q.id
+         |  AND q.sz >= ceil(p.sz_a * 0.9))
+         |SELECT c.id_a, c.id_b,
+         | round(CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE)
+         |   / len(a.hs), 6) AS containment,
+         | $jaccardSql AS jaccard
+         |FROM cand c
+         |JOIN hs a ON c.id_a = a.id
+         |JOIN hs b ON c.id_b = b.id
+         |WHERE round(CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE)
+         |   / len(a.hs), 6) >= 0.9
+         |ORDER BY id_a, id_b""".stripMargin),
+    // Keep-best-within-time-bucket dedup: one event per (user, hour),
+    // highest value wins (event_id tie-break) — the "best observation per
+    // entity per window" collapse every feed-ingest pipeline runs.
+    // Composed on the native TopKPerKey exec at k=1: map-side partial
+    // heaps ship ONE row per (user, hour) per mapper through the shuffle,
+    // no window sort anywhere.
+    Q("q_window_dedup", { (s, d) =>
+      import org.apache.spark.sql.functions.{col, date_trunc}
+      graft.plans.TopKPerKey.topKPerKey(
+          graft.Tables.events(s, d)
+            .select(col("event_id"), col("user_id"),
+              date_trunc("hour", col("ts")).as("hour"), col("value")),
+          keys = Seq("user_id", "hour"),
+          order = Seq(("value", false), ("event_id", true)), k = 1)
+        .orderBy("user_id", "hour")
+    },
       """SELECT event_id, user_id, hour, value FROM (
         | SELECT event_id, user_id, date_trunc('hour', ts) AS hour, value,
         |  row_number() OVER (PARTITION BY user_id, date_trunc('hour', ts)
         |    ORDER BY value DESC, event_id) AS rn
         | FROM events)
-        |WHERE rn = 1 ORDER BY user_id, hour""".stripMargin,
-    "q_span_dedup" ->
+        |WHERE rn = 1 ORDER BY user_id, hour""".stripMargin),
+    // Substring-level duplicated-span inventory on the planted corpus —
+    // the planted mutated copies share long verbatim runs with their
+    // originals, so their spans show up as duplicated.
+    Q("q_span_dedup", { (s, d) =>
+      spanInventory(plantedCorpus(Tables.documents(s, d)), "doc_id", "text",
+          w = 64, stride = 32)
+        .orderBy("doc_id")
+    },
       """WITH corpus AS (
         | SELECT doc_id, text FROM documents
         | UNION ALL
@@ -2473,45 +2325,32 @@ object Dedup {
         |dup AS (SELECT fp FROM s GROUP BY fp HAVING count(DISTINCT doc_id) >= 2)
         |SELECT s.doc_id, count(*) AS n_spans, count(dup.fp) AS n_dup_spans
         |FROM s LEFT JOIN dup ON s.fp = dup.fp
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // ExactSubstr twin: stride-1 50-token rolling windows, md5 over the
-    // space-joined window, cross-doc dup fps, per-doc island merge
-    "q_dedup_substr" ->
-      """WITH corpus AS (
-        | SELECT doc_id, text FROM documents
-        | UNION ALL
-        | SELECT doc_id + 40000000 AS doc_id,
-        |  'quoted from upstream: ' || text || ' end quote' AS text
-        | FROM documents
-        | WHERE doc_id < 40 AND len(list_filter(
-        |   string_split_regex(text, '\s+'), t -> t <> '')) >= 50),
-        |toks AS (
-        | SELECT doc_id AS id,
-        |  list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS toks
-        | FROM corpus),
-        |wins AS (
-        | SELECT id, CAST(t.i AS INTEGER) AS pos,
-        |  md5(array_to_string(list_slice(toks, CAST(t.i AS INTEGER),
-        |    CAST(t.i + 49 AS INTEGER)), ' ')) AS fp
-        | FROM toks, unnest(range(1, len(toks) - 48)) AS t(i)
-        | WHERE len(toks) >= 50),
-        |dup AS (SELECT fp FROM wins GROUP BY fp HAVING count(DISTINCT id) >= 2),
-        |dw AS (SELECT w.id, w.pos FROM wins w JOIN dup USING (fp)),
-        |isl AS (SELECT id, pos,
-        |  pos - row_number() OVER (PARTITION BY id ORDER BY pos) AS grp
-        | FROM dw)
-        |SELECT id AS doc_id, min(pos) AS start_tok,
-        | max(pos) + 49 AS end_tok, max(pos) - min(pos) + 50 AS span_tokens
-        |FROM isl GROUP BY id, grp ORDER BY doc_id, start_tok""".stripMargin,
-    "q_dedup_exact" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    // Exact dedup over a corpus with planted exact copies (documents ∪
+    // first-20 verbatim) — groups of 2 for planted ids, 1 otherwise.
+    Q("q_dedup_exact", { (s, d) =>
+      val docs = Tables.documents(s, d)
+      val copies = docs.filter(col("doc_id") < 20)
+        .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
+      val corpus = docs.select("doc_id", "text").unionByName(copies)
+      exactDedup(corpus).orderBy("keep_id")
+    },
       """WITH corpus AS (
         | SELECT doc_id, text FROM documents
         | UNION ALL
         | SELECT doc_id + 10000000, text FROM documents WHERE doc_id < 20)
         |SELECT md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp,
         | min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM corpus GROUP BY 1 ORDER BY keep_id""".stripMargin,
-    "q_cross_source_dup" ->
+        |FROM corpus GROUP BY 1 ORDER BY keep_id""".stripMargin),
+    // Leakage matrix on a corpus with the first 30 docs mirrored into a
+    // synthetic 'mirror' source — every source holding a doc_id<30 doc
+    // must show up as a (mirror, src) pair with its leaked-content count.
+    Q("q_cross_source_dup", { (s, d) =>
+      val docs = Tables.documents(s, d)
+      val mirror = docs.filter(col("doc_id") < 30)
+        .select(col("text"), lit("mirror").as("source"))
+      crossSourceLeakage(docs.select("text", "source").unionByName(mirror))
+    },
       """WITH corpus AS (
         | SELECT text, source FROM documents
         | UNION ALL
@@ -2524,13 +2363,39 @@ object Dedup {
         |SELECT a.source AS source_a, b.source AS source_b,
         | count(*) AS n_shared
         |FROM s a JOIN s b ON a.fp = b.fp AND a.source < b.source
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    // Cross-load incremental dedup: load1 = doc_id % 3 ≠ 0 builds the
+    // persisted fingerprint store (REAL parquet roundtrip); load2 =
+    // doc_id % 3 = 0 plus planted cross-load exact copies (first 30 load1
+    // docs, ids +10^7) and near-dup mutations (load1 docs 30-59, ids
+    // +2·10^7, one token appended). The second load must drop exactly the
+    // planted overlaps and keep every base doc.
     // the incremental chain: exact store anti-join in plain SQL, then the
     // SAME md5 minhash/band chain as q_dedup_minhash run over the tagged
     // two-load corpus, candidates restricted to (exact-survivor, store)
     // pairs, verified at Jaccard ≥ 0.5
-    "q_dedup_incremental" -> {
+    Q("q_dedup_incremental", { (s, d) =>
+      val docs = Tables.documents(s, d)
+      val spread = s.sparkContext.defaultParallelism
+      val l1 = docs.filter(col("doc_id") % 3 =!= 0).select("doc_id", "text")
+        .repartition(spread, col("doc_id"))
+      val exactCopies = docs
+        .filter(col("doc_id") % 3 =!= 0 && col("doc_id") < 30)
+        .select((col("doc_id") + 10000000L).as("doc_id"), col("text"))
+      val nearCopies = docs
+        .filter(col("doc_id") % 3 =!= 0 &&
+          col("doc_id") >= 30 && col("doc_id") < 60)
+        .select((col("doc_id") + 20000000L).as("doc_id"),
+          concat(col("text"), lit(" appended")).as("text"))
+      val l2 = docs.filter(col("doc_id") % 3 === 0).select("doc_id", "text")
+        .unionByName(exactCopies).unionByName(nearCopies)
+        .repartition(spread, col("doc_id"))
+      val storePath = Scratch.dir("dedup_fp_store")
+      buildFingerprintStore(l1, hasher = Md5Hash)
+        .write.mode("overwrite").parquet(storePath)
+      incrementalDedup(l2, s.read.parquet(storePath), hasher = Md5Hash)
+        .orderBy("doc_id")
+    }, {
       s"""WITH base AS (
          | SELECT doc_id AS id, text,
          |  CASE WHEN doc_id % 3 = 0 THEN 2 ELSE 1 END AS ld
@@ -2583,68 +2448,61 @@ object Dedup {
          |SELECT e.id AS doc_id, e.fp
          |FROM ex e LEFT JOIN near n ON e.id = n.id
          |WHERE n.id IS NULL ORDER BY doc_id""".stripMargin
-    },
-
-    // tokens → 3-gram shingles → md5-hash64 → 16 minhash sigs → 8 bands of
-    // 2 → candidate pairs → exact Jaccard ≥ 0.5 over the hash sets.
-    // the minhash pair chain + recursive transitive closure: every node's
-    // cluster = min id it can reach (DuckDB WITH RECURSIVE replays the
-    // engine's min-label fixpoint exactly)
-    "q_dedup_clusters" ->
-      s"""$clusterLabelsCteSql
-         |SELECT cluster_id, count(*) AS size, max(id) AS max_id
-         |FROM labels GROUP BY cluster_id ORDER BY cluster_id""".stripMargin,
-
-    // survivor policy: longest text wins, ties to the lower id
-    "q_dedup_survivors" ->
-      s"""$clusterLabelsCteSql,
-         |quality AS (SELECT doc_id AS id, CAST(length(text) AS BIGINT) AS len FROM corpus),
-         |ranked AS (
-         | SELECT l.cluster_id, l.id, q.len,
-         |  row_number() OVER (PARTITION BY l.cluster_id ORDER BY q.len DESC, l.id) AS rn,
-         |  count(*) OVER (PARTITION BY l.cluster_id) AS sz
-         | FROM labels l JOIN quality q USING (id))
-         |SELECT cluster_id, id AS keep_id, sz - 1 AS n_dropped
-         |FROM ranked WHERE rn = 1 ORDER BY cluster_id""".stripMargin,
-
-    // exact replay of the prefix-filter pipeline over the SAME md5 hash
-    // chain as q_dedup_minhash: per-doc (df, hash)-ordered prefixes,
-    // size-compatibility, then the shared hash-array Jaccard verify
-    "q_dedup_prefix" ->
+    }),
+    // DEDUP-THRESHOLD SWEEP — the q_quality_sweep counterpart for the
+    // near-dup knob: verified pairs surviving each candidate Jaccard
+    // cut (0.5–0.9), from ONE detector run (the sweep explodes over the
+    // verified PAIR frame, which banding already bounded — never a
+    // re-run per threshold). Raising the cut trades recall for
+    // precision; this emits the whole curve so the banding config
+    // (S-curve steep point) can be chosen against it.
+    Q("q_dedup_sweep", { (s, d) =>
+      val thr = Seq(0.5, 0.6, 0.7, 0.8, 0.9)
+      val pairs = minhashNearDups(plantedCorpus(Tables.documents(s, d)),
+        "doc_id", "text", hasher = Md5Hash)
+      val sw = pairs
+        .select(explode(array(thr.map(lit): _*)).as("threshold"),
+          col("jaccard"))
+        .filter(col("jaccard") >= col("threshold"))
+        .groupBy("threshold").agg(count(lit(1)).as("n_pairs"))
+      pairs.agg(count(lit(1)).as("tot"))
+        .select(explode(array(thr.map(lit): _*)).as("threshold"))
+        .join(sw, Seq("threshold"), "left")
+        .na.fill(0L, Seq("n_pairs"))
+        .orderBy("threshold")
+    }, {
       s"""WITH $corpusToksSql,
-        |shs AS (
-        | SELECT id, list_distinct(
-        |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-        |       ELSE list_transform(range(1, len(toks) - 1),
-        |              i -> array_to_string(list_slice(toks, i, i + 2), ' ')) END) AS shs
-        | FROM toks),
-        |hs AS (SELECT id, list_transform(shs, sh -> ${h64("sh")}) AS hs FROM shs),
-        |ex AS (SELECT id, unnest(hs) AS h FROM hs),
-        |dfc AS (SELECT h, count(*) AS df FROM ex GROUP BY 1),
-        |ranked AS (
-        | SELECT id, h,
-        |  row_number() OVER (PARTITION BY id ORDER BY df, h) AS rn,
-        |  count(*) OVER (PARTITION BY id) AS sz
-        | FROM ex JOIN dfc USING (h)),
-        |pref AS (
-        | SELECT id, sz, h, rn FROM ranked
-        | WHERE rn <= sz - ceil(sz * 0.5) + 1),
-        |cand AS (
-        | SELECT DISTINCT p.id AS id_a, q.id AS id_b
-        | FROM pref p JOIN pref q ON p.h = q.h AND p.id < q.id
-        |  AND q.sz >= ceil(p.sz * 0.5) AND p.sz >= ceil(q.sz * 0.5)
-        |  AND least(p.sz - p.rn, q.sz - q.rn) + 1 >=
-        |   ceil((p.sz + q.sz) * ${0.5 / 1.5}))
-        |SELECT c.id_a, c.id_b, $jaccardSql AS jaccard
-        |FROM cand c
-        |JOIN hs a ON c.id_a = a.id
-        |JOIN hs b ON c.id_b = b.id
-        |WHERE $jaccardSql >= 0.5
-        |ORDER BY id_a, id_b""".stripMargin,
+         |shs AS (
+         | SELECT id, list_distinct(
+         |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
+         |       ELSE list_transform(range(1, len(toks) - 1),
+         |              i -> array_to_string(list_slice(toks, i, i + 2), ' ')) END) AS shs
+         | FROM toks),
+         |hs AS (SELECT id, list_transform(shs, sh -> ${h64("sh")}) AS hs FROM shs),
+         |${minhashSigSql(16)},
+         |${candidatesSql(16, 2)},
+         |p AS (
+         | SELECT $jaccardSql AS jaccard
+         | FROM candidates c
+         | JOIN hs a ON c.id_a = a.id
+         | JOIN hs b ON c.id_b = b.id
+         | WHERE $jaccardSql >= 0.5),
+         |s AS (SELECT unnest([0.5, 0.6, 0.7, 0.8, 0.9]) AS threshold)
+         |SELECT s.threshold,
+         | CAST(COALESCE(sum(CASE WHEN p.jaccard >= s.threshold
+         |   THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_pairs
+         |FROM s LEFT JOIN p ON true
+         |GROUP BY 1 ORDER BY threshold""".stripMargin
+    }),
 
+    // The tier-stack deliverable on the NATURAL corpus (no planting):
+    // total + marginal pairs per tier, exact tiers counted not
+    // materialized.
     // tier stack on plain documents: exact/normalized counted via
     // Σ C(n,2); minhash + containment pairs reuse the md5 chains
-    "q_dedup_tiers" ->
+    Q("q_dedup_tiers", { (s, d) =>
+      dedupTierReport(Tables.documents(s, d))
+    },
       s"""WITH toks AS (
          | SELECT doc_id AS id,
          |  list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS toks
@@ -2737,109 +2595,66 @@ object Dedup {
          |SELECT 4, 'containment', t, nw FROM cont_stats
          |UNION ALL
          |SELECT 5, 'exact_substring', t, nw FROM ss_stats
-         |ORDER BY tier_order""".stripMargin,
-
-    // asymmetric twin: A-prefix against FULL postings, exact containment
-    "q_dedup_containment" ->
-      s"""WITH corpus AS (
-         | SELECT doc_id, text FROM documents
-         | UNION ALL
-         | SELECT a.doc_id + 30000000 AS doc_id,
-         |  a.text || ' ' || b.text AS text
-         | FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 20
-         | WHERE a.doc_id < 10),
-         |toks AS (
-         | SELECT doc_id AS id,
-         |  list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS toks
-         | FROM corpus),
-         |shs AS (
-         | SELECT id, list_distinct(
-         |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-         |       ELSE list_transform(range(1, len(toks) - 1),
-         |              i -> array_to_string(list_slice(toks, i, i + 2), ' ')) END) AS shs
-         | FROM toks),
-         |hs AS (SELECT id, list_transform(shs, sh -> ${h64("sh")}) AS hs FROM shs),
-         |ex AS (SELECT id, unnest(hs) AS h FROM hs),
-         |dfc AS (SELECT h, count(*) AS df FROM ex GROUP BY 1),
-         |ranked AS (
-         | SELECT id, h,
-         |  row_number() OVER (PARTITION BY id ORDER BY df, h) AS rn,
-         |  count(*) OVER (PARTITION BY id) AS sz
-         | FROM ex JOIN dfc USING (h)),
-         |pref AS (
-         | SELECT id AS id_a, sz AS sz_a, h FROM ranked
-         | WHERE rn <= sz - ceil(sz * 0.9) + 1),
-         |cand AS (
-         | SELECT DISTINCT p.id_a, q.id AS id_b
-         | FROM pref p JOIN ranked q ON p.h = q.h AND p.id_a <> q.id
-         |  AND q.sz >= ceil(p.sz_a * 0.9))
-         |SELECT c.id_a, c.id_b,
-         | round(CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE)
-         |   / len(a.hs), 6) AS containment,
-         | $jaccardSql AS jaccard
-         |FROM cand c
-         |JOIN hs a ON c.id_a = a.id
-         |JOIN hs b ON c.id_b = b.id
-         |WHERE round(CAST(len(list_intersect(a.hs, b.hs)) AS DOUBLE)
-         |   / len(a.hs), 6) >= 0.9
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // same md5 chain as q_dedup_minhash, then set-compare the verified
-    // pairs against the planted truth (doc_id < 20 ↔ doc_id + 10^7)
-    "q_dedup_eval" ->
-      s"""WITH $corpusToksSql,
-         |shs AS (
-         | SELECT id, list_distinct(
-         |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-         |       ELSE list_transform(range(1, len(toks) - 1),
-         |              i -> array_to_string(list_slice(toks, i, i + 2), ' ')) END) AS shs
-         | FROM toks),
-         |hs AS (SELECT id, list_transform(shs, sh -> ${h64("sh")}) AS hs FROM shs),
-         |${minhashSigSql(16)},
-         |${candidatesSql(16, 2)},
-         |pred AS (
-         | SELECT c.id_a, c.id_b FROM candidates c
-         | JOIN hs a ON c.id_a = a.id
-         | JOIN hs b ON c.id_b = b.id
-         | WHERE $jaccardSql >= 0.5),
-         |m AS (
-         | SELECT count(*) AS tp FROM pred
-         | JOIN (SELECT doc_id AS id_a, doc_id + 10000000 AS id_b
-         |       FROM documents WHERE doc_id < 20) t USING (id_a, id_b)),
-         |np AS (SELECT count(*) AS n_pred FROM pred),
-         |nt AS (SELECT count(*) AS n_truth FROM documents WHERE doc_id < 20)
-         |SELECT n_pred, n_truth, tp, n_pred - tp AS fp, n_truth - tp AS fn,
-         | CASE WHEN n_pred = 0 THEN 0.0
-         |      ELSE round(CAST(tp AS DOUBLE) / n_pred, 6) END AS prec,
-         | CASE WHEN n_truth = 0 THEN 0.0
-         |      ELSE round(CAST(tp AS DOUBLE) / n_truth, 6) END AS rec
-         |FROM m, np, nt""".stripMargin,
-
-    "q_dedup_sweep" -> {
-      s"""WITH $corpusToksSql,
-         |shs AS (
-         | SELECT id, list_distinct(
-         |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-         |       ELSE list_transform(range(1, len(toks) - 1),
-         |              i -> array_to_string(list_slice(toks, i, i + 2), ' ')) END) AS shs
-         | FROM toks),
-         |hs AS (SELECT id, list_transform(shs, sh -> ${h64("sh")}) AS hs FROM shs),
-         |${minhashSigSql(16)},
-         |${candidatesSql(16, 2)},
-         |p AS (
-         | SELECT $jaccardSql AS jaccard
-         | FROM candidates c
-         | JOIN hs a ON c.id_a = a.id
-         | JOIN hs b ON c.id_b = b.id
-         | WHERE $jaccardSql >= 0.5),
-         |s AS (SELECT unnest([0.5, 0.6, 0.7, 0.8, 0.9]) AS threshold)
-         |SELECT s.threshold,
-         | CAST(COALESCE(sum(CASE WHEN p.jaccard >= s.threshold
-         |   THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_pairs
-         |FROM s LEFT JOIN p ON true
-         |GROUP BY 1 ORDER BY threshold""".stripMargin
+         |ORDER BY tier_order""".stripMargin),
+    // EXACT-SUBSTRING tier on a corpus with planted cross-doc quotes:
+    // every ≥50-token doc among doc_id < 40 is re-published verbatim
+    // inside a wrapper (3-token attribution prefix + 2-token suffix,
+    // id + 4·10^7). Each source/copy pair must merge to exactly ONE
+    // maximal span per side — tokens 1..n in the source, 4..n+3 in the
+    // copy, span_tokens = n on both — proving window→island extension,
+    // not just window matching.
+    // ExactSubstr twin: stride-1 50-token rolling windows, md5 over the
+    // space-joined window, cross-doc dup fps, per-doc island merge
+    Q("q_dedup_substr", { (s, d) =>
+      val docs = Tables.documents(s, d)
+      val quoted = docs
+        .filter(col("doc_id") < 40 &&
+          size(TextAnalysis.tokens(col("text"))) >= 50)
+        .select((col("doc_id") + 40000000L).as("doc_id"),
+          concat(lit("quoted from upstream: "), col("text"),
+            lit(" end quote")).as("text"))
+      val spread = s.sparkContext.defaultParallelism
+      val corpus = docs.select("doc_id", "text").unionByName(quoted)
+        .repartition(spread, col("doc_id"))
+      exactSubstrSpans(corpus, "doc_id", "text", w = 50)
+        .orderBy("doc_id", "start_tok")
     },
-    "q_dedup_minhash" -> {
+      """WITH corpus AS (
+        | SELECT doc_id, text FROM documents
+        | UNION ALL
+        | SELECT doc_id + 40000000 AS doc_id,
+        |  'quoted from upstream: ' || text || ' end quote' AS text
+        | FROM documents
+        | WHERE doc_id < 40 AND len(list_filter(
+        |   string_split_regex(text, '\s+'), t -> t <> '')) >= 50),
+        |toks AS (
+        | SELECT doc_id AS id,
+        |  list_filter(string_split_regex(text, '\s+'), t -> t <> '') AS toks
+        | FROM corpus),
+        |wins AS (
+        | SELECT id, CAST(t.i AS INTEGER) AS pos,
+        |  md5(array_to_string(list_slice(toks, CAST(t.i AS INTEGER),
+        |    CAST(t.i + 49 AS INTEGER)), ' ')) AS fp
+        | FROM toks, unnest(range(1, len(toks) - 48)) AS t(i)
+        | WHERE len(toks) >= 50),
+        |dup AS (SELECT fp FROM wins GROUP BY fp HAVING count(DISTINCT id) >= 2),
+        |dw AS (SELECT w.id, w.pos FROM wins w JOIN dup USING (fp)),
+        |isl AS (SELECT id, pos,
+        |  pos - row_number() OVER (PARTITION BY id ORDER BY pos) AS grp
+        | FROM dw)
+        |SELECT id AS doc_id, min(pos) AS start_tok,
+        | max(pos) + 49 AS end_tok, max(pos) - min(pos) + 50 AS span_tokens
+        |FROM isl GROUP BY id, grp ORDER BY doc_id, start_tok""".stripMargin),
+    // MinHash+LSH near-dups on the planted corpus: must recover all 20
+    // planted pairs (high-Jaccard mutations). The gated queries run the
+    // md5 hash family so DuckDB replicates shingle→minhash→band→Jaccard
+    // END-TO-END (full rows+schema+hash oracle); the xxhash64 fast path is
+    // covered by the bit-equality + recall ScalaTests.
+    Q("q_dedup_minhash", { (s, d) =>
+      minhashNearDups(plantedCorpus(Tables.documents(s, d)), "doc_id", "text",
+          hasher = Md5Hash)
+        .orderBy("id_a", "id_b")
+    }, {
       s"""WITH $corpusToksSql,
          |shs AS (
          | SELECT id, list_distinct(
@@ -2856,12 +2671,204 @@ object Dedup {
          |JOIN hs b ON c.id_b = b.id
          |WHERE $jaccardSql >= 0.5
          |ORDER BY id_a, id_b""".stripMargin
-    },
+    }),
+    // The df-pruned variant, with boilerplate PLANTED on every third doc
+    // (the synthetic corpus has no natural >20%-df shingles — measured
+    // max 1.5%): the footer's interior shingles hit ~33% doc frequency
+    // and land in the stop set, so the gate exercises the real prune
+    // path, including pairs where only ONE side carries the footer (the
+    // prune cleans their Jaccard instead of diluting it). The oracle
+    // replays the identical plant + prune.
+    Q("q_dedup_minhash_pruned", { (s, d) =>
+      val withFooter = plantedCorpus(Tables.documents(s, d))
+        .withColumn("text",
+          when(col("doc_id") % 3 === 0,
+            concat(col("text"),
+              lit(" subscribe to our newsletter terms privacy contact")))
+            .otherwise(col("text")))
+      minhashNearDupsPruned(withFooter, "doc_id", "text",
+          maxDfFrac = 0.2, hasher = Md5Hash)
+        .orderBy("id_a", "id_b")
+    }, {
+      s"""WITH corpus0 AS (
+         | SELECT doc_id, text FROM documents
+         | UNION ALL
+         | SELECT doc_id + 10000000 AS doc_id, text || ' appended' AS text
+         | FROM documents WHERE doc_id < 20),
+         |corpus AS (
+         | SELECT doc_id, CASE WHEN doc_id % 3 = 0
+         |  THEN text || ' subscribe to our newsletter terms privacy contact'
+         |  ELSE text END AS text
+         | FROM corpus0),
+         |toks AS (
+         | SELECT doc_id AS id,
+         |  list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS toks
+         | FROM corpus),
+         |shs AS (
+         | SELECT id, list_distinct(
+         |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
+         |       ELSE list_transform(range(1, len(toks) - 1),
+         |              i -> array_to_string(list_slice(toks, i, i + 2), ' ')) END) AS shs
+         | FROM toks),
+         |hs0 AS (SELECT id, list_transform(shs, sh -> ${h64("sh")}) AS hs FROM shs),
+         |ndocs AS (SELECT count(*) AS n FROM hs0),
+         |stopset AS (
+         | SELECT h FROM (SELECT id, unnest(hs) AS h FROM hs0)
+         | GROUP BY h HAVING count(*) > (SELECT n FROM ndocs) * 0.2),
+         |stoplist AS (SELECT coalesce(list(h), CAST([] AS BIGINT[])) AS sl FROM stopset),
+         |hs AS (
+         | SELECT id, hs FROM (
+         |  SELECT id, list_filter(hs, x -> NOT list_contains(sl, x)) AS hs
+         |  FROM hs0 CROSS JOIN stoplist)
+         | WHERE len(hs) > 0),
+         |${minhashSigSql(16)},
+         |${candidatesSql(16, 2)}
+         |SELECT c.id_a, c.id_b, $jaccardSql AS jaccard
+         |FROM candidates c
+         |JOIN hs a ON c.id_a = a.id
+         |JOIN hs b ON c.id_b = b.id
+         |WHERE $jaccardSql >= 0.5
+         |ORDER BY id_a, id_b""".stripMargin
+    }),
 
+    // The OTHER boilerplate defense on the same storm fixture: no shingle
+    // pruning, but (band, key) buckets over 8 members drop before the
+    // candidate self-join — one hot bucket otherwise yields b² pairs.
+    // Planted-pair buckets have 2 members, so recall survives the cap.
+    Q("q_dedup_minhash_capped", { (s, d) =>
+      val withFooter = plantedCorpus(Tables.documents(s, d))
+        .withColumn("text",
+          when(col("doc_id") % 3 === 0,
+            concat(col("text"),
+              lit(" subscribe to our newsletter terms privacy contact")))
+            .otherwise(col("text")))
+      minhashNearDupsCapped(withFooter, "doc_id", "text",
+          maxBucket = 8, hasher = Md5Hash)
+        .orderBy("id_a", "id_b")
+    }, {
+      s"""WITH corpus0 AS (
+         | SELECT doc_id, text FROM documents
+         | UNION ALL
+         | SELECT doc_id + 10000000 AS doc_id, text || ' appended' AS text
+         | FROM documents WHERE doc_id < 20),
+         |corpus AS (
+         | SELECT doc_id, CASE WHEN doc_id % 3 = 0
+         |  THEN text || ' subscribe to our newsletter terms privacy contact'
+         |  ELSE text END AS text
+         | FROM corpus0),
+         |toks AS (
+         | SELECT doc_id AS id,
+         |  list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS toks
+         | FROM corpus),
+         |shs AS (
+         | SELECT id, list_distinct(
+         |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
+         |       ELSE list_transform(range(1, len(toks) - 1),
+         |              i -> array_to_string(list_slice(toks, i, i + 2), ' ')) END) AS shs
+         | FROM toks),
+         |hs AS (SELECT id, list_transform(shs, sh -> ${h64("sh")}) AS hs FROM shs),
+         |${minhashSigSql(16)},
+         |${candidatesCappedSql(16, 2, 8)}
+         |SELECT c.id_a, c.id_b, $jaccardSql AS jaccard
+         |FROM candidates c
+         |JOIN hs a ON c.id_a = a.id
+         |JOIN hs b ON c.id_b = b.id
+         |WHERE $jaccardSql >= 0.5
+         |ORDER BY id_a, id_b""".stripMargin
+    }),
+
+    // 60-bit fingerprint: 32 bits saturate on a shared-vocabulary corpus
+    // (measured 13% of ALL sf0.1 pairs within d≤6 of 32 bits — not a
+    // near-dup criterion); d≤6 of 60 bits is discriminative, and 60 keeps
+    // every value non-negative so DuckDB's arithmetic >> matches the
+    // engine's logical shift.
+    // tokens → md5-hash64 per token (multiplicity kept) → 60-bit majority
+    // vote → 7 pigeonhole chunks → candidates → Hamming ≤ 6.
+    Q("q_dedup_simhash", { (s, d) =>
+      simhashNearDups(plantedCorpus(Tables.documents(s, d)), "doc_id", "text",
+          maxHamming = 6, bits = 60, hasher = Md5Hash)
+        .orderBy("id_a", "id_b")
+    }, {
+      val bits = 60
+      val simExpr = (0 until bits).map { b =>
+        s"CASE WHEN list_sum(list_transform(ths, h -> ((h >> $b) & 1) * 2 - 1)) > 0 THEN ${1L << b} ELSE 0 END"
+      }.mkString("(", "\n  + ", ")")
+      val bandSelects = simhashChunkLayout(bits, 6).zipWithIndex.map {
+        case ((off, sz), i) =>
+          s"SELECT id, sim, $i AS band, (sim >> $off) & ${(1L << sz) - 1} AS key FROM sh"
+      }.mkString("\n UNION ALL\n ")
+      s"""WITH $corpusToksSql,
+         |ths AS (SELECT id, list_transform(toks, t -> ${h64("t")}) AS ths FROM toks),
+         |sh AS (SELECT id, CAST($simExpr AS BIGINT) AS sim FROM ths),
+         |banded AS (
+         | $bandSelects),
+         |pairs AS (
+         | SELECT DISTINCT a.id AS id_a, b.id AS id_b,
+         |  CAST(bit_count(xor(a.sim, b.sim)) AS INTEGER) AS hamming
+         | FROM banded a JOIN banded b USING (band, key)
+         | WHERE a.id < b.id)
+         |SELECT id_a, id_b, hamming FROM pairs
+         |WHERE hamming <= 6 ORDER BY id_a, id_b""".stripMargin
+    }),
+    // normalize → distinct char 4-grams → md5-hash64 → 16 minhash sigs →
+    // 4 bands of 4 → candidates → sig-agreement prefilter (≥ 8/16) →
+    // exact Jaccard ≥ 0.7 over the gram sets.
+    Q("q_dedup_ngram", { (s, d) =>
+      ngramJaccardNearDups(plantedCorpus(Tables.documents(s, d)), "doc_id", "text",
+          hasher = Md5Hash)
+        .orderBy("id_a", "id_b")
+    }, {
+      val numHashes = 16
+      val minAgree = math.ceil(numHashes * (0.7 - 0.2)).toInt
+      val agreeSql = (0 until numHashes)
+        .map(i => s"CASE WHEN sa.mh_$i = sb.mh_$i THEN 1 ELSE 0 END")
+        .mkString("(", " + ", ")")
+      s"""WITH corpus AS (
+         | SELECT doc_id, text FROM documents
+         | UNION ALL
+         | SELECT doc_id + 10000000 AS doc_id, text || ' appended' AS text
+         | FROM documents WHERE doc_id < 20),
+         |normed AS (
+         | SELECT doc_id AS id, lower(regexp_replace(text, '\\s+', ' ', 'g')) AS norm
+         | FROM corpus),
+         |gs AS (
+         | SELECT id, list_distinct(list_transform(
+         |  range(1, greatest(length(norm) - 3, 1) + 1),
+         |  i -> substr(norm, CAST(i AS INTEGER), 4))) AS gs
+         | FROM normed),
+         |hs AS (SELECT id, list_transform(gs, g -> ${h64("g")}) AS hs FROM gs),
+         |${minhashSigSql(numHashes)},
+         |${candidatesSql(numHashes, 4)},
+         |surviving AS (
+         | SELECT c.id_a, c.id_b FROM candidates c
+         | JOIN sig sa ON c.id_a = sa.id
+         | JOIN sig sb ON c.id_b = sb.id
+         | WHERE $agreeSql >= $minAgree)
+         |SELECT c.id_a, c.id_b, $jaccardSql AS jaccard
+         |FROM surviving c
+         |JOIN hs a ON c.id_a = a.id
+         |JOIN hs b ON c.id_b = b.id
+         |WHERE $jaccardSql >= 0.7
+         |ORDER BY id_a, id_b""".stripMargin
+    }),
+    // tf-weighted Jaccard tier: the standard plant (near-identical
+    // " appended" pairs, wJ ≈ 1) plus a DOUBLED plant (text repeated
+    // twice, id+20M) whose every shingle mass doubles — set-Jaccard
+    // calls those pairs ~1.0, weighted-Jaccard exposes them at ≈ ½
+    // (min w / max 2w), which is exactly what the tier is for.
     // shingles WITH multiplicity → (id, md5-60 h, tf capped 4) → replica
     // expansion mix(h, 1000+r) for r < w → 16 minhash sigs → 8 bands of
     // 2 → candidates → exact Σmin/Σmax weighted Jaccard in integer ppm.
-    "q_dedup_wjaccard" -> {
+    Q("q_dedup_wjaccard", { (s, d) =>
+      val base = Tables.documents(s, d)
+      val doubled = base.filter(col("doc_id") < 20)
+        .select((col("doc_id") + 20000000L).as("doc_id"),
+          concat(col("text"), lit(" "), col("text")).as("text"))
+      weightedJaccardNearDups(
+          plantedCorpus(base).unionByName(doubled), "doc_id", "text",
+          hasher = Md5Hash)
+        .orderBy("id_a", "id_b")
+    }, {
       val reps = (0 until 4).map(r =>
         s"SELECT id, ${mixScalarSql("h", 1000 + r)} AS eh FROM tf WHERE w > $r")
         .mkString("\n UNION ALL\n ")
@@ -2912,145 +2919,69 @@ object Dedup {
          |SELECT id_a, id_b, smin, wjaccard_ppm FROM scored
          |WHERE wjaccard_ppm >= 400000
          |ORDER BY id_a, id_b""".stripMargin
+    }),
+    // Near-dup PAIRS → duplicate CLUSTERS (connected components, min-id
+    // canonical): the end-to-end dedup deliverable over the minhash
+    // pipeline's candidate graph.
+    // tokens → 3-gram shingles → md5-hash64 → 16 minhash sigs → 8 bands of
+    // 2 → candidate pairs → exact Jaccard ≥ 0.5 over the hash sets.
+    // the minhash pair chain + recursive transitive closure: every node's
+    // cluster = min id it can reach (DuckDB WITH RECURSIVE replays the
+    // engine's min-label fixpoint exactly)
+    Q("q_dedup_clusters", { (s, d) =>
+      dedupClusters(
+          minhashNearDups(plantedCorpus(Tables.documents(s, d)), "doc_id", "text",
+            hasher = Md5Hash))
+        .orderBy("cluster_id")
     },
+      s"""$clusterLabelsCteSql
+         |SELECT cluster_id, count(*) AS size, max(id) AS max_id
+         |FROM labels GROUP BY cluster_id ORDER BY cluster_id""".stripMargin),
+    // Survivor selection: longest-text-wins (ties to lower id) per
+    // cluster — on the planted corpus the appended copies are longer, so
+    // the policy demonstrably picks a different survivor than min-id.
+    // survivor policy: longest text wins, ties to the lower id
+    Q("q_dedup_survivors", { (s, d) =>
+      val corpus = plantedCorpus(Tables.documents(s, d))
+      dedupSurvivors(corpus, "doc_id", "text",
+          minhashNearDups(corpus, "doc_id", "text", hasher = Md5Hash))
+        .orderBy("cluster_id")
+    },
+      s"""$clusterLabelsCteSql,
+         |quality AS (SELECT doc_id AS id, CAST(length(text) AS BIGINT) AS len FROM corpus),
+         |ranked AS (
+         | SELECT l.cluster_id, l.id, q.len,
+         |  row_number() OVER (PARTITION BY l.cluster_id ORDER BY q.len DESC, l.id) AS rn,
+         |  count(*) OVER (PARTITION BY l.cluster_id) AS sz
+         | FROM labels l JOIN quality q USING (id))
+         |SELECT cluster_id, id AS keep_id, sz - 1 AS n_dropped
+         |FROM ranked WHERE rn = 1 ORDER BY cluster_id""".stripMargin),
 
-    "q_dedup_minhash_capped" -> {
-      s"""WITH corpus0 AS (
-         | SELECT doc_id, text FROM documents
-         | UNION ALL
-         | SELECT doc_id + 10000000 AS doc_id, text || ' appended' AS text
-         | FROM documents WHERE doc_id < 20),
-         |corpus AS (
-         | SELECT doc_id, CASE WHEN doc_id % 3 = 0
-         |  THEN text || ' subscribe to our newsletter terms privacy contact'
-         |  ELSE text END AS text
-         | FROM corpus0),
-         |toks AS (
-         | SELECT doc_id AS id,
-         |  list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS toks
-         | FROM corpus),
-         |shs AS (
-         | SELECT id, list_distinct(
-         |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-         |       ELSE list_transform(range(1, len(toks) - 1),
-         |              i -> array_to_string(list_slice(toks, i, i + 2), ' ')) END) AS shs
-         | FROM toks),
-         |hs AS (SELECT id, list_transform(shs, sh -> ${h64("sh")}) AS hs FROM shs),
-         |${minhashSigSql(16)},
-         |${candidatesCappedSql(16, 2, 8)}
-         |SELECT c.id_a, c.id_b, $jaccardSql AS jaccard
-         |FROM candidates c
-         |JOIN hs a ON c.id_a = a.id
-         |JOIN hs b ON c.id_b = b.id
-         |WHERE $jaccardSql >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin
+    // Edit-distance fuzzy matching over the DISTINCT name vocabulary with
+    // two-key blocking (3-char prefix + 3-char suffix, union'd): pairs are
+    // generated only within blocks — two bounded equi-joins, never a
+    // cartesian — and the exact levenshtein verify runs on candidates
+    // only. Same candidate-generation posture as the minhash pipeline:
+    // at 100 TB the distinct-name table is vocabulary-sized (dedup first,
+    // then match), the block key is the shuffle key, and a hot prefix
+    // block is an AQE-splittable skew, not a plan change. The two-key
+    // union recovers pairs a single prefix block misses (edits in the
+    // first 3 chars); recall is a blocking contract, not exhaustive —
+    // documented, and mirrored exactly in the oracle.
+    // Entity resolution over a dirty registry: part names plus one planted
+    // typo variant per early part (5th char deleted, id + 10^7). Variants
+    // must land in their original's cluster with the original as
+    // canonical; untouched singletons stay their own canonical.
+    Q("q_er_resolve", { (s, d) =>
+      val base = Tables.part(s, d)
+        .select(col("p_partkey").as("id"), lower(col("p_name")).as("name"))
+      val dirty = base.unionByName(
+        base.filter(col("id") < 20)
+          .select((col("id") + 10000000L).as("id"),
+            concat(substring(col("name"), 1, 4),
+              expr("substring(name, 6)")).as("name")))
+      entityResolve(dirty).orderBy("id")
     },
-
-    "q_dedup_minhash_pruned" -> {
-      s"""WITH corpus0 AS (
-         | SELECT doc_id, text FROM documents
-         | UNION ALL
-         | SELECT doc_id + 10000000 AS doc_id, text || ' appended' AS text
-         | FROM documents WHERE doc_id < 20),
-         |corpus AS (
-         | SELECT doc_id, CASE WHEN doc_id % 3 = 0
-         |  THEN text || ' subscribe to our newsletter terms privacy contact'
-         |  ELSE text END AS text
-         | FROM corpus0),
-         |toks AS (
-         | SELECT doc_id AS id,
-         |  list_filter(string_split_regex(text, '\\s+'), t -> t <> '') AS toks
-         | FROM corpus),
-         |shs AS (
-         | SELECT id, list_distinct(
-         |  CASE WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-         |       ELSE list_transform(range(1, len(toks) - 1),
-         |              i -> array_to_string(list_slice(toks, i, i + 2), ' ')) END) AS shs
-         | FROM toks),
-         |hs0 AS (SELECT id, list_transform(shs, sh -> ${h64("sh")}) AS hs FROM shs),
-         |ndocs AS (SELECT count(*) AS n FROM hs0),
-         |stopset AS (
-         | SELECT h FROM (SELECT id, unnest(hs) AS h FROM hs0)
-         | GROUP BY h HAVING count(*) > (SELECT n FROM ndocs) * 0.2),
-         |stoplist AS (SELECT coalesce(list(h), CAST([] AS BIGINT[])) AS sl FROM stopset),
-         |hs AS (
-         | SELECT id, hs FROM (
-         |  SELECT id, list_filter(hs, x -> NOT list_contains(sl, x)) AS hs
-         |  FROM hs0 CROSS JOIN stoplist)
-         | WHERE len(hs) > 0),
-         |${minhashSigSql(16)},
-         |${candidatesSql(16, 2)}
-         |SELECT c.id_a, c.id_b, $jaccardSql AS jaccard
-         |FROM candidates c
-         |JOIN hs a ON c.id_a = a.id
-         |JOIN hs b ON c.id_b = b.id
-         |WHERE $jaccardSql >= 0.5
-         |ORDER BY id_a, id_b""".stripMargin
-    },
-
-    // tokens → md5-hash64 per token (multiplicity kept) → 60-bit majority
-    // vote → 7 pigeonhole chunks → candidates → Hamming ≤ 6.
-    "q_dedup_simhash" -> {
-      val bits = 60
-      val simExpr = (0 until bits).map { b =>
-        s"CASE WHEN list_sum(list_transform(ths, h -> ((h >> $b) & 1) * 2 - 1)) > 0 THEN ${1L << b} ELSE 0 END"
-      }.mkString("(", "\n  + ", ")")
-      val bandSelects = simhashChunkLayout(bits, 6).zipWithIndex.map {
-        case ((off, sz), i) =>
-          s"SELECT id, sim, $i AS band, (sim >> $off) & ${(1L << sz) - 1} AS key FROM sh"
-      }.mkString("\n UNION ALL\n ")
-      s"""WITH $corpusToksSql,
-         |ths AS (SELECT id, list_transform(toks, t -> ${h64("t")}) AS ths FROM toks),
-         |sh AS (SELECT id, CAST($simExpr AS BIGINT) AS sim FROM ths),
-         |banded AS (
-         | $bandSelects),
-         |pairs AS (
-         | SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-         |  CAST(bit_count(xor(a.sim, b.sim)) AS INTEGER) AS hamming
-         | FROM banded a JOIN banded b USING (band, key)
-         | WHERE a.id < b.id)
-         |SELECT id_a, id_b, hamming FROM pairs
-         |WHERE hamming <= 6 ORDER BY id_a, id_b""".stripMargin
-    },
-
-    // normalize → distinct char 4-grams → md5-hash64 → 16 minhash sigs →
-    // 4 bands of 4 → candidates → sig-agreement prefilter (≥ 8/16) →
-    // exact Jaccard ≥ 0.7 over the gram sets.
-    "q_dedup_ngram" -> {
-      val numHashes = 16
-      val minAgree = math.ceil(numHashes * (0.7 - 0.2)).toInt
-      val agreeSql = (0 until numHashes)
-        .map(i => s"CASE WHEN sa.mh_$i = sb.mh_$i THEN 1 ELSE 0 END")
-        .mkString("(", " + ", ")")
-      s"""WITH corpus AS (
-         | SELECT doc_id, text FROM documents
-         | UNION ALL
-         | SELECT doc_id + 10000000 AS doc_id, text || ' appended' AS text
-         | FROM documents WHERE doc_id < 20),
-         |normed AS (
-         | SELECT doc_id AS id, lower(regexp_replace(text, '\\s+', ' ', 'g')) AS norm
-         | FROM corpus),
-         |gs AS (
-         | SELECT id, list_distinct(list_transform(
-         |  range(1, greatest(length(norm) - 3, 1) + 1),
-         |  i -> substr(norm, CAST(i AS INTEGER), 4))) AS gs
-         | FROM normed),
-         |hs AS (SELECT id, list_transform(gs, g -> ${h64("g")}) AS hs FROM gs),
-         |${minhashSigSql(numHashes)},
-         |${candidatesSql(numHashes, 4)},
-         |surviving AS (
-         | SELECT c.id_a, c.id_b FROM candidates c
-         | JOIN sig sa ON c.id_a = sa.id
-         | JOIN sig sb ON c.id_b = sb.id
-         | WHERE $agreeSql >= $minAgree)
-         |SELECT c.id_a, c.id_b, $jaccardSql AS jaccard
-         |FROM surviving c
-         |JOIN hs a ON c.id_a = a.id
-         |JOIN hs b ON c.id_b = b.id
-         |WHERE $jaccardSql >= 0.7
-         |ORDER BY id_a, id_b""".stripMargin
-    },
-    "q_er_resolve" ->
       """WITH RECURSIVE ents AS (
         | SELECT p_partkey AS id, lower(p_name) AS name FROM part
         | UNION ALL
@@ -3084,31 +3015,64 @@ object Dedup {
         | (e.id = rl.cluster_id) AS is_canonical
         |FROM ents e JOIN replab rl USING (name)
         | JOIN reps cr ON rl.cluster_id = cr.rep_id
-        |ORDER BY e.id""".stripMargin,
-    "q_sorted_blocking" ->
+        |ORDER BY e.id""".stripMargin),
+    Q("q_fuzzy_match", { (s, d) =>
+      val names = Tables.part(s, d)
+        .select(lower(col("p_name")).as("name")).distinct()
+      def blocked(key: org.apache.spark.sql.Column) = {
+        val b = names.withColumn("blk", key)
+        b.select(col("blk"), col("name").as("name_a"))
+          .join(b.select(col("blk"), col("name").as("name_b")), Seq("blk"))
+          .filter(col("name_a") < col("name_b"))
+          .select("name_a", "name_b")
+      }
+      blocked(substring(col("name"), 1, 3))
+        .unionByName(blocked(substring(col("name"), -3, 3)))
+        .distinct()
+        .withColumn("dist", levenshtein(col("name_a"), col("name_b")).cast("long"))
+        .filter(col("dist") <= 2)
+        .orderBy("name_a", "name_b")
+    },
       """WITH names AS (SELECT DISTINCT lower(p_name) AS name FROM part),
-        |rk AS (SELECT name, substr(name, 1, 1) AS blk,
-        |  row_number() OVER (PARTITION BY substr(name, 1, 1)
-        |   ORDER BY name) AS rk FROM names),
-        |sz AS (SELECT blk, max(rk) AS sz FROM rk GROUP BY 1),
-        |spine AS (SELECT blk, sz, lead(blk) OVER (ORDER BY blk) AS nblk
-        |          FROM sz),
-        |intra AS (
-        | SELECT a.name AS name_a, b.name AS name_b
-        | FROM rk a JOIN rk b
-        |  ON a.blk = b.blk AND b.rk > a.rk AND b.rk - a.rk < 8),
-        |crossb AS (
-        | SELECT a.name AS name_a, b.name AS name_b
-        | FROM rk a JOIN spine s ON a.blk = s.blk
-        |  JOIN rk b ON b.blk = s.nblk
-        | WHERE (s.sz - a.rk) + b.rk < 8),
-        |cand AS (SELECT * FROM intra UNION ALL SELECT * FROM crossb)
-        |SELECT name_a, name_b,
-        | round(jaro_winkler_similarity(name_a, name_b), 6) AS jw
+        |pre AS (SELECT a.name AS name_a, b.name AS name_b
+        |        FROM names a JOIN names b
+        |          ON substr(a.name, 1, 3) = substr(b.name, 1, 3)
+        |         AND a.name < b.name),
+        |suf AS (SELECT a.name AS name_a, b.name AS name_b
+        |        FROM names a JOIN names b
+        |          ON substr(a.name, length(a.name) - 2, 3) =
+        |             substr(b.name, length(b.name) - 2, 3)
+        |         AND a.name < b.name),
+        |cand AS (SELECT * FROM pre UNION SELECT * FROM suf)
+        |SELECT name_a, name_b, levenshtein(name_a, name_b) AS dist
         |FROM cand
-        |WHERE round(jaro_winkler_similarity(name_a, name_b), 6) >= 0.88
-        |ORDER BY name_a, name_b""".stripMargin,
-    "q_jaro_match" ->
+        |WHERE levenshtein(name_a, name_b) <= 2
+        |ORDER BY name_a, name_b""".stripMargin),
+    // The prefix-weighted twin of q_fuzzy_match: same blocked candidate
+    // generation, verified with the native codegen'd JARO-WINKLER
+    // expression (functions/NativeExpressions.JaroWinkler) instead of
+    // levenshtein — the metric that rewards shared prefixes, pinned
+    // byte-for-byte against DuckDB's jaro_winkler_similarity (same
+    // window, transposition, empty-input and >0.7-boost semantics;
+    // Round9Spec holds the probe values). Rounded to 6dp on both sides.
+    Q("q_jaro_match", { (s, d) =>
+      val names = Tables.part(s, d)
+        .select(lower(col("p_name")).as("name")).distinct()
+      def blocked(key: org.apache.spark.sql.Column) = {
+        val b = names.withColumn("blk", key)
+        b.select(col("blk"), col("name").as("name_a"))
+          .join(b.select(col("blk"), col("name").as("name_b")), Seq("blk"))
+          .filter(col("name_a") < col("name_b"))
+          .select("name_a", "name_b")
+      }
+      blocked(substring(col("name"), 1, 3))
+        .unionByName(blocked(substring(col("name"), -3, 3)))
+        .distinct()
+        .withColumn("jw", round(graft.functions.NativeExpressions
+          .jaroWinkler(s, col("name_a"), col("name_b")), 6))
+        .filter(col("jw") >= 0.93)
+        .orderBy("name_a", "name_b")
+    },
       """WITH names AS (SELECT DISTINCT lower(p_name) AS name FROM part),
         |pre AS (SELECT a.name AS name_a, b.name AS name_b
         |        FROM names a JOIN names b
@@ -3124,22 +3088,6 @@ object Dedup {
         | round(jaro_winkler_similarity(name_a, name_b), 6) AS jw
         |FROM cand
         |WHERE round(jaro_winkler_similarity(name_a, name_b), 6) >= 0.93
-        |ORDER BY name_a, name_b""".stripMargin,
-    "q_fuzzy_match" ->
-      """WITH names AS (SELECT DISTINCT lower(p_name) AS name FROM part),
-        |pre AS (SELECT a.name AS name_a, b.name AS name_b
-        |        FROM names a JOIN names b
-        |          ON substr(a.name, 1, 3) = substr(b.name, 1, 3)
-        |         AND a.name < b.name),
-        |suf AS (SELECT a.name AS name_a, b.name AS name_b
-        |        FROM names a JOIN names b
-        |          ON substr(a.name, length(a.name) - 2, 3) =
-        |             substr(b.name, length(b.name) - 2, 3)
-        |         AND a.name < b.name),
-        |cand AS (SELECT * FROM pre UNION SELECT * FROM suf)
-        |SELECT name_a, name_b, levenshtein(name_a, name_b) AS dist
-        |FROM cand
-        |WHERE levenshtein(name_a, name_b) <= 2
-        |ORDER BY name_a, name_b""".stripMargin
+        |ORDER BY name_a, name_b""".stripMargin)
   )
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Scratch
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.DecimalType
   * re-load posture (`dags/etl_crash_traffic.py:619-624` skips already-
   * loaded ids) with the diff report that says WHAT changed between loads.
   */
-object Evolution {
+object Evolution extends QueryModule {
 
   /** Classify every key across two snapshots of the orders table:
     * `added` (only in B), `removed` (only in A), `changed` (both, payload
@@ -534,172 +534,6 @@ object Evolution {
       .orderBy("feature")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Which column drifted: one-pass 10-bin PSI across the numeric
-    // lineitem schema (H1 vs H2 ship months).
-    "q_psi_matrix" -> { (s, d) => psiMatrix(Tables.lineitem(s, d)) },
-    "q_randomized_response" -> { (s, d) =>
-      randomizedResponse(Tables.documents(s, d)) },
-    // Weekday-vs-weekend value-distribution drift monitor.
-    "q_psi_drift" -> { (s, d) => psiDrift(Tables.events(s, d)) },
-
-    // REFERENTIAL-INTEGRITY SWEEP over the warehouse's five FK edges —
-    // the pre-flight every load gate runs before joins are trusted
-    // (an orphaned FK silently drops rows in inner joins and fabricates
-    // NULL dims in left joins; measure it, don't discover it).
-    "q_fk_orphans" -> { (s, d) =>
-      Seq(
-        fkAudit("customer.c_nationkey->nation", Tables.customer(s, d),
-          "c_nationkey", Tables.nation(s, d), "n_nationkey"),
-        fkAudit("lineitem.l_orderkey->orders", Tables.lineitem(s, d),
-          "l_orderkey", Tables.orders(s, d), "o_orderkey"),
-        fkAudit("lineitem.l_partkey->part", Tables.lineitem(s, d),
-          "l_partkey", Tables.part(s, d), "p_partkey"),
-        fkAudit("lineitem.l_suppkey->supplier", Tables.lineitem(s, d),
-          "l_suppkey", Tables.supplier(s, d), "s_suppkey"),
-        fkAudit("orders.o_custkey->customer", Tables.orders(s, d),
-          "o_custkey", Tables.customer(s, d), "c_custkey"))
-        .reduce(_ unionByName _)
-        .orderBy("fk_edge")
-    },
-
-    // ONE-PASS COLUMN PROFILE — the catalog auto-profiling row (NDV,
-    // null count) for every column of a table in a SINGLE scan: melt
-    // columns to (col_name, value) via stack (k columns ≠ k scans — the
-    // describeAll trick), then one countDistinct aggregate. NDV is
-    // EXACT via the standard two-level distinct expansion; string-cast
-    // is injective per column so casting can't merge values.
-    "q_column_profile" -> { (s, d) =>
-      val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
-        "o_totalprice", "o_orderdate", "o_orderpriority")
-      Tables.orders(s, d)
-        .selectExpr(s"stack(${cols.size}, " +
-          cols.map(c => s"'$c', cast($c as string)").mkString(", ") +
-          ") as (col_name, v)")
-        .groupBy("col_name")
-        .agg(count(lit(1)).as("n"),
-          (count(lit(1)) - count(col("v"))).as("n_nulls"),
-          countDistinct(col("v")).as("ndv"))
-        .orderBy("col_name")
-    },
-    // Snapshot B is carved deterministically from orders: one column
-    // dropped (o_orderpriority), one added (o_channel), one narrowed
-    // (o_custkey bigint -> int) — the three drift classes a real
-    // producer-side schema change produces. B round-trips through a real
-    // parquet write so the audited footer is the artifact a downstream
-    // reader would actually see.
-    "q_schema_drift" -> { (s, d) =>
-      val scratch = Scratch.dir("schema_b")
-      Tables.orders(s, d)
-        .select(col("o_orderkey"), col("o_custkey").cast("int").as("o_custkey"),
-          col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
-          lit("web").as("o_channel"))
-        .write.mode("overwrite").parquet(scratch)
-      schemaDrift(s, s"$d/orders.parquet", scratch)
-    },
-    "q_k_anonymity" -> { (s, d) =>
-      kAnonymity(Tables.customer(s, d), Seq(col("c_nationkey"),
-        col("c_mktsegment"),
-        floor(col("c_acctbal") / 1000).cast("int")), k = 5)
-    },
-    "q_l_diversity" -> { (s, d) =>
-      lDiversity(Tables.customer(s, d),
-        Seq(col("c_nationkey"), col("c_mktsegment")),
-        floor(col("c_acctbal") / 1000).cast("int"), l = 3)
-    },
-    // KEYED PSEUDONYMIZATION with a measured referential-integrity gate:
-    // user ids become keyed-hash tokens (md5(secret ∥ id) — the MAC-class
-    // construction; like the DP seed, the fixture secret exists only so
-    // the oracle can replay, a deployment injects a KMS secret). The two
-    // properties a pseudonymized release must PROVE, measured not
-    // assumed: (1) injectivity on this corpus — token collisions merge
-    // distinct users' histories, so n_tokens must equal n_users;
-    // (2) referential integrity — per-user event counts survive the
-    // mapping exactly (the multiset of group sizes is invariant), checked
-    // as equality of the size-histogram fingerprints before/after.
-    // Scale: two group-bys at user cardinality; the histogram compare is
-    // a dictionary-sized decimal fold.
-    "q_pseudonymize" -> { (s, d) =>
-      val tok = md5(concat(lit("pseud:"), col("user_id").cast("string")))
-      val ev = Tables.events(s, d).select(col("user_id"), tok.as("token"))
-      val pre = ev.groupBy("user_id").agg(count(lit(1)).as("n"))
-      val post = ev.groupBy("token").agg(count(lit(1)).as("n"))
-      def hist(df: DataFrame) = df.groupBy("n")
-        .agg(count(lit(1)).as("c"))
-        .agg(coalesce(sum(col("n") * col("n") * col("c")), lit(0L)).as("fp"),
-          count(lit(1)).as("nsz"))
-      val a = pre.agg(count(lit(1)).as("n_users"))
-        .crossJoin(broadcast(post.agg(count(lit(1)).as("n_tokens"))))
-        .crossJoin(broadcast(hist(pre).select(col("fp").as("fp_pre"),
-          col("nsz").as("nsz_pre"))))
-        .crossJoin(broadcast(hist(post).select(col("fp").as("fp_post"),
-          col("nsz").as("nsz_post"))))
-      a.select(col("n_users"), col("n_tokens"),
-        (col("n_users") === col("n_tokens")).as("injective"),
-        (col("fp_pre") === col("fp_post") &&
-          col("nsz_pre") === col("nsz_post")).as("histogram_preserved"))
-    },
-
-    // same QI/sensitive frame as the k-anon and l-div gates: the three
-    // audits read one projection and answer three different leak models
-    "q_t_closeness" -> { (s, d) =>
-      tCloseness(
-        Tables.customer(s, d).select(col("c_nationkey").as("q1"),
-          col("c_mktsegment").as("q2"),
-          floor(col("c_acctbal") / 1000).cast("int").as("v")),
-        Seq("q1", "q2"), "v", t = 0.3)
-    },
-    // Self-join on l_partkey: the classic "same part, all line pairs"
-    // explosion shape — per-key counts are identical on both sides so
-    // the estimate is Σ n_k², audited without materializing a single
-    // joined row.
-    "q_join_cardinality" -> { (s, d) =>
-      val li = Tables.lineitem(s, d)
-      joinCardinalityAudit(li, li, "l_partkey", "l_partkey")
-    },
-    // ENCODING AUDIT — per-column NDV ratios driving the dictionary-vs-
-    // plain layout call (a low-NDV column stored plain wastes scan I/O
-    // at 100 TB; Parquet picks per-page, this is the table-level audit).
-    // One aggregate computes every count_distinct (Catalyst expands to
-    // one pass per distinct set), then a 5-row stack unpivots the report.
-    "q_encoding_audit" -> { (s, d) =>
-      val cols = Seq("l_returnflag", "l_linestatus", "l_shipdate",
-        "l_partkey", "l_orderkey")
-      val aggs = count(lit(1)).as("n") +:
-        cols.map(c => countDistinct(col(c)).as(s"ndv_$c"))
-      val one = Tables.lineitem(s, d).agg(aggs.head, aggs.tail: _*)
-      val stacked = cols.map(c => s"'$c', ndv_$c").mkString(", ")
-      one.selectExpr("n", s"stack(${cols.size}, $stacked) AS (col_name, ndv)")
-        .select(col("col_name"), col("ndv"),
-          floor(col("ndv") * 1000000.0 / col("n")).cast("long").as("ndv_ppm"),
-          (floor(col("ndv") * 1000000.0 / col("n")) < 10000).as("dict_recommended"))
-        .orderBy("col_name")
-    },
-    "q_expectations" -> { (s, d) =>
-      expectations(Tables.lineitem(s, d), Seq(
-        "qty_in_range" -> col("l_quantity").between(1, 50),
-        "price_positive" -> (col("l_extendedprice") > 0),
-        "discount_in_range" -> col("l_discount").between(0, 0.1),
-        "flag_known" -> col("l_returnflag").isin("A", "N", "R"),
-        "shipdate_present" -> col("l_shipdate").isNotNull))
-    },
-    "q_dp_counts" -> { (s, d) =>
-      dpNoisyCounts(Tables.events(s, d), "event_type")
-    },
-    "q_dp_sums" -> { (s, d) =>
-      dpNoisySums(Tables.events(s, d), "event_type", "value")
-    },
-    // DP median of order totals via the exponential mechanism
-    // (Gumbel-max replay over the distinct-value spine).
-    "q_dp_median" -> { (s, d) =>
-      dpMedian(Tables.orders(s, d), "o_totalprice")
-    },
-    "q_freshness" -> { (s, d) => freshness(Tables.events(s, d)) },
-    "q_table_diff" -> { (s, d) => tableDiff(Tables.orders(s, d)) },
-    "q_cumulative_distinct" -> { (s, d) =>
-      cumulativeDistinctUsers(Tables.events(s, d)) }
-  )
-
   private def fkEdgeSql(name: String, child: String, fk: String,
                         parent: String, pk: String): String =
     s"""SELECT '$name' AS fk_edge,
@@ -714,8 +548,10 @@ object Evolution {
        |  AS BIGINT) * 1000000
        |  // CAST((SELECT count(*) FROM $child) AS BIGINT) AS orphan_ppm""".stripMargin
 
-  def oracles: Map[String, String] = Map(
-    "q_psi_matrix" -> {
+  def entries: Seq[Q] = Seq(
+    // Which column drifted: one-pass 10-bin PSI across the numeric
+    // lineitem schema (H1 vs H2 ship months).
+    Q("q_psi_matrix", { (s, d) => psiMatrix(Tables.lineitem(s, d)) }, {
       val melt = Seq("l_discount", "l_extendedprice", "l_quantity", "l_tax")
         .map(c => s"""SELECT '$c' AS feature, CAST($c AS DOUBLE) AS v,
                      | month(l_shipdate) <= 6 AS is_ref FROM lineitem"""
@@ -756,8 +592,9 @@ object Evolution {
          | round(CAST(sum(term) AS DOUBLE), 6) AS psi,
          | round(CAST(sum(term) AS DOUBLE), 6) > 0.2 AS drifted
          |FROM terms GROUP BY 1, 2, 3 ORDER BY feature""".stripMargin
-    },
-    "q_randomized_response" ->
+    }),
+    Q("q_randomized_response", { (s, d) =>
+      randomizedResponse(Tables.documents(s, d)) },
       """WITH b AS (
         | SELECT CAST(CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS BIGINT) AS t,
         |  CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) AS BIGINT)
@@ -772,33 +609,9 @@ object Evolution {
         | round((CAST(nr AS DOUBLE) / CAST(n AS DOUBLE) - 0.25) / 0.5, 6)
         |  AS pi_hat,
         | round(CAST(nt AS DOUBLE) / CAST(n AS DOUBLE), 6) AS pi_true
-        |FROM a""".stripMargin,
-    "q_fk_orphans" -> Seq(
-      fkEdgeSql("customer.c_nationkey->nation", "customer", "c_nationkey",
-        "nation", "n_nationkey"),
-      fkEdgeSql("lineitem.l_orderkey->orders", "lineitem", "l_orderkey",
-        "orders", "o_orderkey"),
-      fkEdgeSql("lineitem.l_partkey->part", "lineitem", "l_partkey",
-        "part", "p_partkey"),
-      fkEdgeSql("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey",
-        "supplier", "s_suppkey"),
-      fkEdgeSql("orders.o_custkey->customer", "orders", "o_custkey",
-        "customer", "c_custkey"))
-      .mkString("", "\nUNION ALL\n", "\nORDER BY fk_edge"),
-    "q_column_profile" -> {
-      val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
-        "o_totalprice", "o_orderdate", "o_orderpriority")
-      val melts = cols.map(c =>
-        s"SELECT '$c' AS col_name, CAST($c AS VARCHAR) AS v FROM orders")
-        .mkString("\n UNION ALL\n ")
-      s"""WITH m AS (
-         | $melts)
-         |SELECT col_name, CAST(count(*) AS BIGINT) AS n,
-         | CAST(count(*) - count(v) AS BIGINT) AS n_nulls,
-         | CAST(count(DISTINCT v) AS BIGINT) AS ndv
-         |FROM m GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-    "q_psi_drift" ->
+        |FROM a""".stripMargin),
+    // Weekday-vs-weekend value-distribution drift monitor.
+    Q("q_psi_drift", { (s, d) => psiDrift(Tables.events(s, d)) },
       """WITH ev AS (
         | SELECT CAST(value AS DOUBLE) AS v, isodow(ts) <= 4 AS is_ref
         | FROM events WHERE value IS NOT NULL),
@@ -825,62 +638,89 @@ object Evolution {
         |SELECT nr AS n_ref, nc AS n_cur,
         | round(CAST(sum(term) AS DOUBLE), 6) AS psi,
         | round(CAST(sum(term) AS DOUBLE), 6) > 0.2 AS drifted
-        |FROM terms GROUP BY 1, 2""".stripMargin,
-    // clipped-sum twin: same seeded uniform, Laplace scale C/eps
-    "q_dp_sums" ->
-      """WITH c AS (
-        | SELECT event_type,
-        |  CAST(sum(least(greatest(
-        |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT), 0), 10000))
-        |   AS BIGINT) AS sc
-        | FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |u AS (
-        | SELECT event_type, sc,
-        |  (CAST('0x' || substr(md5('dpsum:' || event_type), 1, 13) AS BIGINT)
-        |    + 0.5) / 4503599627370496.0 AS u
-        | FROM c)
-        |SELECT event_type, CAST(sc AS DOUBLE) / 100.0 AS sum_clipped,
-        | round(CAST(sc AS DOUBLE) / 100.0
-        |  + (-sign(u - 0.5) * ln(1.0 - 2.0 * abs(u - 0.5)) * 100.0), 6)
-        |  AS sum_noisy,
-        | 1.0 AS epsilon, CAST(100 AS BIGINT) AS clip
-        |FROM u ORDER BY event_type""".stripMargin,
-    // exponential-mechanism median: Gumbel-max replay, rank utility
-    "q_dp_median" ->
-      """WITH v AS (
-        | SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
-        | FROM orders WHERE o_totalprice IS NOT NULL),
-        |g AS (SELECT c, count(*) AS k FROM v GROUP BY 1),
-        |s AS (SELECT c, sum(k) OVER (ORDER BY c) AS cum FROM g),
-        |n AS (SELECT count(*) AS n FROM v),
-        |sc AS (
-        | SELECT c, CAST(abs(2 * cum - (SELECT n FROM n)) AS BIGINT) AS rd,
-        |  (CAST('0x' || substr(md5('dpmed:' || CAST(c AS VARCHAR)), 1, 13) AS BIGINT)
-        |    + 0.5) / 4503599627370496.0 AS u
-        | FROM s)
-        |SELECT 1.0 AS epsilon, (SELECT n FROM n) AS n,
-        | CAST(c AS DOUBLE) / 100.0 AS dp_median, rd AS rank_dist
-        |FROM sc
-        |ORDER BY (-1.0 * CAST(rd AS DOUBLE) / 4.0 + (-ln(-ln(u)))) DESC, c DESC
-        |LIMIT 1""".stripMargin,
-    // same salted-md5 uniform, same Laplace inverse CDF, ε = 1
-    "q_dp_counts" ->
-      """WITH c AS (
-        | SELECT event_type, count(*) AS n_exact FROM events GROUP BY 1),
-        |u AS (
-        | SELECT event_type, n_exact,
-        |  (CAST('0x' || substr(md5('dp:' || event_type), 1, 13) AS BIGINT)
-        |    + 0.5) / 4503599627370496.0 AS u
-        | FROM c)
-        |SELECT event_type, n_exact,
-        | round(n_exact + (-sign(u - 0.5) * ln(1.0 - 2.0 * abs(u - 0.5))
-        |   / 1.0), 6) AS n_noisy,
-        | 1.0 AS epsilon
-        |FROM u ORDER BY event_type""".stripMargin,
+        |FROM terms GROUP BY 1, 2""".stripMargin),
+
+    // REFERENTIAL-INTEGRITY SWEEP over the warehouse's five FK edges —
+    // the pre-flight every load gate runs before joins are trusted
+    // (an orphaned FK silently drops rows in inner joins and fabricates
+    // NULL dims in left joins; measure it, don't discover it).
+    Q("q_fk_orphans", { (s, d) =>
+      Seq(
+        fkAudit("customer.c_nationkey->nation", Tables.customer(s, d),
+          "c_nationkey", Tables.nation(s, d), "n_nationkey"),
+        fkAudit("lineitem.l_orderkey->orders", Tables.lineitem(s, d),
+          "l_orderkey", Tables.orders(s, d), "o_orderkey"),
+        fkAudit("lineitem.l_partkey->part", Tables.lineitem(s, d),
+          "l_partkey", Tables.part(s, d), "p_partkey"),
+        fkAudit("lineitem.l_suppkey->supplier", Tables.lineitem(s, d),
+          "l_suppkey", Tables.supplier(s, d), "s_suppkey"),
+        fkAudit("orders.o_custkey->customer", Tables.orders(s, d),
+          "o_custkey", Tables.customer(s, d), "c_custkey"))
+        .reduce(_ unionByName _)
+        .orderBy("fk_edge")
+    },
+      Seq(
+      fkEdgeSql("customer.c_nationkey->nation", "customer", "c_nationkey",
+        "nation", "n_nationkey"),
+      fkEdgeSql("lineitem.l_orderkey->orders", "lineitem", "l_orderkey",
+        "orders", "o_orderkey"),
+      fkEdgeSql("lineitem.l_partkey->part", "lineitem", "l_partkey",
+        "part", "p_partkey"),
+      fkEdgeSql("lineitem.l_suppkey->supplier", "lineitem", "l_suppkey",
+        "supplier", "s_suppkey"),
+      fkEdgeSql("orders.o_custkey->customer", "orders", "o_custkey",
+        "customer", "c_custkey"))
+      .mkString("", "\nUNION ALL\n", "\nORDER BY fk_edge")),
+
+    // ONE-PASS COLUMN PROFILE — the catalog auto-profiling row (NDV,
+    // null count) for every column of a table in a SINGLE scan: melt
+    // columns to (col_name, value) via stack (k columns ≠ k scans — the
+    // describeAll trick), then one countDistinct aggregate. NDV is
+    // EXACT via the standard two-level distinct expansion; string-cast
+    // is injective per column so casting can't merge values.
+    Q("q_column_profile", { (s, d) =>
+      val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
+        "o_totalprice", "o_orderdate", "o_orderpriority")
+      Tables.orders(s, d)
+        .selectExpr(s"stack(${cols.size}, " +
+          cols.map(c => s"'$c', cast($c as string)").mkString(", ") +
+          ") as (col_name, v)")
+        .groupBy("col_name")
+        .agg(count(lit(1)).as("n"),
+          (count(lit(1)) - count(col("v"))).as("n_nulls"),
+          countDistinct(col("v")).as("ndv"))
+        .orderBy("col_name")
+    }, {
+      val cols = Seq("o_orderkey", "o_custkey", "o_orderstatus",
+        "o_totalprice", "o_orderdate", "o_orderpriority")
+      val melts = cols.map(c =>
+        s"SELECT '$c' AS col_name, CAST($c AS VARCHAR) AS v FROM orders")
+        .mkString("\n UNION ALL\n ")
+      s"""WITH m AS (
+         | $melts)
+         |SELECT col_name, CAST(count(*) AS BIGINT) AS n,
+         | CAST(count(*) - count(v) AS BIGINT) AS n_nulls,
+         | CAST(count(DISTINCT v) AS BIGINT) AS ndv
+         |FROM m GROUP BY 1 ORDER BY 1""".stripMargin
+    }),
+    // Snapshot B is carved deterministically from orders: one column
+    // dropped (o_orderpriority), one added (o_channel), one narrowed
+    // (o_custkey bigint -> int) — the three drift classes a real
+    // producer-side schema change produces. B round-trips through a real
+    // parquet write so the audited footer is the artifact a downstream
+    // reader would actually see.
     // The oracle derives snapshot B's schema from the SAME projection in
     // DuckDB's own type system (DESCRIBE of the equivalent SELECT) — each
     // engine classifies in its own type names, the class labels compare.
-    "q_schema_drift" ->
+    Q("q_schema_drift", { (s, d) =>
+      val scratch = Scratch.dir("schema_b")
+      Tables.orders(s, d)
+        .select(col("o_orderkey"), col("o_custkey").cast("int").as("o_custkey"),
+          col("o_orderstatus"), col("o_totalprice"), col("o_orderdate"),
+          lit("web").as("o_channel"))
+        .write.mode("overwrite").parquet(scratch)
+      schemaDrift(s, s"$d/orders.parquet", scratch)
+    },
       """WITH a AS (
         | SELECT column_name, column_type
         | FROM (DESCRIBE SELECT * FROM orders)),
@@ -897,8 +737,28 @@ object Evolution {
         |      WHEN a.column_type <> b.column_type THEN 'type_changed'
         |      ELSE 'unchanged' END AS change_class
         |FROM a FULL OUTER JOIN b ON a.column_name = b.column_name
-        |ORDER BY col_name""".stripMargin,
-    "q_l_diversity" ->
+        |ORDER BY col_name""".stripMargin),
+    Q("q_k_anonymity", { (s, d) =>
+      kAnonymity(Tables.customer(s, d), Seq(col("c_nationkey"),
+        col("c_mktsegment"),
+        floor(col("c_acctbal") / 1000).cast("int")), k = 5)
+    },
+      """WITH g AS (
+        | SELECT c_nationkey, c_mktsegment,
+        |  CAST(floor(c_acctbal / 1000) AS INTEGER) AS ab,
+        |  count(*) AS cnt
+        | FROM customer GROUP BY 1, 2, 3)
+        |SELECT 5 AS k, count(*) AS n_groups,
+        | COALESCE(CAST(sum(CASE WHEN cnt < 5 THEN 1 ELSE 0 END) AS BIGINT), 0)
+        |  AS n_risky_groups,
+        | COALESCE(CAST(sum(CASE WHEN cnt < 5 THEN cnt ELSE 0 END) AS BIGINT), 0)
+        |  AS n_risky_rows
+        |FROM g""".stripMargin),
+    Q("q_l_diversity", { (s, d) =>
+      lDiversity(Tables.customer(s, d),
+        Seq(col("c_nationkey"), col("c_mktsegment")),
+        floor(col("c_acctbal") / 1000).cast("int"), l = 3)
+    },
       """WITH g AS (
         | SELECT c_nationkey, c_mktsegment,
         |  count(DISTINCT CAST(floor(c_acctbal / 1000) AS INTEGER)) AS div,
@@ -910,31 +770,39 @@ object Evolution {
         | COALESCE(CAST(sum(CASE WHEN div < 3 THEN cnt ELSE 0 END) AS BIGINT), 0)
         |  AS n_rows_at_risk,
         | min(div) AS min_diversity
-        |FROM g""".stripMargin,
-    "q_join_cardinality" ->
-      """WITH c AS (
-        | SELECT l_partkey AS k, count(*) AS n FROM lineitem GROUP BY 1),
-        |tot AS (SELECT count(*) AS rows_a FROM lineitem)
-        |SELECT count(*) AS n_matching_keys,
-        | COALESCE(CAST(sum(n * n) AS BIGINT), 0) AS est_join_rows,
-        | COALESCE(CAST(max(n * n) AS BIGINT), 0) AS max_key_contrib,
-        | rows_a, rows_a AS rows_b,
-        | CAST(floor(COALESCE(sum(n * n), 0) * 1000.0 / rows_a) AS BIGINT)
-        |  AS amplification_x1000
-        |FROM c, tot GROUP BY rows_a""".stripMargin,
-    "q_k_anonymity" ->
-      """WITH g AS (
-        | SELECT c_nationkey, c_mktsegment,
-        |  CAST(floor(c_acctbal / 1000) AS INTEGER) AS ab,
-        |  count(*) AS cnt
-        | FROM customer GROUP BY 1, 2, 3)
-        |SELECT 5 AS k, count(*) AS n_groups,
-        | COALESCE(CAST(sum(CASE WHEN cnt < 5 THEN 1 ELSE 0 END) AS BIGINT), 0)
-        |  AS n_risky_groups,
-        | COALESCE(CAST(sum(CASE WHEN cnt < 5 THEN cnt ELSE 0 END) AS BIGINT), 0)
-        |  AS n_risky_rows
-        |FROM g""".stripMargin,
-    "q_pseudonymize" ->
+        |FROM g""".stripMargin),
+    // KEYED PSEUDONYMIZATION with a measured referential-integrity gate:
+    // user ids become keyed-hash tokens (md5(secret ∥ id) — the MAC-class
+    // construction; like the DP seed, the fixture secret exists only so
+    // the oracle can replay, a deployment injects a KMS secret). The two
+    // properties a pseudonymized release must PROVE, measured not
+    // assumed: (1) injectivity on this corpus — token collisions merge
+    // distinct users' histories, so n_tokens must equal n_users;
+    // (2) referential integrity — per-user event counts survive the
+    // mapping exactly (the multiset of group sizes is invariant), checked
+    // as equality of the size-histogram fingerprints before/after.
+    // Scale: two group-bys at user cardinality; the histogram compare is
+    // a dictionary-sized decimal fold.
+    Q("q_pseudonymize", { (s, d) =>
+      val tok = md5(concat(lit("pseud:"), col("user_id").cast("string")))
+      val ev = Tables.events(s, d).select(col("user_id"), tok.as("token"))
+      val pre = ev.groupBy("user_id").agg(count(lit(1)).as("n"))
+      val post = ev.groupBy("token").agg(count(lit(1)).as("n"))
+      def hist(df: DataFrame) = df.groupBy("n")
+        .agg(count(lit(1)).as("c"))
+        .agg(coalesce(sum(col("n") * col("n") * col("c")), lit(0L)).as("fp"),
+          count(lit(1)).as("nsz"))
+      val a = pre.agg(count(lit(1)).as("n_users"))
+        .crossJoin(broadcast(post.agg(count(lit(1)).as("n_tokens"))))
+        .crossJoin(broadcast(hist(pre).select(col("fp").as("fp_pre"),
+          col("nsz").as("nsz_pre"))))
+        .crossJoin(broadcast(hist(post).select(col("fp").as("fp_post"),
+          col("nsz").as("nsz_post"))))
+      a.select(col("n_users"), col("n_tokens"),
+        (col("n_users") === col("n_tokens")).as("injective"),
+        (col("fp_pre") === col("fp_post") &&
+          col("nsz_pre") === col("nsz_post")).as("histogram_preserved"))
+    },
       """WITH ev AS (
         | SELECT user_id,
         |  md5('pseud:' || CAST(user_id AS VARCHAR)) AS token
@@ -952,8 +820,17 @@ object Evolution {
         | (SELECT count(*) FROM pre) = (SELECT count(*) FROM post)
         |  AS injective,
         | (ha.fp = hb.fp AND ha.nsz = hb.nsz) AS histogram_preserved
-        |FROM ha, hb""".stripMargin,
-    "q_t_closeness" ->
+        |FROM ha, hb""".stripMargin),
+
+    // same QI/sensitive frame as the k-anon and l-div gates: the three
+    // audits read one projection and answer three different leak models
+    Q("q_t_closeness", { (s, d) =>
+      tCloseness(
+        Tables.customer(s, d).select(col("c_nationkey").as("q1"),
+          col("c_mktsegment").as("q2"),
+          floor(col("c_acctbal") / 1000).cast("int").as("v")),
+        Seq("q1", "q2"), "v", t = 0.3)
+    },
       """WITH b AS (
         | SELECT c_nationkey AS q1, c_mktsegment AS q2,
         |  CAST(floor(c_acctbal / 1000) AS INTEGER) AS v
@@ -975,8 +852,43 @@ object Evolution {
         | CAST(COALESCE(sum(CASE WHEN tv > 0.3 THEN 1 ELSE 0 END), 0)
         |  AS BIGINT) AS n_violating,
         | round(max(tv), 6) AS max_tv
-        |FROM pg""".stripMargin,
-    "q_encoding_audit" -> {
+        |FROM pg""".stripMargin),
+    // Self-join on l_partkey: the classic "same part, all line pairs"
+    // explosion shape — per-key counts are identical on both sides so
+    // the estimate is Σ n_k², audited without materializing a single
+    // joined row.
+    Q("q_join_cardinality", { (s, d) =>
+      val li = Tables.lineitem(s, d)
+      joinCardinalityAudit(li, li, "l_partkey", "l_partkey")
+    },
+      """WITH c AS (
+        | SELECT l_partkey AS k, count(*) AS n FROM lineitem GROUP BY 1),
+        |tot AS (SELECT count(*) AS rows_a FROM lineitem)
+        |SELECT count(*) AS n_matching_keys,
+        | COALESCE(CAST(sum(n * n) AS BIGINT), 0) AS est_join_rows,
+        | COALESCE(CAST(max(n * n) AS BIGINT), 0) AS max_key_contrib,
+        | rows_a, rows_a AS rows_b,
+        | CAST(floor(COALESCE(sum(n * n), 0) * 1000.0 / rows_a) AS BIGINT)
+        |  AS amplification_x1000
+        |FROM c, tot GROUP BY rows_a""".stripMargin),
+    // ENCODING AUDIT — per-column NDV ratios driving the dictionary-vs-
+    // plain layout call (a low-NDV column stored plain wastes scan I/O
+    // at 100 TB; Parquet picks per-page, this is the table-level audit).
+    // One aggregate computes every count_distinct (Catalyst expands to
+    // one pass per distinct set), then a 5-row stack unpivots the report.
+    Q("q_encoding_audit", { (s, d) =>
+      val cols = Seq("l_returnflag", "l_linestatus", "l_shipdate",
+        "l_partkey", "l_orderkey")
+      val aggs = count(lit(1)).as("n") +:
+        cols.map(c => countDistinct(col(c)).as(s"ndv_$c"))
+      val one = Tables.lineitem(s, d).agg(aggs.head, aggs.tail: _*)
+      val stacked = cols.map(c => s"'$c', ndv_$c").mkString(", ")
+      one.selectExpr("n", s"stack(${cols.size}, $stacked) AS (col_name, ndv)")
+        .select(col("col_name"), col("ndv"),
+          floor(col("ndv") * 1000000.0 / col("n")).cast("long").as("ndv_ppm"),
+          (floor(col("ndv") * 1000000.0 / col("n")) < 10000).as("dict_recommended"))
+        .orderBy("col_name")
+    }, {
       val cols = Seq("l_returnflag", "l_linestatus", "l_shipdate",
         "l_partkey", "l_orderkey")
       val arms = cols.map { c =>
@@ -988,8 +900,15 @@ object Evolution {
          | CAST(floor(ndv * 1000000.0 / n) AS BIGINT) AS ndv_ppm,
          | floor(ndv * 1000000.0 / n) < 10000 AS dict_recommended
          |FROM u, n ORDER BY col_name""".stripMargin
-    },
-    "q_expectations" -> {
+    }),
+    Q("q_expectations", { (s, d) =>
+      expectations(Tables.lineitem(s, d), Seq(
+        "qty_in_range" -> col("l_quantity").between(1, 50),
+        "price_positive" -> (col("l_extendedprice") > 0),
+        "discount_in_range" -> col("l_discount").between(0, 0.1),
+        "flag_known" -> col("l_returnflag").isin("A", "N", "R"),
+        "shipdate_present" -> col("l_shipdate").isNotNull))
+    }, {
       val rules = Seq(
         "qty_in_range" -> "l_quantity BETWEEN 1 AND 50",
         "price_positive" -> "l_extendedprice > 0",
@@ -1008,8 +927,67 @@ object Evolution {
          | FROM lineitem)
          |$arms
          |ORDER BY rule""".stripMargin
+    }),
+    // same salted-md5 uniform, same Laplace inverse CDF, ε = 1
+    Q("q_dp_counts", { (s, d) =>
+      dpNoisyCounts(Tables.events(s, d), "event_type")
     },
-    "q_freshness" ->
+      """WITH c AS (
+        | SELECT event_type, count(*) AS n_exact FROM events GROUP BY 1),
+        |u AS (
+        | SELECT event_type, n_exact,
+        |  (CAST('0x' || substr(md5('dp:' || event_type), 1, 13) AS BIGINT)
+        |    + 0.5) / 4503599627370496.0 AS u
+        | FROM c)
+        |SELECT event_type, n_exact,
+        | round(n_exact + (-sign(u - 0.5) * ln(1.0 - 2.0 * abs(u - 0.5))
+        |   / 1.0), 6) AS n_noisy,
+        | 1.0 AS epsilon
+        |FROM u ORDER BY event_type""".stripMargin),
+    // clipped-sum twin: same seeded uniform, Laplace scale C/eps
+    Q("q_dp_sums", { (s, d) =>
+      dpNoisySums(Tables.events(s, d), "event_type", "value")
+    },
+      """WITH c AS (
+        | SELECT event_type,
+        |  CAST(sum(least(greatest(
+        |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT), 0), 10000))
+        |   AS BIGINT) AS sc
+        | FROM events WHERE value IS NOT NULL GROUP BY 1),
+        |u AS (
+        | SELECT event_type, sc,
+        |  (CAST('0x' || substr(md5('dpsum:' || event_type), 1, 13) AS BIGINT)
+        |    + 0.5) / 4503599627370496.0 AS u
+        | FROM c)
+        |SELECT event_type, CAST(sc AS DOUBLE) / 100.0 AS sum_clipped,
+        | round(CAST(sc AS DOUBLE) / 100.0
+        |  + (-sign(u - 0.5) * ln(1.0 - 2.0 * abs(u - 0.5)) * 100.0), 6)
+        |  AS sum_noisy,
+        | 1.0 AS epsilon, CAST(100 AS BIGINT) AS clip
+        |FROM u ORDER BY event_type""".stripMargin),
+    // DP median of order totals via the exponential mechanism
+    // (Gumbel-max replay over the distinct-value spine).
+    // exponential-mechanism median: Gumbel-max replay, rank utility
+    Q("q_dp_median", { (s, d) =>
+      dpMedian(Tables.orders(s, d), "o_totalprice")
+    },
+      """WITH v AS (
+        | SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
+        | FROM orders WHERE o_totalprice IS NOT NULL),
+        |g AS (SELECT c, count(*) AS k FROM v GROUP BY 1),
+        |s AS (SELECT c, sum(k) OVER (ORDER BY c) AS cum FROM g),
+        |n AS (SELECT count(*) AS n FROM v),
+        |sc AS (
+        | SELECT c, CAST(abs(2 * cum - (SELECT n FROM n)) AS BIGINT) AS rd,
+        |  (CAST('0x' || substr(md5('dpmed:' || CAST(c AS VARCHAR)), 1, 13) AS BIGINT)
+        |    + 0.5) / 4503599627370496.0 AS u
+        | FROM s)
+        |SELECT 1.0 AS epsilon, (SELECT n FROM n) AS n,
+        | CAST(c AS DOUBLE) / 100.0 AS dp_median, rd AS rank_dist
+        |FROM sc
+        |ORDER BY (-1.0 * CAST(rd AS DOUBLE) / 4.0 + (-ln(-ln(u)))) DESC, c DESC
+        |LIMIT 1""".stripMargin),
+    Q("q_freshness", { (s, d) => freshness(Tables.events(s, d)) },
       """WITH pk AS (
         | SELECT event_type, count(*) AS n, max(ts) AS max_ts
         | FROM events GROUP BY 1),
@@ -1018,8 +996,8 @@ object Evolution {
         | CAST(floor((CAST(floor(epoch(g_ts)) AS BIGINT)
         |   - CAST(floor(epoch(max_ts)) AS BIGINT)) / 60.0) AS BIGINT)
         |  AS lag_minutes
-        |FROM pk, g ORDER BY event_type""".stripMargin,
-    "q_table_diff" ->
+        |FROM pk, g ORDER BY event_type""".stripMargin),
+    Q("q_table_diff", { (s, d) => tableDiff(Tables.orders(s, d)) },
       """WITH a AS (
         | SELECT o_orderkey, o_orderstatus AS status_a,
         |  o_totalprice AS price_a
@@ -1036,8 +1014,9 @@ object Evolution {
         |  ELSE 'unchanged' END AS change_class,
         | count(*) AS cnt
         |FROM a FULL OUTER JOIN b USING (o_orderkey)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_cumulative_distinct" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Q("q_cumulative_distinct", { (s, d) =>
+      cumulativeDistinctUsers(Tables.events(s, d)) },
       """WITH fs AS (
         | SELECT user_id, min(CAST(ts AS DATE)) AS d FROM events GROUP BY 1),
         |daily AS (SELECT d, count(*) AS new_users FROM fs GROUP BY 1)
@@ -1045,6 +1024,6 @@ object Evolution {
         | CAST(sum(new_users) OVER (ORDER BY d
         |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
         |  AS cum_users
-        |FROM daily ORDER BY d""".stripMargin
+        |FROM daily ORDER BY d""".stripMargin)
   )
 }

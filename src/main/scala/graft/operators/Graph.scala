@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -32,7 +32,7 @@ import org.apache.spark.sql.types.DecimalType
   *     passes; beyond ~8 rounds add localCheckpoint every 4 (the X12
   *     lineage rule) — at 3 rounds lineage is shallow.
   */
-object Graph {
+object Graph extends QueryModule {
 
   private val SCALE = 1000000000000L // 10^12 fixed-point mass units
 
@@ -1577,26 +1577,6 @@ object Graph {
       .orderBy("lm")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Modularity Q of the LPA communities (per-community terms + total).
-    "q_modularity" -> { (s, d) => modularity(s, d) },
-    // One Louvain move phase on the LPA partition (exact ×2m² gains).
-    "q_louvain_move" -> { (s, d) => louvainMove(s, d) },
-    // Louvain phase 2: the community-level weighted graph post-move.
-    "q_louvain_coarse" -> { (s, d) => louvainCoarse(s, d) },
-    // Per-community conductance (cut / min-side volume, integer ppm).
-    "q_conductance" -> { (s, d) => conductance(s, d) },
-    // Effective diameter (90th-pct reach) per BFS landmark.
-    "q_eff_diameter" -> { (s, d) => effDiameter(s, d) },
-    "q_ppr_seed" -> { (s, d) => ppr(s, d) },
-    "q_bfs_landmarks" -> { (s, d) => bfsLandmarks(s, d) },
-    "q_assortativity" -> { (s, d) => assortativity(s, d) },
-    "q_pagerank_entity" -> { (s, d) => pagerank(s, d) },
-    "q_link_predict" -> { (s, d) => linkPredict(s, d) },
-    "q_label_prop" -> { (s, d) => labelProp(s, d) },
-    "q_hits" -> { (s, d) => hits(s, d) },
-    "q_kcore" -> { (s, d) => kcore(s, d) })
-
   /** One DuckDB PPR iteration (seed-vector teleport; otherwise the
     * q_pagerank_entity round verbatim).
     */
@@ -1614,162 +1594,9 @@ object Graph {
        | ON d.node = s.node)""".stripMargin
   }
 
-  def oracles: Map[String, String] = Map(
-    "q_ppr_seed" -> {
-      val iters = (1 to 3).map(pprIterSql).mkString(",\n")
-      s"""WITH e0 AS (
-         | SELECT DISTINCT 'c:' || o_custkey AS src, 's:' || l_suppkey AS dst
-         | FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |edges AS (
-         | SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
-         |deg AS (SELECT src AS node, count(*) AS deg FROM edges GROUP BY 1),
-         |seeds AS (SELECT 's:' || s_suppkey AS node FROM supplier
-         |          ORDER BY s_suppkey LIMIT 3),
-         |ns AS (SELECT count(*) AS n FROM seeds),
-         |d2 AS (
-         | SELECT deg.node, deg.deg, seeds.node IS NOT NULL AS is_seed
-         | FROM deg LEFT JOIN seeds ON deg.node = seeds.node),
-         |p0 AS (
-         | SELECT node, deg, is_seed,
-         |  CASE WHEN is_seed THEN (SELECT 1000000000000 // n FROM ns)
-         |   ELSE 0 END AS p
-         | FROM d2),
-         |$iters
-         |SELECT node, p AS ppr_mass FROM p3
-         |ORDER BY ppr_mass DESC, node LIMIT 10""".stripMargin
-    },
-    // the q_bfs_landmarks walk + per-landmark cumulative with the
-    // integer 90% cut (cum·10 ≥ tot·9)
-    "q_eff_diameter" ->
-      """WITH RECURSIVE h AS (
-        | SELECT DISTINCT 'c:' || o_custkey AS src, 's:' || l_suppkey AS dst
-        | FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |e AS (SELECT src, dst FROM h UNION ALL SELECT dst, src FROM h),
-        |seeds AS (SELECT 's:' || s_suppkey AS node FROM supplier
-        |          ORDER BY s_suppkey LIMIT 3),
-        |walk(lm, node, dist) AS (
-        | SELECT node, node, 0 FROM seeds
-        | UNION
-        | SELECT w.lm, e.dst, w.dist + 1
-        | FROM walk w JOIN e ON e.src = w.node
-        | WHERE w.dist < 3),
-        |hist AS (
-        | SELECT lm, CAST(dist AS INTEGER) AS dist,
-        |  CAST(count(*) AS BIGINT) AS nodes
-        | FROM (SELECT lm, node, min(dist) AS dist FROM walk GROUP BY 1, 2)
-        | GROUP BY 1, 2),
-        |cum AS (
-        | SELECT lm, dist, nodes,
-        |  CAST(sum(nodes) OVER (PARTITION BY lm ORDER BY dist
-        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
-        | FROM hist),
-        |per AS (
-        | SELECT lm, CAST(sum(nodes) AS BIGINT) AS n_reached,
-        |  max(dist) AS max_dist
-        | FROM hist GROUP BY 1)
-        |SELECT lm, max(n_reached) AS n_reached,
-        | max(max_dist) AS max_dist, min(dist) AS eff_d90
-        |FROM cum JOIN per USING (lm)
-        |WHERE cum * 10 >= n_reached * 9
-        |GROUP BY lm ORDER BY lm""".stripMargin,
-    // DuckDB replays BFS as a recursive UNION (distinct) walk bounded at
-    // 3 hops, then min(dist) per (lm, node) = the true BFS distance —
-    // level sets are node-bounded so the recursion can't path-explode.
-    "q_bfs_landmarks" ->
-      """WITH RECURSIVE h AS (
-        | SELECT DISTINCT 'c:' || o_custkey AS src, 's:' || l_suppkey AS dst
-        | FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |e AS (SELECT src, dst FROM h UNION ALL SELECT dst, src FROM h),
-        |seeds AS (SELECT 's:' || s_suppkey AS node FROM supplier
-        |          ORDER BY s_suppkey LIMIT 3),
-        |walk(lm, node, dist) AS (
-        | SELECT node, node, 0 FROM seeds
-        | UNION
-        | SELECT w.lm, e.dst, w.dist + 1
-        | FROM walk w JOIN e ON e.src = w.node
-        | WHERE w.dist < 3)
-        |SELECT lm, CAST(dist AS INTEGER) AS dist,
-        | CAST(count(*) AS BIGINT) AS nodes
-        |FROM (SELECT lm, node, min(dist) AS dist FROM walk GROUP BY 1, 2)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_assortativity" ->
-      """WITH h AS (
-        | SELECT DISTINCT 'c:' || o_custkey AS src, 's:' || l_suppkey AS dst
-        | FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |e AS (SELECT src, dst FROM h UNION ALL SELECT dst, src FROM h),
-        |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1),
-        |mo AS (
-        | SELECT count(*) AS m,
-        |  CAST(sum(x.deg) AS BIGINT) AS sx, CAST(sum(y.deg) AS BIGINT) AS sy,
-        |  CAST(sum(x.deg * y.deg) AS BIGINT) AS sxy,
-        |  CAST(sum(x.deg * x.deg) AS BIGINT) AS sxx,
-        |  CAST(sum(y.deg * y.deg) AS BIGINT) AS syy
-        | FROM e JOIN deg x ON e.src = x.src JOIN deg y ON e.dst = y.src)
-        |SELECT m AS m_edges,
-        | CASE WHEN sqrt((CAST(sxx AS DOUBLE) / CAST(m AS DOUBLE)
-        |    - CAST(sx AS DOUBLE) / CAST(m AS DOUBLE) * (CAST(sx AS DOUBLE) / CAST(m AS DOUBLE)))
-        |   * (CAST(syy AS DOUBLE) / CAST(m AS DOUBLE)
-        |    - CAST(sy AS DOUBLE) / CAST(m AS DOUBLE) * (CAST(sy AS DOUBLE) / CAST(m AS DOUBLE)))) > 0
-        |  THEN round((CAST(sxy AS DOUBLE) / CAST(m AS DOUBLE)
-        |    - CAST(sx AS DOUBLE) / CAST(m AS DOUBLE) * (CAST(sy AS DOUBLE) / CAST(m AS DOUBLE)))
-        |   / sqrt((CAST(sxx AS DOUBLE) / CAST(m AS DOUBLE)
-        |    - CAST(sx AS DOUBLE) / CAST(m AS DOUBLE) * (CAST(sx AS DOUBLE) / CAST(m AS DOUBLE)))
-        |   * (CAST(syy AS DOUBLE) / CAST(m AS DOUBLE)
-        |    - CAST(sy AS DOUBLE) / CAST(m AS DOUBLE) * (CAST(sy AS DOUBLE) / CAST(m AS DOUBLE)))), 6)
-        | END AS assortativity
-        |FROM mo""".stripMargin,
-    "q_kcore" -> {
-      val rounds = (1 to 4).map(coreRoundSql(_, 20)).mkString(",\n")
-      s"""WITH h AS (
-         | SELECT DISTINCT 'c:' || o_custkey AS src, 's:' || l_suppkey AS dst
-         | FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |e0 AS (SELECT src, dst FROM h UNION ALL SELECT dst, src FROM h),
-         |$rounds
-         |SELECT src AS node, count(*) AS deg, count(*) >= 20 AS stable
-         |FROM e4 GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-    "q_link_predict" ->
-      """WITH e AS (
-        | SELECT DISTINCT l_suppkey AS supp, o_custkey AS cust
-        | FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |deg AS (SELECT supp, count(*) AS deg FROM e GROUP BY 1),
-        |t AS (
-        | SELECT supp, cust FROM (
-        |  SELECT supp, cust, row_number() OVER (PARTITION BY supp
-        |   ORDER BY md5(CAST(supp AS VARCHAR) || ':' ||
-        |                CAST(cust AS VARCHAR)), cust) AS rn
-        |  FROM e)
-        | WHERE rn <= 64),
-        |pairs AS (
-        | SELECT a.supp, a.cust AS c1, b.cust AS c2
-        | FROM t a JOIN t b ON a.supp = b.supp AND a.cust < b.cust)
-        |SELECT c1, c2, count(*) AS common,
-        | CAST(sum(CAST(round(1.0 / ln(deg), 6) AS DECIMAL(18,6)))
-        |      AS DOUBLE) AS aa_score
-        |FROM pairs JOIN deg USING (supp)
-        |GROUP BY 1, 2
-        |ORDER BY aa_score DESC, c1, c2 LIMIT 20""".stripMargin,
-    "q_hits" ->
-      """WITH e AS (
-        | SELECT DISTINCT 'c:' || o_custkey AS src, 's:' || l_suppkey AS dst
-        | FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-        |h0 AS (SELECT src, CAST(1000000 AS BIGINT) AS h
-        |       FROM (SELECT DISTINCT src FROM e)),
-        |a1r AS (SELECT dst, CAST(sum(h.h) AS BIGINT) AS ar
-        |        FROM e JOIN h0 h USING (src) GROUP BY 1),
-        |a1 AS (SELECT dst, ar * 1000000
-        |        // (SELECT CAST(sum(ar) AS BIGINT) FROM a1r) AS a FROM a1r),
-        |h1r AS (SELECT src, CAST(sum(a1.a) AS BIGINT) AS hr
-        |        FROM e JOIN a1 USING (dst) GROUP BY 1),
-        |h1 AS (SELECT src, hr * 1000000
-        |        // (SELECT CAST(sum(hr) AS BIGINT) FROM h1r) AS h FROM h1r),
-        |a2r AS (SELECT dst, CAST(sum(h1.h) AS BIGINT) AS ar
-        |        FROM e JOIN h1 USING (src) GROUP BY 1),
-        |a2 AS (SELECT dst, ar * 1000000
-        |        // (SELECT CAST(sum(ar) AS BIGINT) FROM a2r) AS a FROM a2r)
-        |SELECT dst AS node, a AS auth_mass FROM a2
-        |ORDER BY auth_mass DESC, node LIMIT 10""".stripMargin,
-    "q_modularity" -> {
+  def entries: Seq[Q] = Seq(
+    // Modularity Q of the LPA communities (per-community terms + total).
+    Q("q_modularity", { (s, d) => modularity(s, d) }, {
       val rounds = (1 to 3).map(lpaRoundSql).mkString(",\n")
       // LPA replay verbatim (self-loop edges for voting), then Q over
       // the PLAIN symmetrized edges (no self-loops)
@@ -1806,14 +1633,15 @@ object Graph {
          |SELECT community, n_nodes, deg_sum, internal_edges,
          | CAST(q_term AS DOUBLE) AS q_term, q_total
          |FROM wt CROSS JOIN qt ORDER BY community""".stripMargin
-    },
+    }),
+    // One Louvain move phase on the LPA partition (exact ×2m² gains).
     // LPA replay (self-loop vote edges), then the move-phase gain CTEs
     // over the PLAIN symmetrized edges: per-(node, neighbor-community)
     // counts, own-community count, Σtot per community, and the exact
     // integer gain 2m·(k_iB − k_iA) − k_i·(Σtot(B) − Σtot(A) + k_i);
     // row_number(gain DESC, ld ASC) is order-equivalent to Spark's
     // min((−gain, ld)) struct.
-    "q_louvain_move" -> {
+    Q("q_louvain_move", { (s, d) => louvainMove(s, d) }, {
       s"""WITH $louvainMoveCtesSql
          |SELECT l.node, l.label AS old_label,
          | CASE WHEN COALESCE(b.gain, 0) > 0 THEN b.ld ELSE l.label END
@@ -1822,10 +1650,11 @@ object Graph {
          | CAST(COALESCE(b.gain, 0) AS BIGINT) AS gain_num
          |FROM l3 l LEFT JOIN best b ON l.node = b.node
          |ORDER BY l.node""".stripMargin
-    },
+    }),
+    // Louvain phase 2: the community-level weighted graph post-move.
     // the move chain, then the phase-2 collapse: symmetrized edges with
     // both endpoints' POST-MOVE communities attached, counted per pair
-    "q_louvain_coarse" -> {
+    Q("q_louvain_coarse", { (s, d) => louvainCoarse(s, d) }, {
       s"""WITH $louvainMoveCtesSql,
          |newlab AS (
          | SELECT l.node,
@@ -1838,11 +1667,12 @@ object Graph {
          | JOIN newlab b ON sym.dst = b.node
          |GROUP BY 1, 2
          |ORDER BY community_a, community_b""".stripMargin
-    },
+    }),
+    // Per-community conductance (cut / min-side volume, integer ppm).
     // LPA replay, then per-community vol (directed edges out of the
     // community's nodes), cut (those landing outside), and the exact
     // ppm conductance with the all-edges-internal guard
-    "q_conductance" -> {
+    Q("q_conductance", { (s, d) => conductance(s, d) }, {
       val rounds = (1 to 3).map(lpaRoundSql).mkString(",\n")
       s"""WITH h AS (
          | SELECT DISTINCT 'c:' || o_custkey AS src, 's:' || l_suppkey AS dst
@@ -1874,24 +1704,112 @@ object Graph {
          |  AS conductance_ppm
          |FROM byc JOIN nn USING (community)
          |ORDER BY community""".stripMargin
-    },
-    "q_label_prop" -> {
-      val rounds = (1 to 3).map(lpaRoundSql).mkString(",\n")
-      s"""WITH h AS (
+    }),
+    // Effective diameter (90th-pct reach) per BFS landmark.
+    // the q_bfs_landmarks walk + per-landmark cumulative with the
+    // integer 90% cut (cum·10 ≥ tot·9)
+    Q("q_eff_diameter", { (s, d) => effDiameter(s, d) },
+      """WITH RECURSIVE h AS (
+        | SELECT DISTINCT 'c:' || o_custkey AS src, 's:' || l_suppkey AS dst
+        | FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+        |e AS (SELECT src, dst FROM h UNION ALL SELECT dst, src FROM h),
+        |seeds AS (SELECT 's:' || s_suppkey AS node FROM supplier
+        |          ORDER BY s_suppkey LIMIT 3),
+        |walk(lm, node, dist) AS (
+        | SELECT node, node, 0 FROM seeds
+        | UNION
+        | SELECT w.lm, e.dst, w.dist + 1
+        | FROM walk w JOIN e ON e.src = w.node
+        | WHERE w.dist < 3),
+        |hist AS (
+        | SELECT lm, CAST(dist AS INTEGER) AS dist,
+        |  CAST(count(*) AS BIGINT) AS nodes
+        | FROM (SELECT lm, node, min(dist) AS dist FROM walk GROUP BY 1, 2)
+        | GROUP BY 1, 2),
+        |cum AS (
+        | SELECT lm, dist, nodes,
+        |  CAST(sum(nodes) OVER (PARTITION BY lm ORDER BY dist
+        |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+        | FROM hist),
+        |per AS (
+        | SELECT lm, CAST(sum(nodes) AS BIGINT) AS n_reached,
+        |  max(dist) AS max_dist
+        | FROM hist GROUP BY 1)
+        |SELECT lm, max(n_reached) AS n_reached,
+        | max(max_dist) AS max_dist, min(dist) AS eff_d90
+        |FROM cum JOIN per USING (lm)
+        |WHERE cum * 10 >= n_reached * 9
+        |GROUP BY lm ORDER BY lm""".stripMargin),
+    Q("q_ppr_seed", { (s, d) => ppr(s, d) }, {
+      val iters = (1 to 3).map(pprIterSql).mkString(",\n")
+      s"""WITH e0 AS (
          | SELECT DISTINCT 'c:' || o_custkey AS src, 's:' || l_suppkey AS dst
          | FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
-         |nodes AS (SELECT DISTINCT src AS node FROM
-         | (SELECT src FROM h UNION ALL SELECT dst FROM h) t(src)),
          |edges AS (
-         | SELECT src, dst FROM h UNION ALL SELECT dst, src FROM h
-         | UNION ALL SELECT node, node FROM nodes),
-         |l0 AS (SELECT node, node AS label FROM nodes),
-         |$rounds
-         |SELECT a.node, a.label, a.label = b.label AS stable
-         |FROM l3 a JOIN l2 b ON a.node = b.node
-         |ORDER BY a.node""".stripMargin
-    },
-    "q_pagerank_entity" -> {
+         | SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),
+         |deg AS (SELECT src AS node, count(*) AS deg FROM edges GROUP BY 1),
+         |seeds AS (SELECT 's:' || s_suppkey AS node FROM supplier
+         |          ORDER BY s_suppkey LIMIT 3),
+         |ns AS (SELECT count(*) AS n FROM seeds),
+         |d2 AS (
+         | SELECT deg.node, deg.deg, seeds.node IS NOT NULL AS is_seed
+         | FROM deg LEFT JOIN seeds ON deg.node = seeds.node),
+         |p0 AS (
+         | SELECT node, deg, is_seed,
+         |  CASE WHEN is_seed THEN (SELECT 1000000000000 // n FROM ns)
+         |   ELSE 0 END AS p
+         | FROM d2),
+         |$iters
+         |SELECT node, p AS ppr_mass FROM p3
+         |ORDER BY ppr_mass DESC, node LIMIT 10""".stripMargin
+    }),
+    // DuckDB replays BFS as a recursive UNION (distinct) walk bounded at
+    // 3 hops, then min(dist) per (lm, node) = the true BFS distance —
+    // level sets are node-bounded so the recursion can't path-explode.
+    Q("q_bfs_landmarks", { (s, d) => bfsLandmarks(s, d) },
+      """WITH RECURSIVE h AS (
+        | SELECT DISTINCT 'c:' || o_custkey AS src, 's:' || l_suppkey AS dst
+        | FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+        |e AS (SELECT src, dst FROM h UNION ALL SELECT dst, src FROM h),
+        |seeds AS (SELECT 's:' || s_suppkey AS node FROM supplier
+        |          ORDER BY s_suppkey LIMIT 3),
+        |walk(lm, node, dist) AS (
+        | SELECT node, node, 0 FROM seeds
+        | UNION
+        | SELECT w.lm, e.dst, w.dist + 1
+        | FROM walk w JOIN e ON e.src = w.node
+        | WHERE w.dist < 3)
+        |SELECT lm, CAST(dist AS INTEGER) AS dist,
+        | CAST(count(*) AS BIGINT) AS nodes
+        |FROM (SELECT lm, node, min(dist) AS dist FROM walk GROUP BY 1, 2)
+        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Q("q_assortativity", { (s, d) => assortativity(s, d) },
+      """WITH h AS (
+        | SELECT DISTINCT 'c:' || o_custkey AS src, 's:' || l_suppkey AS dst
+        | FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+        |e AS (SELECT src, dst FROM h UNION ALL SELECT dst, src FROM h),
+        |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg FROM e GROUP BY 1),
+        |mo AS (
+        | SELECT count(*) AS m,
+        |  CAST(sum(x.deg) AS BIGINT) AS sx, CAST(sum(y.deg) AS BIGINT) AS sy,
+        |  CAST(sum(x.deg * y.deg) AS BIGINT) AS sxy,
+        |  CAST(sum(x.deg * x.deg) AS BIGINT) AS sxx,
+        |  CAST(sum(y.deg * y.deg) AS BIGINT) AS syy
+        | FROM e JOIN deg x ON e.src = x.src JOIN deg y ON e.dst = y.src)
+        |SELECT m AS m_edges,
+        | CASE WHEN sqrt((CAST(sxx AS DOUBLE) / CAST(m AS DOUBLE)
+        |    - CAST(sx AS DOUBLE) / CAST(m AS DOUBLE) * (CAST(sx AS DOUBLE) / CAST(m AS DOUBLE)))
+        |   * (CAST(syy AS DOUBLE) / CAST(m AS DOUBLE)
+        |    - CAST(sy AS DOUBLE) / CAST(m AS DOUBLE) * (CAST(sy AS DOUBLE) / CAST(m AS DOUBLE)))) > 0
+        |  THEN round((CAST(sxy AS DOUBLE) / CAST(m AS DOUBLE)
+        |    - CAST(sx AS DOUBLE) / CAST(m AS DOUBLE) * (CAST(sy AS DOUBLE) / CAST(m AS DOUBLE)))
+        |   / sqrt((CAST(sxx AS DOUBLE) / CAST(m AS DOUBLE)
+        |    - CAST(sx AS DOUBLE) / CAST(m AS DOUBLE) * (CAST(sx AS DOUBLE) / CAST(m AS DOUBLE)))
+        |   * (CAST(syy AS DOUBLE) / CAST(m AS DOUBLE)
+        |    - CAST(sy AS DOUBLE) / CAST(m AS DOUBLE) * (CAST(sy AS DOUBLE) / CAST(m AS DOUBLE)))), 6)
+        | END AS assortativity
+        |FROM mo""".stripMargin),
+    Q("q_pagerank_entity", { (s, d) => pagerank(s, d) }, {
       val iters = (1 to 3).map(iterSql).mkString(",\n")
       s"""WITH e0 AS (
          | SELECT DISTINCT 'c:' || o_custkey AS src, 's:' || l_suppkey AS dst
@@ -1907,5 +1825,73 @@ object Graph {
          |$iters
          |SELECT node, p AS rank_mass FROM p3
          |ORDER BY rank_mass DESC, node LIMIT 10""".stripMargin
+    }),
+    Q("q_link_predict", { (s, d) => linkPredict(s, d) },
+      """WITH e AS (
+        | SELECT DISTINCT l_suppkey AS supp, o_custkey AS cust
+        | FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+        |deg AS (SELECT supp, count(*) AS deg FROM e GROUP BY 1),
+        |t AS (
+        | SELECT supp, cust FROM (
+        |  SELECT supp, cust, row_number() OVER (PARTITION BY supp
+        |   ORDER BY md5(CAST(supp AS VARCHAR) || ':' ||
+        |                CAST(cust AS VARCHAR)), cust) AS rn
+        |  FROM e)
+        | WHERE rn <= 64),
+        |pairs AS (
+        | SELECT a.supp, a.cust AS c1, b.cust AS c2
+        | FROM t a JOIN t b ON a.supp = b.supp AND a.cust < b.cust)
+        |SELECT c1, c2, count(*) AS common,
+        | CAST(sum(CAST(round(1.0 / ln(deg), 6) AS DECIMAL(18,6)))
+        |      AS DOUBLE) AS aa_score
+        |FROM pairs JOIN deg USING (supp)
+        |GROUP BY 1, 2
+        |ORDER BY aa_score DESC, c1, c2 LIMIT 20""".stripMargin),
+    Q("q_label_prop", { (s, d) => labelProp(s, d) }, {
+      val rounds = (1 to 3).map(lpaRoundSql).mkString(",\n")
+      s"""WITH h AS (
+         | SELECT DISTINCT 'c:' || o_custkey AS src, 's:' || l_suppkey AS dst
+         | FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+         |nodes AS (SELECT DISTINCT src AS node FROM
+         | (SELECT src FROM h UNION ALL SELECT dst FROM h) t(src)),
+         |edges AS (
+         | SELECT src, dst FROM h UNION ALL SELECT dst, src FROM h
+         | UNION ALL SELECT node, node FROM nodes),
+         |l0 AS (SELECT node, node AS label FROM nodes),
+         |$rounds
+         |SELECT a.node, a.label, a.label = b.label AS stable
+         |FROM l3 a JOIN l2 b ON a.node = b.node
+         |ORDER BY a.node""".stripMargin
+    }),
+    Q("q_hits", { (s, d) => hits(s, d) },
+      """WITH e AS (
+        | SELECT DISTINCT 'c:' || o_custkey AS src, 's:' || l_suppkey AS dst
+        | FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+        |h0 AS (SELECT src, CAST(1000000 AS BIGINT) AS h
+        |       FROM (SELECT DISTINCT src FROM e)),
+        |a1r AS (SELECT dst, CAST(sum(h.h) AS BIGINT) AS ar
+        |        FROM e JOIN h0 h USING (src) GROUP BY 1),
+        |a1 AS (SELECT dst, ar * 1000000
+        |        // (SELECT CAST(sum(ar) AS BIGINT) FROM a1r) AS a FROM a1r),
+        |h1r AS (SELECT src, CAST(sum(a1.a) AS BIGINT) AS hr
+        |        FROM e JOIN a1 USING (dst) GROUP BY 1),
+        |h1 AS (SELECT src, hr * 1000000
+        |        // (SELECT CAST(sum(hr) AS BIGINT) FROM h1r) AS h FROM h1r),
+        |a2r AS (SELECT dst, CAST(sum(h1.h) AS BIGINT) AS ar
+        |        FROM e JOIN h1 USING (src) GROUP BY 1),
+        |a2 AS (SELECT dst, ar * 1000000
+        |        // (SELECT CAST(sum(ar) AS BIGINT) FROM a2r) AS a FROM a2r)
+        |SELECT dst AS node, a AS auth_mass FROM a2
+        |ORDER BY auth_mass DESC, node LIMIT 10""".stripMargin),
+    Q("q_kcore", { (s, d) => kcore(s, d) }, {
+      val rounds = (1 to 4).map(coreRoundSql(_, 20)).mkString(",\n")
+      s"""WITH h AS (
+         | SELECT DISTINCT 'c:' || o_custkey AS src, 's:' || l_suppkey AS dst
+         | FROM orders JOIN lineitem ON o_orderkey = l_orderkey),
+         |e0 AS (SELECT src, dst FROM h UNION ALL SELECT dst, src FROM h),
+         |$rounds
+         |SELECT src AS node, count(*) AS deg, count(*) >= 20 AS stable
+         |FROM e4 GROUP BY 1 ORDER BY 1""".stripMargin
     })
+  )
 }

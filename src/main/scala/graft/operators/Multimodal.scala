@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Scratch
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * partition sizing is governed by `spark.sql.files.maxPartitionBytes`
   * so each task's media batch fits executor memory.
   */
-object Multimodal {
+object Multimodal extends QueryModule {
 
   /** A media row: opaque payload + typed metadata (the schema contract a
     * real pipeline would carry for images/audio/video).
@@ -74,12 +74,15 @@ object Multimodal {
       }
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def entries: Seq[Q] = Seq(
     // Metadata layer: binary payload + typed metadata, all verifiable.
-    "q_mm_metadata" -> { (s, d) =>
+    Q("q_mm_metadata", { (s, d) =>
       mediaTable(s, d).select("media_id", "mime", "n_bytes", "checksum")
         .orderBy("media_id")
     },
+      """SELECT doc_id AS media_id, 'text/plain' AS mime,
+        | octet_length(encode(text)) AS n_bytes, md5(text) AS checksum
+        |FROM documents ORDER BY media_id""".stripMargin),
     // BINARY-CONTENT EXACT DEDUP — the first tier of every image/media
     // curation stack: byte-identical payloads collapse by content digest
     // BEFORE any decode runs (the expensive perceptual tiers only see
@@ -90,7 +93,7 @@ object Multimodal {
     // cross-source overlap a crawler dedups on. Scale posture: digests
     // flow (16-byte md5 + path-derived metadata), never payloads, into
     // one map-side-combined groupBy at content cardinality.
-    "q_mm_dedup" -> { (s, d) =>
+    Q("q_mm_dedup", { (s, d) =>
       val root = Scratch.dir("mm_blobs")
       graft.sources.Sources.rmDir(root)
       val rows = Tables.documents(s, d).filter(col("doc_id") < 24)
@@ -119,6 +122,19 @@ object Multimodal {
         .filter(col("n_copies") > 1)
         .orderBy("min_doc")
     },
+      """WITH blobs AS (
+        | SELECT doc_id, 'srcA' AS msrc, md5(text) AS digest
+        | FROM documents WHERE doc_id < 20
+        | UNION ALL
+        | SELECT doc_id, 'srcB', md5(text) FROM documents WHERE doc_id < 8
+        | UNION ALL
+        | SELECT doc_id, 'srcB', md5(text) FROM documents
+        | WHERE doc_id >= 20 AND doc_id < 24)
+        |SELECT digest, CAST(count(*) AS BIGINT) AS n_copies,
+        | CAST(count(DISTINCT msrc) AS BIGINT) AS n_sources,
+        | min(doc_id) AS min_doc
+        |FROM blobs GROUP BY digest HAVING count(*) > 1
+        |ORDER BY min_doc""".stripMargin),
     // ViT PATCH-GRID TOKENIZATION PLAN — the vision-token budgeting math
     // every VLM training pipeline runs before mixing images into a token
     // stream: per image, the 16×16 patch grid (⌈w/16⌉·⌈h/16⌉ vision
@@ -128,7 +144,7 @@ object Multimodal {
     // dims derive deterministically from the payload checksum so the
     // downstream math — the real part — is exact-integer and
     // oracle-gated. Pure map pass, zero shuffles before the output sort.
-    "q_mm_patch_plan" -> { (s, d) =>
+    Q("q_mm_patch_plan", { (s, d) =>
       val w = (lit(160) +
         conv(substring(col("checksum"), 1, 3), 16, 10).cast("long") % 841)
       val h = (lit(160) +
@@ -142,13 +158,26 @@ object Multimodal {
           (col("n_patches") > 1024).as("needs_resize"))
         .orderBy("media_id")
     },
+      """WITH m AS (
+        | SELECT doc_id AS media_id,
+        |  160 + CAST(('0x' || substr(md5(text), 1, 3)) AS BIGINT) % 841 AS w,
+        |  160 + CAST(('0x' || substr(md5(text), 4, 3)) AS BIGINT) % 841 AS h
+        | FROM documents),
+        |p AS (
+        | SELECT media_id, w, h,
+        |  ((w + 15) // 16) * ((h + 15) // 16) AS n_patches
+        | FROM m)
+        |SELECT media_id, w, h, n_patches,
+        | least(n_patches, 1024) AS n_tokens,
+        | n_patches > 1024 AS needs_resize
+        |FROM p ORDER BY media_id""".stripMargin),
     // MULTIMODAL SEQUENCE BUDGET — the text+vision token ledger a VLM
     // mixing pass runs per source: text tokens (whitespace tokenizer) +
     // vision tokens (the q_mm_patch_plan grid, budget-capped) per doc,
     // rolled up per source with the count of docs that overflow a
     // 2048-token multimodal context. Pure map + one source-cardinality
     // aggregate; same FakeDecoder stub boundary for the image dims.
-    "q_mm_budget" -> { (s, d) =>
+    Q("q_mm_budget", { (s, d) =>
       val cs = md5(col("text"))
       val w = lit(160) + conv(substring(cs, 1, 3), 16, 10).cast("long") % 841
       val h = lit(160) + conv(substring(cs, 4, 3), 16, 10).cast("long") % 841
@@ -168,6 +197,24 @@ object Multimodal {
             .as("n_over_context"))
         .orderBy("source")
     },
+      """WITH m AS (
+        | SELECT source,
+        |  CAST(len(list_filter(string_split_regex(text, '\s+'),
+        |    t -> t <> '')) AS BIGINT) AS tt,
+        |  160 + CAST(('0x' || substr(md5(text), 1, 3)) AS BIGINT) % 841 AS w,
+        |  160 + CAST(('0x' || substr(md5(text), 4, 3)) AS BIGINT) % 841 AS h
+        | FROM documents),
+        |p AS (
+        | SELECT source, tt,
+        |  least(((w + 15) // 16) * ((h + 15) // 16), 1024) AS vt
+        | FROM m)
+        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        | CAST(sum(tt) AS BIGINT) AS text_tokens,
+        | CAST(sum(vt) AS BIGINT) AS vision_tokens,
+        | CAST(sum(tt) + sum(vt) AS BIGINT) AS total_tokens,
+        | CAST(COALESCE(sum(CASE WHEN tt + vt > 2048 THEN 1 ELSE 0 END), 0)
+        |  AS BIGINT) AS n_over_context
+        |FROM p GROUP BY 1 ORDER BY source""".stripMargin),
     // INTERLEAVED IMAGE-TEXT SEQUENCE PACKING (the MMC4/Flamingo batch
     // shape): each (text, image) item costs tt + capped vision tokens;
     // items order deterministically per source (md5 — the epoch-shuffle
@@ -179,7 +226,7 @@ object Multimodal {
     // mask and the vision-encoder batch sizing consume. One partitioned
     // window per source (corpus-scale shuffle on source), one map-side
     // combined rollup to context cardinality.
-    "q_mm_interleave" -> { (s, d) =>
+    Q("q_mm_interleave", { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val cs = md5(col("text"))
       val w = lit(160) + conv(substring(cs, 1, 3), 16, 10).cast("long") % 841
@@ -204,134 +251,6 @@ object Multimodal {
           expr("(sum(tt) + sum(vt)) * 1000000 div 4096").as("fill_ppm"))
         .orderBy("source", "ctx_id")
     },
-    // Feature extraction through the typed mapPartitions path.
-    "q_mm_features" -> { (s, d) =>
-      extractFeatures(mediaTable(s, d)).toDF().orderBy("media_id")
-    },
-    // ASPECT-RATIO BUCKETING — the vision-training batching trick
-    // (NovelAI/SDXL lineage): group media by nearest canonical aspect
-    // ratio so each batch resizes to ONE geometry and padding waste
-    // stays near zero (mixed-aspect batches pad every image to the max
-    // of both dims). Dimensions come from a declared STUB decode —
-    // w/h are read off the content digest's first two bytes (uniform
-    // over 64..319, so the fixture exercises EVERY canonical bucket;
-    // text bytes would cluster at 1:1) — the plumbing is real, the
-    // codec isn't in this container. Bucket assignment is pure
-    // integer cross-multiplication against the midpoint boundaries
-    // (w·1000 vs h·625/875/1165/1665 — no float ratios anywhere), so
-    // the report is hash-stable. One mapPartitions decode pass + a
-    // ≤5-group rollup with a broadcast total.
-    "q_mm_aspect_buckets" -> { (s, d) =>
-      val f = mediaTable(s, d).select(
-        (conv(substring(col("checksum"), 1, 2), 16, 10).cast("int") + 64)
-          .as("w"),
-        (conv(substring(col("checksum"), 3, 2), 16, 10).cast("int") + 64)
-          .as("h"))
-      val b = when(col("w") * 1000 < col("h") * 625, "1:2")
-        .when(col("w") * 1000 < col("h") * 875, "3:4")
-        .when(col("w") * 1000 < col("h") * 1165, "1:1")
-        .when(col("w") * 1000 < col("h") * 1665, "4:3")
-        .otherwise("2:1")
-      val g = f.select(b.as("bucket")).groupBy("bucket")
-        .agg(count(lit(1)).as("n_media"))
-      val tot = g.agg(sum(col("n_media")).as("t"))
-      g.crossJoin(broadcast(tot))
-        .select(col("bucket"), col("n_media"),
-          expr("n_media * 1000000 div t").as("share_ppm"))
-        .orderBy("bucket")
-    },
-    // Frame sampling — the video-preprocessing shape: treat the payload as
-    // fixed-size frames (STUB framing: 256-byte strides standing in for a
-    // real container's frame index), keep every 4th frame, emit a
-    // per-frame checksum. The Spark plumbing is the real thing: pure
-    // codegen'd expressions (hex once, slice per sampled frame, no UDF),
-    // one generator per media row, zero shuffles until a consumer
-    // aggregates — at 100 TB this runs scan-speed map-side. Frame bytes
-    // are checksummed via their hex rendering so the oracle slices the
-    // same VARCHAR on both engines (DuckDB has no blob substring/md5).
-    "q_mm_frame_sample" -> { (s, d) =>
-      val frameBytes = 256; val every = 4
-      val hexChars = frameBytes * 2
-      mediaTable(s, d)
-        .filter(col("n_bytes") >= 1) // empty payload = no frames
-        .select(col("media_id"), hex(col("payload")).as("hx"),
-          ceil(col("n_bytes") / lit(frameBytes.toDouble)).cast("long").as("n_frames"))
-        .select(col("media_id"), col("n_frames"),
-          explode(transform(
-            sequence(lit(0L), col("n_frames") - 1, lit(every.toLong)),
-            fi => struct(fi.as("frame_idx"),
-              md5(col("hx").substr(fi.cast("int") * hexChars + 1,
-                lit(hexChars))).as("frame_md5")))).as("f"))
-        .select(col("media_id"), col("n_frames"),
-          col("f.frame_idx"), col("f.frame_md5"))
-        .orderBy("media_id", "frame_idx")
-    },
-
-    // Resize — the image-downsampling shape (STUB resample: keep every
-    // 4th byte, standing in for a real decoder's pixel resample; the
-    // brief's decode step has no media libs here). The Spark plumbing is
-    // the deliverable: binary in → binary out with recomputed size +
-    // checksum, pure codegen'd hex/array expressions, zero shuffles,
-    // payloads never leave the executor. A real implementation swaps the
-    // stride lambda for FakeDecoder→real decoder inside the same
-    // partition-wise stage as extractFeatures.
-    "q_mm_resize" -> { (s, d) =>
-      val stride = 4
-      mediaTable(s, d)
-        .filter(col("n_bytes") >= 1)
-        .select(col("media_id"), hex(col("payload")).as("hx"),
-          col("n_bytes").as("orig_bytes"))
-        .select(col("media_id"), col("orig_bytes"),
-          array_join(transform(
-            sequence(lit(0L), col("orig_bytes") - 1, lit(stride.toLong)),
-            i => col("hx").substr((i.cast("int") * 2) + 1, lit(2))), "")
-            .as("resized_hx"))
-        .select(col("media_id"), col("orig_bytes"),
-          (length(col("resized_hx")) / 2).cast("long").as("resized_bytes"),
-          md5(col("resized_hx")).as("resized_md5"))
-        .orderBy("media_id")
-    }
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q_mm_dedup" ->
-      """WITH blobs AS (
-        | SELECT doc_id, 'srcA' AS msrc, md5(text) AS digest
-        | FROM documents WHERE doc_id < 20
-        | UNION ALL
-        | SELECT doc_id, 'srcB', md5(text) FROM documents WHERE doc_id < 8
-        | UNION ALL
-        | SELECT doc_id, 'srcB', md5(text) FROM documents
-        | WHERE doc_id >= 20 AND doc_id < 24)
-        |SELECT digest, CAST(count(*) AS BIGINT) AS n_copies,
-        | CAST(count(DISTINCT msrc) AS BIGINT) AS n_sources,
-        | min(doc_id) AS min_doc
-        |FROM blobs GROUP BY digest HAVING count(*) > 1
-        |ORDER BY min_doc""".stripMargin,
-    "q_mm_metadata" ->
-      """SELECT doc_id AS media_id, 'text/plain' AS mime,
-        | octet_length(encode(text)) AS n_bytes, md5(text) AS checksum
-        |FROM documents ORDER BY media_id""".stripMargin,
-    "q_mm_budget" ->
-      """WITH m AS (
-        | SELECT source,
-        |  CAST(len(list_filter(string_split_regex(text, '\s+'),
-        |    t -> t <> '')) AS BIGINT) AS tt,
-        |  160 + CAST(('0x' || substr(md5(text), 1, 3)) AS BIGINT) % 841 AS w,
-        |  160 + CAST(('0x' || substr(md5(text), 4, 3)) AS BIGINT) % 841 AS h
-        | FROM documents),
-        |p AS (
-        | SELECT source, tt,
-        |  least(((w + 15) // 16) * ((h + 15) // 16), 1024) AS vt
-        | FROM m)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        | CAST(sum(tt) AS BIGINT) AS text_tokens,
-        | CAST(sum(vt) AS BIGINT) AS vision_tokens,
-        | CAST(sum(tt) + sum(vt) AS BIGINT) AS total_tokens,
-        | CAST(COALESCE(sum(CASE WHEN tt + vt > 2048 THEN 1 ELSE 0 END), 0)
-        |  AS BIGINT) AS n_over_context
-        |FROM p GROUP BY 1 ORDER BY source""".stripMargin,
-    "q_mm_interleave" ->
       """WITH m AS (
         | SELECT source, doc_id,
         |  CAST(len(list_filter(string_split_regex(text, '\s+'),
@@ -354,26 +273,15 @@ object Multimodal {
         | CAST(sum(tt) AS BIGINT) AS text_tokens,
         | CAST(sum(vt) AS BIGINT) AS vision_tokens,
         | CAST((sum(tt) + sum(vt)) * 1000000 // 4096 AS BIGINT) AS fill_ppm
-        |FROM c GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    "q_mm_patch_plan" ->
-      """WITH m AS (
-        | SELECT doc_id AS media_id,
-        |  160 + CAST(('0x' || substr(md5(text), 1, 3)) AS BIGINT) % 841 AS w,
-        |  160 + CAST(('0x' || substr(md5(text), 4, 3)) AS BIGINT) % 841 AS h
-        | FROM documents),
-        |p AS (
-        | SELECT media_id, w, h,
-        |  ((w + 15) // 16) * ((h + 15) // 16) AS n_patches
-        | FROM m)
-        |SELECT media_id, w, h, n_patches,
-        | least(n_patches, 1024) AS n_tokens,
-        | n_patches > 1024 AS needs_resize
-        |FROM p ORDER BY media_id""".stripMargin,
+        |FROM c GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    // Feature extraction through the typed mapPartitions path.
     // the fake decoder's byte features are plain SQL over the same bytes;
     // first/last byte extracted OCTET-level via hex(encode(..)) so the
     // oracle agrees with the decoder on non-ASCII text too ('ü' → 195,
     // the first UTF-8 byte, not the 252 code point ascii() would give)
-    "q_mm_features" ->
+    Q("q_mm_features", { (s, d) =>
+      extractFeatures(mediaTable(s, d)).toDF().orderBy("media_id")
+    },
       """WITH b AS (SELECT doc_id, octet_length(encode(text)) AS n_bytes,
         |            hex(encode(text)) AS hx FROM documents)
         |SELECT doc_id AS media_id, n_bytes,
@@ -381,8 +289,39 @@ object Multimodal {
         |      ELSE CAST('0x' || substr(hx, 1, 2) AS INTEGER) END AS first_byte,
         | CASE WHEN length(hx)=0 THEN -1
         |      ELSE CAST('0x' || substr(hx, length(hx)-1, 2) AS INTEGER) END AS last_byte
-        |FROM b ORDER BY media_id""".stripMargin,
-    "q_mm_aspect_buckets" ->
+        |FROM b ORDER BY media_id""".stripMargin),
+    // ASPECT-RATIO BUCKETING — the vision-training batching trick
+    // (NovelAI/SDXL lineage): group media by nearest canonical aspect
+    // ratio so each batch resizes to ONE geometry and padding waste
+    // stays near zero (mixed-aspect batches pad every image to the max
+    // of both dims). Dimensions come from a declared STUB decode —
+    // w/h are read off the content digest's first two bytes (uniform
+    // over 64..319, so the fixture exercises EVERY canonical bucket;
+    // text bytes would cluster at 1:1) — the plumbing is real, the
+    // codec isn't in this container. Bucket assignment is pure
+    // integer cross-multiplication against the midpoint boundaries
+    // (w·1000 vs h·625/875/1165/1665 — no float ratios anywhere), so
+    // the report is hash-stable. One mapPartitions decode pass + a
+    // ≤5-group rollup with a broadcast total.
+    Q("q_mm_aspect_buckets", { (s, d) =>
+      val f = mediaTable(s, d).select(
+        (conv(substring(col("checksum"), 1, 2), 16, 10).cast("int") + 64)
+          .as("w"),
+        (conv(substring(col("checksum"), 3, 2), 16, 10).cast("int") + 64)
+          .as("h"))
+      val b = when(col("w") * 1000 < col("h") * 625, "1:2")
+        .when(col("w") * 1000 < col("h") * 875, "3:4")
+        .when(col("w") * 1000 < col("h") * 1165, "1:1")
+        .when(col("w") * 1000 < col("h") * 1665, "4:3")
+        .otherwise("2:1")
+      val g = f.select(b.as("bucket")).groupBy("bucket")
+        .agg(count(lit(1)).as("n_media"))
+      val tot = g.agg(sum(col("n_media")).as("t"))
+      g.crossJoin(broadcast(tot))
+        .select(col("bucket"), col("n_media"),
+          expr("n_media * 1000000 div t").as("share_ppm"))
+        .orderBy("bucket")
+    },
       """WITH b AS (SELECT md5(text) AS ck FROM documents),
         |wh AS (
         | SELECT 64 + CAST('0x' || substr(ck, 1, 2) AS INTEGER) AS w,
@@ -396,8 +335,67 @@ object Multimodal {
         | FROM wh)
         |SELECT bucket, count(*) AS n_media,
         | count(*) * 1000000 // (SELECT count(*) FROM g) AS share_ppm
-        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_mm_resize" ->
+        |FROM g GROUP BY 1 ORDER BY 1""".stripMargin),
+    // Frame sampling — the video-preprocessing shape: treat the payload as
+    // fixed-size frames (STUB framing: 256-byte strides standing in for a
+    // real container's frame index), keep every 4th frame, emit a
+    // per-frame checksum. The Spark plumbing is the real thing: pure
+    // codegen'd expressions (hex once, slice per sampled frame, no UDF),
+    // one generator per media row, zero shuffles until a consumer
+    // aggregates — at 100 TB this runs scan-speed map-side. Frame bytes
+    // are checksummed via their hex rendering so the oracle slices the
+    // same VARCHAR on both engines (DuckDB has no blob substring/md5).
+    Q("q_mm_frame_sample", { (s, d) =>
+      val frameBytes = 256; val every = 4
+      val hexChars = frameBytes * 2
+      mediaTable(s, d)
+        .filter(col("n_bytes") >= 1) // empty payload = no frames
+        .select(col("media_id"), hex(col("payload")).as("hx"),
+          ceil(col("n_bytes") / lit(frameBytes.toDouble)).cast("long").as("n_frames"))
+        .select(col("media_id"), col("n_frames"),
+          explode(transform(
+            sequence(lit(0L), col("n_frames") - 1, lit(every.toLong)),
+            fi => struct(fi.as("frame_idx"),
+              md5(col("hx").substr(fi.cast("int") * hexChars + 1,
+                lit(hexChars))).as("frame_md5")))).as("f"))
+        .select(col("media_id"), col("n_frames"),
+          col("f.frame_idx"), col("f.frame_md5"))
+        .orderBy("media_id", "frame_idx")
+    },
+      """WITH m AS (SELECT doc_id AS media_id, hex(encode(text)) AS hx,
+        |            octet_length(encode(text)) AS nb FROM documents),
+        |f AS (SELECT media_id, hx, CAST(ceil(nb / 256.0) AS BIGINT) AS n_frames
+        |      FROM m WHERE nb >= 1),
+        |s AS (SELECT media_id, n_frames, unnest(range(0, n_frames, 4)) AS fi, hx
+        |      FROM f)
+        |SELECT media_id, n_frames, fi AS frame_idx,
+        | md5(substr(hx, CAST(fi * 512 + 1 AS BIGINT), 512)) AS frame_md5
+        |FROM s ORDER BY media_id, frame_idx""".stripMargin),
+
+    // Resize — the image-downsampling shape (STUB resample: keep every
+    // 4th byte, standing in for a real decoder's pixel resample; the
+    // brief's decode step has no media libs here). The Spark plumbing is
+    // the deliverable: binary in → binary out with recomputed size +
+    // checksum, pure codegen'd hex/array expressions, zero shuffles,
+    // payloads never leave the executor. A real implementation swaps the
+    // stride lambda for FakeDecoder→real decoder inside the same
+    // partition-wise stage as extractFeatures.
+    Q("q_mm_resize", { (s, d) =>
+      val stride = 4
+      mediaTable(s, d)
+        .filter(col("n_bytes") >= 1)
+        .select(col("media_id"), hex(col("payload")).as("hx"),
+          col("n_bytes").as("orig_bytes"))
+        .select(col("media_id"), col("orig_bytes"),
+          array_join(transform(
+            sequence(lit(0L), col("orig_bytes") - 1, lit(stride.toLong)),
+            i => col("hx").substr((i.cast("int") * 2) + 1, lit(2))), "")
+            .as("resized_hx"))
+        .select(col("media_id"), col("orig_bytes"),
+          (length(col("resized_hx")) / 2).cast("long").as("resized_bytes"),
+          md5(col("resized_hx")).as("resized_md5"))
+        .orderBy("media_id")
+    },
       """WITH m AS (SELECT doc_id AS media_id, hex(encode(text)) AS hx,
         |            octet_length(encode(text)) AS nb FROM documents),
         |r AS (SELECT media_id, nb AS orig_bytes,
@@ -407,16 +405,6 @@ object Multimodal {
         |SELECT media_id, orig_bytes,
         | CAST(length(rhx) / 2 AS BIGINT) AS resized_bytes,
         | md5(rhx) AS resized_md5
-        |FROM r ORDER BY media_id""".stripMargin,
-    "q_mm_frame_sample" ->
-      """WITH m AS (SELECT doc_id AS media_id, hex(encode(text)) AS hx,
-        |            octet_length(encode(text)) AS nb FROM documents),
-        |f AS (SELECT media_id, hx, CAST(ceil(nb / 256.0) AS BIGINT) AS n_frames
-        |      FROM m WHERE nb >= 1),
-        |s AS (SELECT media_id, n_frames, unnest(range(0, n_frames, 4)) AS fi, hx
-        |      FROM f)
-        |SELECT media_id, n_frames, fi AS frame_idx,
-        | md5(substr(hx, CAST(fi * 512 + 1 AS BIGINT), 512)) AS frame_md5
-        |FROM s ORDER BY media_id, frame_idx""".stripMargin
+        |FROM r ORDER BY media_id""".stripMargin)
   )
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{Scratch, Tables}
+import graft.{Q, QueryModule, Scratch, Tables}
 import graft.CacheScope.TrackedDataset
 
 /** The reference DAG re-expressed as ONE end-to-end driver (SURVEY §2.10;
@@ -21,7 +21,7 @@ import graft.CacheScope.TrackedDataset
   * topics are bounded-cardinality aggregates. Parquet directories play the
   * reference's Postgres tables (SURVEY S4).
   */
-object Pipeline {
+object Pipeline extends QueryModule {
 
   /** Delete a scratch warehouse (fresh-run setup; the reference's DDL
     * CREATE-IF-NOT-EXISTS plays this role).
@@ -211,18 +211,63 @@ object Pipeline {
     }.reduce(_ unionByName _).orderBy("table_name")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  // The oracles' rows: one count per table the DAG writes
+  private def flat: String = StarPipeline.flatFactSql
+  private def dimCounts: Seq[String] = StarPipeline.dimSpecs.map { case (name, keys) =>
+    s"""SELECT '$name' AS table_name,
+       | (SELECT count(*) FROM (SELECT DISTINCT ${keys.mkString(", ")} FROM f)) AS cnt""".stripMargin
+  }
+  private def topicCounts: Seq[String] = Seq(
+    "topic_signals_by_state" ->
+      """(SELECT count(DISTINCT n_name) FROM lineitem
+        |  JOIN supplier ON l_suppkey = s_suppkey
+        |  JOIN nation ON s_nationkey = n_nationkey)""".stripMargin,
+    "topic_signals_vs_lesions" ->
+      "(SELECT count(DISTINCT floor((value/10.0)/0.5)*0.5) FROM events)",
+    "topic_weather_light" ->
+      """(SELECT count(*) FROM
+        |  (SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders))""".stripMargin,
+    "topic_accidents_by_time" ->
+      "(SELECT count(DISTINCT hour(ts)) FROM events)",
+    "topic_lesions_by_county" ->
+      """(SELECT count(DISTINCT n_name) FROM orders
+        |  JOIN customer ON o_custkey = c_custkey
+        |  JOIN nation ON c_nationkey = n_nationkey)""".stripMargin,
+    "topic_infra_vs_lesions" ->
+      """(SELECT count(DISTINCT 'bbox_' || printf('%.1f', floor((value/100.0)/0.5)*0.5) ||
+        |   '_' || printf('%.1f', floor((CAST(user_id AS DOUBLE)/10.0)/0.5)*0.5))
+        |  FROM events)""".stripMargin,
+    "topic_crossings" ->
+      "(SELECT count(DISTINCT event_type) FROM events)"
+  ).map { case (name, sub) =>
+    s"SELECT '$name' AS table_name, $sub AS cnt"
+  }
+  private def factCounts: Seq[String] = Seq(
+    "SELECT 'flat_fact' AS table_name, (SELECT count(*) FROM f) AS cnt",
+    "SELECT 'star_fact' AS table_name, (SELECT count(*) FROM f) AS cnt")
+  private def incrementalRows: Seq[String] = StarPipeline.dimSpecs.map { case (name, keys) =>
+    val k = keys.mkString(", ")
+    s"""SELECT '$name' AS table_name,
+       | (SELECT count(*) FROM (SELECT DISTINCT $k FROM f)) AS cnt,
+       | (SELECT count(*) FROM (SELECT DISTINCT $k FROM sub)) AS stable_old_ids,
+       | CAST(0 AS BIGINT) AS null_fks""".stripMargin
+  }
+
+  def entries: Seq[Q] = Seq(
     // The full DAG run TWICE into a fresh warehouse; the returned counts
     // are oracle-checked against the source tables, so any second-run
     // duplication (a broken guard or non-idempotent load) shows up as a
     // count mismatch.
-    "q_pipeline_idempotence" -> { (s, d) =>
+    Q("q_pipeline_idempotence", { (s, d) =>
       val wh = Scratch.dir("pipeline_wh")
       reset(wh)
       runOnce(s, d, wh)
       runOnce(s, d, wh)
       warehouseCounts(s, wh)
     },
+      s"""WITH f AS ($flat)
+         |${(factCounts ++ dimCounts ++ topicCounts).mkString("", "\nUNION ALL\n", "")}
+         |ORDER BY table_name""".stripMargin),
     // Incremental growth gate: run the DAG on HALF the source (even
     // orderkeys), then on the full source. The audit row per dim checks
     // (a) final dim cardinality covers the full key set, (b) every
@@ -230,7 +275,9 @@ object Pipeline {
     // old_ids = a fresh subset-only rebuild joined on key AND id), and
     // (c) zero NULL FKs in the star fact — the exact failure the frozen
     // skip-guard would produce on augmented data.
-    "q_pipeline_incremental" -> { (s, d) =>
+    // expected: every dim holds the FULL key set, every subset-run id
+    // survived the extension, and the fact has no null FKs
+    Q("q_pipeline_incremental", { (s, d) =>
       val wh = Scratch.dir("pipeline_inc_wh")
       reset(wh)
       val subset = col("l_orderkey") % 2 === 0
@@ -273,62 +320,10 @@ object Pipeline {
           .select(lit(n).as("table_name"), col("cnt"), col("stable_old_ids"))
       }.reduce(_ unionByName _)
       dimRows.join(nullFkRows, "table_name").orderBy("table_name")
-    }
+    },
+      s"""WITH f AS ($flat),
+         |sub AS (SELECT * FROM f WHERE l_orderkey % 2 = 0)
+         |${incrementalRows.mkString("", "\nUNION ALL\n", "")}
+         |ORDER BY table_name""".stripMargin)
   )
-
-  def oracles: Map[String, String] = {
-    val flat = StarPipeline.flatFactSql
-    val dimCounts = StarPipeline.dimSpecs.map { case (name, keys) =>
-      s"""SELECT '$name' AS table_name,
-         | (SELECT count(*) FROM (SELECT DISTINCT ${keys.mkString(", ")} FROM f)) AS cnt""".stripMargin
-    }
-    val topicCounts = Seq(
-      "topic_signals_by_state" ->
-        """(SELECT count(DISTINCT n_name) FROM lineitem
-          |  JOIN supplier ON l_suppkey = s_suppkey
-          |  JOIN nation ON s_nationkey = n_nationkey)""".stripMargin,
-      "topic_signals_vs_lesions" ->
-        "(SELECT count(DISTINCT floor((value/10.0)/0.5)*0.5) FROM events)",
-      "topic_weather_light" ->
-        """(SELECT count(*) FROM
-          |  (SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders))""".stripMargin,
-      "topic_accidents_by_time" ->
-        "(SELECT count(DISTINCT hour(ts)) FROM events)",
-      "topic_lesions_by_county" ->
-        """(SELECT count(DISTINCT n_name) FROM orders
-          |  JOIN customer ON o_custkey = c_custkey
-          |  JOIN nation ON c_nationkey = n_nationkey)""".stripMargin,
-      "topic_infra_vs_lesions" ->
-        """(SELECT count(DISTINCT 'bbox_' || printf('%.1f', floor((value/100.0)/0.5)*0.5) ||
-          |   '_' || printf('%.1f', floor((CAST(user_id AS DOUBLE)/10.0)/0.5)*0.5))
-          |  FROM events)""".stripMargin,
-      "topic_crossings" ->
-        "(SELECT count(DISTINCT event_type) FROM events)"
-    ).map { case (name, sub) =>
-      s"SELECT '$name' AS table_name, $sub AS cnt"
-    }
-    val factCounts = Seq(
-      "SELECT 'flat_fact' AS table_name, (SELECT count(*) FROM f) AS cnt",
-      "SELECT 'star_fact' AS table_name, (SELECT count(*) FROM f) AS cnt")
-    val incrementalRows = StarPipeline.dimSpecs.map { case (name, keys) =>
-      val k = keys.mkString(", ")
-      s"""SELECT '$name' AS table_name,
-         | (SELECT count(*) FROM (SELECT DISTINCT $k FROM f)) AS cnt,
-         | (SELECT count(*) FROM (SELECT DISTINCT $k FROM sub)) AS stable_old_ids,
-         | CAST(0 AS BIGINT) AS null_fks""".stripMargin
-    }
-    Map(
-      "q_pipeline_idempotence" ->
-        s"""WITH f AS ($flat)
-           |${(factCounts ++ dimCounts ++ topicCounts).mkString("", "\nUNION ALL\n", "")}
-           |ORDER BY table_name""".stripMargin,
-      // expected: every dim holds the FULL key set, every subset-run id
-      // survived the extension, and the fact has no null FKs
-      "q_pipeline_incremental" ->
-        s"""WITH f AS ($flat),
-           |sub AS (SELECT * FROM f WHERE l_orderkey % 2 = 0)
-           |${incrementalRows.mkString("", "\nUNION ALL\n", "")}
-           |ORDER BY table_name""".stripMargin
-    )
-  }
 }

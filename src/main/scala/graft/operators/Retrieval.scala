@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Scratch
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import graft.operators.TextAnalysis.{enStopwords, tokens}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * the 100 TB OOM the exec exists to avoid. Query-term frames (top-k df
   * rows) broadcast everywhere else.
   */
-object Retrieval {
+object Retrieval extends QueryModule {
 
   /** Distinct (doc_id, term) pairs: dedup inside the token array first
     * (map-side, free) so the shuffle carries each (doc, term) once.
@@ -265,42 +265,15 @@ object Retrieval {
       .orderBy("doc_id")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_phrase_search" -> { (s, d) =>
-      phraseSearch(Tables.documents(s, d), "table", "hash") },
-    "q_inverted_index" -> { (s, d) => invertedIndex(Tables.documents(s, d)) },
-    "q_bm25_topk" -> { (s, d) => bm25TopK(Tables.documents(s, d)) },
-    "q_dirichlet_lm" -> { (s, d) => dirichletLmTopK(Tables.documents(s, d)) },
-    "q_retrieval_metrics" -> { (s, d) =>
-      retrievalMetrics(Tables.documents(s, d))
-    },
-    "q_rrf_fusion" -> { (s, d) => rrfFusion(Tables.documents(s, d)) },
-    // INDEX MAINTENANCE without rescanning history: load 1's term→df
-    // postings stats persist as a compact parquet store; load 2 computes
-    // only ITS df and sum-merges with the store (df is additive over a
-    // disjoint doc partition). The gate: the merged index must equal a
-    // full rebuild — which is exactly what the oracle computes. The
-    // incremental-dedup/HLL-store pattern applied to the search index.
-    "q_index_incremental" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val store = Scratch.dir("df_store")
-      documentFrequency(docs.filter(col("doc_id") % 3 =!= 0))
-        .write.mode("overwrite").parquet(store)
-      documentFrequency(docs.filter(col("doc_id") % 3 === 0))
-        .unionByName(s.read.parquet(store))
-        .groupBy("term").agg(sum(col("df")).as("df"))
-        .orderBy(desc("df"), col("term")).limit(20)
-    }
-  )
-
   private val tokensSql = TextAnalysis.tokensSql("lower(text)")
   private val pairsSql =
     s"""pairs AS (
        | SELECT doc_id, unnest(list_distinct($tokensSql)) AS term
        | FROM documents)""".stripMargin
 
-  def oracles: Map[String, String] = Map(
-    "q_phrase_search" -> {
+  def entries: Seq[Q] = Seq(
+    Q("q_phrase_search", { (s, d) =>
+      phraseSearch(Tables.documents(s, d), "table", "hash") }, {
       val toks = TextAnalysis.tokensSql("text")
       s"""WITH t AS (SELECT doc_id, $toks AS toks FROM documents),
          |b AS (
@@ -309,8 +282,8 @@ object Retrieval {
          | FROM t WHERE len(toks) >= 2)
          |SELECT doc_id, count(*) AS n_occurrences
          |FROM b WHERE bg = 'table hash' GROUP BY 1 ORDER BY 1""".stripMargin
-    },
-    "q_inverted_index" ->
+    }),
+    Q("q_inverted_index", { (s, d) => invertedIndex(Tables.documents(s, d)) },
       s"""WITH $pairsSql,
          |df AS (SELECT term, count(*) AS df FROM pairs GROUP BY 1),
          |top AS (SELECT term, df FROM df ORDER BY df DESC, term LIMIT 20),
@@ -321,12 +294,12 @@ object Retrieval {
          |SELECT term, df,
          | array_to_string(list_sort(list(doc_id)), ',') AS postings
          |FROM rn WHERE rn <= 10
-         |GROUP BY term, df ORDER BY df DESC, term""".stripMargin,
-    "q_bm25_topk" ->
+         |GROUP BY term, df ORDER BY df DESC, term""".stripMargin),
+    Q("q_bm25_topk", { (s, d) => bm25TopK(Tables.documents(s, d)) },
       s"""WITH $bm25CtesSql
          |SELECT doc_id, score FROM bscore
-         |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-    "q_dirichlet_lm" ->
+         |ORDER BY score DESC, doc_id LIMIT 20""".stripMargin),
+    Q("q_dirichlet_lm", { (s, d) => dirichletLmTopK(Tables.documents(s, d)) },
       s"""WITH base AS (
          | SELECT doc_id, $tokensSql AS toks FROM documents),
          |$pairsSql,
@@ -354,8 +327,10 @@ object Retrieval {
          |SELECT doc_id,
          | round(CAST(s AS DOUBLE)
          |  + 3 * ln(2000.0 / (CAST(dl AS DOUBLE) + 2000.0)), 6) AS score
-         |FROM sc ORDER BY score DESC, doc_id LIMIT 20""".stripMargin,
-    "q_retrieval_metrics" ->
+         |FROM sc ORDER BY score DESC, doc_id LIMIT 20""".stripMargin),
+    Q("q_retrieval_metrics", { (s, d) =>
+      retrievalMetrics(Tables.documents(s, d))
+    },
       s"""WITH $bm25CtesSql,
          |ranked AS (
          | SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id)
@@ -387,8 +362,8 @@ object Retrieval {
          | CASE WHEN ic.idcg > 0 THEN
          |   round(CAST(g.dcg AS DOUBLE) / CAST(ic.idcg AS DOUBLE), 6)
          |  ELSE 0.0 END AS ndcg_at_k
-         |FROM g CROSS JOIN ic CROSS JOIN rc""".stripMargin,
-    "q_rrf_fusion" ->
+         |FROM g CROSS JOIN ic CROSS JOIN rc""".stripMargin),
+    Q("q_rrf_fusion", { (s, d) => rrfFusion(Tables.documents(s, d)) },
       s"""WITH $bm25CtesSql,
          |ra AS (
          | SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS r
@@ -402,11 +377,26 @@ object Retrieval {
          | round(COALESCE(CAST(1 AS DOUBLE) / (60 + ra.r), 0)
          |   + COALESCE(CAST(1 AS DOUBLE) / (60 + rb.r), 0), 6) AS rrf
          |FROM ra FULL OUTER JOIN rb ON ra.doc_id = rb.doc_id
-         |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin,
-    "q_index_incremental" ->
+         |ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin),
+    // INDEX MAINTENANCE without rescanning history: load 1's term→df
+    // postings stats persist as a compact parquet store; load 2 computes
+    // only ITS df and sum-merges with the store (df is additive over a
+    // disjoint doc partition). The gate: the merged index must equal a
+    // full rebuild — which is exactly what the oracle computes. The
+    // incremental-dedup/HLL-store pattern applied to the search index.
+    Q("q_index_incremental", { (s, d) =>
+      val docs = Tables.documents(s, d)
+      val store = Scratch.dir("df_store")
+      documentFrequency(docs.filter(col("doc_id") % 3 =!= 0))
+        .write.mode("overwrite").parquet(store)
+      documentFrequency(docs.filter(col("doc_id") % 3 === 0))
+        .unionByName(s.read.parquet(store))
+        .groupBy("term").agg(sum(col("df")).as("df"))
+        .orderBy(desc("df"), col("term")).limit(20)
+    },
       s"""WITH $pairsSql
          |SELECT term, count(*) AS df FROM pairs
-         |GROUP BY 1 ORDER BY df DESC, term LIMIT 20""".stripMargin
+         |GROUP BY 1 ORDER BY df DESC, term LIMIT 20""".stripMargin)
   )
 
   /** Shared BM25 CTE chain ending in `bscore(doc_id, score)` — used by

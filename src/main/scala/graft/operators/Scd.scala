@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * nothing funnels through a single task no matter how large the
   * dimension grows. Closed history rows pass through untouched.
   */
-object Scd {
+object Scd extends QueryModule {
 
   /** First load: every snapshot row opens version 1 at `batch`. */
   def scd2Init(snapshot: DataFrame, batch: Int): DataFrame =
@@ -147,39 +147,9 @@ object Scd {
       .orderBy("batch", "seg", "version")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_scd2_dim" -> scd2CustomerDim _,
-    "q_pit_join" -> pitJoin _,
-    // planted changelog over orders: every 10th key updated (seq 1),
-    // every 100th then deleted (seq 2 — exercises update-then-delete
-    // ordering), 50 brand-new keys inserted; everyone else passes through
-    "q_cdc_merge" -> { (s, d) =>
-      import org.apache.spark.sql.types.DecimalType
-      val base = Tables.orders(s, d).select(col("o_orderkey").as("k"),
-        col("o_orderstatus").as("status"),
-        col("o_totalprice").cast(DecimalType(18, 2)).as("price"),
-        lit(0L).as("seq"), lit("I").as("op"))
-      val upd = base.filter(col("k") % 10 === 0)
-        .select(col("k"), lit("X").as("status"),
-          (col("price") + 1000).cast(DecimalType(18, 2)).as("price"),
-          lit(1L).as("seq"), lit("U").as("op"))
-      val del = base.filter(col("k") % 100 === 0)
-        .select(col("k"), lit(null).cast("string").as("status"),
-          lit(null).cast(DecimalType(18, 2)).as("price"),
-          lit(2L).as("seq"), lit("D").as("op"))
-      val ins = base.filter(col("k") < 50)
-        .select((col("k") + 900000000L).as("k"), lit("N").as("status"),
-          lit(42.42).cast(DecimalType(18, 2)).as("price"),
-          lit(1L).as("seq"), lit("I").as("op"))
-      cdcApply(base.unionByName(upd).unionByName(del).unionByName(ins), "k")
-        .withColumnRenamed("k", "o_orderkey")
-        .orderBy("o_orderkey")
-    }
-  )
-
-  def oracles: Map[String, String] = Map(
+  def entries: Seq[Q] = Seq(
     // the three SCD2 outcomes spelled out relationally
-    "q_scd2_dim" ->
+    Q("q_scd2_dim", scd2CustomerDim _,
       """WITH v1 AS (SELECT c_custkey, c_mktsegment AS seg FROM customer
         |            WHERE c_custkey % 2 = 0),
         |v2 AS (SELECT c_custkey,
@@ -197,8 +167,8 @@ object Scd {
         |       CAST(NULL AS INTEGER), true
         |FROM v2 LEFT JOIN v1 USING (c_custkey)
         |WHERE v1.c_custkey IS NULL OR v1.seg <> v2.seg
-        |ORDER BY c_custkey, version""".stripMargin,
-    "q_pit_join" ->
+        |ORDER BY c_custkey, version""".stripMargin),
+    Q("q_pit_join", pitJoin _,
       """WITH v1 AS (SELECT c_custkey, c_mktsegment AS seg FROM customer
         |            WHERE c_custkey % 2 = 0),
         |v2 AS (SELECT c_custkey,
@@ -223,8 +193,32 @@ object Scd {
         |FROM f LEFT JOIN dim d ON f.o_custkey = d.c_custkey
         | AND f.batch >= d.valid_from
         | AND (d.valid_to IS NULL OR f.batch < d.valid_to)
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "q_cdc_merge" ->
+        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin),
+    // planted changelog over orders: every 10th key updated (seq 1),
+    // every 100th then deleted (seq 2 — exercises update-then-delete
+    // ordering), 50 brand-new keys inserted; everyone else passes through
+    Q("q_cdc_merge", { (s, d) =>
+      import org.apache.spark.sql.types.DecimalType
+      val base = Tables.orders(s, d).select(col("o_orderkey").as("k"),
+        col("o_orderstatus").as("status"),
+        col("o_totalprice").cast(DecimalType(18, 2)).as("price"),
+        lit(0L).as("seq"), lit("I").as("op"))
+      val upd = base.filter(col("k") % 10 === 0)
+        .select(col("k"), lit("X").as("status"),
+          (col("price") + 1000).cast(DecimalType(18, 2)).as("price"),
+          lit(1L).as("seq"), lit("U").as("op"))
+      val del = base.filter(col("k") % 100 === 0)
+        .select(col("k"), lit(null).cast("string").as("status"),
+          lit(null).cast(DecimalType(18, 2)).as("price"),
+          lit(2L).as("seq"), lit("D").as("op"))
+      val ins = base.filter(col("k") < 50)
+        .select((col("k") + 900000000L).as("k"), lit("N").as("status"),
+          lit(42.42).cast(DecimalType(18, 2)).as("price"),
+          lit(1L).as("seq"), lit("I").as("op"))
+      cdcApply(base.unionByName(upd).unionByName(del).unionByName(ins), "k")
+        .withColumnRenamed("k", "o_orderkey")
+        .orderBy("o_orderkey")
+    },
       """WITH base AS (
         | SELECT o_orderkey AS k, o_orderstatus AS status,
         |  CAST(o_totalprice AS DECIMAL(18,2)) AS price,
@@ -256,6 +250,6 @@ object Scd {
         |SELECT k AS o_orderkey, status AS final_status,
         | CAST(price AS DOUBLE) AS final_price, n_versions
         |FROM r WHERE rn = 1 AND op <> 'D'
-        |ORDER BY o_orderkey""".stripMargin
+        |ORDER BY o_orderkey""".stripMargin)
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import graft.functions.{ScoredId, TopKPairAggregator}
 import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.DecimalType
   * products run through `zip_with`+`aggregate` (sequential fold →
   * deterministic, codegen'd, no UDF).
   */
-object Similarity {
+object Similarity extends QueryModule {
 
   /** Deterministic ±1 Johnson–Lindenstrauss sign matrix: entry (i, j) is
     * the parity of the first md5 byte of "jl:i:j". Computed once on the
@@ -1242,342 +1242,6 @@ object Similarity {
       .orderBy("query_id")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Robust (coordinate-median) centroid beside the mean, per dim.
-    "q_embed_median" -> { (s, d) => embedMedian(Tables.embeddings(s, d)) },
-    // Between/within variance ratio of the label partition (the
-    // O(N·d) cluster-quality companion to the pairwise silhouette).
-    "q_calinski_harabasz" -> { (s, d) =>
-      calinskiHarabasz(Tables.embeddings(s, d)) },
-    // Linear-kernel MMD² between the label<5 and label≥5 embedding
-    // populations — mean-embedding drift in one d-group pass.
-    "q_mmd_drift" -> { (s, d) =>
-      mmdDrift(Tables.embeddings(s, d), col("label") < 5) },
-    "q_knn_accuracy" -> { (s, d) =>
-      knnAccuracy(Tables.embeddings(s, d)) },
-    "q_hard_negatives" -> { (s, d) =>
-      hardNegatives(Tables.embeddings(s, d)) },
-    // PQ-compressed ADC retrieval (the billion-scale ANN memory path).
-    "q_pq_adc" -> { (s, d) => pqTopK(Tables.embeddings(s, d)) },
-    // ColBERT-style MaxSim over multi-vector docs.
-    "q_late_interaction" -> { (s, d) =>
-      lateInteractionTopK(Tables.embeddings(s, d))
-    },
-    // MMR diversity rerank over the ANN shortlist.
-    "q_mmr_rerank" -> { (s, d) => mmrRerank(Tables.embeddings(s, d)) },
-    // JL ±1 projection 64→8: the distance-preservation audit for the
-    // reduced-space ANN path.
-    "q_jl_projection" -> { (s, d) =>
-      jlDistortionAudit(Tables.embeddings(s, d))
-    },
-    // IVF scale path: centroid assignment + inverted-list probe.
-    "q_sim_topk_ivf" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      ivfTopK(emb.filter(col("vec_id") < 5), emb, 5)
-        .orderBy("query_id", "rank")
-    },
-    // Exact baseline: 5 query vectors vs full corpus, top-5 each.
-    "q_sim_topk_brute" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      bruteForceTopK(emb.filter(col("vec_id") < 5), emb, 5,
-          graft.functions.NativeExpressions.cosineSim(s, _, _))
-        .orderBy("query_id", "rank")
-    },
-    // MATRYOSHKA (MRL) TRUNCATION RECALL — the modern embedding-cost
-    // lever: retrieve with only the first 16 of 64 dims (4× less memory
-    // and dot-product work; at 100 TB the truncated pass is the cheap
-    // first stage, full-dim rescoring runs on its shortlist only) and
-    // report recall@5 per query against the full-dim exact top-k. The
-    // overlap count is an integer and both rankings tie-break on
-    // corpus_id, so the gate is deterministic.
-    "q_sim_topk_mrl" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val dims = 16
-      val cosN = graft.functions.NativeExpressions.cosineSim(s, _: Column, _: Column)
-      val full = bruteForceTopK(emb.filter(col("vec_id") < 5), emb, 5, cosN)
-      val trunc = bruteForceTopK(
-        emb.filter(col("vec_id") < 5)
-          .withColumn("embedding", slice(col("embedding"), 1, dims)),
-        emb.withColumn("embedding", slice(col("embedding"), 1, dims)), 5, cosN)
-      val hits = full.select("query_id", "corpus_id")
-        .intersect(trunc.select("query_id", "corpus_id"))
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      full.select("query_id").distinct()
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / 5.0, 2).as("recall"))
-        .orderBy("query_id")
-    },
-
-    // The full two-stage pattern q_sim_topk_mrl motivates: a 25-wide
-    // truncated-dim shortlist, then FULL-dim rescoring of shortlist pairs
-    // only (25 per query, not the corpus), top-5 of the rescore. The
-    // expensive full-dim scoring touches 5% of the corpus per query here
-    // — at 100 TB that ratio is the whole point — while recall@5 recovers
-    // most of what raw truncation loses (0.2–0.4 → see gate data).
-    "q_sim_topk_mrl_rescore" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val dims = 16
-      val cosN = graft.functions.NativeExpressions.cosineSim(s, _: Column, _: Column)
-      val exact = bruteForceTopK(emb.filter(col("vec_id") < 5), emb, 5, cosN)
-      val shortlist = bruteForceTopK(
-        emb.filter(col("vec_id") < 5)
-          .withColumn("embedding", slice(col("embedding"), 1, dims)),
-        emb.withColumn("embedding", slice(col("embedding"), 1, dims)), 25, cosN)
-      val qv = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      val cv = emb.select(col("vec_id").as("corpus_id"), col("embedding").as("c_emb"))
-      val rescored = shortlist.select("query_id", "corpus_id")
-        .join(broadcast(qv), Seq("query_id"))
-        .join(cv, Seq("corpus_id"))
-        .select(col("query_id"), col("corpus_id"),
-          round(cosN(col("q_emb"), col("c_emb")), 6).as("sim"))
-      val hits = exact.select("query_id", "corpus_id")
-        .intersect(topKPerQuery(rescored, 5).select("query_id", "corpus_id"))
-        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
-      exact.select("query_id").distinct()
-        .join(hits, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
-          round(coalesce(col("n_hit"), lit(0L)) / 5.0, 2).as("recall"))
-        .orderBy("query_id")
-    },
-
-    // Scale path: same queries, bucket-pruned search.
-    "q_sim_topk_lsh" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      lshTopK(emb.filter(col("vec_id") < 5), emb, 5,
-          cosineFn = graft.functions.NativeExpressions.cosineSim(s, _, _))
-        .orderBy("query_id", "rank")
-    },
-    // Embedding-cosine near-dup: pairs above threshold within buckets,
-    // over the PLANTED corpus (last-coordinate flips of the first 20
-    // vectors) so the oracle compares real pairs at every SF. Bucket
-    // width derives from corpus size (adaptiveSignBits) — one cheap
-    // count job; at the gated scales (≤ 2020 rows) it resolves to the
-    // 8-bit floor the static oracle encodes.
-    "q_sim_near_dup" -> { (s, d) =>
-      val emb = plantedEmbeddings(Tables.embeddings(s, d))
-      val head = emb.agg(count(lit(1)), max(size(col("embedding")))).head()
-      val bits = adaptiveSignBits(head.getLong(0), head.getInt(1))
-      embeddingNearDups(emb, 0.95, bits,
-          cosineFn = graft.functions.NativeExpressions.cosineSim(s, _, _))
-        .orderBy("id_a", "id_b")
-    },
-    // Dominant principal direction of the embedding corpus (fixed-point
-    // Gram + deterministic power iteration).
-    "q_pca_top" -> { (s, d) =>
-      pcaTopComponent(Tables.embeddings(s, d))
-    },
-    // Top-2 PCA subspace by orthogonal iteration (Gram–Schmidt QR per
-    // step) on the q_pca_top fixed-point Gram; unit-L2 loadings +
-    // uncentered variance shares.
-    "q_pca_subspace" -> { (s, d) =>
-      pcaSubspace(Tables.embeddings(s, d))
-    },
-    // Linear-kernel MMD² drift between every embedding label-group pair
-    // (exact integer numerator, one shared division tree).
-    "q_embed_mmd" -> { (s, d) => embedMmd(Tables.embeddings(s, d)) },
-    // 2-D projection onto the pcaSubspace components (audit slice;
-    // exact integer dot products against frozen loadings).
-    "q_pca_project" -> { (s, d) => pcaProject(Tables.embeddings(s, d)) },
-    // Full Lloyd k-means (3 rounds, k=4) in exact integer state — the
-    // multi-iteration extension of the single Lloyd step q_semantic_dedup
-    // runs; oracle replays every round.
-    "q_kmeans" -> { (s, d) => kmeans(Tables.embeddings(s, d)) },
-    // IVF INDEX APPEND — the maintenance path every deployed ANN index
-    // lives on: new vectors (vec_id ≥ 400, the incoming batch) are
-    // assigned to the FROZEN centroids trained on the base slice —
-    // no recluster, no index rebuild, exactly how FAISS/ScaNN serve
-    // appends between retrains. The per-list growth report
-    // (n_new / n_base ppm) is the retrain trigger: a list growing far
-    // faster than its peers means the incoming distribution drifted
-    // off the trained quantizer (pairs with q_psi_drift on content).
-    // Centroids are driver state (k·dim Longs — dimension-class, the
-    // q_kmeans precedent); assignment is one codegen'd map pass over
-    // the corpus; the rollup is k rows. Integer-exact end to end.
-    "q_ivf_append" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val rep = kmeans(emb.filter(col("vec_id") < 400), k = 4, iters = 3)
-        .collect()
-      val cents: Seq[(Int, Array[Long])] = rep.groupBy(_.getInt(0))
-        .map { case (cid, rows) =>
-          (cid, rows.sortBy(_.getInt(1)).map(_.getLong(2)).toArray)
-        }.toSeq.sortBy(_._1)
-      val q = emb.select(col("vec_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * 1048576).cast("long")).as("q"))
-      val centArr = array(cents.map { case (cid, c) =>
-        val carr = array(c.map(lit).toIndexedSeq: _*)
-        struct(
-          aggregate(zip_with(col("q"), carr, (a, b) => (a - b) * (a - b)),
-            lit(0L), (acc, x) => acc + x).as("d2"),
-          lit(cid).as("cid"))
-      }.toIndexedSeq: _*)
-      q.select(col("vec_id"), array_min(centArr).getField("cid").as("cid"))
-        .groupBy("cid")
-        .agg(sum(when(col("vec_id") < 400, 1L).otherwise(0L)).as("n_base"),
-          sum(when(col("vec_id") >= 400, 1L).otherwise(0L)).as("n_new"))
-        .withColumn("growth_ppm",
-          expr("n_new * 1000000 div greatest(n_base, 1L)"))
-        .orderBy("cid")
-    },
-    // ANN QUALITY EVAL — recall@k of the sign-LSH index against the
-    // exact brute-force ranking (the q_dedup_eval measurement applied to
-    // retrieval: every index rollout reports this number before the
-    // exact path is retired). Both sides are the gated operators
-    // themselves; the eval is two k-row-per-query frames joined on
-    // (query_id, corpus_id) — nothing beyond the retrievals' own cost.
-    "q_ann_recall" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val cosF = graft.functions.NativeExpressions.cosineSim(s, _: Column, _: Column)
-      val q = emb.filter(col("vec_id") < 5)
-      val brute = bruteForceTopK(q, emb, 5, cosF)
-        .select(col("query_id"), col("corpus_id"))
-      val lsh = lshTopK(q, emb, 5, cosineFn = cosF)
-        .select(col("query_id"), col("corpus_id"), lit(1).as("hit"))
-      brute.join(lsh, Seq("query_id", "corpus_id"), "left")
-        .groupBy("query_id")
-        .agg(count(col("hit")).as("hits"),
-          round(count(col("hit")).cast("double") / 5, 6).as("recall_at_5"))
-        .orderBy("query_id")
-    },
-    // RANK-BIASED OVERLAP between the IVF ranking and the exact brute
-    // ranking (Webber, Moffat & Zobel 2010) — recall@k (q_ann_recall)
-    // says WHETHER the right ids surface; RBO says whether they surface
-    // in the right ORDER, weighting agreement at rank 1 most (p = 0.9
-    // geometric decay). Reported as the truncated-depth lower bound
-    // (RBO_min at d = 5). Determinism: the p^(k−1) weights are Scala
-    // doubles computed once at plan build and embedded as IDENTICAL
-    // literals in both engines (never an in-engine pow); each depth
-    // term rounds to 9dp DECIMAL before the per-query fold. Scale: both
-    // rankings are k-bounded per query, the agreement join is on
-    // (query, corpus) ids, and the depth explode is k× a k-bounded
-    // frame.
-    "q_rbo" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      val cosF = graft.functions.NativeExpressions
-        .cosineSim(s, _: Column, _: Column)
-      val q = emb.filter(col("vec_id") < 5)
-      val a = bruteForceTopK(q, emb, 5, cosF)
-        .select(col("query_id"), col("corpus_id"), col("rank").as("ra"))
-      val b = ivfTopK(q, emb, 5)
-        .select(col("query_id"), col("corpus_id"), col("rank").as("rb"))
-      val pairs = a.join(b, Seq("query_id", "corpus_id"))
-        .select(col("query_id"), greatest(col("ra"), col("rb")).as("m"))
-      val depths = 1 to 5
-      val p = 0.9
-      val wCol = depths.tail
-        .foldLeft(when(col("k") === 1, lit(1.0))) { (acc, k) =>
-          acc.when(col("k") === k, lit(math.pow(p, k - 1)))
-        }
-      val ov = pairs
-        .select(col("query_id"),
-          explode(array(depths.map(lit): _*)).as("k"), col("m"))
-        .groupBy("query_id", "k")
-        .agg(sum(when(col("m") <= col("k"), 1L).otherwise(0L)).as("ov"))
-      val terms = ov
-        .select(col("query_id"), col("k"), col("ov"),
-          round(wCol * (col("ov").cast("double") / col("k").cast("double")),
-            9).cast(DecimalType(18, 9)).as("term"))
-        .groupBy("query_id")
-        .agg(max(when(col("k") === 5, col("ov"))).as("ov5"),
-          sum(col("term")).as("ts"))
-      q.select(col("vec_id").as("query_id")).join(terms, Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("ov5"), lit(0L)).as("overlap_at_5"),
-          coalesce(round(lit(1.0 - p) * col("ts").cast("double"), 6),
-            lit(0.0)).as("rbo_min"))
-        .orderBy("query_id")
-    },
-
-    // NDCG@10 + MRR of the sign-LSH index against the exact brute
-    // ranking — the GRADED companion of q_ann_recall (set overlap) and
-    // q_rbo (order agreement): relevance = 11 − ideal rank (integer
-    // gains off the brute top-10), so a candidate list that surfaces
-    // the right ids but buries the best ones scores low. Determinism:
-    // the 1/log2(p+1) discounts, the 1/p reciprocals, and the constant
-    // flat-gain IDCG@10 are Scala doubles computed once at plan build
-    // and embedded as IDENTICAL literals in both engines (the q_rbo
-    // weight idiom); each DCG term rounds to 9dp DECIMAL before the
-    // per-query fold. Scale: both rankings are k-bounded per query and
-    // the relevance join is on (query, corpus) ids.
-    "q_ndcg" -> { (s, d) => ndcgEval(s, Tables.embeddings(s, d)) },
-
-    // Centroid-silhouette quality report on the label clustering.
-    "q_silhouette" -> { (s, d) => silhouette(Tables.embeddings(s, d)) },
-    // EMBEDDING NORM AUDIT — the broken-vector detector every embedding
-    // ingest runs (all-zero rows from failed encoders, exploding norms
-    // from unnormalized checkpoints skew cosine math downstream).
-    // Per-row norms are a map-side HOF fold (same parity basis as the
-    // cosine everywhere else); per-label stats fold 6dp norms as
-    // DECIMAL so the mean is aggregation-order-independent.
-    "q_embed_norms" -> { (s, d) =>
-      val norm6 = round(
-        sqrt(aggregate(col("embedding"),
-          lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double"))), 6)
-      Tables.embeddings(s, d)
-        .select(col("label"), norm6.as("norm"))
-        .groupBy("label")
-        .agg(count(lit(1)).as("n"),
-          min(col("norm")).as("min_norm"),
-          max(col("norm")).as("max_norm"),
-          round(sum(col("norm").cast(DecimalType(12, 6))).cast("double") /
-            count(lit(1)), 6).as("avg_norm"),
-          sum(when(col("norm") < 0.01, 1L).otherwise(0L)).as("n_tiny"))
-        .orderBy("label")
-    },
-    // SemDeDup: cluster-then-prune semantic dedup over the planted corpus
-    // (assignment from the labeled corpus' centroids; planted flips land
-    // in their original's cluster and prune against it at τ=0.95).
-    "q_semantic_dedup" -> { (s, d) =>
-      val labeled = Tables.embeddings(s, d)
-      semanticDedup(plantedEmbeddings(labeled), labeled, 0.95,
-        graft.functions.NativeExpressions.cosineSim(s, _, _))
-    },
-    // IVF centroid-build primitive: per-label, per-dimension accumulation
-    // in FIXED-POINT (floor(x·2^20) — a power-of-two scale is exact in
-    // binary floating point, so the floor is tie-free and the Long sums
-    // are order-independent: the cross-engine-deterministic way to reduce
-    // float vectors; a raw double Σ would drift with partial-agg order).
-    // posexplode is map-side; one shuffle on (label, dim) — k·d groups.
-    "q_embed_centroids" -> { (s, d) =>
-      Tables.embeddings(s, d)
-        .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "x")))
-        .filter(col("dim") < 8)
-        .select(col("label"), col("dim").cast("long").as("dim"),
-          floor(col("x").cast("double") * 1048576).cast("long").as("q"))
-        .groupBy("label", "dim")
-        .agg(count(lit(1)).as("n"), sum(col("q")).as("sum_q"))
-        .orderBy("label", "dim")
-    },
-    // Inter-cluster similarity matrix: cosine between every pair of
-    // per-label centroids — the "are these two clusters really distinct"
-    // report after any clustering/labeling pass. The corpus collapses
-    // map-side to label×dim exact-decimal sums (the q_sim_topk_ivf
-    // centroid recipe); everything after is label²-sized, with the
-    // ordered centroid arrays making the cosine fold order identical on
-    // both engines.
-    "q_centroid_sim" -> { (s, d) =>
-      val cent = Tables.embeddings(s, d)
-        .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "x")))
-        .groupBy("label", "dim")
-        .agg((sum(col("x").cast(DecimalType(18, 9))).cast("double") /
-          count(lit(1))).as("c"))
-        .groupBy("label")
-        .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
-          e => e.getField("c")).as("centroid"))
-      cent.select(col("label").as("label_a"), col("centroid").as("ea"))
-        .crossJoin(broadcast(
-          cent.select(col("label").as("label_b"), col("centroid").as("eb"))))
-        .filter(col("label_a") < col("label_b"))
-        .select(col("label_a"), col("label_b"),
-          round(cosine(col("ea"), col("eb")), 6).as("csim"))
-        .orderBy("label_a", "label_b")
-    }
-  )
-
   /** DuckDB oracles replicate the double-precision cosine explicitly
     * (list_transform to DOUBLE + list_sum), matching Spark's fold.
     */
@@ -1762,30 +1426,9 @@ object Similarity {
        |$itCtes""".stripMargin
   }
 
-  def oracles: Map[String, String] = Map(
-    // same subspace replay, same ⌊v·10⁶ + 0.5⌋ loading freeze (identical
-    // floor spelling), same exact integer projection dot products
-    "q_pca_project" -> {
-      val iters = 10
-      s"""WITH ${pcaSubspaceCtesSql(iters)},
-         |lq AS (SELECT
-         |  list_transform(v1, x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT)) AS l1,
-         |  list_transform(v2, x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT)) AS l2
-         | FROM v$iters),
-         |pv AS (
-         | SELECT vec_id, list_transform(embedding,
-         |  x -> CAST(floor(CAST(x AS DOUBLE) * 1048576) AS BIGINT)) AS qv
-         | FROM embeddings WHERE vec_id < 20)
-         |SELECT vec_id,
-         | round(CAST(list_sum(list_transform(list_zip(qv, l1),
-         |   p -> p[1] * p[2])) AS DOUBLE) / 1048576.0 / 1000000.0, 6)
-         |  AS proj1,
-         | round(CAST(list_sum(list_transform(list_zip(qv, l2),
-         |   p -> p[1] * p[2])) AS DOUBLE) / 1048576.0 / 1000000.0, 6)
-         |  AS proj2
-         |FROM pv CROSS JOIN lq ORDER BY vec_id""".stripMargin
-    },
-    "q_embed_median" ->
+  def entries: Seq[Q] = Seq(
+    // Robust (coordinate-median) centroid beside the mean, per dim.
+    Q("q_embed_median", { (s, d) => embedMedian(Tables.embeddings(s, d)) },
       """WITH qv AS (
         | SELECT i - 1 AS dim,
         |  CAST(floor(CAST(embedding[i] AS DOUBLE) * 1048576) AS BIGINT)
@@ -1809,8 +1452,11 @@ object Similarity {
         |SELECT CAST(dim AS BIGINT) AS dim, n AS n_vectors,
         | round(CAST(mq AS DOUBLE) / 1048576.0, 6) AS median_coord,
         | round(CAST(sq AS DOUBLE) / n / 1048576.0, 6) AS mean_coord
-        |FROM med JOIN tot USING (dim) ORDER BY dim""".stripMargin,
-    "q_calinski_harabasz" ->
+        |FROM med JOIN tot USING (dim) ORDER BY dim""".stripMargin),
+    // Between/within variance ratio of the label partition (the
+    // O(N·d) cluster-quality companion to the pairwise silhouette).
+    Q("q_calinski_harabasz", { (s, d) =>
+      calinskiHarabasz(Tables.embeddings(s, d)) },
       """WITH g AS (
         | SELECT label, i - 1 AS dim, count(*) AS n,
         |  CAST(sum(CAST(floor(CAST(embedding[i] AS DOUBLE) * 1048576)
@@ -1846,8 +1492,11 @@ object Similarity {
         | round(b / 1.099511627776e12, 6) AS b_ss,
         | round((b / CAST(k - 1 AS DOUBLE))
         |   / (w / CAST(n - k AS DOUBLE)), 6) AS ch_index
-        |FROM fin CROSS JOIN kf""".stripMargin,
-    "q_mmd_drift" ->
+        |FROM fin CROSS JOIN kf""".stripMargin),
+    // Linear-kernel MMD² between the label<5 and label≥5 embedding
+    // populations — mean-embedding drift in one d-group pass.
+    Q("q_mmd_drift", { (s, d) =>
+      mmdDrift(Tables.embeddings(s, d), col("label") < 5) },
       """WITH t AS (
         | SELECT i - 1 AS dim,
         |  sum(CASE WHEN label < 5
@@ -1872,9 +1521,10 @@ object Similarity {
         | round(CAST(n_ref * n_cur AS DOUBLE)
         |   / CAST(n_ref + n_cur AS DOUBLE) * CAST(mmd2d AS DOUBLE), 6)
         |  AS stat_neff
-        |FROM agg""".stripMargin,
+        |FROM agg""".stripMargin),
     // 1-NN eval: same cosine, argmax by (sim desc, id asc), per-label
-    "q_knn_accuracy" ->
+    Q("q_knn_accuracy", { (s, d) =>
+      knnAccuracy(Tables.embeddings(s, d)) },
       s"""WITH q AS (
          | SELECT vec_id AS query_id, embedding AS q_emb, label AS q_label
          | FROM embeddings WHERE vec_id < 50),
@@ -1895,9 +1545,10 @@ object Similarity {
          |  AS n_correct,
          | CAST(sum(CASE WHEN pred = q_label THEN 1 ELSE 0 END)
          |  * 1000000 // count(*) AS BIGINT) AS accuracy_ppm
-         |FROM pred GROUP BY 1 ORDER BY 1""".stripMargin,
+         |FROM pred GROUP BY 1 ORDER BY 1""".stripMargin),
     // hard negatives: same cosine, argmax by (sim desc, id asc)
-    "q_hard_negatives" ->
+    Q("q_hard_negatives", { (s, d) =>
+      hardNegatives(Tables.embeddings(s, d)) },
       s"""WITH q AS (
          | SELECT vec_id AS query_id, embedding AS q_emb, label AS q_label
          | FROM embeddings WHERE vec_id < 10),
@@ -1913,11 +1564,15 @@ object Similarity {
          | FROM sc)
          |SELECT query_id, q_label, corpus_id AS neg_id,
          | c_label AS neg_label, sim
-         |FROM r WHERE rn = 1 ORDER BY query_id""".stripMargin,
+         |FROM r WHERE rn = 1 ORDER BY query_id""".stripMargin),
+    // PQ-compressed ADC retrieval (the billion-scale ANN memory path).
     // PQ/ADC twin: 4 × (integer Lloyd replay) + coding + table scoring
-    "q_pq_adc" -> pqOracleSql(),
+    Q("q_pq_adc", { (s, d) => pqTopK(Tables.embeddings(s, d)) }, pqOracleSql()),
+    // ColBERT-style MaxSim over multi-vector docs.
     // MaxSim twin: same quantized integer dots, max-then-sum, ranked
-    "q_late_interaction" ->
+    Q("q_late_interaction", { (s, d) =>
+      lateInteractionTopK(Tables.embeddings(s, d))
+    },
       """WITH base AS (
         | SELECT vec_id // 8 AS doc, vec_id AS vid,
         |  list_transform(embedding,
@@ -1937,10 +1592,11 @@ object Similarity {
         | SELECT qdoc, doc, score,
         |  CAST(row_number() OVER (PARTITION BY qdoc ORDER BY score DESC, doc)
         |   AS INTEGER) AS rank
-        | FROM sc) WHERE rank <= 10 ORDER BY qdoc, rank""".stripMargin,
+        | FROM sc) WHERE rank <= 10 ORDER BY qdoc, rank""".stripMargin),
+    // MMR diversity rerank over the ANN shortlist.
     // MMR twin: k greedy steps unrolled as CTEs; every score is an exact
     // BIGINT (quantized dots), so argmax + tie-breaks replay bit-for-bit
-    "q_mmr_rerank" -> {
+    Q("q_mmr_rerank", { (s, d) => mmrRerank(Tables.embeddings(s, d)) }, {
       val k = 5
       def stepSql(t: Int): String =
         s"""cand$t AS (
@@ -1998,9 +1654,13 @@ object Similarity {
          |SELECT qid, rank, cid, score AS mmr_score
          |FROM (SELECT * FROM sel1 $unions)
          |ORDER BY qid, rank""".stripMargin
-    },
+    }),
+    // JL ±1 projection 64→8: the distance-preservation audit for the
+    // reduced-space ANN path.
     // JL twin: the SAME driver-computed ±1 literals, exact Long sums
-    "q_jl_projection" -> {
+    Q("q_jl_projection", { (s, d) =>
+      jlDistortionAudit(Tables.embeddings(s, d))
+    }, {
       val signs = jlSigns(8, 64)
       def projExpr(i: Int): String =
         "(CAST(0 AS BIGINT) " + (0 until 64).map { j =>
@@ -2033,89 +1693,217 @@ object Similarity {
          | round(min(ratio), 6) AS min_ratio,
          | round(max(ratio), 6) AS max_ratio
          |FROM pr""".stripMargin
+    }),
+    // IVF scale path: centroid assignment + inverted-list probe.
+    Q("q_sim_topk_ivf", { (s, d) =>
+      val emb = Tables.embeddings(s, d)
+      ivfTopK(emb.filter(col("vec_id") < 5), emb, 5)
+        .orderBy("query_id", "rank")
     },
-    "q_embed_norms" ->
-      """WITH r AS (
-        | SELECT label,
-        |  round(sqrt(list_sum(list_transform(embedding,
-        |    v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))), 6) AS norm
-        | FROM embeddings)
-        |SELECT label, count(*) AS n,
-        | min(norm) AS min_norm, max(norm) AS max_norm,
-        | round(CAST(sum(CAST(norm AS DECIMAL(12,6))) AS DOUBLE) / count(*), 6)
-        |  AS avg_norm,
-        | CAST(sum(CASE WHEN norm < 0.01 THEN 1 ELSE 0 END) AS BIGINT) AS n_tiny
-        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_silhouette" ->
       s"""WITH cents AS (
-         | SELECT label AS clabel, list(c ORDER BY i) AS centroid FROM (
+         | SELECT label, list(c ORDER BY i) AS centroid FROM (
          |  SELECT label, i,
          |   CAST(sum(CAST(embedding[i] AS DECIMAL(18,9))) AS DOUBLE)/count(*) AS c
          |  FROM embeddings CROSS JOIN unnest(range(1, len(embedding)+1)) AS t(i)
          |  GROUP BY label, i)
          | GROUP BY label),
+         |q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 5),
+         |assigned AS (
+         | SELECT query_id, q_emb, label, round(${cosSql("q_emb", "centroid")}, 6) AS csim
+         | FROM q CROSS JOIN cents),
+         |probe AS (
+         | SELECT query_id, q_emb, label FROM (
+         |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY csim DESC, label) AS rn
+         |  FROM assigned) WHERE rn = 1),
          |scored AS (
-         | SELECT e.vec_id, e.label, c.clabel,
-         |  round(${cosSql("e.embedding", "c.centroid")}, 6) AS csim
-         | FROM embeddings e CROSS JOIN cents c),
-         |pv AS (
-         | SELECT vec_id, label,
-         |  max(CASE WHEN clabel = label THEN csim END) AS a_sim,
-         |  max(CASE WHEN clabel <> label THEN csim END) AS b_sim
-         | FROM scored GROUP BY 1, 2)
-         |SELECT label, count(*) AS n,
-         | round(CAST(sum(CAST(round(a_sim - b_sim, 6) AS DECIMAL(12,6)))
-         |   AS DOUBLE) / count(*), 6) AS avg_margin
-         |FROM pv GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_ivf_append" -> {
-      val iters = (1 to 3).map(kmeansIterSql(_, 64)).mkString(",\n")
-      s"""WITH emb AS (
-         | SELECT vec_id, list_transform(embedding,
-         |   x -> CAST(floor(CAST(x AS DOUBLE) * 1048576) AS BIGINT)) AS q
-         | FROM embeddings WHERE vec_id < 400),
-         |c0 AS (
-         | SELECT CAST(vec_id AS INT) AS cid, q AS c FROM emb WHERE vec_id < 4),
-         |$iters,
-         |emball AS (
-         | SELECT vec_id, list_transform(embedding,
-         |   x -> CAST(floor(CAST(x AS DOUBLE) * 1048576) AS BIGINT)) AS q
-         | FROM embeddings),
-         |da AS (
-         | SELECT e.vec_id, c.cid,
-         |  list_sum(list_transform(range(1, 65),
-         |    i -> (e.q[i] - c.c[i]) * (e.q[i] - c.c[i]))) AS d2
-         | FROM emball e, c3 c),
-         |aa AS (
-         | SELECT vec_id, cid FROM (
-         |  SELECT vec_id, cid,
-         |   row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-         |  FROM da) WHERE rn = 1)
-         |SELECT cid,
-         | CAST(sum(CASE WHEN vec_id < 400 THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
-         | CAST(sum(CASE WHEN vec_id >= 400 THEN 1 ELSE 0 END) AS BIGINT) AS n_new,
-         | CAST(sum(CASE WHEN vec_id >= 400 THEN 1 ELSE 0 END) AS BIGINT)
-         |  * 1000000 // greatest(
-         |   CAST(sum(CASE WHEN vec_id < 400 THEN 1 ELSE 0 END) AS BIGINT), 1)
-         |  AS growth_ppm
-         |FROM aa GROUP BY cid ORDER BY cid""".stripMargin
+         | SELECT query_id, corpus_id, round(${cosSql("q_emb", "c_emb")}, 6) AS sim
+         | FROM (SELECT vec_id AS corpus_id, embedding AS c_emb, label FROM embeddings) c
+         | JOIN probe USING (label)),
+         |ranked AS (
+         | SELECT query_id, corpus_id, sim,
+         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
+         | FROM scored)
+         |SELECT * FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // Exact baseline: 5 query vectors vs full corpus, top-5 each.
+    Q("q_sim_topk_brute", { (s, d) =>
+      val emb = Tables.embeddings(s, d)
+      bruteForceTopK(emb.filter(col("vec_id") < 5), emb, 5,
+          graft.functions.NativeExpressions.cosineSim(s, _, _))
+        .orderBy("query_id", "rank")
     },
-    "q_kmeans" -> {
-      val iters = (1 to 3).map(kmeansIterSql(_, 64)).mkString(",\n")
-      s"""WITH emb AS (
-         | SELECT vec_id, list_transform(embedding,
-         |   x -> CAST(floor(CAST(x AS DOUBLE) * 1048576) AS BIGINT)) AS q
-         | FROM embeddings),
-         |c0 AS (
-         | SELECT CAST(vec_id AS INT) AS cid, q AS c FROM emb WHERE vec_id < 4),
-         |$iters,
-         |sz AS (SELECT cid, count(*) AS n FROM a3 GROUP BY 1)
-         |SELECT c3.cid AS cluster_id, CAST(t.i AS INT) AS di, c3.c[t.i] AS c,
-         | COALESCE(sz.n, 0) AS n
-         |FROM c3 CROSS JOIN range(1, 65) t(i)
-         |LEFT JOIN sz ON c3.cid = sz.cid
-         |ORDER BY cluster_id, di""".stripMargin
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 5),
+         |c AS (SELECT vec_id AS corpus_id, embedding AS c_emb FROM embeddings),
+         |scored AS (
+         | SELECT query_id, corpus_id, round(${cosSql("q_emb", "c_emb")}, 6) AS sim
+         | FROM c CROSS JOIN q),
+         |ranked AS (
+         | SELECT query_id, corpus_id, sim,
+         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
+         | FROM scored)
+         |SELECT * FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // MATRYOSHKA (MRL) TRUNCATION RECALL — the modern embedding-cost
+    // lever: retrieve with only the first 16 of 64 dims (4× less memory
+    // and dot-product work; at 100 TB the truncated pass is the cheap
+    // first stage, full-dim rescoring runs on its shortlist only) and
+    // report recall@5 per query against the full-dim exact top-k. The
+    // overlap count is an integer and both rankings tie-break on
+    // corpus_id, so the gate is deterministic.
+    Q("q_sim_topk_mrl", { (s, d) =>
+      val emb = Tables.embeddings(s, d)
+      val dims = 16
+      val cosN = graft.functions.NativeExpressions.cosineSim(s, _: Column, _: Column)
+      val full = bruteForceTopK(emb.filter(col("vec_id") < 5), emb, 5, cosN)
+      val trunc = bruteForceTopK(
+        emb.filter(col("vec_id") < 5)
+          .withColumn("embedding", slice(col("embedding"), 1, dims)),
+        emb.withColumn("embedding", slice(col("embedding"), 1, dims)), 5, cosN)
+      val hits = full.select("query_id", "corpus_id")
+        .intersect(trunc.select("query_id", "corpus_id"))
+        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
+      full.select("query_id").distinct()
+        .join(hits, Seq("query_id"), "left")
+        .select(col("query_id"),
+          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
+          round(coalesce(col("n_hit"), lit(0L)) / 5.0, 2).as("recall"))
+        .orderBy("query_id")
     },
-    "q_pca_top" -> {
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 5),
+         |c AS (SELECT vec_id AS corpus_id, embedding AS c_emb FROM embeddings),
+         |full_ranked AS (
+         | SELECT query_id, corpus_id,
+         |  CAST(row_number() OVER (PARTITION BY query_id
+         |    ORDER BY round(${cosSql("q_emb", "c_emb")}, 6) DESC, corpus_id) AS INTEGER) AS rank
+         | FROM c CROSS JOIN q),
+         |trunc_ranked AS (
+         | SELECT query_id, corpus_id,
+         |  CAST(row_number() OVER (PARTITION BY query_id
+         |    ORDER BY round(${cosSql("q_emb[1:16]", "c_emb[1:16]")}, 6) DESC, corpus_id) AS INTEGER) AS rank
+         | FROM c CROSS JOIN q),
+         |hits AS (
+         | SELECT f.query_id, count(*) AS n_hit
+         | FROM (SELECT query_id, corpus_id FROM full_ranked WHERE rank <= 5) f
+         | JOIN (SELECT query_id, corpus_id FROM trunc_ranked WHERE rank <= 5) t
+         |  USING (query_id, corpus_id)
+         | GROUP BY 1)
+         |SELECT q.query_id, coalesce(n_hit, 0) AS n_hit,
+         | round(coalesce(n_hit, 0) / 5.0, 2) AS recall
+         |FROM (SELECT DISTINCT query_id FROM q) q LEFT JOIN hits USING (query_id)
+         |ORDER BY query_id""".stripMargin),
+
+    // The full two-stage pattern q_sim_topk_mrl motivates: a 25-wide
+    // truncated-dim shortlist, then FULL-dim rescoring of shortlist pairs
+    // only (25 per query, not the corpus), top-5 of the rescore. The
+    // expensive full-dim scoring touches 5% of the corpus per query here
+    // — at 100 TB that ratio is the whole point — while recall@5 recovers
+    // most of what raw truncation loses (0.2–0.4 → see gate data).
+    Q("q_sim_topk_mrl_rescore", { (s, d) =>
+      val emb = Tables.embeddings(s, d)
+      val dims = 16
+      val cosN = graft.functions.NativeExpressions.cosineSim(s, _: Column, _: Column)
+      val exact = bruteForceTopK(emb.filter(col("vec_id") < 5), emb, 5, cosN)
+      val shortlist = bruteForceTopK(
+        emb.filter(col("vec_id") < 5)
+          .withColumn("embedding", slice(col("embedding"), 1, dims)),
+        emb.withColumn("embedding", slice(col("embedding"), 1, dims)), 25, cosN)
+      val qv = emb.filter(col("vec_id") < 5)
+        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+      val cv = emb.select(col("vec_id").as("corpus_id"), col("embedding").as("c_emb"))
+      val rescored = shortlist.select("query_id", "corpus_id")
+        .join(broadcast(qv), Seq("query_id"))
+        .join(cv, Seq("corpus_id"))
+        .select(col("query_id"), col("corpus_id"),
+          round(cosN(col("q_emb"), col("c_emb")), 6).as("sim"))
+      val hits = exact.select("query_id", "corpus_id")
+        .intersect(topKPerQuery(rescored, 5).select("query_id", "corpus_id"))
+        .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
+      exact.select("query_id").distinct()
+        .join(hits, Seq("query_id"), "left")
+        .select(col("query_id"),
+          coalesce(col("n_hit"), lit(0L)).as("n_hit"),
+          round(coalesce(col("n_hit"), lit(0L)) / 5.0, 2).as("recall"))
+        .orderBy("query_id")
+    },
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 5),
+         |c AS (SELECT vec_id AS corpus_id, embedding AS c_emb FROM embeddings),
+         |full_ranked AS (
+         | SELECT query_id, corpus_id,
+         |  CAST(row_number() OVER (PARTITION BY query_id
+         |    ORDER BY round(${cosSql("q_emb", "c_emb")}, 6) DESC, corpus_id) AS INTEGER) AS rank
+         | FROM c CROSS JOIN q),
+         |short_ranked AS (
+         | SELECT query_id, corpus_id,
+         |  CAST(row_number() OVER (PARTITION BY query_id
+         |    ORDER BY round(${cosSql("q_emb[1:16]", "c_emb[1:16]")}, 6) DESC, corpus_id) AS INTEGER) AS rank
+         | FROM c CROSS JOIN q),
+         |rescored AS (
+         | SELECT s.query_id, s.corpus_id,
+         |  CAST(row_number() OVER (PARTITION BY s.query_id
+         |    ORDER BY round(${cosSql("q.q_emb", "c.c_emb")}, 6) DESC, s.corpus_id) AS INTEGER) AS rank
+         | FROM (SELECT query_id, corpus_id FROM short_ranked WHERE rank <= 25) s
+         | JOIN q USING (query_id) JOIN c USING (corpus_id)),
+         |hits AS (
+         | SELECT f.query_id, count(*) AS n_hit
+         | FROM (SELECT query_id, corpus_id FROM full_ranked WHERE rank <= 5) f
+         | JOIN (SELECT query_id, corpus_id FROM rescored WHERE rank <= 5) t
+         |  USING (query_id, corpus_id)
+         | GROUP BY 1)
+         |SELECT q.query_id, coalesce(n_hit, 0) AS n_hit,
+         | round(coalesce(n_hit, 0) / 5.0, 2) AS recall
+         |FROM (SELECT DISTINCT query_id FROM q) q LEFT JOIN hits USING (query_id)
+         |ORDER BY query_id""".stripMargin),
+
+    // Scale path: same queries, bucket-pruned search.
+    Q("q_sim_topk_lsh", { (s, d) =>
+      val emb = Tables.embeddings(s, d)
+      lshTopK(emb.filter(col("vec_id") < 5), emb, 5,
+          cosineFn = graft.functions.NativeExpressions.cosineSim(s, _, _))
+        .orderBy("query_id", "rank")
+    },
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb,
+         |  ${bucketSql("embedding")} AS bucket FROM embeddings WHERE vec_id < 5),
+         |c AS (SELECT vec_id AS corpus_id, embedding AS c_emb,
+         |  ${bucketSql("embedding")} AS bucket FROM embeddings),
+         |scored AS (
+         | SELECT query_id, corpus_id, round(${cosSql("q_emb", "c_emb")}, 6) AS sim
+         | FROM c JOIN q USING (bucket)),
+         |ranked AS (
+         | SELECT query_id, corpus_id, sim,
+         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
+         | FROM scored)
+         |SELECT * FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // Embedding-cosine near-dup: pairs above threshold within buckets,
+    // over the PLANTED corpus (last-coordinate flips of the first 20
+    // vectors) so the oracle compares real pairs at every SF. Bucket
+    // width derives from corpus size (adaptiveSignBits) — one cheap
+    // count job; at the gated scales (≤ 2020 rows) it resolves to the
+    // 8-bit floor the static oracle encodes.
+    Q("q_sim_near_dup", { (s, d) =>
+      val emb = plantedEmbeddings(Tables.embeddings(s, d))
+      val head = emb.agg(count(lit(1)), max(size(col("embedding")))).head()
+      val bits = adaptiveSignBits(head.getLong(0), head.getInt(1))
+      embeddingNearDups(emb, 0.95, bits,
+          cosineFn = graft.functions.NativeExpressions.cosineSim(s, _, _))
+        .orderBy("id_a", "id_b")
+    },
+      s"""WITH corpus AS (
+         | SELECT vec_id, embedding FROM embeddings
+         | UNION ALL
+         | SELECT vec_id + 10000000 AS vec_id,
+         |  list_append(embedding[1:len(embedding)-1],
+         |              -embedding[len(embedding)]) AS embedding
+         | FROM embeddings WHERE vec_id < 20),
+         |b AS (SELECT vec_id, embedding, ${bucketSql("embedding")} AS bucket FROM corpus)
+         |SELECT a.vec_id AS id_a, bb.vec_id AS id_b,
+         | round(${cosSql("a.embedding", "bb.embedding")}, 6) AS sim
+         |FROM b a JOIN b bb USING (bucket)
+         |WHERE a.vec_id < bb.vec_id
+         |  AND round(${cosSql("a.embedding", "bb.embedding")}, 6) >= 0.95
+         |ORDER BY id_a, id_b""".stripMargin),
+    // Dominant principal direction of the embedding corpus (fixed-point
+    // Gram + deterministic power iteration).
+    Q("q_pca_top", { (s, d) =>
+      pcaTopComponent(Tables.embeddings(s, d))
+    }, {
       val iters = 10
       val itCtes = (1 to iters).map { k =>
         val prev = s"v${k - 1}"
@@ -2146,37 +1934,15 @@ object Similarity {
          |SELECT CAST(t.i AS INTEGER) AS dim, round(v[t.i + 1], 6) AS loading
          |FROM v$iters CROSS JOIN unnest(range(0, 64)) AS t(i)
          |ORDER BY dim""".stripMargin
-    },
-    // same fixed-point coordinate sums, same exact integer numerator
-    // (HUGEINT stands in for Spark's DECIMAL(38,0) — identical values),
-    // same shared division tree rounded 6dp
-    "q_embed_mmd" ->
-      """WITH q AS (
-        | SELECT label, CAST(i - 1 AS INTEGER) AS dim,
-        |  CAST(sum(CAST(floor(CAST(embedding[i] AS DOUBLE) * 1048576)
-        |   AS BIGINT)) AS BIGINT) AS s
-        | FROM embeddings
-        |  CROSS JOIN unnest(range(1, len(embedding) + 1)) AS t(i)
-        | GROUP BY 1, 2),
-        |n AS (SELECT label, CAST(count(*) AS BIGINT) AS n
-        |      FROM embeddings GROUP BY 1),
-        |m AS (SELECT q.label, dim, s, n FROM q JOIN n USING (label)),
-        |pr AS (
-        | SELECT a.label AS label_a, b.label AS label_b,
-        |  a.n AS na, b.n AS nb,
-        |  sum((CAST(a.s AS HUGEINT) * b.n - CAST(b.s AS HUGEINT) * a.n)
-        |    * (CAST(a.s AS HUGEINT) * b.n - CAST(b.s AS HUGEINT) * a.n))
-        |   AS num
-        | FROM m a JOIN m b ON a.dim = b.dim AND a.label < b.label
-        | GROUP BY 1, 2, 3, 4)
-        |SELECT label_a, label_b, na AS n_a, nb AS n_b,
-        | round(CAST(num AS DOUBLE) / (CAST(na AS DOUBLE) *
-        |  CAST(nb AS DOUBLE) * CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))
-        |  / 1099511627776.0, 6) AS mmd2
-        |FROM pr ORDER BY label_a, label_b""".stripMargin,
+    }),
+    // Top-2 PCA subspace by orthogonal iteration (Gram–Schmidt QR per
+    // step) on the q_pca_top fixed-point Gram; unit-L2 loadings +
+    // uncentered variance shares.
     // same fixed-point Gram, same left-to-right list_sum folds replaying
     // the driver's ascending-index loops, same q1->q2 Gram-Schmidt order
-    "q_pca_subspace" -> {
+    Q("q_pca_subspace", { (s, d) =>
+      pcaSubspace(Tables.embeddings(s, d))
+    }, {
       val iters = 10
       s"""WITH ${pcaSubspaceCtesSql(iters)},
          |fw AS (
@@ -2200,84 +1966,236 @@ object Similarity {
          |  round(v2[t.i + 1], 6) AS loading, round(s2, 6) AS var_share
          | FROM v$iters CROSS JOIN sh CROSS JOIN unnest(range(0, 64)) AS t(i))
          |ORDER BY pc, dim""".stripMargin
+    }),
+    // Linear-kernel MMD² drift between every embedding label-group pair
+    // (exact integer numerator, one shared division tree).
+    // same fixed-point coordinate sums, same exact integer numerator
+    // (HUGEINT stands in for Spark's DECIMAL(38,0) — identical values),
+    // same shared division tree rounded 6dp
+    Q("q_embed_mmd", { (s, d) => embedMmd(Tables.embeddings(s, d)) },
+      """WITH q AS (
+        | SELECT label, CAST(i - 1 AS INTEGER) AS dim,
+        |  CAST(sum(CAST(floor(CAST(embedding[i] AS DOUBLE) * 1048576)
+        |   AS BIGINT)) AS BIGINT) AS s
+        | FROM embeddings
+        |  CROSS JOIN unnest(range(1, len(embedding) + 1)) AS t(i)
+        | GROUP BY 1, 2),
+        |n AS (SELECT label, CAST(count(*) AS BIGINT) AS n
+        |      FROM embeddings GROUP BY 1),
+        |m AS (SELECT q.label, dim, s, n FROM q JOIN n USING (label)),
+        |pr AS (
+        | SELECT a.label AS label_a, b.label AS label_b,
+        |  a.n AS na, b.n AS nb,
+        |  sum((CAST(a.s AS HUGEINT) * b.n - CAST(b.s AS HUGEINT) * a.n)
+        |    * (CAST(a.s AS HUGEINT) * b.n - CAST(b.s AS HUGEINT) * a.n))
+        |   AS num
+        | FROM m a JOIN m b ON a.dim = b.dim AND a.label < b.label
+        | GROUP BY 1, 2, 3, 4)
+        |SELECT label_a, label_b, na AS n_a, nb AS n_b,
+        | round(CAST(num AS DOUBLE) / (CAST(na AS DOUBLE) *
+        |  CAST(nb AS DOUBLE) * CAST(na AS DOUBLE) * CAST(nb AS DOUBLE))
+        |  / 1099511627776.0, 6) AS mmd2
+        |FROM pr ORDER BY label_a, label_b""".stripMargin),
+    // 2-D projection onto the pcaSubspace components (audit slice;
+    // exact integer dot products against frozen loadings).
+    // same subspace replay, same ⌊v·10⁶ + 0.5⌋ loading freeze (identical
+    // floor spelling), same exact integer projection dot products
+    Q("q_pca_project", { (s, d) => pcaProject(Tables.embeddings(s, d)) }, {
+      val iters = 10
+      s"""WITH ${pcaSubspaceCtesSql(iters)},
+         |lq AS (SELECT
+         |  list_transform(v1, x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT)) AS l1,
+         |  list_transform(v2, x -> CAST(floor(x * 1000000 + 0.5) AS BIGINT)) AS l2
+         | FROM v$iters),
+         |pv AS (
+         | SELECT vec_id, list_transform(embedding,
+         |  x -> CAST(floor(CAST(x AS DOUBLE) * 1048576) AS BIGINT)) AS qv
+         | FROM embeddings WHERE vec_id < 20)
+         |SELECT vec_id,
+         | round(CAST(list_sum(list_transform(list_zip(qv, l1),
+         |   p -> p[1] * p[2])) AS DOUBLE) / 1048576.0 / 1000000.0, 6)
+         |  AS proj1,
+         | round(CAST(list_sum(list_transform(list_zip(qv, l2),
+         |   p -> p[1] * p[2])) AS DOUBLE) / 1048576.0 / 1000000.0, 6)
+         |  AS proj2
+         |FROM pv CROSS JOIN lq ORDER BY vec_id""".stripMargin
+    }),
+    // Full Lloyd k-means (3 rounds, k=4) in exact integer state — the
+    // multi-iteration extension of the single Lloyd step q_semantic_dedup
+    // runs; oracle replays every round.
+    Q("q_kmeans", { (s, d) => kmeans(Tables.embeddings(s, d)) }, {
+      val iters = (1 to 3).map(kmeansIterSql(_, 64)).mkString(",\n")
+      s"""WITH emb AS (
+         | SELECT vec_id, list_transform(embedding,
+         |   x -> CAST(floor(CAST(x AS DOUBLE) * 1048576) AS BIGINT)) AS q
+         | FROM embeddings),
+         |c0 AS (
+         | SELECT CAST(vec_id AS INT) AS cid, q AS c FROM emb WHERE vec_id < 4),
+         |$iters,
+         |sz AS (SELECT cid, count(*) AS n FROM a3 GROUP BY 1)
+         |SELECT c3.cid AS cluster_id, CAST(t.i AS INT) AS di, c3.c[t.i] AS c,
+         | COALESCE(sz.n, 0) AS n
+         |FROM c3 CROSS JOIN range(1, 65) t(i)
+         |LEFT JOIN sz ON c3.cid = sz.cid
+         |ORDER BY cluster_id, di""".stripMargin
+    }),
+    // IVF INDEX APPEND — the maintenance path every deployed ANN index
+    // lives on: new vectors (vec_id ≥ 400, the incoming batch) are
+    // assigned to the FROZEN centroids trained on the base slice —
+    // no recluster, no index rebuild, exactly how FAISS/ScaNN serve
+    // appends between retrains. The per-list growth report
+    // (n_new / n_base ppm) is the retrain trigger: a list growing far
+    // faster than its peers means the incoming distribution drifted
+    // off the trained quantizer (pairs with q_psi_drift on content).
+    // Centroids are driver state (k·dim Longs — dimension-class, the
+    // q_kmeans precedent); assignment is one codegen'd map pass over
+    // the corpus; the rollup is k rows. Integer-exact end to end.
+    Q("q_ivf_append", { (s, d) =>
+      val emb = Tables.embeddings(s, d)
+      val rep = kmeans(emb.filter(col("vec_id") < 400), k = 4, iters = 3)
+        .collect()
+      val cents: Seq[(Int, Array[Long])] = rep.groupBy(_.getInt(0))
+        .map { case (cid, rows) =>
+          (cid, rows.sortBy(_.getInt(1)).map(_.getLong(2)).toArray)
+        }.toSeq.sortBy(_._1)
+      val q = emb.select(col("vec_id"),
+        transform(col("embedding"),
+          x => floor(x.cast("double") * 1048576).cast("long")).as("q"))
+      val centArr = array(cents.map { case (cid, c) =>
+        val carr = array(c.map(lit).toIndexedSeq: _*)
+        struct(
+          aggregate(zip_with(col("q"), carr, (a, b) => (a - b) * (a - b)),
+            lit(0L), (acc, x) => acc + x).as("d2"),
+          lit(cid).as("cid"))
+      }.toIndexedSeq: _*)
+      q.select(col("vec_id"), array_min(centArr).getField("cid").as("cid"))
+        .groupBy("cid")
+        .agg(sum(when(col("vec_id") < 400, 1L).otherwise(0L)).as("n_base"),
+          sum(when(col("vec_id") >= 400, 1L).otherwise(0L)).as("n_new"))
+        .withColumn("growth_ppm",
+          expr("n_new * 1000000 div greatest(n_base, 1L)"))
+        .orderBy("cid")
+    }, {
+      val iters = (1 to 3).map(kmeansIterSql(_, 64)).mkString(",\n")
+      s"""WITH emb AS (
+         | SELECT vec_id, list_transform(embedding,
+         |   x -> CAST(floor(CAST(x AS DOUBLE) * 1048576) AS BIGINT)) AS q
+         | FROM embeddings WHERE vec_id < 400),
+         |c0 AS (
+         | SELECT CAST(vec_id AS INT) AS cid, q AS c FROM emb WHERE vec_id < 4),
+         |$iters,
+         |emball AS (
+         | SELECT vec_id, list_transform(embedding,
+         |   x -> CAST(floor(CAST(x AS DOUBLE) * 1048576) AS BIGINT)) AS q
+         | FROM embeddings),
+         |da AS (
+         | SELECT e.vec_id, c.cid,
+         |  list_sum(list_transform(range(1, 65),
+         |    i -> (e.q[i] - c.c[i]) * (e.q[i] - c.c[i]))) AS d2
+         | FROM emball e, c3 c),
+         |aa AS (
+         | SELECT vec_id, cid FROM (
+         |  SELECT vec_id, cid,
+         |   row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
+         |  FROM da) WHERE rn = 1)
+         |SELECT cid,
+         | CAST(sum(CASE WHEN vec_id < 400 THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
+         | CAST(sum(CASE WHEN vec_id >= 400 THEN 1 ELSE 0 END) AS BIGINT) AS n_new,
+         | CAST(sum(CASE WHEN vec_id >= 400 THEN 1 ELSE 0 END) AS BIGINT)
+         |  * 1000000 // greatest(
+         |   CAST(sum(CASE WHEN vec_id < 400 THEN 1 ELSE 0 END) AS BIGINT), 1)
+         |  AS growth_ppm
+         |FROM aa GROUP BY cid ORDER BY cid""".stripMargin
+    }),
+    // ANN QUALITY EVAL — recall@k of the sign-LSH index against the
+    // exact brute-force ranking (the q_dedup_eval measurement applied to
+    // retrieval: every index rollout reports this number before the
+    // exact path is retired). Both sides are the gated operators
+    // themselves; the eval is two k-row-per-query frames joined on
+    // (query_id, corpus_id) — nothing beyond the retrievals' own cost.
+    Q("q_ann_recall", { (s, d) =>
+      val emb = Tables.embeddings(s, d)
+      val cosF = graft.functions.NativeExpressions.cosineSim(s, _: Column, _: Column)
+      val q = emb.filter(col("vec_id") < 5)
+      val brute = bruteForceTopK(q, emb, 5, cosF)
+        .select(col("query_id"), col("corpus_id"))
+      val lsh = lshTopK(q, emb, 5, cosineFn = cosF)
+        .select(col("query_id"), col("corpus_id"), lit(1).as("hit"))
+      brute.join(lsh, Seq("query_id", "corpus_id"), "left")
+        .groupBy("query_id")
+        .agg(count(col("hit")).as("hits"),
+          round(count(col("hit")).cast("double") / 5, 6).as("recall_at_5"))
+        .orderBy("query_id")
     },
-    "q_semantic_dedup" ->
-      s"""WITH cents AS (
-         | SELECT label, list(c ORDER BY i) AS centroid FROM (
-         |  SELECT label, i,
-         |   CAST(sum(CAST(embedding[i] AS DECIMAL(18,9))) AS DOUBLE)/count(*) AS c
-         |  FROM embeddings CROSS JOIN unnest(range(1, len(embedding)+1)) AS t(i)
-         |  GROUP BY label, i)
-         | GROUP BY label),
-         |corpus AS (
-         | SELECT vec_id, embedding FROM embeddings
-         | UNION ALL
-         | SELECT vec_id + 10000000 AS vec_id,
-         |  list_append(embedding[1:len(embedding)-1],
-         |              -embedding[len(embedding)]) AS embedding
-         | FROM embeddings WHERE vec_id < 20),
-         |assigned AS (
-         | SELECT vec_id, embedding, label AS cluster FROM (
-         |  SELECT corpus.vec_id, corpus.embedding, cents.label,
-         |   row_number() OVER (PARTITION BY corpus.vec_id
-         |     ORDER BY round(${cosSql("corpus.embedding", "cents.centroid")}, 6) DESC,
-         |              cents.label) AS rn
-         |  FROM corpus CROSS JOIN cents) WHERE rn = 1),
-         |dups AS (
-         | SELECT b.vec_id, CAST(min(a.vec_id) AS BIGINT) AS dup_of
-         | FROM assigned a JOIN assigned b
-         |   ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-         | WHERE round(${cosSql("a.embedding", "b.embedding")}, 6) >= 0.95
-         | GROUP BY b.vec_id)
-         |SELECT assigned.vec_id, CAST(cluster AS INTEGER) AS cluster,
-         | (dup_of IS NULL) AS kept, dup_of
-         |FROM assigned LEFT JOIN dups USING (vec_id)
-         |ORDER BY vec_id""".stripMargin,
-    // DuckDB lists are 1-based; Spark posexplode is 0-based — i-1 aligns
-    "q_embed_centroids" ->
-      """SELECT label, CAST(i - 1 AS BIGINT) AS dim, count(*) AS n,
-        | CAST(sum(CAST(floor(CAST(embedding[i] AS DOUBLE) * 1048576) AS BIGINT)) AS BIGINT) AS sum_q
-        |FROM embeddings CROSS JOIN unnest(range(1, len(embedding)+1)) AS t(i)
-        |WHERE i <= 8
-        |GROUP BY label, i ORDER BY label, dim""".stripMargin,
-    "q_centroid_sim" ->
-      s"""WITH cents AS (
-         | SELECT label, list(c ORDER BY i) AS centroid FROM (
-         |  SELECT label, i,
-         |   CAST(sum(CAST(embedding[i] AS DECIMAL(18,9))) AS DOUBLE)/count(*) AS c
-         |  FROM embeddings CROSS JOIN unnest(range(1, len(embedding)+1)) AS t(i)
-         |  GROUP BY label, i)
-         | GROUP BY label)
-         |SELECT a.label AS label_a, b.label AS label_b,
-         | round(${cosSql("a.centroid", "b.centroid")}, 6) AS csim
-         |FROM cents a JOIN cents b ON a.label < b.label
-         |ORDER BY 1, 2""".stripMargin,
-    "q_sim_topk_ivf" ->
-      s"""WITH cents AS (
-         | SELECT label, list(c ORDER BY i) AS centroid FROM (
-         |  SELECT label, i,
-         |   CAST(sum(CAST(embedding[i] AS DECIMAL(18,9))) AS DOUBLE)/count(*) AS c
-         |  FROM embeddings CROSS JOIN unnest(range(1, len(embedding)+1)) AS t(i)
-         |  GROUP BY label, i)
-         | GROUP BY label),
-         |q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 5),
-         |assigned AS (
-         | SELECT query_id, q_emb, label, round(${cosSql("q_emb", "centroid")}, 6) AS csim
-         | FROM q CROSS JOIN cents),
-         |probe AS (
-         | SELECT query_id, q_emb, label FROM (
-         |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY csim DESC, label) AS rn
-         |  FROM assigned) WHERE rn = 1),
-         |scored AS (
-         | SELECT query_id, corpus_id, round(${cosSql("q_emb", "c_emb")}, 6) AS sim
-         | FROM (SELECT vec_id AS corpus_id, embedding AS c_emb, label FROM embeddings) c
-         | JOIN probe USING (label)),
-         |ranked AS (
-         | SELECT query_id, corpus_id, sim,
-         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
-         | FROM scored)
-         |SELECT * FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "q_rbo" -> {
+      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb,
+         |  ${bucketSql("embedding")} AS bucket FROM embeddings WHERE vec_id < 5),
+         |c AS (SELECT vec_id AS corpus_id, embedding AS c_emb,
+         |  ${bucketSql("embedding")} AS bucket FROM embeddings),
+         |brute AS (
+         | SELECT query_id, corpus_id FROM (
+         |  SELECT query_id, corpus_id,
+         |   row_number() OVER (PARTITION BY query_id
+         |     ORDER BY round(${cosSql("q_emb", "c_emb")}, 6) DESC, corpus_id) AS rank
+         |  FROM c CROSS JOIN q) WHERE rank <= 5),
+         |lsh AS (
+         | SELECT query_id, corpus_id FROM (
+         |  SELECT query_id, corpus_id,
+         |   row_number() OVER (PARTITION BY query_id
+         |     ORDER BY round(${cosSql("q_emb", "c_emb")}, 6) DESC, corpus_id) AS rank
+         |  FROM c JOIN q USING (bucket)) WHERE rank <= 5)
+         |SELECT b.query_id, count(l.corpus_id) AS hits,
+         | round(CAST(count(l.corpus_id) AS DOUBLE) / 5, 6) AS recall_at_5
+         |FROM brute b LEFT JOIN lsh l
+         | ON b.query_id = l.query_id AND b.corpus_id = l.corpus_id
+         |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin),
+    // RANK-BIASED OVERLAP between the IVF ranking and the exact brute
+    // ranking (Webber, Moffat & Zobel 2010) — recall@k (q_ann_recall)
+    // says WHETHER the right ids surface; RBO says whether they surface
+    // in the right ORDER, weighting agreement at rank 1 most (p = 0.9
+    // geometric decay). Reported as the truncated-depth lower bound
+    // (RBO_min at d = 5). Determinism: the p^(k−1) weights are Scala
+    // doubles computed once at plan build and embedded as IDENTICAL
+    // literals in both engines (never an in-engine pow); each depth
+    // term rounds to 9dp DECIMAL before the per-query fold. Scale: both
+    // rankings are k-bounded per query, the agreement join is on
+    // (query, corpus) ids, and the depth explode is k× a k-bounded
+    // frame.
+    Q("q_rbo", { (s, d) =>
+      val emb = Tables.embeddings(s, d)
+      val cosF = graft.functions.NativeExpressions
+        .cosineSim(s, _: Column, _: Column)
+      val q = emb.filter(col("vec_id") < 5)
+      val a = bruteForceTopK(q, emb, 5, cosF)
+        .select(col("query_id"), col("corpus_id"), col("rank").as("ra"))
+      val b = ivfTopK(q, emb, 5)
+        .select(col("query_id"), col("corpus_id"), col("rank").as("rb"))
+      val pairs = a.join(b, Seq("query_id", "corpus_id"))
+        .select(col("query_id"), greatest(col("ra"), col("rb")).as("m"))
+      val depths = 1 to 5
+      val p = 0.9
+      val wCol = depths.tail
+        .foldLeft(when(col("k") === 1, lit(1.0))) { (acc, k) =>
+          acc.when(col("k") === k, lit(math.pow(p, k - 1)))
+        }
+      val ov = pairs
+        .select(col("query_id"),
+          explode(array(depths.map(lit): _*)).as("k"), col("m"))
+        .groupBy("query_id", "k")
+        .agg(sum(when(col("m") <= col("k"), 1L).otherwise(0L)).as("ov"))
+      val terms = ov
+        .select(col("query_id"), col("k"), col("ov"),
+          round(wCol * (col("ov").cast("double") / col("k").cast("double")),
+            9).cast(DecimalType(18, 9)).as("term"))
+        .groupBy("query_id")
+        .agg(max(when(col("k") === 5, col("ov"))).as("ov5"),
+          sum(col("term")).as("ts"))
+      q.select(col("vec_id").as("query_id")).join(terms, Seq("query_id"), "left")
+        .select(col("query_id"),
+          coalesce(col("ov5"), lit(0L)).as("overlap_at_5"),
+          coalesce(round(lit(1.0 - p) * col("ts").cast("double"), 6),
+            lit(0.0)).as("rbo_min"))
+        .orderBy("query_id")
+    }, {
       val p = 0.9
       val wCase = (1 to 5)
         .map(k => s"WHEN $k THEN ${math.pow(p, k - 1)}")
@@ -2329,93 +2247,20 @@ object Similarity {
          | coalesce(round(${1.0 - p} * CAST(ts AS DOUBLE), 6), 0.0) AS rbo_min
          |FROM (SELECT DISTINCT query_id FROM q) s LEFT JOIN terms USING (query_id)
          |ORDER BY s.query_id""".stripMargin
-    },
-    "q_sim_topk_brute" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 5),
-         |c AS (SELECT vec_id AS corpus_id, embedding AS c_emb FROM embeddings),
-         |scored AS (
-         | SELECT query_id, corpus_id, round(${cosSql("q_emb", "c_emb")}, 6) AS sim
-         | FROM c CROSS JOIN q),
-         |ranked AS (
-         | SELECT query_id, corpus_id, sim,
-         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
-         | FROM scored)
-         |SELECT * FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "q_sim_topk_mrl" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 5),
-         |c AS (SELECT vec_id AS corpus_id, embedding AS c_emb FROM embeddings),
-         |full_ranked AS (
-         | SELECT query_id, corpus_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY round(${cosSql("q_emb", "c_emb")}, 6) DESC, corpus_id) AS INTEGER) AS rank
-         | FROM c CROSS JOIN q),
-         |trunc_ranked AS (
-         | SELECT query_id, corpus_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY round(${cosSql("q_emb[1:16]", "c_emb[1:16]")}, 6) DESC, corpus_id) AS INTEGER) AS rank
-         | FROM c CROSS JOIN q),
-         |hits AS (
-         | SELECT f.query_id, count(*) AS n_hit
-         | FROM (SELECT query_id, corpus_id FROM full_ranked WHERE rank <= 5) f
-         | JOIN (SELECT query_id, corpus_id FROM trunc_ranked WHERE rank <= 5) t
-         |  USING (query_id, corpus_id)
-         | GROUP BY 1)
-         |SELECT q.query_id, coalesce(n_hit, 0) AS n_hit,
-         | round(coalesce(n_hit, 0) / 5.0, 2) AS recall
-         |FROM (SELECT DISTINCT query_id FROM q) q LEFT JOIN hits USING (query_id)
-         |ORDER BY query_id""".stripMargin,
-    "q_sim_topk_mrl_rescore" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < 5),
-         |c AS (SELECT vec_id AS corpus_id, embedding AS c_emb FROM embeddings),
-         |full_ranked AS (
-         | SELECT query_id, corpus_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY round(${cosSql("q_emb", "c_emb")}, 6) DESC, corpus_id) AS INTEGER) AS rank
-         | FROM c CROSS JOIN q),
-         |short_ranked AS (
-         | SELECT query_id, corpus_id,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY round(${cosSql("q_emb[1:16]", "c_emb[1:16]")}, 6) DESC, corpus_id) AS INTEGER) AS rank
-         | FROM c CROSS JOIN q),
-         |rescored AS (
-         | SELECT s.query_id, s.corpus_id,
-         |  CAST(row_number() OVER (PARTITION BY s.query_id
-         |    ORDER BY round(${cosSql("q.q_emb", "c.c_emb")}, 6) DESC, s.corpus_id) AS INTEGER) AS rank
-         | FROM (SELECT query_id, corpus_id FROM short_ranked WHERE rank <= 25) s
-         | JOIN q USING (query_id) JOIN c USING (corpus_id)),
-         |hits AS (
-         | SELECT f.query_id, count(*) AS n_hit
-         | FROM (SELECT query_id, corpus_id FROM full_ranked WHERE rank <= 5) f
-         | JOIN (SELECT query_id, corpus_id FROM rescored WHERE rank <= 5) t
-         |  USING (query_id, corpus_id)
-         | GROUP BY 1)
-         |SELECT q.query_id, coalesce(n_hit, 0) AS n_hit,
-         | round(coalesce(n_hit, 0) / 5.0, 2) AS recall
-         |FROM (SELECT DISTINCT query_id FROM q) q LEFT JOIN hits USING (query_id)
-         |ORDER BY query_id""".stripMargin,
-    "q_ann_recall" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb,
-         |  ${bucketSql("embedding")} AS bucket FROM embeddings WHERE vec_id < 5),
-         |c AS (SELECT vec_id AS corpus_id, embedding AS c_emb,
-         |  ${bucketSql("embedding")} AS bucket FROM embeddings),
-         |brute AS (
-         | SELECT query_id, corpus_id FROM (
-         |  SELECT query_id, corpus_id,
-         |   row_number() OVER (PARTITION BY query_id
-         |     ORDER BY round(${cosSql("q_emb", "c_emb")}, 6) DESC, corpus_id) AS rank
-         |  FROM c CROSS JOIN q) WHERE rank <= 5),
-         |lsh AS (
-         | SELECT query_id, corpus_id FROM (
-         |  SELECT query_id, corpus_id,
-         |   row_number() OVER (PARTITION BY query_id
-         |     ORDER BY round(${cosSql("q_emb", "c_emb")}, 6) DESC, corpus_id) AS rank
-         |  FROM c JOIN q USING (bucket)) WHERE rank <= 5)
-         |SELECT b.query_id, count(l.corpus_id) AS hits,
-         | round(CAST(count(l.corpus_id) AS DOUBLE) / 5, 6) AS recall_at_5
-         |FROM brute b LEFT JOIN lsh l
-         | ON b.query_id = l.query_id AND b.corpus_id = l.corpus_id
-         |GROUP BY b.query_id ORDER BY b.query_id""".stripMargin,
-    "q_ndcg" -> {
+    }),
+
+    // NDCG@10 + MRR of the sign-LSH index against the exact brute
+    // ranking — the GRADED companion of q_ann_recall (set overlap) and
+    // q_rbo (order agreement): relevance = 11 − ideal rank (integer
+    // gains off the brute top-10), so a candidate list that surfaces
+    // the right ids but buries the best ones scores low. Determinism:
+    // the 1/log2(p+1) discounts, the 1/p reciprocals, and the constant
+    // flat-gain IDCG@10 are Scala doubles computed once at plan build
+    // and embedded as IDENTICAL literals in both engines (the q_rbo
+    // weight idiom); each DCG term rounds to 9dp DECIMAL before the
+    // per-query fold. Scale: both rankings are k-bounded per query and
+    // the relevance join is on (query, corpus) ids.
+    Q("q_ndcg", { (s, d) => ndcgEval(s, Tables.embeddings(s, d)) }, {
       def caseSql(m: Map[Int, Double]) = "(CASE cd.pos " +
         (1 to 10).map(p => s"WHEN $p THEN ${m(p)}").mkString(" ") +
         " ELSE 0.0 END)"
@@ -2448,34 +2293,157 @@ object Similarity {
          | round(CAST(sum(term) AS DOUBLE) / $ndcgIdcg, 6) AS ndcg_at_10,
          | round(max(rr), 6) AS mrr
          |FROM terms GROUP BY 1 ORDER BY query_id""".stripMargin
-    },
-    "q_sim_topk_lsh" ->
-      s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb,
-         |  ${bucketSql("embedding")} AS bucket FROM embeddings WHERE vec_id < 5),
-         |c AS (SELECT vec_id AS corpus_id, embedding AS c_emb,
-         |  ${bucketSql("embedding")} AS bucket FROM embeddings),
+    }),
+
+    // Centroid-silhouette quality report on the label clustering.
+    Q("q_silhouette", { (s, d) => silhouette(Tables.embeddings(s, d)) },
+      s"""WITH cents AS (
+         | SELECT label AS clabel, list(c ORDER BY i) AS centroid FROM (
+         |  SELECT label, i,
+         |   CAST(sum(CAST(embedding[i] AS DECIMAL(18,9))) AS DOUBLE)/count(*) AS c
+         |  FROM embeddings CROSS JOIN unnest(range(1, len(embedding)+1)) AS t(i)
+         |  GROUP BY label, i)
+         | GROUP BY label),
          |scored AS (
-         | SELECT query_id, corpus_id, round(${cosSql("q_emb", "c_emb")}, 6) AS sim
-         | FROM c JOIN q USING (bucket)),
-         |ranked AS (
-         | SELECT query_id, corpus_id, sim,
-         |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, corpus_id) AS INTEGER) AS rank
-         | FROM scored)
-         |SELECT * FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin,
-    "q_sim_near_dup" ->
-      s"""WITH corpus AS (
+         | SELECT e.vec_id, e.label, c.clabel,
+         |  round(${cosSql("e.embedding", "c.centroid")}, 6) AS csim
+         | FROM embeddings e CROSS JOIN cents c),
+         |pv AS (
+         | SELECT vec_id, label,
+         |  max(CASE WHEN clabel = label THEN csim END) AS a_sim,
+         |  max(CASE WHEN clabel <> label THEN csim END) AS b_sim
+         | FROM scored GROUP BY 1, 2)
+         |SELECT label, count(*) AS n,
+         | round(CAST(sum(CAST(round(a_sim - b_sim, 6) AS DECIMAL(12,6)))
+         |   AS DOUBLE) / count(*), 6) AS avg_margin
+         |FROM pv GROUP BY 1 ORDER BY 1""".stripMargin),
+    // EMBEDDING NORM AUDIT — the broken-vector detector every embedding
+    // ingest runs (all-zero rows from failed encoders, exploding norms
+    // from unnormalized checkpoints skew cosine math downstream).
+    // Per-row norms are a map-side HOF fold (same parity basis as the
+    // cosine everywhere else); per-label stats fold 6dp norms as
+    // DECIMAL so the mean is aggregation-order-independent.
+    Q("q_embed_norms", { (s, d) =>
+      val norm6 = round(
+        sqrt(aggregate(col("embedding"),
+          lit(0.0), (acc, v) => acc + v.cast("double") * v.cast("double"))), 6)
+      Tables.embeddings(s, d)
+        .select(col("label"), norm6.as("norm"))
+        .groupBy("label")
+        .agg(count(lit(1)).as("n"),
+          min(col("norm")).as("min_norm"),
+          max(col("norm")).as("max_norm"),
+          round(sum(col("norm").cast(DecimalType(12, 6))).cast("double") /
+            count(lit(1)), 6).as("avg_norm"),
+          sum(when(col("norm") < 0.01, 1L).otherwise(0L)).as("n_tiny"))
+        .orderBy("label")
+    },
+      """WITH r AS (
+        | SELECT label,
+        |  round(sqrt(list_sum(list_transform(embedding,
+        |    v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))), 6) AS norm
+        | FROM embeddings)
+        |SELECT label, count(*) AS n,
+        | min(norm) AS min_norm, max(norm) AS max_norm,
+        | round(CAST(sum(CAST(norm AS DECIMAL(12,6))) AS DOUBLE) / count(*), 6)
+        |  AS avg_norm,
+        | CAST(sum(CASE WHEN norm < 0.01 THEN 1 ELSE 0 END) AS BIGINT) AS n_tiny
+        |FROM r GROUP BY 1 ORDER BY 1""".stripMargin),
+    // SemDeDup: cluster-then-prune semantic dedup over the planted corpus
+    // (assignment from the labeled corpus' centroids; planted flips land
+    // in their original's cluster and prune against it at τ=0.95).
+    Q("q_semantic_dedup", { (s, d) =>
+      val labeled = Tables.embeddings(s, d)
+      semanticDedup(plantedEmbeddings(labeled), labeled, 0.95,
+        graft.functions.NativeExpressions.cosineSim(s, _, _))
+    },
+      s"""WITH cents AS (
+         | SELECT label, list(c ORDER BY i) AS centroid FROM (
+         |  SELECT label, i,
+         |   CAST(sum(CAST(embedding[i] AS DECIMAL(18,9))) AS DOUBLE)/count(*) AS c
+         |  FROM embeddings CROSS JOIN unnest(range(1, len(embedding)+1)) AS t(i)
+         |  GROUP BY label, i)
+         | GROUP BY label),
+         |corpus AS (
          | SELECT vec_id, embedding FROM embeddings
          | UNION ALL
          | SELECT vec_id + 10000000 AS vec_id,
          |  list_append(embedding[1:len(embedding)-1],
          |              -embedding[len(embedding)]) AS embedding
          | FROM embeddings WHERE vec_id < 20),
-         |b AS (SELECT vec_id, embedding, ${bucketSql("embedding")} AS bucket FROM corpus)
-         |SELECT a.vec_id AS id_a, bb.vec_id AS id_b,
-         | round(${cosSql("a.embedding", "bb.embedding")}, 6) AS sim
-         |FROM b a JOIN b bb USING (bucket)
-         |WHERE a.vec_id < bb.vec_id
-         |  AND round(${cosSql("a.embedding", "bb.embedding")}, 6) >= 0.95
-         |ORDER BY id_a, id_b""".stripMargin
+         |assigned AS (
+         | SELECT vec_id, embedding, label AS cluster FROM (
+         |  SELECT corpus.vec_id, corpus.embedding, cents.label,
+         |   row_number() OVER (PARTITION BY corpus.vec_id
+         |     ORDER BY round(${cosSql("corpus.embedding", "cents.centroid")}, 6) DESC,
+         |              cents.label) AS rn
+         |  FROM corpus CROSS JOIN cents) WHERE rn = 1),
+         |dups AS (
+         | SELECT b.vec_id, CAST(min(a.vec_id) AS BIGINT) AS dup_of
+         | FROM assigned a JOIN assigned b
+         |   ON a.cluster = b.cluster AND a.vec_id < b.vec_id
+         | WHERE round(${cosSql("a.embedding", "b.embedding")}, 6) >= 0.95
+         | GROUP BY b.vec_id)
+         |SELECT assigned.vec_id, CAST(cluster AS INTEGER) AS cluster,
+         | (dup_of IS NULL) AS kept, dup_of
+         |FROM assigned LEFT JOIN dups USING (vec_id)
+         |ORDER BY vec_id""".stripMargin),
+    // IVF centroid-build primitive: per-label, per-dimension accumulation
+    // in FIXED-POINT (floor(x·2^20) — a power-of-two scale is exact in
+    // binary floating point, so the floor is tie-free and the Long sums
+    // are order-independent: the cross-engine-deterministic way to reduce
+    // float vectors; a raw double Σ would drift with partial-agg order).
+    // posexplode is map-side; one shuffle on (label, dim) — k·d groups.
+    // DuckDB lists are 1-based; Spark posexplode is 0-based — i-1 aligns
+    Q("q_embed_centroids", { (s, d) =>
+      Tables.embeddings(s, d)
+        .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "x")))
+        .filter(col("dim") < 8)
+        .select(col("label"), col("dim").cast("long").as("dim"),
+          floor(col("x").cast("double") * 1048576).cast("long").as("q"))
+        .groupBy("label", "dim")
+        .agg(count(lit(1)).as("n"), sum(col("q")).as("sum_q"))
+        .orderBy("label", "dim")
+    },
+      """SELECT label, CAST(i - 1 AS BIGINT) AS dim, count(*) AS n,
+        | CAST(sum(CAST(floor(CAST(embedding[i] AS DOUBLE) * 1048576) AS BIGINT)) AS BIGINT) AS sum_q
+        |FROM embeddings CROSS JOIN unnest(range(1, len(embedding)+1)) AS t(i)
+        |WHERE i <= 8
+        |GROUP BY label, i ORDER BY label, dim""".stripMargin),
+    // Inter-cluster similarity matrix: cosine between every pair of
+    // per-label centroids — the "are these two clusters really distinct"
+    // report after any clustering/labeling pass. The corpus collapses
+    // map-side to label×dim exact-decimal sums (the q_sim_topk_ivf
+    // centroid recipe); everything after is label²-sized, with the
+    // ordered centroid arrays making the cosine fold order identical on
+    // both engines.
+    Q("q_centroid_sim", { (s, d) =>
+      val cent = Tables.embeddings(s, d)
+        .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "x")))
+        .groupBy("label", "dim")
+        .agg((sum(col("x").cast(DecimalType(18, 9))).cast("double") /
+          count(lit(1))).as("c"))
+        .groupBy("label")
+        .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
+          e => e.getField("c")).as("centroid"))
+      cent.select(col("label").as("label_a"), col("centroid").as("ea"))
+        .crossJoin(broadcast(
+          cent.select(col("label").as("label_b"), col("centroid").as("eb"))))
+        .filter(col("label_a") < col("label_b"))
+        .select(col("label_a"), col("label_b"),
+          round(cosine(col("ea"), col("eb")), 6).as("csim"))
+        .orderBy("label_a", "label_b")
+    },
+      s"""WITH cents AS (
+         | SELECT label, list(c ORDER BY i) AS centroid FROM (
+         |  SELECT label, i,
+         |   CAST(sum(CAST(embedding[i] AS DECIMAL(18,9))) AS DOUBLE)/count(*) AS c
+         |  FROM embeddings CROSS JOIN unnest(range(1, len(embedding)+1)) AS t(i)
+         |  GROUP BY label, i)
+         | GROUP BY label)
+         |SELECT a.label AS label_a, b.label AS label_b,
+         | round(${cosSql("a.centroid", "b.centroid")}, 6) AS csim
+         |FROM cents a JOIN cents b ON a.label < b.label
+         |ORDER BY 1, 2""".stripMargin)
   )
 }

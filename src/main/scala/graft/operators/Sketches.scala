@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Scratch
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.CacheScope.TrackedDataset
@@ -24,7 +24,7 @@ import graft.CacheScope.TrackedDataset
   * driver runs. The exact twin inside the query doubles as the
   * cross-check that the sketch saw the same data.
   */
-object Sketches {
+object Sketches extends QueryModule {
 
   /** HLL++ distinct-count vs exact, with the 2% contract (rsd = 0.01).
     * The exact side uses count over the distinct key frame — fine at test
@@ -150,15 +150,41 @@ object Sketches {
     cmsProbe(cells, exact, d, k)
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def entries: Seq[Q] = Seq(
     // Count-min point-query readout for the 10 heaviest parts (d=4,
     // w=512 deterministic md5 rows; one-sided overestimate gated ≥ 0).
-    "q_countmin" -> { (s, d) =>
+    // identical md5 bucket scheme — the CMS here is fully deterministic,
+    // so the oracle replays the sketch exactly, not just its error bound
+    Q("q_countmin", { (s, d) =>
       countMin(Tables.lineitem(s, d), "l_partkey")
     },
-    "q_approx_distinct" -> { (s, d) =>
+      """WITH exact AS (
+        | SELECT l_partkey AS key, count(*) AS cnt FROM lineitem
+        | GROUP BY 1),
+        |rs AS (SELECT unnest([0, 1, 2, 3]) AS r),
+        |cells AS (
+        | SELECT r,
+        |  CAST(('0x' || substr(md5(CAST(r AS VARCHAR) || ':' ||
+        |    CAST(key AS VARCHAR)), 1, 8)) AS BIGINT) % 512 AS bucket,
+        |  CAST(sum(cnt) AS BIGINT) AS cell
+        | FROM exact, rs GROUP BY 1, 2),
+        |top AS (SELECT key, cnt FROM exact ORDER BY cnt DESC, key LIMIT 10),
+        |probes AS (
+        | SELECT key, cnt, r,
+        |  CAST(('0x' || substr(md5(CAST(r AS VARCHAR) || ':' ||
+        |    CAST(key AS VARCHAR)), 1, 8)) AS BIGINT) % 512 AS bucket
+        | FROM top, rs)
+        |SELECT p.key AS key, CAST(p.cnt AS BIGINT) AS exact_cnt,
+        | CAST(min(c.cell) AS BIGINT) AS cms_est,
+        | CAST(min(c.cell) - p.cnt AS BIGINT) AS overestimate
+        |FROM probes p JOIN cells c USING (r, bucket)
+        |GROUP BY p.key, p.cnt ORDER BY exact_cnt DESC, key""".stripMargin),
+    Q("q_approx_distinct", { (s, d) =>
       approxDistinct(Tables.orders(s, d), "o_custkey", 0.02)
     },
+      """SELECT count(DISTINCT o_custkey) AS exact_distinct,
+        | TRUE AS within_tol
+        |FROM orders""".stripMargin),
     // SKETCH RE-AGGREGATION (the pre-aggregated-sketch-table pattern):
     // materialize one DataSketches HLL per year, then roll the TOTAL
     // distinct-user estimate up from the sketches alone — no second scan
@@ -166,7 +192,7 @@ object Sketches {
     // per-partition sketch rows (a few KB each) are the only thing ever
     // re-read, and any grouping subset unions in sketch space. Gated with
     // the boolean contract at both levels (per-year and rolled-up, 5%).
-    "q_hll_rollup" -> { (s, d) =>
+    Q("q_hll_rollup", { (s, d) =>
       val ev = Tables.events(s, d)
         .select(year(col("ts")).as("yr"), col("user_id"))
       val perYear = ev.groupBy("yr")
@@ -185,6 +211,14 @@ object Sketches {
             col("exact_users").cast("double") * 0.05).as("within_tol"))
       years.unionByName(rolled).orderBy("yr")
     },
+      """SELECT CAST(year(ts) AS INTEGER) AS yr,
+        | count(DISTINCT user_id) AS exact_users, TRUE AS within_tol
+        |FROM events GROUP BY 1
+        |UNION ALL
+        |SELECT -1 AS yr, count(DISTINCT user_id) AS exact_users,
+        | TRUE AS within_tol
+        |FROM events
+        |ORDER BY yr""".stripMargin),
     // CROSS-LOAD SKETCH STORE — the incremental-distinct twin of
     // q_dedup_incremental: load 1's per-key HLL sketches persist to a
     // compact parquet store (one binary row per key); load 2 builds its
@@ -193,7 +227,7 @@ object Sketches {
     // this is the only viable daily-distinct pipeline: each load touches
     // only its own rows plus a key-cardinality-sized sketch table.
     // Gated with the exact twin over both loads + the 5% HLL contract.
-    "q_hll_incremental" -> { (s, d) =>
+    Q("q_hll_incremental", { (s, d) =>
       val ev = Tables.events(s, d)
         .select(col("event_type"), col("user_id"), col("event_id"))
       val storePath = Scratch.dir("hll_store")
@@ -213,6 +247,9 @@ object Sketches {
             col("exact_users").cast("double") * 0.05).as("within_tol"))
         .orderBy("event_type")
     },
+      """SELECT event_type, count(DISTINCT user_id) AS exact_users,
+        | TRUE AS within_tol
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
     // CROSS-LOAD QUANTILE SKETCH STORE — the q_hll_incremental pattern
     // for quantiles, closing the symmetry the KLL family was built for:
     // load 1's per-type KLL states persist to a compact parquet store
@@ -222,7 +259,7 @@ object Sketches {
     // exact-rank contract over BOTH loads (exact medians from the
     // grouped X4 frame; the sketch's rank guarantee is merge-order-
     // independent, so re-loading from parquet cannot weaken it).
-    "q_kll_incremental" -> { (s, d) =>
+    Q("q_kll_incremental", { (s, d) =>
       val kllB = udaf(new graft.functions.KllAggregator(512),
         org.apache.spark.sql.Encoders.scalaDouble)
       val kllU = udaf(new graft.functions.KllMergeAggregator(512),
@@ -256,18 +293,33 @@ object Sketches {
         .select(col("grp"), col("exact_p50"), tolc.as("within_tol"))
         .orderBy("grp")
     },
+      """SELECT event_type AS grp,
+        | quantile_cont(CAST(value AS DOUBLE), 0.5) AS exact_p50,
+        | TRUE AS within_tol
+        |FROM events GROUP BY 1 ORDER BY grp""".stripMargin),
     // Exact ≥1%-frequency tokens over the corpus (k=100): the tokenizer /
     // vocabulary-pruning primitive, shaped for columns whose distinct
     // count dwarfs executor memory.
-    "q_heavy_hitters" -> { (s, d) =>
+    Q("q_heavy_hitters", { (s, d) =>
       heavyHitters(
         Tables.documents(s, d)
           .select(explode(TextAnalysis.tokens(lower(col("text")))).as("token")),
         "token", k = 100)
     },
-    "q_approx_median" -> { (s, d) =>
+      """WITH tok AS (
+        | SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
+        |               t -> t <> '')) AS token
+        | FROM documents),
+        |n AS (SELECT count(*) AS n_total FROM tok)
+        |SELECT token, count(*) AS freq
+        |FROM tok, n GROUP BY token, n_total HAVING count(*) * 100 >= n_total
+        |ORDER BY freq DESC, token""".stripMargin),
+    Q("q_approx_median", { (s, d) =>
       approxMedian(Tables.lineitem(s, d), "l_extendedprice", 0.01)
     },
+      """SELECT quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.5) AS exact_p50,
+        | TRUE AS within_tol
+        |FROM lineitem""".stripMargin),
     // MERGEABLE quantile sketch (KLL-class — functions/Kll.scala): the GK
     // summary behind q_approx_median cannot re-aggregate; this one can.
     // One sketch over lineitem prices, three quantiles gated via EXACT
@@ -275,7 +327,7 @@ object Sketches {
     // The rank gate is the honest one for a quantile sketch: |true rank of
     // the estimate − q| ≤ ε, checked against [count(<est), count(≤est)] so
     // ties can't fail a correct sketch.
-    "q_kll_quantiles" -> { (s, d) =>
+    Q("q_kll_quantiles", { (s, d) =>
       val kll = udaf(new graft.functions.KllAggregator(512),
         org.apache.spark.sql.Encoders.scalaDouble)
       val est = udf((sk: Seq[Seq[Double]], q: Double) =>
@@ -307,13 +359,19 @@ object Sketches {
           tol(0.5, "lt50", "le50").as("within_tol_p50"),
           tol(0.9, "lt90", "le90").as("within_tol_p90"))
     },
+      """SELECT quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.1) AS exact_p10,
+        | quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.5) AS exact_p50,
+        | quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.9) AS exact_p90,
+        | TRUE AS within_tol_p10, TRUE AS within_tol_p50,
+        | TRUE AS within_tol_p90
+        |FROM lineitem""".stripMargin),
     // SKETCH-SPACE quantile ROLLUP — the q_hll_rollup pattern for medians:
     // per-event-type KLL sketch rows are the ONLY thing the rolled-up
     // estimate reads (levelwise union + re-compact, no second scan of the
     // fact for the estimate itself). Gated per group AND rolled-up with
     // the exact-rank contract; exact medians come from the distributed
     // exact-percentile frame (never sketch-vs-sketch).
-    "q_kll_rollup" -> { (s, d) =>
+    Q("q_kll_rollup", { (s, d) =>
       val kllB = udaf(new graft.functions.KllAggregator(512),
         org.apache.spark.sql.Encoders.scalaDouble)
       val kllU = udaf(new graft.functions.KllMergeAggregator(512),
@@ -353,6 +411,15 @@ object Sketches {
           tolc.as("within_tol"))
       groups.unionByName(total).orderBy("grp")
     },
+      """SELECT event_type AS grp,
+        | quantile_cont(CAST(value AS DOUBLE), 0.5) AS exact_p50,
+        | TRUE AS within_tol
+        |FROM events GROUP BY 1
+        |UNION ALL
+        |SELECT '(all)' AS grp,
+        | quantile_cont(CAST(value AS DOUBLE), 0.5) AS exact_p50,
+        | TRUE AS within_tol
+        |FROM events ORDER BY grp""".stripMargin),
     // SKETCH-DRIVEN EQUI-DEPTH RANGE PARTITIONING PLAN — the scale
     // decision the quantile sketch exists to make: 31 boundary values
     // from ONE KLL pass give a skew-aware 32-way range partitioning of
@@ -365,7 +432,7 @@ object Sketches {
     // bound — a broken compactor yields a 10×-share bucket and fails
     // loudly. Exported values are engine-replicable exacts + pinned
     // booleans (the sketch-oracle convention).
-    "q_range_boundaries" -> { (s, d) =>
+    Q("q_range_boundaries", { (s, d) =>
       val nb = 32
       val kll = udaf(new graft.functions.KllAggregator(512),
         org.apache.spark.sql.Encoders.scalaDouble)
@@ -393,6 +460,9 @@ object Sketches {
           (col("mx") <= 1.0 / nb + 0.03 &&
             col("mn") >= 1.0 / nb - 0.03).as("within_balance"))
     },
+      """SELECT count(*) AS n_total, 32 AS n_buckets,
+        | TRUE AS all_nonempty, TRUE AS within_balance
+        |FROM lineitem""".stripMargin),
     // The OPTIMIZER-REWRITE path to the same sketch: mark one
     // count(DISTINCT) with approx_hint, whose helper installs
     // ApproxDistinctRewrite (GraftExtensions.install puts it in
@@ -403,7 +473,7 @@ object Sketches {
     // two distinct groups is expanded by Catalyst's
     // RewriteDistinctAggregates before the end-placed user batch runs
     // (the injected-extension path has no such constraint).
-    "q_approx_rewrite" -> { (s, d) =>
+    Q("q_approx_rewrite", { (s, d) =>
       val o = Tables.orders(s, d)
       val exact = o.agg(countDistinct(col("o_custkey")).as("exact_distinct"))
       val approx = o.agg(countDistinct(graft.functions.NativeExpressions
@@ -413,6 +483,9 @@ object Sketches {
           (abs(col("__approx") - col("exact_distinct")) <=
             col("exact_distinct").cast("double") * 0.02).as("within_tol"))
     },
+      """SELECT count(DISTINCT o_custkey) AS exact_distinct,
+        | TRUE AS within_tol
+        |FROM orders""".stripMargin),
     // SKETCH-SPACE SET INTERSECTION — |A∩B| ≈ est(A) + est(B) − est(A∪B)
     // (inclusion–exclusion; HLL unions are lossless, intersections are
     // not, so IE is THE production pattern for audience overlap at
@@ -422,7 +495,7 @@ object Sketches {
     // exact twin (one semi-join at user cardinality) gates the IE error
     // against its union-relative bound; only exact values and the
     // boolean contract cross engines.
-    "q_hll_intersection" -> { (s, d) =>
+    Q("q_hll_intersection", { (s, d) =>
       val ev = Tables.events(s, d)
         .select(col("user_id"), col("event_type"),
           datediff(to_date(col("ts")), lit("1970-01-01")).as("day"))
@@ -453,13 +526,30 @@ object Sketches {
             greatest(col("exact_union").cast("double") * 0.05, lit(5.0)))
             .as("within_tol"))
     },
+      """WITH e AS (
+        | SELECT user_id, event_type,
+        |  datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day
+        | FROM events),
+        |m AS (SELECT CAST(floor((min(day) + max(day)) / 2.0) AS BIGINT)
+        |       AS mid FROM e),
+        |a AS (SELECT DISTINCT user_id FROM e, m
+        |      WHERE event_type = 'view' AND day <= mid),
+        |b AS (SELECT DISTINCT user_id FROM e, m
+        |      WHERE event_type = 'purchase' AND day > mid)
+        |SELECT (SELECT count(*) FROM a) AS exact_a,
+        | (SELECT count(*) FROM b) AS exact_b,
+        | (SELECT count(*) FROM (SELECT user_id FROM a UNION SELECT user_id FROM b))
+        |  AS exact_union,
+        | (SELECT count(*) FROM a JOIN b USING (user_id))
+        |  AS exact_intersection,
+        | TRUE AS within_tol""".stripMargin),
     // Count-min sketch frequencies vs exact, gating the classic bound:
     // never under, over by ≤ e/width·N. The sketch pass is the scale
     // path (fixed 4×2048 Long grid per partial, elementwise-add merge);
     // the exact groupBy twin is the cross-check, and the estimate UDF
     // runs only on the post-aggregation rows (one per distinct key) —
     // off the fact-sized hot path, so non-codegen cost is irrelevant.
-    "q_cms_freq" -> { (s, d) =>
+    Q("q_cms_freq", { (s, d) =>
       val depth = 4; val width = 2048
       val cms = udaf(new graft.functions.CountMinAggregator(depth, width),
         org.apache.spark.sql.Encoders.STRING)
@@ -485,115 +575,9 @@ object Sketches {
           ((col("__est") - col("exact_n")).cast("double") <=
             col("n_total").cast("double") * (4.0 * math.E / width)).as("within_eps"))
         .orderBy("event_type")
-    }
-  )
-
-  def oracles: Map[String, String] = Map(
-    // identical md5 bucket scheme — the CMS here is fully deterministic,
-    // so the oracle replays the sketch exactly, not just its error bound
-    "q_countmin" ->
-      """WITH exact AS (
-        | SELECT l_partkey AS key, count(*) AS cnt FROM lineitem
-        | GROUP BY 1),
-        |rs AS (SELECT unnest([0, 1, 2, 3]) AS r),
-        |cells AS (
-        | SELECT r,
-        |  CAST(('0x' || substr(md5(CAST(r AS VARCHAR) || ':' ||
-        |    CAST(key AS VARCHAR)), 1, 8)) AS BIGINT) % 512 AS bucket,
-        |  CAST(sum(cnt) AS BIGINT) AS cell
-        | FROM exact, rs GROUP BY 1, 2),
-        |top AS (SELECT key, cnt FROM exact ORDER BY cnt DESC, key LIMIT 10),
-        |probes AS (
-        | SELECT key, cnt, r,
-        |  CAST(('0x' || substr(md5(CAST(r AS VARCHAR) || ':' ||
-        |    CAST(key AS VARCHAR)), 1, 8)) AS BIGINT) % 512 AS bucket
-        | FROM top, rs)
-        |SELECT p.key AS key, CAST(p.cnt AS BIGINT) AS exact_cnt,
-        | CAST(min(c.cell) AS BIGINT) AS cms_est,
-        | CAST(min(c.cell) - p.cnt AS BIGINT) AS overestimate
-        |FROM probes p JOIN cells c USING (r, bucket)
-        |GROUP BY p.key, p.cnt ORDER BY exact_cnt DESC, key""".stripMargin,
-    "q_heavy_hitters" ->
-      """WITH tok AS (
-        | SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-        |               t -> t <> '')) AS token
-        | FROM documents),
-        |n AS (SELECT count(*) AS n_total FROM tok)
-        |SELECT token, count(*) AS freq
-        |FROM tok, n GROUP BY token, n_total HAVING count(*) * 100 >= n_total
-        |ORDER BY freq DESC, token""".stripMargin,
-    "q_approx_distinct" ->
-      """SELECT count(DISTINCT o_custkey) AS exact_distinct,
-        | TRUE AS within_tol
-        |FROM orders""".stripMargin,
-    "q_hll_incremental" ->
-      """SELECT event_type, count(DISTINCT user_id) AS exact_users,
-        | TRUE AS within_tol
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_hll_intersection" ->
-      """WITH e AS (
-        | SELECT user_id, event_type,
-        |  datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day
-        | FROM events),
-        |m AS (SELECT CAST(floor((min(day) + max(day)) / 2.0) AS BIGINT)
-        |       AS mid FROM e),
-        |a AS (SELECT DISTINCT user_id FROM e, m
-        |      WHERE event_type = 'view' AND day <= mid),
-        |b AS (SELECT DISTINCT user_id FROM e, m
-        |      WHERE event_type = 'purchase' AND day > mid)
-        |SELECT (SELECT count(*) FROM a) AS exact_a,
-        | (SELECT count(*) FROM b) AS exact_b,
-        | (SELECT count(*) FROM (SELECT user_id FROM a UNION SELECT user_id FROM b))
-        |  AS exact_union,
-        | (SELECT count(*) FROM a JOIN b USING (user_id))
-        |  AS exact_intersection,
-        | TRUE AS within_tol""".stripMargin,
-    "q_hll_rollup" ->
-      """SELECT CAST(year(ts) AS INTEGER) AS yr,
-        | count(DISTINCT user_id) AS exact_users, TRUE AS within_tol
-        |FROM events GROUP BY 1
-        |UNION ALL
-        |SELECT -1 AS yr, count(DISTINCT user_id) AS exact_users,
-        | TRUE AS within_tol
-        |FROM events
-        |ORDER BY yr""".stripMargin,
-    "q_approx_median" ->
-      """SELECT quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.5) AS exact_p50,
-        | TRUE AS within_tol
-        |FROM lineitem""".stripMargin,
-    "q_range_boundaries" ->
-      """SELECT count(*) AS n_total, 32 AS n_buckets,
-        | TRUE AS all_nonempty, TRUE AS within_balance
-        |FROM lineitem""".stripMargin,
-    "q_kll_quantiles" ->
-      """SELECT quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.1) AS exact_p10,
-        | quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.5) AS exact_p50,
-        | quantile_cont(CAST(l_extendedprice AS DOUBLE), 0.9) AS exact_p90,
-        | TRUE AS within_tol_p10, TRUE AS within_tol_p50,
-        | TRUE AS within_tol_p90
-        |FROM lineitem""".stripMargin,
-    "q_kll_incremental" ->
-      """SELECT event_type AS grp,
-        | quantile_cont(CAST(value AS DOUBLE), 0.5) AS exact_p50,
-        | TRUE AS within_tol
-        |FROM events GROUP BY 1 ORDER BY grp""".stripMargin,
-    "q_kll_rollup" ->
-      """SELECT event_type AS grp,
-        | quantile_cont(CAST(value AS DOUBLE), 0.5) AS exact_p50,
-        | TRUE AS within_tol
-        |FROM events GROUP BY 1
-        |UNION ALL
-        |SELECT '(all)' AS grp,
-        | quantile_cont(CAST(value AS DOUBLE), 0.5) AS exact_p50,
-        | TRUE AS within_tol
-        |FROM events ORDER BY grp""".stripMargin,
-    "q_approx_rewrite" ->
-      """SELECT count(DISTINCT o_custkey) AS exact_distinct,
-        | TRUE AS within_tol
-        |FROM orders""".stripMargin,
-    "q_cms_freq" ->
+    },
       """SELECT event_type, count(*) AS exact_n,
         | TRUE AS never_under, TRUE AS within_eps
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)
   )
 }

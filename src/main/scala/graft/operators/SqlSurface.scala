@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -19,9 +19,9 @@ import org.apache.spark.sql.functions._
   * fact data), set ops and subqueries stay as joins/aggregates Catalyst
   * can reorder, and the date spine is dimension-sized by construction.
   */
-object SqlSurface {
+object SqlSurface extends QueryModule {
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def entries: Seq[Q] = Seq(
 
     // Ranking + frame window pack: row_number / ntile / percent_rank /
     // cume_dist / first / last / lag over a per-customer order timeline.
@@ -29,7 +29,7 @@ object SqlSurface {
     // global sort, no single-task window (the r03 percentile lesson).
     // Ties are broken by o_orderkey so the rank family is deterministic
     // and percent_rank/cume_dist see no peer groups on either engine.
-    "q_window_analytics" -> { (s, d) =>
+    Q("q_window_analytics", { (s, d) =>
       val w = Window.partitionBy("o_custkey").orderBy(col("day_no"), col("o_orderkey"))
       val wAll = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
       Tables.orders(s, d)
@@ -48,12 +48,28 @@ object SqlSurface {
           (col("day_no") - lag(col("day_no"), 1).over(w)).as("days_since_prev"))
         .orderBy("o_custkey", "o_orderkey")
     },
+      """WITH o AS (SELECT *, CAST(datediff('day', DATE '1970-01-01',
+        |                     CAST(o_orderdate AS DATE)) AS BIGINT) AS day_no
+        |           FROM orders)
+        |SELECT o_custkey, o_orderkey,
+        |  row_number() OVER w AS seq,
+        |  ntile(4) OVER w AS quartile,
+        |  round(percent_rank() OVER w, 6) AS pct_rank,
+        |  round(cume_dist() OVER w, 6) AS cdist,
+        |  first_value(o_orderkey) OVER w AS first_ok,
+        |  last_value(o_orderkey) OVER (PARTITION BY o_custkey
+        |    ORDER BY day_no, o_orderkey
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS last_ok,
+        |  day_no - lag(day_no) OVER w AS days_since_prev
+        |FROM o
+        |WINDOW w AS (PARTITION BY o_custkey ORDER BY day_no, o_orderkey)
+        |ORDER BY o_custkey, o_orderkey""".stripMargin),
 
     // Set operators: INTERSECT / EXCEPT over per-status customer sets.
     // Both compile to aggregate + join (Catalyst rewrites INTERSECT to a
     // left-semi over distincts, EXCEPT to left-anti) — shuffle on the set
     // key only, dimension-sized exchanges at any fact scale.
-    "q_set_ops" -> { (s, d) =>
+    Q("q_set_ops", { (s, d) =>
       val o = Tables.orders(s, d)
       def custs(status: String) =
         o.filter(col("o_orderstatus") === status).select("o_custkey").distinct()
@@ -62,13 +78,21 @@ object SqlSurface {
         .unionByName(f.except(open).withColumn("op", lit("f_only")))
         .orderBy("op", "o_custkey")
     },
+      """WITH fc AS (SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F'),
+        |oc AS (SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'O')
+        |SELECT o_custkey, 'both' AS op
+        |  FROM (SELECT * FROM fc INTERSECT SELECT * FROM oc)
+        |UNION ALL
+        |SELECT o_custkey, 'f_only' AS op
+        |  FROM (SELECT * FROM fc EXCEPT SELECT * FROM oc)
+        |ORDER BY op, o_custkey""".stripMargin),
 
     // GROUPING SETS with grouping_id: the dashboard lattice shapes CUBE/
     // ROLLUP can't express (two independent single-column slices + grand
     // total, nothing else). One pass — Spark expands the sets inside a
     // single Expand+Aggregate, so the fact is scanned once regardless of
     // how many sets are requested.
-    "q_grouping_sets" -> { (s, d) =>
+    Q("q_grouping_sets", { (s, d) =>
       Tables.orders(s, d).createOrReplaceTempView("v_orders")
       s.sql(
         """SELECT coalesce(o_orderstatus, 'ALL') AS status,
@@ -80,13 +104,21 @@ object SqlSurface {
           |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
           |ORDER BY gid, status, priority""".stripMargin)
     },
+      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
+        |  coalesce(o_orderpriority, 'ALL') AS priority,
+        |  CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
+        |  count(*) AS n,
+        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
+        |FROM orders
+        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
+        |ORDER BY gid, status, priority""".stripMargin),
 
     // Correlated subqueries: EXISTS (decorrelated by Catalyst to a
     // left-semi join), a correlated scalar COUNT (left outer + aggregate),
     // and an uncorrelated scalar threshold. The money comparison runs in
     // exact DECIMAL on both engines (price·N > Σprice) — a float average
     // would let boundary rows flip on summation order.
-    "q_subqueries" -> { (s, d) =>
+    Q("q_subqueries", { (s, d) =>
       Tables.orders(s, d).createOrReplaceTempView("v_orders")
       Tables.lineitem(s, d).createOrReplaceTempView("v_lineitem")
       s.sql(
@@ -100,6 +132,15 @@ object SqlSurface {
           |      > (SELECT sum(CAST(o_totalprice AS DECIMAL(18,2))) FROM v_orders)
           |ORDER BY o_orderkey""".stripMargin)
     },
+      """SELECT o_orderkey, o_totalprice,
+        |  (SELECT count(*) FROM lineitem l
+        |    WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 25) AS n_heavy
+        |FROM orders o
+        |WHERE EXISTS (SELECT 1 FROM lineitem l
+        |        WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity >= 49.5)
+        |  AND CAST(o_totalprice AS DECIMAL(18,2)) * (SELECT count(*) FROM orders)
+        |      > (SELECT sum(CAST(o_totalprice AS DECIMAL(18,2))) FROM orders)
+        |ORDER BY o_orderkey""".stripMargin),
 
     // RECURSIVE CTE (Spark 4's WITH RECURSIVE / UnionLoop): a compounded
     // quarterly revenue index — index_q = index_{q−1} · rev_q div
@@ -115,7 +156,7 @@ object SqlSurface {
     // 12 s steady at sf0.1, quarterly ~1/3 of that. The spine is
     // densified by row_number (bounded window) so a missing quarter
     // can't silently stop the loop on one engine only.
-    "q_recursive_cte" -> { (s, d) =>
+    Q("q_recursive_cte", { (s, d) =>
       import graft.CacheScope.TrackedDataset
       // the fact aggregate runs ONCE, outside the loop: UnionLoop
       // re-evaluates every plan it references per iteration, so an
@@ -156,12 +197,30 @@ object SqlSurface {
           |FROM idx i JOIN v_quarterly mo ON mo.m = i.m
           |ORDER BY mo.quarter_key""".stripMargin)
     },
+      """WITH RECURSIVE monthly AS (
+        | SELECT quarter_key, rev,
+        |  CAST(row_number() OVER (ORDER BY quarter_key) AS BIGINT) AS m
+        | FROM (SELECT (year(o_orderdate) * 10 + quarter(o_orderdate)) AS quarter_key,
+        |        CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) // 100 AS rev
+        |       FROM orders GROUP BY 1)),
+        |idx(m, index_ppm) AS (
+        | SELECT CAST(1 AS BIGINT), CAST(1000000 AS BIGINT)
+        | UNION ALL
+        | SELECT i.m + 1, (i.index_ppm * m2.rev) // m1.rev
+        | FROM idx i
+        | JOIN monthly m1 ON m1.m = i.m
+        | JOIN monthly m2 ON m2.m = i.m + 1)
+        |SELECT CAST(mo.quarter_key AS BIGINT) AS quarter_key,
+        | mo.rev AS rev_dollars, i.index_ppm
+        |FROM idx i JOIN monthly mo ON mo.m = i.m
+        |ORDER BY mo.quarter_key""".stripMargin),
 
     // LATERAL-style positional explode: token + position per document.
     // posexplode is a generator, not a join — map-side, zero shuffle; the
     // downstream ORDER BY is the driver-gate determinism requirement, not
     // part of the operator.
-    "q_lateral_explode" -> { (s, d) =>
+    // DuckDB zips same-SELECT unnests, reproducing posexplode
+    Q("q_lateral_explode", { (s, d) =>
       Tables.documents(s, d)
         .filter(col("doc_id") % 97 === 0)
         .select(col("doc_id"),
@@ -169,13 +228,21 @@ object SqlSurface {
         .withColumn("pos", col("pos").cast("long"))
         .orderBy("doc_id", "pos")
     },
+      """WITH t AS (SELECT doc_id,
+        |  list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS toks
+        |  FROM documents WHERE doc_id % 97 = 0)
+        |SELECT doc_id,
+        |  CAST(unnest(range(0, len(toks))) AS BIGINT) AS pos,
+        |  unnest(toks) AS token
+        |FROM t
+        |ORDER BY doc_id, pos""".stripMargin),
 
     // Ordered array collection: sort_array(collect_list) for a stable
     // cross-engine rendering (collect_list order is partition-dependent;
     // the sort makes it canonical), emitted as a joined string so the
     // hash compare is representation-independent. One shuffle on the
     // group key; arrays are bounded by per-order line count (≤7).
-    "q_collect_ops" -> { (s, d) =>
+    Q("q_collect_ops", { (s, d) =>
       Tables.lineitem(s, d)
         .groupBy("l_orderkey")
         .agg(
@@ -183,6 +250,10 @@ object SqlSurface {
           array_join(array_sort(collect_set(col("l_returnflag"))), ",").as("flags"))
         .orderBy("l_orderkey")
     },
+      """SELECT l_orderkey,
+        |  array_to_string(list_sort(list(l_linenumber)), ',') AS lines,
+        |  array_to_string(list_sort(list(DISTINCT l_returnflag)), ',') AS flags
+        |FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin),
 
     // DYNAMIC pivot — no fixed value list: Spark runs the distinct-
     // collection job first (the discovery cost q_a2_pivot's fixed list
@@ -190,7 +261,7 @@ object SqlSurface {
     // bounded-output aggregate; keep fixed lists when the schema is
     // contractual (the reference's 21-column bbox contract) and dynamic
     // when it's exploratory.
-    "q_pivot_dynamic" -> { (s, d) =>
+    Q("q_pivot_dynamic", { (s, d) =>
       Tables.orders(s, d)
         .groupBy(col("o_orderpriority").as("priority"))
         .pivot("o_orderstatus")
@@ -198,11 +269,16 @@ object SqlSurface {
         .na.fill(0)
         .orderBy("priority")
     },
+      """SELECT o_orderpriority AS priority,
+        | CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS "F",
+        | CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS "O",
+        | CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS "P"
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // UNPIVOT / melt — wide measures to long (id, measure, val) rows:
     // the inverse surface (Spark's Expand node, map-side ×3, no shuffle;
     // describeAll uses the same melt trick internally).
-    "q_unpivot" -> { (s, d) =>
+    Q("q_unpivot", { (s, d) =>
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_linenumber", "l_quantity",
           "l_extendedprice", "l_discount")
@@ -212,13 +288,20 @@ object SqlSurface {
           "measure", "val")
         .orderBy("l_orderkey", "l_linenumber", "measure")
     },
+      """SELECT l_orderkey, l_linenumber, m AS measure,
+        | CASE m WHEN 'l_quantity' THEN l_quantity
+        |        WHEN 'l_extendedprice' THEN l_extendedprice
+        |        ELSE l_discount END AS val
+        |FROM lineitem
+        |CROSS JOIN (SELECT unnest(['l_quantity', 'l_extendedprice', 'l_discount']) AS m)
+        |ORDER BY l_orderkey, l_linenumber, measure""".stripMargin),
 
     // Semi-structured column handling: from_json with an explicit schema
     // (the lake-table JSON-props shape — the reference's Kafka envelope
     // decode applied to a batch column). The parse is a codegen'd
     // expression, map-side; only the bounded per-type aggregate shuffles.
     // The oracle extracts the same field with regexp (engine-neutral).
-    "q_json_extract" -> { (s, d) =>
+    Q("q_json_extract", { (s, d) =>
       import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
       Tables.events(s, d)
         .withColumn("k",
@@ -230,6 +313,12 @@ object SqlSurface {
           countDistinct(col("k")).as("dk"))
         .orderBy("event_type")
     },
+      """WITH p AS (SELECT event_type,
+        |  CAST(regexp_extract(props, '"k": (\d+)', 1) AS BIGINT) AS k
+        | FROM events)
+        |SELECT event_type, count(*) AS n, CAST(sum(k) AS BIGINT) AS sum_k,
+        | min(k) AS min_k, max(k) AS max_k, count(DISTINCT k) AS dk
+        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // VARIANT (Spark 4's semi-structured type): parse_json once into a
     // binary variant column, then variant_get per access — schema-on-read
@@ -238,7 +327,7 @@ object SqlSurface {
     // shredded-variant storage path at scale). Same aggregate contract as
     // q_json_extract, so the two extraction surfaces gate against the
     // same ground truth.
-    "q_variant_extract" -> { (s, d) =>
+    Q("q_variant_extract", { (s, d) =>
       Tables.events(s, d)
         .withColumn("v", parse_json(col("props")))
         .withColumn("k", try_variant_get(col("v"), "$.k", "long"))
@@ -248,6 +337,12 @@ object SqlSurface {
           countDistinct(col("k")).as("dk"))
         .orderBy("event_type")
     },
+      """WITH p AS (SELECT event_type,
+        |  CAST(regexp_extract(props, '"k": (\d+)', 1) AS BIGINT) AS k
+        | FROM events)
+        |SELECT event_type, count(*) AS n, CAST(sum(k) AS BIGINT) AS sum_k,
+        | min(k) AS min_k, max(k) AS max_k, count(DISTINCT k) AS dk
+        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // Functional-dependency profiling — does a → b hold? The key-
     // discovery / dimension-design audit (the reference hand-picked its
@@ -255,7 +350,7 @@ object SqlSurface {
     // pass per dependency: groupBy(a) + countDistinct(b), violations =
     // groups where b isn't unique. Shuffle keys = distinct a values,
     // map-side combined; output is one audit row per dependency.
-    "q_fd_profile" -> { (s, d) =>
+    Q("q_fd_profile", { (s, d) =>
       val li = Tables.lineitem(s, d)
       val o = Tables.orders(s, d)
       def audit(df: DataFrame, a: String, b: String, dep: String) =
@@ -269,6 +364,25 @@ object SqlSurface {
         .unionByName(audit(o, "o_orderkey", "o_orderstatus", "o_orderkey->o_orderstatus"))
         .orderBy("dependency")
     },
+      """WITH d1 AS (
+        | SELECT 'l_orderkey->o_custkey' AS dependency,
+        |  count(*) AS n_lhs_values,
+        |  CAST(sum(CASE WHEN nb > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_violations
+        | FROM (SELECT l_orderkey, count(DISTINCT o_custkey) AS nb
+        |       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+        |       GROUP BY l_orderkey)),
+        |d2 AS (
+        | SELECT 'l_partkey->l_suppkey', count(*),
+        |  CAST(sum(CASE WHEN nb > 1 THEN 1 ELSE 0 END) AS BIGINT)
+        | FROM (SELECT l_partkey, count(DISTINCT l_suppkey) AS nb
+        |       FROM lineitem GROUP BY l_partkey)),
+        |d3 AS (
+        | SELECT 'o_orderkey->o_orderstatus', count(*),
+        |  CAST(sum(CASE WHEN nb > 1 THEN 1 ELSE 0 END) AS BIGINT)
+        | FROM (SELECT o_orderkey, count(DISTINCT o_orderstatus) AS nb
+        |       FROM orders GROUP BY o_orderkey))
+        |SELECT * FROM d1 UNION ALL SELECT * FROM d2 UNION ALL SELECT * FROM d3
+        |ORDER BY dependency""".stripMargin),
 
     // Typed cogroup — KeyValueGroupedDataset.cogroup over case-class-
     // encoded rows: the per-key escape hatch when relational operators
@@ -278,7 +392,7 @@ object SqlSurface {
     // iterator streams, state bounded by lines-per-order — never a
     // collect, never a cartesian. Money flows through DECIMAL→cents
     // Longs so the Scala-side sum is exact and engine-neutral.
-    "q_cogroup_audit" -> { (s, d) =>
+    Q("q_cogroup_audit", { (s, d) =>
       import s.implicits._
       import org.apache.spark.sql.types.DecimalType
       val o = Tables.orders(s, d).select(col("o_orderkey"),
@@ -299,6 +413,12 @@ object SqlSurface {
         .toDF("o_orderkey", "order_cents", "n_lines", "line_cents")
         .orderBy("o_orderkey")
     },
+      """SELECT o_orderkey,
+        | CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS order_cents,
+        | count(l_orderkey) AS n_lines,
+        | CAST(coalesce(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)), 0) AS BIGINT) AS line_cents
+        |FROM orders LEFT JOIN lineitem ON o_orderkey = l_orderkey
+        |GROUP BY 1, 2 ORDER BY 1""".stripMargin),
 
     // Calendar gap-fill: dense date spine (min..max order day) left-joined
     // to daily counts, absent days as 0 — the daily-cadence dashboard
@@ -306,7 +426,7 @@ object SqlSurface {
     // The spine derives from a 1-row aggregate and explodes to ~2.5k rows
     // — broadcast side of the join; the daily aggregate is the only
     // fact-sized work (one shuffle, map-side combined, date-bounded keys).
-    "q_gap_fill" -> { (s, d) =>
+    Q("q_gap_fill", { (s, d) =>
       val daily = Tables.orders(s, d)
         .groupBy(col("o_orderdate").cast("date").as("day"))
         .agg(count(lit(1)).as("n"))
@@ -315,150 +435,13 @@ object SqlSurface {
       spine.join(daily, Seq("day"), "left")
         .na.fill(0, Seq("n"))
         .orderBy("day")
-    }
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q_window_analytics" ->
-      """WITH o AS (SELECT *, CAST(datediff('day', DATE '1970-01-01',
-        |                     CAST(o_orderdate AS DATE)) AS BIGINT) AS day_no
-        |           FROM orders)
-        |SELECT o_custkey, o_orderkey,
-        |  row_number() OVER w AS seq,
-        |  ntile(4) OVER w AS quartile,
-        |  round(percent_rank() OVER w, 6) AS pct_rank,
-        |  round(cume_dist() OVER w, 6) AS cdist,
-        |  first_value(o_orderkey) OVER w AS first_ok,
-        |  last_value(o_orderkey) OVER (PARTITION BY o_custkey
-        |    ORDER BY day_no, o_orderkey
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS last_ok,
-        |  day_no - lag(day_no) OVER w AS days_since_prev
-        |FROM o
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY day_no, o_orderkey)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-    "q_set_ops" ->
-      """WITH fc AS (SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F'),
-        |oc AS (SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'O')
-        |SELECT o_custkey, 'both' AS op
-        |  FROM (SELECT * FROM fc INTERSECT SELECT * FROM oc)
-        |UNION ALL
-        |SELECT o_custkey, 'f_only' AS op
-        |  FROM (SELECT * FROM fc EXCEPT SELECT * FROM oc)
-        |ORDER BY op, o_custkey""".stripMargin,
-    "q_grouping_sets" ->
-      """SELECT coalesce(o_orderstatus, 'ALL') AS status,
-        |  coalesce(o_orderpriority, 'ALL') AS priority,
-        |  CAST(GROUPING(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
-        |  count(*) AS n,
-        |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        |ORDER BY gid, status, priority""".stripMargin,
-    "q_subqueries" ->
-      """SELECT o_orderkey, o_totalprice,
-        |  (SELECT count(*) FROM lineitem l
-        |    WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 25) AS n_heavy
-        |FROM orders o
-        |WHERE EXISTS (SELECT 1 FROM lineitem l
-        |        WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity >= 49.5)
-        |  AND CAST(o_totalprice AS DECIMAL(18,2)) * (SELECT count(*) FROM orders)
-        |      > (SELECT sum(CAST(o_totalprice AS DECIMAL(18,2))) FROM orders)
-        |ORDER BY o_orderkey""".stripMargin,
-    "q_fd_profile" ->
-      """WITH d1 AS (
-        | SELECT 'l_orderkey->o_custkey' AS dependency,
-        |  count(*) AS n_lhs_values,
-        |  CAST(sum(CASE WHEN nb > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_violations
-        | FROM (SELECT l_orderkey, count(DISTINCT o_custkey) AS nb
-        |       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |       GROUP BY l_orderkey)),
-        |d2 AS (
-        | SELECT 'l_partkey->l_suppkey', count(*),
-        |  CAST(sum(CASE WHEN nb > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        | FROM (SELECT l_partkey, count(DISTINCT l_suppkey) AS nb
-        |       FROM lineitem GROUP BY l_partkey)),
-        |d3 AS (
-        | SELECT 'o_orderkey->o_orderstatus', count(*),
-        |  CAST(sum(CASE WHEN nb > 1 THEN 1 ELSE 0 END) AS BIGINT)
-        | FROM (SELECT o_orderkey, count(DISTINCT o_orderstatus) AS nb
-        |       FROM orders GROUP BY o_orderkey))
-        |SELECT * FROM d1 UNION ALL SELECT * FROM d2 UNION ALL SELECT * FROM d3
-        |ORDER BY dependency""".stripMargin,
-    "q_cogroup_audit" ->
-      """SELECT o_orderkey,
-        | CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS order_cents,
-        | count(l_orderkey) AS n_lines,
-        | CAST(coalesce(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)), 0) AS BIGINT) AS line_cents
-        |FROM orders LEFT JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-    "q_pivot_dynamic" ->
-      """SELECT o_orderpriority AS priority,
-        | CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS "F",
-        | CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS "O",
-        | CAST(sum(CASE WHEN o_orderstatus = 'P' THEN 1 ELSE 0 END) AS BIGINT) AS "P"
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, m AS measure,
-        | CASE m WHEN 'l_quantity' THEN l_quantity
-        |        WHEN 'l_extendedprice' THEN l_extendedprice
-        |        ELSE l_discount END AS val
-        |FROM lineitem
-        |CROSS JOIN (SELECT unnest(['l_quantity', 'l_extendedprice', 'l_discount']) AS m)
-        |ORDER BY l_orderkey, l_linenumber, measure""".stripMargin,
-    "q_json_extract" ->
-      """WITH p AS (SELECT event_type,
-        |  CAST(regexp_extract(props, '"k": (\d+)', 1) AS BIGINT) AS k
-        | FROM events)
-        |SELECT event_type, count(*) AS n, CAST(sum(k) AS BIGINT) AS sum_k,
-        | min(k) AS min_k, max(k) AS max_k, count(DISTINCT k) AS dk
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_variant_extract" ->
-      """WITH p AS (SELECT event_type,
-        |  CAST(regexp_extract(props, '"k": (\d+)', 1) AS BIGINT) AS k
-        | FROM events)
-        |SELECT event_type, count(*) AS n, CAST(sum(k) AS BIGINT) AS sum_k,
-        | min(k) AS min_k, max(k) AS max_k, count(DISTINCT k) AS dk
-        |FROM p GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_recursive_cte" ->
-      """WITH RECURSIVE monthly AS (
-        | SELECT quarter_key, rev,
-        |  CAST(row_number() OVER (ORDER BY quarter_key) AS BIGINT) AS m
-        | FROM (SELECT (year(o_orderdate) * 10 + quarter(o_orderdate)) AS quarter_key,
-        |        CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) // 100 AS rev
-        |       FROM orders GROUP BY 1)),
-        |idx(m, index_ppm) AS (
-        | SELECT CAST(1 AS BIGINT), CAST(1000000 AS BIGINT)
-        | UNION ALL
-        | SELECT i.m + 1, (i.index_ppm * m2.rev) // m1.rev
-        | FROM idx i
-        | JOIN monthly m1 ON m1.m = i.m
-        | JOIN monthly m2 ON m2.m = i.m + 1)
-        |SELECT CAST(mo.quarter_key AS BIGINT) AS quarter_key,
-        | mo.rev AS rev_dollars, i.index_ppm
-        |FROM idx i JOIN monthly mo ON mo.m = i.m
-        |ORDER BY mo.quarter_key""".stripMargin,
-    // DuckDB zips same-SELECT unnests, reproducing posexplode
-    "q_lateral_explode" ->
-      """WITH t AS (SELECT doc_id,
-        |  list_filter(string_split_regex(text, '\s+'), x -> x <> '') AS toks
-        |  FROM documents WHERE doc_id % 97 = 0)
-        |SELECT doc_id,
-        |  CAST(unnest(range(0, len(toks))) AS BIGINT) AS pos,
-        |  unnest(toks) AS token
-        |FROM t
-        |ORDER BY doc_id, pos""".stripMargin,
-    "q_collect_ops" ->
-      """SELECT l_orderkey,
-        |  array_to_string(list_sort(list(l_linenumber)), ',') AS lines,
-        |  array_to_string(list_sort(list(DISTINCT l_returnflag)), ',') AS flags
-        |FROM lineitem GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin,
-    "q_gap_fill" ->
+    },
       """WITH daily AS (SELECT CAST(o_orderdate AS DATE) AS day, count(*) AS n
         |               FROM orders GROUP BY 1),
         |b AS (SELECT min(day) AS lo, max(day) AS hi FROM daily),
         |spine AS (SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS day FROM b)
         |SELECT s.day, coalesce(n, 0) AS n
         |FROM spine s LEFT JOIN daily USING (day)
-        |ORDER BY day""".stripMargin
+        |ORDER BY day""".stripMargin)
   )
 }

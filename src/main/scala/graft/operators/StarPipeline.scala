@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import graft.functions.Scalars._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   * broadcast joins. Every dimension join is a broadcast: the fact table
   * is never shuffled again after the orderkey join.
   */
-object StarPipeline {
+object StarPipeline extends QueryModule {
 
   /** The flat pre-star fact row (the reference's `accidentes_final`):
     * lineitem enriched with order, part, and supplier-nation attributes
@@ -99,23 +99,6 @@ object StarPipeline {
       col("l_quantity"), col("l_extendedprice"), col("l_discount"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // The flagship: full 8-dim star build, FK-resolved fact rows.
-    "q_star_fact" -> { (s, d) =>
-      fact(s, d).orderBy("l_orderkey", "l_linenumber")
-    },
-    // Per-dim contract: distinct natural keys + deterministic surrogates.
-    "q_star_dim_date" -> { (s, d) =>
-      dims(s, d)("dim_date").orderBy("dim_date_id")
-    },
-    "q_star_dim_flags" -> { (s, d) =>
-      dims(s, d)("dim_flags").orderBy("dim_flags_id")
-    },
-    "q_star_dim_part" -> { (s, d) =>
-      dims(s, d)("dim_part").orderBy("dim_part_id")
-    }
-  )
-
   /** Shared oracle CTEs: the flat fact and each dim as
     * distinct + row_number. (package-visible: Pipeline's idempotence
     * oracle recounts the same shapes.)
@@ -155,36 +138,46 @@ object StarPipeline {
     "dim_qty"      -> Seq("qty_bin"),
     "dim_price"    -> Seq("price_band"))
 
-  def oracles: Map[String, String] = {
-    val dimCtes = dimSqlSpecs.map { case (n, k) => dimSql(n, k) }.mkString(",\n")
-    val joins = dimSqlSpecs.map { case (n, k) =>
-      // NULL-safe equality mirrors Star.resolveDims' `<=>` (the
-      // reference's dict probe matches None keys too).
-      val cond = k.map(c => s"f.$c IS NOT DISTINCT FROM $n.$c").mkString(" AND ")
-      s"LEFT JOIN $n ON $cond"
-    }.mkString("\n")
-    Map(
-      "q_star_fact" ->
-        s"""WITH f AS ($flatFactSql),
-           |$dimCtes
-           |SELECT f.l_orderkey, f.l_linenumber, dim_date_id, dim_status_id,
-           | dim_priority_id, dim_flags_id, dim_part_id, dim_nation_id,
-           | dim_qty_id, dim_price_id, l_quantity, l_extendedprice, l_discount
-           |FROM f
-           |$joins
-           |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-      "q_star_dim_date" ->
-        s"""WITH f AS ($flatFactSql),
-           |${dimSql("dim_date", Seq("y", "m", "dom", "dayname"))}
-           |SELECT * FROM dim_date ORDER BY dim_date_id""".stripMargin,
-      "q_star_dim_flags" ->
-        s"""WITH f AS ($flatFactSql),
-           |${dimSql("dim_flags", Seq("l_returnflag", "l_linestatus"))}
-           |SELECT * FROM dim_flags ORDER BY dim_flags_id""".stripMargin,
-      "q_star_dim_part" ->
-        s"""WITH f AS ($flatFactSql),
-           |${dimSql("dim_part", Seq("p_brand", "p_type"))}
-           |SELECT * FROM dim_part ORDER BY dim_part_id""".stripMargin
-    )
-  }
+  // The star-fact oracle's dim CTEs and FK joins
+  private def dimCtes: String = dimSqlSpecs.map { case (n, k) => dimSql(n, k) }.mkString(",\n")
+  private def joins: String = dimSqlSpecs.map { case (n, k) =>
+    // NULL-safe equality mirrors Star.resolveDims' `<=>` (the
+    // reference's dict probe matches None keys too).
+    val cond = k.map(c => s"f.$c IS NOT DISTINCT FROM $n.$c").mkString(" AND ")
+    s"LEFT JOIN $n ON $cond"
+  }.mkString("\n")
+
+  def entries: Seq[Q] = Seq(
+    // The flagship: full 8-dim star build, FK-resolved fact rows.
+    Q("q_star_fact", { (s, d) =>
+      fact(s, d).orderBy("l_orderkey", "l_linenumber")
+    },
+      s"""WITH f AS ($flatFactSql),
+         |$dimCtes
+         |SELECT f.l_orderkey, f.l_linenumber, dim_date_id, dim_status_id,
+         | dim_priority_id, dim_flags_id, dim_part_id, dim_nation_id,
+         | dim_qty_id, dim_price_id, l_quantity, l_extendedprice, l_discount
+         |FROM f
+         |$joins
+         |ORDER BY l_orderkey, l_linenumber""".stripMargin),
+    // Per-dim contract: distinct natural keys + deterministic surrogates.
+    Q("q_star_dim_date", { (s, d) =>
+      dims(s, d)("dim_date").orderBy("dim_date_id")
+    },
+      s"""WITH f AS ($flatFactSql),
+         |${dimSql("dim_date", Seq("y", "m", "dom", "dayname"))}
+         |SELECT * FROM dim_date ORDER BY dim_date_id""".stripMargin),
+    Q("q_star_dim_flags", { (s, d) =>
+      dims(s, d)("dim_flags").orderBy("dim_flags_id")
+    },
+      s"""WITH f AS ($flatFactSql),
+         |${dimSql("dim_flags", Seq("l_returnflag", "l_linestatus"))}
+         |SELECT * FROM dim_flags ORDER BY dim_flags_id""".stripMargin),
+    Q("q_star_dim_part", { (s, d) =>
+      dims(s, d)("dim_part").orderBy("dim_part_id")
+    },
+      s"""WITH f AS ($flatFactSql),
+         |${dimSql("dim_part", Seq("p_brand", "p_type"))}
+         |SELECT * FROM dim_part ORDER BY dim_part_id""".stripMargin)
+  )
 }

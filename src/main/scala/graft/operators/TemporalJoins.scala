@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * rows — deliberately; a shuffle range join would only win when BOTH
   * sides are large, where the banding trick in Dedup applies instead).
   */
-object TemporalJoins {
+object TemporalJoins extends QueryModule {
 
   /** As-of join via union + carry-forward.
     *
@@ -157,118 +157,92 @@ object TemporalJoins {
       .orderBy("day")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The as-of entries' inputs: purchase probes and signup values, event
+    * times truncated to the second.
+    */
+  private def purchasesAndSignups(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val evs = Tables.events(s, d)
+      .select(col("event_id"), col("user_id"),
+        date_trunc("second", col("ts")).as("ts"),
+        col("event_type"), col("value"))
+    val purchases = evs.filter(col("event_type") === "purchase")
+      .select("event_id", "user_id", "ts")
+    val signups = evs.filter(col("event_type") === "signup")
+      .select(col("user_id"), col("ts"), col("value").as("signup_value"))
+    (purchases, signups)
+  }
+
+  /** The as-of oracles' shared CTEs: `e` the truncated events, `p` the
+    * purchases, `sg` one signup value per user and second.
+    */
+  private def asofCtesSql: String =
+    """WITH e AS (SELECT event_id, user_id, date_trunc('second', ts) AS ts,
+      |                  event_type, value FROM events),
+      |p AS (SELECT event_id, user_id, ts FROM e WHERE event_type = 'purchase'),
+      |sg AS (SELECT user_id, ts, max(value) AS signup_value FROM e
+      |       WHERE event_type = 'signup' GROUP BY user_id, ts)
+      |""".stripMargin
+
+  def entries: Seq[Q] = Seq(
     // As-of: each purchase event picks up the latest preceding signup
     // value of the same user (the profile-enrichment shape).
-    "q_asof_join" -> { (s, d) =>
-      val evs = Tables.events(s, d)
-        .select(col("event_id"), col("user_id"),
-          date_trunc("second", col("ts")).as("ts"),
-          col("event_type"), col("value"))
-      val purchases = evs.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val signups = evs.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts"), col("value").as("signup_value"))
+    // DuckDB has a native ASOF JOIN — an independent implementation of the
+    // same semantics (ties: value-max among equal-ts right rows matches the
+    // carry-forward's trailing tie-break).
+    Q("q_asof_join", { (s, d) =>
+      val (purchases, signups) = purchasesAndSignups(s, d)
       asofJoin(purchases, signups, "user_id", "ts", "signup_value")
         .orderBy("event_id")
     },
+      asofCtesSql +
+        """SELECT p.event_id, p.user_id, p.ts, sg.signup_value
+          |FROM p ASOF LEFT JOIN sg
+          |  ON p.user_id = sg.user_id AND sg.ts <= p.ts
+          |ORDER BY p.event_id""".stripMargin),
     // As-of with staleness tolerance: same enrichment, but a signup older
     // than 3 days is too stale to carry (the pandas merge_asof(tolerance=)
     // contract). Matched-but-stale rows keep the row, null the value.
-    "q_asof_tolerance" -> { (s, d) =>
-      val evs = Tables.events(s, d)
-        .select(col("event_id"), col("user_id"),
-          date_trunc("second", col("ts")).as("ts"),
-          col("event_type"), col("value"))
-      val purchases = evs.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val signups = evs.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts"), col("value").as("signup_value"))
+    Q("q_asof_tolerance", { (s, d) =>
+      val (purchases, signups) = purchasesAndSignups(s, d)
       asofJoinWithin(purchases, signups, "user_id", "ts", "signup_value",
           toleranceSec = 259200L)
         .orderBy("event_id")
     },
+      asofCtesSql +
+        """SELECT p.event_id, p.user_id, p.ts,
+          | CASE WHEN sg.ts IS NOT NULL
+          |       AND date_diff('second', sg.ts, p.ts) <= 259200
+          |      THEN sg.signup_value END AS signup_value
+          |FROM p ASOF LEFT JOIN sg
+          |  ON p.user_id = sg.user_id AND sg.ts <= p.ts
+          |ORDER BY p.event_id""".stripMargin),
     // Forward as-of: each purchase picks the NEAREST FOLLOWING signup
     // within 3 days (merge_asof(direction='forward') / the "next
     // observation" shape). Same single-shuffle carry plan, reversed scan.
-    "q_asof_forward" -> { (s, d) =>
-      val evs = Tables.events(s, d)
-        .select(col("event_id"), col("user_id"),
-          date_trunc("second", col("ts")).as("ts"),
-          col("event_type"), col("value"))
-      val purchases = evs.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val signups = evs.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts"), col("value").as("signup_value"))
+    Q("q_asof_forward", { (s, d) =>
+      val (purchases, signups) = purchasesAndSignups(s, d)
       asofJoinWithin(purchases, signups, "user_id", "ts", "signup_value",
           toleranceSec = 259200L, direction = "forward")
         .orderBy("event_id")
     },
+      asofCtesSql +
+        """SELECT p.event_id, p.user_id, p.ts,
+          | CASE WHEN sg.ts IS NOT NULL
+          |       AND date_diff('second', p.ts, sg.ts) <= 259200
+          |      THEN sg.signup_value END AS signup_value
+          |FROM p ASOF LEFT JOIN sg
+          |  ON p.user_id = sg.user_id AND sg.ts >= p.ts
+          |ORDER BY p.event_id""".stripMargin),
     // Sweep-line peak concurrency: treating each event as a 30-minute
     // session, the per-day maximum number of simultaneously open sessions
     // and the earliest instant it is reached. The capacity-planning query
     // every event system runs; O(n) boundaries, day-partitioned cumsum,
     // no self-join.
-    "q_peak_concurrency" -> { (s, d) =>
+    Q("q_peak_concurrency", { (s, d) =>
       peakConcurrency(
         Tables.events(s, d).select(date_trunc("second", col("ts")).as("ts")),
         "ts", durSec = 1800L)
     },
-    // Range: orders bound to price bands.
-    "q_range_join" -> { (s, d) =>
-      val bands = s.createDataFrame(Seq(
-        (0.0, 50000.0, "low"), (50000.0, 150000.0, "mid"),
-        (150000.0, 1e9, "high")))
-        .toDF("lo", "hi", "band")
-      rangeJoin(Tables.orders(s, d), bands, "o_totalprice", "lo", "hi")
-        .groupBy("band")
-        .agg(count(lit(1)).as("cnt"),
-          Relational.sumDec(col("o_totalprice")).as("total"))
-        .orderBy("band")
-    }
-  )
-
-  def oracles: Map[String, String] = Map(
-    // DuckDB has a native ASOF JOIN — an independent implementation of the
-    // same semantics (ties: value-max among equal-ts right rows matches the
-    // carry-forward's trailing tie-break).
-    "q_asof_join" ->
-      """WITH e AS (SELECT event_id, user_id, date_trunc('second', ts) AS ts,
-        |                  event_type, value FROM events),
-        |p AS (SELECT event_id, user_id, ts FROM e WHERE event_type = 'purchase'),
-        |sg AS (SELECT user_id, ts, max(value) AS signup_value FROM e
-        |       WHERE event_type = 'signup' GROUP BY user_id, ts)
-        |SELECT p.event_id, p.user_id, p.ts, sg.signup_value
-        |FROM p ASOF LEFT JOIN sg
-        |  ON p.user_id = sg.user_id AND sg.ts <= p.ts
-        |ORDER BY p.event_id""".stripMargin,
-    "q_asof_tolerance" ->
-      """WITH e AS (SELECT event_id, user_id, date_trunc('second', ts) AS ts,
-        |                  event_type, value FROM events),
-        |p AS (SELECT event_id, user_id, ts FROM e WHERE event_type = 'purchase'),
-        |sg AS (SELECT user_id, ts, max(value) AS signup_value FROM e
-        |       WHERE event_type = 'signup' GROUP BY user_id, ts)
-        |SELECT p.event_id, p.user_id, p.ts,
-        | CASE WHEN sg.ts IS NOT NULL
-        |       AND date_diff('second', sg.ts, p.ts) <= 259200
-        |      THEN sg.signup_value END AS signup_value
-        |FROM p ASOF LEFT JOIN sg
-        |  ON p.user_id = sg.user_id AND sg.ts <= p.ts
-        |ORDER BY p.event_id""".stripMargin,
-    "q_asof_forward" ->
-      """WITH e AS (SELECT event_id, user_id, date_trunc('second', ts) AS ts,
-        |                  event_type, value FROM events),
-        |p AS (SELECT event_id, user_id, ts FROM e WHERE event_type = 'purchase'),
-        |sg AS (SELECT user_id, ts, max(value) AS signup_value FROM e
-        |       WHERE event_type = 'signup' GROUP BY user_id, ts)
-        |SELECT p.event_id, p.user_id, p.ts,
-        | CASE WHEN sg.ts IS NOT NULL
-        |       AND date_diff('second', p.ts, sg.ts) <= 259200
-        |      THEN sg.signup_value END AS signup_value
-        |FROM p ASOF LEFT JOIN sg
-        |  ON p.user_id = sg.user_id AND sg.ts >= p.ts
-        |ORDER BY p.event_id""".stripMargin,
-    "q_peak_concurrency" ->
       """WITH iv AS (
         | SELECT date_trunc('second', ts) AS ts,
         |  date_trunc('second', ts) + INTERVAL 1800 SECOND AS e,
@@ -290,8 +264,19 @@ object TemporalJoins {
         | FROM r)
         |SELECT day, CAST(max(running) AS BIGINT) AS peak,
         | min(CASE WHEN running = day_peak THEN bts END) AS peak_ts
-        |FROM p GROUP BY day ORDER BY day""".stripMargin,
-    "q_range_join" ->
+        |FROM p GROUP BY day ORDER BY day""".stripMargin),
+    // Range: orders bound to price bands.
+    Q("q_range_join", { (s, d) =>
+      val bands = s.createDataFrame(Seq(
+        (0.0, 50000.0, "low"), (50000.0, 150000.0, "mid"),
+        (150000.0, 1e9, "high")))
+        .toDF("lo", "hi", "band")
+      rangeJoin(Tables.orders(s, d), bands, "o_totalprice", "lo", "hi")
+        .groupBy("band")
+        .agg(count(lit(1)).as("cnt"),
+          Relational.sumDec(col("o_totalprice")).as("total"))
+        .orderBy("band")
+    },
       """WITH bands(lo, hi, band) AS (
         | VALUES (0.0, 50000.0, 'low'), (50000.0, 150000.0, 'mid'),
         |        (150000.0, 1e9, 'high'))
@@ -299,6 +284,6 @@ object TemporalJoins {
         | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM orders LEFT JOIN bands
         |  ON o_totalprice >= lo AND o_totalprice < hi
-        |GROUP BY 1 ORDER BY 1""".stripMargin
+        |GROUP BY 1 ORDER BY 1""".stripMargin)
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,7 +13,7 @@ import graft.CacheScope.TrackedDataset
   * at 100 TB these run map-side with zero shuffles; only the final
   * aggregations (if any) exchange data.
   */
-object TextAnalysis {
+object TextAnalysis extends QueryModule {
 
   /** Whitespace tokens: split on runs of whitespace, drop empty artifacts.
     * (A trim-then-split guard mishandles tab/newline-only text — Spark's
@@ -1846,731 +1846,6 @@ object TextAnalysis {
       .limit(k)
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Evidence-weighted collocations (Dunning G², top-15).
-    "q_collocations_g2" -> { (s, d) =>
-      collocationsG2(Tables.documents(s, d)) },
-    // Stylometric near-clone source pairs (Burrows' Delta, top-30 words).
-    "q_burrows_delta" -> { (s, d) => burrowsDelta(Tables.documents(s, d)) },
-    // Yule's K repetitiveness constant + TTR/hapax lexical richness.
-    "q_yule_k" -> { (s, d) => yuleK(Tables.documents(s, d)) },
-    "q_textrank" -> { (s, d) => textRank(Tables.documents(s, d)) },
-    // Spectral word embeddings: top-2 SVD subspace of the milli-bit
-    // PPMI matrix over the top-32 heads (Levy & Goldberg 2014).
-    "q_ppmi_svd" -> { (s, d) => ppmiSvd(Tables.documents(s, d)) },
-    "q_readability" -> { (s, d) => readability(Tables.documents(s, d)) },
-    "q_mojibake_audit" -> { (s, d) => mojibakeAudit(Tables.documents(s, d)) },
-    // Corpus-trained bigram-LM quality scoring (the CCNet perplexity
-    // filter shape) — per-doc mean -log2 P, full oracle replication.
-    "q_lm_score" -> { (s, d) =>
-      lmScore(Tables.documents(s, d))
-    },
-    // Interpolated Kneser-Ney bigram LM: the trained-model inspection
-    // table (top continuations + discount) and the per-source surprisal
-    // readout — the production smoothing beside q_lm_score's add-one.
-    "q_kn_lm" -> { (s, d) => knLmTopK(Tables.documents(s, d)) },
-    // PPMI top-k collocates per frequent head word (shared KN bigram
-    // frames; G²'s association-strength companion).
-    "q_ppmi_topk" -> { (s, d) => ppmiTopK(Tables.documents(s, d)) },
-    // Cross-source KN transfer matrix: mean surprisal of every source
-    // under each top-3-source-trained bigram LM, with coverage.
-    "q_domain_ppl" -> { (s, d) => domainPpl(Tables.documents(s, d)) },
-    // PLSA K=3, two unrolled EM rounds: top words per topic.
-    "q_plsa_topics" -> { (s, d) => plsaTopics(Tables.documents(s, d)) },
-    // PLSA K=3, two unrolled EM rounds: per-source topic mixtures.
-    "q_plsa_mix" -> { (s, d) => plsaMix(Tables.documents(s, d)) },
-    "q_kn_surprisal" -> { (s, d) => knSurprisal(Tables.documents(s, d)) },
-    // Tokenizer deploy path: train 6 merges, then encode the corpus with
-    // them in one pass; per-doc compression (n_raw vs n_bpe) is the
-    // standard tokenizer-fertility report.
-    "q_bpe_encode" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val merges = bpeTrain(s, docs, 6).orderBy("step").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      // mapSide encode (proven row-identical to the projection-chain
-      // form in Round6Spec): the k chained aggregate-folds each rebuild
-      // a full '|'-joined corpus string per row per level — measured
-      // execRun 78 s / cpu 43 s at sf0.1, allocation-stall bound; the
-      // imperative per-partition pass does the same greedy scan on
-      // String arrays in one level, and is the documented production
-      // path at tokenizer-real merge counts anyway
-      bpeEncodeMapSide(docs, merges).orderBy("doc_id")
-    },
-    // Tokenizer training: 10 BPE merge iterations over the corpus; the
-    // returned merge table is the trained artifact, replayed exactly by
-    // the DuckDB oracle (same argmax order, same greedy fold). k=10 (up
-    // from r5's 3) exercises the per-iteration localCheckpoint: plan
-    // depth and per-pass cost stay constant across iterations.
-    // One EM round of SentencePiece-style unigram-LM piece scoring over
-    // the BPE candidate vocab (fixed-point ppb posteriors).
-    "q_unigram_lm" -> { (s, d) => unigramLm(Tables.documents(s, d)) },
-    "q_bpe_train" -> { (s, d) =>
-      bpeTrain(s, Tables.documents(s, d), 10).orderBy("step")
-    },
-    // TOKENIZER FERTILITY AUDIT — bytes/chars/raw-words per BPE token,
-    // PER SOURCE: the data-card column that decides tokenizer/corpus fit
-    // (a source whose bytes-per-token runs hot against the corpus mean is
-    // under-served by the trained merges — more compute per byte of
-    // signal). Pairs q_data_card with the trained q_bpe_train artifact:
-    // train once, encode once (the same collected-merges deploy path as
-    // q_bpe_encode), then ONE source-cardinality aggregate over exact
-    // long sums with a single final division — no per-doc ratios
-    // averaged (ratio-of-sums, not sum-of-ratios, so the figure weighs
-    // documents by their mass exactly like a training run would).
-    "q_tokenizer_fertility" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val merges = bpeTrain(s, docs, 6).orderBy("step").collect()
-        .map(r => (r.getString(1), r.getString(2))).toSeq
-      val enc = bpeEncodeMapSide(docs, merges) // q_bpe_encode's rationale
-      val meta = docs.select(col("doc_id"), col("source"),
-        length(col("text")).cast("long").as("chars"),
-        expr("octet_length(text)").cast("long").as("bytes"))
-      enc.join(meta, Seq("doc_id"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_bpe")).as("n_bpe_tokens"),
-          round(sum(col("bytes")).cast("double") / sum(col("n_bpe")), 6)
-            .as("bytes_per_token"),
-          round(sum(col("chars")).cast("double") / sum(col("n_bpe")), 6)
-            .as("chars_per_token"),
-          round(sum(col("n_raw")).cast("double") / sum(col("n_bpe")), 6)
-            .as("raw_per_bpe"))
-        .orderBy("source")
-    },
-    "q_text_stats" -> { (s, d) =>
-      Tables.documents(s, d).select(
-          col("doc_id"),
-          tokenCount(col("text")).as("n_tokens"),
-          bpeTokenCount(col("text")).as("n_bpe_tokens"),
-          round(stopwordRatio(col("text")), 6).as("stop_ratio"),
-          round(punctRatio(col("text")), 6).as("punct_ratio"),
-          round(meanTokenLen(col("text")), 6).as("mean_tok_len"))
-        .orderBy("doc_id")
-    },
-    "q_text_quality" -> { (s, d) =>
-      Tables.documents(s, d).select(
-          col("doc_id"),
-          round(qualityScore(col("text")), 2).as("quality"))
-        .orderBy("doc_id")
-    },
-    // ISOTONIC CALIBRATION of a raw score against a labeled slice: the
-    // English-stopword ratio (2dp spine, ~30 levels) calibrated to the
-    // lang column's "is English" — the curation case where a cheap signal
-    // becomes a probability. The natural rate curve trends up with real
-    // dips (sampling noise at thin levels), so the gate exercises actual
-    // pooling; the planted textbook case lives in Round9Spec. rate is the
-    // raw per-level label rate; fitted is the PAVA repair (non-decreasing
-    // by construction, equal to rate wherever already monotone).
-    // Per-source distinctive vocabulary (top-5 Fightin' Words z-scores).
-    "q_fightin_words" -> { (s, d) =>
-      fightinWords(Tables.documents(s, d))
-    },
-    // Reliability diagram + ECE over the same score/label pair the
-    // isotonic fit calibrates — the before-picture its repair targets.
-    "q_calibration_bins" -> { (s, d) =>
-      calibrationBins(
-        Tables.documents(s, d).select(
-          round(stopwordRatio(col("text")), 2).as("q"),
-          (col("lang") === "en").cast("int").as("label")),
-        "q", "label")
-    },
-    "q_isotonic_calibrate" -> { (s, d) =>
-      isotonicCalibrate(
-        Tables.documents(s, d).select(
-          round(stopwordRatio(col("text")), 2).as("q"),
-          (col("lang") === "en").cast("int").as("label")),
-        "q", "label").orderBy("q")
-    },
-    // Parametric (logistic) calibration of the same score/label pair —
-    // the smooth 2-parameter twin of the isotonic step fit.
-    "q_platt_scaling" -> { (s, d) =>
-      plattScaling(
-        Tables.documents(s, d).select(
-          round(stopwordRatio(col("text")), 2).as("q"),
-          (col("lang") === "en").cast("int").as("label")),
-        "q", "label")
-    },
-    // Murphy decomposition of the same forecast/label pair: how much of
-    // the Brier score recalibration can fix (REL) vs never will (UNC).
-    "q_brier_decomp" -> { (s, d) =>
-      brierDecomposition(
-        Tables.documents(s, d).select(
-          round(stopwordRatio(col("text")), 2).as("q"),
-          (col("lang") === "en").cast("int").as("label")),
-        "q", "label")
-    },
-    // QUALITY-THRESHOLD SWEEP — the knob-tuning table behind every
-    // quality filter: at each candidate threshold, the docs and tokens
-    // that survive (as counts and ppm). One corpus scan collapses to the
-    // score-histogram frame (≤ ~12 distinct weighted-sum scores);
-    // everything after — the threshold explode, cumulative keeps, totals
-    // — runs on that dictionary-class frame. Choosing a cut means
-    // trading corpus mass for quality; this emits the whole trade-off,
-    // not one point.
-    "q_quality_sweep" -> { (s, d) =>
-      val thr = Seq(0.0, 0.2, 0.4, 0.6, 0.8, 1.0)
-      val g = Tables.documents(s, d)
-        .select(round(qualityScore(col("text")), 2).as("q"),
-          tokenCount(col("text")).cast("long").as("tok"))
-        .groupBy("q")
-        .agg(count(lit(1)).as("nd"), sum(col("tok")).as("nt"))
-      val tot = g.agg(sum(col("nd")).as("td"), sum(col("nt")).as("tt"))
-      val sweep = g
-        .select(explode(array(thr.map(lit): _*)).as("threshold"),
-          col("q"), col("nd"), col("nt"))
-        .filter(col("q") >= col("threshold"))
-        .groupBy("threshold")
-        .agg(sum(col("nd")).as("docs_kept"), sum(col("nt")).as("tokens_kept"))
-      tot.select(explode(array(thr.map(lit): _*)).as("threshold"),
-          col("td"), col("tt"))
-        .join(sweep, Seq("threshold"), "left")
-        .na.fill(0L, Seq("docs_kept", "tokens_kept"))
-        .select(col("threshold"), col("docs_kept"), col("tokens_kept"),
-          expr("docs_kept * 1000000 div td").as("docs_ppm"),
-          expr("tokens_kept * 1000000 div tt").as("tokens_ppm"))
-        .orderBy("threshold")
-    },
-    "q_text_langid" -> { (s, d) =>
-      Tables.documents(s, d).select(
-          col("doc_id"), col("lang"),
-          langId(col("text")).as("lang_pred"))
-        .orderBy("doc_id")
-    },
-    "q_text_fingerprint" -> { (s, d) =>
-      Tables.documents(s, d).select(
-          col("doc_id"),
-          fingerprint(col("text")).as("fp"))
-        .orderBy("doc_id")
-    },
-    // Corpus vocabulary: explode tokens → count → top 20 (the wordcount
-    // pattern: Generate → map-side partial agg → one shuffle of partial
-    // (token, count) pairs, never raw token rows).
-    "q_vocab_topk" -> { (s, d) =>
-      Tables.documents(s, d)
-        .select(explode(tokens(col("text"))).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("freq"))
-        .orderBy(desc("freq"), col("token"))
-        .limit(20)
-    },
-    // BPE-STYLE REGEX PRE-TOKENIZER COUNT — the GPT-2 pre-tokenization
-    // pattern (Radford et al. 2019; contractions, space-prefixed
-    // letter/digit/punct runs, whitespace runs) counted per source
-    // beside the whitespace count — the two token-counting conventions
-    // every budget/packing decision needs reconciled (a "512-token"
-    // budget means different bytes under each). Pattern restricted to
-    // constructs with IDENTICAL semantics in Java regex (Spark) and RE2
-    // (DuckDB): no lookaround, no backreferences; both engines resolve
-    // alternation leftmost-first. Pure map + source-cardinality
-    // aggregate; exact integer ratio ppm.
-    "q_pretokenizer" -> { (s, d) =>
-      val pat = "'(?:s|t|re|ve|m|ll|d)| ?\\p{L}+| ?\\p{N}+|" +
-        " ?[^\\s\\p{L}\\p{N}]+|\\s+"
-      // the synthetic corpus is pure space-separated words, where the
-      // two conventions agree by construction — plant contraction /
-      // digit / punctuation text on the first 20 docs (the q_pii_audit
-      // planting idiom) so the divergence path is exercised
-      val planted = when(col("doc_id") < 20,
-        concat(col("text"), lit(" it's v2.0-ready, isn't it?!")))
-        .otherwise(col("text"))
-      Tables.documents(s, d)
-        .select(col("source"),
-          tokenCount(planted).cast("long").as("ws"),
-          size(regexp_extract_all(planted, lit(pat), lit(0)))
-            .cast("long").as("pre"))
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("ws")).as("ws_tokens"),
-          sum(col("pre")).as("pre_tokens"))
-        .withColumn("pre_per_ws_ppm",
-          expr("pre_tokens * 1000000 div ws_tokens"))
-        .orderBy("source")
-    },
-
-    // VOCAB COVERAGE / OOV-RATE audit — the tokenizer-fit companion to
-    // q_tokenizer_fertility: fix the vocabulary at the corpus's top-V
-    // tokens (V=500, ties broken token-ascending) and report each
-    // source's out-of-vocabulary token ppm — the source whose oov_ppm
-    // runs hot is the one the tokenizer under-serves. The top-V selection
-    // runs on the native TopKPerKey exec over the token-count frame
-    // (map-side k-bounded heaps under a constant key — no vocab-sized
-    // sort, no unpartitioned window; a web-scale vocabulary never fits a
-    // single window task). The vocab then broadcasts into one anti-join-
-    // shaped counting pass (left join + null check, map-side combined).
-    "q_oov_rate" -> { (s, d) =>
-      // V=20 against this corpus's 31-token vocabulary so the OOV path is
-      // non-vacuous (V=32k against a real corpus; the knob, not the shape)
-      val v = 20
-      val tok = Tables.documents(s, d)
-        .select(col("source"), explode(tokens(col("text"))).as("token"))
-        .persistTracked()
-      val counts = tok.groupBy("token").agg(count(lit(1)).as("freq"))
-      val vocab = graft.plans.TopKPerKey.topKPerKey(
-          counts.withColumn("g", lit(1)), keys = Seq("g"),
-          order = Seq(("freq", false), ("token", true)), k = v)
-        .select(col("token"), lit(1).as("in_vocab"))
-      tok.join(broadcast(vocab), Seq("token"), "left")
-        .groupBy("source")
-        .agg(count(lit(1)).as("n_tokens"),
-          coalesce(sum(when(col("in_vocab").isNull, 1L)), lit(0L))
-            .as("oov_tokens"))
-        .select(col("source"), col("n_tokens"), col("oov_tokens"),
-          expr("oov_tokens * 1000000 div n_tokens").as("oov_ppm"))
-        .orderBy("source")
-    },
-    // VOCAB COVERAGE CURVE — q_oov_rate's design-side sibling: instead
-    // of auditing one fixed V, report what fraction of the corpus token
-    // MASS the top-c vocabulary covers at each candidate cutoff c (the
-    // curve a tokenizer designer reads to pick V in the first place).
-    // Cutoffs {5, 10, 20} against this corpus's 31-token vocabulary
-    // (32k/64k/128k against a real one — the knob, not the shape).
-    // Scale posture: token counts collapse map-side to a vocab-sized
-    // frame; the top-maxCutoff slice runs on the native TopKPerKey exec
-    // (k-bounded heaps, no vocab-wide sort/window); ranking then happens
-    // on that ≤20-row frame only, and the corpus total joins in as a
-    // broadcast scalar. Integer ppm end-to-end — hash-stable.
-    "q_vocab_coverage" -> { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val cutoffs = Seq(5, 10, 20)
-      val counts = Tables.documents(s, d)
-        .select(explode(tokens(col("text"))).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("freq"))
-        .persistTracked()
-      val tot = counts.agg(sum(col("freq")).as("total"))
-      val top = graft.plans.TopKPerKey.topKPerKey(
-          counts.withColumn("g", lit(1)), keys = Seq("g"),
-          order = Seq(("freq", false), ("token", true)), k = cutoffs.max)
-        // rank within the ≤ maxCutoff-row slice — bounded by construction
-        .withColumn("rn", row_number().over(Window.partitionBy("g")
-          .orderBy(desc("freq"), asc("token"))))
-      top.select(col("freq"), col("rn"),
-          explode(array(cutoffs.map(lit): _*)).as("cutoff"))
-        .filter(col("rn") <= col("cutoff"))
-        .groupBy("cutoff")
-        .agg(count(lit(1)).as("vocab_tokens"),
-          sum(col("freq")).as("covered"))
-        .crossJoin(broadcast(tot))
-        .select(col("cutoff"), col("vocab_tokens"),
-          col("covered"), expr("covered * 1000000 div total").as("mass_ppm"))
-        .orderBy("cutoff")
-    },
-
-    // TF-IDF term relevance over the corpus: summed tf-idf per term
-    // collapses to total_tf(term) × idf(term), so after the per-doc tf
-    // aggregate everything is term-cardinality-sized — two map-side-
-    // combined shuffles regardless of corpus size, and the doc count
-    // joins in as a broadcast scalar. Smooth idf = ln((N+1)/(df+1)) + 1
-    // (the standard sklearn-style smoothing, public knowledge); score
-    // rounded to 6 dp so the cross-engine ln() agrees bit-for-bit, and
-    // ranked (score desc, term asc) for a deterministic top-20.
-    "q_tfidf_topk" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val nDocs = docs.agg(count(lit(1)).as("n_docs"))
-      val tf = docs
-        .select(col("doc_id"), explode(tokens(lower(col("text")))).as("term"))
-        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      tf.groupBy("term")
-        .agg(count(lit(1)).as("df"), sum("tf").as("total_tf"))
-        .crossJoin(broadcast(nDocs))
-        .withColumn("idf",
-          log((col("n_docs") + 1).cast("double") / (col("df") + 1)) + 1)
-        .select(col("term"), col("df"),
-          round(col("total_tf") * col("idf"), 6).as("score"))
-        .orderBy(desc("score"), col("term"))
-        .limit(20)
-    },
-    // PMI-ranked collocations — "which word pairs stick together beyond
-    // chance" (Church & Hanks 1990): PMI(w1,w2) = log2(p(w1,w2) /
-    // (p(w1)·p(w2))), bigram p from adjacent-pair counts, unigram p from
-    // the full token stream. Pair construction is the q_bpe_pairs
-    // map-side generator; both count frames collapse map-side to
-    // vocabulary size before any join, so the unigram attach is a
-    // vocabulary-sized broadcast and the totals ride in as scalar
-    // broadcasts no matter the corpus size. Min support 3 kills the
-    // noise floor (PMI is max for hapax pairs); (pmi desc, w1, w2) is a
-    // total order so the top-20 is deterministic.
-    // SKIP-GRAM CO-OCCURRENCE PMI (window ≤ 3) — q_pmi_topk scores
-    // ADJACENT pairs (collocations); this is the word-embedding input
-    // shape (Mikolov et al. 2013's context window): unordered token
-    // pairs within distance 1..3, counted once per occurrence. Pair
-    // generation is map-side (per-position inner transform over the
-    // three offsets, nulls filtered — no self-join, no positions
-    // table); counts collapse to vocabulary²-bounded frames before the
-    // unigram broadcast joins, exactly the q_pmi_topk posture. The
-    // unordered (least, greatest) normalization halves the key space
-    // and matches the symmetric-window convention.
-    "q_cooccur_pmi" -> { (s, d) => cooccurPmi(Tables.documents(s, d)) },
-    // RAKE corpus keywords: stopword-delimited phrases, deg/freq word
-    // scores, top-15 phrases (map-side segmentation, bounded joins).
-    "q_rake_keywords" -> { (s, d) => rakeKeywords(Tables.documents(s, d)) },
-    // Good-Turing unseen-type mass + hapax smoothing kernel.
-    "q_good_turing" -> { (s, d) => goodTuring(Tables.documents(s, d)) },
-    // Per-class P/R/F1 + macro-F1/accuracy of the langid heuristic.
-    "q_macro_f1" -> { (s, d) => macroF1(Tables.documents(s, d)) },
-    // distinct-n diversity ratios for n = 1..4 (cross-doc repetition).
-    "q_rep_ngrams" -> { (s, d) => repNgrams(Tables.documents(s, d)) },
-    "q_pmi_topk" -> { (s, d) =>
-      val toks = Tables.documents(s, d)
-        .select(tokens(lower(col("text"))).as("toks"))
-      val uni = toks.select(explode(col("toks")).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("cu"))
-      val nu = uni.agg(sum(col("cu")).as("nu"))
-      val bc = toks.filter(size(col("toks")) >= 2)
-        .select(explode(transform(sequence(lit(1), size(col("toks")) - 1),
-          i => concat(element_at(col("toks"), i), lit(" "),
-            element_at(col("toks"), i + 1)))).as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("cb"))
-      val nb = bc.agg(sum(col("cb")).as("nb"))
-      // tokens contain no whitespace by construction, so the pair key
-      // splits back unambiguously — and only vocabulary-sized frames
-      // ever carry the split columns.
-      val pmi = log2((col("cb").cast("double") / col("nb").cast("double")) /
-        ((col("c1").cast("double") / col("nu").cast("double")) *
-          (col("c2").cast("double") / col("nu").cast("double"))))
-      bc.filter(col("cb") >= 3)
-        .withColumn("w1", split(col("pair"), " ").getItem(0))
-        .withColumn("w2", split(col("pair"), " ").getItem(1))
-        .join(broadcast(uni.select(col("w").as("w1"), col("cu").as("c1"))), Seq("w1"))
-        .join(broadcast(uni.select(col("w").as("w2"), col("cu").as("c2"))), Seq("w2"))
-        .crossJoin(broadcast(nu)).crossJoin(broadcast(nb))
-        .select(col("w1"), col("w2"), col("cb"), round(pmi, 6).as("pmi"))
-        .orderBy(desc("pmi"), col("w1"), col("w2"))
-        .limit(20)
-    },
-    // BPE-style adjacent-pair statistics — the inner loop of tokenizer
-    // training (Sennrich et al. 2016 "Neural Machine Translation of Rare
-    // Words with Subword Units"): the most frequent adjacent token pair is
-    // the next merge candidate. Pair construction is a pure map-side
-    // generator over materialized token arrays (no self-join — a join of
-    // token rows on (doc_id, pos+1) shuffles the whole exploded corpus
-    // twice; `transform` over indices shuffles only the partial
-    // (pair, count) aggregates). Deterministic top-20 via (freq desc,
-    // pair asc).
-    "q_bpe_pairs" -> { (s, d) =>
-      Tables.documents(s, d)
-        .select(tokens(lower(col("text"))).as("toks"))
-        .filter(size(col("toks")) >= 2)
-        .select(explode(transform(sequence(lit(1), size(col("toks")) - 1),
-          i => concat(element_at(col("toks"), i), lit(" "),
-            element_at(col("toks"), i + 1)))).as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("freq"))
-        .orderBy(desc("freq"), col("pair"))
-        .limit(20)
-    },
-    // Document chunking: overlapping token windows (size 50, stride 40) —
-    // the training/RAG preprocessing shape. Map-side: materialized tokens,
-    // one generator (posexplode) per doc, no shuffle until a consumer
-    // aggregates. Chunk ids are (doc_id, chunk_idx), deterministic.
-    "q_text_chunk" -> { (s, d) =>
-      val C = 50; val stride = 40
-      Tables.documents(s, d)
-        .select(col("doc_id"), tokens(col("text")).as("toks"))
-        .select(col("doc_id"), col("toks"),
-          sequence(lit(1), greatest(size(col("toks")) - (C - stride), lit(1)),
-            lit(stride)).as("starts"))
-        .select(col("doc_id"),
-          posexplode(transform(col("starts"),
-            st => concat_ws(" ", slice(col("toks"), st, lit(C))))).as(Seq("chunk_idx", "chunk")))
-        .withColumn("n_chunk_tokens", tokenCount(col("chunk")))
-        .orderBy("doc_id", "chunk_idx")
-    },
-    // Repetition ratio: most-frequent-token share of the document (a
-    // boilerplate/spam signal for quality filtering). One explode +
-    // two bounded aggregations.
-    "q_text_repetition" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val tokenFreq = docs
-        .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
-        .groupBy("doc_id", "token").agg(count(lit(1)).as("cnt"))
-        .groupBy("doc_id").agg(max(col("cnt")).as("top_cnt"))
-      docs.select(col("doc_id"), tokenCount(col("text")).as("n"))
-        .join(tokenFreq, Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          when(col("n") === 0, 0.0)
-            .otherwise(col("top_cnt").cast("double") / col("n").cast("double"))
-            .as("rep_ratio"))
-        .orderBy("doc_id")
-    },
-    // TOP-BIGRAM SHARE (Gopher repetition filter, Rae et al. 2021 §A1.1:
-    // "fraction of tokens in the most common n-gram"): q_text_repetition's
-    // unigram screen misses looping generations that alternate two tokens
-    // ("the cat the cat …" has rep_ratio 0.5 but bigram share ~1.0).
-    // Bigrams are built map-side in ONE codegen'd projection
-    // (sequence+transform over the token array — no self-join, no
-    // window); the only shuffle is the (doc_id, bigram) count, and every
-    // per-doc frame is doc-length-bounded. The size≥2 guard matters:
-    // Spark's sequence(0, -1) generates DESCENDING, so an unguarded
-    // empty doc would fabricate a phantom bigram.
-    "q_top_bigram" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val bg = docs.select(col("doc_id"), tokens(col("text")).as("t"))
-        .filter(size(col("t")) >= 2)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(0, size(t) - 2)," +
-            " i -> concat(element_at(t, i + 1), ' ', element_at(t, i + 2)))"))
-          .as("bg"))
-        .groupBy("doc_id", "bg").agg(count(lit(1)).as("cnt"))
-        .groupBy("doc_id").agg(max(col("cnt")).as("top_cnt"),
-          sum(col("cnt")).as("n_bigrams"))
-      docs.select("doc_id").join(bg, Seq("doc_id"), "left")
-        .na.fill(0L, Seq("top_cnt", "n_bigrams"))
-        .select(col("doc_id"), col("n_bigrams"), col("top_cnt"),
-          when(col("n_bigrams") === 0, 0.0)
-            .otherwise(round(col("top_cnt").cast("double") /
-              col("n_bigrams").cast("double"), 6)).as("rep2_ratio"))
-        .orderBy("doc_id")
-    },
-    // Stratified deterministic sampling: ~40% of docs per language stratum
-    // via the md5 bucket (reproducible across engines/partitionings,
-    // unlike df.sample whose output depends on partition layout).
-    "q_stratified_sample" -> { (s, d) =>
-      val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long") % 100
-      Tables.documents(s, d)
-        .filter(bucket < 40)
-        .groupBy("lang").agg(count(lit(1)).as("sampled"))
-        .orderBy("lang")
-    },
-    // Percentile-threshold quality filtering: drop the bottom decile by
-    // mean-token-length. The threshold comes from the DISTRIBUTED exact
-    // percentile (value-count shuffle + interpolation — nothing buffers
-    // all values; Analytics.exactPercentiles) and is broadcast back as a
-    // scalar filter.
-    "q_quality_filter" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-        .select(col("doc_id"), round(meanTokenLen(col("text")), 6).as("mtl"))
-      val p10 = Analytics.exactPercentiles(docs, "mtl", Seq("thr" -> 0.1))
-      docs.crossJoin(broadcast(p10))
-        .filter(col("mtl") >= col("thr"))
-        .agg(count(lit(1)).as("kept"),
-          round(min(col("mtl")), 6).as("min_kept_mtl"))
-    },
-    // DISPARATE-IMPACT AUDIT of the quality filter — the four-fifths
-    // rule (EEOC 1978; Feldman et al. 2015 brought it to ML pipelines):
-    // per language group, the bottom-decile mean-token-length filter's
-    // keep rate must be ≥ 80% of the most-favored group's, or the
-    // filter is flagged as disparately excluding that language from the
-    // corpus. The fairness pre-flight a multilingual curation run needs
-    // BEFORE shipping a filter tuned on one language's statistics.
-    // Exactness: rates as integer ppm; the 4/5ths test is the exact
-    // integer cross-multiply rate·5 < max_rate·4 (no float compare);
-    // only the reported di_ratio is a rounded double. Scale: one
-    // broadcast threshold, one lang-cardinality aggregate, one
-    // broadcast max — no joins beyond scalars.
-    "q_disparate_impact" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-        .select(col("lang"), round(meanTokenLen(col("text")), 6).as("mtl"))
-      val thr = Analytics.exactPercentiles(docs, "mtl", Seq("thr" -> 0.1))
-      disparateImpact(
-        docs.crossJoin(broadcast(thr))
-          .select(col("lang"), (col("mtl") >= col("thr")).as("keep")),
-        "lang", "keep")
-    },
-
-    // SORT-FREE decile report: bucket every doc by quality score WITHOUT
-    // a global ntile sort — the 9 exact decile thresholds come from the
-    // distributed percentile and broadcast back; assignment is a pure
-    // map-side when-chain. ntile(10) over all docs is a single-task
-    // total sort at 100 TB; this is two bounded passes + a map.
-    // CURRICULUM INTERLEAVE — deterministic data ordering for training:
-    // bucket docs into quality deciles (the sort-free threshold
-    // technique below), rank within each decile (PARTITIONED window —
-    // never a global row_number over the corpus), and emit the
-    // round-robin order (rank, decile): position k of the curriculum
-    // takes the k-th example of each decile in turn, so every training
-    // window sees the full difficulty mix while within-decile order
-    // stays stable under appends. Top-20 via TakeOrdered, no global
-    // sort materialization.
-    "q_curriculum" -> { (s, d) =>
-      val scored = Tables.documents(s, d)
-        .select(col("doc_id"), length(col("text")).cast("double").as("score"))
-      val thr = Analytics.exactPercentiles(scored, "score",
-        (1 to 9).map(i => s"t$i" -> i / 10.0))
-      val bucketed = scored.crossJoin(broadcast(thr))
-        .withColumn("decile", lit(1) +
-          (1 to 9).map(i => when(col("score") > col(s"t$i"), 1).otherwise(0))
-            .reduce(_ + _))
-      bucketed
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("decile")
-            .orderBy(col("score"), col("doc_id"))))
-        .select(col("doc_id"), col("decile"), col("rn"))
-        .orderBy(col("rn"), col("decile"), col("doc_id"))
-        .limit(20)
-    },
-    "q_decile_report" -> { (s, d) =>
-      val scored = Tables.documents(s, d)
-        .select(col("doc_id"), length(col("text")).cast("double").as("score"))
-      val thr = Analytics.exactPercentiles(scored, "score",
-        (1 to 9).map(i => s"t$i" -> i / 10.0))
-      scored.crossJoin(broadcast(thr))
-        .withColumn("decile", lit(1) +
-          (1 to 9).map(i => when(col("score") > col(s"t$i"), 1).otherwise(0))
-            .reduce(_ + _))
-        .groupBy("decile")
-        .agg(count(lit(1)).as("cnt"),
-          min(col("score")).as("min_score"), max(col("score")).as("max_score"))
-        .orderBy("decile")
-    },
-    // WEIGHTED deterministic sampling: each doc kept with probability
-    // proportional to its token count (capped at 1) — the token-budget
-    // resampling move behind source-mix rebalancing (q_source_mix emits
-    // the rates; this applies one). Inclusion is a pure map-side integer
-    // compare: u = first 32 md5 bits of the id vs p·2^32 — reproducible
-    // across engines, partitionings and reruns, unlike rand()-based
-    // df.sample. No shuffle until the audit aggregate.
-    "q_weighted_sample" -> { (s, d) =>
-      val u = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-      val p = least(lit(1.0), tokenCount(col("text")).cast("double") / 400.0)
-      Tables.documents(s, d)
-        .withColumn("n_tok", tokenCount(col("text")))
-        .filter(u.cast("double") < p * 4294967296.0)
-        .groupBy("lang")
-        .agg(count(lit(1)).as("kept"), sum(col("n_tok")).cast("long").as("kept_tokens"))
-        .orderBy("lang")
-    },
-    // Deterministic train/val/test split: md5 of the id buckets every doc
-    // stably (the split survives reruns, repartitions, and engines — the
-    // property a training pipeline needs; xxhash64 would be faster but has
-    // no cross-engine oracle).
-    "q_sample_split" -> { (s, d) =>
-      val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("long") % 100
-      val split = when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
-      Tables.documents(s, d)
-        .select(split.as("split"))
-        .groupBy("split").agg(count(lit(1)).as("cnt"))
-        .orderBy("split")
-    },
-    // Rare-bigram rate — a character-LM quality signal with integer
-    // determinism: corpus-wide character-bigram counts (vocabulary
-    // bounded by alphabet², broadcast back), then per-doc counts of
-    // bigrams rarer than 0.01% of the corpus mass. Garbage text (mojibake,
-    // binary spill, keyboard mash) concentrates in rare bigrams; clean
-    // prose doesn't. Integer counts only — a per-doc Σlog p score would
-    // hash-drift on float summation order across engines.
-    // Scale: bigram extraction is map-side (codegen'd transform, one
-    // explode); the counts aggregate shuffles alphabet²-bounded keys;
-    // the re-join is a broadcast. Two passes over the exploded bigrams,
-    // both pruned to (doc_id, bg).
-    // Character-entropy quality signal: H = Σ -p·log2(p) over the doc's
-    // char distribution — low entropy flags repeated-char junk, high
-    // flags random noise; the classic cheap screen beside the rare-bigram
-    // rate. Determinism: each term is rounded to 6dp and summed as
-    // DECIMAL, so the total is order-independent (a raw double Σ would
-    // drift with partial-agg order); the per-term libm-ulp rounding risk
-    // is the same class the tfidf oracle already accepts (round-6 of ln).
-    "q_text_entropy" -> { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val byDoc = Window.partitionBy("doc_id")
-      val counts = docs.filter(length(col("text")) > 0)
-        .select(col("doc_id"), explode(split(col("text"), "")).as("ch"))
-        .filter(col("ch") =!= "")
-        .groupBy("doc_id", "ch").agg(count(lit(1)).as("cnt"))
-        .withColumn("n", sum(col("cnt")).over(byDoc))
-      val term = round((col("cnt").cast("double") / col("n")) *
-        log2(col("n").cast("double") / col("cnt")), 6)
-      val ent = counts
-        .withColumn("t", term.cast(DecimalType(18, 6)))
-        .groupBy("doc_id")
-        .agg(max(col("n")).cast("long").as("n_chars"),
-          sum(col("t")).cast("double").as("entropy_bits"))
-      docs.select("doc_id").join(ent, Seq("doc_id"), "left")
-        .na.fill(0L, Seq("n_chars")).na.fill(0.0, Seq("entropy_bits"))
-        .orderBy("doc_id")
-    },
-
-    // Winnowing fingerprint selection (MOSS) — the position-robust dedup
-    // index: any ≥ (w+k-1)-token overlap between docs shares a selected
-    // fingerprint, at ~2/(w+1) index density.
-    "q_winnow" -> { (s, d) =>
-      winnow(Tables.documents(s, d))
-    },
-    // HILL TAIL-INDEX ESTIMATOR (Hill 1975) over document lengths:
-    // α̂ = 1 / [ mean_{i≤k} ln x_(i) − ln x_(k+1) ] on the k = 100
-    // largest documents. α ≤ 2 means infinite-variance length tails —
-    // the diagnosis that decides whether packing/batching plans can
-    // rely on mean-based sizing or must cap outliers (q_truncation_plan
-    // / q_winsorized_lift are the interventions; this is the test for
-    // whether they're needed). Scale: the top-(k+1) slice runs on the
-    // native TopKPerKey exec (k-bounded heaps, no corpus sort); ln
-    // values round to 6dp DECIMAL before the k-row fold; guarded NULL
-    // when the top slice is degenerate (all-equal lengths). Window runs
-    // on the ≤101-row slice only.
-    "q_hill_tail" -> { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      val k = 100
-      val top = graft.plans.TopKPerKey.topKPerKey(
-          Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
-            .withColumn("g", lit(1)),
-          keys = Seq("g"),
-          order = Seq(("n_chars", false), ("doc_id", true)), k = k + 1)
-        .withColumn("rn", row_number().over(Window.partitionBy("g")
-          .orderBy(desc("n_chars"), asc("doc_id"))))
-      val xk = top.filter(col("rn") === k + 1)
-        .select(col("n_chars").as("xk"))
-      val inv = col("sl").cast("double") / col("kk").cast("double") -
-        round(log(col("xk").cast("double")), 6)
-      top.filter(col("rn") <= k)
-        .select(round(log(col("n_chars").cast("double")), 6)
-          .cast(DecimalType(18, 6)).as("lx"))
-        .agg(count(lit(1)).as("kk"), sum(col("lx")).as("sl"))
-        .crossJoin(broadcast(xk))
-        .select(col("kk").as("k"), col("xk").as("x_k1"),
-          when(inv =!= 0.0, round(lit(1.0) / inv, 6)).as("alpha"))
-    },
-
-    // Zipf-law fit of the corpus vocabulary: OLS of ln(freq) on ln(rank)
-    // over the top-100 terms. The exponent (~1 for natural language) is a
-    // corpus-health signal — synthetic/templated text flattens the curve,
-    // boilerplate floods steepen it. Plan: the wordcount aggregate (one
-    // map-side-combined shuffle), a 100-row TakeOrdered to the bounded
-    // frame, a 100-row window rank (documented: never corpus-sized), and
-    // exact DECIMAL moment sums so the fold is order-independent; the
-    // 5 regression doubles derive from identical decimal sums on both
-    // engines.
-    "q_zipf_fit" -> { (s, d) =>
-      zipfFit(Tables.documents(s, d))
-    },
-    // Trained NB language ID, self-classified: the confusion matrix IS
-    // the report (diagonal mass = how separable the lang labels are).
-    "q_langid_nb" -> { (s, d) =>
-      langIdNaiveBayes(Tables.documents(s, d))
-    },
-    "q_rare_bigrams" -> { (s, d) =>
-      // single-row-group spread: substring(text,i,2) re-walks the string
-      // from byte 0 per position (O(len²)/doc), and BOTH passes pay it —
-      // measured 2×2.9 s single-task before the spread
-      val docs = Tables.documents(s, d)
-        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-      // Two passes over the exploded bigrams ON PURPOSE: each pass's
-      // shuffle is collapsed map-side (pass 1 to the alphabet²-bounded
-      // bigram vocabulary, pass 2 to one row per doc), so both exchanges
-      // are tiny; the explode itself is cheap codegen'd map work. The
-      // "obvious" fix — pre-aggregating a (doc_id, bigram) histogram to
-      // explode once — shuffles the doc×bigram cross instead and measured
-      // 1.3× SLOWER at sf0.1 (4.6 s → 6.1 s). Map-side combine beats
-      // explode-avoidance here.
-      val bg = docs
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id"), explode(expr(
-          "transform(sequence(1, length(text) - 1), i -> substring(text, i, 2))"))
-          .as("bg"))
-      val counts = bg.groupBy("bg").agg(count(lit(1)).as("cnt"))
-      val total = counts.agg(sum(col("cnt")).as("total"))
-      val perDoc = bg
-        .join(broadcast(counts), Seq("bg"))
-        .crossJoin(broadcast(total))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bigrams"),
-          sum(when(col("cnt") * 10000 < col("total"), 1L).otherwise(0L))
-            .as("n_rare"))
-      docs.select("doc_id").join(perDoc, Seq("doc_id"), "left")
-        .na.fill(0, Seq("n_bigrams", "n_rare"))
-        .orderBy("doc_id")
-    }
-  )
-
   /** DuckDB twin of [[tokens]] — shared across module oracles so the
     * tokenizer convention can't drift per copy.
     */
@@ -2797,1137 +2072,1807 @@ object TextAnalysis {
        | FROM bb JOIN cb USING (w1, w2) JOIN cu USING (w1)
        |  JOIN bwd USING (w2) CROSS JOIN gl)""".stripMargin
 
-  def oracles: Map[String, String] = {
-    val nTok = s"len(${tokensSql("text")})"
-    val stopRatio =
-      s"CASE WHEN $nTok=0 THEN 0.0 ELSE CAST(${hitsSql("text", enStopwords)} AS DOUBLE)/CAST($nTok AS DOUBLE) END"
-    val punctRatio =
-      s"CASE WHEN length(text)=0 THEN 0.0 ELSE CAST(length(text)-length(regexp_replace(text,'$punctClass','','g')) AS DOUBLE)/CAST(length(text) AS DOUBLE) END"
-    val meanTok =
-      s"CASE WHEN $nTok=0 THEN 0.0 ELSE CAST(list_sum(list_transform(${tokensSql("text")}, t -> length(t))) AS DOUBLE)/CAST($nTok AS DOUBLE) END"
-    val quality = qualitySql
-    val langScores = langStopwords.map { case (l, ws) => l -> hitsSql("text", ws) }
-    val maxScore = langScores.map(_._2).mkString("greatest(", ", ", ")")
-    val langCase = langScores
-      .map { case (l, sc) => s"WHEN $sc = $maxScore THEN '$l'" }
-      .mkString(" ")
-    Map(
-      // same KN count frames, same xlx identity, same rounded ordering
-      "q_collocations_g2" -> {
-        def xlx(c: String) =
-          s"(CASE WHEN $c > 0 THEN CAST($c AS DOUBLE) " +
-            s"* ln(CAST($c AS DOUBLE)) ELSE 0.0 END)"
-        ("WITH " + knCountCtesSql + ",\n" +
-          s"""c2 AS (SELECT w2, CAST(sum(cb) AS BIGINT) AS c2 FROM cb
-             |  GROUP BY 1),
-             |nn AS (SELECT CAST(sum(cb) AS BIGINT) AS nb FROM cb),
-             |j AS (
-             | SELECT w1, w2, cb, cu, c2, nb
-             | FROM cb JOIN cu USING (w1) JOIN c2 USING (w2)
-             |  CROSS JOIN nn),
-             |sc AS (
-             | SELECT w1, w2, cb AS n_pair,
-             |  round(2.0 * (${xlx("cb")} + ${xlx("cu - cb")}
-             |   + ${xlx("c2 - cb")} + ${xlx("nb - cu - c2 + cb")}
-             |   - ${xlx("cu")} - ${xlx("nb - cu")}
-             |   - ${xlx("c2")} - ${xlx("nb - c2")}
-             |   + ${xlx("nb")}), 4) AS g2
-             | FROM j)
-             |SELECT w1, w2, n_pair, g2 FROM sc
-             |ORDER BY g2 DESC, w1, w2 LIMIT 15""".stripMargin)
-      },
-      // same top-word list, same ppm freeze, same guarded z-variance,
-      // same 9dp |Δz| fold
-      "q_burrows_delta" -> {
-        val mu = "(CAST(sf AS DOUBLE) / CAST(k AS DOUBLE))"
-        val va = s"((CAST(sff AS DOUBLE) - CAST(k AS DOUBLE) * $mu * $mu)" +
-          " / greatest(CAST(k AS DOUBLE) - 1, 1.0))"
-        s"""WITH tok AS (
-           | SELECT source, unnest(${tokensSql("lower(text)")}) AS token
-           | FROM documents),
-           |topw AS (SELECT token FROM (
-           | SELECT token, count(*) AS cnt FROM tok GROUP BY 1
-           | ORDER BY cnt DESC, token LIMIT 30)),
-           |stot AS (SELECT source, count(*) AS nt FROM tok GROUP BY 1),
-           |cnts AS (
-           | SELECT source, token, count(*) AS c
-           | FROM tok JOIN topw USING (token) GROUP BY 1, 2),
-           |grid AS (SELECT source, nt, token FROM stot CROSS JOIN topw),
-           |f AS (
-           | SELECT g.source, g.token,
-           |  CAST(coalesce(c.c, 0) * 1000000 // g.nt AS BIGINT) AS fppm
-           | FROM grid g LEFT JOIN cnts c
-           |  ON g.source = c.source AND g.token = c.token),
-           |ws AS (SELECT token, CAST(count(*) AS BIGINT) AS k,
-           |  CAST(sum(fppm) AS BIGINT) AS sf,
-           |  CAST(sum(fppm * fppm) AS BIGINT) AS sff
-           | FROM f GROUP BY 1),
-           |wz AS (
-           | SELECT source, f.token,
-           |  (CAST(fppm AS DOUBLE) - $mu) / sqrt($va) AS z
-           | FROM f JOIN ws ON f.token = ws.token
-           | WHERE k > 1 AND $va > 0),
-           |pairs AS (
-           | SELECT a.source AS s1, b.source AS s2,
-           |  CAST(round(abs(a.z - b.z), 9) AS DECIMAL(18,9)) AS t
-           | FROM wz a JOIN wz b
-           |  ON a.token = b.token AND a.source < b.source)
-           |SELECT s1, s2, count(*) AS n_words,
-           | round(CAST(sum(t) AS DOUBLE) / CAST(count(*) AS DOUBLE), 4)
-           |  AS delta
-           |FROM pairs GROUP BY 1, 2 ORDER BY delta, s1, s2
-           |LIMIT 15""".stripMargin
-      },
-      // same tokenize, same integer frequency-spectrum moments
-      "q_yule_k" ->
-        s"""WITH freq AS (
-           | SELECT token, count(*) AS m FROM (
-           |  SELECT unnest(${tokensSql("lower(text)")}) AS token
-           |  FROM documents) GROUP BY 1),
-           |a AS (
-           | SELECT CAST(count(*) AS BIGINT) AS v,
-           |  CAST(sum(m) AS BIGINT) AS n,
-           |  sum(CAST(m AS HUGEINT) * CAST(m AS HUGEINT)) AS sm2,
-           |  CAST(sum(CASE WHEN m = 1 THEN 1 ELSE 0 END) AS BIGINT) AS v1
-           | FROM freq)
-           |SELECT n AS n_tokens, v AS vocab,
-           | round(CAST(v AS DOUBLE) / CAST(n AS DOUBLE), 6) AS ttr,
-           | round(CAST(v1 AS DOUBLE) / CAST(v AS DOUBLE), 6)
-           |  AS hapax_share,
-           | round(10000.0 * (CAST(sm2 AS DOUBLE) - CAST(n AS DOUBLE))
-           |  / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)), 6) AS yule_k
-           |FROM a""".stripMargin,
-      "q_readability" ->
-        s"""WITH g AS (
-           | SELECT source,
-           |  CAST($nTok AS BIGINT) AS w,
-           |  greatest(1, CAST(len(regexp_extract_all(text, '[.!?]+'))
-           |    AS BIGINT)) AS s,
-           |  CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
-           |    AS BIGINT) AS y
-           | FROM documents
-           | WHERE text IS NOT NULL AND source IS NOT NULL),
-           |a AS (
-           | SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-           |  CAST(sum(w) AS BIGINT) AS sw, CAST(sum(s) AS BIGINT) AS ss,
-           |  CAST(sum(y) AS BIGINT) AS sy
-           | FROM g GROUP BY 1)
-           |SELECT source, n_docs,
-           | round(CAST(sw AS DOUBLE) / CAST(ss AS DOUBLE), 6)
-           |  AS words_per_sentence,
-           | round(CAST(sy AS DOUBLE) / CAST(sw AS DOUBLE), 6)
-           |  AS syllables_per_word,
-           | round(0.39 * (CAST(sw AS DOUBLE) / CAST(ss AS DOUBLE))
-           |  + 11.8 * (CAST(sy AS DOUBLE) / CAST(sw AS DOUBLE))
-           |  - 15.59, 6) AS fk_grade,
-           | round(206.835 - 1.015 * (CAST(sw AS DOUBLE) / CAST(ss AS DOUBLE))
-           |  - 84.6 * (CAST(sy AS DOUBLE) / CAST(sw AS DOUBLE)), 6)
-           |  AS flesch_ease
-           |FROM a ORDER BY source""".stripMargin,
-      "q_mojibake_audit" ->
-        """WITH t AS (
-          | SELECT source,
-          |  CASE WHEN substr(md5(text), 1, 1) IN ('0', '1')
-          |        THEN text || chr(65533)
-          |       WHEN substr(md5(text), 1, 1) IN ('2', '3')
-          |        THEN text || chr(195) || chr(169)
-          |       ELSE text END AS t
-          | FROM documents
-          | WHERE text IS NOT NULL AND source IS NOT NULL),
-          |f AS (
-          | SELECT source,
-          |  CAST(CASE WHEN position(chr(65533) IN t) > 0
-          |       THEN 1 ELSE 0 END AS BIGINT) AS repl,
-          |  CAST(CASE WHEN position(chr(195) || chr(169) IN t) > 0
-          |       THEN 1 ELSE 0 END AS BIGINT) AS moji
-          | FROM t)
-          |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-          | CAST(sum(repl) AS BIGINT) AS n_replacement,
-          | CAST(sum(moji) AS BIGINT) AS n_mojibake,
-          | CAST(sum(greatest(repl, moji)) * 1000000 // count(*) AS BIGINT)
-          |  AS corrupt_ppm
-          |FROM f GROUP BY 1 ORDER BY 1""".stripMargin,
-      // the bigram chain: same tokens, same 1-based bigram enumeration,
-      // same add-one smoothing, 6dp-decimal term fold
-      "q_lm_score" ->
-        s"""WITH toks AS (
-           | SELECT doc_id AS id, ${tokensSql("text")} AS toks FROM documents),
-           |t2 AS (SELECT id, toks FROM toks WHERE len(toks) >= 2),
-           |bb AS (
-           | SELECT id, toks[i] AS w1, toks[i + 1] AS w2
-           | FROM t2, unnest(range(1, len(toks))) AS r(i)),
-           |cb AS (SELECT w1, w2, count(*) AS cb FROM bb GROUP BY 1, 2),
-           |cu AS (SELECT w1, count(*) AS cu FROM bb GROUP BY 1),
-           |v AS (SELECT count(DISTINCT w) AS v FROM
-           |  (SELECT w1 AS w FROM bb UNION SELECT w2 FROM bb)),
-           |terms AS (
-           | SELECT bb.id,
-           |  CAST(round(log2(CAST(cb.cb + 1 AS DOUBLE)
-           |    / CAST(cu.cu + v.v AS DOUBLE)), 6) AS DECIMAL(18,6)) AS t
-           | FROM bb JOIN cb USING (w1, w2) JOIN cu USING (w1) CROSS JOIN v)
-           |SELECT id AS doc_id, count(*) AS n_bigrams,
-           | round(-CAST(sum(t) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS lm_bits
-           |FROM terms GROUP BY 1 ORDER BY 1""".stripMargin,
-      // weighted-PageRank keyword twin: same window-2 pair set, same
-      // q_pagerank integer rank scheme, rounds unrolled
-      "q_textrank" -> {
-        val stop = enStopwords.map(w => s"'$w'").mkString(", ")
-        def it(t: Int) =
-          s"""r$t AS (
-             | SELECT nodes.node, 150000 // nn.nn + coalesce(c.c, 0) AS rank
-             | FROM nodes CROSS JOIN nn LEFT JOIN (
-             |   SELECT e.dst,
-             |    sum((850 * r${t - 1}.rank * e.n) // (1000 * w.wout)) AS c
-             |   FROM edges e JOIN r${t - 1} ON e.src = r${t - 1}.node
-             |    JOIN w ON w.src = e.src
-             |   GROUP BY 1) c ON c.dst = nodes.node)""".stripMargin
-        s"""WITH tk AS (
-           | SELECT ${tokensSql("lower(text)")} AS toks FROM documents),
-           |tf AS (SELECT toks FROM tk WHERE len(toks) >= 2),
-           |bb AS (
-           | SELECT toks[i] AS a, toks[i + kk] AS b
-           | FROM tf, unnest(range(1, len(toks) + 1)) AS r(i)
-           |  CROSS JOIN (VALUES (1), (2)) AS kx(kk)
-           | WHERE i + kk <= len(toks)),
-           |pp AS (
-           | SELECT a, b FROM bb
-           | WHERE a <> b AND a NOT IN ($stop) AND b NOT IN ($stop)),
-           |es AS (SELECT a AS src, b AS dst FROM pp
-           |       UNION ALL SELECT b, a FROM pp),
-           |edges AS (SELECT src, dst, count(*) AS n FROM es GROUP BY 1, 2),
-           |w AS (SELECT src, CAST(sum(n) AS BIGINT) AS wout
-           |      FROM edges GROUP BY 1),
-           |nodes AS (SELECT DISTINCT node FROM (
-           | SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
-           |nn AS (SELECT CAST(count(*) AS BIGINT) AS nn FROM nodes),
-           |r0 AS (SELECT node, 1000000 // nn AS rank
-           |       FROM nodes CROSS JOIN nn),
-           |${(1 to 6).map(it).mkString(",\n")}
-           |SELECT node AS word, CAST(rank AS BIGINT) AS rank_ppm,
-           | round(CAST(rank AS DOUBLE) / 1000000.0, 6) AS share
-           |FROM r6 ORDER BY rank DESC, node LIMIT 15""".stripMargin
-      },
-      // domain-transfer twin: same per-train count frames off the shared
-      // bb instances, same greatest(cb−D,0) probability tree, same
-      // coverage exclusion and 6dp term fold
-      "q_domain_ppl" ->
-        ("WITH " + knCountCtesSql + ",\n" +
-          s"""bbn AS (SELECT * FROM bb WHERE source IS NOT NULL),
-             |tsrc AS (
-             | SELECT source AS train_src FROM bbn
-             | GROUP BY 1 ORDER BY count(*) DESC, train_src LIMIT 3),
-             |tcb AS (
-             | SELECT b.source AS train_src, w1, w2,
-             |  CAST(count(*) AS BIGINT) AS cb
-             | FROM bbn b JOIN tsrc ON b.source = tsrc.train_src
-             | GROUP BY 1, 2, 3),
-             |tcu AS (SELECT train_src, w1, CAST(sum(cb) AS BIGINT) AS cu,
-             |  CAST(count(*) AS BIGINT) AS fwd FROM tcb GROUP BY 1, 2),
-             |tbwd AS (SELECT train_src, w2, CAST(count(*) AS BIGINT) AS bwd
-             |         FROM tcb GROUP BY 1, 2),
-             |tgl AS (SELECT train_src, CAST(count(*) AS BIGINT) AS b,
-             |  CAST(sum(CASE WHEN cb = 1 THEN 1 ELSE 0 END) AS BIGINT)
-             |   AS n1,
-             |  CAST(sum(CASE WHEN cb = 2 THEN 1 ELSE 0 END) AS BIGINT)
-             |   AS n2
-             | FROM tcb GROUP BY 1),
-             |ev AS (
-             | SELECT source AS eval_src, w1, w2,
-             |  CAST(count(*) AS BIGINT) AS cnt
-             | FROM bbn GROUP BY 1, 2, 3),
-             |inst AS (
-             | SELECT eval_src, w1, w2, cnt, train_src
-             | FROM ev CROSS JOIN tsrc),
-             |j AS (
-             | SELECT i.train_src, i.eval_src, i.cnt,
-             |  cu.cu, cu.fwd, cbt.cb, bw.bwd, gl.b, gl.n1, gl.n2
-             | FROM inst i
-             | LEFT JOIN tcu cu
-             |  ON cu.train_src = i.train_src AND cu.w1 = i.w1
-             | LEFT JOIN tcb cbt ON cbt.train_src = i.train_src
-             |  AND cbt.w1 = i.w1 AND cbt.w2 = i.w2
-             | LEFT JOIN tbwd bw
-             |  ON bw.train_src = i.train_src AND bw.w2 = i.w2
-             | LEFT JOIN tgl gl ON gl.train_src = i.train_src),
-             |sc AS (
-             | SELECT train_src, eval_src, cnt,
-             |  CASE WHEN cu IS NOT NULL AND $domainPplPSql > 0
-             |   THEN cnt ELSE 0 END AS cov,
-             |  CASE WHEN cu IS NOT NULL AND $domainPplPSql > 0
-             |   THEN CAST(round(-log2($domainPplPSql), 6) AS DECIMAL(18,6))
-             |  END AS t
-             | FROM j)
-             |SELECT train_src, eval_src,
-             | CAST(sum(cnt) AS BIGINT) AS n_bigrams,
-             | CAST(CAST(sum(cov) AS HUGEINT) * 1000000 // sum(cnt)
-             |  AS BIGINT) AS covered_ppm,
-             | CASE WHEN sum(cov) > 0 THEN
-             |  round(CAST(sum(t * CAST(cnt AS DECIMAL(18,0))) AS DOUBLE)
-             |   / CAST(sum(cov) AS DOUBLE), 6)
-             | END AS kn_bits
-             |FROM sc GROUP BY 1, 2 ORDER BY train_src, eval_src""".stripMargin),
-      // PLSA twins: same seeded ppb init, same two unrolled EM rounds,
-      // every normalization an integral // on non-negative operands
-      "q_plsa_topics" ->
-        ("WITH " + plsaCtesSql + "\n" +
-          """SELECT topic, rank, word, p_ppb FROM (
-            | SELECT CAST(z AS BIGINT) AS topic, w AS word, pwz AS p_ppb,
-            |  CAST(row_number() OVER (PARTITION BY z
-            |    ORDER BY pwz DESC, w) AS INTEGER) AS rank
-            | FROM p2wz)
-            |WHERE rank <= 5 ORDER BY topic, rank""".stripMargin),
-      "q_plsa_mix" ->
-        ("WITH " + plsaCtesSql + "\n" +
-          """SELECT source, CAST(z AS BIGINT) AS topic, pzs AS mix_ppb,
-            | round(CAST(pzs AS DOUBLE) / 1000000000.0, 6) AS share
-            |FROM p2zs ORDER BY source, topic""".stripMargin),
-      // PPMI-SVD twin: same count CTEs and milli-bit cell freeze, then
-      // the q_pca_subspace iteration replay over G = M·Mᵀ (list folds in
-      // j order = the driver's ascending-index loops; G entries are
-      // exact integers, so the iteration starts from identical doubles)
-      "q_ppmi_svd" -> {
-        val iters = 10
-        val itCtes = (1 to iters).map { k =>
-          val prev = s"v${k - 1}"
-          s"""w$k AS (
-             | SELECT i,
-             |  list_sum(list_transform(list_zip(row, v1), p -> p[1] * p[2])) AS w1,
-             |  list_sum(list_transform(list_zip(row, v2), p -> p[1] * p[2])) AS w2
-             | FROM g2rows CROSS JOIN $prev),
-             |wl$k AS (SELECT list(w1 ORDER BY i) AS w1,
-             |  list(w2 ORDER BY i) AS w2 FROM w$k),
-             |a$k AS (SELECT list_transform(w1,
-             |   x -> x / sqrt(list_sum(list_transform(w1, y -> y * y)))) AS v1,
-             |  w2 FROM wl$k),
-             |b$k AS (SELECT v1, w2,
-             |  list_sum(list_transform(list_zip(v1, w2), p -> p[1] * p[2])) AS c
-             | FROM a$k),
-             |c$k AS (SELECT v1,
-             |  list_transform(list_zip(w2, v1), p -> p[1] - c * p[2]) AS w2p
-             | FROM b$k),
-             |v$k AS (SELECT v1, list_transform(w2p,
-             |   x -> x / sqrt(list_sum(list_transform(w2p, y -> y * y)))) AS v2
-             | FROM c$k)""".stripMargin
-        }.mkString(",\n")
-        ("WITH " + knCountCtesSql + ",\n" +
-          s"""t2c AS (SELECT w2, CAST(sum(cb) AS BIGINT) AS c2
-             |       FROM cb GROUP BY 1),
-             |nb AS (SELECT CAST(sum(cb) AS BIGINT) AS nb FROM cb),
-             |hd AS (SELECT w1,
-             |  CAST(row_number() OVER (ORDER BY cu DESC, w1) AS INTEGER)
-             |   AS rk
-             | FROM cu ORDER BY cu DESC, w1 LIMIT 32),
-             |cells AS (
-             | SELECT a.rk AS i, b.rk AS j,
-             |  CAST(floor(log2(CAST(cb AS DOUBLE) * CAST(nb AS DOUBLE)
-             |    / (CAST(cu AS DOUBLE) * CAST(c2 AS DOUBLE))) * 1000
-             |    + 0.5) AS BIGINT) AS mb
-             | FROM cb JOIN cu USING (w1) JOIN t2c USING (w2) CROSS JOIN nb
-             | JOIN hd a ON cb.w1 = a.w1 JOIN hd b ON cb.w2 = b.w1
-             | WHERE cb >= 2 AND CAST(cb AS DOUBLE) * CAST(nb AS DOUBLE)
-             |    / (CAST(cu AS DOUBLE) * CAST(c2 AS DOUBLE)) > 1.0),
-             |mrows AS (
-             | SELECT a.rk AS i,
-             |  list(CAST(coalesce(c.mb, 0) AS DOUBLE) ORDER BY b.rk) AS row
-             | FROM hd a CROSS JOIN hd b
-             | LEFT JOIN cells c ON c.i = a.rk AND c.j = b.rk
-             | GROUP BY 1),
-             |gpair AS (
-             | SELECT x.i AS i, y.i AS j,
-             |  list_sum(list_transform(list_zip(x.row, y.row),
-             |    p -> p[1] * p[2])) AS g
-             | FROM mrows x CROSS JOIN mrows y),
-             |g2rows AS (SELECT i, list(CAST(g AS DOUBLE) ORDER BY j) AS row
-             |           FROM gpair GROUP BY 1),
-             |v0 AS (SELECT
-             |  list_transform(range(0, (SELECT count(*) FROM hd)),
-             |    x -> 1.0) AS v1,
-             |  list_transform(range(0, (SELECT count(*) FROM hd)),
-             |    x -> CASE WHEN x % 2 = 0 THEN 1.0 ELSE -1.0 END) AS v2),
-             |$itCtes,
-             |fw AS (
-             | SELECT i,
-             |  list_sum(list_transform(list_zip(row, v1), p -> p[1] * p[2])) AS f1,
-             |  list_sum(list_transform(list_zip(row, v2), p -> p[1] * p[2])) AS f2
-             | FROM g2rows CROSS JOIN v$iters),
-             |fl AS (SELECT list(f1 ORDER BY i) AS f1,
-             |  list(f2 ORDER BY i) AS f2 FROM fw),
-             |lam AS (
-             | SELECT
-             |  list_sum(list_transform(list_zip(v1, f1), p -> p[1] * p[2])) AS l1,
-             |  list_sum(list_transform(list_zip(v2, f2), p -> p[1] * p[2])) AS l2
-             | FROM v$iters, fl)
-             |SELECT rk, w1 AS word,
-             | round(v1[rk] * sqrt(sqrt(l1)), 6) AS e1,
-             | round(v2[rk] * sqrt(sqrt(l2)), 6) AS e2
-             |FROM hd CROSS JOIN v$iters CROSS JOIN lam
-             |ORDER BY rk""".stripMargin)
-      },
-      // PPMI twin: same shared bigram count CTEs, same raw-ratio ranking
-      // (log2 only in the released 6dp value), same head/tie-break order
-      "q_ppmi_topk" ->
-        ("WITH " + knCountCtesSql + ",\n" +
-          """c2 AS (SELECT w2, CAST(sum(cb) AS BIGINT) AS c2
-            |       FROM cb GROUP BY 1),
-            |nb AS (SELECT CAST(sum(cb) AS BIGINT) AS nb FROM cb),
-            |scored AS (
-            | SELECT w1, w2, cb,
-            |  CAST(cb AS DOUBLE) * CAST(nb AS DOUBLE)
-            |   / (CAST(cu AS DOUBLE) * CAST(c2 AS DOUBLE)) AS r
-            | FROM cb JOIN cu USING (w1) JOIN c2 USING (w2) CROSS JOIN nb
-            | WHERE cb >= 2),
-            |hd AS (SELECT w1 FROM cu ORDER BY cu DESC, w1 LIMIT 20),
-            |rk AS (
-            | SELECT w1, w2, cb, r,
-            |  row_number() OVER (PARTITION BY w1 ORDER BY r DESC, w2)
-            |   AS rank
-            | FROM scored JOIN hd USING (w1) WHERE r > 1.0)
-            |SELECT w1, CAST(rank AS INTEGER) AS rank, w2, cb,
-            | round(log2(r), 6) AS ppmi
-            |FROM rk WHERE rank <= 5 ORDER BY w1, rank""".stripMargin),
-      // Kneser-Ney twins: same count frames, same D = n1/(n1+2n2), same
-      // interpolated-probability expression tree, 6dp term fold
-      "q_kn_lm" ->
-        ("WITH " + knCountCtesSql + ",\n" +
-          s"""scored AS (
-             | SELECT w1, w2, cb, cu, fwd, bwd,
-             |  $knDiscSql AS d,
-             |  (CAST(cb AS DOUBLE) - $knDiscSql) / CAST(cu AS DOUBLE)
-             |   + $knDiscSql
-             |     * CAST(fwd AS DOUBLE) / CAST(cu AS DOUBLE)
-             |     * (CAST(bwd AS DOUBLE) / CAST(b AS DOUBLE)) AS p
-             | FROM cb JOIN cu USING (w1) JOIN bwd USING (w2) CROSS JOIN gl)
-             |SELECT w1, w2, cb, cu, fwd, bwd,
-             | round(d, 6) AS discount, round(p, 6) AS p_kn
-             |FROM scored ORDER BY p DESC, w1, w2 LIMIT 15""".stripMargin),
-      "q_kn_surprisal" ->
-        ("WITH " + knCountCtesSql + ",\n" + knTermsCteSql + "\n" +
-          """SELECT source, count(DISTINCT id) AS n_docs,
-            | count(*) AS n_bigrams,
-            | round(CAST(sum(t) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
-            |  AS kn_bits
-            |FROM terms GROUP BY 1 ORDER BY 1""".stripMargin),
-      // winnowing twin: same 28-bit md5 gram hash, same packed-key window
-      // min (hash ASC, pos DESC tie), same full-window/short-doc rule
-      "q_winnow" ->
-        s"""WITH t AS (
-           | SELECT doc_id, ${tokensSql("lower(text)")} AS toks FROM documents),
-           |g AS (
-           | SELECT doc_id, CAST(r.i AS INTEGER) AS pos,
-           |  len(toks) - 2 AS m,
-           |  array_to_string(list_slice(toks, CAST(r.i AS INTEGER),
-           |    CAST(r.i AS INTEGER) + 2), ' ') AS gram
-           | FROM t, unnest(range(1, len(toks) - 1)) AS r(i)
-           | WHERE len(toks) >= 3),
-           |k AS (
-           | SELECT doc_id, pos, m,
-           |  CAST('0x' || substr(md5(gram), 1, 7) AS BIGINT) * 33554432
-           |    + (33554431 - pos) AS key
-           | FROM g),
-           |w AS (
-           | SELECT doc_id, pos, m,
-           |  min(key) OVER (PARTITION BY doc_id ORDER BY pos
-           |    ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mk
-           | FROM k)
-           |SELECT DISTINCT doc_id,
-           | CAST(33554431 - (mk % 33554432) AS INTEGER) AS pos,
-           | mk // 33554432 AS fp
-           |FROM w WHERE pos <= greatest(m - 3, 1)
-           |ORDER BY doc_id, pos""".stripMargin,
-      // NB twin: same smoothed counts, same 6dp-decimal log2 terms, same
-      // (score DESC, cand ASC) argmax
-      "q_langid_nb" ->
-        s"""WITH tok AS (
-           | SELECT doc_id, lang, unnest(${tokensSql("lower(text)")}) AS w
-           | FROM documents WHERE lang IS NOT NULL),
-           |cwl AS (SELECT lang, w, count(*) AS c FROM tok GROUP BY 1, 2),
-           |cl AS (SELECT lang, sum(c) AS cl FROM cwl GROUP BY 1),
-           |v AS (SELECT count(DISTINCT w) AS v FROM cwl),
-           |model AS (
-           | SELECT vw.w, cl.lang AS cand,
-           |  CAST(round(log2(CAST(COALESCE(c.c, 0) + 1 AS DOUBLE)
-           |    / CAST(cl.cl + v.v AS DOUBLE)), 6) AS DECIMAL(28,6)) AS lp
-           | FROM (SELECT DISTINCT w FROM cwl) vw
-           | CROSS JOIN cl
-           | LEFT JOIN cwl c ON c.lang = cl.lang AND c.w = vw.w
-           | CROSS JOIN v),
-           |priors AS (
-           | SELECT lang AS cand,
-           |  CAST(round(log2(CAST(nd AS DOUBLE) / CAST(nall AS DOUBLE)), 6)
-           |    AS DECIMAL(28,6)) AS lpr
-           | FROM (SELECT lang, count(*) AS nd FROM documents
-           |       WHERE lang IS NOT NULL GROUP BY 1)
-           | CROSS JOIN (SELECT count(*) AS nall FROM documents
-           |             WHERE lang IS NOT NULL)),
-           |scored AS (
-           | SELECT t.doc_id, m.cand, sum(m.lp) AS s
-           | FROM tok t JOIN model m ON m.w = t.w GROUP BY 1, 2),
-           |pick AS (
-           | SELECT doc_id, cand AS lang_pred FROM (
-           |  SELECT doc_id, cand,
-           |   row_number() OVER (PARTITION BY doc_id
-           |     ORDER BY s + lpr DESC, cand) AS rn
-           |  FROM scored JOIN priors USING (cand))
-           | WHERE rn = 1)
-           |SELECT d.lang, p.lang_pred, count(*) AS n
-           |FROM (SELECT DISTINCT doc_id, lang FROM tok) d
-           |JOIN pick p USING (doc_id)
-           |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-      // zipf twin: same top-100 vocabulary, same 6dp-decimal ln moments,
-      // same double-space regression arithmetic
-      "q_zipf_fit" ->
-        s"""WITH v AS (
-           | SELECT token, count(*) AS freq FROM (
-           |  SELECT unnest(${tokensSql("lower(text)")}) AS token FROM documents)
-           | GROUP BY 1 ORDER BY freq DESC, token LIMIT 100),
-           |r AS (SELECT freq,
-           |  row_number() OVER (ORDER BY freq DESC, token) AS rank FROM v),
-           |p AS (SELECT
-           |  CAST(round(ln(rank), 6) AS DECIMAL(18,6)) AS x,
-           |  CAST(round(ln(freq), 6) AS DECIMAL(18,6)) AS y FROM r),
-           |s AS (SELECT count(*) AS n,
-           |  CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
-           |  CAST(sum(x*y) AS DOUBLE) AS sxy, CAST(sum(x*x) AS DOUBLE) AS sxx,
-           |  CAST(sum(y*y) AS DOUBLE) AS syy FROM p)
-           |SELECT n AS n_terms,
-           | round(-((n*sxy - sx*sy) / (n*sxx - sx*sx)), 6) AS zipf_exponent,
-           | round((sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n, 6)
-           |   AS intercept,
-           | round(((n*sxy - sx*sy) * (n*sxy - sx*sy))
-           |   / ((n*sxx - sx*sx) * (n*syy - sy*sy)), 6) AS r2
-           |FROM s""".stripMargin,
-      "q_hill_tail" ->
-        """WITH r AS (
-          | SELECT n_chars,
-          |  row_number() OVER (ORDER BY n_chars DESC, doc_id) AS rn
-          | FROM documents),
-          |xk AS (SELECT n_chars AS xk FROM r WHERE rn = 101),
-          |t AS (SELECT CAST(round(ln(CAST(n_chars AS DOUBLE)), 6)
-          |       AS DECIMAL(18,6)) AS lx FROM r WHERE rn <= 100)
-          |SELECT count(*) AS k, (SELECT xk FROM xk) AS x_k1,
-          | CASE WHEN CAST(sum(lx) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-          |   - round(ln(CAST((SELECT xk FROM xk) AS DOUBLE)), 6) <> 0.0
-          |  THEN round(1.0 / (CAST(sum(lx) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-          |   - round(ln(CAST((SELECT xk FROM xk) AS DOUBLE)), 6)), 6)
-          | END AS alpha
-          |FROM t""".stripMargin,
-      // unigram-LM twin: same top-M candidate pairs, same ppb integral
-      // divisions (// ≡ div ≡ floor on non-negative operands), same
-      // clamped expected counts and renormalization
-      "q_unigram_lm" ->
-        """WITH tk AS (
-          | SELECT list_filter(string_split_regex(lower(text), '[^a-z]+'),
-          |   t -> t <> '') AS toks
-          | FROM documents),
-          |tf AS (SELECT toks FROM tk WHERE len(toks) >= 1),
-          |uni AS (
-          | SELECT w, CAST(count(*) AS BIGINT) AS cu FROM (
-          |  SELECT unnest(toks) AS w FROM tf) GROUP BY 1),
-          |nn AS (SELECT CAST(sum(cu) AS BIGINT) AS n FROM uni),
-          |bb AS (
-          | SELECT toks[i] AS a, toks[i + 1] AS b
-          | FROM tf, unnest(range(1, len(toks))) AS r(i)),
-          |pairs AS (SELECT a, b, CAST(count(*) AS BIGINT) AS cp
-          |          FROM bb GROUP BY 1, 2),
-          |cand AS (SELECT a, b, cp FROM pairs
-          |         ORDER BY cp DESC, a, b LIMIT 10),
-          |pp AS (
-          | SELECT a, b, cp,
-          |  CAST(CAST(cp AS HUGEINT) * 1000000000 // n AS BIGINT) AS pab,
-          |  CAST(CAST(ca.cu AS HUGEINT) * 1000000000 // n AS BIGINT) AS pa,
-          |  CAST(CAST(cb.cu AS HUGEINT) * 1000000000 // n AS BIGINT) AS pb
-          | FROM cand JOIN uni ca ON ca.w = cand.a
-          |  JOIN uni cb ON cb.w = cand.b CROSS JOIN nn),
-          |post AS (
-          | SELECT a, b, cp,
-          |  CAST(CAST(pab AS HUGEINT) * 1000000000 * 1000000000
-          |   // greatest(CAST(pab AS HUGEINT) * 1000000000
-          |      + CAST(pa AS HUGEINT) * CAST(pb AS HUGEINT), 1) AS BIGINT)
-          |   AS post
-          | FROM pp),
-          |red AS (
-          | SELECT coalesce(sum(CAST(cp AS HUGEINT) * post),
-          |   CAST(0 AS HUGEINT)) AS red FROM post),
-          |rem AS (
-          | SELECT w, sum(r) AS rem FROM (
-          |  SELECT a AS w, CAST(cp AS HUGEINT) * post AS r FROM post
-          |  UNION ALL
-          |  SELECT b AS w, CAST(cp AS HUGEINT) * post AS r FROM post)
-          | GROUP BY 1),
-          |uniec AS (
-          | SELECT w AS piece, 'unigram' AS kind, cu AS raw_count,
-          |  greatest(CAST(cu AS HUGEINT) * 1000000000
-          |   - coalesce(rem, CAST(0 AS HUGEINT)), CAST(0 AS HUGEINT))
-          |   AS ec_fp
-          | FROM uni LEFT JOIN rem USING (w)),
-          |mec AS (
-          | SELECT a || '_' || b AS piece, 'merge' AS kind,
-          |  cp AS raw_count, CAST(cp AS HUGEINT) * post AS ec_fp
-          | FROM post),
-          |np AS (
-          | SELECT CAST(n AS HUGEINT) * 1000000000 - red AS npfp
-          | FROM nn CROSS JOIN red)
-          |SELECT piece, kind, raw_count,
-          | round(CAST(ec_fp AS DOUBLE) / 1000000000.0, 6)
-          |  AS expected_count,
-          | CAST(ec_fp * 1000000000
-          |  // greatest(npfp, CAST(1 AS HUGEINT)) AS BIGINT) AS p_ppb
-          |FROM (SELECT * FROM uniec UNION ALL SELECT * FROM mec)
-          | CROSS JOIN np
-          |ORDER BY p_ppb DESC, piece LIMIT 15""".stripMargin,
-      "q_bpe_train" -> bpeTrainSql(10),
-      "q_bpe_encode" -> bpeEncodeSql(6),
-      "q_tokenizer_fertility" -> fertilitySql(6),
-      "q_text_stats" ->
-        s"""SELECT doc_id, CAST($nTok AS INTEGER) AS n_tokens,
-           | CAST(len(regexp_extract_all(text, '$bpeTokenPattern')) AS INTEGER) AS n_bpe_tokens,
-           | round($stopRatio, 6) AS stop_ratio,
-           | round($punctRatio, 6) AS punct_ratio,
-           | round($meanTok, 6) AS mean_tok_len
-           |FROM documents ORDER BY doc_id""".stripMargin,
-      "q_text_quality" ->
-        s"SELECT doc_id, round($quality, 2) AS quality FROM documents ORDER BY doc_id",
-      // PAVA via the max-min closed form over prefix sums — block
-      // averages are ratios of exact BIGINT sums, one double division
-      "q_fightin_words" ->
-        s"""WITH t AS (
-           | SELECT source, unnest(${tokensSql("lower(text)")}) AS word
-           | FROM documents WHERE source IS NOT NULL),
-           |sw AS (SELECT source, word, count(*) AS y FROM t GROUP BY 1, 2),
-           |wt AS (SELECT word, sum(y) AS yw FROM sw GROUP BY 1),
-           |st AS (SELECT source, sum(y) AS ni FROM sw GROUP BY 1),
-           |gl AS (SELECT count(*) AS v, sum(yw) AS nn FROM wt),
+  // SQL fragments shared by the oracles below
+  private def nTok: String = s"len(${tokensSql("text")})"
+  private def stopRatio: String =
+    s"CASE WHEN $nTok=0 THEN 0.0 ELSE CAST(${hitsSql("text", enStopwords)} AS DOUBLE)/CAST($nTok AS DOUBLE) END"
+  private def punctRatio: String =
+    s"CASE WHEN length(text)=0 THEN 0.0 ELSE CAST(length(text)-length(regexp_replace(text,'$punctClass','','g')) AS DOUBLE)/CAST(length(text) AS DOUBLE) END"
+  private def meanTok: String =
+    s"CASE WHEN $nTok=0 THEN 0.0 ELSE CAST(list_sum(list_transform(${tokensSql("text")}, t -> length(t))) AS DOUBLE)/CAST($nTok AS DOUBLE) END"
+  private def quality: String = qualitySql
+  private def langScores: Seq[(String, String)] =
+    langStopwords.map { case (l, ws) => l -> hitsSql("text", ws) }
+  private def maxScore: String = langScores.map(_._2).mkString("greatest(", ", ", ")")
+  private def langCase: String = langScores
+    .map { case (l, sc) => s"WHEN $sc = $maxScore THEN '$l'" }
+    .mkString(" ")
+
+  def entries: Seq[Q] = Seq(
+    // Evidence-weighted collocations (Dunning G², top-15).
+    // same KN count frames, same xlx identity, same rounded ordering
+    Q("q_collocations_g2", { (s, d) =>
+      collocationsG2(Tables.documents(s, d)) }, {
+      def xlx(c: String) =
+        s"(CASE WHEN $c > 0 THEN CAST($c AS DOUBLE) " +
+          s"* ln(CAST($c AS DOUBLE)) ELSE 0.0 END)"
+      ("WITH " + knCountCtesSql + ",\n" +
+        s"""c2 AS (SELECT w2, CAST(sum(cb) AS BIGINT) AS c2 FROM cb
+           |  GROUP BY 1),
+           |nn AS (SELECT CAST(sum(cb) AS BIGINT) AS nb FROM cb),
+           |j AS (
+           | SELECT w1, w2, cb, cu, c2, nb
+           | FROM cb JOIN cu USING (w1) JOIN c2 USING (w2)
+           |  CROSS JOIN nn),
            |sc AS (
-           | SELECT s.source, s.word, CAST(s.y AS BIGINT) AS cnt,
-           |  (ln((CAST(s.y AS DOUBLE) + 0.5) /
-           |      (CAST(st.ni AS DOUBLE) + 0.5 * CAST(g.v AS DOUBLE)
-           |       - CAST(s.y AS DOUBLE) - 0.5))
-           |   - ln((CAST(w.yw - s.y AS DOUBLE) + 0.5) /
-           |      (CAST(g.nn - st.ni AS DOUBLE) + 0.5 * CAST(g.v AS DOUBLE)
-           |       - CAST(w.yw - s.y AS DOUBLE) - 0.5)))
-           |  / sqrt(1.0 / (CAST(s.y AS DOUBLE) + 0.5)
-           |         + 1.0 / (CAST(w.yw - s.y AS DOUBLE) + 0.5)) AS z
-           | FROM sw s JOIN wt w ON s.word = w.word
-           |  JOIN st ON s.source = st.source, gl g),
-           |rk AS (
-           | SELECT source, word, cnt, z, row_number() OVER (
-           |  PARTITION BY source ORDER BY z DESC, word) AS rn FROM sc)
-           |SELECT source, word, cnt, round(z, 6) AS z FROM rk
-           |WHERE rn <= 5 ORDER BY source, z DESC, word""".stripMargin,
-      "q_calibration_bins" ->
-        s"""WITH base AS (
-           | SELECT round($stopRatio, 2) AS q,
-           |  CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
-           | FROM documents),
-           |per AS (
-           | SELECT CAST(least(CAST(floor(q * 10) AS INTEGER), 9)
-           |   AS INTEGER) AS bin,
-           |  count(*) AS n, sum(CAST(q AS DECIMAL(18,2))) AS ss,
-           |  sum(label) AS sy
-           | FROM base GROUP BY 1),
-           |tot AS (SELECT sum(n) AS nt FROM per),
-           |g AS (
-           | SELECT bin, CAST(n AS BIGINT) AS n,
-           |  CAST(ss AS DOUBLE) / CAST(n AS DOUBLE) AS ms,
-           |  CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) AS fp,
-           |  CAST(n AS DOUBLE) / CAST(t.nt AS DOUBLE) AS w
-           | FROM per, tot t),
-           |e AS (
-           | SELECT CAST(sum(CAST(round(w * abs(fp - ms), 6)
-           |  AS DECIMAL(18,6))) AS DOUBLE) AS ece FROM g)
-           |SELECT bin, n, round(ms, 6) AS mean_score,
-           | round(fp, 6) AS frac_pos, round(abs(fp - ms), 6) AS gap, ece
-           |FROM g, e ORDER BY bin""".stripMargin,
-      // logistic-calibration twin: same level frame, same shared σ /
-      // gradient / Cramer-delta strings, 3 unrolled Newton CTEs
-      "q_platt_scaling" -> {
-        def stepSql(t: Int) =
-          s"""ab$t AS (
-             | SELECT a + $plattDa AS a, b + $plattDb AS b
-             | FROM (
-             |  SELECT a, b,
-             |   CAST(sum($plattGa) AS DOUBLE) AS sga,
-             |   CAST(sum($plattGb) AS DOUBLE) AS sgb,
-             |   CAST(sum($plattHaa) AS DOUBLE) AS shaa,
-             |   CAST(sum($plattHab) AS DOUBLE) AS shab,
-             |   CAST(sum($plattHbb) AS DOUBLE) AS shbb
-             |  FROM lv CROSS JOIN ab${t - 1} GROUP BY 1, 2))""".stripMargin
-        s"""WITH base AS (
-           | SELECT round($stopRatio, 2) AS q,
-           |  CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
-           | FROM documents),
-           |lv AS (
-           | SELECT CAST(q AS DOUBLE) AS s, count(*) AS w,
-           |  CAST(sum(label) AS BIGINT) AS y
-           | FROM base GROUP BY 1),
-           |ab0 AS (SELECT 0.0 AS a, 0.0 AS b),
-           |${(1 to 3).map(stepSql).mkString(",\n")}
-           |SELECT CAST(sum(w) AS BIGINT) AS n, count(*) AS n_levels,
-           | round(any_value(a), 6) AS platt_a,
-           | round(any_value(b), 6) AS platt_b,
-           | round(-CAST(sum(CAST(round(y * ln($plattP)
-           |    + (w - y) * ln(1.0 - $plattP), 6) AS DECIMAL(28,6)))
-           |   AS DOUBLE) / CAST(sum(w) AS DOUBLE), 6) AS log_loss
-           |FROM lv CROSS JOIN ab3""".stripMargin
-      },
-      // same 10-bin frame, exact 4dp (s−y)² fold, 6dp REL/RES terms
-      "q_brier_decomp" ->
-        s"""WITH base AS (
-           | SELECT round($stopRatio, 2) AS q,
-           |  CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-           | FROM documents),
-           |per AS (
-           | SELECT CAST(least(CAST(floor(q * 10) AS INTEGER), 9)
-           |   AS INTEGER) AS bin,
-           |  count(*) AS n, sum(CAST(q AS DECIMAL(18,2))) AS ss,
-           |  CAST(sum(y) AS BIGINT) AS sy,
-           |  sum(CAST((CAST(q AS DECIMAL(18,2)) - y)
-           |    * (CAST(q AS DECIMAL(18,2)) - y) AS DECIMAL(28,4))) AS sqs
-           | FROM base GROUP BY 1),
-           |tot AS (SELECT CAST(sum(n) AS BIGINT) AS nt,
-           |        CAST(sum(sy) AS BIGINT) AS syt FROM per),
-           |terms AS (
-           | SELECT per.n, per.sqs, t.nt, t.syt,
-           |  CAST(round(CAST(per.n AS DOUBLE)
-           |   * ((CAST(ss AS DOUBLE) / CAST(per.n AS DOUBLE)
-           |       - CAST(sy AS DOUBLE) / CAST(per.n AS DOUBLE))
-           |     * (CAST(ss AS DOUBLE) / CAST(per.n AS DOUBLE)
-           |       - CAST(sy AS DOUBLE) / CAST(per.n AS DOUBLE))), 6)
-           |   AS DECIMAL(28,6)) AS rel_t,
-           |  CAST(round(CAST(per.n AS DOUBLE)
-           |   * ((CAST(sy AS DOUBLE) / CAST(per.n AS DOUBLE)
-           |       - CAST(t.syt AS DOUBLE) / CAST(t.nt AS DOUBLE))
-           |     * (CAST(sy AS DOUBLE) / CAST(per.n AS DOUBLE)
-           |       - CAST(t.syt AS DOUBLE) / CAST(t.nt AS DOUBLE))), 6)
-           |   AS DECIMAL(28,6)) AS res_t
-           | FROM per, tot t),
-           |agg AS (
-           | SELECT nt, syt, count(*) AS n_bins, sum(sqs) AS sqs,
-           |  CAST(sum(rel_t) AS DOUBLE) AS rel,
-           |  CAST(sum(res_t) AS DOUBLE) AS res
-           | FROM terms GROUP BY 1, 2)
-           |SELECT nt AS n, n_bins,
-           | round(CAST(sqs AS DOUBLE) / CAST(nt AS DOUBLE), 6) AS brier,
-           | round(rel / CAST(nt AS DOUBLE), 6) AS reliability,
-           | round(res / CAST(nt AS DOUBLE), 6) AS resolution,
-           | round(CAST(syt AS DOUBLE) / CAST(nt AS DOUBLE)
-           |  * (1.0 - CAST(syt AS DOUBLE) / CAST(nt AS DOUBLE)), 6)
-           |  AS uncertainty,
-           | round(CAST(sqs AS DOUBLE) / CAST(nt AS DOUBLE)
-           |  - (rel / CAST(nt AS DOUBLE) - res / CAST(nt AS DOUBLE)
-           |     + CAST(syt AS DOUBLE) / CAST(nt AS DOUBLE)
-           |       * (1.0 - CAST(syt AS DOUBLE) / CAST(nt AS DOUBLE))), 6)
-           |  AS decomp_gap
-           |FROM agg""".stripMargin,
-      "q_isotonic_calibrate" ->
-        s"""WITH base AS (
-           | SELECT round($stopRatio, 2) AS x,
-           |  CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
-           | FROM documents),
-           |lv AS (SELECT x, CAST(count(*) AS BIGINT) AS w,
-           |  CAST(sum(label) AS BIGINT) AS y FROM base GROUP BY 1),
-           |pre AS (SELECT x, w, y,
-           |  CAST(sum(w) OVER (ORDER BY x) AS BIGINT) AS cw,
-           |  CAST(sum(y) OVER (ORDER BY x) AS BIGINT) AS cy FROM lv),
-           |bjk AS (
-           | SELECT a.x AS xj, b.x AS xk,
-           |  CAST(b.cy - (a.cy - a.y) AS DOUBLE) /
-           |   CAST(b.cw - (a.cw - a.w) AS DOUBLE) AS ajk
-           | FROM pre a JOIN pre b ON a.x <= b.x),
-           |mn AS (
-           | SELECT i.x AS xi, p.xj, min(p.ajk) AS mnv
-           | FROM bjk p JOIN lv i ON p.xj <= i.x AND p.xk >= i.x
-           | GROUP BY 1, 2),
-           |fit AS (SELECT xi, max(mnv) AS fitted FROM mn GROUP BY 1)
-           |SELECT lv.x AS q, lv.w AS n,
-           | round(CAST(lv.y AS DOUBLE) / lv.w, 6) AS rate,
-           | round(f.fitted, 6) AS fitted
-           |FROM lv JOIN fit f ON lv.x = f.xi
-           |ORDER BY q""".stripMargin,
-      "q_quality_sweep" ->
-        s"""WITH sc AS (
-           | SELECT round($quality, 2) AS q,
-           |  CAST(len(${tokensSql("text")}) AS BIGINT) AS tok
-           | FROM documents),
-           |g AS (
-           | SELECT q, CAST(count(*) AS BIGINT) AS nd,
-           |  CAST(sum(tok) AS BIGINT) AS nt
-           | FROM sc GROUP BY 1),
-           |t AS (SELECT CAST(sum(nd) AS BIGINT) AS td,
-           |      CAST(sum(nt) AS BIGINT) AS tt FROM g),
-           |s AS (SELECT unnest([0.0, 0.2, 0.4, 0.6, 0.8, 1.0]) AS threshold),
-           |k AS (
-           | SELECT s.threshold,
-           |  CAST(COALESCE(sum(g.nd), 0) AS BIGINT) AS docs_kept,
-           |  CAST(COALESCE(sum(g.nt), 0) AS BIGINT) AS tokens_kept
-           | FROM s LEFT JOIN g ON g.q >= s.threshold GROUP BY 1)
-           |SELECT threshold, docs_kept, tokens_kept,
-           | docs_kept * 1000000 // td AS docs_ppm,
-           | tokens_kept * 1000000 // tt AS tokens_ppm
-           |FROM k, t ORDER BY threshold""".stripMargin,
-      "q_text_langid" ->
-        s"""SELECT doc_id, lang,
-           | CASE WHEN $maxScore = 0 THEN 'und' $langCase END AS lang_pred
-           |FROM documents ORDER BY doc_id""".stripMargin,
-      "q_text_fingerprint" ->
-        """SELECT doc_id, md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp
-          |FROM documents ORDER BY doc_id""".stripMargin,
-      "q_bpe_pairs" ->
-        s"""WITH t AS (SELECT ${tokensSql("lower(text)")} AS toks FROM documents),
-           |p AS (SELECT toks[CAST(r.i AS INTEGER)] || ' ' ||
-           |        toks[CAST(r.i AS INTEGER) + 1] AS pair
-           |      FROM t, unnest(range(1, len(toks))) AS r(i)
-           |      WHERE len(toks) >= 2)
-           |SELECT pair, count(*) AS freq
-           |FROM p GROUP BY 1 ORDER BY freq DESC, pair LIMIT 20""".stripMargin,
-      "q_text_chunk" ->
-        s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
-           |st AS (SELECT doc_id, toks,
-           |        range(1, greatest(len(toks) - 10, 1) + 1, 40) AS starts FROM t),
-           |c AS (SELECT doc_id, s.i AS start_pos, toks FROM st
-           |      CROSS JOIN unnest(starts) AS s(i))
-           |SELECT doc_id,
-           | CAST((start_pos - 1) / 40 AS INTEGER) AS chunk_idx,
-           | array_to_string(list_slice(toks, start_pos, start_pos + 49), ' ') AS chunk,
-           | CAST(len(list_slice(toks, start_pos, start_pos + 49)) AS INTEGER) AS n_chunk_tokens
-           |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-      "q_text_repetition" ->
-        s"""WITH tf AS (
-           | SELECT doc_id, max(cnt) AS top_cnt FROM (
-           |  SELECT doc_id, token, count(*) AS cnt
-           |  FROM (SELECT doc_id, unnest(${tokensSql("text")}) AS token FROM documents)
-           |  GROUP BY doc_id, token)
-           | GROUP BY doc_id)
-           |SELECT d.doc_id,
-           | CASE WHEN len(${tokensSql("text")}) = 0 THEN 0.0
-           |  ELSE CAST(top_cnt AS DOUBLE) / CAST(len(${tokensSql("text")}) AS DOUBLE) END AS rep_ratio
-           |FROM documents d LEFT JOIN tf ON d.doc_id = tf.doc_id
-           |ORDER BY d.doc_id""".stripMargin,
-      "q_top_bigram" ->
-        s"""WITH bg AS (
-           | SELECT doc_id, unnest(list_transform(
-           |   range(1, len(${tokensSql("text")})),
-           |   i -> ${tokensSql("text")}[i] || ' ' || ${tokensSql("text")}[i + 1]))
-           |  AS bg
-           | FROM documents WHERE len(${tokensSql("text")}) >= 2),
-           |c AS (SELECT doc_id, bg, count(*) AS cnt FROM bg GROUP BY 1, 2),
-           |t AS (SELECT doc_id, max(cnt) AS top_cnt,
-           |       CAST(sum(cnt) AS BIGINT) AS n_bigrams FROM c GROUP BY 1)
-           |SELECT d.doc_id, COALESCE(n_bigrams, 0) AS n_bigrams,
-           | COALESCE(top_cnt, 0) AS top_cnt,
-           | CASE WHEN COALESCE(n_bigrams, 0) = 0 THEN 0.0
-           |  ELSE round(CAST(top_cnt AS DOUBLE) / CAST(n_bigrams AS DOUBLE), 6)
-           |  END AS rep2_ratio
-           |FROM documents d LEFT JOIN t ON d.doc_id = t.doc_id
-           |ORDER BY d.doc_id""".stripMargin,
-      "q_vocab_topk" ->
-        s"""SELECT token, count(*) AS freq
-           |FROM (SELECT unnest(${tokensSql("text")}) AS token FROM documents)
-           |GROUP BY 1 ORDER BY freq DESC, token LIMIT 20""".stripMargin,
-      "q_oov_rate" ->
-        s"""WITH tok AS (
-           | SELECT source, unnest(${tokensSql("text")}) AS token
-           | FROM documents),
-           |counts AS (SELECT token, count(*) AS freq FROM tok GROUP BY 1),
-           |vocab AS (SELECT token FROM counts
-           |          ORDER BY freq DESC, token LIMIT 20)
-           |SELECT source, CAST(count(*) AS BIGINT) AS n_tokens,
-           | CAST(COALESCE(sum(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END),
-           |  0) AS BIGINT) AS oov_tokens,
-           | COALESCE(CAST(sum(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END)
-           |  AS BIGINT), 0) * 1000000 // count(*) AS oov_ppm
-           |FROM tok LEFT JOIN vocab v USING (token)
-           |GROUP BY source ORDER BY source""".stripMargin,
-      "q_pretokenizer" ->
-        s"""WITH p AS (
-           | SELECT source,
-           |  CASE WHEN doc_id < 20
-           |   THEN text || ' it''s v2.0-ready, isn''t it?!' ELSE text END
-           |  AS text
-           | FROM documents),
-           |d AS (
-           | SELECT source, len(${tokensSql("text")}) AS ws,
-           |  len(regexp_extract_all(text,
-           |   '''(?:s|t|re|ve|m|ll|d)| ?\\p{L}+| ?\\p{N}+| ?[^\\s\\p{L}\\p{N}]+|\\s+'))
-           |  AS pre
-           | FROM p)
-           |SELECT source, count(*) AS n_docs,
-           | CAST(sum(ws) AS BIGINT) AS ws_tokens,
-           | CAST(sum(pre) AS BIGINT) AS pre_tokens,
-           | CAST(sum(pre) AS BIGINT) * 1000000 // CAST(sum(ws) AS BIGINT)
-           |  AS pre_per_ws_ppm
-           |FROM d GROUP BY source ORDER BY source""".stripMargin,
-      "q_vocab_coverage" ->
-        s"""WITH c AS (
-           | SELECT token, count(*) AS freq
-           | FROM (SELECT unnest(${tokensSql("text")}) AS token FROM documents)
+           | SELECT w1, w2, cb AS n_pair,
+           |  round(2.0 * (${xlx("cb")} + ${xlx("cu - cb")}
+           |   + ${xlx("c2 - cb")} + ${xlx("nb - cu - c2 + cb")}
+           |   - ${xlx("cu")} - ${xlx("nb - cu")}
+           |   - ${xlx("c2")} - ${xlx("nb - c2")}
+           |   + ${xlx("nb")}), 4) AS g2
+           | FROM j)
+           |SELECT w1, w2, n_pair, g2 FROM sc
+           |ORDER BY g2 DESC, w1, w2 LIMIT 15""".stripMargin)
+    }),
+    // Stylometric near-clone source pairs (Burrows' Delta, top-30 words).
+    // same top-word list, same ppm freeze, same guarded z-variance,
+    // same 9dp |Δz| fold
+    Q("q_burrows_delta", { (s, d) => burrowsDelta(Tables.documents(s, d)) }, {
+      val mu = "(CAST(sf AS DOUBLE) / CAST(k AS DOUBLE))"
+      val va = s"((CAST(sff AS DOUBLE) - CAST(k AS DOUBLE) * $mu * $mu)" +
+        " / greatest(CAST(k AS DOUBLE) - 1, 1.0))"
+      s"""WITH tok AS (
+         | SELECT source, unnest(${tokensSql("lower(text)")}) AS token
+         | FROM documents),
+         |topw AS (SELECT token FROM (
+         | SELECT token, count(*) AS cnt FROM tok GROUP BY 1
+         | ORDER BY cnt DESC, token LIMIT 30)),
+         |stot AS (SELECT source, count(*) AS nt FROM tok GROUP BY 1),
+         |cnts AS (
+         | SELECT source, token, count(*) AS c
+         | FROM tok JOIN topw USING (token) GROUP BY 1, 2),
+         |grid AS (SELECT source, nt, token FROM stot CROSS JOIN topw),
+         |f AS (
+         | SELECT g.source, g.token,
+         |  CAST(coalesce(c.c, 0) * 1000000 // g.nt AS BIGINT) AS fppm
+         | FROM grid g LEFT JOIN cnts c
+         |  ON g.source = c.source AND g.token = c.token),
+         |ws AS (SELECT token, CAST(count(*) AS BIGINT) AS k,
+         |  CAST(sum(fppm) AS BIGINT) AS sf,
+         |  CAST(sum(fppm * fppm) AS BIGINT) AS sff
+         | FROM f GROUP BY 1),
+         |wz AS (
+         | SELECT source, f.token,
+         |  (CAST(fppm AS DOUBLE) - $mu) / sqrt($va) AS z
+         | FROM f JOIN ws ON f.token = ws.token
+         | WHERE k > 1 AND $va > 0),
+         |pairs AS (
+         | SELECT a.source AS s1, b.source AS s2,
+         |  CAST(round(abs(a.z - b.z), 9) AS DECIMAL(18,9)) AS t
+         | FROM wz a JOIN wz b
+         |  ON a.token = b.token AND a.source < b.source)
+         |SELECT s1, s2, count(*) AS n_words,
+         | round(CAST(sum(t) AS DOUBLE) / CAST(count(*) AS DOUBLE), 4)
+         |  AS delta
+         |FROM pairs GROUP BY 1, 2 ORDER BY delta, s1, s2
+         |LIMIT 15""".stripMargin
+    }),
+    // Yule's K repetitiveness constant + TTR/hapax lexical richness.
+    // same tokenize, same integer frequency-spectrum moments
+    Q("q_yule_k", { (s, d) => yuleK(Tables.documents(s, d)) },
+      s"""WITH freq AS (
+         | SELECT token, count(*) AS m FROM (
+         |  SELECT unnest(${tokensSql("lower(text)")}) AS token
+         |  FROM documents) GROUP BY 1),
+         |a AS (
+         | SELECT CAST(count(*) AS BIGINT) AS v,
+         |  CAST(sum(m) AS BIGINT) AS n,
+         |  sum(CAST(m AS HUGEINT) * CAST(m AS HUGEINT)) AS sm2,
+         |  CAST(sum(CASE WHEN m = 1 THEN 1 ELSE 0 END) AS BIGINT) AS v1
+         | FROM freq)
+         |SELECT n AS n_tokens, v AS vocab,
+         | round(CAST(v AS DOUBLE) / CAST(n AS DOUBLE), 6) AS ttr,
+         | round(CAST(v1 AS DOUBLE) / CAST(v AS DOUBLE), 6)
+         |  AS hapax_share,
+         | round(10000.0 * (CAST(sm2 AS DOUBLE) - CAST(n AS DOUBLE))
+         |  / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)), 6) AS yule_k
+         |FROM a""".stripMargin),
+    // weighted-PageRank keyword twin: same window-2 pair set, same
+    // q_pagerank integer rank scheme, rounds unrolled
+    Q("q_textrank", { (s, d) => textRank(Tables.documents(s, d)) }, {
+      val stop = enStopwords.map(w => s"'$w'").mkString(", ")
+      def it(t: Int) =
+        s"""r$t AS (
+           | SELECT nodes.node, 150000 // nn.nn + coalesce(c.c, 0) AS rank
+           | FROM nodes CROSS JOIN nn LEFT JOIN (
+           |   SELECT e.dst,
+           |    sum((850 * r${t - 1}.rank * e.n) // (1000 * w.wout)) AS c
+           |   FROM edges e JOIN r${t - 1} ON e.src = r${t - 1}.node
+           |    JOIN w ON w.src = e.src
+           |   GROUP BY 1) c ON c.dst = nodes.node)""".stripMargin
+      s"""WITH tk AS (
+         | SELECT ${tokensSql("lower(text)")} AS toks FROM documents),
+         |tf AS (SELECT toks FROM tk WHERE len(toks) >= 2),
+         |bb AS (
+         | SELECT toks[i] AS a, toks[i + kk] AS b
+         | FROM tf, unnest(range(1, len(toks) + 1)) AS r(i)
+         |  CROSS JOIN (VALUES (1), (2)) AS kx(kk)
+         | WHERE i + kk <= len(toks)),
+         |pp AS (
+         | SELECT a, b FROM bb
+         | WHERE a <> b AND a NOT IN ($stop) AND b NOT IN ($stop)),
+         |es AS (SELECT a AS src, b AS dst FROM pp
+         |       UNION ALL SELECT b, a FROM pp),
+         |edges AS (SELECT src, dst, count(*) AS n FROM es GROUP BY 1, 2),
+         |w AS (SELECT src, CAST(sum(n) AS BIGINT) AS wout
+         |      FROM edges GROUP BY 1),
+         |nodes AS (SELECT DISTINCT node FROM (
+         | SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
+         |nn AS (SELECT CAST(count(*) AS BIGINT) AS nn FROM nodes),
+         |r0 AS (SELECT node, 1000000 // nn AS rank
+         |       FROM nodes CROSS JOIN nn),
+         |${(1 to 6).map(it).mkString(",\n")}
+         |SELECT node AS word, CAST(rank AS BIGINT) AS rank_ppm,
+         | round(CAST(rank AS DOUBLE) / 1000000.0, 6) AS share
+         |FROM r6 ORDER BY rank DESC, node LIMIT 15""".stripMargin
+    }),
+    // Spectral word embeddings: top-2 SVD subspace of the milli-bit
+    // PPMI matrix over the top-32 heads (Levy & Goldberg 2014).
+    // PPMI-SVD twin: same count CTEs and milli-bit cell freeze, then
+    // the q_pca_subspace iteration replay over G = M·Mᵀ (list folds in
+    // j order = the driver's ascending-index loops; G entries are
+    // exact integers, so the iteration starts from identical doubles)
+    Q("q_ppmi_svd", { (s, d) => ppmiSvd(Tables.documents(s, d)) }, {
+      val iters = 10
+      val itCtes = (1 to iters).map { k =>
+        val prev = s"v${k - 1}"
+        s"""w$k AS (
+           | SELECT i,
+           |  list_sum(list_transform(list_zip(row, v1), p -> p[1] * p[2])) AS w1,
+           |  list_sum(list_transform(list_zip(row, v2), p -> p[1] * p[2])) AS w2
+           | FROM g2rows CROSS JOIN $prev),
+           |wl$k AS (SELECT list(w1 ORDER BY i) AS w1,
+           |  list(w2 ORDER BY i) AS w2 FROM w$k),
+           |a$k AS (SELECT list_transform(w1,
+           |   x -> x / sqrt(list_sum(list_transform(w1, y -> y * y)))) AS v1,
+           |  w2 FROM wl$k),
+           |b$k AS (SELECT v1, w2,
+           |  list_sum(list_transform(list_zip(v1, w2), p -> p[1] * p[2])) AS c
+           | FROM a$k),
+           |c$k AS (SELECT v1,
+           |  list_transform(list_zip(w2, v1), p -> p[1] - c * p[2]) AS w2p
+           | FROM b$k),
+           |v$k AS (SELECT v1, list_transform(w2p,
+           |   x -> x / sqrt(list_sum(list_transform(w2p, y -> y * y)))) AS v2
+           | FROM c$k)""".stripMargin
+      }.mkString(",\n")
+      ("WITH " + knCountCtesSql + ",\n" +
+        s"""t2c AS (SELECT w2, CAST(sum(cb) AS BIGINT) AS c2
+           |       FROM cb GROUP BY 1),
+           |nb AS (SELECT CAST(sum(cb) AS BIGINT) AS nb FROM cb),
+           |hd AS (SELECT w1,
+           |  CAST(row_number() OVER (ORDER BY cu DESC, w1) AS INTEGER)
+           |   AS rk
+           | FROM cu ORDER BY cu DESC, w1 LIMIT 32),
+           |cells AS (
+           | SELECT a.rk AS i, b.rk AS j,
+           |  CAST(floor(log2(CAST(cb AS DOUBLE) * CAST(nb AS DOUBLE)
+           |    / (CAST(cu AS DOUBLE) * CAST(c2 AS DOUBLE))) * 1000
+           |    + 0.5) AS BIGINT) AS mb
+           | FROM cb JOIN cu USING (w1) JOIN t2c USING (w2) CROSS JOIN nb
+           | JOIN hd a ON cb.w1 = a.w1 JOIN hd b ON cb.w2 = b.w1
+           | WHERE cb >= 2 AND CAST(cb AS DOUBLE) * CAST(nb AS DOUBLE)
+           |    / (CAST(cu AS DOUBLE) * CAST(c2 AS DOUBLE)) > 1.0),
+           |mrows AS (
+           | SELECT a.rk AS i,
+           |  list(CAST(coalesce(c.mb, 0) AS DOUBLE) ORDER BY b.rk) AS row
+           | FROM hd a CROSS JOIN hd b
+           | LEFT JOIN cells c ON c.i = a.rk AND c.j = b.rk
            | GROUP BY 1),
-           |t AS (SELECT CAST(sum(freq) AS BIGINT) AS total FROM c),
-           |r AS (SELECT token, freq,
-           |  row_number() OVER (ORDER BY freq DESC, token) AS rn
-           | FROM c QUALIFY rn <= 20),
-           |k AS (SELECT CAST(unnest([5, 10, 20]) AS INTEGER) AS cutoff)
-           |SELECT cutoff, count(*) AS vocab_tokens,
-           | CAST(sum(freq) AS BIGINT) AS covered,
-           | CAST(sum(freq) AS BIGINT) * 1000000
-           |  // (SELECT total FROM t) AS mass_ppm
-           |FROM r JOIN k ON r.rn <= k.cutoff
-           |GROUP BY cutoff ORDER BY cutoff""".stripMargin,
-      "q_tfidf_topk" ->
-        s"""WITH tok AS (SELECT doc_id, unnest(${tokensSql("lower(text)")}) AS term
-           |             FROM documents),
-           |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
-           |d AS (SELECT term, count(*) AS df, sum(tf) AS total_tf FROM tf GROUP BY 1),
-           |n AS (SELECT count(*) AS n_docs FROM documents)
-           |SELECT term, df,
-           | round(total_tf * (ln((n_docs + 1.0) / (df + 1)) + 1), 6) AS score
-           |FROM d, n
-           |ORDER BY score DESC, term LIMIT 20""".stripMargin,
-      "q_rep_ngrams" ->
-        s"""WITH toks AS (
-           | SELECT ${tokensSql("lower(text)")} AS t FROM documents),
-           |g AS (
-           | SELECT CAST(nn.n AS BIGINT) AS n_order,
-           |  array_to_string(list_slice(t, i, i + nn.n - 1), ' ') AS g
-           | FROM toks
-           |  CROSS JOIN unnest(range(1, len(t) + 1)) AS r(i)
-           |  CROSS JOIN range(1, 5) nn(n)
-           | WHERE len(t) >= 1 AND i + nn.n - 1 <= len(t)),
-           |pc AS (SELECT n_order, g, count(*) AS c FROM g GROUP BY 1, 2)
-           |SELECT n_order, CAST(sum(c) AS BIGINT) AS total_ngrams,
-           | count(*) AS distinct_ngrams,
-           | round(CAST(count(*) AS DOUBLE) / CAST(sum(c) AS DOUBLE), 6)
-           |  AS distinct_ratio,
-           | CAST(max(c) AS BIGINT) AS top_count
-           |FROM pc GROUP BY 1 ORDER BY n_order""".stripMargin,
-      "q_macro_f1" -> {
-        val p = "CASE WHEN n_pred > 0 THEN CAST(tp AS DOUBLE) / n_pred ELSE CAST(0.0 AS DOUBLE) END"
-        val r = "CASE WHEN n_true > 0 THEN CAST(tp AS DOUBLE) / n_true ELSE CAST(0.0 AS DOUBLE) END"
-        s"""WITH preds AS (
-           | SELECT lang AS truth,
-           |  CASE WHEN $maxScore = 0 THEN 'und' $langCase END AS pred
-           | FROM documents WHERE lang IS NOT NULL),
-           |cm AS (SELECT truth, pred, count(*) AS n FROM preds GROUP BY 1, 2),
-           |classes AS (
-           | SELECT truth AS cls FROM cm UNION SELECT pred FROM cm),
-           |bt AS (
-           | SELECT truth AS cls, CAST(sum(n) AS BIGINT) AS n_true,
-           |  CAST(sum(CASE WHEN pred = truth THEN n ELSE 0 END) AS BIGINT)
-           |   AS tp
-           | FROM cm GROUP BY 1),
-           |bp AS (
-           | SELECT pred AS cls, CAST(sum(n) AS BIGINT) AS n_pred
-           | FROM cm GROUP BY 1),
-           |st AS (
-           | SELECT cls, coalesce(n_true, 0) AS n_true, coalesce(tp, 0) AS tp,
-           |  coalesce(n_pred, 0) AS n_pred
-           | FROM classes LEFT JOIN bt USING (cls) LEFT JOIN bp USING (cls)),
-           |wf AS (
-           | SELECT cls, n_true, tp, n_pred - tp AS fp, n_true - tp AS fn,
-           |  round($p, 6) AS precision, round($r, 6) AS recall,
-           |  CAST(round(CASE WHEN ($p) + ($r) > 0
-           |    THEN CAST(2.0 AS DOUBLE) * ($p) * ($r) / (($p) + ($r))
-           |    ELSE CAST(0.0 AS DOUBLE) END, 6) AS DECIMAL(18,6)) AS f1d
-           | FROM st),
-           |tot AS (
-           | SELECT round(CAST(sum(f1d) AS DOUBLE) / count(*), 6) AS macro_f1,
-           |  round(CAST(sum(tp) AS DOUBLE) / CAST(sum(n_true) AS DOUBLE), 6)
-           |   AS accuracy
-           | FROM wf)
-           |SELECT cls, n_true, tp, fp, fn, precision, recall,
-           | CAST(f1d AS DOUBLE) AS f1, macro_f1, accuracy
-           |FROM wf CROSS JOIN tot ORDER BY cls""".stripMargin
-      },
-      "q_good_turing" ->
-        s"""WITH fof AS (
-           | SELECT f, count(*) AS nf FROM (
-           |  SELECT w, count(*) AS f FROM (
-           |   SELECT unnest(${tokensSql("lower(text)")}) AS w FROM documents)
-           |  GROUP BY 1)
-           | GROUP BY 1),
-           |a AS (
-           | SELECT CAST(sum(f * nf) AS BIGINT) AS n_tokens,
-           |  CAST(sum(nf) AS BIGINT) AS vocab,
-           |  CAST(sum(CASE WHEN f = 1 THEN nf ELSE 0 END) AS BIGINT) AS n1,
-           |  CAST(sum(CASE WHEN f = 2 THEN nf ELSE 0 END) AS BIGINT) AS n2
-           | FROM fof)
-           |SELECT n_tokens, vocab, n1, n2,
-           | round(CAST(n1 AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6)
-           |  AS p_unseen,
-           | round(CAST(n1 AS DOUBLE) / CAST(vocab AS DOUBLE), 6)
-           |  AS hapax_share,
-           | CASE WHEN n1 > 0
-           |  THEN round(CAST(2.0 AS DOUBLE) * n2 / n1, 6) END AS r1_star
-           |FROM a""".stripMargin,
-      "q_rake_keywords" -> {
-        val stopList = enStopwords.map(w => s"'$w'").mkString(", ")
-        s"""WITH toks AS (
-           | SELECT doc_id, ${tokensSql("lower(text)")} AS t FROM documents),
-           |pos AS (
-           | SELECT doc_id, CAST(i AS BIGINT) AS i, t[i] AS w
-           | FROM toks CROSS JOIN unnest(range(1, len(t) + 1)) AS r(i)),
-           |ns AS (SELECT doc_id, i, w FROM pos WHERE w NOT IN ($stopList)),
-           |isl AS (
-           | SELECT doc_id, i, w,
-           |  i - row_number() OVER (PARTITION BY doc_id ORDER BY i) AS grp
-           | FROM ns),
-           |isl2 AS (
-           | SELECT doc_id, i, w, grp,
-           |  count(*) OVER (PARTITION BY doc_id, grp) AS len
-           | FROM isl),
-           |ph AS (
-           | SELECT doc_id, grp, string_agg(w, ' ' ORDER BY i) AS phrase
-           | FROM isl2 GROUP BY 1, 2),
-           |wsc AS (
-           | SELECT w, CAST(round(CAST(sum(len) AS DOUBLE) / count(*), 6)
-           |   AS DECIMAL(18,6)) AS wscore
-           | FROM isl2 GROUP BY 1),
-           |pc AS (SELECT phrase, count(*) AS cnt FROM ph GROUP BY 1),
-           |psc AS (
-           | SELECT phrase, cnt, CAST(sum(wscore) AS DOUBLE) AS score
-           | FROM (SELECT phrase, cnt, unnest(string_split(phrase, ' ')) AS w
-           |       FROM pc) x
-           |  JOIN wsc USING (w)
-           | GROUP BY 1, 2)
-           |SELECT phrase, cnt, round(score, 6) AS score
-           |FROM psc ORDER BY score DESC, phrase LIMIT 15""".stripMargin
-      },
-      "q_cooccur_pmi" ->
-        s"""WITH toks AS (SELECT ${tokensSql("lower(text)")} AS t FROM documents),
-           |u AS (SELECT w, count(*) AS cu
-           |      FROM (SELECT unnest(t) AS w FROM toks) GROUP BY 1),
-           |nu AS (SELECT CAST(sum(cu) AS BIGINT) AS nu FROM u),
-           |pc AS (
-           | SELECT least(t[i], t[i + k]) AS w1,
-           |  greatest(t[i], t[i + k]) AS w2, count(*) AS cb
-           | FROM toks
-           |  CROSS JOIN unnest(range(1, len(t) + 1)) AS r(i)
-           |  CROSS JOIN range(1, 4) kk(k)
-           | WHERE len(t) >= 2 AND i + k <= len(t)
-           | GROUP BY 1, 2),
-           |np AS (SELECT CAST(sum(cb) AS BIGINT) AS np FROM pc)
-           |SELECT w1, w2, cb,
-           | round(log2((CAST(cb AS DOUBLE) / CAST(np AS DOUBLE))
-           |   / ((CAST(u1.cu AS DOUBLE) / CAST(nu AS DOUBLE))
-           |      * (CAST(u2.cu AS DOUBLE) / CAST(nu AS DOUBLE)))), 6) AS pmi
-           |FROM pc JOIN u u1 ON pc.w1 = u1.w JOIN u u2 ON pc.w2 = u2.w, nu, np
-           |WHERE cb >= 3
-           |ORDER BY pmi DESC, w1, w2 LIMIT 20""".stripMargin,
-      "q_pmi_topk" ->
-        s"""WITH toks AS (SELECT ${tokensSql("lower(text)")} AS t FROM documents),
-           |u AS (SELECT w, count(*) AS cu
-           |      FROM (SELECT unnest(t) AS w FROM toks) GROUP BY 1),
-           |nu AS (SELECT CAST(sum(cu) AS BIGINT) AS nu FROM u),
-           |bc AS (SELECT w1, w2, count(*) AS cb FROM (
-           |        SELECT unnest(list_transform(range(1, len(t)), i -> t[i])) AS w1,
-           |               unnest(list_transform(range(1, len(t)), i -> t[i + 1])) AS w2
-           |        FROM toks WHERE len(t) >= 2) GROUP BY 1, 2),
-           |nb AS (SELECT CAST(sum(cb) AS BIGINT) AS nb FROM bc)
-           |SELECT w1, w2, cb,
-           | round(log2((CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))
-           |   / ((CAST(u1.cu AS DOUBLE) / CAST(nu AS DOUBLE))
-           |      * (CAST(u2.cu AS DOUBLE) / CAST(nu AS DOUBLE)))), 6) AS pmi
-           |FROM bc JOIN u u1 ON bc.w1 = u1.w JOIN u u2 ON bc.w2 = u2.w, nu, nb
-           |WHERE cb >= 3
-           |ORDER BY pmi DESC, w1, w2 LIMIT 20""".stripMargin,
-      "q_stratified_sample" ->
-        """SELECT lang, count(*) AS sampled FROM documents
-          |WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT) % 100 < 40
-          |GROUP BY 1 ORDER BY 1""".stripMargin,
-      "q_quality_filter" ->
-        s"""WITH m AS (SELECT doc_id, round($meanTok, 6) AS mtl FROM documents),
-           |t AS (SELECT quantile_cont(mtl, 0.1) AS thr FROM m)
-           |SELECT count(*) AS kept, round(min(mtl), 6) AS min_kept_mtl
-           |FROM m, t WHERE mtl >= thr""".stripMargin,
-      "q_disparate_impact" ->
-        s"""WITH m AS (SELECT lang, round($meanTok, 6) AS mtl FROM documents),
-           |t AS (SELECT quantile_cont(mtl, 0.1) AS thr FROM m),
-           |p AS (
-           | SELECT lang, count(*) AS n,
-           |  CAST(sum(CASE WHEN mtl >= thr THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
-           | FROM m, t GROUP BY 1),
-           |r AS (SELECT lang, n, n_kept,
-           |       n_kept * 1000000 // n AS rate_ppm FROM p),
-           |x AS (SELECT max(rate_ppm) AS max_ppm FROM r)
-           |SELECT lang, n, n_kept, rate_ppm,
-           | round(CAST(rate_ppm AS DOUBLE) / CAST(max_ppm AS DOUBLE), 6)
-           |  AS di_ratio,
-           | rate_ppm * 5 < max_ppm * 4 AS violates_45
-           |FROM r, x ORDER BY lang""".stripMargin,
-      "q_curriculum" -> {
-        val thrCols = (1 to 9).map(i => s"quantile_cont(score, 0.${i}) AS t$i").mkString(", ")
-        val caseSum = (1 to 9)
-          .map(i => s"CASE WHEN score > t$i THEN 1 ELSE 0 END")
-          .mkString("(", " + ", ")")
-        s"""WITH s AS (
-           | SELECT doc_id, CAST(length(text) AS DOUBLE) AS score FROM documents),
-           |t AS (SELECT $thrCols FROM s),
-           |b AS (SELECT doc_id, score, 1 + $caseSum AS decile FROM s, t),
-           |r AS (
-           | SELECT doc_id, decile, CAST(row_number() OVER (
-           |   PARTITION BY decile ORDER BY score, doc_id) AS INTEGER) AS rn
-           | FROM b)
-           |SELECT doc_id, decile, rn FROM r
-           |ORDER BY rn, decile, doc_id LIMIT 20""".stripMargin
-      },
-      "q_decile_report" -> {
-        val thrCols = (1 to 9).map(i => s"quantile_cont(score, 0.${i}) AS t$i").mkString(", ")
-        val caseSum = (1 to 9)
-          .map(i => s"CASE WHEN score > t$i THEN 1 ELSE 0 END")
-          .mkString("(", " + ", ")")
-        s"""WITH s AS (SELECT CAST(length(text) AS DOUBLE) AS score FROM documents),
-           |t AS (SELECT $thrCols FROM s)
-           |SELECT 1 + $caseSum AS decile, count(*) AS cnt,
-           | min(score) AS min_score, max(score) AS max_score
-           |FROM s, t GROUP BY 1 ORDER BY 1""".stripMargin
-      },
-      "q_weighted_sample" ->
-        s"""WITH t AS (SELECT lang, $nTok AS n_tok,
-           |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS u
-           | FROM documents)
-           |SELECT lang, count(*) AS kept, CAST(sum(n_tok) AS BIGINT) AS kept_tokens
-           |FROM t
-           |WHERE CAST(u AS DOUBLE) < least(1.0, CAST(n_tok AS DOUBLE) / 400.0) * 4294967296.0
-           |GROUP BY 1 ORDER BY 1""".stripMargin,
-      "q_sample_split" ->
-        """SELECT CASE
-          |  WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT) % 100 < 80 THEN 'train'
-          |  WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT) % 100 < 90 THEN 'val'
-          |  ELSE 'test' END AS split, count(*) AS cnt
-          |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-      "q_text_entropy" ->
-        """WITH ch AS (
-          | SELECT doc_id, unnest(string_split(text, '')) AS ch
-          | FROM documents WHERE length(text) > 0),
-          |c AS (SELECT doc_id, ch, count(*) AS cnt FROM ch GROUP BY 1, 2),
-          |t AS (SELECT doc_id, cnt,
-          |       sum(cnt) OVER (PARTITION BY doc_id) AS n FROM c),
-          |e AS (SELECT doc_id, CAST(max(n) AS BIGINT) AS n_chars,
-          | CAST(sum(CAST(round((cnt / CAST(n AS DOUBLE)) *
-          |   log2(CAST(n AS DOUBLE) / cnt), 6) AS DECIMAL(18,6))) AS DOUBLE)
-          |   AS entropy_bits
-          | FROM t GROUP BY doc_id)
-          |SELECT d.doc_id, coalesce(e.n_chars, 0) AS n_chars,
-          | coalesce(e.entropy_bits, 0.0) AS entropy_bits
-          |FROM documents d LEFT JOIN e USING (doc_id)
-          |ORDER BY doc_id""".stripMargin,
-      "q_rare_bigrams" ->
-        """WITH bg AS (
-          | SELECT doc_id,
-          |  unnest(list_transform(range(1, length(text)),
-          |    i -> substr(text, CAST(i AS INTEGER), 2))) AS bg
-          | FROM documents),
-          |counts AS (SELECT bg, count(*) AS cnt FROM bg GROUP BY bg),
-          |t AS (SELECT sum(cnt) AS total FROM counts),
-          |per_doc AS (
-          | SELECT doc_id, count(*) AS n_bigrams,
-          |  sum(CASE WHEN cnt * 10000 < total THEN 1 ELSE 0 END) AS n_rare
-          | FROM bg JOIN counts USING (bg), t
-          | GROUP BY doc_id)
-          |SELECT d.doc_id, coalesce(n_bigrams, 0) AS n_bigrams,
-          | CAST(coalesce(n_rare, 0) AS BIGINT) AS n_rare
-          |FROM documents d LEFT JOIN per_doc USING (doc_id)
-          |ORDER BY doc_id""".stripMargin
-    )
-  }
+           |gpair AS (
+           | SELECT x.i AS i, y.i AS j,
+           |  list_sum(list_transform(list_zip(x.row, y.row),
+           |    p -> p[1] * p[2])) AS g
+           | FROM mrows x CROSS JOIN mrows y),
+           |g2rows AS (SELECT i, list(CAST(g AS DOUBLE) ORDER BY j) AS row
+           |           FROM gpair GROUP BY 1),
+           |v0 AS (SELECT
+           |  list_transform(range(0, (SELECT count(*) FROM hd)),
+           |    x -> 1.0) AS v1,
+           |  list_transform(range(0, (SELECT count(*) FROM hd)),
+           |    x -> CASE WHEN x % 2 = 0 THEN 1.0 ELSE -1.0 END) AS v2),
+           |$itCtes,
+           |fw AS (
+           | SELECT i,
+           |  list_sum(list_transform(list_zip(row, v1), p -> p[1] * p[2])) AS f1,
+           |  list_sum(list_transform(list_zip(row, v2), p -> p[1] * p[2])) AS f2
+           | FROM g2rows CROSS JOIN v$iters),
+           |fl AS (SELECT list(f1 ORDER BY i) AS f1,
+           |  list(f2 ORDER BY i) AS f2 FROM fw),
+           |lam AS (
+           | SELECT
+           |  list_sum(list_transform(list_zip(v1, f1), p -> p[1] * p[2])) AS l1,
+           |  list_sum(list_transform(list_zip(v2, f2), p -> p[1] * p[2])) AS l2
+           | FROM v$iters, fl)
+           |SELECT rk, w1 AS word,
+           | round(v1[rk] * sqrt(sqrt(l1)), 6) AS e1,
+           | round(v2[rk] * sqrt(sqrt(l2)), 6) AS e2
+           |FROM hd CROSS JOIN v$iters CROSS JOIN lam
+           |ORDER BY rk""".stripMargin)
+    }),
+    Q("q_readability", { (s, d) => readability(Tables.documents(s, d)) },
+      s"""WITH g AS (
+         | SELECT source,
+         |  CAST($nTok AS BIGINT) AS w,
+         |  greatest(1, CAST(len(regexp_extract_all(text, '[.!?]+'))
+         |    AS BIGINT)) AS s,
+         |  CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
+         |    AS BIGINT) AS y
+         | FROM documents
+         | WHERE text IS NOT NULL AND source IS NOT NULL),
+         |a AS (
+         | SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+         |  CAST(sum(w) AS BIGINT) AS sw, CAST(sum(s) AS BIGINT) AS ss,
+         |  CAST(sum(y) AS BIGINT) AS sy
+         | FROM g GROUP BY 1)
+         |SELECT source, n_docs,
+         | round(CAST(sw AS DOUBLE) / CAST(ss AS DOUBLE), 6)
+         |  AS words_per_sentence,
+         | round(CAST(sy AS DOUBLE) / CAST(sw AS DOUBLE), 6)
+         |  AS syllables_per_word,
+         | round(0.39 * (CAST(sw AS DOUBLE) / CAST(ss AS DOUBLE))
+         |  + 11.8 * (CAST(sy AS DOUBLE) / CAST(sw AS DOUBLE))
+         |  - 15.59, 6) AS fk_grade,
+         | round(206.835 - 1.015 * (CAST(sw AS DOUBLE) / CAST(ss AS DOUBLE))
+         |  - 84.6 * (CAST(sy AS DOUBLE) / CAST(sw AS DOUBLE)), 6)
+         |  AS flesch_ease
+         |FROM a ORDER BY source""".stripMargin),
+    Q("q_mojibake_audit", { (s, d) => mojibakeAudit(Tables.documents(s, d)) },
+      """WITH t AS (
+        | SELECT source,
+        |  CASE WHEN substr(md5(text), 1, 1) IN ('0', '1')
+        |        THEN text || chr(65533)
+        |       WHEN substr(md5(text), 1, 1) IN ('2', '3')
+        |        THEN text || chr(195) || chr(169)
+        |       ELSE text END AS t
+        | FROM documents
+        | WHERE text IS NOT NULL AND source IS NOT NULL),
+        |f AS (
+        | SELECT source,
+        |  CAST(CASE WHEN position(chr(65533) IN t) > 0
+        |       THEN 1 ELSE 0 END AS BIGINT) AS repl,
+        |  CAST(CASE WHEN position(chr(195) || chr(169) IN t) > 0
+        |       THEN 1 ELSE 0 END AS BIGINT) AS moji
+        | FROM t)
+        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+        | CAST(sum(repl) AS BIGINT) AS n_replacement,
+        | CAST(sum(moji) AS BIGINT) AS n_mojibake,
+        | CAST(sum(greatest(repl, moji)) * 1000000 // count(*) AS BIGINT)
+        |  AS corrupt_ppm
+        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin),
+    // Corpus-trained bigram-LM quality scoring (the CCNet perplexity
+    // filter shape) — per-doc mean -log2 P, full oracle replication.
+    // the bigram chain: same tokens, same 1-based bigram enumeration,
+    // same add-one smoothing, 6dp-decimal term fold
+    Q("q_lm_score", { (s, d) =>
+      lmScore(Tables.documents(s, d))
+    },
+      s"""WITH toks AS (
+         | SELECT doc_id AS id, ${tokensSql("text")} AS toks FROM documents),
+         |t2 AS (SELECT id, toks FROM toks WHERE len(toks) >= 2),
+         |bb AS (
+         | SELECT id, toks[i] AS w1, toks[i + 1] AS w2
+         | FROM t2, unnest(range(1, len(toks))) AS r(i)),
+         |cb AS (SELECT w1, w2, count(*) AS cb FROM bb GROUP BY 1, 2),
+         |cu AS (SELECT w1, count(*) AS cu FROM bb GROUP BY 1),
+         |v AS (SELECT count(DISTINCT w) AS v FROM
+         |  (SELECT w1 AS w FROM bb UNION SELECT w2 FROM bb)),
+         |terms AS (
+         | SELECT bb.id,
+         |  CAST(round(log2(CAST(cb.cb + 1 AS DOUBLE)
+         |    / CAST(cu.cu + v.v AS DOUBLE)), 6) AS DECIMAL(18,6)) AS t
+         | FROM bb JOIN cb USING (w1, w2) JOIN cu USING (w1) CROSS JOIN v)
+         |SELECT id AS doc_id, count(*) AS n_bigrams,
+         | round(-CAST(sum(t) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS lm_bits
+         |FROM terms GROUP BY 1 ORDER BY 1""".stripMargin),
+    // Interpolated Kneser-Ney bigram LM: the trained-model inspection
+    // table (top continuations + discount) and the per-source surprisal
+    // readout — the production smoothing beside q_lm_score's add-one.
+    // Kneser-Ney twins: same count frames, same D = n1/(n1+2n2), same
+    // interpolated-probability expression tree, 6dp term fold
+    Q("q_kn_lm", { (s, d) => knLmTopK(Tables.documents(s, d)) },
+      ("WITH " + knCountCtesSql + ",\n" +
+        s"""scored AS (
+           | SELECT w1, w2, cb, cu, fwd, bwd,
+           |  $knDiscSql AS d,
+           |  (CAST(cb AS DOUBLE) - $knDiscSql) / CAST(cu AS DOUBLE)
+           |   + $knDiscSql
+           |     * CAST(fwd AS DOUBLE) / CAST(cu AS DOUBLE)
+           |     * (CAST(bwd AS DOUBLE) / CAST(b AS DOUBLE)) AS p
+           | FROM cb JOIN cu USING (w1) JOIN bwd USING (w2) CROSS JOIN gl)
+           |SELECT w1, w2, cb, cu, fwd, bwd,
+           | round(d, 6) AS discount, round(p, 6) AS p_kn
+           |FROM scored ORDER BY p DESC, w1, w2 LIMIT 15""".stripMargin)),
+    // PPMI top-k collocates per frequent head word (shared KN bigram
+    // frames; G²'s association-strength companion).
+    // PPMI twin: same shared bigram count CTEs, same raw-ratio ranking
+    // (log2 only in the released 6dp value), same head/tie-break order
+    Q("q_ppmi_topk", { (s, d) => ppmiTopK(Tables.documents(s, d)) },
+      ("WITH " + knCountCtesSql + ",\n" +
+        """c2 AS (SELECT w2, CAST(sum(cb) AS BIGINT) AS c2
+          |       FROM cb GROUP BY 1),
+          |nb AS (SELECT CAST(sum(cb) AS BIGINT) AS nb FROM cb),
+          |scored AS (
+          | SELECT w1, w2, cb,
+          |  CAST(cb AS DOUBLE) * CAST(nb AS DOUBLE)
+          |   / (CAST(cu AS DOUBLE) * CAST(c2 AS DOUBLE)) AS r
+          | FROM cb JOIN cu USING (w1) JOIN c2 USING (w2) CROSS JOIN nb
+          | WHERE cb >= 2),
+          |hd AS (SELECT w1 FROM cu ORDER BY cu DESC, w1 LIMIT 20),
+          |rk AS (
+          | SELECT w1, w2, cb, r,
+          |  row_number() OVER (PARTITION BY w1 ORDER BY r DESC, w2)
+          |   AS rank
+          | FROM scored JOIN hd USING (w1) WHERE r > 1.0)
+          |SELECT w1, CAST(rank AS INTEGER) AS rank, w2, cb,
+          | round(log2(r), 6) AS ppmi
+          |FROM rk WHERE rank <= 5 ORDER BY w1, rank""".stripMargin)),
+    // Cross-source KN transfer matrix: mean surprisal of every source
+    // under each top-3-source-trained bigram LM, with coverage.
+    // domain-transfer twin: same per-train count frames off the shared
+    // bb instances, same greatest(cb−D,0) probability tree, same
+    // coverage exclusion and 6dp term fold
+    Q("q_domain_ppl", { (s, d) => domainPpl(Tables.documents(s, d)) },
+      ("WITH " + knCountCtesSql + ",\n" +
+        s"""bbn AS (SELECT * FROM bb WHERE source IS NOT NULL),
+           |tsrc AS (
+           | SELECT source AS train_src FROM bbn
+           | GROUP BY 1 ORDER BY count(*) DESC, train_src LIMIT 3),
+           |tcb AS (
+           | SELECT b.source AS train_src, w1, w2,
+           |  CAST(count(*) AS BIGINT) AS cb
+           | FROM bbn b JOIN tsrc ON b.source = tsrc.train_src
+           | GROUP BY 1, 2, 3),
+           |tcu AS (SELECT train_src, w1, CAST(sum(cb) AS BIGINT) AS cu,
+           |  CAST(count(*) AS BIGINT) AS fwd FROM tcb GROUP BY 1, 2),
+           |tbwd AS (SELECT train_src, w2, CAST(count(*) AS BIGINT) AS bwd
+           |         FROM tcb GROUP BY 1, 2),
+           |tgl AS (SELECT train_src, CAST(count(*) AS BIGINT) AS b,
+           |  CAST(sum(CASE WHEN cb = 1 THEN 1 ELSE 0 END) AS BIGINT)
+           |   AS n1,
+           |  CAST(sum(CASE WHEN cb = 2 THEN 1 ELSE 0 END) AS BIGINT)
+           |   AS n2
+           | FROM tcb GROUP BY 1),
+           |ev AS (
+           | SELECT source AS eval_src, w1, w2,
+           |  CAST(count(*) AS BIGINT) AS cnt
+           | FROM bbn GROUP BY 1, 2, 3),
+           |inst AS (
+           | SELECT eval_src, w1, w2, cnt, train_src
+           | FROM ev CROSS JOIN tsrc),
+           |j AS (
+           | SELECT i.train_src, i.eval_src, i.cnt,
+           |  cu.cu, cu.fwd, cbt.cb, bw.bwd, gl.b, gl.n1, gl.n2
+           | FROM inst i
+           | LEFT JOIN tcu cu
+           |  ON cu.train_src = i.train_src AND cu.w1 = i.w1
+           | LEFT JOIN tcb cbt ON cbt.train_src = i.train_src
+           |  AND cbt.w1 = i.w1 AND cbt.w2 = i.w2
+           | LEFT JOIN tbwd bw
+           |  ON bw.train_src = i.train_src AND bw.w2 = i.w2
+           | LEFT JOIN tgl gl ON gl.train_src = i.train_src),
+           |sc AS (
+           | SELECT train_src, eval_src, cnt,
+           |  CASE WHEN cu IS NOT NULL AND $domainPplPSql > 0
+           |   THEN cnt ELSE 0 END AS cov,
+           |  CASE WHEN cu IS NOT NULL AND $domainPplPSql > 0
+           |   THEN CAST(round(-log2($domainPplPSql), 6) AS DECIMAL(18,6))
+           |  END AS t
+           | FROM j)
+           |SELECT train_src, eval_src,
+           | CAST(sum(cnt) AS BIGINT) AS n_bigrams,
+           | CAST(CAST(sum(cov) AS HUGEINT) * 1000000 // sum(cnt)
+           |  AS BIGINT) AS covered_ppm,
+           | CASE WHEN sum(cov) > 0 THEN
+           |  round(CAST(sum(t * CAST(cnt AS DECIMAL(18,0))) AS DOUBLE)
+           |   / CAST(sum(cov) AS DOUBLE), 6)
+           | END AS kn_bits
+           |FROM sc GROUP BY 1, 2 ORDER BY train_src, eval_src""".stripMargin)),
+    // PLSA K=3, two unrolled EM rounds: top words per topic.
+    // PLSA twins: same seeded ppb init, same two unrolled EM rounds,
+    // every normalization an integral // on non-negative operands
+    Q("q_plsa_topics", { (s, d) => plsaTopics(Tables.documents(s, d)) },
+      ("WITH " + plsaCtesSql + "\n" +
+        """SELECT topic, rank, word, p_ppb FROM (
+          | SELECT CAST(z AS BIGINT) AS topic, w AS word, pwz AS p_ppb,
+          |  CAST(row_number() OVER (PARTITION BY z
+          |    ORDER BY pwz DESC, w) AS INTEGER) AS rank
+          | FROM p2wz)
+          |WHERE rank <= 5 ORDER BY topic, rank""".stripMargin)),
+    // PLSA K=3, two unrolled EM rounds: per-source topic mixtures.
+    Q("q_plsa_mix", { (s, d) => plsaMix(Tables.documents(s, d)) },
+      ("WITH " + plsaCtesSql + "\n" +
+        """SELECT source, CAST(z AS BIGINT) AS topic, pzs AS mix_ppb,
+          | round(CAST(pzs AS DOUBLE) / 1000000000.0, 6) AS share
+          |FROM p2zs ORDER BY source, topic""".stripMargin)),
+    Q("q_kn_surprisal", { (s, d) => knSurprisal(Tables.documents(s, d)) },
+      ("WITH " + knCountCtesSql + ",\n" + knTermsCteSql + "\n" +
+        """SELECT source, count(DISTINCT id) AS n_docs,
+          | count(*) AS n_bigrams,
+          | round(CAST(sum(t) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6)
+          |  AS kn_bits
+          |FROM terms GROUP BY 1 ORDER BY 1""".stripMargin)),
+    // Tokenizer deploy path: train 6 merges, then encode the corpus with
+    // them in one pass; per-doc compression (n_raw vs n_bpe) is the
+    // standard tokenizer-fertility report.
+    Q("q_bpe_encode", { (s, d) =>
+      val docs = Tables.documents(s, d)
+      val merges = bpeTrain(s, docs, 6).orderBy("step").collect()
+        .map(r => (r.getString(1), r.getString(2))).toSeq
+      // mapSide encode (proven row-identical to the projection-chain
+      // form in Round6Spec): the k chained aggregate-folds each rebuild
+      // a full '|'-joined corpus string per row per level — measured
+      // execRun 78 s / cpu 43 s at sf0.1, allocation-stall bound; the
+      // imperative per-partition pass does the same greedy scan on
+      // String arrays in one level, and is the documented production
+      // path at tokenizer-real merge counts anyway
+      bpeEncodeMapSide(docs, merges).orderBy("doc_id")
+    },
+      bpeEncodeSql(6)),
+    // Tokenizer training: 10 BPE merge iterations over the corpus; the
+    // returned merge table is the trained artifact, replayed exactly by
+    // the DuckDB oracle (same argmax order, same greedy fold). k=10 (up
+    // from r5's 3) exercises the per-iteration localCheckpoint: plan
+    // depth and per-pass cost stay constant across iterations.
+    // One EM round of SentencePiece-style unigram-LM piece scoring over
+    // the BPE candidate vocab (fixed-point ppb posteriors).
+    // unigram-LM twin: same top-M candidate pairs, same ppb integral
+    // divisions (// ≡ div ≡ floor on non-negative operands), same
+    // clamped expected counts and renormalization
+    Q("q_unigram_lm", { (s, d) => unigramLm(Tables.documents(s, d)) },
+      """WITH tk AS (
+        | SELECT list_filter(string_split_regex(lower(text), '[^a-z]+'),
+        |   t -> t <> '') AS toks
+        | FROM documents),
+        |tf AS (SELECT toks FROM tk WHERE len(toks) >= 1),
+        |uni AS (
+        | SELECT w, CAST(count(*) AS BIGINT) AS cu FROM (
+        |  SELECT unnest(toks) AS w FROM tf) GROUP BY 1),
+        |nn AS (SELECT CAST(sum(cu) AS BIGINT) AS n FROM uni),
+        |bb AS (
+        | SELECT toks[i] AS a, toks[i + 1] AS b
+        | FROM tf, unnest(range(1, len(toks))) AS r(i)),
+        |pairs AS (SELECT a, b, CAST(count(*) AS BIGINT) AS cp
+        |          FROM bb GROUP BY 1, 2),
+        |cand AS (SELECT a, b, cp FROM pairs
+        |         ORDER BY cp DESC, a, b LIMIT 10),
+        |pp AS (
+        | SELECT a, b, cp,
+        |  CAST(CAST(cp AS HUGEINT) * 1000000000 // n AS BIGINT) AS pab,
+        |  CAST(CAST(ca.cu AS HUGEINT) * 1000000000 // n AS BIGINT) AS pa,
+        |  CAST(CAST(cb.cu AS HUGEINT) * 1000000000 // n AS BIGINT) AS pb
+        | FROM cand JOIN uni ca ON ca.w = cand.a
+        |  JOIN uni cb ON cb.w = cand.b CROSS JOIN nn),
+        |post AS (
+        | SELECT a, b, cp,
+        |  CAST(CAST(pab AS HUGEINT) * 1000000000 * 1000000000
+        |   // greatest(CAST(pab AS HUGEINT) * 1000000000
+        |      + CAST(pa AS HUGEINT) * CAST(pb AS HUGEINT), 1) AS BIGINT)
+        |   AS post
+        | FROM pp),
+        |red AS (
+        | SELECT coalesce(sum(CAST(cp AS HUGEINT) * post),
+        |   CAST(0 AS HUGEINT)) AS red FROM post),
+        |rem AS (
+        | SELECT w, sum(r) AS rem FROM (
+        |  SELECT a AS w, CAST(cp AS HUGEINT) * post AS r FROM post
+        |  UNION ALL
+        |  SELECT b AS w, CAST(cp AS HUGEINT) * post AS r FROM post)
+        | GROUP BY 1),
+        |uniec AS (
+        | SELECT w AS piece, 'unigram' AS kind, cu AS raw_count,
+        |  greatest(CAST(cu AS HUGEINT) * 1000000000
+        |   - coalesce(rem, CAST(0 AS HUGEINT)), CAST(0 AS HUGEINT))
+        |   AS ec_fp
+        | FROM uni LEFT JOIN rem USING (w)),
+        |mec AS (
+        | SELECT a || '_' || b AS piece, 'merge' AS kind,
+        |  cp AS raw_count, CAST(cp AS HUGEINT) * post AS ec_fp
+        | FROM post),
+        |np AS (
+        | SELECT CAST(n AS HUGEINT) * 1000000000 - red AS npfp
+        | FROM nn CROSS JOIN red)
+        |SELECT piece, kind, raw_count,
+        | round(CAST(ec_fp AS DOUBLE) / 1000000000.0, 6)
+        |  AS expected_count,
+        | CAST(ec_fp * 1000000000
+        |  // greatest(npfp, CAST(1 AS HUGEINT)) AS BIGINT) AS p_ppb
+        |FROM (SELECT * FROM uniec UNION ALL SELECT * FROM mec)
+        | CROSS JOIN np
+        |ORDER BY p_ppb DESC, piece LIMIT 15""".stripMargin),
+    Q("q_bpe_train", { (s, d) =>
+      bpeTrain(s, Tables.documents(s, d), 10).orderBy("step")
+    },
+      bpeTrainSql(10)),
+    // TOKENIZER FERTILITY AUDIT — bytes/chars/raw-words per BPE token,
+    // PER SOURCE: the data-card column that decides tokenizer/corpus fit
+    // (a source whose bytes-per-token runs hot against the corpus mean is
+    // under-served by the trained merges — more compute per byte of
+    // signal). Pairs q_data_card with the trained q_bpe_train artifact:
+    // train once, encode once (the same collected-merges deploy path as
+    // q_bpe_encode), then ONE source-cardinality aggregate over exact
+    // long sums with a single final division — no per-doc ratios
+    // averaged (ratio-of-sums, not sum-of-ratios, so the figure weighs
+    // documents by their mass exactly like a training run would).
+    Q("q_tokenizer_fertility", { (s, d) =>
+      val docs = Tables.documents(s, d)
+      val merges = bpeTrain(s, docs, 6).orderBy("step").collect()
+        .map(r => (r.getString(1), r.getString(2))).toSeq
+      val enc = bpeEncodeMapSide(docs, merges) // q_bpe_encode's rationale
+      val meta = docs.select(col("doc_id"), col("source"),
+        length(col("text")).cast("long").as("chars"),
+        expr("octet_length(text)").cast("long").as("bytes"))
+      enc.join(meta, Seq("doc_id"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_bpe")).as("n_bpe_tokens"),
+          round(sum(col("bytes")).cast("double") / sum(col("n_bpe")), 6)
+            .as("bytes_per_token"),
+          round(sum(col("chars")).cast("double") / sum(col("n_bpe")), 6)
+            .as("chars_per_token"),
+          round(sum(col("n_raw")).cast("double") / sum(col("n_bpe")), 6)
+            .as("raw_per_bpe"))
+        .orderBy("source")
+    },
+      fertilitySql(6)),
+    Q("q_text_stats", { (s, d) =>
+      Tables.documents(s, d).select(
+          col("doc_id"),
+          tokenCount(col("text")).as("n_tokens"),
+          bpeTokenCount(col("text")).as("n_bpe_tokens"),
+          round(stopwordRatio(col("text")), 6).as("stop_ratio"),
+          round(punctRatio(col("text")), 6).as("punct_ratio"),
+          round(meanTokenLen(col("text")), 6).as("mean_tok_len"))
+        .orderBy("doc_id")
+    },
+      s"""SELECT doc_id, CAST($nTok AS INTEGER) AS n_tokens,
+         | CAST(len(regexp_extract_all(text, '$bpeTokenPattern')) AS INTEGER) AS n_bpe_tokens,
+         | round($stopRatio, 6) AS stop_ratio,
+         | round($punctRatio, 6) AS punct_ratio,
+         | round($meanTok, 6) AS mean_tok_len
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    Q("q_text_quality", { (s, d) =>
+      Tables.documents(s, d).select(
+          col("doc_id"),
+          round(qualityScore(col("text")), 2).as("quality"))
+        .orderBy("doc_id")
+    },
+      s"SELECT doc_id, round($quality, 2) AS quality FROM documents ORDER BY doc_id"),
+    // ISOTONIC CALIBRATION of a raw score against a labeled slice: the
+    // English-stopword ratio (2dp spine, ~30 levels) calibrated to the
+    // lang column's "is English" — the curation case where a cheap signal
+    // becomes a probability. The natural rate curve trends up with real
+    // dips (sampling noise at thin levels), so the gate exercises actual
+    // pooling; the planted textbook case lives in Round9Spec. rate is the
+    // raw per-level label rate; fitted is the PAVA repair (non-decreasing
+    // by construction, equal to rate wherever already monotone).
+    // Per-source distinctive vocabulary (top-5 Fightin' Words z-scores).
+    // PAVA via the max-min closed form over prefix sums — block
+    // averages are ratios of exact BIGINT sums, one double division
+    Q("q_fightin_words", { (s, d) =>
+      fightinWords(Tables.documents(s, d))
+    },
+      s"""WITH t AS (
+         | SELECT source, unnest(${tokensSql("lower(text)")}) AS word
+         | FROM documents WHERE source IS NOT NULL),
+         |sw AS (SELECT source, word, count(*) AS y FROM t GROUP BY 1, 2),
+         |wt AS (SELECT word, sum(y) AS yw FROM sw GROUP BY 1),
+         |st AS (SELECT source, sum(y) AS ni FROM sw GROUP BY 1),
+         |gl AS (SELECT count(*) AS v, sum(yw) AS nn FROM wt),
+         |sc AS (
+         | SELECT s.source, s.word, CAST(s.y AS BIGINT) AS cnt,
+         |  (ln((CAST(s.y AS DOUBLE) + 0.5) /
+         |      (CAST(st.ni AS DOUBLE) + 0.5 * CAST(g.v AS DOUBLE)
+         |       - CAST(s.y AS DOUBLE) - 0.5))
+         |   - ln((CAST(w.yw - s.y AS DOUBLE) + 0.5) /
+         |      (CAST(g.nn - st.ni AS DOUBLE) + 0.5 * CAST(g.v AS DOUBLE)
+         |       - CAST(w.yw - s.y AS DOUBLE) - 0.5)))
+         |  / sqrt(1.0 / (CAST(s.y AS DOUBLE) + 0.5)
+         |         + 1.0 / (CAST(w.yw - s.y AS DOUBLE) + 0.5)) AS z
+         | FROM sw s JOIN wt w ON s.word = w.word
+         |  JOIN st ON s.source = st.source, gl g),
+         |rk AS (
+         | SELECT source, word, cnt, z, row_number() OVER (
+         |  PARTITION BY source ORDER BY z DESC, word) AS rn FROM sc)
+         |SELECT source, word, cnt, round(z, 6) AS z FROM rk
+         |WHERE rn <= 5 ORDER BY source, z DESC, word""".stripMargin),
+    // Reliability diagram + ECE over the same score/label pair the
+    // isotonic fit calibrates — the before-picture its repair targets.
+    Q("q_calibration_bins", { (s, d) =>
+      calibrationBins(
+        Tables.documents(s, d).select(
+          round(stopwordRatio(col("text")), 2).as("q"),
+          (col("lang") === "en").cast("int").as("label")),
+        "q", "label")
+    },
+      s"""WITH base AS (
+         | SELECT round($stopRatio, 2) AS q,
+         |  CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
+         | FROM documents),
+         |per AS (
+         | SELECT CAST(least(CAST(floor(q * 10) AS INTEGER), 9)
+         |   AS INTEGER) AS bin,
+         |  count(*) AS n, sum(CAST(q AS DECIMAL(18,2))) AS ss,
+         |  sum(label) AS sy
+         | FROM base GROUP BY 1),
+         |tot AS (SELECT sum(n) AS nt FROM per),
+         |g AS (
+         | SELECT bin, CAST(n AS BIGINT) AS n,
+         |  CAST(ss AS DOUBLE) / CAST(n AS DOUBLE) AS ms,
+         |  CAST(sy AS DOUBLE) / CAST(n AS DOUBLE) AS fp,
+         |  CAST(n AS DOUBLE) / CAST(t.nt AS DOUBLE) AS w
+         | FROM per, tot t),
+         |e AS (
+         | SELECT CAST(sum(CAST(round(w * abs(fp - ms), 6)
+         |  AS DECIMAL(18,6))) AS DOUBLE) AS ece FROM g)
+         |SELECT bin, n, round(ms, 6) AS mean_score,
+         | round(fp, 6) AS frac_pos, round(abs(fp - ms), 6) AS gap, ece
+         |FROM g, e ORDER BY bin""".stripMargin),
+    Q("q_isotonic_calibrate", { (s, d) =>
+      isotonicCalibrate(
+        Tables.documents(s, d).select(
+          round(stopwordRatio(col("text")), 2).as("q"),
+          (col("lang") === "en").cast("int").as("label")),
+        "q", "label").orderBy("q")
+    },
+      s"""WITH base AS (
+         | SELECT round($stopRatio, 2) AS x,
+         |  CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
+         | FROM documents),
+         |lv AS (SELECT x, CAST(count(*) AS BIGINT) AS w,
+         |  CAST(sum(label) AS BIGINT) AS y FROM base GROUP BY 1),
+         |pre AS (SELECT x, w, y,
+         |  CAST(sum(w) OVER (ORDER BY x) AS BIGINT) AS cw,
+         |  CAST(sum(y) OVER (ORDER BY x) AS BIGINT) AS cy FROM lv),
+         |bjk AS (
+         | SELECT a.x AS xj, b.x AS xk,
+         |  CAST(b.cy - (a.cy - a.y) AS DOUBLE) /
+         |   CAST(b.cw - (a.cw - a.w) AS DOUBLE) AS ajk
+         | FROM pre a JOIN pre b ON a.x <= b.x),
+         |mn AS (
+         | SELECT i.x AS xi, p.xj, min(p.ajk) AS mnv
+         | FROM bjk p JOIN lv i ON p.xj <= i.x AND p.xk >= i.x
+         | GROUP BY 1, 2),
+         |fit AS (SELECT xi, max(mnv) AS fitted FROM mn GROUP BY 1)
+         |SELECT lv.x AS q, lv.w AS n,
+         | round(CAST(lv.y AS DOUBLE) / lv.w, 6) AS rate,
+         | round(f.fitted, 6) AS fitted
+         |FROM lv JOIN fit f ON lv.x = f.xi
+         |ORDER BY q""".stripMargin),
+    // Parametric (logistic) calibration of the same score/label pair —
+    // the smooth 2-parameter twin of the isotonic step fit.
+    // logistic-calibration twin: same level frame, same shared σ /
+    // gradient / Cramer-delta strings, 3 unrolled Newton CTEs
+    Q("q_platt_scaling", { (s, d) =>
+      plattScaling(
+        Tables.documents(s, d).select(
+          round(stopwordRatio(col("text")), 2).as("q"),
+          (col("lang") === "en").cast("int").as("label")),
+        "q", "label")
+    }, {
+      def stepSql(t: Int) =
+        s"""ab$t AS (
+           | SELECT a + $plattDa AS a, b + $plattDb AS b
+           | FROM (
+           |  SELECT a, b,
+           |   CAST(sum($plattGa) AS DOUBLE) AS sga,
+           |   CAST(sum($plattGb) AS DOUBLE) AS sgb,
+           |   CAST(sum($plattHaa) AS DOUBLE) AS shaa,
+           |   CAST(sum($plattHab) AS DOUBLE) AS shab,
+           |   CAST(sum($plattHbb) AS DOUBLE) AS shbb
+           |  FROM lv CROSS JOIN ab${t - 1} GROUP BY 1, 2))""".stripMargin
+      s"""WITH base AS (
+         | SELECT round($stopRatio, 2) AS q,
+         |  CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS label
+         | FROM documents),
+         |lv AS (
+         | SELECT CAST(q AS DOUBLE) AS s, count(*) AS w,
+         |  CAST(sum(label) AS BIGINT) AS y
+         | FROM base GROUP BY 1),
+         |ab0 AS (SELECT 0.0 AS a, 0.0 AS b),
+         |${(1 to 3).map(stepSql).mkString(",\n")}
+         |SELECT CAST(sum(w) AS BIGINT) AS n, count(*) AS n_levels,
+         | round(any_value(a), 6) AS platt_a,
+         | round(any_value(b), 6) AS platt_b,
+         | round(-CAST(sum(CAST(round(y * ln($plattP)
+         |    + (w - y) * ln(1.0 - $plattP), 6) AS DECIMAL(28,6)))
+         |   AS DOUBLE) / CAST(sum(w) AS DOUBLE), 6) AS log_loss
+         |FROM lv CROSS JOIN ab3""".stripMargin
+    }),
+    // Murphy decomposition of the same forecast/label pair: how much of
+    // the Brier score recalibration can fix (REL) vs never will (UNC).
+    // same 10-bin frame, exact 4dp (s−y)² fold, 6dp REL/RES terms
+    Q("q_brier_decomp", { (s, d) =>
+      brierDecomposition(
+        Tables.documents(s, d).select(
+          round(stopwordRatio(col("text")), 2).as("q"),
+          (col("lang") === "en").cast("int").as("label")),
+        "q", "label")
+    },
+      s"""WITH base AS (
+         | SELECT round($stopRatio, 2) AS q,
+         |  CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
+         | FROM documents),
+         |per AS (
+         | SELECT CAST(least(CAST(floor(q * 10) AS INTEGER), 9)
+         |   AS INTEGER) AS bin,
+         |  count(*) AS n, sum(CAST(q AS DECIMAL(18,2))) AS ss,
+         |  CAST(sum(y) AS BIGINT) AS sy,
+         |  sum(CAST((CAST(q AS DECIMAL(18,2)) - y)
+         |    * (CAST(q AS DECIMAL(18,2)) - y) AS DECIMAL(28,4))) AS sqs
+         | FROM base GROUP BY 1),
+         |tot AS (SELECT CAST(sum(n) AS BIGINT) AS nt,
+         |        CAST(sum(sy) AS BIGINT) AS syt FROM per),
+         |terms AS (
+         | SELECT per.n, per.sqs, t.nt, t.syt,
+         |  CAST(round(CAST(per.n AS DOUBLE)
+         |   * ((CAST(ss AS DOUBLE) / CAST(per.n AS DOUBLE)
+         |       - CAST(sy AS DOUBLE) / CAST(per.n AS DOUBLE))
+         |     * (CAST(ss AS DOUBLE) / CAST(per.n AS DOUBLE)
+         |       - CAST(sy AS DOUBLE) / CAST(per.n AS DOUBLE))), 6)
+         |   AS DECIMAL(28,6)) AS rel_t,
+         |  CAST(round(CAST(per.n AS DOUBLE)
+         |   * ((CAST(sy AS DOUBLE) / CAST(per.n AS DOUBLE)
+         |       - CAST(t.syt AS DOUBLE) / CAST(t.nt AS DOUBLE))
+         |     * (CAST(sy AS DOUBLE) / CAST(per.n AS DOUBLE)
+         |       - CAST(t.syt AS DOUBLE) / CAST(t.nt AS DOUBLE))), 6)
+         |   AS DECIMAL(28,6)) AS res_t
+         | FROM per, tot t),
+         |agg AS (
+         | SELECT nt, syt, count(*) AS n_bins, sum(sqs) AS sqs,
+         |  CAST(sum(rel_t) AS DOUBLE) AS rel,
+         |  CAST(sum(res_t) AS DOUBLE) AS res
+         | FROM terms GROUP BY 1, 2)
+         |SELECT nt AS n, n_bins,
+         | round(CAST(sqs AS DOUBLE) / CAST(nt AS DOUBLE), 6) AS brier,
+         | round(rel / CAST(nt AS DOUBLE), 6) AS reliability,
+         | round(res / CAST(nt AS DOUBLE), 6) AS resolution,
+         | round(CAST(syt AS DOUBLE) / CAST(nt AS DOUBLE)
+         |  * (1.0 - CAST(syt AS DOUBLE) / CAST(nt AS DOUBLE)), 6)
+         |  AS uncertainty,
+         | round(CAST(sqs AS DOUBLE) / CAST(nt AS DOUBLE)
+         |  - (rel / CAST(nt AS DOUBLE) - res / CAST(nt AS DOUBLE)
+         |     + CAST(syt AS DOUBLE) / CAST(nt AS DOUBLE)
+         |       * (1.0 - CAST(syt AS DOUBLE) / CAST(nt AS DOUBLE))), 6)
+         |  AS decomp_gap
+         |FROM agg""".stripMargin),
+    // QUALITY-THRESHOLD SWEEP — the knob-tuning table behind every
+    // quality filter: at each candidate threshold, the docs and tokens
+    // that survive (as counts and ppm). One corpus scan collapses to the
+    // score-histogram frame (≤ ~12 distinct weighted-sum scores);
+    // everything after — the threshold explode, cumulative keeps, totals
+    // — runs on that dictionary-class frame. Choosing a cut means
+    // trading corpus mass for quality; this emits the whole trade-off,
+    // not one point.
+    Q("q_quality_sweep", { (s, d) =>
+      val thr = Seq(0.0, 0.2, 0.4, 0.6, 0.8, 1.0)
+      val g = Tables.documents(s, d)
+        .select(round(qualityScore(col("text")), 2).as("q"),
+          tokenCount(col("text")).cast("long").as("tok"))
+        .groupBy("q")
+        .agg(count(lit(1)).as("nd"), sum(col("tok")).as("nt"))
+      val tot = g.agg(sum(col("nd")).as("td"), sum(col("nt")).as("tt"))
+      val sweep = g
+        .select(explode(array(thr.map(lit): _*)).as("threshold"),
+          col("q"), col("nd"), col("nt"))
+        .filter(col("q") >= col("threshold"))
+        .groupBy("threshold")
+        .agg(sum(col("nd")).as("docs_kept"), sum(col("nt")).as("tokens_kept"))
+      tot.select(explode(array(thr.map(lit): _*)).as("threshold"),
+          col("td"), col("tt"))
+        .join(sweep, Seq("threshold"), "left")
+        .na.fill(0L, Seq("docs_kept", "tokens_kept"))
+        .select(col("threshold"), col("docs_kept"), col("tokens_kept"),
+          expr("docs_kept * 1000000 div td").as("docs_ppm"),
+          expr("tokens_kept * 1000000 div tt").as("tokens_ppm"))
+        .orderBy("threshold")
+    },
+      s"""WITH sc AS (
+         | SELECT round($quality, 2) AS q,
+         |  CAST(len(${tokensSql("text")}) AS BIGINT) AS tok
+         | FROM documents),
+         |g AS (
+         | SELECT q, CAST(count(*) AS BIGINT) AS nd,
+         |  CAST(sum(tok) AS BIGINT) AS nt
+         | FROM sc GROUP BY 1),
+         |t AS (SELECT CAST(sum(nd) AS BIGINT) AS td,
+         |      CAST(sum(nt) AS BIGINT) AS tt FROM g),
+         |s AS (SELECT unnest([0.0, 0.2, 0.4, 0.6, 0.8, 1.0]) AS threshold),
+         |k AS (
+         | SELECT s.threshold,
+         |  CAST(COALESCE(sum(g.nd), 0) AS BIGINT) AS docs_kept,
+         |  CAST(COALESCE(sum(g.nt), 0) AS BIGINT) AS tokens_kept
+         | FROM s LEFT JOIN g ON g.q >= s.threshold GROUP BY 1)
+         |SELECT threshold, docs_kept, tokens_kept,
+         | docs_kept * 1000000 // td AS docs_ppm,
+         | tokens_kept * 1000000 // tt AS tokens_ppm
+         |FROM k, t ORDER BY threshold""".stripMargin),
+    Q("q_text_langid", { (s, d) =>
+      Tables.documents(s, d).select(
+          col("doc_id"), col("lang"),
+          langId(col("text")).as("lang_pred"))
+        .orderBy("doc_id")
+    },
+      s"""SELECT doc_id, lang,
+         | CASE WHEN $maxScore = 0 THEN 'und' $langCase END AS lang_pred
+         |FROM documents ORDER BY doc_id""".stripMargin),
+    Q("q_text_fingerprint", { (s, d) =>
+      Tables.documents(s, d).select(
+          col("doc_id"),
+          fingerprint(col("text")).as("fp"))
+        .orderBy("doc_id")
+    },
+      """SELECT doc_id, md5(lower(regexp_replace(trim(text), '\s+', ' ', 'g'))) AS fp
+        |FROM documents ORDER BY doc_id""".stripMargin),
+    // Corpus vocabulary: explode tokens → count → top 20 (the wordcount
+    // pattern: Generate → map-side partial agg → one shuffle of partial
+    // (token, count) pairs, never raw token rows).
+    Q("q_vocab_topk", { (s, d) =>
+      Tables.documents(s, d)
+        .select(explode(tokens(col("text"))).as("token"))
+        .groupBy("token").agg(count(lit(1)).as("freq"))
+        .orderBy(desc("freq"), col("token"))
+        .limit(20)
+    },
+      s"""SELECT token, count(*) AS freq
+         |FROM (SELECT unnest(${tokensSql("text")}) AS token FROM documents)
+         |GROUP BY 1 ORDER BY freq DESC, token LIMIT 20""".stripMargin),
+    // BPE-STYLE REGEX PRE-TOKENIZER COUNT — the GPT-2 pre-tokenization
+    // pattern (Radford et al. 2019; contractions, space-prefixed
+    // letter/digit/punct runs, whitespace runs) counted per source
+    // beside the whitespace count — the two token-counting conventions
+    // every budget/packing decision needs reconciled (a "512-token"
+    // budget means different bytes under each). Pattern restricted to
+    // constructs with IDENTICAL semantics in Java regex (Spark) and RE2
+    // (DuckDB): no lookaround, no backreferences; both engines resolve
+    // alternation leftmost-first. Pure map + source-cardinality
+    // aggregate; exact integer ratio ppm.
+    Q("q_pretokenizer", { (s, d) =>
+      val pat = "'(?:s|t|re|ve|m|ll|d)| ?\\p{L}+| ?\\p{N}+|" +
+        " ?[^\\s\\p{L}\\p{N}]+|\\s+"
+      // the synthetic corpus is pure space-separated words, where the
+      // two conventions agree by construction — plant contraction /
+      // digit / punctuation text on the first 20 docs (the q_pii_audit
+      // planting idiom) so the divergence path is exercised
+      val planted = when(col("doc_id") < 20,
+        concat(col("text"), lit(" it's v2.0-ready, isn't it?!")))
+        .otherwise(col("text"))
+      Tables.documents(s, d)
+        .select(col("source"),
+          tokenCount(planted).cast("long").as("ws"),
+          size(regexp_extract_all(planted, lit(pat), lit(0)))
+            .cast("long").as("pre"))
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("ws")).as("ws_tokens"),
+          sum(col("pre")).as("pre_tokens"))
+        .withColumn("pre_per_ws_ppm",
+          expr("pre_tokens * 1000000 div ws_tokens"))
+        .orderBy("source")
+    },
+      s"""WITH p AS (
+         | SELECT source,
+         |  CASE WHEN doc_id < 20
+         |   THEN text || ' it''s v2.0-ready, isn''t it?!' ELSE text END
+         |  AS text
+         | FROM documents),
+         |d AS (
+         | SELECT source, len(${tokensSql("text")}) AS ws,
+         |  len(regexp_extract_all(text,
+         |   '''(?:s|t|re|ve|m|ll|d)| ?\\p{L}+| ?\\p{N}+| ?[^\\s\\p{L}\\p{N}]+|\\s+'))
+         |  AS pre
+         | FROM p)
+         |SELECT source, count(*) AS n_docs,
+         | CAST(sum(ws) AS BIGINT) AS ws_tokens,
+         | CAST(sum(pre) AS BIGINT) AS pre_tokens,
+         | CAST(sum(pre) AS BIGINT) * 1000000 // CAST(sum(ws) AS BIGINT)
+         |  AS pre_per_ws_ppm
+         |FROM d GROUP BY source ORDER BY source""".stripMargin),
+
+    // VOCAB COVERAGE / OOV-RATE audit — the tokenizer-fit companion to
+    // q_tokenizer_fertility: fix the vocabulary at the corpus's top-V
+    // tokens (V=500, ties broken token-ascending) and report each
+    // source's out-of-vocabulary token ppm — the source whose oov_ppm
+    // runs hot is the one the tokenizer under-serves. The top-V selection
+    // runs on the native TopKPerKey exec over the token-count frame
+    // (map-side k-bounded heaps under a constant key — no vocab-sized
+    // sort, no unpartitioned window; a web-scale vocabulary never fits a
+    // single window task). The vocab then broadcasts into one anti-join-
+    // shaped counting pass (left join + null check, map-side combined).
+    Q("q_oov_rate", { (s, d) =>
+      // V=20 against this corpus's 31-token vocabulary so the OOV path is
+      // non-vacuous (V=32k against a real corpus; the knob, not the shape)
+      val v = 20
+      val tok = Tables.documents(s, d)
+        .select(col("source"), explode(tokens(col("text"))).as("token"))
+        .persistTracked()
+      val counts = tok.groupBy("token").agg(count(lit(1)).as("freq"))
+      val vocab = graft.plans.TopKPerKey.topKPerKey(
+          counts.withColumn("g", lit(1)), keys = Seq("g"),
+          order = Seq(("freq", false), ("token", true)), k = v)
+        .select(col("token"), lit(1).as("in_vocab"))
+      tok.join(broadcast(vocab), Seq("token"), "left")
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_tokens"),
+          coalesce(sum(when(col("in_vocab").isNull, 1L)), lit(0L))
+            .as("oov_tokens"))
+        .select(col("source"), col("n_tokens"), col("oov_tokens"),
+          expr("oov_tokens * 1000000 div n_tokens").as("oov_ppm"))
+        .orderBy("source")
+    },
+      s"""WITH tok AS (
+         | SELECT source, unnest(${tokensSql("text")}) AS token
+         | FROM documents),
+         |counts AS (SELECT token, count(*) AS freq FROM tok GROUP BY 1),
+         |vocab AS (SELECT token FROM counts
+         |          ORDER BY freq DESC, token LIMIT 20)
+         |SELECT source, CAST(count(*) AS BIGINT) AS n_tokens,
+         | CAST(COALESCE(sum(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END),
+         |  0) AS BIGINT) AS oov_tokens,
+         | COALESCE(CAST(sum(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END)
+         |  AS BIGINT), 0) * 1000000 // count(*) AS oov_ppm
+         |FROM tok LEFT JOIN vocab v USING (token)
+         |GROUP BY source ORDER BY source""".stripMargin),
+    // VOCAB COVERAGE CURVE — q_oov_rate's design-side sibling: instead
+    // of auditing one fixed V, report what fraction of the corpus token
+    // MASS the top-c vocabulary covers at each candidate cutoff c (the
+    // curve a tokenizer designer reads to pick V in the first place).
+    // Cutoffs {5, 10, 20} against this corpus's 31-token vocabulary
+    // (32k/64k/128k against a real one — the knob, not the shape).
+    // Scale posture: token counts collapse map-side to a vocab-sized
+    // frame; the top-maxCutoff slice runs on the native TopKPerKey exec
+    // (k-bounded heaps, no vocab-wide sort/window); ranking then happens
+    // on that ≤20-row frame only, and the corpus total joins in as a
+    // broadcast scalar. Integer ppm end-to-end — hash-stable.
+    Q("q_vocab_coverage", { (s, d) =>
+      import org.apache.spark.sql.expressions.Window
+      val cutoffs = Seq(5, 10, 20)
+      val counts = Tables.documents(s, d)
+        .select(explode(tokens(col("text"))).as("token"))
+        .groupBy("token").agg(count(lit(1)).as("freq"))
+        .persistTracked()
+      val tot = counts.agg(sum(col("freq")).as("total"))
+      val top = graft.plans.TopKPerKey.topKPerKey(
+          counts.withColumn("g", lit(1)), keys = Seq("g"),
+          order = Seq(("freq", false), ("token", true)), k = cutoffs.max)
+        // rank within the ≤ maxCutoff-row slice — bounded by construction
+        .withColumn("rn", row_number().over(Window.partitionBy("g")
+          .orderBy(desc("freq"), asc("token"))))
+      top.select(col("freq"), col("rn"),
+          explode(array(cutoffs.map(lit): _*)).as("cutoff"))
+        .filter(col("rn") <= col("cutoff"))
+        .groupBy("cutoff")
+        .agg(count(lit(1)).as("vocab_tokens"),
+          sum(col("freq")).as("covered"))
+        .crossJoin(broadcast(tot))
+        .select(col("cutoff"), col("vocab_tokens"),
+          col("covered"), expr("covered * 1000000 div total").as("mass_ppm"))
+        .orderBy("cutoff")
+    },
+      s"""WITH c AS (
+         | SELECT token, count(*) AS freq
+         | FROM (SELECT unnest(${tokensSql("text")}) AS token FROM documents)
+         | GROUP BY 1),
+         |t AS (SELECT CAST(sum(freq) AS BIGINT) AS total FROM c),
+         |r AS (SELECT token, freq,
+         |  row_number() OVER (ORDER BY freq DESC, token) AS rn
+         | FROM c QUALIFY rn <= 20),
+         |k AS (SELECT CAST(unnest([5, 10, 20]) AS INTEGER) AS cutoff)
+         |SELECT cutoff, count(*) AS vocab_tokens,
+         | CAST(sum(freq) AS BIGINT) AS covered,
+         | CAST(sum(freq) AS BIGINT) * 1000000
+         |  // (SELECT total FROM t) AS mass_ppm
+         |FROM r JOIN k ON r.rn <= k.cutoff
+         |GROUP BY cutoff ORDER BY cutoff""".stripMargin),
+
+    // TF-IDF term relevance over the corpus: summed tf-idf per term
+    // collapses to total_tf(term) × idf(term), so after the per-doc tf
+    // aggregate everything is term-cardinality-sized — two map-side-
+    // combined shuffles regardless of corpus size, and the doc count
+    // joins in as a broadcast scalar. Smooth idf = ln((N+1)/(df+1)) + 1
+    // (the standard sklearn-style smoothing, public knowledge); score
+    // rounded to 6 dp so the cross-engine ln() agrees bit-for-bit, and
+    // ranked (score desc, term asc) for a deterministic top-20.
+    Q("q_tfidf_topk", { (s, d) =>
+      val docs = Tables.documents(s, d)
+      val nDocs = docs.agg(count(lit(1)).as("n_docs"))
+      val tf = docs
+        .select(col("doc_id"), explode(tokens(lower(col("text")))).as("term"))
+        .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
+      tf.groupBy("term")
+        .agg(count(lit(1)).as("df"), sum("tf").as("total_tf"))
+        .crossJoin(broadcast(nDocs))
+        .withColumn("idf",
+          log((col("n_docs") + 1).cast("double") / (col("df") + 1)) + 1)
+        .select(col("term"), col("df"),
+          round(col("total_tf") * col("idf"), 6).as("score"))
+        .orderBy(desc("score"), col("term"))
+        .limit(20)
+    },
+      s"""WITH tok AS (SELECT doc_id, unnest(${tokensSql("lower(text)")}) AS term
+         |             FROM documents),
+         |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
+         |d AS (SELECT term, count(*) AS df, sum(tf) AS total_tf FROM tf GROUP BY 1),
+         |n AS (SELECT count(*) AS n_docs FROM documents)
+         |SELECT term, df,
+         | round(total_tf * (ln((n_docs + 1.0) / (df + 1)) + 1), 6) AS score
+         |FROM d, n
+         |ORDER BY score DESC, term LIMIT 20""".stripMargin),
+    // PMI-ranked collocations — "which word pairs stick together beyond
+    // chance" (Church & Hanks 1990): PMI(w1,w2) = log2(p(w1,w2) /
+    // (p(w1)·p(w2))), bigram p from adjacent-pair counts, unigram p from
+    // the full token stream. Pair construction is the q_bpe_pairs
+    // map-side generator; both count frames collapse map-side to
+    // vocabulary size before any join, so the unigram attach is a
+    // vocabulary-sized broadcast and the totals ride in as scalar
+    // broadcasts no matter the corpus size. Min support 3 kills the
+    // noise floor (PMI is max for hapax pairs); (pmi desc, w1, w2) is a
+    // total order so the top-20 is deterministic.
+    // SKIP-GRAM CO-OCCURRENCE PMI (window ≤ 3) — q_pmi_topk scores
+    // ADJACENT pairs (collocations); this is the word-embedding input
+    // shape (Mikolov et al. 2013's context window): unordered token
+    // pairs within distance 1..3, counted once per occurrence. Pair
+    // generation is map-side (per-position inner transform over the
+    // three offsets, nulls filtered — no self-join, no positions
+    // table); counts collapse to vocabulary²-bounded frames before the
+    // unigram broadcast joins, exactly the q_pmi_topk posture. The
+    // unordered (least, greatest) normalization halves the key space
+    // and matches the symmetric-window convention.
+    Q("q_cooccur_pmi", { (s, d) => cooccurPmi(Tables.documents(s, d)) },
+      s"""WITH toks AS (SELECT ${tokensSql("lower(text)")} AS t FROM documents),
+         |u AS (SELECT w, count(*) AS cu
+         |      FROM (SELECT unnest(t) AS w FROM toks) GROUP BY 1),
+         |nu AS (SELECT CAST(sum(cu) AS BIGINT) AS nu FROM u),
+         |pc AS (
+         | SELECT least(t[i], t[i + k]) AS w1,
+         |  greatest(t[i], t[i + k]) AS w2, count(*) AS cb
+         | FROM toks
+         |  CROSS JOIN unnest(range(1, len(t) + 1)) AS r(i)
+         |  CROSS JOIN range(1, 4) kk(k)
+         | WHERE len(t) >= 2 AND i + k <= len(t)
+         | GROUP BY 1, 2),
+         |np AS (SELECT CAST(sum(cb) AS BIGINT) AS np FROM pc)
+         |SELECT w1, w2, cb,
+         | round(log2((CAST(cb AS DOUBLE) / CAST(np AS DOUBLE))
+         |   / ((CAST(u1.cu AS DOUBLE) / CAST(nu AS DOUBLE))
+         |      * (CAST(u2.cu AS DOUBLE) / CAST(nu AS DOUBLE)))), 6) AS pmi
+         |FROM pc JOIN u u1 ON pc.w1 = u1.w JOIN u u2 ON pc.w2 = u2.w, nu, np
+         |WHERE cb >= 3
+         |ORDER BY pmi DESC, w1, w2 LIMIT 20""".stripMargin),
+    // RAKE corpus keywords: stopword-delimited phrases, deg/freq word
+    // scores, top-15 phrases (map-side segmentation, bounded joins).
+    Q("q_rake_keywords", { (s, d) => rakeKeywords(Tables.documents(s, d)) }, {
+      val stopList = enStopwords.map(w => s"'$w'").mkString(", ")
+      s"""WITH toks AS (
+         | SELECT doc_id, ${tokensSql("lower(text)")} AS t FROM documents),
+         |pos AS (
+         | SELECT doc_id, CAST(i AS BIGINT) AS i, t[i] AS w
+         | FROM toks CROSS JOIN unnest(range(1, len(t) + 1)) AS r(i)),
+         |ns AS (SELECT doc_id, i, w FROM pos WHERE w NOT IN ($stopList)),
+         |isl AS (
+         | SELECT doc_id, i, w,
+         |  i - row_number() OVER (PARTITION BY doc_id ORDER BY i) AS grp
+         | FROM ns),
+         |isl2 AS (
+         | SELECT doc_id, i, w, grp,
+         |  count(*) OVER (PARTITION BY doc_id, grp) AS len
+         | FROM isl),
+         |ph AS (
+         | SELECT doc_id, grp, string_agg(w, ' ' ORDER BY i) AS phrase
+         | FROM isl2 GROUP BY 1, 2),
+         |wsc AS (
+         | SELECT w, CAST(round(CAST(sum(len) AS DOUBLE) / count(*), 6)
+         |   AS DECIMAL(18,6)) AS wscore
+         | FROM isl2 GROUP BY 1),
+         |pc AS (SELECT phrase, count(*) AS cnt FROM ph GROUP BY 1),
+         |psc AS (
+         | SELECT phrase, cnt, CAST(sum(wscore) AS DOUBLE) AS score
+         | FROM (SELECT phrase, cnt, unnest(string_split(phrase, ' ')) AS w
+         |       FROM pc) x
+         |  JOIN wsc USING (w)
+         | GROUP BY 1, 2)
+         |SELECT phrase, cnt, round(score, 6) AS score
+         |FROM psc ORDER BY score DESC, phrase LIMIT 15""".stripMargin
+    }),
+    // Good-Turing unseen-type mass + hapax smoothing kernel.
+    Q("q_good_turing", { (s, d) => goodTuring(Tables.documents(s, d)) },
+      s"""WITH fof AS (
+         | SELECT f, count(*) AS nf FROM (
+         |  SELECT w, count(*) AS f FROM (
+         |   SELECT unnest(${tokensSql("lower(text)")}) AS w FROM documents)
+         |  GROUP BY 1)
+         | GROUP BY 1),
+         |a AS (
+         | SELECT CAST(sum(f * nf) AS BIGINT) AS n_tokens,
+         |  CAST(sum(nf) AS BIGINT) AS vocab,
+         |  CAST(sum(CASE WHEN f = 1 THEN nf ELSE 0 END) AS BIGINT) AS n1,
+         |  CAST(sum(CASE WHEN f = 2 THEN nf ELSE 0 END) AS BIGINT) AS n2
+         | FROM fof)
+         |SELECT n_tokens, vocab, n1, n2,
+         | round(CAST(n1 AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6)
+         |  AS p_unseen,
+         | round(CAST(n1 AS DOUBLE) / CAST(vocab AS DOUBLE), 6)
+         |  AS hapax_share,
+         | CASE WHEN n1 > 0
+         |  THEN round(CAST(2.0 AS DOUBLE) * n2 / n1, 6) END AS r1_star
+         |FROM a""".stripMargin),
+    // Per-class P/R/F1 + macro-F1/accuracy of the langid heuristic.
+    Q("q_macro_f1", { (s, d) => macroF1(Tables.documents(s, d)) }, {
+      val p = "CASE WHEN n_pred > 0 THEN CAST(tp AS DOUBLE) / n_pred ELSE CAST(0.0 AS DOUBLE) END"
+      val r = "CASE WHEN n_true > 0 THEN CAST(tp AS DOUBLE) / n_true ELSE CAST(0.0 AS DOUBLE) END"
+      s"""WITH preds AS (
+         | SELECT lang AS truth,
+         |  CASE WHEN $maxScore = 0 THEN 'und' $langCase END AS pred
+         | FROM documents WHERE lang IS NOT NULL),
+         |cm AS (SELECT truth, pred, count(*) AS n FROM preds GROUP BY 1, 2),
+         |classes AS (
+         | SELECT truth AS cls FROM cm UNION SELECT pred FROM cm),
+         |bt AS (
+         | SELECT truth AS cls, CAST(sum(n) AS BIGINT) AS n_true,
+         |  CAST(sum(CASE WHEN pred = truth THEN n ELSE 0 END) AS BIGINT)
+         |   AS tp
+         | FROM cm GROUP BY 1),
+         |bp AS (
+         | SELECT pred AS cls, CAST(sum(n) AS BIGINT) AS n_pred
+         | FROM cm GROUP BY 1),
+         |st AS (
+         | SELECT cls, coalesce(n_true, 0) AS n_true, coalesce(tp, 0) AS tp,
+         |  coalesce(n_pred, 0) AS n_pred
+         | FROM classes LEFT JOIN bt USING (cls) LEFT JOIN bp USING (cls)),
+         |wf AS (
+         | SELECT cls, n_true, tp, n_pred - tp AS fp, n_true - tp AS fn,
+         |  round($p, 6) AS precision, round($r, 6) AS recall,
+         |  CAST(round(CASE WHEN ($p) + ($r) > 0
+         |    THEN CAST(2.0 AS DOUBLE) * ($p) * ($r) / (($p) + ($r))
+         |    ELSE CAST(0.0 AS DOUBLE) END, 6) AS DECIMAL(18,6)) AS f1d
+         | FROM st),
+         |tot AS (
+         | SELECT round(CAST(sum(f1d) AS DOUBLE) / count(*), 6) AS macro_f1,
+         |  round(CAST(sum(tp) AS DOUBLE) / CAST(sum(n_true) AS DOUBLE), 6)
+         |   AS accuracy
+         | FROM wf)
+         |SELECT cls, n_true, tp, fp, fn, precision, recall,
+         | CAST(f1d AS DOUBLE) AS f1, macro_f1, accuracy
+         |FROM wf CROSS JOIN tot ORDER BY cls""".stripMargin
+    }),
+    // distinct-n diversity ratios for n = 1..4 (cross-doc repetition).
+    Q("q_rep_ngrams", { (s, d) => repNgrams(Tables.documents(s, d)) },
+      s"""WITH toks AS (
+         | SELECT ${tokensSql("lower(text)")} AS t FROM documents),
+         |g AS (
+         | SELECT CAST(nn.n AS BIGINT) AS n_order,
+         |  array_to_string(list_slice(t, i, i + nn.n - 1), ' ') AS g
+         | FROM toks
+         |  CROSS JOIN unnest(range(1, len(t) + 1)) AS r(i)
+         |  CROSS JOIN range(1, 5) nn(n)
+         | WHERE len(t) >= 1 AND i + nn.n - 1 <= len(t)),
+         |pc AS (SELECT n_order, g, count(*) AS c FROM g GROUP BY 1, 2)
+         |SELECT n_order, CAST(sum(c) AS BIGINT) AS total_ngrams,
+         | count(*) AS distinct_ngrams,
+         | round(CAST(count(*) AS DOUBLE) / CAST(sum(c) AS DOUBLE), 6)
+         |  AS distinct_ratio,
+         | CAST(max(c) AS BIGINT) AS top_count
+         |FROM pc GROUP BY 1 ORDER BY n_order""".stripMargin),
+    Q("q_pmi_topk", { (s, d) =>
+      val toks = Tables.documents(s, d)
+        .select(tokens(lower(col("text"))).as("toks"))
+      val uni = toks.select(explode(col("toks")).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("cu"))
+      val nu = uni.agg(sum(col("cu")).as("nu"))
+      val bc = toks.filter(size(col("toks")) >= 2)
+        .select(explode(transform(sequence(lit(1), size(col("toks")) - 1),
+          i => concat(element_at(col("toks"), i), lit(" "),
+            element_at(col("toks"), i + 1)))).as("pair"))
+        .groupBy("pair").agg(count(lit(1)).as("cb"))
+      val nb = bc.agg(sum(col("cb")).as("nb"))
+      // tokens contain no whitespace by construction, so the pair key
+      // splits back unambiguously — and only vocabulary-sized frames
+      // ever carry the split columns.
+      val pmi = log2((col("cb").cast("double") / col("nb").cast("double")) /
+        ((col("c1").cast("double") / col("nu").cast("double")) *
+          (col("c2").cast("double") / col("nu").cast("double"))))
+      bc.filter(col("cb") >= 3)
+        .withColumn("w1", split(col("pair"), " ").getItem(0))
+        .withColumn("w2", split(col("pair"), " ").getItem(1))
+        .join(broadcast(uni.select(col("w").as("w1"), col("cu").as("c1"))), Seq("w1"))
+        .join(broadcast(uni.select(col("w").as("w2"), col("cu").as("c2"))), Seq("w2"))
+        .crossJoin(broadcast(nu)).crossJoin(broadcast(nb))
+        .select(col("w1"), col("w2"), col("cb"), round(pmi, 6).as("pmi"))
+        .orderBy(desc("pmi"), col("w1"), col("w2"))
+        .limit(20)
+    },
+      s"""WITH toks AS (SELECT ${tokensSql("lower(text)")} AS t FROM documents),
+         |u AS (SELECT w, count(*) AS cu
+         |      FROM (SELECT unnest(t) AS w FROM toks) GROUP BY 1),
+         |nu AS (SELECT CAST(sum(cu) AS BIGINT) AS nu FROM u),
+         |bc AS (SELECT w1, w2, count(*) AS cb FROM (
+         |        SELECT unnest(list_transform(range(1, len(t)), i -> t[i])) AS w1,
+         |               unnest(list_transform(range(1, len(t)), i -> t[i + 1])) AS w2
+         |        FROM toks WHERE len(t) >= 2) GROUP BY 1, 2),
+         |nb AS (SELECT CAST(sum(cb) AS BIGINT) AS nb FROM bc)
+         |SELECT w1, w2, cb,
+         | round(log2((CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE))
+         |   / ((CAST(u1.cu AS DOUBLE) / CAST(nu AS DOUBLE))
+         |      * (CAST(u2.cu AS DOUBLE) / CAST(nu AS DOUBLE)))), 6) AS pmi
+         |FROM bc JOIN u u1 ON bc.w1 = u1.w JOIN u u2 ON bc.w2 = u2.w, nu, nb
+         |WHERE cb >= 3
+         |ORDER BY pmi DESC, w1, w2 LIMIT 20""".stripMargin),
+    // BPE-style adjacent-pair statistics — the inner loop of tokenizer
+    // training (Sennrich et al. 2016 "Neural Machine Translation of Rare
+    // Words with Subword Units"): the most frequent adjacent token pair is
+    // the next merge candidate. Pair construction is a pure map-side
+    // generator over materialized token arrays (no self-join — a join of
+    // token rows on (doc_id, pos+1) shuffles the whole exploded corpus
+    // twice; `transform` over indices shuffles only the partial
+    // (pair, count) aggregates). Deterministic top-20 via (freq desc,
+    // pair asc).
+    Q("q_bpe_pairs", { (s, d) =>
+      Tables.documents(s, d)
+        .select(tokens(lower(col("text"))).as("toks"))
+        .filter(size(col("toks")) >= 2)
+        .select(explode(transform(sequence(lit(1), size(col("toks")) - 1),
+          i => concat(element_at(col("toks"), i), lit(" "),
+            element_at(col("toks"), i + 1)))).as("pair"))
+        .groupBy("pair").agg(count(lit(1)).as("freq"))
+        .orderBy(desc("freq"), col("pair"))
+        .limit(20)
+    },
+      s"""WITH t AS (SELECT ${tokensSql("lower(text)")} AS toks FROM documents),
+         |p AS (SELECT toks[CAST(r.i AS INTEGER)] || ' ' ||
+         |        toks[CAST(r.i AS INTEGER) + 1] AS pair
+         |      FROM t, unnest(range(1, len(toks))) AS r(i)
+         |      WHERE len(toks) >= 2)
+         |SELECT pair, count(*) AS freq
+         |FROM p GROUP BY 1 ORDER BY freq DESC, pair LIMIT 20""".stripMargin),
+    // Document chunking: overlapping token windows (size 50, stride 40) —
+    // the training/RAG preprocessing shape. Map-side: materialized tokens,
+    // one generator (posexplode) per doc, no shuffle until a consumer
+    // aggregates. Chunk ids are (doc_id, chunk_idx), deterministic.
+    Q("q_text_chunk", { (s, d) =>
+      val C = 50; val stride = 40
+      Tables.documents(s, d)
+        .select(col("doc_id"), tokens(col("text")).as("toks"))
+        .select(col("doc_id"), col("toks"),
+          sequence(lit(1), greatest(size(col("toks")) - (C - stride), lit(1)),
+            lit(stride)).as("starts"))
+        .select(col("doc_id"),
+          posexplode(transform(col("starts"),
+            st => concat_ws(" ", slice(col("toks"), st, lit(C))))).as(Seq("chunk_idx", "chunk")))
+        .withColumn("n_chunk_tokens", tokenCount(col("chunk")))
+        .orderBy("doc_id", "chunk_idx")
+    },
+      s"""WITH t AS (SELECT doc_id, ${tokensSql("text")} AS toks FROM documents),
+         |st AS (SELECT doc_id, toks,
+         |        range(1, greatest(len(toks) - 10, 1) + 1, 40) AS starts FROM t),
+         |c AS (SELECT doc_id, s.i AS start_pos, toks FROM st
+         |      CROSS JOIN unnest(starts) AS s(i))
+         |SELECT doc_id,
+         | CAST((start_pos - 1) / 40 AS INTEGER) AS chunk_idx,
+         | array_to_string(list_slice(toks, start_pos, start_pos + 49), ' ') AS chunk,
+         | CAST(len(list_slice(toks, start_pos, start_pos + 49)) AS INTEGER) AS n_chunk_tokens
+         |FROM c ORDER BY doc_id, chunk_idx""".stripMargin),
+    // Repetition ratio: most-frequent-token share of the document (a
+    // boilerplate/spam signal for quality filtering). One explode +
+    // two bounded aggregations.
+    Q("q_text_repetition", { (s, d) =>
+      val docs = Tables.documents(s, d)
+      val tokenFreq = docs
+        .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
+        .groupBy("doc_id", "token").agg(count(lit(1)).as("cnt"))
+        .groupBy("doc_id").agg(max(col("cnt")).as("top_cnt"))
+      docs.select(col("doc_id"), tokenCount(col("text")).as("n"))
+        .join(tokenFreq, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          when(col("n") === 0, 0.0)
+            .otherwise(col("top_cnt").cast("double") / col("n").cast("double"))
+            .as("rep_ratio"))
+        .orderBy("doc_id")
+    },
+      s"""WITH tf AS (
+         | SELECT doc_id, max(cnt) AS top_cnt FROM (
+         |  SELECT doc_id, token, count(*) AS cnt
+         |  FROM (SELECT doc_id, unnest(${tokensSql("text")}) AS token FROM documents)
+         |  GROUP BY doc_id, token)
+         | GROUP BY doc_id)
+         |SELECT d.doc_id,
+         | CASE WHEN len(${tokensSql("text")}) = 0 THEN 0.0
+         |  ELSE CAST(top_cnt AS DOUBLE) / CAST(len(${tokensSql("text")}) AS DOUBLE) END AS rep_ratio
+         |FROM documents d LEFT JOIN tf ON d.doc_id = tf.doc_id
+         |ORDER BY d.doc_id""".stripMargin),
+    // TOP-BIGRAM SHARE (Gopher repetition filter, Rae et al. 2021 §A1.1:
+    // "fraction of tokens in the most common n-gram"): q_text_repetition's
+    // unigram screen misses looping generations that alternate two tokens
+    // ("the cat the cat …" has rep_ratio 0.5 but bigram share ~1.0).
+    // Bigrams are built map-side in ONE codegen'd projection
+    // (sequence+transform over the token array — no self-join, no
+    // window); the only shuffle is the (doc_id, bigram) count, and every
+    // per-doc frame is doc-length-bounded. The size≥2 guard matters:
+    // Spark's sequence(0, -1) generates DESCENDING, so an unguarded
+    // empty doc would fabricate a phantom bigram.
+    Q("q_top_bigram", { (s, d) =>
+      val docs = Tables.documents(s, d)
+      val bg = docs.select(col("doc_id"), tokens(col("text")).as("t"))
+        .filter(size(col("t")) >= 2)
+        .select(col("doc_id"), explode(expr(
+          "transform(sequence(0, size(t) - 2)," +
+            " i -> concat(element_at(t, i + 1), ' ', element_at(t, i + 2)))"))
+          .as("bg"))
+        .groupBy("doc_id", "bg").agg(count(lit(1)).as("cnt"))
+        .groupBy("doc_id").agg(max(col("cnt")).as("top_cnt"),
+          sum(col("cnt")).as("n_bigrams"))
+      docs.select("doc_id").join(bg, Seq("doc_id"), "left")
+        .na.fill(0L, Seq("top_cnt", "n_bigrams"))
+        .select(col("doc_id"), col("n_bigrams"), col("top_cnt"),
+          when(col("n_bigrams") === 0, 0.0)
+            .otherwise(round(col("top_cnt").cast("double") /
+              col("n_bigrams").cast("double"), 6)).as("rep2_ratio"))
+        .orderBy("doc_id")
+    },
+      s"""WITH bg AS (
+         | SELECT doc_id, unnest(list_transform(
+         |   range(1, len(${tokensSql("text")})),
+         |   i -> ${tokensSql("text")}[i] || ' ' || ${tokensSql("text")}[i + 1]))
+         |  AS bg
+         | FROM documents WHERE len(${tokensSql("text")}) >= 2),
+         |c AS (SELECT doc_id, bg, count(*) AS cnt FROM bg GROUP BY 1, 2),
+         |t AS (SELECT doc_id, max(cnt) AS top_cnt,
+         |       CAST(sum(cnt) AS BIGINT) AS n_bigrams FROM c GROUP BY 1)
+         |SELECT d.doc_id, COALESCE(n_bigrams, 0) AS n_bigrams,
+         | COALESCE(top_cnt, 0) AS top_cnt,
+         | CASE WHEN COALESCE(n_bigrams, 0) = 0 THEN 0.0
+         |  ELSE round(CAST(top_cnt AS DOUBLE) / CAST(n_bigrams AS DOUBLE), 6)
+         |  END AS rep2_ratio
+         |FROM documents d LEFT JOIN t ON d.doc_id = t.doc_id
+         |ORDER BY d.doc_id""".stripMargin),
+    // Stratified deterministic sampling: ~40% of docs per language stratum
+    // via the md5 bucket (reproducible across engines/partitionings,
+    // unlike df.sample whose output depends on partition layout).
+    Q("q_stratified_sample", { (s, d) =>
+      val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
+        .cast("long") % 100
+      Tables.documents(s, d)
+        .filter(bucket < 40)
+        .groupBy("lang").agg(count(lit(1)).as("sampled"))
+        .orderBy("lang")
+    },
+      """SELECT lang, count(*) AS sampled FROM documents
+        |WHERE CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT) % 100 < 40
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    // Percentile-threshold quality filtering: drop the bottom decile by
+    // mean-token-length. The threshold comes from the DISTRIBUTED exact
+    // percentile (value-count shuffle + interpolation — nothing buffers
+    // all values; Analytics.exactPercentiles) and is broadcast back as a
+    // scalar filter.
+    Q("q_quality_filter", { (s, d) =>
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), round(meanTokenLen(col("text")), 6).as("mtl"))
+      val p10 = Analytics.exactPercentiles(docs, "mtl", Seq("thr" -> 0.1))
+      docs.crossJoin(broadcast(p10))
+        .filter(col("mtl") >= col("thr"))
+        .agg(count(lit(1)).as("kept"),
+          round(min(col("mtl")), 6).as("min_kept_mtl"))
+    },
+      s"""WITH m AS (SELECT doc_id, round($meanTok, 6) AS mtl FROM documents),
+         |t AS (SELECT quantile_cont(mtl, 0.1) AS thr FROM m)
+         |SELECT count(*) AS kept, round(min(mtl), 6) AS min_kept_mtl
+         |FROM m, t WHERE mtl >= thr""".stripMargin),
+    // DISPARATE-IMPACT AUDIT of the quality filter — the four-fifths
+    // rule (EEOC 1978; Feldman et al. 2015 brought it to ML pipelines):
+    // per language group, the bottom-decile mean-token-length filter's
+    // keep rate must be ≥ 80% of the most-favored group's, or the
+    // filter is flagged as disparately excluding that language from the
+    // corpus. The fairness pre-flight a multilingual curation run needs
+    // BEFORE shipping a filter tuned on one language's statistics.
+    // Exactness: rates as integer ppm; the 4/5ths test is the exact
+    // integer cross-multiply rate·5 < max_rate·4 (no float compare);
+    // only the reported di_ratio is a rounded double. Scale: one
+    // broadcast threshold, one lang-cardinality aggregate, one
+    // broadcast max — no joins beyond scalars.
+    Q("q_disparate_impact", { (s, d) =>
+      val docs = Tables.documents(s, d)
+        .select(col("lang"), round(meanTokenLen(col("text")), 6).as("mtl"))
+      val thr = Analytics.exactPercentiles(docs, "mtl", Seq("thr" -> 0.1))
+      disparateImpact(
+        docs.crossJoin(broadcast(thr))
+          .select(col("lang"), (col("mtl") >= col("thr")).as("keep")),
+        "lang", "keep")
+    },
+      s"""WITH m AS (SELECT lang, round($meanTok, 6) AS mtl FROM documents),
+         |t AS (SELECT quantile_cont(mtl, 0.1) AS thr FROM m),
+         |p AS (
+         | SELECT lang, count(*) AS n,
+         |  CAST(sum(CASE WHEN mtl >= thr THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
+         | FROM m, t GROUP BY 1),
+         |r AS (SELECT lang, n, n_kept,
+         |       n_kept * 1000000 // n AS rate_ppm FROM p),
+         |x AS (SELECT max(rate_ppm) AS max_ppm FROM r)
+         |SELECT lang, n, n_kept, rate_ppm,
+         | round(CAST(rate_ppm AS DOUBLE) / CAST(max_ppm AS DOUBLE), 6)
+         |  AS di_ratio,
+         | rate_ppm * 5 < max_ppm * 4 AS violates_45
+         |FROM r, x ORDER BY lang""".stripMargin),
+
+    // SORT-FREE decile report: bucket every doc by quality score WITHOUT
+    // a global ntile sort — the 9 exact decile thresholds come from the
+    // distributed percentile and broadcast back; assignment is a pure
+    // map-side when-chain. ntile(10) over all docs is a single-task
+    // total sort at 100 TB; this is two bounded passes + a map.
+    // CURRICULUM INTERLEAVE — deterministic data ordering for training:
+    // bucket docs into quality deciles (the sort-free threshold
+    // technique below), rank within each decile (PARTITIONED window —
+    // never a global row_number over the corpus), and emit the
+    // round-robin order (rank, decile): position k of the curriculum
+    // takes the k-th example of each decile in turn, so every training
+    // window sees the full difficulty mix while within-decile order
+    // stays stable under appends. Top-20 via TakeOrdered, no global
+    // sort materialization.
+    Q("q_curriculum", { (s, d) =>
+      val scored = Tables.documents(s, d)
+        .select(col("doc_id"), length(col("text")).cast("double").as("score"))
+      val thr = Analytics.exactPercentiles(scored, "score",
+        (1 to 9).map(i => s"t$i" -> i / 10.0))
+      val bucketed = scored.crossJoin(broadcast(thr))
+        .withColumn("decile", lit(1) +
+          (1 to 9).map(i => when(col("score") > col(s"t$i"), 1).otherwise(0))
+            .reduce(_ + _))
+      bucketed
+        .withColumn("rn", row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy("decile")
+            .orderBy(col("score"), col("doc_id"))))
+        .select(col("doc_id"), col("decile"), col("rn"))
+        .orderBy(col("rn"), col("decile"), col("doc_id"))
+        .limit(20)
+    }, {
+      val thrCols = (1 to 9).map(i => s"quantile_cont(score, 0.${i}) AS t$i").mkString(", ")
+      val caseSum = (1 to 9)
+        .map(i => s"CASE WHEN score > t$i THEN 1 ELSE 0 END")
+        .mkString("(", " + ", ")")
+      s"""WITH s AS (
+         | SELECT doc_id, CAST(length(text) AS DOUBLE) AS score FROM documents),
+         |t AS (SELECT $thrCols FROM s),
+         |b AS (SELECT doc_id, score, 1 + $caseSum AS decile FROM s, t),
+         |r AS (
+         | SELECT doc_id, decile, CAST(row_number() OVER (
+         |   PARTITION BY decile ORDER BY score, doc_id) AS INTEGER) AS rn
+         | FROM b)
+         |SELECT doc_id, decile, rn FROM r
+         |ORDER BY rn, decile, doc_id LIMIT 20""".stripMargin
+    }),
+    Q("q_decile_report", { (s, d) =>
+      val scored = Tables.documents(s, d)
+        .select(col("doc_id"), length(col("text")).cast("double").as("score"))
+      val thr = Analytics.exactPercentiles(scored, "score",
+        (1 to 9).map(i => s"t$i" -> i / 10.0))
+      scored.crossJoin(broadcast(thr))
+        .withColumn("decile", lit(1) +
+          (1 to 9).map(i => when(col("score") > col(s"t$i"), 1).otherwise(0))
+            .reduce(_ + _))
+        .groupBy("decile")
+        .agg(count(lit(1)).as("cnt"),
+          min(col("score")).as("min_score"), max(col("score")).as("max_score"))
+        .orderBy("decile")
+    }, {
+      val thrCols = (1 to 9).map(i => s"quantile_cont(score, 0.${i}) AS t$i").mkString(", ")
+      val caseSum = (1 to 9)
+        .map(i => s"CASE WHEN score > t$i THEN 1 ELSE 0 END")
+        .mkString("(", " + ", ")")
+      s"""WITH s AS (SELECT CAST(length(text) AS DOUBLE) AS score FROM documents),
+         |t AS (SELECT $thrCols FROM s)
+         |SELECT 1 + $caseSum AS decile, count(*) AS cnt,
+         | min(score) AS min_score, max(score) AS max_score
+         |FROM s, t GROUP BY 1 ORDER BY 1""".stripMargin
+    }),
+    // WEIGHTED deterministic sampling: each doc kept with probability
+    // proportional to its token count (capped at 1) — the token-budget
+    // resampling move behind source-mix rebalancing (q_source_mix emits
+    // the rates; this applies one). Inclusion is a pure map-side integer
+    // compare: u = first 32 md5 bits of the id vs p·2^32 — reproducible
+    // across engines, partitionings and reruns, unlike rand()-based
+    // df.sample. No shuffle until the audit aggregate.
+    Q("q_weighted_sample", { (s, d) =>
+      val u = conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
+        .cast("long")
+      val p = least(lit(1.0), tokenCount(col("text")).cast("double") / 400.0)
+      Tables.documents(s, d)
+        .withColumn("n_tok", tokenCount(col("text")))
+        .filter(u.cast("double") < p * 4294967296.0)
+        .groupBy("lang")
+        .agg(count(lit(1)).as("kept"), sum(col("n_tok")).cast("long").as("kept_tokens"))
+        .orderBy("lang")
+    },
+      s"""WITH t AS (SELECT lang, $nTok AS n_tok,
+         |  CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS u
+         | FROM documents)
+         |SELECT lang, count(*) AS kept, CAST(sum(n_tok) AS BIGINT) AS kept_tokens
+         |FROM t
+         |WHERE CAST(u AS DOUBLE) < least(1.0, CAST(n_tok AS DOUBLE) / 400.0) * 4294967296.0
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
+    // Deterministic train/val/test split: md5 of the id buckets every doc
+    // stably (the split survives reruns, repartitions, and engines — the
+    // property a training pipeline needs; xxhash64 would be faster but has
+    // no cross-engine oracle).
+    Q("q_sample_split", { (s, d) =>
+      val bucket = conv(substring(md5(col("doc_id").cast("string")), 1, 4), 16, 10)
+        .cast("long") % 100
+      val split = when(bucket < 80, "train").when(bucket < 90, "val").otherwise("test")
+      Tables.documents(s, d)
+        .select(split.as("split"))
+        .groupBy("split").agg(count(lit(1)).as("cnt"))
+        .orderBy("split")
+    },
+      """SELECT CASE
+        |  WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT) % 100 < 80 THEN 'train'
+        |  WHEN CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)) AS BIGINT) % 100 < 90 THEN 'val'
+        |  ELSE 'test' END AS split, count(*) AS cnt
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
+    // Rare-bigram rate — a character-LM quality signal with integer
+    // determinism: corpus-wide character-bigram counts (vocabulary
+    // bounded by alphabet², broadcast back), then per-doc counts of
+    // bigrams rarer than 0.01% of the corpus mass. Garbage text (mojibake,
+    // binary spill, keyboard mash) concentrates in rare bigrams; clean
+    // prose doesn't. Integer counts only — a per-doc Σlog p score would
+    // hash-drift on float summation order across engines.
+    // Scale: bigram extraction is map-side (codegen'd transform, one
+    // explode); the counts aggregate shuffles alphabet²-bounded keys;
+    // the re-join is a broadcast. Two passes over the exploded bigrams,
+    // both pruned to (doc_id, bg).
+    // Character-entropy quality signal: H = Σ -p·log2(p) over the doc's
+    // char distribution — low entropy flags repeated-char junk, high
+    // flags random noise; the classic cheap screen beside the rare-bigram
+    // rate. Determinism: each term is rounded to 6dp and summed as
+    // DECIMAL, so the total is order-independent (a raw double Σ would
+    // drift with partial-agg order); the per-term libm-ulp rounding risk
+    // is the same class the tfidf oracle already accepts (round-6 of ln).
+    Q("q_text_entropy", { (s, d) =>
+      val docs = Tables.documents(s, d)
+      val byDoc = Window.partitionBy("doc_id")
+      val counts = docs.filter(length(col("text")) > 0)
+        .select(col("doc_id"), explode(split(col("text"), "")).as("ch"))
+        .filter(col("ch") =!= "")
+        .groupBy("doc_id", "ch").agg(count(lit(1)).as("cnt"))
+        .withColumn("n", sum(col("cnt")).over(byDoc))
+      val term = round((col("cnt").cast("double") / col("n")) *
+        log2(col("n").cast("double") / col("cnt")), 6)
+      val ent = counts
+        .withColumn("t", term.cast(DecimalType(18, 6)))
+        .groupBy("doc_id")
+        .agg(max(col("n")).cast("long").as("n_chars"),
+          sum(col("t")).cast("double").as("entropy_bits"))
+      docs.select("doc_id").join(ent, Seq("doc_id"), "left")
+        .na.fill(0L, Seq("n_chars")).na.fill(0.0, Seq("entropy_bits"))
+        .orderBy("doc_id")
+    },
+      """WITH ch AS (
+        | SELECT doc_id, unnest(string_split(text, '')) AS ch
+        | FROM documents WHERE length(text) > 0),
+        |c AS (SELECT doc_id, ch, count(*) AS cnt FROM ch GROUP BY 1, 2),
+        |t AS (SELECT doc_id, cnt,
+        |       sum(cnt) OVER (PARTITION BY doc_id) AS n FROM c),
+        |e AS (SELECT doc_id, CAST(max(n) AS BIGINT) AS n_chars,
+        | CAST(sum(CAST(round((cnt / CAST(n AS DOUBLE)) *
+        |   log2(CAST(n AS DOUBLE) / cnt), 6) AS DECIMAL(18,6))) AS DOUBLE)
+        |   AS entropy_bits
+        | FROM t GROUP BY doc_id)
+        |SELECT d.doc_id, coalesce(e.n_chars, 0) AS n_chars,
+        | coalesce(e.entropy_bits, 0.0) AS entropy_bits
+        |FROM documents d LEFT JOIN e USING (doc_id)
+        |ORDER BY doc_id""".stripMargin),
+
+    // Winnowing fingerprint selection (MOSS) — the position-robust dedup
+    // index: any ≥ (w+k-1)-token overlap between docs shares a selected
+    // fingerprint, at ~2/(w+1) index density.
+    // winnowing twin: same 28-bit md5 gram hash, same packed-key window
+    // min (hash ASC, pos DESC tie), same full-window/short-doc rule
+    Q("q_winnow", { (s, d) =>
+      winnow(Tables.documents(s, d))
+    },
+      s"""WITH t AS (
+         | SELECT doc_id, ${tokensSql("lower(text)")} AS toks FROM documents),
+         |g AS (
+         | SELECT doc_id, CAST(r.i AS INTEGER) AS pos,
+         |  len(toks) - 2 AS m,
+         |  array_to_string(list_slice(toks, CAST(r.i AS INTEGER),
+         |    CAST(r.i AS INTEGER) + 2), ' ') AS gram
+         | FROM t, unnest(range(1, len(toks) - 1)) AS r(i)
+         | WHERE len(toks) >= 3),
+         |k AS (
+         | SELECT doc_id, pos, m,
+         |  CAST('0x' || substr(md5(gram), 1, 7) AS BIGINT) * 33554432
+         |    + (33554431 - pos) AS key
+         | FROM g),
+         |w AS (
+         | SELECT doc_id, pos, m,
+         |  min(key) OVER (PARTITION BY doc_id ORDER BY pos
+         |    ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mk
+         | FROM k)
+         |SELECT DISTINCT doc_id,
+         | CAST(33554431 - (mk % 33554432) AS INTEGER) AS pos,
+         | mk // 33554432 AS fp
+         |FROM w WHERE pos <= greatest(m - 3, 1)
+         |ORDER BY doc_id, pos""".stripMargin),
+    // HILL TAIL-INDEX ESTIMATOR (Hill 1975) over document lengths:
+    // α̂ = 1 / [ mean_{i≤k} ln x_(i) − ln x_(k+1) ] on the k = 100
+    // largest documents. α ≤ 2 means infinite-variance length tails —
+    // the diagnosis that decides whether packing/batching plans can
+    // rely on mean-based sizing or must cap outliers (q_truncation_plan
+    // / q_winsorized_lift are the interventions; this is the test for
+    // whether they're needed). Scale: the top-(k+1) slice runs on the
+    // native TopKPerKey exec (k-bounded heaps, no corpus sort); ln
+    // values round to 6dp DECIMAL before the k-row fold; guarded NULL
+    // when the top slice is degenerate (all-equal lengths). Window runs
+    // on the ≤101-row slice only.
+    Q("q_hill_tail", { (s, d) =>
+      import org.apache.spark.sql.expressions.Window
+      val k = 100
+      val top = graft.plans.TopKPerKey.topKPerKey(
+          Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
+            .withColumn("g", lit(1)),
+          keys = Seq("g"),
+          order = Seq(("n_chars", false), ("doc_id", true)), k = k + 1)
+        .withColumn("rn", row_number().over(Window.partitionBy("g")
+          .orderBy(desc("n_chars"), asc("doc_id"))))
+      val xk = top.filter(col("rn") === k + 1)
+        .select(col("n_chars").as("xk"))
+      val inv = col("sl").cast("double") / col("kk").cast("double") -
+        round(log(col("xk").cast("double")), 6)
+      top.filter(col("rn") <= k)
+        .select(round(log(col("n_chars").cast("double")), 6)
+          .cast(DecimalType(18, 6)).as("lx"))
+        .agg(count(lit(1)).as("kk"), sum(col("lx")).as("sl"))
+        .crossJoin(broadcast(xk))
+        .select(col("kk").as("k"), col("xk").as("x_k1"),
+          when(inv =!= 0.0, round(lit(1.0) / inv, 6)).as("alpha"))
+    },
+      """WITH r AS (
+        | SELECT n_chars,
+        |  row_number() OVER (ORDER BY n_chars DESC, doc_id) AS rn
+        | FROM documents),
+        |xk AS (SELECT n_chars AS xk FROM r WHERE rn = 101),
+        |t AS (SELECT CAST(round(ln(CAST(n_chars AS DOUBLE)), 6)
+        |       AS DECIMAL(18,6)) AS lx FROM r WHERE rn <= 100)
+        |SELECT count(*) AS k, (SELECT xk FROM xk) AS x_k1,
+        | CASE WHEN CAST(sum(lx) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+        |   - round(ln(CAST((SELECT xk FROM xk) AS DOUBLE)), 6) <> 0.0
+        |  THEN round(1.0 / (CAST(sum(lx) AS DOUBLE) / CAST(count(*) AS DOUBLE)
+        |   - round(ln(CAST((SELECT xk FROM xk) AS DOUBLE)), 6)), 6)
+        | END AS alpha
+        |FROM t""".stripMargin),
+
+    // Zipf-law fit of the corpus vocabulary: OLS of ln(freq) on ln(rank)
+    // over the top-100 terms. The exponent (~1 for natural language) is a
+    // corpus-health signal — synthetic/templated text flattens the curve,
+    // boilerplate floods steepen it. Plan: the wordcount aggregate (one
+    // map-side-combined shuffle), a 100-row TakeOrdered to the bounded
+    // frame, a 100-row window rank (documented: never corpus-sized), and
+    // exact DECIMAL moment sums so the fold is order-independent; the
+    // 5 regression doubles derive from identical decimal sums on both
+    // engines.
+    // zipf twin: same top-100 vocabulary, same 6dp-decimal ln moments,
+    // same double-space regression arithmetic
+    Q("q_zipf_fit", { (s, d) =>
+      zipfFit(Tables.documents(s, d))
+    },
+      s"""WITH v AS (
+         | SELECT token, count(*) AS freq FROM (
+         |  SELECT unnest(${tokensSql("lower(text)")}) AS token FROM documents)
+         | GROUP BY 1 ORDER BY freq DESC, token LIMIT 100),
+         |r AS (SELECT freq,
+         |  row_number() OVER (ORDER BY freq DESC, token) AS rank FROM v),
+         |p AS (SELECT
+         |  CAST(round(ln(rank), 6) AS DECIMAL(18,6)) AS x,
+         |  CAST(round(ln(freq), 6) AS DECIMAL(18,6)) AS y FROM r),
+         |s AS (SELECT count(*) AS n,
+         |  CAST(sum(x) AS DOUBLE) AS sx, CAST(sum(y) AS DOUBLE) AS sy,
+         |  CAST(sum(x*y) AS DOUBLE) AS sxy, CAST(sum(x*x) AS DOUBLE) AS sxx,
+         |  CAST(sum(y*y) AS DOUBLE) AS syy FROM p)
+         |SELECT n AS n_terms,
+         | round(-((n*sxy - sx*sy) / (n*sxx - sx*sx)), 6) AS zipf_exponent,
+         | round((sy - ((n*sxy - sx*sy) / (n*sxx - sx*sx)) * sx) / n, 6)
+         |   AS intercept,
+         | round(((n*sxy - sx*sy) * (n*sxy - sx*sy))
+         |   / ((n*sxx - sx*sx) * (n*syy - sy*sy)), 6) AS r2
+         |FROM s""".stripMargin),
+    // Trained NB language ID, self-classified: the confusion matrix IS
+    // the report (diagonal mass = how separable the lang labels are).
+    // NB twin: same smoothed counts, same 6dp-decimal log2 terms, same
+    // (score DESC, cand ASC) argmax
+    Q("q_langid_nb", { (s, d) =>
+      langIdNaiveBayes(Tables.documents(s, d))
+    },
+      s"""WITH tok AS (
+         | SELECT doc_id, lang, unnest(${tokensSql("lower(text)")}) AS w
+         | FROM documents WHERE lang IS NOT NULL),
+         |cwl AS (SELECT lang, w, count(*) AS c FROM tok GROUP BY 1, 2),
+         |cl AS (SELECT lang, sum(c) AS cl FROM cwl GROUP BY 1),
+         |v AS (SELECT count(DISTINCT w) AS v FROM cwl),
+         |model AS (
+         | SELECT vw.w, cl.lang AS cand,
+         |  CAST(round(log2(CAST(COALESCE(c.c, 0) + 1 AS DOUBLE)
+         |    / CAST(cl.cl + v.v AS DOUBLE)), 6) AS DECIMAL(28,6)) AS lp
+         | FROM (SELECT DISTINCT w FROM cwl) vw
+         | CROSS JOIN cl
+         | LEFT JOIN cwl c ON c.lang = cl.lang AND c.w = vw.w
+         | CROSS JOIN v),
+         |priors AS (
+         | SELECT lang AS cand,
+         |  CAST(round(log2(CAST(nd AS DOUBLE) / CAST(nall AS DOUBLE)), 6)
+         |    AS DECIMAL(28,6)) AS lpr
+         | FROM (SELECT lang, count(*) AS nd FROM documents
+         |       WHERE lang IS NOT NULL GROUP BY 1)
+         | CROSS JOIN (SELECT count(*) AS nall FROM documents
+         |             WHERE lang IS NOT NULL)),
+         |scored AS (
+         | SELECT t.doc_id, m.cand, sum(m.lp) AS s
+         | FROM tok t JOIN model m ON m.w = t.w GROUP BY 1, 2),
+         |pick AS (
+         | SELECT doc_id, cand AS lang_pred FROM (
+         |  SELECT doc_id, cand,
+         |   row_number() OVER (PARTITION BY doc_id
+         |     ORDER BY s + lpr DESC, cand) AS rn
+         |  FROM scored JOIN priors USING (cand))
+         | WHERE rn = 1)
+         |SELECT d.lang, p.lang_pred, count(*) AS n
+         |FROM (SELECT DISTINCT doc_id, lang FROM tok) d
+         |JOIN pick p USING (doc_id)
+         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin),
+    Q("q_rare_bigrams", { (s, d) =>
+      // single-row-group spread: substring(text,i,2) re-walks the string
+      // from byte 0 per position (O(len²)/doc), and BOTH passes pay it —
+      // measured 2×2.9 s single-task before the spread
+      val docs = Tables.documents(s, d)
+        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+      // Two passes over the exploded bigrams ON PURPOSE: each pass's
+      // shuffle is collapsed map-side (pass 1 to the alphabet²-bounded
+      // bigram vocabulary, pass 2 to one row per doc), so both exchanges
+      // are tiny; the explode itself is cheap codegen'd map work. The
+      // "obvious" fix — pre-aggregating a (doc_id, bigram) histogram to
+      // explode once — shuffles the doc×bigram cross instead and measured
+      // 1.3× SLOWER at sf0.1 (4.6 s → 6.1 s). Map-side combine beats
+      // explode-avoidance here.
+      val bg = docs
+        .filter(length(col("text")) >= 2)
+        .select(col("doc_id"), explode(expr(
+          "transform(sequence(1, length(text) - 1), i -> substring(text, i, 2))"))
+          .as("bg"))
+      val counts = bg.groupBy("bg").agg(count(lit(1)).as("cnt"))
+      val total = counts.agg(sum(col("cnt")).as("total"))
+      val perDoc = bg
+        .join(broadcast(counts), Seq("bg"))
+        .crossJoin(broadcast(total))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_bigrams"),
+          sum(when(col("cnt") * 10000 < col("total"), 1L).otherwise(0L))
+            .as("n_rare"))
+      docs.select("doc_id").join(perDoc, Seq("doc_id"), "left")
+        .na.fill(0, Seq("n_bigrams", "n_rare"))
+        .orderBy("doc_id")
+    },
+      """WITH bg AS (
+        | SELECT doc_id,
+        |  unnest(list_transform(range(1, length(text)),
+        |    i -> substr(text, CAST(i AS INTEGER), 2))) AS bg
+        | FROM documents),
+        |counts AS (SELECT bg, count(*) AS cnt FROM bg GROUP BY bg),
+        |t AS (SELECT sum(cnt) AS total FROM counts),
+        |per_doc AS (
+        | SELECT doc_id, count(*) AS n_bigrams,
+        |  sum(CASE WHEN cnt * 10000 < total THEN 1 ELSE 0 END) AS n_rare
+        | FROM bg JOIN counts USING (bg), t
+        | GROUP BY doc_id)
+        |SELECT d.doc_id, coalesce(n_bigrams, 0) AS n_bigrams,
+        | CAST(coalesce(n_rare, 0) AS BIGINT) AS n_rare
+        |FROM documents d LEFT JOIN per_doc USING (doc_id)
+        |ORDER BY doc_id""".stripMargin)
+  )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import graft.functions.Scalars._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,7 +17,7 @@ import Relational.{sumDec, sumDecSql}
   * cardinality is bounded (states, hours, buckets), so shuffle volume is
   * tiny regardless of fact size.
   */
-object Topics {
+object Topics extends QueryModule {
 
   /** K1 transit_signals_by_state — per-state infrastructure totals.
     * Mapped: supplier-nation plays the state; l_quantity the signal count.
@@ -91,50 +91,40 @@ object Topics {
       .agg(count(lit(1)).as("crossings"), sumDec(col("value")).as("lesions_total"))
       .orderBy("crossing_type")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_k1_signals_by_state"    -> transitSignalsByState _,
-    "q_k2_signals_vs_lesions"  -> signalsVsLesions _,
-    "q_k3_weather_light"       -> weatherLightSurface _,
-    "q_k4_accidents_by_time"   -> accidentsByTime _,
-    "q_k5_lesions_by_county"   -> lesionsByCounty _,
-    "q_k6_infra_vs_lesions"    -> hospitalsSchoolsVsLesions _,
-    "q_k7_crossings_vs_lesions" -> crossingsVsLesions _
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q_k1_signals_by_state" ->
+  def entries: Seq[Q] = Seq(
+    Q("q_k1_signals_by_state", transitSignalsByState _,
       s"""SELECT n_name AS state, ${sumDecSql("l_quantity")} AS signals
          |FROM lineitem
          |JOIN supplier ON l_suppkey = s_suppkey
          |JOIN nation ON s_nationkey = n_nationkey
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_k2_signals_vs_lesions" ->
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Q("q_k2_signals_vs_lesions", signalsVsLesions _,
       """SELECT floor((value/10.0)/0.5)*0.5 AS signal_bucket,
         | count(*) AS cnt,
         | CAST(sum(CAST(json_extract_string(props,'$.k') AS INTEGER)) AS BIGINT) AS lesions
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_k3_weather_light" ->
+        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+    Q("q_k3_weather_light", weatherLightSurface _,
       s"""SELECT o_orderstatus AS weather, o_orderpriority AS lighting,
          | count(*) AS cnt, ${sumDecSql("o_totalprice")} AS lesions
-         |FROM orders GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-    "q_k4_accidents_by_time" ->
-      "SELECT CAST(hour(ts) AS INTEGER) AS h, count(*) AS cnt FROM events GROUP BY 1 ORDER BY 1",
-    "q_k5_lesions_by_county" ->
+         |FROM orders GROUP BY 1,2 ORDER BY 1,2""".stripMargin),
+    Q("q_k4_accidents_by_time", accidentsByTime _,
+      "SELECT CAST(hour(ts) AS INTEGER) AS h, count(*) AS cnt FROM events GROUP BY 1 ORDER BY 1"),
+    Q("q_k5_lesions_by_county", lesionsByCounty _,
       s"""SELECT n_name AS county, ${sumDecSql("o_totalprice")} AS lesions_total,
          | count(*) AS accidents
          |FROM orders
          |JOIN customer ON o_custkey = c_custkey
          |JOIN nation ON c_nationkey = n_nationkey
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_k6_infra_vs_lesions" ->
+         |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Q("q_k6_infra_vs_lesions", hospitalsSchoolsVsLesions _,
       s"""SELECT 'bbox_' || printf('%.1f', floor((value/100.0)/0.5)*0.5)
          |  || '_' || printf('%.1f', floor((CAST(user_id AS DOUBLE)/10.0)/0.5)*0.5) AS bbox_label,
          | min(user_id) AS hospitals,
          | ${sumDecSql("value")} AS lesions_total
-         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_k7_crossings_vs_lesions" ->
+         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
+    Q("q_k7_crossings_vs_lesions", crossingsVsLesions _,
       s"""SELECT event_type AS crossing_type, count(*) AS crossings,
          | ${sumDecSql("value")} AS lesions_total
-         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
+         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin)
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.DecimalType
   *    less memory traffic than float32 at scan time, which is the point
   *    of int8 retrieval at 100 TB.
   */
-object Training {
+object Training extends QueryModule {
 
   // ===== sequence packing =====
 
@@ -774,177 +774,6 @@ object Training {
       .orderBy("bucket")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // fastText-style LR quality classifier: hashed signed unigram
-    // features, curated-vs-crawl label, 3 unrolled full-batch GD rounds.
-    "q_quality_lr" -> { (s, d) => qualityLr(Tables.documents(s, d)) },
-    // Generalization readout: same fit on the NOT-held 4/5, AUC/log-loss
-    // scored on the md5 held-out 1/5 only.
-    "q_quality_lr_holdout" -> { (s, d) =>
-      qualityLr(Tables.documents(s, d), holdout = true) },
-    // Density-aware embedding outliers: top-10 LOF on exact int8 d²,
-    // over ONE index list (vec_id < 500, the q_ivf_append base-slice
-    // convention) — LOF is local, so production shards it per IVF list
-    // and this query IS one such shard: its pair frame is list²-bounded
-    // at EVERY sf (the full-corpus variant was the suite's slowest
-    // query at sf0.1 — 2000² HOF dot products for identical top-10s).
-    "q_lof_outliers" -> { (s, d) =>
-      lofOutliers(Tables.embeddings(s, d).filter(col("vec_id") < 500)) },
-    // Geometry-preservation readout of the int8 quantization (linear CKA).
-    "q_cka_quant" -> { (s, d) => ckaQuant(Tables.embeddings(s, d)) },
-    // One ALS half-step: per-user ridge solve against seeded item factors.
-    "q_als_step" -> { (s, d) =>
-      alsStep(Tables.orders(s, d), Tables.lineitem(s, d)) },
-    // Farthest-first k-center coreset over int8 codes (exact integer d²).
-    "q_kcenter_coreset" -> { (s, d) =>
-      kCenterCoreset(Tables.embeddings(s, d)) },
-    // Source-decorrelation audit of the epoch-shuffle training order.
-    "q_shuffle_quality" -> { (s, d) =>
-      shuffleQuality(Tables.documents(s, d)) },
-    "q_woe_iv" -> { (s, d) => woeIv(Tables.documents(s, d)) },
-    // Bradley–Terry source-strength tournament over rank-matched duels.
-    "q_bt_strength" -> { (s, d) => btStrength(Tables.documents(s, d)) },
-    // Integer-exact per-label embedding outliers (Tukey fence on d²).
-    "q_embed_outliers" -> { (s, d) =>
-      embedOutliers(Tables.embeddings(s, d))
-    },
-    // Concat-and-chunk packing of the documents table: 512-token budget,
-    // 8 shards. Returns the per-pack contract rows.
-    "q_pack_sequences" -> { (s, d) =>
-      packSummary(Tables.documents(s, d)).orderBy("pack_id")
-    },
-    // Per-vector int8 quantization artifacts: scale + integer code sums
-    // (codes themselves are list-typed; the sums are the cross-engine
-    // checkable projection of them).
-    "q_embed_quant" -> { (s, d) =>
-      // single-row-group local table: spread before the per-vector
-      // quantize + two 64-term folds, which otherwise run in ONE task
-      // (stage profile: the whole query was 2 sequential single-task
-      // stages, ~3 s of single-threaded CPU). At cluster scale the scan
-      // is already many-partition; the raw-row shuffle is noise.
-      quantizeEmbeddings(Tables.embeddings(s, d)
-          .repartition(s.sparkContext.defaultParallelism))
-        .select(col("vec_id"), col("scale"),
-          aggregate(col("codes"), lit(0L), (a, v) => a + v).as("code_sum"),
-          intDot(col("codes"), col("codes")).as("code_norm2"))
-        .orderBy("vec_id")
-    },
-    // Sequence-length bucket report: 16-wide capacity buckets (sized to
-    // this corpus' 10-99-token docs; production would use 128) with
-    // per-bucket padding efficiency.
-    "q_length_buckets" -> { (s, d) =>
-      lengthBuckets(Tables.documents(s, d))
-    },
-    // Quantized retrieval: the same 5 queries as the float top-k suite,
-    // ranked by exact integer dot product.
-    "q_sim_topk_quant" -> { (s, d) =>
-      val emb = Tables.embeddings(s, d)
-      quantizedTopK(emb.filter(col("vec_id") < 5), emb, 5)
-        .orderBy("query_id", "rank")
-    },
-    // PACK BOUNDARY MAP — what the dataloader actually consumes beside
-    // the pack summary: per pack, the ordered (doc_id@start_token) list
-    // marking where each document begins, i.e. the attention-boundary /
-    // loss-mask offsets for concat-and-chunk training. Emitted as a
-    // canonical ';'-joined string (the q_collect_ops array idiom) so the
-    // oracle hash is order-stable. Same shard-partitioned windows as
-    // q_pack_sequences — no global sort.
-    "q_pack_boundaries" -> { (s, d) =>
-      packAssignments(Tables.documents(s, d), 512, 8)
-        .groupBy("pack_id")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("total_tokens"),
-          array_join(transform(
-            array_sort(collect_list(struct(col("doc_id"), col("start_tok")))),
-            e => concat_ws("@", e.getField("doc_id"), e.getField("start_tok"))),
-            ";").as("boundaries"))
-        .orderBy("pack_id")
-    },
-
-    // FEATURE-HASHING COLLISION AUDIT (the hashing trick, Weinberger et
-    // al. 2009): categorical features hash into a fixed D=64 bucket
-    // space with a ±1 sign bit. Before training on hashed features, a
-    // pipeline audits the space: per bucket, how many DISTINCT raw
-    // features collided there, the row mass, and the net signed mass
-    // (the sign trick makes colliding features cancel in expectation —
-    // net ≈ 0 on balanced collisions is the property being bought).
-    // Plan: feature extraction is a map-side explode of 3 pure-column
-    // expressions; the audit aggregates at feature cardinality then
-    // bucket cardinality (64 rows) — two map-side-combined shuffles of
-    // dictionary-class frames, never row-cardinality state.
-    "q_feature_hash" -> { (s, d) =>
-      val feats = Tables.events(s, d).select(explode(array(
-          concat(lit("type:"), col("event_type")),
-          concat(lit("dow:"), weekday(col("ts")) + 1),
-          concat(lit("hour:"), hour(col("ts"))))).as("feat"))
-        .groupBy("feat").agg(count(lit(1)).as("n"))
-        .select(col("feat"), col("n"),
-          (conv(substring(md5(col("feat")), 1, 4), 16, 10)
-            .cast("long") % 64).as("bucket"),
-          when(conv(substring(md5(col("feat")), 5, 1), 16, 10)
-            .cast("long") % 2 === 0, 1L).otherwise(-1L).as("sign"))
-      feats.groupBy("bucket")
-        .agg(count(lit(1)).as("n_features"),
-          sum(col("n")).as("n_rows"),
-          sum(col("sign") * col("n")).as("net_signed"))
-        .withColumn("has_collision", col("n_features") > 1)
-        .orderBy("bucket")
-    },
-
-    // LEAVE-ONE-OUT TARGET ENCODING with smoothing (Micci-Barreca 2001)
-    // — the leakage-safe categorical feature: each row's encoding is the
-    // smoothed mean of its category's target EXCLUDING the row itself
-    // (in-fold mean would leak the label; the m=10 prior shrinks rare
-    // categories toward the global mean). Exact-integer rational:
-    // te = ((sc_t − own)·N + m·S) / ((n_t − 1 + m)·N), one double
-    // division at the end — bit-stable cross-engine. Scale: per-row map
-    // over the fact with a category-cardinality broadcast and a scalar
-    // broadcast; output capped to event_id < 2000 (stats come from the
-    // FULL table — the cap only bounds the verify frame).
-    "q_target_encode" -> { (s, d) =>
-      val m = 10L
-      val ev = Tables.events(s, d).filter(col("value").isNotNull)
-        .select(col("event_id"), col("event_type"),
-          (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2))
-            * 100).cast("long").as("cents"))
-      val byT = ev.groupBy("event_type")
-        .agg(count(lit(1)).as("nt"), sum(col("cents")).as("sc"))
-      val tot = ev.agg(count(lit(1)).as("nn"), sum(col("cents")).as("ss"))
-      ev.join(broadcast(byT), Seq("event_type")).crossJoin(broadcast(tot))
-        .filter(col("event_id") < 2000)
-        .select(col("event_id"), col("event_type"),
-          round(col("cents").cast("double") / 100.0, 2).as("value"),
-          round(((col("sc") - col("cents")) * col("nn") +
-              lit(m) * col("ss")).cast("double") /
-            ((col("nt") - 1 + m) * col("nn")).cast("double") / 100.0, 6)
-            .as("te_loo"))
-        .orderBy("event_id")
-    },
-
-    // PER-EPOCH DETERMINISTIC SHUFFLE + SHARD PLAN — pretraining wants a
-    // different global-looking data order every epoch, reproducible
-    // across reruns and resumable mid-epoch. A true global shuffle is a
-    // total ORDER BY (single-partition window at 100 TB — a non-starter);
-    // the scalable form is hash-shard-then-local-rank: shard =
-    // md5(epoch:doc) bucket, rank = row_number WITHIN (epoch, shard) by
-    // the same hash. Each worker streams its shard in rank order; the
-    // composition is epoch-keyed, so epoch 2's shards and orders are
-    // uncorrelated with epoch 1's. Every window is shard-local —
-    // partitioned, parallel, no global sort anywhere.
-    "q_epoch_shuffle" -> { (s, d) =>
-      val h = md5(concat_ws(":", col("epoch"), col("doc_id")))
-      Tables.documents(s, d).select(col("doc_id"))
-        .select(col("doc_id"), explode(sequence(lit(1), lit(2))).as("epoch"))
-        .select(col("doc_id"), col("epoch").cast("long").as("epoch"), h.as("h"))
-        .withColumn("shard",
-          conv(substring(col("h"), 1, 4), 16, 10).cast("long") % 8)
-        .withColumn("rank_in_shard", row_number().over(
-          Window.partitionBy("epoch", "shard").orderBy("h", "doc_id")))
-        .select(col("epoch"), col("shard"), col("doc_id"), col("rank_in_shard"))
-        .orderBy("epoch", "shard", "rank_in_shard")
-    }
-  )
-
   // ===== DuckDB oracles =====
 
   private val tokensSql =
@@ -1059,17 +888,31 @@ object Training {
        |FROM w$iters, au, ll ORDER BY bucket""".stripMargin
   }
 
-  def oracles: Map[String, String] = Map(
+  def entries: Seq[Q] = Seq(
+    // fastText-style LR quality classifier: hashed signed unigram
+    // features, curated-vs-crawl label, 3 unrolled full-batch GD rounds.
     // same md5 bucket/sign hashing, same exact x = net/nt division, same
     // unrolled GD rounds (9dp folds, 6dp weights), same quantized-margin
     // aucRank identity and 6dp loss fold
-    "q_quality_lr" -> qualityLrSql("TRUE", "TRUE"),
+    Q("q_quality_lr", { (s, d) => qualityLr(Tables.documents(s, d)) },
+      qualityLrSql("TRUE", "TRUE")),
+    // Generalization readout: same fit on the NOT-held 4/5, AUC/log-loss
+    // scored on the md5 held-out 1/5 only.
     // same fit restricted to the NOT-held 4/5, AUC/log-loss over the
     // held 1/5 only (the generalization readout)
-    "q_quality_lr_holdout" -> qualityLrSql("NOT held", "held"),
+    Q("q_quality_lr_holdout", { (s, d) =>
+      qualityLr(Tables.documents(s, d), holdout = true) },
+      qualityLrSql("NOT held", "held")),
+    // Density-aware embedding outliers: top-10 LOF on exact int8 d²,
+    // over ONE index list (vec_id < 500, the q_ivf_append base-slice
+    // convention) — LOF is local, so production shards it per IVF list
+    // and this query IS one such shard: its pair frame is list²-bounded
+    // at EVERY sf (the full-corpus variant was the suite's slowest
+    // query at sf0.1 — 2000² HOF dot products for identical top-10s).
     // same int8 codes, same integer d² kNN (dd, ib tie-break), same
     // integer k·10¹²-scaled lrd, same final ratio
-    "q_lof_outliers" ->
+    Q("q_lof_outliers", { (s, d) =>
+      lofOutliers(Tables.embeddings(s, d).filter(col("vec_id") < 500)) },
       s"""WITH p AS (
          | SELECT vec_id, codes,
          |  CAST(coalesce(${intDotSql("codes", "codes")}, 0) AS BIGINT)
@@ -1106,10 +949,11 @@ object Training {
          |   / (5.0 * CAST(ld.lrd12 AS DOUBLE)), 4) END AS lof
          |FROM lf l JOIN lrd ld ON l.ia = ld.ia
          | JOIN kdist kd ON l.ia = kd.i
-         |ORDER BY lof DESC, vec_id LIMIT 10""".stripMargin,
+         |ORDER BY lof DESC, vec_id LIMIT 10""".stripMargin),
+    // Geometry-preservation readout of the int8 quantization (linear CKA).
     // same ⌊v·1024⌋ / int8 views, same n·Σxy − ΣxΣy centered moments in
     // HUGEINT, same final ratio-of-norms double
-    "q_cka_quant" ->
+    Q("q_cka_quant", { (s, d) => ckaQuant(Tables.embeddings(s, d)) },
       s"""WITH bo AS (
          | SELECT vec_id,
          |  list_transform(embedding,
@@ -1143,49 +987,12 @@ object Training {
          | CASE WHEN hxx > 0 AND hyy > 0 THEN
          |  round(CAST(hxy AS DOUBLE) /
          |   sqrt(CAST(hxx AS DOUBLE) * CAST(hyy AS DOUBLE)), 6) END AS cka
-         |FROM h, meta""".stripMargin,
-    // same int8 codes, same integer d², greedy rounds unrolled
-    "q_kcenter_coreset" -> {
-      def roundSql(t: Int) =
-        s"""c$t AS (
-           | SELECT vec_id AS cid, codes AS ccodes, n2 AS n2c,
-           |  d2min AS dsel
-           | FROM md${t - 1} ORDER BY d2min DESC, vec_id LIMIT 1),
-           |md$t AS (
-           | SELECT m.vec_id, m.codes, m.n2,
-           |  least(m.d2min, m.n2
-           |   - 2 * CAST(coalesce(${intDotSql("m.codes", "ccodes")}, 0)
-           |      AS BIGINT) + n2c) AS d2min
-           | FROM md${t - 1} m CROSS JOIN c$t)""".stripMargin
-      s"""WITH pts AS (
-         | SELECT vec_id, codes,
-         |  CAST(coalesce(${intDotSql("codes", "codes")}, 0) AS BIGINT)
-         |   AS n2
-         | FROM (SELECT vec_id,
-         |   ${codesSql("embedding", scaleSql("embedding"))} AS codes
-         |  FROM embeddings)),
-         |c1 AS (SELECT vec_id AS cid, codes AS ccodes, n2 AS n2c
-         |       FROM pts ORDER BY vec_id LIMIT 1),
-         |md1 AS (
-         | SELECT p.vec_id, p.codes, p.n2,
-         |  p.n2 - 2 * CAST(coalesce(${intDotSql("p.codes", "ccodes")}, 0)
-         |     AS BIGINT) + n2c AS d2min
-         | FROM pts p CROSS JOIN c1),
-         |${(2 to 5).map(roundSql).mkString(",\n")},
-         |rad AS (SELECT CAST(max(d2min) AS BIGINT) AS radius_d2 FROM md5),
-         |ctr AS (
-         | SELECT 1 AS step, cid AS center_id,
-         |  CAST(NULL AS BIGINT) AS d2_selected FROM c1
-         | ${(2 to 5).map(t =>
-            s"UNION ALL SELECT $t, cid, CAST(dsel AS BIGINT) FROM c$t")
-            .mkString("\n ")})
-         |SELECT CAST(step AS INTEGER) AS step, center_id, d2_selected,
-         | radius_d2
-         |FROM ctr CROSS JOIN rad ORDER BY step""".stripMargin
-    },
+         |FROM h, meta""".stripMargin),
+    // One ALS half-step: per-user ridge solve against seeded item factors.
     // same seeded item factors, same fixed-scale Gram folds, same 2×2
     // Cramer/residual double trees
-    "q_als_step" ->
+    Q("q_als_step", { (s, d) =>
+      alsStep(Tables.orders(s, d), Tables.lineitem(s, d)) },
       """WITH edges AS (
         | SELECT o_custkey AS c, l_suppkey AS s, count(*) AS r
         | FROM orders JOIN lineitem ON o_orderkey = l_orderkey
@@ -1229,140 +1036,51 @@ object Training {
         | round(sqrt(sse / CAST(n_edges AS DOUBLE)), 6) AS rmse,
         | round(sqrt(srr / CAST(n_edges AS DOUBLE)), 6) AS rms_zero
         |FROM sol CROSS JOIN gfit
-        |ORDER BY p1 * p1 + p2 * p2 DESC, c LIMIT 10""".stripMargin,
-    "q_woe_iv" ->
-      """WITH b AS (
-        | SELECT bin, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(p) + 1 AS BIGINT) AS g,
-        |  CAST(count(*) - sum(p) + 1 AS BIGINT) AS bd
-        | FROM (SELECT CAST(n_chars AS BIGINT) // 64 AS bin,
-        |        CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS p
-        |       FROM documents
-        |       WHERE lang IS NOT NULL AND n_chars IS NOT NULL)
-        | GROUP BY 1),
-        |tot AS (SELECT CAST(sum(g) AS BIGINT) AS gg,
-        |        CAST(sum(bd) AS BIGINT) AS bb FROM b),
-        |terms AS (
-        | SELECT bin, n AS n_docs, g - 1 AS n_pos, bd - 1 AS n_neg,
-        |  round(ln((CAST(g AS DOUBLE) / CAST(gg AS DOUBLE))
-        |    / (CAST(bd AS DOUBLE) / CAST(bb AS DOUBLE))), 6) AS woe,
-        |  CAST(round((CAST(g AS DOUBLE) / CAST(gg AS DOUBLE)
-        |     - CAST(bd AS DOUBLE) / CAST(bb AS DOUBLE))
-        |    * ln((CAST(g AS DOUBLE) / CAST(gg AS DOUBLE))
-        |      / (CAST(bd AS DOUBLE) / CAST(bb AS DOUBLE))), 6)
-        |   AS DECIMAL(18,6)) AS iv_term
-        | FROM b CROSS JOIN tot),
-        |iv AS (SELECT CAST(sum(iv_term) AS DOUBLE) AS iv_total FROM terms)
-        |SELECT bin, n_docs, n_pos, n_neg, woe,
-        | CAST(iv_term AS DOUBLE) AS iv_term, round(iv_total, 6) AS iv_total
-        |FROM terms CROSS JOIN iv ORDER BY bin""".stripMargin,
-    "q_embed_outliers" ->
-      s"""WITH q AS (
-         | SELECT vec_id, label,
-         |  ${codesSql("embedding", scaleSql("embedding"))} AS codes
-         | FROM embeddings),
-         |ex AS (
-         | SELECT vec_id, label, t.i - 1 AS pos, codes[t.i] AS c
-         | FROM q CROSS JOIN unnest(range(1, len(codes) + 1)) AS t(i)),
-         |cent AS (
-         | SELECT label, pos, (sum(c + 127) // count(*)) - 127 AS m
-         | FROM ex GROUP BY 1, 2),
-         |d2 AS (
-         | SELECT e.vec_id, e.label, sum((e.c - c.m) * (e.c - c.m)) AS d2
-         | FROM ex e JOIN cent c ON e.label = c.label AND e.pos = c.pos
-         | GROUP BY 1, 2),
-         |fen AS (
-         | SELECT label,
-         |  quantile_cont(d2, 0.75)
-         |   + 1.5 * (quantile_cont(d2, 0.75) - quantile_cont(d2, 0.25))
-         |   AS fence
-         | FROM d2 GROUP BY 1)
-         |SELECT d.label, d.vec_id, CAST(d.d2 AS BIGINT) AS d2,
-         | round(f.fence, 6) AS fence
-         |FROM d2 d JOIN fen f ON d.label = f.label
-         |WHERE CAST(d.d2 AS DOUBLE) > f.fence
-         |ORDER BY d.label, d.vec_id""".stripMargin,
-    "q_bt_strength" -> {
-      val iters = (1 to 3).map(btIterSql).mkString(",\n")
-      s"""WITH ranked AS (
-         | SELECT lang, source, n_chars,
-         |  row_number() OVER (PARTITION BY lang, source ORDER BY doc_id)
-         |   AS rn
-         | FROM documents),
-         |duel AS (
-         | SELECT a.source AS si, b.source AS sj,
-         |  CASE WHEN a.n_chars >= b.n_chars THEN 1 ELSE 0 END AS wa
-         | FROM ranked a JOIN ranked b
-         |  ON a.lang = b.lang AND a.rn = b.rn AND a.source < b.source),
-         |agg AS (
-         | SELECT si, sj, count(*) AS n, sum(wa) AS w FROM duel
-         | GROUP BY 1, 2),
-         |dir AS (
-         | SELECT si AS i, sj AS j, n, w FROM agg
-         | UNION ALL SELECT sj, si, n, n - w FROM agg),
-         |wins AS (SELECT i, sum(w) AS tw, sum(n) AS tn FROM dir GROUP BY 1),
-         |p0 AS (SELECT i AS s, CAST(1000000 AS BIGINT) AS p FROM wins),
-         |$iters
-         |SELECT w.i AS source, CAST(w.tn AS BIGINT) AS duels,
-         | CAST(w.tw AS BIGINT) AS wins, CAST(p.p AS BIGINT) AS strength
-         |FROM wins w JOIN p3 p ON w.i = p.s
-         |ORDER BY strength DESC, source""".stripMargin
-    },
-    "q_pack_boundaries" ->
-      s"""WITH toks AS (
-         | SELECT doc_id, $tokensSql AS n_tokens, doc_id % 8 AS shard
-         | FROM documents),
-         |a AS (
-         | SELECT doc_id, n_tokens, shard,
-         |  CAST(coalesce(sum(n_tokens) OVER (
-         |    PARTITION BY shard ORDER BY doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         |   AS BIGINT) AS cb
-         | FROM toks),
-         |p AS (
-         | SELECT doc_id, n_tokens,
-         |  shard * 1000000 + CAST(floor(cb / 512.0) AS BIGINT) AS pack_id,
-         |  cb % 512 AS start_tok
-         | FROM a)
-         |SELECT pack_id, count(*) AS n_docs,
-         | CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-         | array_to_string(list(doc_id || '@' || start_tok ORDER BY doc_id),
-         |  ';') AS boundaries
-         |FROM p GROUP BY pack_id ORDER BY pack_id""".stripMargin,
-    "q_feature_hash" ->
-      """WITH f AS (
-        | SELECT unnest(['type:' || event_type,
-        |   'dow:' || CAST(isodow(ts) AS INTEGER),
-        |   'hour:' || CAST(hour(ts) AS INTEGER)]) AS feat
-        | FROM events),
-        |fc AS (SELECT feat, CAST(count(*) AS BIGINT) AS n FROM f GROUP BY 1),
-        |h AS (
-        | SELECT feat, n,
-        |  CAST(('0x' || substr(md5(feat), 1, 4)) AS BIGINT) % 64 AS bucket,
-        |  CASE WHEN CAST(('0x' || substr(md5(feat), 5, 1)) AS BIGINT) % 2 = 0
-        |   THEN 1 ELSE -1 END AS sign
-        | FROM fc)
-        |SELECT bucket, CAST(count(*) AS BIGINT) AS n_features,
-        | CAST(sum(n) AS BIGINT) AS n_rows,
-        | CAST(sum(sign * n) AS BIGINT) AS net_signed,
-        | count(*) > 1 AS has_collision
-        |FROM h GROUP BY 1 ORDER BY bucket""".stripMargin,
-    "q_target_encode" ->
-      """WITH ev AS (
-        | SELECT event_id, event_type,
-        |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        | FROM events WHERE value IS NOT NULL),
-        |t AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nt,
-        |      CAST(sum(cents) AS BIGINT) AS sc FROM ev GROUP BY 1),
-        |g AS (SELECT CAST(count(*) AS BIGINT) AS nn,
-        |      CAST(sum(cents) AS BIGINT) AS ss FROM ev)
-        |SELECT event_id, ev.event_type,
-        | round(CAST(cents AS DOUBLE) / 100.0, 2) AS value,
-        | round(CAST((sc - cents) * nn + 10 * ss AS DOUBLE)
-        |   / CAST((nt - 1 + 10) * nn AS DOUBLE) / 100.0, 6) AS te_loo
-        |FROM ev JOIN t USING (event_type) CROSS JOIN g
-        |WHERE event_id < 2000 ORDER BY event_id""".stripMargin,
-    "q_shuffle_quality" ->
+        |ORDER BY p1 * p1 + p2 * p2 DESC, c LIMIT 10""".stripMargin),
+    // Farthest-first k-center coreset over int8 codes (exact integer d²).
+    // same int8 codes, same integer d², greedy rounds unrolled
+    Q("q_kcenter_coreset", { (s, d) =>
+      kCenterCoreset(Tables.embeddings(s, d)) }, {
+      def roundSql(t: Int) =
+        s"""c$t AS (
+           | SELECT vec_id AS cid, codes AS ccodes, n2 AS n2c,
+           |  d2min AS dsel
+           | FROM md${t - 1} ORDER BY d2min DESC, vec_id LIMIT 1),
+           |md$t AS (
+           | SELECT m.vec_id, m.codes, m.n2,
+           |  least(m.d2min, m.n2
+           |   - 2 * CAST(coalesce(${intDotSql("m.codes", "ccodes")}, 0)
+           |      AS BIGINT) + n2c) AS d2min
+           | FROM md${t - 1} m CROSS JOIN c$t)""".stripMargin
+      s"""WITH pts AS (
+         | SELECT vec_id, codes,
+         |  CAST(coalesce(${intDotSql("codes", "codes")}, 0) AS BIGINT)
+         |   AS n2
+         | FROM (SELECT vec_id,
+         |   ${codesSql("embedding", scaleSql("embedding"))} AS codes
+         |  FROM embeddings)),
+         |c1 AS (SELECT vec_id AS cid, codes AS ccodes, n2 AS n2c
+         |       FROM pts ORDER BY vec_id LIMIT 1),
+         |md1 AS (
+         | SELECT p.vec_id, p.codes, p.n2,
+         |  p.n2 - 2 * CAST(coalesce(${intDotSql("p.codes", "ccodes")}, 0)
+         |     AS BIGINT) + n2c AS d2min
+         | FROM pts p CROSS JOIN c1),
+         |${(2 to 5).map(roundSql).mkString(",\n")},
+         |rad AS (SELECT CAST(max(d2min) AS BIGINT) AS radius_d2 FROM md5),
+         |ctr AS (
+         | SELECT 1 AS step, cid AS center_id,
+         |  CAST(NULL AS BIGINT) AS d2_selected FROM c1
+         | ${(2 to 5).map(t =>
+            s"UNION ALL SELECT $t, cid, CAST(dsel AS BIGINT) FROM c$t")
+            .mkString("\n ")})
+         |SELECT CAST(step AS INTEGER) AS step, center_id, d2_selected,
+         | radius_d2
+         |FROM ctr CROSS JOIN rad ORDER BY step""".stripMargin
+    }),
+    // Source-decorrelation audit of the epoch-shuffle training order.
+    Q("q_shuffle_quality", { (s, d) =>
+      shuffleQuality(Tables.documents(s, d)) },
       """WITH x AS (
         | SELECT d.doc_id, d.source, e.epoch,
         |  md5(concat_ws(':', e.epoch, d.doc_id)) AS h
@@ -1391,21 +1109,94 @@ object Training {
         | round(CAST(same_src_pairs AS DOUBLE) / n_pairs, 6) AS obs_rate,
         | round(er, 6) AS exp_rate,
         | round(CAST(same_src_pairs AS DOUBLE) / n_pairs / er, 6) AS mix_ratio
-        |FROM pe CROSS JOIN er ORDER BY epoch""".stripMargin,
-    "q_epoch_shuffle" ->
-      """WITH x AS (
-        | SELECT d.doc_id, e.epoch,
-        |  md5(concat_ws(':', e.epoch, d.doc_id)) AS h
-        | FROM documents d CROSS JOIN range(1, 3) e(epoch)),
-        |y AS (
-        | SELECT doc_id, epoch,
-        |  CAST(('0x' || substr(h, 1, 4)) AS BIGINT) % 8 AS shard, h
-        | FROM x)
-        |SELECT epoch, shard, doc_id,
-        | CAST(row_number() OVER (PARTITION BY epoch, shard ORDER BY h, doc_id)
-        |  AS INTEGER) AS rank_in_shard
-        |FROM y ORDER BY epoch, shard, rank_in_shard""".stripMargin,
-    "q_pack_sequences" ->
+        |FROM pe CROSS JOIN er ORDER BY epoch""".stripMargin),
+    Q("q_woe_iv", { (s, d) => woeIv(Tables.documents(s, d)) },
+      """WITH b AS (
+        | SELECT bin, CAST(count(*) AS BIGINT) AS n,
+        |  CAST(sum(p) + 1 AS BIGINT) AS g,
+        |  CAST(count(*) - sum(p) + 1 AS BIGINT) AS bd
+        | FROM (SELECT CAST(n_chars AS BIGINT) // 64 AS bin,
+        |        CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS p
+        |       FROM documents
+        |       WHERE lang IS NOT NULL AND n_chars IS NOT NULL)
+        | GROUP BY 1),
+        |tot AS (SELECT CAST(sum(g) AS BIGINT) AS gg,
+        |        CAST(sum(bd) AS BIGINT) AS bb FROM b),
+        |terms AS (
+        | SELECT bin, n AS n_docs, g - 1 AS n_pos, bd - 1 AS n_neg,
+        |  round(ln((CAST(g AS DOUBLE) / CAST(gg AS DOUBLE))
+        |    / (CAST(bd AS DOUBLE) / CAST(bb AS DOUBLE))), 6) AS woe,
+        |  CAST(round((CAST(g AS DOUBLE) / CAST(gg AS DOUBLE)
+        |     - CAST(bd AS DOUBLE) / CAST(bb AS DOUBLE))
+        |    * ln((CAST(g AS DOUBLE) / CAST(gg AS DOUBLE))
+        |      / (CAST(bd AS DOUBLE) / CAST(bb AS DOUBLE))), 6)
+        |   AS DECIMAL(18,6)) AS iv_term
+        | FROM b CROSS JOIN tot),
+        |iv AS (SELECT CAST(sum(iv_term) AS DOUBLE) AS iv_total FROM terms)
+        |SELECT bin, n_docs, n_pos, n_neg, woe,
+        | CAST(iv_term AS DOUBLE) AS iv_term, round(iv_total, 6) AS iv_total
+        |FROM terms CROSS JOIN iv ORDER BY bin""".stripMargin),
+    // Bradley–Terry source-strength tournament over rank-matched duels.
+    Q("q_bt_strength", { (s, d) => btStrength(Tables.documents(s, d)) }, {
+      val iters = (1 to 3).map(btIterSql).mkString(",\n")
+      s"""WITH ranked AS (
+         | SELECT lang, source, n_chars,
+         |  row_number() OVER (PARTITION BY lang, source ORDER BY doc_id)
+         |   AS rn
+         | FROM documents),
+         |duel AS (
+         | SELECT a.source AS si, b.source AS sj,
+         |  CASE WHEN a.n_chars >= b.n_chars THEN 1 ELSE 0 END AS wa
+         | FROM ranked a JOIN ranked b
+         |  ON a.lang = b.lang AND a.rn = b.rn AND a.source < b.source),
+         |agg AS (
+         | SELECT si, sj, count(*) AS n, sum(wa) AS w FROM duel
+         | GROUP BY 1, 2),
+         |dir AS (
+         | SELECT si AS i, sj AS j, n, w FROM agg
+         | UNION ALL SELECT sj, si, n, n - w FROM agg),
+         |wins AS (SELECT i, sum(w) AS tw, sum(n) AS tn FROM dir GROUP BY 1),
+         |p0 AS (SELECT i AS s, CAST(1000000 AS BIGINT) AS p FROM wins),
+         |$iters
+         |SELECT w.i AS source, CAST(w.tn AS BIGINT) AS duels,
+         | CAST(w.tw AS BIGINT) AS wins, CAST(p.p AS BIGINT) AS strength
+         |FROM wins w JOIN p3 p ON w.i = p.s
+         |ORDER BY strength DESC, source""".stripMargin
+    }),
+    // Integer-exact per-label embedding outliers (Tukey fence on d²).
+    Q("q_embed_outliers", { (s, d) =>
+      embedOutliers(Tables.embeddings(s, d))
+    },
+      s"""WITH q AS (
+         | SELECT vec_id, label,
+         |  ${codesSql("embedding", scaleSql("embedding"))} AS codes
+         | FROM embeddings),
+         |ex AS (
+         | SELECT vec_id, label, t.i - 1 AS pos, codes[t.i] AS c
+         | FROM q CROSS JOIN unnest(range(1, len(codes) + 1)) AS t(i)),
+         |cent AS (
+         | SELECT label, pos, (sum(c + 127) // count(*)) - 127 AS m
+         | FROM ex GROUP BY 1, 2),
+         |d2 AS (
+         | SELECT e.vec_id, e.label, sum((e.c - c.m) * (e.c - c.m)) AS d2
+         | FROM ex e JOIN cent c ON e.label = c.label AND e.pos = c.pos
+         | GROUP BY 1, 2),
+         |fen AS (
+         | SELECT label,
+         |  quantile_cont(d2, 0.75)
+         |   + 1.5 * (quantile_cont(d2, 0.75) - quantile_cont(d2, 0.25))
+         |   AS fence
+         | FROM d2 GROUP BY 1)
+         |SELECT d.label, d.vec_id, CAST(d.d2 AS BIGINT) AS d2,
+         | round(f.fence, 6) AS fence
+         |FROM d2 d JOIN fen f ON d.label = f.label
+         |WHERE CAST(d.d2 AS DOUBLE) > f.fence
+         |ORDER BY d.label, d.vec_id""".stripMargin),
+    // Concat-and-chunk packing of the documents table: 512-token budget,
+    // 8 shards. Returns the per-pack contract rows.
+    Q("q_pack_sequences", { (s, d) =>
+      packSummary(Tables.documents(s, d)).orderBy("pack_id")
+    },
       s"""WITH toks AS (
          | SELECT doc_id, $tokensSql AS n_tokens, doc_id % 8 AS shard
          | FROM documents),
@@ -1419,8 +1210,37 @@ object Training {
          |SELECT pack_id, count(*) AS n_docs,
          | CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
          | min(doc_id) AS first_doc, max(doc_id) AS last_doc
-         |FROM assigned GROUP BY pack_id ORDER BY pack_id""".stripMargin,
-    "q_length_buckets" ->
+         |FROM assigned GROUP BY pack_id ORDER BY pack_id""".stripMargin),
+    // Per-vector int8 quantization artifacts: scale + integer code sums
+    // (codes themselves are list-typed; the sums are the cross-engine
+    // checkable projection of them).
+    Q("q_embed_quant", { (s, d) =>
+      // single-row-group local table: spread before the per-vector
+      // quantize + two 64-term folds, which otherwise run in ONE task
+      // (stage profile: the whole query was 2 sequential single-task
+      // stages, ~3 s of single-threaded CPU). At cluster scale the scan
+      // is already many-partition; the raw-row shuffle is noise.
+      quantizeEmbeddings(Tables.embeddings(s, d)
+          .repartition(s.sparkContext.defaultParallelism))
+        .select(col("vec_id"), col("scale"),
+          aggregate(col("codes"), lit(0L), (a, v) => a + v).as("code_sum"),
+          intDot(col("codes"), col("codes")).as("code_norm2"))
+        .orderBy("vec_id")
+    },
+      s"""WITH q AS (
+         | SELECT vec_id, ${scaleSql("embedding")} AS sc,
+         |  ${codesSql("embedding", scaleSql("embedding"))} AS codes
+         | FROM embeddings)
+         |SELECT vec_id, round(sc, 6) AS scale,
+         | CAST(coalesce(list_sum(codes), 0) AS BIGINT) AS code_sum,
+         | CAST(coalesce(${intDotSql("codes", "codes")}, 0) AS BIGINT) AS code_norm2
+         |FROM q ORDER BY vec_id""".stripMargin),
+    // Sequence-length bucket report: 16-wide capacity buckets (sized to
+    // this corpus' 10-99-token docs; production would use 128) with
+    // per-bucket padding efficiency.
+    Q("q_length_buckets", { (s, d) =>
+      lengthBuckets(Tables.documents(s, d))
+    },
       s"""WITH t AS (
          | SELECT greatest(CAST($tokensSql AS BIGINT), 1) AS t FROM documents),
          |b AS (
@@ -1430,17 +1250,14 @@ object Training {
          | CAST(sum(t) AS BIGINT) AS total_tokens,
          | round(CAST(sum(t) AS DOUBLE) /
          |   CAST(count(*) * capacity AS DOUBLE), 6) AS pad_efficiency
-         |FROM b GROUP BY capacity ORDER BY capacity""".stripMargin,
-    "q_embed_quant" ->
-      s"""WITH q AS (
-         | SELECT vec_id, ${scaleSql("embedding")} AS sc,
-         |  ${codesSql("embedding", scaleSql("embedding"))} AS codes
-         | FROM embeddings)
-         |SELECT vec_id, round(sc, 6) AS scale,
-         | CAST(coalesce(list_sum(codes), 0) AS BIGINT) AS code_sum,
-         | CAST(coalesce(${intDotSql("codes", "codes")}, 0) AS BIGINT) AS code_norm2
-         |FROM q ORDER BY vec_id""".stripMargin,
-    "q_sim_topk_quant" ->
+         |FROM b GROUP BY capacity ORDER BY capacity""".stripMargin),
+    // Quantized retrieval: the same 5 queries as the float top-k suite,
+    // ranked by exact integer dot product.
+    Q("q_sim_topk_quant", { (s, d) =>
+      val emb = Tables.embeddings(s, d)
+      quantizedTopK(emb.filter(col("vec_id") < 5), emb, 5)
+        .orderBy("query_id", "rank")
+    },
       s"""WITH z AS (
          | SELECT vec_id, codes,
          |  CAST(coalesce(${intDotSql("codes", "codes")}, 0) AS BIGINT) AS n2
@@ -1459,6 +1276,170 @@ object Training {
          | SELECT query_id, corpus_id, qsim,
          |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY qsim DESC, corpus_id) AS INTEGER) AS rank
          | FROM scored)
-         |SELECT * FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+         |SELECT * FROM ranked WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin),
+    // PACK BOUNDARY MAP — what the dataloader actually consumes beside
+    // the pack summary: per pack, the ordered (doc_id@start_token) list
+    // marking where each document begins, i.e. the attention-boundary /
+    // loss-mask offsets for concat-and-chunk training. Emitted as a
+    // canonical ';'-joined string (the q_collect_ops array idiom) so the
+    // oracle hash is order-stable. Same shard-partitioned windows as
+    // q_pack_sequences — no global sort.
+    Q("q_pack_boundaries", { (s, d) =>
+      packAssignments(Tables.documents(s, d), 512, 8)
+        .groupBy("pack_id")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(col("n_tokens")).as("total_tokens"),
+          array_join(transform(
+            array_sort(collect_list(struct(col("doc_id"), col("start_tok")))),
+            e => concat_ws("@", e.getField("doc_id"), e.getField("start_tok"))),
+            ";").as("boundaries"))
+        .orderBy("pack_id")
+    },
+      s"""WITH toks AS (
+         | SELECT doc_id, $tokensSql AS n_tokens, doc_id % 8 AS shard
+         | FROM documents),
+         |a AS (
+         | SELECT doc_id, n_tokens, shard,
+         |  CAST(coalesce(sum(n_tokens) OVER (
+         |    PARTITION BY shard ORDER BY doc_id
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+         |   AS BIGINT) AS cb
+         | FROM toks),
+         |p AS (
+         | SELECT doc_id, n_tokens,
+         |  shard * 1000000 + CAST(floor(cb / 512.0) AS BIGINT) AS pack_id,
+         |  cb % 512 AS start_tok
+         | FROM a)
+         |SELECT pack_id, count(*) AS n_docs,
+         | CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
+         | array_to_string(list(doc_id || '@' || start_tok ORDER BY doc_id),
+         |  ';') AS boundaries
+         |FROM p GROUP BY pack_id ORDER BY pack_id""".stripMargin),
+
+    // FEATURE-HASHING COLLISION AUDIT (the hashing trick, Weinberger et
+    // al. 2009): categorical features hash into a fixed D=64 bucket
+    // space with a ±1 sign bit. Before training on hashed features, a
+    // pipeline audits the space: per bucket, how many DISTINCT raw
+    // features collided there, the row mass, and the net signed mass
+    // (the sign trick makes colliding features cancel in expectation —
+    // net ≈ 0 on balanced collisions is the property being bought).
+    // Plan: feature extraction is a map-side explode of 3 pure-column
+    // expressions; the audit aggregates at feature cardinality then
+    // bucket cardinality (64 rows) — two map-side-combined shuffles of
+    // dictionary-class frames, never row-cardinality state.
+    Q("q_feature_hash", { (s, d) =>
+      val feats = Tables.events(s, d).select(explode(array(
+          concat(lit("type:"), col("event_type")),
+          concat(lit("dow:"), weekday(col("ts")) + 1),
+          concat(lit("hour:"), hour(col("ts"))))).as("feat"))
+        .groupBy("feat").agg(count(lit(1)).as("n"))
+        .select(col("feat"), col("n"),
+          (conv(substring(md5(col("feat")), 1, 4), 16, 10)
+            .cast("long") % 64).as("bucket"),
+          when(conv(substring(md5(col("feat")), 5, 1), 16, 10)
+            .cast("long") % 2 === 0, 1L).otherwise(-1L).as("sign"))
+      feats.groupBy("bucket")
+        .agg(count(lit(1)).as("n_features"),
+          sum(col("n")).as("n_rows"),
+          sum(col("sign") * col("n")).as("net_signed"))
+        .withColumn("has_collision", col("n_features") > 1)
+        .orderBy("bucket")
+    },
+      """WITH f AS (
+        | SELECT unnest(['type:' || event_type,
+        |   'dow:' || CAST(isodow(ts) AS INTEGER),
+        |   'hour:' || CAST(hour(ts) AS INTEGER)]) AS feat
+        | FROM events),
+        |fc AS (SELECT feat, CAST(count(*) AS BIGINT) AS n FROM f GROUP BY 1),
+        |h AS (
+        | SELECT feat, n,
+        |  CAST(('0x' || substr(md5(feat), 1, 4)) AS BIGINT) % 64 AS bucket,
+        |  CASE WHEN CAST(('0x' || substr(md5(feat), 5, 1)) AS BIGINT) % 2 = 0
+        |   THEN 1 ELSE -1 END AS sign
+        | FROM fc)
+        |SELECT bucket, CAST(count(*) AS BIGINT) AS n_features,
+        | CAST(sum(n) AS BIGINT) AS n_rows,
+        | CAST(sum(sign * n) AS BIGINT) AS net_signed,
+        | count(*) > 1 AS has_collision
+        |FROM h GROUP BY 1 ORDER BY bucket""".stripMargin),
+
+    // LEAVE-ONE-OUT TARGET ENCODING with smoothing (Micci-Barreca 2001)
+    // — the leakage-safe categorical feature: each row's encoding is the
+    // smoothed mean of its category's target EXCLUDING the row itself
+    // (in-fold mean would leak the label; the m=10 prior shrinks rare
+    // categories toward the global mean). Exact-integer rational:
+    // te = ((sc_t − own)·N + m·S) / ((n_t − 1 + m)·N), one double
+    // division at the end — bit-stable cross-engine. Scale: per-row map
+    // over the fact with a category-cardinality broadcast and a scalar
+    // broadcast; output capped to event_id < 2000 (stats come from the
+    // FULL table — the cap only bounds the verify frame).
+    Q("q_target_encode", { (s, d) =>
+      val m = 10L
+      val ev = Tables.events(s, d).filter(col("value").isNotNull)
+        .select(col("event_id"), col("event_type"),
+          (col("value").cast(org.apache.spark.sql.types.DecimalType(18, 2))
+            * 100).cast("long").as("cents"))
+      val byT = ev.groupBy("event_type")
+        .agg(count(lit(1)).as("nt"), sum(col("cents")).as("sc"))
+      val tot = ev.agg(count(lit(1)).as("nn"), sum(col("cents")).as("ss"))
+      ev.join(broadcast(byT), Seq("event_type")).crossJoin(broadcast(tot))
+        .filter(col("event_id") < 2000)
+        .select(col("event_id"), col("event_type"),
+          round(col("cents").cast("double") / 100.0, 2).as("value"),
+          round(((col("sc") - col("cents")) * col("nn") +
+              lit(m) * col("ss")).cast("double") /
+            ((col("nt") - 1 + m) * col("nn")).cast("double") / 100.0, 6)
+            .as("te_loo"))
+        .orderBy("event_id")
+    },
+      """WITH ev AS (
+        | SELECT event_id, event_type,
+        |  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
+        | FROM events WHERE value IS NOT NULL),
+        |t AS (SELECT event_type, CAST(count(*) AS BIGINT) AS nt,
+        |      CAST(sum(cents) AS BIGINT) AS sc FROM ev GROUP BY 1),
+        |g AS (SELECT CAST(count(*) AS BIGINT) AS nn,
+        |      CAST(sum(cents) AS BIGINT) AS ss FROM ev)
+        |SELECT event_id, ev.event_type,
+        | round(CAST(cents AS DOUBLE) / 100.0, 2) AS value,
+        | round(CAST((sc - cents) * nn + 10 * ss AS DOUBLE)
+        |   / CAST((nt - 1 + 10) * nn AS DOUBLE) / 100.0, 6) AS te_loo
+        |FROM ev JOIN t USING (event_type) CROSS JOIN g
+        |WHERE event_id < 2000 ORDER BY event_id""".stripMargin),
+
+    // PER-EPOCH DETERMINISTIC SHUFFLE + SHARD PLAN — pretraining wants a
+    // different global-looking data order every epoch, reproducible
+    // across reruns and resumable mid-epoch. A true global shuffle is a
+    // total ORDER BY (single-partition window at 100 TB — a non-starter);
+    // the scalable form is hash-shard-then-local-rank: shard =
+    // md5(epoch:doc) bucket, rank = row_number WITHIN (epoch, shard) by
+    // the same hash. Each worker streams its shard in rank order; the
+    // composition is epoch-keyed, so epoch 2's shards and orders are
+    // uncorrelated with epoch 1's. Every window is shard-local —
+    // partitioned, parallel, no global sort anywhere.
+    Q("q_epoch_shuffle", { (s, d) =>
+      val h = md5(concat_ws(":", col("epoch"), col("doc_id")))
+      Tables.documents(s, d).select(col("doc_id"))
+        .select(col("doc_id"), explode(sequence(lit(1), lit(2))).as("epoch"))
+        .select(col("doc_id"), col("epoch").cast("long").as("epoch"), h.as("h"))
+        .withColumn("shard",
+          conv(substring(col("h"), 1, 4), 16, 10).cast("long") % 8)
+        .withColumn("rank_in_shard", row_number().over(
+          Window.partitionBy("epoch", "shard").orderBy("h", "doc_id")))
+        .select(col("epoch"), col("shard"), col("doc_id"), col("rank_in_shard"))
+        .orderBy("epoch", "shard", "rank_in_shard")
+    },
+      """WITH x AS (
+        | SELECT d.doc_id, e.epoch,
+        |  md5(concat_ws(':', e.epoch, d.doc_id)) AS h
+        | FROM documents d CROSS JOIN range(1, 3) e(epoch)),
+        |y AS (
+        | SELECT doc_id, epoch,
+        |  CAST(('0x' || substr(h, 1, 4)) AS BIGINT) % 8 AS shard, h
+        | FROM x)
+        |SELECT epoch, shard, doc_id,
+        | CAST(row_number() OVER (PARTITION BY epoch, shard ORDER BY h, doc_id)
+        |  AS INTEGER) AS rank_in_shard
+        |FROM y ORDER BY epoch, shard, rank_in_shard""".stripMargin)
   )
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.Scratch
-import graft.Tables
+import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * (S5). Kafka-shaped streaming sources/sinks (S8/S9) live in
   * graft.streaming.
   */
-object Sources {
+object Sources extends QueryModule {
 
   /** S5 — explicit StructType contract for the CSV round-trip (the
     * reference's DDL-declared schemas; dags/etl_crash_traffic.py:50-147).
@@ -551,37 +551,16 @@ object Sources {
       .orderBy("mode")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_join_strategy_audit" -> joinStrategyAudit _,
-    "q_table_fingerprint" -> tableFingerprint _,
-    "q_s1_csv_roundtrip" -> csvRoundtrip _,
-    "q_csv_quoted" -> csvQuotedRoundtrip _,
-    "q_csv_latin1" -> csvLatin1Roundtrip _,
-    "q_orc_roundtrip" -> orcRoundtrip _,
-    "q_xml_roundtrip" -> xmlRoundtrip _,
-    "q_s4_idempotent_write" -> idempotentWriteRoundtrip _,
-    "q_jdbc_roundtrip" -> jdbcRoundtrip _,
-    "q_jsonl_roundtrip" -> jsonlRoundtrip _,
-    "q_binary_ingest" -> binaryIngest _,
-    "q_bucketed_join" -> bucketedJoin _,
-    "q_partition_pruning" -> partitionedPrunedScan _,
-    "q_partition_overwrite" -> partitionDynamicOverwrite _,
-    "q_erasure_rewrite" -> erasureRewrite _,
-    "q_compaction" -> compactionRoundtrip _,
-    "q_corrupt_records" -> corruptRecordScan _,
-    "q_schema_merge" -> schemaMergeScan _
-  )
-
-  def oracles: Map[String, String] = Map(
+  def entries: Seq[Q] = Seq(
     // expected-strategy pin: the dimension must broadcast under the
     // default threshold and sort-merge when broadcasting is disabled
-    "q_join_strategy_audit" ->
+    Q("q_join_strategy_audit", joinStrategyAudit _,
       """SELECT * FROM (VALUES
         | ('broadcast_disabled', CAST(0 AS BIGINT), CAST(1 AS BIGINT)),
         | ('broadcast_enabled', CAST(1 AS BIGINT), CAST(0 AS BIGINT)))
         | t(mode, n_broadcast_hash_joins, n_sort_merge_joins)
-        |ORDER BY mode""".stripMargin,
-    "q_table_fingerprint" ->
+        |ORDER BY mode""".stripMargin),
+    Q("q_table_fingerprint", tableFingerprint _,
       """SELECT CAST(count(*) AS BIGINT) AS n_rows,
         | CAST(sum(CAST('0x' || substr(md5(concat_ws(':',
         |   CAST(o_orderkey AS VARCHAR), CAST(o_custkey AS VARCHAR),
@@ -589,37 +568,11 @@ object Sources {
         |   CAST(CAST(round(o_totalprice * 100, 0) AS BIGINT) AS VARCHAR),
         |   strftime(o_orderdate, '%Y-%m-%d'), o_orderpriority)), 1, 15)
         |  AS BIGINT)) AS VARCHAR) AS fingerprint
-        |FROM orders""".stripMargin,
-    "q_xml_roundtrip" ->
-      """SELECT n_regionkey, count(*) AS cnt,
-        | min(n_name) AS first_name, max(n_name) AS last_name
-        |FROM nation GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_orc_roundtrip" ->
-      """SELECT l_returnflag, count(*) AS cnt,
-        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
-        | min(l_shipdate) AS first_ship
-        |FROM lineitem WHERE l_quantity > 40
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_s1_csv_roundtrip" ->
+        |FROM orders""".stripMargin),
+    Q("q_s1_csv_roundtrip", csvRoundtrip _,
       """SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderdate
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "q_s4_idempotent_write" ->
-      """SELECT o_orderkey, o_orderstatus FROM orders ORDER BY o_orderkey""".stripMargin,
-    // the JDBC round-trip must preserve values exactly: oracle = the same
-    // aggregate straight off the parquet source
-    "q_jdbc_roundtrip" ->
-      """SELECT n_regionkey, count(*) AS cnt, max(n_name) AS max_name
-        |FROM nation GROUP BY 1 ORDER BY 1""".stripMargin,
-    // same plant off the parquet source — the CSV trip must be
-    // value-invisible, latin1 code points included
-    "q_csv_latin1" ->
-      """WITH p AS (
-        | SELECT doc_id, 'café niño Çédille ü: ' || text AS text
-        | FROM documents WHERE doc_id < 30)
-        |SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
-        | md5(text) AS digest
-        |FROM p ORDER BY doc_id""".stripMargin,
-    "q_csv_quoted" ->
+        |FROM orders ORDER BY o_orderkey""".stripMargin),
+    Q("q_csv_quoted", csvQuotedRoundtrip _,
       """WITH p AS (
         | SELECT doc_id, CASE
         |   WHEN doc_id % 3 = 0 THEN 'a,b "quoted" c' || chr(10) || 'next line,' || text
@@ -628,46 +581,64 @@ object Sources {
         | FROM documents WHERE doc_id < 50)
         |SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
         | md5(text) AS digest
-        |FROM p ORDER BY doc_id""".stripMargin,
-    // per-file byte-identity vs the source rows: md5 over UTF-8 bytes is
-    // the same value both engines compute over this ASCII corpus
-    "q_binary_ingest" ->
-      """SELECT doc_id, CAST(length(text) AS BIGINT) AS n_bytes,
+        |FROM p ORDER BY doc_id""".stripMargin),
+    // same plant off the parquet source — the CSV trip must be
+    // value-invisible, latin1 code points included
+    Q("q_csv_latin1", csvLatin1Roundtrip _,
+      """WITH p AS (
+        | SELECT doc_id, 'café niño Çédille ü: ' || text AS text
+        | FROM documents WHERE doc_id < 30)
+        |SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
         | md5(text) AS digest
-        |FROM documents WHERE doc_id < 20 ORDER BY doc_id""".stripMargin,
-    "q_jsonl_roundtrip" ->
+        |FROM p ORDER BY doc_id""".stripMargin),
+    Q("q_orc_roundtrip", orcRoundtrip _,
+      """SELECT l_returnflag, count(*) AS cnt,
+        | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue,
+        | min(l_shipdate) AS first_ship
+        |FROM lineitem WHERE l_quantity > 40
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Q("q_xml_roundtrip", xmlRoundtrip _,
+      """SELECT n_regionkey, count(*) AS cnt,
+        | min(n_name) AS first_name, max(n_name) AS last_name
+        |FROM nation GROUP BY 1 ORDER BY 1""".stripMargin),
+    Q("q_s4_idempotent_write", idempotentWriteRoundtrip _,
+      """SELECT o_orderkey, o_orderstatus FROM orders ORDER BY o_orderkey""".stripMargin),
+    // the JDBC round-trip must preserve values exactly: oracle = the same
+    // aggregate straight off the parquet source
+    Q("q_jdbc_roundtrip", jdbcRoundtrip _,
+      """SELECT n_regionkey, count(*) AS cnt, max(n_name) AS max_name
+        |FROM nation GROUP BY 1 ORDER BY 1""".stripMargin),
+    Q("q_jsonl_roundtrip", jsonlRoundtrip _,
       """SELECT lang, count(*) AS cnt,
         | CAST(sum(length(text)) AS BIGINT) AS total_chars,
         | min(doc_id) AS min_id, max(doc_id) AS max_id
-        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_bucketed_join" ->
+        |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin),
+    // per-file byte-identity vs the source rows: md5 over UTF-8 bytes is
+    // the same value both engines compute over this ASCII corpus
+    Q("q_binary_ingest", binaryIngest _,
+      """SELECT doc_id, CAST(length(text) AS BIGINT) AS n_bytes,
+        | md5(text) AS digest
+        |FROM documents WHERE doc_id < 20 ORDER BY doc_id""".stripMargin),
+    Q("q_bucketed_join", bucketedJoin _,
       """SELECT o_orderstatus, count(*) AS cnt,
         | CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // compaction must not change content: oracle = the same checksum
-    // aggregate off the source, with the fewer-files effect pinned TRUE
-    "q_compaction" ->
-      """SELECT count(*) AS cnt,
-        | CAST(sum(length(text)) AS BIGINT) AS total_chars,
-        | min(doc_id) AS min_id, max(doc_id) AS max_id,
-        | TRUE AS compacted
-        |FROM documents""".stripMargin,
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
     // partition pruning must not change results: oracle = the same year
     // slice straight off the unpartitioned source
-    "q_partition_pruning" ->
+    Q("q_partition_pruning", partitionedPrunedScan _,
       """SELECT o_orderstatus, count(*) AS cnt,
         | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
         |FROM orders WHERE year(o_orderdate) = 1995
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_partition_overwrite" ->
+        |GROUP BY 1 ORDER BY 1""".stripMargin),
+    Q("q_partition_overwrite", partitionDynamicOverwrite _,
       """SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year,
         | count(*) AS cnt,
         | CAST(SUM(CAST(CASE WHEN year(o_orderdate) = 1995
         |   THEN o_totalprice * 2 ELSE o_totalprice END
         |  AS DECIMAL(18,2))) AS DOUBLE) AS total
-        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
-    "q_erasure_rewrite" ->
+        |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin),
+    Q("q_erasure_rewrite", erasureRewrite _,
       """WITH b AS (
         | SELECT CAST(year(o_orderdate) AS INTEGER) AS o_year, o_custkey
         | FROM orders),
@@ -676,13 +647,21 @@ object Sources {
         | CAST(count(CASE WHEN o_custkey % 10000 <> 7 THEN 1 END) AS BIGINT) AS cnt,
         | CAST(0 AS BIGINT) AS n_subject,
         | o_year IN (SELECT o_year FROM a) AS rewritten
-        |FROM b GROUP BY o_year ORDER BY o_year""".stripMargin,
-    "q_corrupt_records" ->
+        |FROM b GROUP BY o_year ORDER BY o_year""".stripMargin),
+    // compaction must not change content: oracle = the same checksum
+    // aggregate off the source, with the fewer-files effect pinned TRUE
+    Q("q_compaction", compactionRoundtrip _,
+      """SELECT count(*) AS cnt,
+        | CAST(sum(length(text)) AS BIGINT) AS total_chars,
+        | min(doc_id) AS min_id, max(doc_id) AS max_id,
+        | TRUE AS compacted
+        |FROM documents""".stripMargin),
+    Q("q_corrupt_records", corruptRecordScan _,
       """SELECT count(*) AS good_rows, CAST(2 AS BIGINT) AS corrupt_rows
-        |FROM orders""".stripMargin,
-    "q_schema_merge" ->
+        |FROM orders""".stripMargin),
+    Q("q_schema_merge", schemaMergeScan _,
       """SELECT o_orderkey,
         | CASE WHEN o_orderkey % 2 = 1 THEN o_orderstatus END AS o_orderstatus
-        |FROM orders ORDER BY o_orderkey""".stripMargin
+        |FROM orders ORDER BY o_orderkey""".stripMargin)
   )
 }

@@ -1,41 +1,41 @@
 package graft
 
 import graft.operators.BboxSummary
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
 
-/** Contract-level assertions: the reference's pivot column contract
-  * (test/test_bbox.py:36), watermark late-data semantics, and
-  * partition-pruning behavior.
+/** Contract-level assertions: the query registry's guards, the
+  * reference's pivot column contract (test/test_bbox.py:36), watermark
+  * late-data semantics, and partition-pruning behavior.
   */
 class ContractSpec extends SparkSpec {
   import spark.implicits._
 
-  test("driver contract: oracles and queries align, no cross-module name collisions") {
-    // a typo'd oracle key silently downgrades its query to a rows-only
-    // check at the driver; a duplicate query name across modules silently
-    // drops one of the two in the ++-merged map — both must be loud here
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((o -- q).isEmpty, s"oracles without a query: ${(o -- q).mkString(", ")}")
-    assert((q -- o).isEmpty, s"queries without an oracle: ${(q -- o).mkString(", ")}")
-    val parts = Seq(
-      graft.sources.Sources.queries, graft.operators.Relational.queries,
-      graft.operators.StarPipeline.queries, graft.operators.Topics.queries,
-      graft.operators.Analytics.queries, graft.operators.TextAnalysis.queries,
-      graft.operators.Dedup.queries, graft.operators.Similarity.queries,
-      graft.operators.Multimodal.queries, graft.streaming.StreamOps.queries,
-      graft.operators.BboxSummary.queries, graft.operators.TemporalJoins.queries,
-      graft.operators.Pipeline.queries, graft.operators.Training.queries,
-      graft.operators.Curation.queries, graft.operators.Scd.queries,
-      graft.operators.Sketches.queries, graft.operators.SqlSurface.queries,
-      graft.operators.Retrieval.queries, graft.operators.Evolution.queries,
-      graft.operators.Graph.queries)
-    val names = parts.flatMap(_.keys)
-    val dupes = names.groupBy(identity).filter(_._2.size > 1).keys
-    assert(dupes.isEmpty, s"duplicate query names across modules: ${dupes.mkString(", ")}")
-    assert(names.size == q.size)
+  test("query registry: a name listed twice or a blank oracle fails, naming the query") {
+    // the engine's own registry builds: no name twice, no blank oracle
+    assert(SparkEntry.oracleSql.size == SparkEntry.queries.size)
+    val build: (SparkSession, String) => DataFrame = (s, _) => s.range(1).toDF()
+    def q(name: String, oracle: String = "SELECT 1"): Q = Q(name, build, oracle)
+    def module(qs: Q*): QueryModule = new QueryModule { def entries: Seq[Q] = qs }
+    def failure(body: => Any): String =
+      intercept[IllegalArgumentException](body).getMessage
+    // within one module: a Map literal would keep only the later q_a
+    val inModule = module(q("q_a"), q("q_b"), q("q_a", "SELECT 2"))
+    assert(failure(inModule.queries).contains("q_a"))
+    assert(failure(inModule.oracles).contains("q_a"))
+    // across modules, the way SparkEntry joins them
+    val across = Seq(module(q("q_a")), module(q("q_b"), q("q_a"))).flatMap(_.entries)
+    assert(failure(Q.queries(across)).contains("q_a"))
+    assert(failure(Q.oracles(across)).contains("q_a"))
+    // blank, and null (what a val in an initialisation cycle would hold)
+    assert(failure(module(q("q_a"), q("q_blank", " \n ")).oracles).contains("q_blank"))
+    assert(failure(module(q("q_null", null)).oracles).contains("q_null"))
+    // the query map renders no oracle
+    var rendered = 0
+    module(Q("q_lazy", build, { rendered += 1; "SELECT 1" })).queries
+    assert(rendered == 0)
   }
 
   test("bbox summary honors the reference's 21-column contract") {
