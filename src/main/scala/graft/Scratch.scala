@@ -13,4 +13,13 @@ object Scratch {
   val root: String = new java.io.File("target/scratch").getAbsolutePath
 
   def dir(name: String): String = s"$root/$name"
+
+  /** Delete `path` and everything under it; a missing path is a no-op. */
+  def clear(path: String): Unit = {
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete(): Unit
+    }
+    rm(new java.io.File(path))
+  }
 }

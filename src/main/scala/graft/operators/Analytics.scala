@@ -3742,19 +3742,17 @@ object Analytics extends QueryModule {
       }
       pv.put(rm, (sp / BigInt(stTot)).toLong): Unit
     }
-    val pfBoxed = pv.get("(none)")
+    // pv holds every removal whenever stTot > 0; stTot = 0 means no
+    // events, hence no removal besides "(none)" and no rows
+    val pf: Long = pv.get("(none)")
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val outRows: Seq[org.apache.spark.sql.Row] =
-      if (pfBoxed == null) Seq.empty // no "(none)" row ⇒ the cross join is empty
-      else {
-        val pf: Long = pfBoxed
-        removals.filter(_ != "(none)").toSeq.map { rm =>
-          val p: Long = pv.get(rm)
-          org.apache.spark.sql.Row(rm, pf / 1000000L, p / 1000000L,
-            if (pf > 0) java.lang.Long.valueOf(
-              (BigInt(pf - p) * BigInt(1000000) / BigInt(pf)).toLong)
-            else null)
-        }
+      removals.filter(_ != "(none)").toSeq.map { rm =>
+        val p: Long = pv.get(rm)
+        org.apache.spark.sql.Row(rm, pf / 1000000L, p / 1000000L,
+          if (pf > 0) java.lang.Long.valueOf(
+            (BigInt(pf - p) * BigInt(1000000) / BigInt(pf)).toLong)
+          else null)
       }
     spark.createDataFrame(
         java.util.Arrays.asList(outRows: _*),

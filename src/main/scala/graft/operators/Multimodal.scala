@@ -95,7 +95,7 @@ object Multimodal extends QueryModule {
     // one map-side-combined groupBy at content cardinality.
     Q("q_mm_dedup", { (s, d) =>
       val root = Scratch.dir("mm_blobs")
-      graft.sources.Sources.rmDir(root)
+      Scratch.clear(root)
       val rows = Tables.documents(s, d).filter(col("doc_id") < 24)
         .select("doc_id", "text").collect()
       def put(src: String, id: Long, text: String): Unit = {

@@ -26,14 +26,7 @@ object Pipeline extends QueryModule {
   /** Delete a scratch warehouse (fresh-run setup; the reference's DDL
     * CREATE-IF-NOT-EXISTS plays this role).
     */
-  def reset(warehouse: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    val dir = new java.io.File(warehouse)
-    if (dir.exists()) rm(dir)
-  }
+  def reset(warehouse: String): Unit = Scratch.clear(warehouse)
 
   val factKeys: Seq[String] = Seq("l_orderkey", "l_linenumber")
 

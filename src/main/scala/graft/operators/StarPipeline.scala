@@ -118,7 +118,8 @@ object StarPipeline extends QueryModule {
       |LEFT JOIN supplier s ON l.l_suppkey = s.s_suppkey
       |LEFT JOIN nation n ON s.s_nationkey = n.n_nationkey""".stripMargin
 
-  private def dimSql(name: String, keys: Seq[String]): String = {
+  private def dimSql(name: String): String = {
+    val keys = dimSpecs.toMap.apply(name)
     val k = keys.mkString(", ")
     // NULLS LAST pinned on both engines: Spark ASC defaults nulls-first,
     // DuckDB nulls-last (Star.buildDim uses asc_nulls_last to match).
@@ -128,19 +129,9 @@ object StarPipeline extends QueryModule {
        | FROM (SELECT DISTINCT $k FROM f))""".stripMargin
   }
 
-  private val dimSqlSpecs: Seq[(String, Seq[String])] = Seq(
-    "dim_date"     -> Seq("y", "m", "dom", "dayname"),
-    "dim_status"   -> Seq("o_orderstatus"),
-    "dim_priority" -> Seq("o_orderpriority"),
-    "dim_flags"    -> Seq("l_returnflag", "l_linestatus"),
-    "dim_part"     -> Seq("p_brand", "p_type"),
-    "dim_nation"   -> Seq("n_name"),
-    "dim_qty"      -> Seq("qty_bin"),
-    "dim_price"    -> Seq("price_band"))
-
   // The star-fact oracle's dim CTEs and FK joins
-  private def dimCtes: String = dimSqlSpecs.map { case (n, k) => dimSql(n, k) }.mkString(",\n")
-  private def joins: String = dimSqlSpecs.map { case (n, k) =>
+  private def dimCtes: String = dimSpecs.map { case (n, _) => dimSql(n) }.mkString(",\n")
+  private def joins: String = dimSpecs.map { case (n, k) =>
     // NULL-safe equality mirrors Star.resolveDims' `<=>` (the
     // reference's dict probe matches None keys too).
     val cond = k.map(c => s"f.$c IS NOT DISTINCT FROM $n.$c").mkString(" AND ")
@@ -165,19 +156,19 @@ object StarPipeline extends QueryModule {
       dims(s, d)("dim_date").orderBy("dim_date_id")
     },
       s"""WITH f AS ($flatFactSql),
-         |${dimSql("dim_date", Seq("y", "m", "dom", "dayname"))}
+         |${dimSql("dim_date")}
          |SELECT * FROM dim_date ORDER BY dim_date_id""".stripMargin),
     Q("q_star_dim_flags", { (s, d) =>
       dims(s, d)("dim_flags").orderBy("dim_flags_id")
     },
       s"""WITH f AS ($flatFactSql),
-         |${dimSql("dim_flags", Seq("l_returnflag", "l_linestatus"))}
+         |${dimSql("dim_flags")}
          |SELECT * FROM dim_flags ORDER BY dim_flags_id""".stripMargin),
     Q("q_star_dim_part", { (s, d) =>
       dims(s, d)("dim_part").orderBy("dim_part_id")
     },
       s"""WITH f AS ($flatFactSql),
-         |${dimSql("dim_part", Seq("p_brand", "p_type"))}
+         |${dimSql("dim_part")}
          |SELECT * FROM dim_part ORDER BY dim_part_id""".stripMargin)
   )
 }

@@ -115,12 +115,7 @@ object Sources extends QueryModule {
     */
   def idempotentWriteRoundtrip(s: SparkSession, d: String): DataFrame = {
     val path = Scratch.dir("idempotent_orders")
-    val dir = new java.io.File(path)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    if (dir.exists()) rm(dir)
+    Scratch.clear(path)
     val orders = Tables.orders(s, d).select("o_orderkey", "o_orderstatus")
     orders.filter(col("o_orderkey") % 2 === 0).write.parquet(path)
     graft.operators.Star.idempotentWrite(orders, path, Seq("o_orderkey"))
@@ -139,14 +134,7 @@ object Sources extends QueryModule {
     s.sql("DROP TABLE IF EXISTS o_bucketed")
     // the in-memory catalog forgets tables between sessions but their
     // warehouse directories persist — remove them or saveAsTable refuses
-    Seq("li_bucketed", "o_bucketed").foreach { t =>
-      val dir = new java.io.File(s"spark-warehouse/$t")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(): Unit
-      }
-      if (dir.exists()) rm(dir)
-    }
+    Seq("li_bucketed", "o_bucketed").foreach(t => Scratch.clear(s"spark-warehouse/$t"))
     // project before the bucketed write: the table carries what its
     // consumers join/aggregate on, not every source column
     Tables.lineitem(s, d).select("l_orderkey", "l_extendedprice")
@@ -173,7 +161,7 @@ object Sources extends QueryModule {
     */
   def jsonlRoundtrip(s: SparkSession, d: String): DataFrame = {
     val path = Scratch.dir("jsonl_docs")
-    rmDir(path)
+    Scratch.clear(path)
     Tables.documents(s, d)
       .select("doc_id", "lang", "source", "text")
       .write.json(path)
@@ -202,7 +190,7 @@ object Sources extends QueryModule {
     */
   def binaryIngest(s: SparkSession, d: String): DataFrame = {
     val dir = Scratch.dir("blobs")
-    rmDir(dir)
+    Scratch.clear(dir)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     // fixture: 20 small files on the driver (fixture setup, not the
     // operator — the read below is the distributed path)
@@ -265,7 +253,7 @@ object Sources extends QueryModule {
     */
   def partitionedPrunedScan(s: SparkSession, d: String): DataFrame = {
     val path = Scratch.dir("orders_by_year")
-    rmDir(path)
+    Scratch.clear(path)
     Tables.orders(s, d)
       .withColumn("o_year", year(col("o_orderdate")))
       .write.partitionBy("o_year").parquet(path)
@@ -297,7 +285,7 @@ object Sources extends QueryModule {
   def compactionRoundtrip(s: SparkSession, d: String): DataFrame = {
     val src = Scratch.dir("compact_src")
     val dst = Scratch.dir("compact_dst")
-    rmDir(src); rmDir(dst)
+    Scratch.clear(src); Scratch.clear(dst)
     Tables.documents(s, d).select("doc_id", "lang", "text")
       .repartition(32).write.parquet(src) // the accreted small files
     def parquetFiles(p: String): Seq[java.io.File] =
@@ -326,23 +314,19 @@ object Sources extends QueryModule {
     * reads the whole table back per year, so the oracle proves BOTH
     * effects at once: 1995 carries the restated (doubled) totals, and
     * every other year's rows and totals are bit-identical to the
-    * source. Config is restored after the write (no cross-query bleed).
+    * source. The mode is the write's own option, so the session's conf
+    * never changes (no cross-query bleed).
     */
   def partitionDynamicOverwrite(s: SparkSession, d: String): DataFrame = {
     val path = Scratch.dir("orders_dyn_overwrite")
-    rmDir(path)
+    Scratch.clear(path)
     val base = Tables.orders(s, d)
       .withColumn("o_year", year(col("o_orderdate")))
     base.write.partitionBy("o_year").parquet(path)
     val restated = base.filter(col("o_year") === 1995)
       .withColumn("o_totalprice", col("o_totalprice") * 2)
-    val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try restated.write.mode("overwrite").partitionBy("o_year").parquet(path)
-    finally prev match {
-      case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    restated.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("o_year").parquet(path)
     s.read.parquet(path)
       .groupBy(col("o_year"))
       .agg(count(lit(1)).as("cnt"),
@@ -365,7 +349,7 @@ object Sources extends QueryModule {
     */
   def erasureRewrite(s: SparkSession, d: String): DataFrame = {
     val path = Scratch.dir("orders_erasure")
-    rmDir(path)
+    Scratch.clear(path)
     val subject = col("o_custkey") % 10000 === 7
     val base = Tables.orders(s, d)
       .withColumn("o_year", year(col("o_orderdate")))
@@ -374,13 +358,8 @@ object Sources extends QueryModule {
     val affected = t.filter(subject).select("o_year").distinct()
     val incoming = t.join(affected, Seq("o_year"), "left_semi")
       .filter(!subject)
-    val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try incoming.write.mode("overwrite").partitionBy("o_year").parquet(path)
-    finally prev match {
-      case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    incoming.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("o_year").parquet(path)
     val flag = base.filter(subject).select("o_year").distinct()
       .withColumn("rw", lit(true))
     s.read.parquet(path)
@@ -393,15 +372,6 @@ object Sources extends QueryModule {
       .orderBy("o_year")
   }
 
-  private[graft] def rmDir(path: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    val dir = new java.io.File(path)
-    if (dir.exists()) rm(dir)
-  }
-
   /** Robustness: PERMISSIVE corrupt-record capture. Orders re-written as
     * CSV with two malformed lines appended; the schema-ed read must keep
     * every good row and quarantine exactly the bad ones in
@@ -410,7 +380,7 @@ object Sources extends QueryModule {
     */
   def corruptRecordScan(s: SparkSession, d: String): DataFrame = {
     val path = Scratch.dir("csv_corrupt")
-    rmDir(path)
+    Scratch.clear(path)
     Tables.orders(s, d).select("o_orderkey", "o_totalprice")
       .coalesce(1).write.option("header", true).csv(path)
     // malformed rows land in their own file (appending to Spark's part
@@ -438,7 +408,7 @@ object Sources extends QueryModule {
     */
   def schemaMergeScan(s: SparkSession, d: String): DataFrame = {
     val base = Scratch.dir("schema_merge")
-    rmDir(base)
+    Scratch.clear(base)
     val o = Tables.orders(s, d)
     o.filter(col("o_orderkey") % 2 === 0).select("o_orderkey")
       .write.parquet(s"$base/v1")
@@ -457,7 +427,7 @@ object Sources extends QueryModule {
     */
   def orcRoundtrip(s: SparkSession, d: String): DataFrame = {
     val path = Scratch.dir("orc_lineitem")
-    rmDir(path)
+    Scratch.clear(path)
     Tables.lineitem(s, d).filter(col("l_quantity") > 40)
       .write.orc(path)
     s.read.orc(path)
@@ -480,7 +450,7 @@ object Sources extends QueryModule {
     */
   def xmlRoundtrip(s: SparkSession, d: String): DataFrame = {
     val path = Scratch.dir("xml_nation")
-    rmDir(path)
+    Scratch.clear(path)
     Tables.nation(s, d)
       .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
       .write.option("rowTag", "nation").xml(path)
@@ -521,27 +491,24 @@ object Sources extends QueryModule {
     * from the compiled physical plan (no job runs); AQE is pinned OFF
     * for the measurement so the static planner's strategy is what's
     * audited (AQE's runtime re-plan would hide the threshold's effect).
+    * Both measurements plan on a child session (`newSession`) that holds
+    * the threshold and AQE setting, so the caller's session conf, which
+    * a concurrent query may be reading, never changes.
     * The oracle pins the expected strategy table — a plan regression
     * (dimension stats lost, threshold misconfigured) fails the gate.
     */
   def joinStrategyAudit(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
     def measure(threshold: String): (Long, Long) = {
-      val prevT = s.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val prevA = s.conf.get("spark.sql.adaptive.enabled")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
-        s.conf.set("spark.sql.adaptive.enabled", "false")
-        val df = Tables.orders(s, d)
-          .join(Tables.customer(s, d), col("o_custkey") === col("c_custkey"))
-          .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))
-        val p = df.queryExecution.executedPlan
-        (p.collect { case _: BroadcastHashJoinExec => 1L }.sum,
-          p.collect { case _: SortMergeJoinExec => 1L }.sum)
-      } finally {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
-        s.conf.set("spark.sql.adaptive.enabled", prevA)
-      }
+      val c = s.newSession()
+      c.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+      c.conf.set("spark.sql.adaptive.enabled", "false")
+      val df = Tables.orders(c, d)
+        .join(Tables.customer(c, d), col("o_custkey") === col("c_custkey"))
+        .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))
+      val p = df.queryExecution.executedPlan
+      (p.collect { case _: BroadcastHashJoinExec => 1L }.sum,
+        p.collect { case _: SortMergeJoinExec => 1L }.sum)
     }
     import s.implicits._
     val (b1, m1) = measure("10485760")

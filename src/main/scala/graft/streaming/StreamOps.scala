@@ -2,10 +2,10 @@ package graft.streaming
 
 import graft.Scratch
 import graft.{Q, QueryModule, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 
 /** Streaming layer (SURVEY.md §2.9): the reference's Kafka topics carry
@@ -67,36 +67,39 @@ object StreamOps extends QueryModule {
       .withColumn("ts", normTs(col("ts"), tsT))
   }
 
-  /** Run a streaming aggregate to a memory sink with AvailableNow and
-    * return the final complete-mode snapshot as a DataFrame.
+  /** Drain `df` into the memory sink `name` and return the sink's
+    * table: the final snapshot in `complete` mode, every emitted row in
+    * `update` and `append` mode.
     */
-  def runToSnapshot(agg: DataFrame, name: String): DataFrame = {
-    val s = agg.sparkSession
-    val q = agg.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .option("checkpointLocation", Scratch.dir(s"ckpt_$name"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    awaitAndUnload(q)
-    s.table(name)
+  def runToSnapshot(df: DataFrame, name: String,
+                    mode: String = "complete"): DataFrame = {
+    drain(name)(df.writeStream.format("memory").queryName(name).outputMode(mode))
+    df.sparkSession.table(name)
   }
 
-  /** Await an AvailableNow query's termination, then unload this
-    * executor's state-store providers. A finished AvailableNow run never
-    * touches its providers again (each graft query recreates its
-    * checkpoint), but Spark keeps them in the executor's loadedProviders
-    * cache indefinitely: every provider pins its state maps on heap, its
-    * checkpoint-file-manager thread pool, and a slice of the periodic
-    * maintenance scan — measured ~770 leaked
-    * ChecksumCheckpointFileManager threads and multi-query state
-    * retention by the end of a full bench JVM. Unloading at termination
-    * bounds all three to the live query (state is on disk; a provider
-    * reloads from the checkpoint if ever needed — correctness is
-    * unaffected by design).
+  /** How every streaming entry runs: one AvailableNow drain of the
+    * bounded backlog over a fresh checkpoint, `ckpt_<name>` under
+    * [[graft.Scratch]]. A query fixes its execution settings when it
+    * starts and records them in that checkpoint; nothing here changes a
+    * session conf, so the state partition count is the session's one
+    * shuffle partition per core, like every batch shuffle.
+    *
+    * At termination this executor's state-store providers are unloaded.
+    * A finished drain never touches its providers again, but Spark keeps
+    * them in the executor's loadedProviders cache indefinitely: every
+    * provider pins its state maps on heap, its checkpoint-file-manager
+    * thread pool, and a slice of the periodic maintenance scan — measured
+    * ~770 leaked ChecksumCheckpointFileManager threads and multi-query
+    * state retention by the end of a full bench JVM. Unloading bounds all
+    * three to the live query (state is on disk; a provider reloads from
+    * the checkpoint if ever needed — correctness is unaffected).
     */
-  private def awaitAndUnload(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    q.awaitTermination()
+  private def drain(name: String)(writer: DataStreamWriter[Row]): Unit = {
+    val ckpt = Scratch.dir(s"ckpt_$name")
+    Scratch.clear(ckpt)
+    writer.option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
     org.apache.spark.sql.graft.Bridge.unloadAllStateStores()
   }
 
@@ -125,7 +128,7 @@ object StreamOps extends QueryModule {
       if (!Tables.exists(store)) incoming
       else latestPerKey(s.read.schema(incoming.schema).parquet(store).unionByName(incoming))
     merged.write.mode("overwrite").parquet(store + ".tmp")
-    rmPath(store)
+    Scratch.clear(store)
     if (!new java.io.File(store + ".tmp").renameTo(new java.io.File(store)))
       sys.error(s"upsert swap failed for $store")
   }
@@ -151,42 +154,11 @@ object StreamOps extends QueryModule {
       .select(col("k"), col("f.seq").as("seq"), col("f.op").as("op"),
         col("f.status").as("status"), col("f.price").as("price"), col("n"))
     merged.write.mode("overwrite").parquet(store + ".tmp")
-    rmPath(store)
+    Scratch.clear(store)
     if (!new java.io.File(store + ".tmp").renameTo(new java.io.File(store)))
       sys.error(s"cdc swap failed for $store")
   }
 
-  private def rmPath(path: String): Unit = {
-    val dir = new java.io.File(path)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    if (dir.exists()) rm(dir)
-  }
-
-  /** Run `body` with a reduced shuffle-partition count. Stateful streaming
-    * operators allocate one state store per shuffle partition PER state
-    * op and micro-batch — at local[32] the default 32 partitions mean 32
-    * store dirs + snapshot files per batch for state that is a few
-    * thousand keys. Dropping to 8 for the state-heavy queries cuts that
-    * fixed cost 4× without touching semantics (the partition count is a
-    * physical knob; every result here is an aggregate with a total ORDER
-    * BY). On a real cluster this is the same tuning call, sized to
-    * executor count instead. The conf is restored afterwards; the
-    * partition count is pinned into each new checkpoint, and these
-    * queries recreate their checkpoint per run.
-    */
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** Run `body` with the RocksDB state store provider (required by
-    * transformWithState; also the production store for state beyond heap),
-    * restoring the session default after.
-    */
   /** MG summary capacity for the GATED runs: the corpus's distinct-user
     * count + 1, so the summary provably never evicts and its counts are
     * exact at any scale factor — the regime where the batch oracle
@@ -198,6 +170,12 @@ object StreamOps extends QueryModule {
       Tables.events(s, d).agg(count_distinct(col("user_id")).as("n"))
         .head.getLong(0).toInt + 1)
 
+  /** Run `body` with the RocksDB state store provider (required by
+    * transformWithState; also the production store for state beyond heap),
+    * restoring the session default after. This one stays a session conf
+    * write: Spark reads the provider class from the session, with no
+    * per-query option.
+    */
   private def withRocksDbState[T](s: SparkSession)(body: => T): T = {
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = s.conf.getOption(key)
@@ -234,16 +212,36 @@ object StreamOps extends QueryModule {
       .find(_.getName.endsWith(".parquet")).get
     java.nio.file.Files.move(part.toPath,
       java.nio.file.Paths.get(s"$scratch/$name.parquet"))
-    rmPath(tmp)
+    Scratch.clear(tmp)
   }
 
-  private def cleanCheckpoint(name: String): Unit = {
-    val dir = new java.io.File(Scratch.dir(s"ckpt_$name"))
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
+  /** The events table staged in `Scratch.dir(name)` as a rate-limited
+    * file-stream source for the watermark-flush entries: `00_events` (a
+    * copy of events.parquet), then `sentinels` flush files, then with
+    * `replay` the events once more as `late`. maxFilesPerTrigger=1 makes
+    * each file one micro-batch; the file source batches in
+    * MODIFICATION-TIME order and close stamps can tie-break arbitrarily,
+    * so the files get minute-apart stamps in that order.
+    */
+  private def stagedEvents(s: SparkSession, d: String, name: String,
+                           sentinels: Int, replay: Boolean = false): DataFrame = {
+    val dir = Scratch.dir(name)
+    Scratch.clear(dir); new java.io.File(dir).mkdirs()
+    val tsT = eventsTsType(s, d)
+    val files = Seq("00_events") ++ (1 to sentinels).map(i => f"$i%02d_flush") ++
+      (if (replay) Seq(f"${sentinels + 1}%02d_late") else Nil)
+    files.zipWithIndex.foreach { case (n, i) =>
+      if (i == 0 || i > sentinels)
+        java.nio.file.Files.copy(java.nio.file.Paths.get(s"$d/events.parquet"),
+          java.nio.file.Paths.get(s"$dir/$n.parquet"))
+      else writeSentinelFile(s, tsT, dir, n, -i.toLong)
+      new java.io.File(s"$dir/$n.parquet")
+        .setLastModified(1000000000000L + i * 60000L): Unit
     }
-    if (dir.exists()) rm(dir)
+    s.readStream.schema(eventsRawSchema(tsT))
+      .option("maxFilesPerTrigger", "1")
+      .parquet(dir)
+      .withColumn("ts", normTs(col("ts"), tsT))
   }
 
   /** Custom stateful streaming (brief: `KeyValueGroupedDataset.
@@ -535,19 +533,17 @@ object StreamOps extends QueryModule {
   def entries: Seq[Q] = Seq(
     // K4 as a stream: hourly counts, complete mode — must equal the batch
     // aggregate (same oracle as q_k4_accidents_by_time).
-    Q("q_stream_hourly", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_hourly")
+    Q("q_stream_hourly", { (s, d) =>
       val agg = eventsStream(s, d)
         .groupBy(hour(col("ts")).as("h"))
         .agg(count(lit(1)).as("cnt"))
       runToSnapshot(agg, "stream_hourly").orderBy("h")
-    }},
+    },
       "SELECT CAST(hour(ts) AS INTEGER) AS h, count(*) AS cnt FROM events GROUP BY 1 ORDER BY 1"),
 
     // North-star: event-time tumbling window + watermark. AvailableNow
     // processes the full file backlog; complete mode emits every window.
-    Q("q_stream_windowed", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_windowed")
+    Q("q_stream_windowed", { (s, d) =>
       val agg = eventsStream(s, d)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "6 hours").as("w"))
@@ -556,7 +552,7 @@ object StreamOps extends QueryModule {
       runToSnapshot(agg, "stream_windowed")
         .select(col("w.start").as("w_start"), col("cnt"), col("total"))
         .orderBy("w_start")
-    }},
+    },
       """SELECT make_timestamp(CAST(floor(epoch(ts)/21600)*21600*1000000 AS BIGINT)) AS w_start,
         | count(*) AS cnt,
         | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
@@ -569,8 +565,7 @@ object StreamOps extends QueryModule {
     // q_approx_distinct's scale argument). Gated with the boolean-contract
     // pattern: the snapshot's estimate must sit within 2% of the batch
     // exact distinct per window, which is deterministic for fixed data.
-    Q("q_stream_hll_users", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_hll_users")
+    Q("q_stream_hll_users", { (s, d) =>
       val agg = eventsStream(s, d)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "6 hours").as("w"))
@@ -586,15 +581,14 @@ object StreamOps extends QueryModule {
           (abs(col("__est") - col("exact_users")) <=
             col("exact_users").cast("double") * 0.02).as("within_tol"))
         .orderBy("w_start")
-    }},
+    },
       """SELECT make_timestamp(CAST(floor(epoch(ts)/21600)*21600*1000000 AS BIGINT)) AS w_start,
         | count(DISTINCT user_id) AS exact_users, TRUE AS within_tol
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
 
     // North-star: SLIDING window (6h length, 3h slide) — every event lands
     // in exactly two windows; complete mode emits all of them.
-    Q("q_stream_sliding", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_sliding")
+    Q("q_stream_sliding", { (s, d) =>
       val agg = eventsStream(s, d)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "6 hours", "3 hours").as("w"))
@@ -602,7 +596,7 @@ object StreamOps extends QueryModule {
       runToSnapshot(agg, "stream_sliding")
         .select(col("w.start").as("w_start"), col("cnt"))
         .orderBy("w_start")
-    }},
+    },
       """WITH w AS (
         | SELECT unnest([
         |   CAST(floor(epoch(ts)/10800)*10800 AS BIGINT),
@@ -614,8 +608,7 @@ object StreamOps extends QueryModule {
     // North-star: session_window aggregation as a streaming query entry
     // (30-min gap), complete mode — session starts/sizes must equal the
     // batch lag+cumsum sessionization (q_sessionize's oracle family).
-    Q("q_stream_session", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_session")
+    Q("q_stream_session", { (s, d) =>
       val agg = eventsStream(s, d)
         .withColumn("ts", date_trunc("second", col("ts")))
         .withWatermark("ts", "1 hour")
@@ -624,7 +617,7 @@ object StreamOps extends QueryModule {
       runToSnapshot(agg, "stream_session")
         .select(col("user_id"), col("w.start").as("sess_start"), col("n_events"))
         .orderBy("user_id", "sess_start")
-    }},
+    },
       """WITH e AS (SELECT user_id, event_id,
         |  date_trunc('second', ts) AS ts FROM events),
         |g AS (
@@ -701,8 +694,7 @@ object StreamOps extends QueryModule {
     // gate proves stream ≡ batch on the bounded source (same oracle as
     // q_psi_drift).
     // stream ≡ batch on the bounded source: the batch PSI twin verbatim
-    Q("q_stream_psi", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_psi")
+    Q("q_stream_psi", { (s, d) =>
       val refEv = Tables.events(s, d).filter(col("value").isNotNull)
         .select(col("value").cast("double").as("v"),
           (weekday(col("ts")) <= 3).as("is_ref"))
@@ -729,7 +721,7 @@ object StreamOps extends QueryModule {
       graft.operators.Evolution.psiOfBinCounts(
         cr.join(cc, Seq("bin"), "full_outer")
           .na.fill(0L, Seq("cr", "cc")))
-    }},
+    },
       graft.operators.Evolution.oracles("q_psi_drift")),
 
     // LIVE CUSUM CONTROL CHART — the q_cusum fold as a stream: the
@@ -743,15 +735,14 @@ object StreamOps extends QueryModule {
     // oracle recomputes the identical fold over events at rest).
     // stream ≡ batch: the identical CUSUM fold over events at rest
     // (the q_cusum recursive-CTE twin, day series = event value cents)
-    Q("q_stream_cusum", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_cusum")
+    Q("q_stream_cusum", { (s, d) =>
       val daily = eventsStream(s, d).filter(col("value").isNotNull)
         .groupBy(to_date(col("ts")).as("day"))
         .agg((sum(col("value").cast(DecimalType(18, 2))) * 100)
           .cast("long").as("rc"))
       graft.operators.Analytics.cusumOfDaily(
         runToSnapshot(daily, "stream_cusum"))
-    }},
+    },
       """WITH RECURSIVE d AS (
         | SELECT CAST(ts AS DATE) AS day,
         |  CAST(sum(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS rc
@@ -799,8 +790,7 @@ object StreamOps extends QueryModule {
     // randomizer pages within minutes, not at readout. Gate: stream ≡
     // batch on the bounded source (same oracle as q_srm_check).
     // stream ≡ batch: the batch SRM twin verbatim
-    Q("q_stream_srm", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_srm")
+    Q("q_stream_srm", { (s, d) =>
       val bucket = conv(substring(md5(col("user_id").cast("string")), 1, 4),
         16, 10).cast("long") % 2
       val agg = eventsStream(s, d)
@@ -818,7 +808,7 @@ object StreamOps extends QueryModule {
         (col("nb").cast("double") - e) * (col("nb").cast("double") - e) / e
       w.select(col("na"), col("nb"), round(chi2, 6).as("chi2"),
         (chi2 > 3.841459).as("srm_detected"))
-    }},
+    },
       graft.operators.Analytics.oracles("q_srm_check")),
 
     // BOUNDED-STATE LIVE SRM — q_stream_srm with the state class fixed:
@@ -841,8 +831,7 @@ object StreamOps extends QueryModule {
     // posterior expression tree via Analytics.bayesAbFinish. Gate:
     // stream ≡ batch on the bounded source (same oracle as q_bayes_ab).
     // stream ≡ batch: the live posterior must equal the at-rest readout
-    Q("q_stream_bayes_ab", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_bayes_ab")
+    Q("q_stream_bayes_ab", { (s, d) =>
       val agg = eventsStream(s, d)
         .filter(col("event_type").isin("purchase", "click") &&
           col("value").isNotNull)
@@ -864,12 +853,11 @@ object StreamOps extends QueryModule {
         coalesce(sum(when(!col("t"), col("ss"))),
           lit(0).cast(DecimalType(38, 0))).as("ssa"))
       graft.operators.Analytics.bayesAbFinish(m)
-    }},
+    },
       graft.operators.Analytics.oracles("q_bayes_ab")),
     // the exact readout twin + the two pinned sketch contracts (no
     // stripMargin on the outer template: the inner SQL is pre-stripped)
-    Q("q_stream_srm_hll", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_srm_hll")
+    Q("q_stream_srm_hll", { (s, d) =>
       def armOf = {
         val bucket = conv(substring(md5(col("user_id").cast("string")), 1, 4),
           16, 10).cast("long") % 2
@@ -907,7 +895,7 @@ object StreamOps extends QueryModule {
         (chi2 > 3.841459).as("srm_detected"),
         (col("__eq") === 1).as("stream_eq_batch_sketch"),
         (col("__tol") === 1).as("within_tol"))
-    }},
+    },
       ("SELECT na, nb, chi2, srm_detected, " +
         "TRUE AS stream_eq_batch_sketch, TRUE AS within_tol FROM (\n" +
         graft.operators.Analytics.oracles("q_srm_check") + "\n)")),
@@ -925,9 +913,7 @@ object StreamOps extends QueryModule {
     // final q_msprt row without the path-dependent `crossed`).
     // stream ≡ batch cumulative: q_msprt's final counts + llr (the
     // path-dependent `crossed` flag is batch-only by construction)
-    Q("q_stream_msprt", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_msprt_n")
-      cleanCheckpoint("stream_msprt_x")
+    Q("q_stream_msprt", { (s, d) =>
       val arm = when(
         conv(substring(md5(col("user_id").cast("string")), 1, 4), 16, 10)
           .cast("long") % 2 === 0, "c").otherwise("t")
@@ -959,7 +945,7 @@ object StreamOps extends QueryModule {
         when(s2 > 0, round(llr, 6)).as("llr"),
         when(s2 > 0, llr >= math.log(1.0 / 0.05)).otherwise(lit(false))
           .as("sig_now"))
-    }},
+    },
       """WITH pu AS (
         | SELECT user_id,
         |  CASE WHEN CAST(('0x' || substr(md5(CAST(user_id AS VARCHAR)),
@@ -1003,14 +989,13 @@ object StreamOps extends QueryModule {
 
     // K7 as a stream: the crossings topic in complete mode — equals the
     // batch aggregate (same oracle as q_k7_crossings_vs_lesions).
-    Q("q_stream_crossings", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_crossings")
+    Q("q_stream_crossings", { (s, d) =>
       val agg = eventsStream(s, d)
         .groupBy(col("event_type").as("crossing_type"))
         .agg(count(lit(1)).as("crossings"),
           sum(col("value").cast(DecimalType(18, 2))).cast("double").as("lesions_total"))
       runToSnapshot(agg, "stream_crossings").orderBy("crossing_type")
-    }},
+    },
       """SELECT event_type AS crossing_type, count(*) AS crossings,
         | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS lesions_total
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
@@ -1018,8 +1003,7 @@ object StreamOps extends QueryModule {
     // Stream-static broadcast join: the stream enriched against a static
     // dimension (the geocode-lookup shape) before aggregating — at scale
     // the static side broadcasts once per micro-batch, no stream shuffle.
-    Q("q_stream_enriched", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_enriched")
+    Q("q_stream_enriched", { (s, d) =>
       val nations = broadcast(Tables.nation(s, d).select("n_nationkey", "n_name"))
       val agg = eventsStream(s, d)
         .withColumn("nkey", pmod(col("user_id"), lit(25)).cast("int"))
@@ -1027,7 +1011,7 @@ object StreamOps extends QueryModule {
         .groupBy(coalesce(col("n_name"), lit("unknown")).as("region"))
         .agg(count(lit(1)).as("cnt"))
       runToSnapshot(agg, "stream_enriched").orderBy("region")
-    }},
+    },
       """SELECT COALESCE(n_name, 'unknown') AS region, count(*) AS cnt
         |FROM events LEFT JOIN nation ON CAST(user_id % 25 AS INTEGER) = n_nationkey
         |GROUP BY 1 ORDER BY 1""".stripMargin),
@@ -1039,8 +1023,7 @@ object StreamOps extends QueryModule {
     // inner-join matches emit as they form (append mode). The memory-sink
     // pair table is then batch-aggregated per hour, and the oracle is the
     // plain batch self-join — stream ≡ batch on a bounded source.
-    Q("q_stream_interval_join", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_interval_join")
+    Q("q_stream_interval_join", { (s, d) =>
       val l = eventsStream(s, d)
         .select(col("event_id").as("l_id"), col("ts").as("l_ts"),
           col("user_id").as("l_user"))
@@ -1052,17 +1035,11 @@ object StreamOps extends QueryModule {
       val pairs = l.join(r, expr(
         """l_user = r_user AND
           |r_ts > l_ts AND r_ts <= l_ts + interval 10 minutes""".stripMargin))
-      val q = pairs.writeStream.format("memory").queryName("stream_interval_join")
-        .outputMode("append")
-        .option("checkpointLocation", Scratch.dir("ckpt_stream_interval_join"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitAndUnload(q)
-      s.table("stream_interval_join")
+      runToSnapshot(pairs, "stream_interval_join", "append")
         .groupBy(hour(col("l_ts")).as("h"))
         .agg(count(lit(1)).as("pairs"))
         .orderBy("h")
-    }},
+    },
       """SELECT CAST(hour(l.ts) AS INTEGER) AS h, count(*) AS pairs
         |FROM events l JOIN events r
         | ON l.user_id = r.user_id
@@ -1080,42 +1057,10 @@ object StreamOps extends QueryModule {
     // evicts+emits the remaining unmatched lefts before AvailableNow
     // terminates. The sentinel user (-1) matches nothing and is filtered
     // from the result; the oracle is the plain batch LEFT JOIN.
-    Q("q_stream_left_join", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_left_join")
-      val scratch = Scratch.dir("left_join_src")
-      rmPath(scratch); new java.io.File(scratch).mkdirs()
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"),
-        java.nio.file.Paths.get(s"$scratch/00_events.parquet"))
-      // sentinel: 2100-01-01 UTC, schema-identical to events (whichever
-      // physical ts layout this testdata generation shipped)
-      val tsT = eventsTsType(s, d)
-      val sentinelTs: Any = tsT match {
-        case LongType         => 4102444800000000000L // raw nanos
-        case TimestampNTZType => java.time.LocalDateTime.of(2100, 1, 1, 0, 0)
-        // tz-adjusted TIMESTAMP(MICROS): createDataFrame wants an Instant/
-        // java.sql.Timestamp, not LocalDateTime
-        case _                => java.sql.Timestamp.from(
-          java.time.Instant.parse("2100-01-01T00:00:00Z"))
-      }
-      val tmp = scratch + "_tmp"
-      s.createDataFrame(
-          java.util.Arrays.asList(org.apache.spark.sql.Row(
-            -1L, sentinelTs, -1L, "flush", 0.0, "{}")),
-          eventsRawSchema(tsT))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(s"$scratch/01_flush.parquet"))
-      rmPath(tmp)
-
+    Q("q_stream_left_join", { (s, d) =>
+      val src = stagedEvents(s, d, "left_join_src", sentinels = 1)
       def side(idAs: String, tsAs: String, userAs: String) =
-        s.readStream.schema(eventsRawSchema(tsT))
-          .option("maxFilesPerTrigger", "1")
-          .parquet(scratch)
-          .withColumn("ts", normTs(col("ts"), tsT))
-          .select(col("event_id").as(idAs), col("ts").as(tsAs),
+        src.select(col("event_id").as(idAs), col("ts").as(tsAs),
             col("user_id").as(userAs))
           .withWatermark(tsAs, "1 hour")
       val pairs = side("l_id", "l_ts", "l_user")
@@ -1123,18 +1068,12 @@ object StreamOps extends QueryModule {
           """l_user = r_user AND
             |r_ts > l_ts AND r_ts <= l_ts + interval 10 minutes""".stripMargin),
           "left_outer")
-      val q = pairs.writeStream.format("memory").queryName("stream_left_join")
-        .outputMode("append")
-        .option("checkpointLocation", Scratch.dir("ckpt_stream_left_join"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitAndUnload(q)
-      s.table("stream_left_join")
+      runToSnapshot(pairs, "stream_left_join", "append")
         .filter(col("l_user") =!= -1L)
         .groupBy(hour(col("l_ts")).as("h"))
         .agg(count(lit(1)).as("total"), count(col("r_id")).as("matched"))
         .orderBy("h")
-    }},
+    },
       """SELECT CAST(hour(l.ts) AS INTEGER) AS h, count(*) AS total,
         | count(r.event_id) AS matched
         |FROM events l LEFT JOIN events r
@@ -1157,8 +1096,7 @@ object StreamOps extends QueryModule {
     // is deterministic.
     // stream ≡ batch ≡ DuckDB: the md5 CMS is deterministic, so the
     // oracle replays the whole sketch over events/user_id exactly
-    Q("q_stream_countmin", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_countmin")
+    Q("q_stream_countmin", { (s, d) =>
       val cells = eventsStream(s, d)
         .select(explode(array((0 until 4).map(r =>
           struct(lit(r).as("r"),
@@ -1166,19 +1104,12 @@ object StreamOps extends QueryModule {
               .as("bucket"))): _*)).as("p"))
         .groupBy(col("p.r").as("r"), col("p.bucket").as("bucket"))
         .agg(count(lit(1)).as("cell"))
-      val q = cells.writeStream.format("memory")
-        .queryName("stream_countmin")
-        .outputMode("update")
-        .option("checkpointLocation", Scratch.dir("ckpt_stream_countmin"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitAndUnload(q)
-      val snap = s.table("stream_countmin")
+      val snap = runToSnapshot(cells, "stream_countmin", "update")
         .groupBy("r", "bucket").agg(max(col("cell")).as("cell"))
       val exact = Tables.events(s, d)
         .groupBy(col("user_id").as("key")).agg(count(lit(1)).as("cnt"))
       graft.operators.Sketches.cmsProbe(snap, exact, 4, 10)
-    }},
+    },
       """WITH exact AS (
         | SELECT user_id AS key, count(*) AS cnt FROM events GROUP BY 1),
         |rs AS (SELECT unnest([0, 1, 2, 3]) AS r),
@@ -1200,22 +1131,15 @@ object StreamOps extends QueryModule {
         | CAST(min(c.cell) - p.cnt AS BIGINT) AS overestimate
         |FROM probes p JOIN cells c USING (r, bucket)
         |GROUP BY p.key, p.cnt ORDER BY exact_cnt DESC, key""".stripMargin),
-    Q("q_stream_state_totals", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_state_totals")
-      val q = runningUserTotals(eventsStream(s, d)).toDF()
-        .writeStream.format("memory").queryName("stream_state_totals")
-        .outputMode("update")
-        .option("checkpointLocation", Scratch.dir("ckpt_stream_state_totals"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitAndUnload(q)
-      s.table("stream_state_totals")
+    Q("q_stream_state_totals", { (s, d) =>
+      runToSnapshot(runningUserTotals(eventsStream(s, d)).toDF(),
+          "stream_state_totals", "update")
         .groupBy("user_id")
         .agg(max(struct(col("n_events"), col("total_cents"))).as("st"))
         .select(col("user_id"), col("st.n_events").as("n_events"),
           col("st.total_cents").as("total_cents"))
         .orderBy("user_id")
-    }},
+    },
       """SELECT user_id, count(*) AS n_events,
         | CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS total_cents
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
@@ -1223,24 +1147,17 @@ object StreamOps extends QueryModule {
     // The transformWithState twin of q_stream_state_totals: same
     // semantics through the NEW typed-state API over RocksDB — both
     // state APIs gate against the identical batch oracle.
-    Q("q_stream_tws_totals", { (s, d) => withStatePartitions(s, 8) {
+    Q("q_stream_tws_totals", { (s, d) =>
       withRocksDbState(s) {
-        cleanCheckpoint("stream_tws_totals")
-        val q = runningUserTotalsTws(eventsStream(s, d)).toDF()
-          .writeStream.format("memory").queryName("stream_tws_totals")
-          .outputMode("update")
-          .option("checkpointLocation", Scratch.dir("ckpt_stream_tws_totals"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        awaitAndUnload(q)
-        s.table("stream_tws_totals")
+        runToSnapshot(runningUserTotalsTws(eventsStream(s, d)).toDF(),
+            "stream_tws_totals", "update")
           .groupBy("user_id")
           .agg(max(struct(col("n_events"), col("total_cents"))).as("st"))
           .select(col("user_id"), col("st.n_events").as("n_events"),
             col("st.total_cents").as("total_cents"))
           .orderBy("user_id")
       }
-    }},
+    },
       """SELECT user_id, count(*) AS n_events,
         | CAST(sum(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS total_cents
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
@@ -1254,17 +1171,10 @@ object StreamOps extends QueryModule {
     // gate), with exact medians from the grouped X4 percentile frame.
     // per-type exact median + the pinned rank contract (the stream's KLL
     // state is gated by its order-independent guarantee, not replayed)
-    Q("q_stream_kll_median", { (s, d) => withStatePartitions(s, 8) {
+    Q("q_stream_kll_median", { (s, d) =>
       withRocksDbState(s) {
-        cleanCheckpoint("stream_kll_median")
-        val q = streamingKllMedian(eventsStream(s, d), 512).toDF()
-          .writeStream.format("memory").queryName("stream_kll_median")
-          .outputMode("update")
-          .option("checkpointLocation", Scratch.dir("ckpt_stream_kll_median"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        awaitAndUnload(q)
-        val finals = s.table("stream_kll_median")
+        val finals = runToSnapshot(streamingKllMedian(eventsStream(s, d), 512).toDF(),
+            "stream_kll_median", "update")
           .groupBy(col("event_type").as("grp"))
           .agg(max(struct(col("n_seen"), col("est_p50"))).as("st"))
           .select(col("grp"), col("st.n_seen").as("n"),
@@ -1283,7 +1193,7 @@ object StreamOps extends QueryModule {
           .select(col("grp"), col("exact_p50"), tolc.as("within_tol"))
           .orderBy("grp")
       }
-    }},
+    },
       """SELECT event_type AS grp,
         | quantile_cont(CAST(value AS DOUBLE), 0.5) AS exact_p50,
         | TRUE AS within_tol
@@ -1292,24 +1202,17 @@ object StreamOps extends QueryModule {
     // MapState heavy hitters: q_stream_top_users' semantics through
     // transformWithState MapState over RocksDB — point-wise entry
     // updates instead of whole-map rewrites (see TypeTopUsersProcessor).
-    Q("q_stream_top_users_tws", { (s, d) => withStatePartitions(s, 8) {
+    Q("q_stream_top_users_tws", { (s, d) =>
       withRocksDbState(s) {
-        cleanCheckpoint("stream_top_users_tws")
-        val q = streamingTopUsersTws(eventsStream(s, d), 3).toDF()
-          .writeStream.format("memory").queryName("stream_top_users_tws")
-          .outputMode("update")
-          .option("checkpointLocation", Scratch.dir("ckpt_stream_top_users_tws"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        awaitAndUnload(q)
-        s.table("stream_top_users_tws")
+        runToSnapshot(streamingTopUsersTws(eventsStream(s, d), 3).toDF(),
+            "stream_top_users_tws", "update")
           .groupBy("event_type", "rank")
           .agg(max(struct(col("n_seen"), col("cnt"), col("user_id"))).as("st"))
           .select(col("event_type"), col("rank"),
             col("st.user_id").as("user_id"), col("st.cnt").as("cnt"))
           .orderBy("event_type", "rank")
       }
-    }},
+    },
       """SELECT event_type, CAST(rn AS BIGINT) AS rank, user_id, c AS cnt
         |FROM (
         | SELECT event_type, user_id, count(*) AS c,
@@ -1332,36 +1235,28 @@ object StreamOps extends QueryModule {
     // controlled. state_size is emitted for those tests, not projected.
     // exact-by-the-bound at gate scale (no eviction at capacity 512), so
     // the same batch top-k oracle applies
-    Q("q_stream_top_users_mg", { (s, d) => withStatePartitions(s, 8) {
+    Q("q_stream_top_users_mg", { (s, d) =>
       withRocksDbState(s) {
-        cleanCheckpoint("stream_top_users_mg")
         val cap = exactCapacity(s, d)
-        val q = streamingTopUsersMg(eventsStream(s, d), 3, cap).toDF()
-          .writeStream.format("memory").queryName("stream_top_users_mg")
-          .outputMode("update")
-          .option("checkpointLocation", Scratch.dir("ckpt_stream_top_users_mg"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        awaitAndUnload(q)
+        val emitted = runToSnapshot(streamingTopUsersMg(eventsStream(s, d), 3, cap).toDF(),
+          "stream_top_users_mg", "update")
         // Eviction guard: under eviction MG counts are run-
         // order-dependent lower bounds and the batch oracle no longer
         // applies. exactCapacity sizes the summary so that never happens
         // at gate scale — assert it, so a future SF/config change that
         // re-enters the eviction regime fails LOUDLY here instead of as a
         // mysterious hash mismatch downstream.
-        val maxState = s.table("stream_top_users_mg")
-          .agg(max(col("state_size"))).head().getLong(0)
+        val maxState = emitted.agg(max(col("state_size"))).head().getLong(0)
         require(maxState < cap,
           s"MG summary hit capacity ($maxState >= $cap): eviction regime, " +
             "batch oracle invalid — raise capacity for the gated run")
-        s.table("stream_top_users_mg")
-          .groupBy("event_type", "rank")
+        emitted.groupBy("event_type", "rank")
           .agg(max(struct(col("n_seen"), col("cnt"), col("user_id"))).as("st"))
           .select(col("event_type"), col("rank"),
             col("st.user_id").as("user_id"), col("st.cnt").as("cnt"))
           .orderBy("event_type", "rank")
       }
-    }},
+    },
       """SELECT event_type, CAST(rn AS BIGINT) AS rank, user_id, c AS cnt
         |FROM (
         | SELECT event_type, user_id, count(*) AS c,
@@ -1378,19 +1273,12 @@ object StreamOps extends QueryModule {
     // at capacity 512 with sf0.01's 150 users/type the summary holds
     // exactly the distinct-user set, so entry count = count(DISTINCT
     // user_id) and n_seen = count(*), per type.
-    Q("q_stream_state_reader", { (s, d) => withStatePartitions(s, 8) {
+    Q("q_stream_state_reader", { (s, d) =>
       withRocksDbState(s) {
-        cleanCheckpoint("stream_state_reader")
-        val ckpt = Scratch.dir("ckpt_stream_state_reader")
-        val q = streamingTopUsersMg(eventsStream(s, d), 3, exactCapacity(s, d)).toDF()
-          .writeStream.format("memory").queryName("stream_state_reader")
-          .outputMode("update")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        awaitAndUnload(q)
+        runToSnapshot(streamingTopUsersMg(eventsStream(s, d), 3, exactCapacity(s, d)).toDF(),
+          "stream_state_reader", "update")
         s.read.format("statestore")
-          .option("path", ckpt)
+          .option("path", Scratch.dir("ckpt_stream_state_reader"))
           .option("stateVarName", "mg")
           .load()
           // (capacity auto-sized as in q_stream_top_users_mg: no eviction
@@ -1400,7 +1288,7 @@ object StreamOps extends QueryModule {
             col("value.n_seen").as("n_seen"))
           .orderBy("event_type")
       }
-    }},
+    },
       """SELECT event_type, count(DISTINCT user_id) AS n_users,
         | count(*) AS n_seen
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
@@ -1410,22 +1298,15 @@ object StreamOps extends QueryModule {
     // monotone n_seen, not sink order — must equal the batch
     // count+row_number oracle. See streamingTopUsers for the
     // bounded-state (Misra-Gries) posture at scale.
-    Q("q_stream_top_users", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_top_users")
-      val q = streamingTopUsers(eventsStream(s, d), 3).toDF()
-        .writeStream.format("memory").queryName("stream_top_users")
-        .outputMode("update")
-        .option("checkpointLocation", Scratch.dir("ckpt_stream_top_users"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitAndUnload(q)
-      s.table("stream_top_users")
+    Q("q_stream_top_users", { (s, d) =>
+      runToSnapshot(streamingTopUsers(eventsStream(s, d), 3).toDF(),
+          "stream_top_users", "update")
         .groupBy("event_type", "rank")
         .agg(max(struct(col("n_seen"), col("cnt"), col("user_id"))).as("st"))
         .select(col("event_type"), col("rank"),
           col("st.user_id").as("user_id"), col("st.cnt").as("cnt"))
         .orderBy("event_type", "rank")
-    }},
+    },
       """SELECT event_type, CAST(rn AS BIGINT) AS rank, user_id, c AS cnt
         |FROM (
         | SELECT event_type, user_id, count(*) AS c,
@@ -1439,29 +1320,23 @@ object StreamOps extends QueryModule {
     // consumer contract) and overwritten to the "topic" sink; the query
     // then plays the consumer: read back, from_json-decode, return. The
     // final snapshot must equal the batch aggregate.
-    Q("q_stream_topic_sink", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_topic_sink")
+    Q("q_stream_topic_sink", { (s, d) =>
       val sinkPath = Scratch.dir("topic_accidents_by_time")
       val agg = eventsStream(s, d)
         .groupBy(hour(col("ts")).as("h"))
         .agg(count(lit(1)).as("cnt"))
-      val q = agg.writeStream
-        .outputMode("complete")
-        .option("checkpointLocation", Scratch.dir("ckpt_stream_topic_sink"))
-        .trigger(Trigger.AvailableNow())
+      drain("stream_topic_sink")(agg.writeStream.outputMode("complete")
         .foreachBatch { (batch: DataFrame, _: Long) =>
           batch.select(KafkaBridge.encodeMessage(col("h"), col("cnt")).as("payload"))
             .write.mode("overwrite").parquet(sinkPath)
-        }
-        .start()
-      awaitAndUnload(q)
+        })
       val msgSchema = StructType(Seq(
         StructField("h", IntegerType), StructField("cnt", LongType)))
-      s.read.parquet(sinkPath)
+      s.read.schema("payload STRING").parquet(sinkPath)
         .select(KafkaBridge.decodeMessage(col("payload"), msgSchema).as("m"))
         .select(col("m.h").as("h"), col("m.cnt").as("cnt"))
         .orderBy("h")
-    }},
+    },
       "SELECT CAST(hour(ts) AS INTEGER) AS h, count(*) AS cnt FROM events GROUP BY 1 ORDER BY 1"),
 
     // Streaming UPSERT sink: foreachBatch merges each micro-batch into a
@@ -1487,12 +1362,11 @@ object StreamOps extends QueryModule {
     // Gate: final store state ≡ the batch q_cdc_merge oracle verbatim.
     // upsert store ≡ last event per user over the whole table
     // stream ≡ batch: the q_cdc_merge oracle verbatim (same changelog)
-    Q("q_stream_cdc_apply", { (s, d) => withStatePartitions(s, 8) {
+    Q("q_stream_cdc_apply", { (s, d) =>
       import org.apache.spark.sql.types._
-      cleanCheckpoint("stream_cdc")
       val dir = Scratch.dir("cdc_log")
       val store = Scratch.dir("cdc_store")
-      rmPath(dir); rmPath(store); rmPath(store + ".tmp")
+      Seq(dir, store, store + ".tmp").foreach(Scratch.clear)
       val base = Tables.orders(s, d).select(col("o_orderkey").as("k"),
         col("o_orderstatus").as("status"),
         col("o_totalprice").cast(DecimalType(18, 2)).as("price"),
@@ -1516,42 +1390,35 @@ object StreamOps extends QueryModule {
         StructField("k", LongType), StructField("status", StringType),
         StructField("price", DecimalType(18, 2)),
         StructField("seq", LongType), StructField("op", StringType)))
-      val q = s.readStream.schema(schema)
+      drain("stream_cdc")(s.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1).parquet(dir)
         .writeStream
-        .option("checkpointLocation", Scratch.dir("ckpt_stream_cdc"))
-        .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, _: Long) =>
           cdcBatchMerge(batch, store)
-        }
-        .start()
-      awaitAndUnload(q)
-      s.read.parquet(store).filter(col("op") =!= "D")
+        })
+      // the store holds cdcBatchMerge's columns: the changelog's and n
+      s.read.schema(schema.add("n", LongType)).parquet(store).filter(col("op") =!= "D")
         .select(col("k").as("o_orderkey"), col("status").as("final_status"),
           col("price").cast("double").as("final_price"),
           col("n").as("n_versions"))
         .orderBy("o_orderkey")
-    }},
+    },
       graft.operators.Scd.oracles("q_cdc_merge")),
-    Q("q_stream_upsert", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_upsert")
+    Q("q_stream_upsert", { (s, d) =>
       val store = Scratch.dir("upsert_store")
-      rmPath(store); rmPath(store + ".tmp")
-      val q = eventsStream(s, d)
+      Seq(store, store + ".tmp").foreach(Scratch.clear)
+      val src = eventsStream(s, d)
         .select("user_id", "event_type", "value", "ts", "event_id")
-        .writeStream
-        .option("checkpointLocation", Scratch.dir("ckpt_stream_upsert"))
-        .trigger(Trigger.AvailableNow())
+      drain("stream_upsert")(src.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           upsertLatest(batch, store)
-        }
-        .start()
-      awaitAndUnload(q)
-      s.read.parquet(store)
+        })
+      // the store holds what upsertLatest writes: latestPerKey's columns
+      s.read.schema(latestPerKey(src).schema).parquet(store)
         .select(col("user_id"), col("event_type").as("last_type"),
           col("value").as("last_value"))
         .orderBy("user_id")
-    }},
+    },
       """SELECT user_id, event_type AS last_type, value AS last_value
         |FROM (SELECT user_id, event_type, value,
         |       row_number() OVER (PARTITION BY user_id
@@ -1581,45 +1448,15 @@ object StreamOps extends QueryModule {
     // open-window frontier only.
     // replayed-late rows dropped, sentinel window never finalized: the
     // append-mode emission equals the plain batch windowed count
-    Q("q_stream_late_drop", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_late_drop")
-      val scratch = Scratch.dir("late_drop_src")
-      rmPath(scratch); new java.io.File(scratch).mkdirs()
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"),
-        java.nio.file.Paths.get(s"$scratch/00_events.parquet"))
-      val tsT = eventsTsType(s, d)
-      writeSentinelFile(s, tsT, scratch, "01_flush", -1L)
-      writeSentinelFile(s, tsT, scratch, "02_flush2", -2L)
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"),
-        java.nio.file.Paths.get(s"$scratch/03_late.parquet"))
-      // the file source batches in MODIFICATION-TIME order and close
-      // stamps can tie-break arbitrarily — minutes-apart explicit stamps
-      // make the 00 → 01 → 02 → 03 sequence unambiguous
-      Seq("00_events", "01_flush", "02_flush2", "03_late").zipWithIndex
-        .foreach { case (n, i) =>
-          new java.io.File(s"$scratch/$n.parquet")
-            .setLastModified(1000000000000L + i * 60000L): Unit
-        }
-
-      val agg = s.readStream.schema(eventsRawSchema(tsT))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(scratch)
-        .withColumn("ts", normTs(col("ts"), tsT))
+    Q("q_stream_late_drop", { (s, d) =>
+      val agg = stagedEvents(s, d, "late_drop_src", sentinels = 2, replay = true)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "6 hours").as("w"))
         .agg(count(lit(1)).as("cnt"))
-      val q = agg.writeStream.format("memory").queryName("stream_late_drop")
-        .outputMode("append")
-        .option("checkpointLocation", Scratch.dir("ckpt_stream_late_drop"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitAndUnload(q)
-      s.table("stream_late_drop")
+      runToSnapshot(agg, "stream_late_drop", "append")
         .select(col("w.start").as("w_start"), col("cnt"))
         .orderBy("w_start")
-    }},
+    },
       """SELECT make_timestamp(CAST(floor(epoch(ts)/21600)*21600*1000000 AS BIGINT)) AS w_start,
         | count(*) AS cnt
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin),
@@ -1635,42 +1472,18 @@ object StreamOps extends QueryModule {
     // stateful operator), so level-2's windows need the third trigger to
     // flush. Sentinel rows live in a 2100 window that never closes and
     // so never appear in the output.
-    Q("q_stream_chained", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_chained")
-      val scratch = Scratch.dir("chained_src")
-      rmPath(scratch); new java.io.File(scratch).mkdirs()
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$d/events.parquet"),
-        java.nio.file.Paths.get(s"$scratch/00_events.parquet"))
-      val tsT = eventsTsType(s, d)
-      writeSentinelFile(s, tsT, scratch, "01_flush", -1L)
-      writeSentinelFile(s, tsT, scratch, "02_flush", -2L)
-      writeSentinelFile(s, tsT, scratch, "03_flush", -3L)
-      Seq("00_events", "01_flush", "02_flush", "03_flush").zipWithIndex
-        .foreach { case (n, i) =>
-          new java.io.File(s"$scratch/$n.parquet")
-            .setLastModified(1000000000000L + i * 60000L): Unit
-        }
-      val hourly = s.readStream.schema(eventsRawSchema(tsT))
-        .option("maxFilesPerTrigger", "1")
-        .parquet(scratch)
-        .withColumn("ts", normTs(col("ts"), tsT))
+    Q("q_stream_chained", { (s, d) =>
+      val hourly = stagedEvents(s, d, "chained_src", sentinels = 3)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour").as("w1"))
         .agg(count(lit(1)).as("cnt"))
       val rollup = hourly
         .groupBy(window(window_time(col("w1")), "6 hours").as("w"))
         .agg(max(col("cnt")).as("peak_hourly"), sum(col("cnt")).as("total"))
-      val q = rollup.writeStream.format("memory").queryName("stream_chained")
-        .outputMode("append")
-        .option("checkpointLocation", Scratch.dir("ckpt_stream_chained"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      awaitAndUnload(q)
-      s.table("stream_chained")
+      runToSnapshot(rollup, "stream_chained", "append")
         .select(col("w.start").as("w_start"), col("peak_hourly"), col("total"))
         .orderBy("w_start")
-    }},
+    },
       """WITH h AS (
         | SELECT make_timestamp(CAST(floor(epoch(ts)/3600)*3600*1000000 AS BIGINT)) AS h_start,
         |  count(*) AS cnt
@@ -1678,8 +1491,7 @@ object StreamOps extends QueryModule {
         |SELECT make_timestamp(CAST(floor(epoch(h_start)/21600)*21600*1000000 AS BIGINT)) AS w_start,
         | max(cnt) AS peak_hourly, CAST(sum(cnt) AS BIGINT) AS total
         |FROM h GROUP BY 1 ORDER BY 1""".stripMargin),
-    Q("q_stream_dedup", { (s, d) => withStatePartitions(s, 8) {
-      cleanCheckpoint("stream_dedup")
+    Q("q_stream_dedup", { (s, d) =>
       val doubled = eventsStream(s, d).unionByName(eventsStream(s, d))
       val agg = doubled
         .withWatermark("ts", "1 hour")
@@ -1687,7 +1499,7 @@ object StreamOps extends QueryModule {
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("cnt"))
       runToSnapshot(agg, "stream_dedup").orderBy("event_type")
-    }},
+    },
       "SELECT event_type, count(*) AS cnt FROM events GROUP BY 1 ORDER BY 1"),
 
     // North-star: sessionization — 30-min-gap sessions per user. Batch

@@ -14,7 +14,7 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
   *    providers. `StateStore.unloadAll` is `private[sql]`; a finished
   *    AvailableNow query's providers are otherwise cached forever (heap
   *    state + checkpoint-file-manager thread pool + maintenance-scan
-  *    slice per provider — see StreamOps.awaitAndUnload).
+  *    slice per provider — see StreamOps.drain).
   *  - [[extensionRegistry]]: the function registry a session booted with
   *    `ext` starts from (`SparkSessionExtensions.registerFunctions` is
   *    `private[sql]`).

@@ -80,12 +80,7 @@ class ContractSpec extends SparkSpec {
 
   test("partitioned write enables partition pruning at the scan") {
     val path = Scratch.dir("orders_partitioned")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    val dir = new java.io.File(path)
-    if (dir.exists()) rm(dir)
+    Scratch.clear(path)
     Tables.orders(spark, sfDir)
       .withColumn("y", year(col("o_orderdate")))
       .write.partitionBy("y").parquet(path)

@@ -69,10 +69,7 @@ class Round7Spec extends SparkSpec {
     // as TIMESTAMP(MICROS) NTZ across rounds; the loaders must read either
     // into identical session-UTC timestamps
     val base = Scratch.dir("tslayout")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm); f.delete(): Unit
-    }
-    rm(new java.io.File(base))
+    Scratch.clear(base)
     val instants = Seq( // (event_id, epoch micros)
       (1L, 1704067200000000L), // 2024-01-01T00:00:00Z
       (2L, 1704110400123456L), // 2024-01-01T12:00:00.123456Z
@@ -103,7 +100,7 @@ class Round7Spec extends SparkSpec {
         .find(_.getName.endsWith(".parquet")).get
       java.nio.file.Files.move(part.toPath,
         java.nio.file.Paths.get(s"$dir/events.parquet"))
-      rm(new java.io.File(tmp))
+      Scratch.clear(tmp)
     }
     val tzRows = instants.map { case (id, us) =>
       Row(id, java.sql.Timestamp.from(

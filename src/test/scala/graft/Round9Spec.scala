@@ -376,8 +376,8 @@ class Round9Spec extends SparkSpec {
     // whose update arrives before its insert must land on the update.
     import org.apache.spark.sql.types.DecimalType
     val store = Scratch.dir("cdc_spec_store")
-    graft.sources.Sources.rmDir(store)
-    graft.sources.Sources.rmDir(store + ".tmp")
+    Scratch.clear(store)
+    Scratch.clear(store + ".tmp")
     def wave(rows: Seq[(Long, String, java.math.BigDecimal, Long, String)]) =
       rows.toDF("k", "status", "price", "seq", "op")
         .withColumn("price", col("price").cast(DecimalType(18, 2)))

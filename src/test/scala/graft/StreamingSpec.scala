@@ -111,11 +111,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     def ts(s: String) = Timestamp.valueOf(s)
     val store = Scratch.dir("upsert_store_test")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(): Unit
-    }
-    rm(new java.io.File(store))
+    Scratch.clear(store)
     val stream = MemoryStream[(Long, String, Double, Timestamp, Long)]
     val df = stream.toDF().toDF("user_id", "event_type", "value", "ts", "event_id")
     val q = df.writeStream
@@ -220,5 +216,29 @@ class StreamingSpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(fin == Set((1L, 2L, 3L), (2L, 1L, 2L)), fin.toString)
     } finally q.stop()
+  }
+
+  test("a drained entry records the session's shuffle partitions in its checkpoint") {
+    // the state partition count is fixed when a query starts and written
+    // to offsets/0 with the other execution settings; a drain takes the
+    // session's count and leaves the session conf as it found it
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    StreamOps.queries("q_stream_hourly")(spark, sfDir).collect()
+    assert(spark.conf.get(key) == before)
+    val meta = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      Scratch.dir("ckpt_stream_hourly"), "offsets", "0")), "UTF-8")
+    val recorded = ("\"" + java.util.regex.Pattern.quote(key) + "\":\"(\\d+)\"").r
+      .findFirstMatchIn(meta).map(_.group(1))
+    assert(recorded.contains(before), s"offsets/0 records $recorded, session has $before")
+  }
+
+  test("a drained entry rerun over the checkpoint its first run left returns the same rows") {
+    Seq("q_stream_late_drop", "q_stream_upsert").foreach { q =>
+      val first = StreamOps.queries(q)(spark, sfDir).collect().toSeq
+      assert(new java.io.File(Scratch.dir("ckpt_" + q.stripPrefix("q_"))).isDirectory, q)
+      val second = StreamOps.queries(q)(spark, sfDir).collect().toSeq
+      assert(first.nonEmpty && second == first, q)
+    }
   }
 }
