@@ -73,9 +73,6 @@ object Scalars {
       .otherwise(lit("unknown"))
   }
 
-  /** P13 — 'Y'/'N' → 1/0 indicator. Ref: notebooks/002_EDA_csv.ipynb cell 14. */
-  def ynIndicator(c: Column): Column = when(c === "Y", 1).otherwise(0)
-
   /** P14 — ordered-categorical rank: position (1-based) of the trimmed value
     * in `levels`, 0 if absent. Ref: notebooks/002_EDA_csv.ipynb cell 12
     * (5-level most_severe_injury ordering). A when-chain keeps it codegen'd.

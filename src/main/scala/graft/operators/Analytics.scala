@@ -4,7 +4,7 @@ import graft.{Q, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DataType, DecimalType, LongType}
 import Relational.{sumDec, sumDecSql}
 import graft.CacheScope.TrackedDataset
 
@@ -197,6 +197,114 @@ object Analytics extends QueryModule {
                               ps: Seq[(String, Double)]): DataFrame =
     percentileAgg(cumulativeValueCounts(df, Seq(groupCol), valueCol),
       Seq(groupCol), ps)
+
+  /** The per-day revenue series of an `orders` frame, the spine of the
+    * daily-revenue family: `day` (the session-zone calendar date of
+    * `o_orderdate`) and `dt`, the day's exact DECIMAL sum of prices
+    * rounded to cents — no float enters. `extra` aggregates ride in the
+    * same pass. One row per day with orders, so the frame is
+    * calendar-bounded: the family's unpartitioned windows and array
+    * folds all run on it, never on orders.
+    */
+  private[graft] def dailyRevenue(orders: DataFrame,
+                                  extra: Column*): DataFrame =
+    orders.groupBy(col("o_orderdate").cast("date").as("day"))
+      .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("dt"),
+        extra: _*)
+
+  /** [[dailyRevenue]] as (day, the day's exact revenue in integer cents
+    * as `name`): a LONG, or `DecimalType(18, 0)` for the consumers that
+    * fold decimal moments.
+    */
+  private[graft] def dailyCents(orders: DataFrame, name: String,
+                                tpe: DataType = LongType): DataFrame =
+    dailyRevenue(orders)
+      .select(col("day"), (col("dt") * 100).cast(tpe).as(name))
+
+  /** `daily` with `day` replaced by its index t (LONG) = days since the
+    * series' first day, for phase and block arithmetic on the day spine.
+    * The first day is an ungrouped aggregate, one row on any input, so it
+    * attaches as a scalar subquery.
+    */
+  private def dayIndexed(daily: DataFrame): DataFrame = {
+    val t = datediff(col("day"), daily.agg(min(col("day"))).scalar())
+    daily.select(t.cast("long").as("t") +:
+      daily.columns.filter(_ != "day").map(col): _*)
+  }
+
+  /** Integer EWMA (α = ½) of the daily revenue: ewma_u₁ = rc₁ and
+    * ewma_uₜ = (rcₜ + ewma_uₜ₋₁) div 2, in exact integer cents, so the
+    * state carries no float and no per-step rounding to disagree across
+    * engines. One ordered array and one sequential fold over the
+    * calendar-bounded day spine. Rows are (day, rev, ewma_u) with `rev`
+    * (the day's revenue as a double), else (day, rc, ewma_u).
+    */
+  private def dailyEwma(orders: DataFrame, rev: Boolean = false): DataFrame = {
+    val (carry, tpe) = if (rev) ("rev", "double") else ("rc", "bigint")
+    val cents = (col("dt") * 100).cast("long").as("rc")
+    val days = dailyRevenue(orders).select(
+      (if (rev) Seq(col("day"), col("dt").cast("double").as("rev"), cents)
+       else Seq(col("day"), cents)): _*)
+    days.agg(array_sort(collect_list(struct(days.columns.map(col): _*)))
+        .as("a"))
+      .selectExpr(
+        s"""inline(aggregate(
+          |  a,
+          |  cast(array() as array<struct<day:date,$carry:$tpe,ewma_u:bigint>>),
+          |  (acc, e) -> array_append(acc, named_struct(
+          |    'day', e.day, '$carry', e.$carry,
+          |    'ewma_u', case when size(acc) = 0 then e.rc
+          |              else (e.rc + element_at(acc, -1).ewma_u) div 2
+          |              end))))""".stripMargin)
+  }
+
+  /** Classical additive decomposition of a (day, rc) cents series. The
+    * trend is the centred 7-day moving average, floored (s7 div 7), on
+    * the days whose window holds 7 days (the edges drop — the textbook
+    * contract); the first frame is those days as (day, rc, det = rc −
+    * trend, dow = ISO weekday). The second is each weekday's seasonal
+    * component (dow, n_days, seasonal = mean det). det goes negative,
+    * where integer division's floor and truncation differ across
+    * engines, so the mean runs on 2^40-offset values (positive by
+    * construction) and shifts back.
+    */
+  private def weeklyDetrend(daily: DataFrame): (DataFrame, DataFrame) = {
+    val K = 1099511627776L // 2^40
+    val w7 = Window.orderBy("day").rowsBetween(-3, 3)
+    val det = daily
+      .withColumn("cnt7", count(lit(1)).over(w7))
+      .withColumn("s7", sum(col("rc")).over(w7))
+      .filter(col("cnt7") === 7)
+      .select(col("day"), col("rc"), (col("rc") - expr("s7 div 7")).as("det"),
+        (weekday(col("day")) + 1).as("dow"))
+    val seas = det.groupBy("dow")
+      .agg(count(lit(1)).as("n_days"), sum(col("det") + K).as("so"))
+      .select(col("dow"), col("n_days"),
+        (expr("so div n_days") - K).as("seasonal"))
+    (det, seas)
+  }
+
+  /** The cumulative-count spine of column `v`: (v, c = rows at v, cum =
+    * rows at or below v), one row per distinct value.
+    */
+  private def valueCum(df: DataFrame, v: String): DataFrame =
+    df.groupBy(v).agg(count(lit(1)).as("c"))
+      .withColumn("cum", sum(col("c")).over(Window.orderBy(v)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+
+  /** Type-1 order statistic j/k of a [[valueCum]] spine: the least
+    * `value` whose running count reaches j/k of the total, k·cum ≥ j·n —
+    * integer rank math, never an interpolated quantile. `n` comes from
+    * the one-row `tot`; `carry` aggregates over the qualifying rows ride
+    * along.
+    */
+  private def orderStat(cum: DataFrame, tot: DataFrame, value: String,
+                        n: String, j: Int, k: Int, as: String,
+                        carry: Column*): DataFrame = {
+    val rank = if (j == 1) col(n) else col(n) * j
+    cum.crossJoin(broadcast(tot)).filter(col("cum") * k >= rank)
+      .agg(min(col(value)).as(as), carry: _*)
+  }
 
   /** One-call `describe(include='all')` (the reference's full-frame EDA
     * summary, notebooks/002_EDA_csv.ipynb cells 18/31/33): one output row
@@ -1067,10 +1175,7 @@ object Analytics extends QueryModule {
     * map-side to k rows.
     */
   def acfDaily(orders: DataFrame, maxLag: Int): DataFrame = {
-    val daily = orders
-      .groupBy(col("o_orderdate").cast("date").as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast(DecimalType(18, 0)).as("yc"))
+    val daily = dailyCents(orders, "yc", DecimalType(18, 0))
     val w = Window.orderBy("day")
     val lagged = daily.select(col("yc") +:
       (1 to maxLag).map(k => lag(col("yc"), k).over(w).as(s"l$k")): _*)
@@ -1406,10 +1511,7 @@ object Analytics extends QueryModule {
     * over the calendar-bounded day spine.
     */
   def runsTest(orders: DataFrame): DataFrame = {
-    val daily = orders
-      .groupBy(col("o_orderdate").cast("date").as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast(DecimalType(18, 0)).as("yc"))
+    val daily = dailyCents(orders, "yc", DecimalType(18, 0))
     val w = Window.orderBy("day")
     val signs = daily
       .withColumn("s", signum((col("yc") - lag(col("yc"), 1).over(w))
@@ -1439,10 +1541,7 @@ object Analytics extends QueryModule {
     * Two map-side-combined aggregations: day cardinality, then ≤7 rows.
     */
   def dowSeasonality(orders: DataFrame): DataFrame = {
-    val daily = orders
-      .groupBy(col("o_orderdate").cast("date").as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast(DecimalType(18, 0)).as("yc"))
+    val daily = dailyCents(orders, "yc", DecimalType(18, 0))
     val byDow = daily
       .groupBy((weekday(col("day")) + 1).as("dow"))
       .agg(count(lit(1)).as("n_days"), sum(col("yc")).as("s"))
@@ -1511,10 +1610,7 @@ object Analytics extends QueryModule {
     * is one ORDER BY abs LIMIT 1 on that spine.
     */
   def cusumChangepoint(orders: DataFrame): DataFrame = {
-    val daily = orders
-      .groupBy(col("o_orderdate").cast("date").as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast(DecimalType(18, 0)).as("yc"))
+    val daily = dailyCents(orders, "yc", DecimalType(18, 0))
     val w = Window.orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = daily
@@ -2154,13 +2250,10 @@ object Analytics extends QueryModule {
     * EWMA/ACF posture), then a scalar moment fold.
     */
   def grangerDaily(orders: DataFrame): DataFrame = {
-    val day = to_date(col("o_orderdate"))
-    val cents = (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-      .cast("long")
     // whole dollars PER DAY (one integer floor of the exact cents sum)
-    val daily = orders.groupBy(day.as("day"))
-      .agg(sum(cents).as("sc"), count(lit(1)).as("cnt"))
-      .select(col("day"), expr("sc div 100").as("rev"), col("cnt"))
+    val daily = dailyRevenue(orders, count(lit(1)).as("cnt"))
+      .select(col("day"), expr("CAST(dt * 100 AS BIGINT) div 100").as("rev"),
+        col("cnt"))
     val bounds = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
     val spine = bounds.select(explode(expr(
         "sequence(d0, d1, interval 1 day)")).as("day"))
@@ -2532,10 +2625,7 @@ object Analytics extends QueryModule {
     * dd_ppm is one integer division against the peak.
     */
   def maxDrawdown(orders: DataFrame): DataFrame = {
-    val daily = orders
-      .groupBy(col("o_orderdate").cast("date").as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("rc"))
+    val daily = dailyCents(orders, "rc")
     val w = Window.orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val dd = daily.withColumn("peak", max(col("rc")).over(w))
@@ -2622,10 +2712,7 @@ object Analytics extends QueryModule {
     * forecasts h = 1..7 re-add the target day-of-week seasonal.
     */
   def holtWinters(orders: DataFrame): DataFrame = {
-    orders
-      .groupBy(col("o_orderdate").cast("date").as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("rc"))
+    dailyCents(orders, "rc")
       .select(col("day"), col("rc"),
         (dayofweek(col("day")) - 1).cast("int").as("dw"))
       .agg(array_sort(collect_list(struct(col("day"), col("rc"), col("dw"))))
@@ -3096,10 +3183,7 @@ object Analytics extends QueryModule {
     // split are all INTEGER arithmetic — no float quantile boundary can
     // ever disagree between engines
     val ks = Seq(1L, 5L, 9L)
-    val daily = orders
-      .groupBy(col("o_orderdate").cast("date").as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("dc"))
+    val daily = dailyCents(orders, "dc")
     val n = daily.agg(count(lit(1)).as("nd"))
     val idx = daily.crossJoin(broadcast(n))
       .withColumn("rn", row_number().over(Window.orderBy("day")))
@@ -3181,10 +3265,7 @@ object Analytics extends QueryModule {
     * bounded day spine); both MAEs and the ratio are one double tree.
     */
   def maseNaive(orders: DataFrame): DataFrame = {
-    val daily = orders
-      .groupBy(col("o_orderdate").cast("date").as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("dc"))
+    val daily = dailyCents(orders, "dc")
     val n = daily.agg(count(lit(1)).as("nd"))
     val w = Window.orderBy("day")
     val idx = daily.crossJoin(broadcast(n))
@@ -3215,27 +3296,12 @@ object Analytics extends QueryModule {
     * remainder) — the two numbers that decide whether q_holt_winters'
     * seasonal machinery is worth running on a series at all.
     *
-    * Exactness: components replay q_seasonal_decompose's integer
-    * construction bit-for-bit (floor trend, 2^40-offset seasonal
-    * means); variances come from exact integer moments (squares in
-    * DECIMAL(38,0)) and the strengths are one double tree.
+    * Exactness: the components are q_seasonal_decompose's own
+    * ([[weeklyDetrend]]); variances come from exact integer moments
+    * (squares in DECIMAL(38,0)) and the strengths are one double tree.
     */
   def seasonalStrength(orders: DataFrame): DataFrame = {
-    val K = 1099511627776L // 2^40
-    val daily = orders
-      .groupBy(col("o_orderdate").cast("date").as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("rc"))
-    val w7 = Window.orderBy("day").rowsBetween(-3, 3)
-    val det = daily
-      .withColumn("cnt7", count(lit(1)).over(w7))
-      .withColumn("s7", sum(col("rc")).over(w7))
-      .filter(col("cnt7") === 7)
-      .select(col("day"), col("rc"), (col("rc") - expr("s7 div 7")).as("det"),
-        (weekday(col("day")) + 1).as("dow"))
-    val seas = det.groupBy("dow")
-      .agg(count(lit(1)).as("nd"), sum(col("det") + K).as("so"))
-      .select(col("dow"), (expr("so div nd") - K).as("seasonal"))
+    val (det, seas) = weeklyDetrend(dailyCents(orders, "rc"))
     val rows = det.join(broadcast(seas), Seq("dow"))
       .select(col("det"), (col("det") - col("seasonal")).as("rem"),
         (col("rc") - col("seasonal")).as("tr"))
@@ -4145,10 +4211,7 @@ object Analytics extends QueryModule {
     * frame.
     */
   def theilSen(orders: DataFrame, windowDays: Int = 180): DataFrame = {
-    val daily = orders
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("y"))
+    val daily = dailyCents(orders, "y")
       .select(datediff(col("day"), lit("1970-01-01")).as("t"), col("y"))
     val mx = daily.agg(max(col("t")).as("mt"))
     val d = daily.crossJoin(broadcast(mx))
@@ -4165,17 +4228,11 @@ object Analytics extends QueryModule {
           "AS BIGINT) - (CASE WHEN b.y < a.y AND " +
           "(CAST(b.y - a.y AS DECIMAL(38,0)) * 100) % (b.t - a.t) != 0 " +
           "THEN 1 ELSE 0 END)").as("s_fp"))
-    val gp = pairs.groupBy("s_fp").agg(count(lit(1)).as("c"))
-    val w = Window.orderBy("s_fp")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = gp.withColumn("cum", sum(col("c")).over(w))
+    val cum = valueCum(pairs, "s_fp")
     val tot = d.agg(count(lit(1)).as("n_days"))
       .crossJoin(pairs.agg(count(lit(1)).as("n_pairs")))
-    cum.crossJoin(broadcast(tot))
-      .filter(col("cum") * 2 >= col("n_pairs"))
-      .agg(max(col("n_days")).as("n_days"),
-        max(col("n_pairs")).as("n_pairs"),
-        min(col("s_fp")).as("slope_fp"))
+    orderStat(cum, tot, "s_fp", "n_pairs", 1, 2, "slope_fp",
+        max(col("n_days")).as("n_days"), max(col("n_pairs")).as("n_pairs"))
       .select(col("n_days"), col("n_pairs"),
         round(col("slope_fp").cast("double") / 10000.0, 6)
           .as("slope_dollars_per_day"))
@@ -4213,14 +4270,10 @@ object Analytics extends QueryModule {
     // click side keeps the pair build shuffle-free at any corpus size
     val diffs = x.crossJoin(broadcast(y))
       .select((col("x") - col("y")).as("d"))
-    val wd = Window.orderBy("d")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = diffs.groupBy("d").agg(count(lit(1)).as("c"))
-      .withColumn("cum", sum(col("c")).over(wd))
+    val cum = valueCum(diffs, "d")
     val np = diffs.agg(count(lit(1)).as("n_pairs"))
-    val hl = cum.crossJoin(broadcast(np))
-      .filter(col("cum") * 2 >= col("n_pairs"))
-      .agg(min(col("d")).as("hl"), max(col("n_pairs")).as("n_pairs"))
+    val hl = orderStat(cum, np, "d", "n_pairs", 1, 2, "hl",
+      max(col("n_pairs")).as("n_pairs"))
     val allv = x.select(col("x").as("v"), lit(1L).as("isx"))
       .unionByName(y.select(col("y").as("v"), lit(0L).as("isx")))
     val wv = Window.orderBy("v")
@@ -4306,14 +4359,9 @@ object Analytics extends QueryModule {
       .select((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
         .cast("long").as("v"))
       .persistTracked()
-    val wv = Window.orderBy("v")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = v.groupBy("v").agg(count(lit(1)).as("c"))
-      .withColumn("cum", sum(col("c")).over(wv))
+    val cum = valueCum(v, "v")
     val nn = v.agg(count(lit(1)).as("n"))
-    val u = cum.crossJoin(broadcast(nn))
-      .filter(col("cum") * 20 >= col("n") * 19)
-      .agg(min(col("v")).as("u"), max(col("n")).as("n"))
+    val u = orderStat(cum, nn, "v", "n", 19, 20, "u", max(col("n")).as("n"))
     def dec(c: Column) = c.cast(DecimalType(38, 0))
     val exc = v.crossJoin(broadcast(u)).filter(col("v") > col("u"))
       .agg(max(col("u")).as("u"), max(col("n")).as("n"),
@@ -4420,14 +4468,7 @@ object Analytics extends QueryModule {
   def harmonicPower(orders: DataFrame,
                     periods: Seq[Int] = Seq(7, 30)): DataFrame = {
     def dec(c: Column) = c.cast(DecimalType(38, 0))
-    val daily = orders.groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("y"))
-    val mn = daily.agg(min(col("day")).as("d0"))
-    val spine = daily.crossJoin(broadcast(mn))
-      .select(datediff(col("day"), col("d0")).cast("long").as("t"),
-        col("y"))
-      .persistTracked()
+    val spine = dayIndexed(dailyCents(orders, "y")).persistTracked()
     val g = spine.agg(count(lit(1)).as("n"), sum(col("y")).as("s"))
     val zc = spine.crossJoin(broadcast(g))
       .select(col("t"), (dec(col("n")) * col("y") - dec(col("s"))).as("z"),
@@ -4479,21 +4520,13 @@ object Analytics extends QueryModule {
   def gmmDaily(orders: DataFrame, iters: Int = 3): DataFrame = {
     def dec(c: Column) = c.cast(DecimalType(38, 0))
     def d(c: Column) = c.cast("double")
-    val daily = orders.groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("y"))
+    val daily = dailyCents(orders, "y")
       .select("y").persistTracked()
-    val wv = Window.orderBy("y")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = daily.groupBy("y").agg(count(lit(1)).as("c"))
-      .withColumn("cum", sum(col("c")).over(wv)).persistTracked()
+    val cum = valueCum(daily, "y").persistTracked()
     val nn = daily.agg(count(lit(1)).as("n"), sum(dec(col("y"))).as("sy"),
       sum(dec(col("y")) * dec(col("y"))).as("syy"))
-    val q1 = cum.crossJoin(broadcast(nn)).filter(col("cum") * 4 >= col("n"))
-      .agg(min(col("y")).as("m1"))
-    val q3 = cum.crossJoin(broadcast(nn))
-      .filter(col("cum") * 4 >= col("n") * 3)
-      .agg(min(col("y")).as("m2"))
+    val q1 = orderStat(cum, nn, "y", "n", 1, 4, "m1")
+    val q3 = orderStat(cum, nn, "y", "n", 3, 4, "m2")
     // init variance clamps like the M-step: an all-identical (or single)
     // day corpus gives s0 = 0 and the FIRST E-step would hit the eager
     // ANSI double 0/0 inside f() — the same one-regime class the M-step
@@ -4575,11 +4608,7 @@ object Analytics extends QueryModule {
         .as("p"),
         sum(when(col("event_type") === "click", cents).otherwise(0L))
           .as("c"))
-    val mn = daily.agg(min(col("day")).as("d0"))
-    val spine = daily.crossJoin(broadcast(mn))
-      .select(datediff(col("day"), col("d0")).cast("long").as("t"),
-        col("p"), col("c"))
-      .persistTracked()
+    val spine = dayIndexed(daily).persistTracked()
     val la = spine.select(col("t"), col("p"),
         explode(array((-maxLag to maxLag).map(k => lit(k.toLong)): _*))
           .as("lag"))
@@ -4665,25 +4694,15 @@ object Analytics extends QueryModule {
     * lead window runs on the WEEK spine (calendar-bounded).
     */
   def saxMotifs(orders: DataFrame): DataFrame = {
-    val daily = orders.groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("y"))
-    val mn = daily.agg(min(col("day")).as("d0"))
-    val weeks = daily.crossJoin(broadcast(mn))
-      .groupBy(expr("CAST(datediff(day, d0) div 7 AS BIGINT)").as("wk"))
+    val weeks = dayIndexed(dailyCents(orders, "y"))
+      .groupBy(expr("t div 7").as("wk"))
       .agg(sum(col("y")).as("ws"), count(lit(1)).as("nd"))
       .filter(col("nd") === 7)
       .persistTracked()
-    val wv = Window.orderBy("ws")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = weeks.groupBy("ws").agg(count(lit(1)).as("c"))
-      .withColumn("cum", sum(col("c")).over(wv))
+    val cum = valueCum(weeks, "ws")
     val nn = weeks.agg(count(lit(1)).as("n"))
-    val b1 = cum.crossJoin(broadcast(nn)).filter(col("cum") * 3 >= col("n"))
-      .agg(min(col("ws")).as("b1"))
-    val b2 = cum.crossJoin(broadcast(nn))
-      .filter(col("cum") * 3 >= col("n") * 2)
-      .agg(min(col("ws")).as("b2"))
+    val b1 = orderStat(cum, nn, "ws", "n", 1, 3, "b1")
+    val b2 = orderStat(cum, nn, "ws", "n", 2, 3, "b2")
     val sym = weeks.crossJoin(broadcast(b1)).crossJoin(broadcast(b2))
       .select(col("wk"),
         when(col("ws") <= col("b1"), "a")
@@ -4723,9 +4742,7 @@ object Analytics extends QueryModule {
     */
   def jarqueBera(orders: DataFrame): DataFrame = {
     def dec(c: Column) = c.cast(DecimalType(38, 0))
-    val daily = orders.groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("yc"))
+    val daily = dailyCents(orders, "yc")
       .select(expr("yc div 100").as("y"))
       .persistTracked()
     val g = daily.agg(count(lit(1)).as("n"), sum(col("y")).as("s"))
@@ -4939,14 +4956,7 @@ object Analytics extends QueryModule {
     */
   def hurst(orders: DataFrame, ks: Seq[Int] = Seq(8, 16, 32, 64))
       : DataFrame = {
-    val daily = orders.groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("y"))
-    val mn = daily.agg(min(col("day")).as("d0"))
-    val spine = daily.crossJoin(broadcast(mn))
-      .select(datediff(col("day"), col("d0")).cast("long").as("t"),
-        col("y"))
-      .persistTracked()
+    val spine = dayIndexed(dailyCents(orders, "y")).persistTracked()
     def d(c: Column) = c.cast("double")
     val perK = ks.map { k =>
       val blk = expr(s"t div $k")
@@ -5004,10 +5014,7 @@ object Analytics extends QueryModule {
     * zero. Scale posture: corpus → day spine → windowDays² pairs.
     */
   def mannKendall(orders: DataFrame, windowDays: Int = 180): DataFrame = {
-    val daily = orders
-      .groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("y"))
+    val daily = dailyCents(orders, "y")
       .select(datediff(col("day"), lit("1970-01-01")).as("t"), col("y"))
     val mx = daily.agg(max(col("t")).as("mt"))
     val dd = daily.crossJoin(broadcast(mx))
@@ -5054,14 +5061,9 @@ object Analytics extends QueryModule {
     * (both calendar-bounded windows), then a TakeOrdered(1).
     */
   def pettitt(orders: DataFrame): DataFrame = {
-    val daily = orders.groupBy(to_date(col("o_orderdate")).as("day"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("y"))
+    val daily = dailyCents(orders, "y")
       .persistTracked()
-    val wv = Window.orderBy("y")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val dr = daily.groupBy("y").agg(count(lit(1)).as("c"))
-      .withColumn("cum", sum(col("c")).over(wv))
+    val dr = valueCum(daily, "y")
       .select(col("y"), (lit(2L) * col("cum") - col("c") + 1L).as("dd"))
     val nn = daily.agg(count(lit(1)).as("n"))
     val wt = Window.orderBy("day")
@@ -7601,9 +7603,7 @@ object Analytics extends QueryModule {
     // DuckDB's segment-tree window vs Spark's running scan would drift
     // doubles) and casts once at the end.
     Q("q_rolling_revenue", { (s, d) =>
-      val daily = Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("dt"))
+      val daily = dailyRevenue(Tables.orders(s, d))
       val w = Window.orderBy("day_num").rangeBetween(-6, 0)
       daily
         .withColumn("day_num", datediff(col("day"), lit("1970-01-01").cast("date")))
@@ -8626,10 +8626,7 @@ object Analytics extends QueryModule {
     // DuckDB's quantile_cont semantics bit-for-bit. Day-spine window,
     // same justification as q_rolling_revenue.
     Q("q_rolling_median", { (s, d) =>
-      val daily = Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-          .cast("long").as("dc"))
+      val daily = dailyCents(Tables.orders(s, d), "dc")
       val w = Window.orderBy("day_num").rangeBetween(-6, 0)
       val arr = sort_array(collect_list(col("dc")).over(w))
       val n = size(arr)
@@ -8697,30 +8694,11 @@ object Analytics extends QueryModule {
         | (SELECT count(*) FROM tb) AS n_view_72h,
         | (SELECT count(*) FROM tc) AS n_purchase_72h""".stripMargin),
     // A9 — EWMA-smoothed daily revenue (α = 0.5), the recursive smoother
-    // a rolling mean can't express: ewma_t = (x_t + ewma_{t−1})/2. The
-    // per-day pre-aggregate is calendar-bounded (the q_rolling_revenue
-    // argument), so ONE ordered array + one sequential fold is O(days).
-    // The recursion runs in exact integer CENTS with floor division —
-    // zero float in the state, so there is no per-step rounding to
-    // disagree across engines (a round(x,6) recurrence measurably
-    // diverged on half-ties); last(acc) carries the state.
+    // a rolling mean can't express: ewma_t = (x_t + ewma_{t−1})/2, the
+    // integer-cents fold of [[dailyEwma]] (a round(x,6) recurrence
+    // measurably diverged across engines on half-ties).
     Q("q_ewma_daily", { (s, d) =>
-      Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("dt"))
-        .select(col("day"), col("dt").cast("double").as("rev"),
-          (col("dt") * 100).cast("long").as("rc"))
-        .agg(array_sort(collect_list(struct(col("day"), col("rev"),
-          col("rc")))).as("a"))
-        .selectExpr(
-          """inline(aggregate(
-            |  a,
-            |  cast(array() as array<struct<day:date,rev:double,ewma_u:bigint>>),
-            |  (acc, e) -> array_append(acc, named_struct(
-            |    'day', e.day, 'rev', e.rev,
-            |    'ewma_u', case when size(acc) = 0 then e.rc
-            |              else (e.rc + element_at(acc, -1).ewma_u) div 2
-            |              end))))""".stripMargin)
+      dailyEwma(Tables.orders(s, d), rev = true)
         .select(col("day"), col("rev"),
           (col("ewma_u").cast("double") / 100.0).as("ewma"))
         .orderBy("day")
@@ -8748,29 +8726,11 @@ object Analytics extends QueryModule {
     // detrended series IS the additive seasonal component — the
     // decomposition artifact behind q_dow_seasonality's one-number
     // index and q_anomaly_daily's adjustment. Exact integers
-    // end-to-end; the one subtlety is that detrended values go
-    // NEGATIVE, where integer division's floor-vs-truncate semantics
-    // can differ across engines — so the group mean runs on
-    // 2^40-offset values (positive by construction, where both agree)
-    // and shifts back, the q_embed_outliers +127 idiom. Scale:
-    // day-spine windows only (calendar-bounded), then a ≤7-row group.
+    // end-to-end ([[weeklyDetrend]]). Scale: day-spine windows only
+    // (calendar-bounded), then a ≤7-row group.
     Q("q_seasonal_decompose", { (s, d) =>
-      val K = 1099511627776L // 2^40
-      val daily = Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-          .cast("long").as("rc"))
-      val w7 = Window.orderBy("day").rowsBetween(-3, 3)
-      val det = daily
-        .withColumn("cnt7", count(lit(1)).over(w7))
-        .withColumn("s7", sum(col("rc")).over(w7))
-        .filter(col("cnt7") === 7)
-        .select(col("day"), (col("rc") - expr("s7 div 7")).as("det"))
-      det.groupBy((weekday(col("day")) + 1).as("dow"))
-        .agg(count(lit(1)).as("n_days"),
-          sum(col("det") + K).as("so"))
-        .select(col("dow"), col("n_days"),
-          (expr("so div n_days") - K).as("seasonal_cents"))
+      weeklyDetrend(dailyCents(Tables.orders(s, d), "rc"))._2
+        .select(col("dow"), col("n_days"), col("seasonal").as("seasonal_cents"))
         .orderBy("dow")
     },
       """WITH d AS (
@@ -8802,10 +8762,7 @@ object Analytics extends QueryModule {
     // day-spine fold (calendar-bounded array aggregate), moments from
     // one scalar pass.
     Q("q_cusum", { (s, d) =>
-      cusumOfDaily(Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-          .cast("long").as("rc")))
+      cusumOfDaily(dailyCents(Tables.orders(s, d), "rc"))
     },
       """WITH RECURSIVE d AS (
         | SELECT o_orderdate AS day,
@@ -8860,10 +8817,7 @@ object Analytics extends QueryModule {
     // Scale: day-spine windows only (calendar-bounded); moments join as
     // one broadcast scalar row.
     Q("q_sax_symbolic", { (s, d) =>
-      saxSymbolic(Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-          .cast("long").as("c")))
+      saxSymbolic(dailyCents(Tables.orders(s, d), "c"))
     },
       """WITH d AS (
         | SELECT o_orderdate AS day,
@@ -8901,20 +8855,7 @@ object Analytics extends QueryModule {
     // on the calendar-bounded day spine (the q_rolling_revenue
     // argument), never on orders.
     Q("q_forecast_backtest", { (s, d) =>
-      val ew = Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("dt"))
-        .select(col("day"), (col("dt") * 100).cast("long").as("rc"))
-        .agg(array_sort(collect_list(struct(col("day"), col("rc")))).as("a"))
-        .selectExpr(
-          """inline(aggregate(
-            |  a,
-            |  cast(array() as array<struct<day:date,rc:bigint,ewma_u:bigint>>),
-            |  (acc, e) -> array_append(acc, named_struct(
-            |    'day', e.day, 'rc', e.rc,
-            |    'ewma_u', case when size(acc) = 0 then e.rc
-            |              else (e.rc + element_at(acc, -1).ewma_u) div 2
-            |              end))))""".stripMargin)
+      val ew = dailyEwma(Tables.orders(s, d))
       val w = Window.orderBy("day")
       val bt = ew
         .withColumn("prev_ewma", lag(col("ewma_u"), 1).over(w))
@@ -8985,20 +8926,7 @@ object Analytics extends QueryModule {
     // residual spine is day-cardinality (calendar-bounded windows);
     // q̂ broadcasts back as a scalar.
     Q("q_conformal_interval", { (s, d) =>
-      val ew = Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("dt"))
-        .select(col("day"), (col("dt") * 100).cast("long").as("rc"))
-        .agg(array_sort(collect_list(struct(col("day"), col("rc")))).as("a"))
-        .selectExpr(
-          """inline(aggregate(
-            |  a,
-            |  cast(array() as array<struct<day:date,rc:bigint,ewma_u:bigint>>),
-            |  (acc, e) -> array_append(acc, named_struct(
-            |    'day', e.day, 'rc', e.rc,
-            |    'ewma_u', case when size(acc) = 0 then e.rc
-            |              else (e.rc + element_at(acc, -1).ewma_u) div 2
-            |              end))))""".stripMargin)
+      val ew = dailyEwma(Tables.orders(s, d))
       val w = Window.orderBy("day")
       val res = ew
         .withColumn("prev_ewma", lag(col("ewma_u"), 1).over(w))
@@ -9062,10 +8990,7 @@ object Analytics extends QueryModule {
     // l₁ = y₁, b₁ = 0. The fold runs once over the calendar-bounded
     // ordered array; output is the 7 forecast rows.
     Q("q_holt_forecast", { (s, d) =>
-      Tables.orders(s, d)
-        .groupBy(col("o_orderdate").cast("date").as("day"))
-        .agg(((sum(col("o_totalprice").cast(DecimalType(18, 2)))) * 100)
-          .cast("long").as("rc"))
+      dailyCents(Tables.orders(s, d), "rc")
         .agg(array_sort(collect_list(struct(col("day"), col("rc")))).as("a"))
         .selectExpr(
           """aggregate(

@@ -811,18 +811,6 @@ object StreamOps extends QueryModule {
     },
       graft.operators.Analytics.oracles("q_srm_check")),
 
-    // BOUNDED-STATE LIVE SRM — q_stream_srm with the state class fixed:
-    // the exact monitor keeps one state key per (arm, user), which is
-    // assignment-feed cardinality at web scale. Here the ONLY streaming
-    // state is 2 HLL++ register arrays (one per arm, fixed KBs at any
-    // user cardinality — the sketch-state pattern q_stream_hll_users
-    // establishes for windows). HLL register merges are max-based and
-    // order-independent, so the complete-mode snapshot estimate is a
-    // pure function of the data: the gate asserts the streamed estimate
-    // EQUALS the batch sketch estimate per arm (stream ≡ batch-HLL),
-    // plus the 2% contract vs exact per-arm distincts. na/nb/chi2 stay
-    // the EXACT batch values (same readout as q_srm_check): the sketch
-    // monitors, the readout is exact.
     // LIVE BAYESIAN A/B — q_bayes_ab as a stream: the streaming state is
     // the two arms' (n, Σcents, Σcents²) moment rows (complete-mode
     // groupBy over a 2-value key — constant-size state at any stream
@@ -855,6 +843,18 @@ object StreamOps extends QueryModule {
       graft.operators.Analytics.bayesAbFinish(m)
     },
       graft.operators.Analytics.oracles("q_bayes_ab")),
+    // BOUNDED-STATE LIVE SRM — q_stream_srm with the state class fixed:
+    // the exact monitor keeps one state key per (arm, user), which is
+    // assignment-feed cardinality at web scale. Here the ONLY streaming
+    // state is 2 HLL++ register arrays (one per arm, fixed KBs at any
+    // user cardinality — the sketch-state pattern q_stream_hll_users
+    // establishes for windows). HLL register merges are max-based and
+    // order-independent, so the complete-mode snapshot estimate is a
+    // pure function of the data: the gate asserts the streamed estimate
+    // EQUALS the batch sketch estimate per arm (stream ≡ batch-HLL),
+    // plus the 2% contract vs exact per-arm distincts. na/nb/chi2 stay
+    // the EXACT batch values (same readout as q_srm_check): the sketch
+    // monitors, the readout is exact.
     // the exact readout twin + the two pinned sketch contracts (no
     // stripMargin on the outer template: the inner SQL is pre-stripped)
     Q("q_stream_srm_hll", { (s, d) =>
@@ -1081,12 +1081,6 @@ object StreamOps extends QueryModule {
         | AND r.ts > l.ts AND r.ts <= l.ts + INTERVAL 10 MINUTE
         |GROUP BY 1 ORDER BY 1""".stripMargin),
 
-    // Custom arbitrary state (flatMapGroupsWithState): per-user running
-    // totals in update mode — the state op the built-in aggregates can't
-    // express (the full API surface: state get/update per group, typed
-    // output). Update-mode re-emits a user's row each batch it changes;
-    // the final emission per user (max struct — n_events is monotone) is
-    // the end-of-stream state, which must equal the plain batch aggregate.
     // STREAMING COUNT-MIN: the mergeability story made live — the
     // 4×512-cell CMS grows under streaming aggregation (bounded state:
     // d·w counters REGARDLESS of stream length or key cardinality, the
@@ -1131,6 +1125,12 @@ object StreamOps extends QueryModule {
         | CAST(min(c.cell) - p.cnt AS BIGINT) AS overestimate
         |FROM probes p JOIN cells c USING (r, bucket)
         |GROUP BY p.key, p.cnt ORDER BY exact_cnt DESC, key""".stripMargin),
+    // Custom arbitrary state (flatMapGroupsWithState): per-user running
+    // totals in update mode — the state op the built-in aggregates can't
+    // express (the full API surface: state get/update per group, typed
+    // output). Update-mode re-emits a user's row each batch it changes;
+    // the final emission per user (max struct — n_events is monotone) is
+    // the end-of-stream state, which must equal the plain batch aggregate.
     Q("q_stream_state_totals", { (s, d) =>
       runToSnapshot(runningUserTotals(eventsStream(s, d)).toDF(),
           "stream_state_totals", "update")
@@ -1339,19 +1339,6 @@ object StreamOps extends QueryModule {
     },
       "SELECT CAST(hour(ts) AS INTEGER) AS h, count(*) AS cnt FROM events GROUP BY 1 ORDER BY 1"),
 
-    // Streaming UPSERT sink: foreachBatch merges each micro-batch into a
-    // keyed store keeping the most-recent row per user — the CDC /
-    // materialized-view sink (Kafka compacted-topic semantics) the
-    // reference's consumer approximates by overwriting whole snapshots.
-    // Recency is decided by (ts, event_id), never arrival order, so
-    // out-of-order and replayed batches converge to the same table (the
-    // cross-batch case is pinned in StreamingSpec with an out-of-order
-    // MemoryStream). Each merge collapses the batch map-side, unions the
-    // existing store, and re-collapses — state lives in the store, not
-    // the stream. Parquet stands in for an ACID table: the merge writes
-    // to a staging dir and swaps, because overwriting a path while the
-    // plan reads it is undefined; on a real deployment this foreachBatch
-    // body is a MERGE INTO an Iceberg/Delta table.
     // STREAMING CDC APPLY — q_cdc_merge's changelog driven through a
     // real file stream in three waves (base / updates+inserts /
     // deletes, maxFilesPerTrigger=1 so the merge crosses micro-batch
@@ -1360,7 +1347,6 @@ object StreamOps extends QueryModule {
     // (a delete arriving before its insert cannot resurrect), which is
     // the property that lets the same code run at-least-once at 100 TB.
     // Gate: final store state ≡ the batch q_cdc_merge oracle verbatim.
-    // upsert store ≡ last event per user over the whole table
     // stream ≡ batch: the q_cdc_merge oracle verbatim (same changelog)
     Q("q_stream_cdc_apply", { (s, d) =>
       import org.apache.spark.sql.types._
@@ -1404,6 +1390,20 @@ object StreamOps extends QueryModule {
         .orderBy("o_orderkey")
     },
       graft.operators.Scd.oracles("q_cdc_merge")),
+    // Streaming UPSERT sink: foreachBatch merges each micro-batch into a
+    // keyed store keeping the most-recent row per user — the CDC /
+    // materialized-view sink (Kafka compacted-topic semantics) the
+    // reference's consumer approximates by overwriting whole snapshots.
+    // Recency is decided by (ts, event_id), never arrival order, so
+    // out-of-order and replayed batches converge to the same table (the
+    // cross-batch case is pinned in StreamingSpec with an out-of-order
+    // MemoryStream). Each merge collapses the batch map-side, unions the
+    // existing store, and re-collapses — state lives in the store, not
+    // the stream. Parquet stands in for an ACID table: the merge writes
+    // to a staging dir and swaps, because overwriting a path while the
+    // plan reads it is undefined; on a real deployment this foreachBatch
+    // body is a MERGE INTO an Iceberg/Delta table.
+    // upsert store ≡ last event per user over the whole table
     Q("q_stream_upsert", { (s, d) =>
       val store = Scratch.dir("upsert_store")
       Seq(store, store + ".tmp").foreach(Scratch.clear)
@@ -1426,11 +1426,6 @@ object StreamOps extends QueryModule {
         |      FROM events)
         |WHERE rn = 1 ORDER BY user_id""".stripMargin),
 
-    // Streaming dedup: the stream unioned with itself (every event arrives
-    // twice) then dropDuplicatesWithinWatermark on the event id — the
-    // aggregate must equal the single-copy batch counts. State holds one
-    // key per event inside the watermark horizon only (the streaming
-    // exact-dedup a training-data ingest needs).
     // North-star: APPEND-mode windowed aggregate with late-data DROP
     // discipline proven end-to-end. Four files through a
     // maxFilesPerTrigger=1 stream: the real events; a far-future flush
@@ -1491,6 +1486,11 @@ object StreamOps extends QueryModule {
         |SELECT make_timestamp(CAST(floor(epoch(h_start)/21600)*21600*1000000 AS BIGINT)) AS w_start,
         | max(cnt) AS peak_hourly, CAST(sum(cnt) AS BIGINT) AS total
         |FROM h GROUP BY 1 ORDER BY 1""".stripMargin),
+    // Streaming dedup: the stream unioned with itself (every event arrives
+    // twice) then dropDuplicatesWithinWatermark on the event id — the
+    // aggregate must equal the single-copy batch counts. State holds one
+    // key per event inside the watermark horizon only (the streaming
+    // exact-dedup a training-data ingest needs).
     Q("q_stream_dedup", { (s, d) =>
       val doubled = eventsStream(s, d).unionByName(eventsStream(s, d))
       val agg = doubled

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 import graft.operators.Analytics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.DecimalType
 
 /** Closed-form known-answer tests for the product-analytics / robust-stats
   * pack (session transitions, think time, A/B z-test, MAD, trimmed mean,
@@ -229,6 +230,37 @@ class ProductAnalyticsSpec extends SparkSpec {
     assert(out(1).getAs[Double]("acf") === 1.0)
     // a single pair has zero variance → null, not a divide error
     assert(out(2).isNullAt(out(2).fieldIndex("acf")))
+  }
+
+  test("dailyRevenue: exact DECIMAL day sums, UTC day edges, empty input") {
+    val orders = Seq(("2024-01-01 08:00:00", 0.1), ("2024-01-01 17:30:00", 0.2),
+      ("2024-01-02 23:59:59.999999", 5.55), ("2024-01-03 00:00:00", 1.01))
+      .toDF("ts_s", "o_totalprice")
+      .selectExpr("CAST(ts_s AS TIMESTAMP) AS o_orderdate", "o_totalprice")
+    // as doubles the first day would not be 0.3; the DECIMAL sum is
+    assert(0.1 + 0.2 != 0.3)
+    val dt = Analytics.dailyRevenue(orders).orderBy("day")
+      .as[(java.sql.Date, java.math.BigDecimal)].collect().toSeq
+    assert(dt.map { case (d, v) => (d.toString, v) } === Seq(
+      ("2024-01-01", new java.math.BigDecimal("0.30")),
+      ("2024-01-02", new java.math.BigDecimal("5.55")),
+      ("2024-01-03", new java.math.BigDecimal("1.01"))))
+    val cents = Analytics.dailyCents(orders, "c").orderBy("day")
+      .as[(java.sql.Date, Long)].collect().map(_._2).toSeq
+    assert(cents === Seq(30L, 555L, 101L))
+    val dec = Analytics.dailyCents(orders, "c", DecimalType(18, 0))
+    assert(dec.schema("c").dataType === DecimalType(18, 0))
+    assert(dec.orderBy("day").collect().map(_.getDecimal(1)).toSeq ===
+      Seq(30L, 555L, 101L).map(java.math.BigDecimal.valueOf))
+    assert(Analytics.dailyRevenue(orders.limit(0)).count() === 0L)
+  }
+
+  test("harmonicPower: the first-day scalar attach adds no Spark job") {
+    // 14 jobs with the first day attached as a broadcast cross join
+    val orders = Tables.orders(spark, sfDir)
+    val jobs = jobsDuring { Analytics.harmonicPower(orders).collect() }
+    CacheScope.drain()
+    assert(jobs.size <= 14, s"${jobs.size} jobs")
   }
 
   test("olsTrend: exact line recovered; intercept is the first-month level") {

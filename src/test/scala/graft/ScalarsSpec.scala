@@ -84,14 +84,12 @@ class ScalarsSpec extends SparkSpec {
     assert(out == Seq(1, 5, 0, 2))
   }
 
-  test("yn indicator and empty-to-null") {
-    val out = Seq(("Y", "x"), ("N", ""), (null, " ")).toDF("yn", "s")
-      .select(Scalars.ynIndicator(col("yn")).as("i"),
-        Scalars.emptyToNull(col("s")).as("e"))
+  test("empty-to-null") {
+    val out = Seq("x", "", " ").toDF("s")
+      .select(Scalars.emptyToNull(col("s")).as("e"))
       .collect()
-    assert(out.map(_.getInt(0)).toSeq == Seq(1, 0, 0))
-    assert(out(0).getString(1) == "x")
-    assert(out(1).isNullAt(1) && out(2).isNullAt(1))
+    assert(out(0).getString(0) == "x")
+    assert(out(1).isNullAt(0) && out(2).isNullAt(0))
   }
   test("zorder interleaves bits (known values)") {
     import spark.implicits._
