@@ -232,6 +232,20 @@ object Analytics extends QueryModule {
       daily.columns.filter(_ != "day").map(col): _*)
   }
 
+  /** The last `windowDays` of the daily cents series as (t, y), t = days
+    * since 1970-01-01, persisted: the day spine q_theil_sen and
+    * q_mann_kendall each self-join into its pair frame.
+    */
+  private def trailingDays(orders: DataFrame, windowDays: Int): DataFrame = {
+    val daily = dailyCents(orders, "y")
+      .select(datediff(col("day"), lit("1970-01-01")).as("t"), col("y"))
+    val mx = daily.agg(max(col("t")).as("mt"))
+    daily.crossJoin(broadcast(mx))
+      .filter(col("t") > col("mt") - windowDays)
+      .select("t", "y")
+      .persistTracked()
+  }
+
   /** Integer EWMA (α = ½) of the daily revenue: ewma_u₁ = rc₁ and
     * ewma_uₜ = (rcₜ + ewma_uₜ₋₁) div 2, in exact integer cents, so the
     * state carries no float and no per-step rounding to disagree across
@@ -4211,13 +4225,7 @@ object Analytics extends QueryModule {
     * frame.
     */
   def theilSen(orders: DataFrame, windowDays: Int = 180): DataFrame = {
-    val daily = dailyCents(orders, "y")
-      .select(datediff(col("day"), lit("1970-01-01")).as("t"), col("y"))
-    val mx = daily.agg(max(col("t")).as("mt"))
-    val d = daily.crossJoin(broadcast(mx))
-      .filter(col("t") > col("mt") - windowDays)
-      .select("t", "y")
-      .persistTracked()
+    val d = trailingDays(orders, windowDays)
     val pairs = d.as("a").join(d.as("b"),
         col("b.t") > col("a.t")) // bounded spine² — never corpus²
       .select(expr(
@@ -5014,13 +5022,7 @@ object Analytics extends QueryModule {
     * zero. Scale posture: corpus → day spine → windowDays² pairs.
     */
   def mannKendall(orders: DataFrame, windowDays: Int = 180): DataFrame = {
-    val daily = dailyCents(orders, "y")
-      .select(datediff(col("day"), lit("1970-01-01")).as("t"), col("y"))
-    val mx = daily.agg(max(col("t")).as("mt"))
-    val dd = daily.crossJoin(broadcast(mx))
-      .filter(col("t") > col("mt") - windowDays)
-      .select("t", "y")
-      .persistTracked()
+    val dd = trailingDays(orders, windowDays)
     val sAgg = dd.as("a").join(dd.as("b"), col("b.t") > col("a.t"))
       .select(when(col("b.y") > col("a.y"), 1L)
         .when(col("b.y") < col("a.y"), -1L).otherwise(0L).as("sg"))

@@ -23,6 +23,130 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Similarity extends QueryModule {
 
+  /** The family's fixed-point scale: a coordinate x is the Long ⌊x·2^20⌋,
+    * so sums, dot products and squared distances are exact 64-bit integer
+    * arithmetic on both engines (each oracle spells the same floor).
+    */
+  private val FixedScale = 1048576
+
+  /** ⌊x·2^20⌋ of one coordinate. */
+  private def quant(x: Column): Column =
+    floor(x.cast("double") * FixedScale).cast("long")
+
+  /** [[quant]] over every coordinate of an embedding array. */
+  private def quantArr(emb: Column): Column = transform(emb, quant(_))
+
+  /** Exact squared L2 distance of two fixed-point (Long) vectors. */
+  private def sqDistL(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
+      lit(0L), (acc, v) => acc + v)
+
+  /** Id of the centroid nearest to the fixed-point vector `q` (squared
+    * integer distance; ties to the lower id by struct order). The
+    * centroids ride the plan as literals.
+    */
+  private def nearestCentroid(q: Column, cents: Seq[(Int, Array[Long])]): Column =
+    array_min(array(cents.map { case (cid, c) =>
+      struct(sqDistL(q, array(c.map(lit).toIndexedSeq: _*)).as("d2"),
+        lit(cid).as("cid"))
+    }: _*)).getField("cid")
+
+  /** The one readout of [[TopKPairAggregator]]: per `key`, the k rows of
+    * `scored` with the highest `score` (ties to the lower `id`), as
+    * (key, id, score, rank) with rank 1..k, id a LONG and score a DOUBLE.
+    * The shuffle carries at most k pairs per key per task and no scored
+    * row is ever sorted (no window over the scored set).
+    */
+  private[operators] def topKPerQuery(scored: DataFrame, key: String,
+                                      score: String, id: String,
+                                      k: Int): DataFrame = {
+    val topk = udaf(new TopKPairAggregator(k), Encoders.product[ScoredId])
+    scored.groupBy(key)
+      .agg(topk(col(score).cast("double"), col(id).cast("long")).as("tops"))
+      .select(col(key), posexplode(col("tops")).as(Seq("pos", "t")))
+      .select(col(key), col("t.id").as(id), col("t.sim").as(score),
+        (col("pos") + 1).cast("int").as("rank"))
+  }
+
+  /** G·v with ascending-index sums: the fold order the oracles replay. */
+  private[operators] def matVec(g: Array[Array[Double]], v: Array[Double]): Array[Double] = {
+    val w = new Array[Double](v.length)
+    var i = 0
+    while (i < v.length) {
+      var acc = 0.0; var j = 0
+      while (j < v.length) { acc += g(i)(j) * v(j); j += 1 }
+      w(i) = acc; i += 1
+    }
+    w
+  }
+
+  /** Rank-2 ORTHOGONAL ITERATION (block power method with per-step
+    * Gram–Schmidt; Golub & Van Loan §8.2) on the symmetric matrix `g`,
+    * from the fixed start block v1 = 1…1, v2 = +1/−1 alternating (never
+    * data-dependent): (v1, v2, λ1, λ2) with λ = vᵀ·g·v. Every float op is
+    * a fixed-order fold (ascending-index dots, one sqrt, one divide per
+    * element, Gram–Schmidt in q1 → q2 order), which the DuckDB oracles of
+    * q_pca_subspace, q_pca_project and q_ppmi_svd replay bit for bit: the
+    * op order is part of the contract.
+    */
+  private[operators] def orthIter2(g: Array[Array[Double]], iters: Int)
+      : (Array[Double], Array[Double], Double, Double) = {
+    val dim = g.length
+    def dotD(a: Array[Double], b: Array[Double]): Double = {
+      var acc = 0.0; var j = 0
+      while (j < dim) { acc += a(j) * b(j); j += 1 }
+      acc
+    }
+    var v1 = Array.fill(dim)(1.0)
+    var v2 = Array.tabulate(dim)(j => if (j % 2 == 0) 1.0 else -1.0)
+    var k = 0
+    while (k < iters) {
+      val w1 = matVec(g, v1); val w2 = matVec(g, v2)
+      val n1 = math.sqrt(dotD(w1, w1))
+      val q1 = w1.map(_ / n1)
+      val c = dotD(q1, w2)
+      val w2p = new Array[Double](dim)
+      var j = 0
+      while (j < dim) { w2p(j) = w2(j) - c * q1(j); j += 1 }
+      val n2 = math.sqrt(dotD(w2p, w2p))
+      v1 = q1; v2 = w2p.map(_ / n2)
+      k += 1
+    }
+    (v1, v2, dotD(v1, matVec(g, v1)), dotD(v2, matVec(g, v2)))
+  }
+
+  /** The uncentered Gram matrix of the fixed-point embeddings, in ONE
+    * corpus pass: each row explodes its d(d+1)/2 upper-triangle products
+    * map-side and the shuffle carries (i, j) partial sums, exact Longs,
+    * so partial-aggregation order cannot drift a bit. The d×d result
+    * collects to the driver (dimension-class state). Overflow bound:
+    * |q| ≤ |x|·2^20, so Gram terms stay under 2^53-double exactness and
+    * the Long sums under 2^63 up to ~10^7 rows at |x| ≤ 3; beyond that,
+    * switch the pair sums to DECIMAL(38,0) — same plan.
+    */
+  private def fixedGram(emb: DataFrame): Array[Array[Double]] = {
+    val dim = emb.select(size(col("embedding"))).head().getInt(0)
+    // single-row-group local table: spread before the dim²/2 pair
+    // explode (the Gram build's whole cost — measured 3.3 s in one task)
+    val quant = emb
+      .repartition(emb.sparkSession.sparkContext.defaultParallelism)
+      .select(quantArr(col("embedding")).as("q"))
+    val pairsArr = flatten(transform(sequence(lit(0), lit(dim - 1)), i =>
+      transform(sequence(i, lit(dim - 1)), j =>
+        struct(i.cast("int").as("i"), j.cast("int").as("j"),
+          (element_at(col("q"), i + 1) * element_at(col("q"), j + 1)).as("p")))))
+    val g = Array.ofDim[Double](dim, dim)
+    quant.select(explode(pairsArr).as("e"))
+      .groupBy(col("e.i").as("i"), col("e.j").as("j"))
+      .agg(sum(col("e.p")).as("g"))
+      .collect()
+      .foreach { r =>
+        val i = r.getInt(0); val j = r.getInt(1); val v = r.getLong(2).toDouble
+        g(i)(j) = v; g(j)(i) = v
+      }
+    g
+  }
+
   /** Deterministic ±1 Johnson–Lindenstrauss sign matrix: entry (i, j) is
     * the parity of the first md5 byte of "jl:i:j". Computed once on the
     * driver and embedded as literals — the projection itself is then pure
@@ -63,9 +187,7 @@ object Similarity extends QueryModule {
                         nProbe: Int = 20): DataFrame = {
     val signs = jlSigns(kOut, d)
     val e = emb.filter(col("vec_id") < nProbe && size(col("embedding")) === d)
-      .select(col("vec_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * 1048576).cast("long")).as("e"))
+      .select(col("vec_id"), quantArr(col("embedding")).as("e"))
     // HOF folds instead of unrolled 512-term (proj) / 64-term (dOrig)
     // expression trees: the unrolled form blew the generated
     // doAggregateWithoutKey method past janino's 64 KB limit and the whole
@@ -75,19 +197,14 @@ object Similarity extends QueryModule {
     // identical; x·s with s ∈ {+1,−1} ≡ the old sign-conditional negate.
     val proj = e.select(col("vec_id"), col("e"),
       array((0 until kOut).map { i =>
-        val sArr = typedLit(signs(i).map(_.toLong))
-        aggregate(zip_with(col("e"), sArr, (x, sgn) => x * sgn),
-          lit(0L), (acc, v) => acc + v)
+        Training.intDot(col("e"), typedLit(signs(i).map(_.toLong)))
       }: _*).as("p"))
     val a = proj.select(col("vec_id").as("ida"), col("e").as("ea"),
       col("p").as("pa"))
     val b = proj.select(col("vec_id").as("idb"), col("e").as("eb"),
       col("p").as("pb"))
-    def sqDist(x: Column, y: Column): Column =
-      aggregate(zip_with(x, y, (p, q) => (p - q) * (p - q)),
-        lit(0L), (acc, v) => acc + v)
-    val dOrig = sqDist(col("ea"), col("eb"))
-    val dProj = sqDist(col("pa"), col("pb"))
+    val dOrig = sqDistL(col("ea"), col("eb"))
+    val dProj = sqDistL(col("pa"), col("pb"))
     a.join(b, col("ida") < col("idb")) // nProbe²/2 rows — audit-bounded
       .select(dOrig.as("d_orig"), dProj.as("d_proj"))
       .filter(col("d_orig") > 0) // identical probes: ratio undefined
@@ -98,19 +215,6 @@ object Similarity extends QueryModule {
           count(lit(1)), 6).as("mean_ratio"),
         round(min(col("ratio")), 6).as("min_ratio"),
         round(max(col("ratio")), 6).as("max_ratio"))
-  }
-
-  /** Rank the scored set (query_id, corpus_id, sim) down to k rows per
-    * query via the bounded aggregator; ties broken by corpus id. Output
-    * matches the window formulation row-for-row (rank = 1..k, sim desc).
-    */
-  private def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
-    val topk = udaf(new TopKPairAggregator(k), Encoders.product[ScoredId])
-    scored.groupBy("query_id")
-      .agg(topk(col("sim"), col("corpus_id").cast("long")).as("tops"))
-      .select(col("query_id"), posexplode(col("tops")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.id").as("corpus_id"), col("t.sim").as("sim"),
-        (col("pos") + 1).cast("int").as("rank"))
   }
 
   /** Cosine similarity of two float vectors, computed in double with a
@@ -135,7 +239,7 @@ object Similarity extends QueryModule {
     val scored = c.crossJoin(broadcast(q))
       .select(col("query_id"), col("corpus_id"),
         round(cosineFn(col("q_emb"), col("c_emb")), 6).as("sim"))
-    topKPerQuery(scored, k)
+    topKPerQuery(scored, "query_id", "sim", "corpus_id", k)
   }
 
   /** Sign-LSH bucket key: the sign bits of `nBits` fixed coordinates
@@ -244,17 +348,14 @@ object Similarity extends QueryModule {
   def semanticDedup(corpus: DataFrame, labeled: DataFrame, threshold: Double,
                     cosineFn: (Column, Column) => Column = cosine): DataFrame = {
     val cents = centroids(labeled)
-    val topc = udaf(new TopKPairAggregator(1), Encoders.product[ScoredId])
     // assignment scores via the HOF cosine: centroids are double arrays
     // (exact-decimal means), the native expr is float-only by design
-    val assigned = corpus.crossJoin(broadcast(cents))
+    val scored = corpus.crossJoin(broadcast(cents))
       .select(col("vec_id"),
         round(cosine(col("embedding"), col("centroid")), 6).as("csim"),
         col("label"))
-      .groupBy("vec_id")
-      .agg(topc(col("csim"), col("label").cast("long")).as("tops"))
-      .select(col("vec_id"), explode(col("tops")).as("t"))
-      .select(col("vec_id"), col("t.id").cast("int").as("cluster"))
+    val assigned = topKPerQuery(scored, "vec_id", "csim", "label", 1)
+      .select(col("vec_id"), col("label").cast("int").as("cluster"))
     val withEmb = assigned.join(corpus, Seq("vec_id"))
     val a = withEmb.select(col("cluster"), col("vec_id").as("id_a"),
       col("embedding").as("e_a"))
@@ -274,10 +375,7 @@ object Similarity extends QueryModule {
   /** Top principal component of the embedding corpus — distributed
     * linear algebra in the engine's deterministic idiom:
     *   1. ONE corpus pass accumulates the uncentered Gram matrix in
-    *      FIXED-POINT (q = floor(x·2^20), the q_embed_centroids trick):
-    *      the d(d+1)/2 upper-triangle sums are exact Longs, so
-    *      partial-agg order cannot drift a bit. 2080 structs explode
-    *      map-side per row; the shuffle carries (i, j) partial sums only.
+    *      FIXED-POINT ([[fixedGram]]): exact Long pair sums.
     *   2. The d×d matrix (2080 rows — DIMENSION-sized, the same
     *      driver-state class as the BPE argmax) collects to the driver
     *      and runs `iters` power-iteration steps with max-abs
@@ -285,45 +383,18 @@ object Similarity extends QueryModule {
     *      sequential dot products, one max, one divide — which the
     *      DuckDB oracle replays bit-for-bit (verified: 10 iterations
     *      match at 6dp through ~1e17-magnitude intermediates).
-    * Overflow bound: |q| ≤ |x|·2^20, so Gram terms stay under 2^53-double
-    * exactness and the Long sums under 2^63 up to ~10^7 rows at |x| ≤ 3;
-    * beyond that, switch the pair sums to DECIMAL(38,0) — same plan.
     * Output: (dim, loading) of the dominant eigenvector, scaled to
     * max-abs 1 (sign fixed by the all-ones start vector).
     */
   def pcaTopComponent(emb: DataFrame, iters: Int = 10): DataFrame = {
     val s = emb.sparkSession
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    // single-row-group spread before the dim²/2 pair explode (see
-    // pcaSubspaceVecs)
-    val quant = emb
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(transform(col("embedding"),
-        x => floor(x.cast("double") * 1048576).cast("long")).as("q"))
-    val pairsArr = flatten(transform(sequence(lit(0), lit(dim - 1)), i =>
-      transform(sequence(i, lit(dim - 1)), j =>
-        struct(i.cast("int").as("i"), j.cast("int").as("j"),
-          (element_at(col("q"), i + 1) * element_at(col("q"), j + 1)).as("p")))))
-    val gl = quant.select(explode(pairsArr).as("e"))
-      .groupBy(col("e.i").as("i"), col("e.j").as("j"))
-      .agg(sum(col("e.p")).as("g"))
-      .collect()
-    val G = Array.ofDim[Double](dim, dim)
-    gl.foreach { r =>
-      val i = r.getInt(0); val j = r.getInt(1); val g = r.getLong(2).toDouble
-      G(i)(j) = g; G(j)(i) = g
-    }
-    var v = Array.fill(dim)(1.0)
+    val g = fixedGram(emb)
+    val dim = g.length
+    val v = Array.fill(dim)(1.0)
     var k = 0
     while (k < iters) {
-      val w = new Array[Double](dim)
-      var i = 0
-      while (i < dim) {
-        var acc = 0.0; var j = 0
-        while (j < dim) { acc += G(i)(j) * v(j); j += 1 }
-        w(i) = acc; i += 1
-      }
-      var m = 0.0; i = 0
+      val w = matVec(g, v)
+      var m = 0.0; var i = 0
       while (i < dim) { val a = math.abs(w(i)); if (a > m) m = a; i += 1 }
       i = 0
       while (i < dim) { v(i) = w(i) / m; i += 1 }
@@ -370,70 +441,16 @@ object Similarity extends QueryModule {
       .orderBy("pc", "dim")
   }
 
-  /** The driver-side orthogonal iteration behind [[pcaSubspace]] and
-    * [[pcaProject]]: (v1, v2, share1, share2). Every float op is a
-    * fixed-order fold (see pcaSubspace doc).
+  /** The orthogonal iteration behind [[pcaSubspace]] and [[pcaProject]]
+    * on the fixed-point Gram matrix: (v1, v2, share1, share2), each share
+    * the Rayleigh quotient over the trace.
     */
   private def pcaSubspaceVecs(emb: DataFrame, iters: Int)
       : (Array[Double], Array[Double], Double, Double) = {
-    val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    // single-row-group local table: spread before the dim²/2 pair
-    // explode (the Gram build's whole cost — measured 3.3 s in one task)
-    val quant = emb
-      .repartition(emb.sparkSession.sparkContext.defaultParallelism)
-      .select(transform(col("embedding"),
-      x => floor(x.cast("double") * 1048576).cast("long")).as("q"))
-    val pairsArr = flatten(transform(sequence(lit(0), lit(dim - 1)), i =>
-      transform(sequence(i, lit(dim - 1)), j =>
-        struct(i.cast("int").as("i"), j.cast("int").as("j"),
-          (element_at(col("q"), i + 1) * element_at(col("q"), j + 1)).as("p")))))
-    val gl = quant.select(explode(pairsArr).as("e"))
-      .groupBy(col("e.i").as("i"), col("e.j").as("j"))
-      .agg(sum(col("e.p")).as("g"))
-      .collect()
-    val G = Array.ofDim[Double](dim, dim)
-    gl.foreach { r =>
-      val i = r.getInt(0); val j = r.getInt(1); val g = r.getLong(2).toDouble
-      G(i)(j) = g; G(j)(i) = g
-    }
-    def mul(v: Array[Double]): Array[Double] = {
-      val w = new Array[Double](dim)
-      var i = 0
-      while (i < dim) {
-        var acc = 0.0; var j = 0
-        while (j < dim) { acc += G(i)(j) * v(j); j += 1 }
-        w(i) = acc; i += 1
-      }
-      w
-    }
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      var acc = 0.0; var j = 0
-      while (j < dim) { acc += a(j) * b(j); j += 1 }
-      acc
-    }
-    var v1 = Array.fill(dim)(1.0)
-    var v2 = Array.tabulate(dim)(j => if (j % 2 == 0) 1.0 else -1.0)
-    var k = 0
-    while (k < iters) {
-      val w1 = mul(v1); val w2 = mul(v2)
-      // Gram–Schmidt in fixed q1 -> q2 order (the oracle replays this
-      // exact op sequence)
-      val n1 = math.sqrt(dot(w1, w1))
-      val q1 = w1.map(_ / n1)
-      val c = dot(q1, w2)
-      val w2p = new Array[Double](dim)
-      var j = 0
-      while (j < dim) { w2p(j) = w2(j) - c * q1(j); j += 1 }
-      val n2 = math.sqrt(dot(w2p, w2p))
-      v1 = q1; v2 = w2p.map(_ / n2)
-      k += 1
-    }
-    var tr = 0.0
-    var ti = 0
-    while (ti < dim) { tr += G(ti)(ti); ti += 1 }
-    val share1 = dot(v1, mul(v1)) / tr
-    val share2 = dot(v2, mul(v2)) / tr
-    (v1, v2, share1, share2)
+    val g = fixedGram(emb)
+    val (v1, v2, l1, l2) = orthIter2(g, iters)
+    val tr = g.indices.foldLeft(0.0)((acc, i) => acc + g(i)(i))
+    (v1, v2, l1 / tr, l2 / tr)
   }
 
   /** LOW-RANK PROJECTION onto the [[pcaSubspace]] components — the
@@ -461,14 +478,11 @@ object Similarity extends QueryModule {
       v.map(x => math.floor(x * 1000000 + 0.5).toLong)
     val l1 = array(fp(v1).map(lit(_)): _*)
     val l2 = array(fp(v2).map(lit(_)): _*)
-    val q = transform(col("embedding"),
-      x => floor(x.cast("double") * 1048576).cast("long"))
-    def proj(l: Column) =
-      aggregate(zip_with(q, l, (a, b) => a * b), lit(0L), (acc, x) => acc + x)
+    val q = quantArr(col("embedding"))
+    def proj(l: Column) = round(Training.intDot(q, l).cast("double") /
+      FixedScale.toDouble / 1000000.0, 6)
     emb.filter(col("vec_id") < topN)
-      .select(col("vec_id"),
-        round(proj(l1).cast("double") / 1048576.0 / 1000000.0, 6).as("proj1"),
-        round(proj(l2).cast("double") / 1048576.0 / 1000000.0, 6).as("proj2"))
+      .select(col("vec_id"), proj(l1).as("proj1"), proj(l2).as("proj2"))
       .orderBy("vec_id")
   }
 
@@ -496,8 +510,7 @@ object Similarity extends QueryModule {
     def dec(c: Column) = c.cast(DecimalType(38, 0))
     val q = emb.select(col("label"),
         posexplode(col("embedding")).as(Seq("dim", "x")))
-      .select(col("label"), col("dim"),
-        floor(col("x").cast("double") * 1048576).cast("long").as("qv"))
+      .select(col("label"), col("dim"), quant(col("x")).as("qv"))
       .groupBy("label", "dim").agg(sum(col("qv")).as("s"))
     val n = emb.groupBy("label").agg(count(lit(1)).as("n"))
     val m = q.join(n, Seq("label")).persistTracked()
@@ -572,39 +585,9 @@ object Similarity extends QueryModule {
     val s = emb.sparkSession
     import graft.CacheScope.TrackedDataset
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
-    val q = emb.select(col("vec_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * 1048576).cast("long")).as("q"))
+    val q = emb.select(col("vec_id"), quantArr(col("embedding")).as("q"))
       .persistTracked()
-    var cents: Seq[(Int, Array[Long])] = q.filter(col("vec_id") < k)
-      .orderBy("vec_id").collect()
-      .map(r => (r.getLong(0).toInt, r.getSeq[Long](1).toArray)).toSeq
-    var sizes: Map[Int, Long] = Map.empty
-    for (_ <- 1 to iters) {
-      val centArr = array(cents.map { case (cid, c) =>
-        val carr = array(c.map(lit).toIndexedSeq: _*)
-        struct(
-          aggregate(zip_with(col("q"), carr, (a, b) => (a - b) * (a - b)),
-            lit(0L), (acc, x) => acc + x).as("d2"),
-          lit(cid).as("cid"))
-      }.toIndexedSeq: _*)
-      val assigned = q.select(col("vec_id"), col("q"),
-        array_min(centArr).getField("cid").as("cid"))
-      val agg = assigned.select(col("cid"), posexplode(col("q")))
-        .groupBy("cid", "pos")
-        .agg(sum(col("col")).as("s"), count(lit(1)).as("n"))
-        .collect()
-      sizes = agg.groupBy(_.getInt(0))
-        .map { case (cid, rs) => cid -> rs.head.getLong(3) }
-      val updated = agg.groupBy(_.getInt(0)).map { case (cid, rs) =>
-        val c = new Array[Long](dim)
-        rs.foreach { r =>
-          c(r.getInt(1)) = math.floor(r.getLong(2).toDouble / r.getLong(3)).toLong
-        }
-        cid -> c
-      }
-      cents = cents.map { case (cid, old) => (cid, updated.getOrElse(cid, old)) }
-    }
+    val (cents, sizes) = intKmeansCentroids(q, k, iters, dim)
     import s.implicits._
     cents.flatMap { case (cid, c) =>
       c.zipWithIndex.map { case (v, i) =>
@@ -625,7 +608,7 @@ object Similarity extends QueryModule {
     val scored = c.join(broadcast(q), Seq("bucket"))
       .select(col("query_id"), col("corpus_id"),
         round(cosineFn(col("q_emb"), col("c_emb")), 6).as("sim"))
-    topKPerQuery(scored, k)
+    topKPerQuery(scored, "query_id", "sim", "corpus_id", k)
   }
 
   /** IVF coarse index: per-cluster centroids as position-wise exact means
@@ -662,18 +645,15 @@ object Similarity extends QueryModule {
     // nprobe nearest centroids per query via the same bounded aggregator
     // (centroid count is small, but the pattern stays k-bounded at any
     // query cardinality — no per-query window sort)
-    val topc = udaf(new TopKPairAggregator(nprobe), Encoders.product[ScoredId])
-    val probe = assigned.groupBy("query_id")
-      .agg(topc(col("csim"), col("label").cast("long")).as("tops"))
-      .select(col("query_id"), explode(col("tops")).as("t"))
-      .select(col("query_id"), col("t.id").cast("int").as("label"))
+    val probe = topKPerQuery(assigned, "query_id", "csim", "label", nprobe)
+      .select(col("query_id"), col("label").cast("int").as("label"))
       .join(broadcast(q), Seq("query_id"))
     val c = corpus.select(col("vec_id").as("corpus_id"),
       col("embedding").as("c_emb"), col("label"))
     val scored = c.join(broadcast(probe), Seq("label"))
       .select(col("query_id"), col("corpus_id"),
         round(cosine(col("q_emb"), col("c_emb")), 6).as("sim"))
-    topKPerQuery(scored, k)
+    topKPerQuery(scored, "query_id", "sim", "corpus_id", k)
   }
 
   /** Maximal-marginal-relevance rerank (Carbonell & Goldstein 1998): the
@@ -703,24 +683,18 @@ object Similarity extends QueryModule {
                 k: Int = 5): DataFrame = {
     val s = emb.sparkSession
     import s.implicits._
-    def quant(c: Column) =
-      transform(c, x => floor(x.cast("double") * 1048576).cast("long"))
     val base = emb.filter(size(col("embedding")) === 64)
     val q = base.filter(col("vec_id") < nQ)
-      .select(col("vec_id").as("qid"), quant(col("embedding")).as("qe"))
+      .select(col("vec_id").as("qid"), quantArr(col("embedding")).as("qe"))
     val c = base.filter(col("vec_id") >= nQ)
-      .select(col("vec_id").as("cid"), quant(col("embedding")).as("ce"))
+      .select(col("vec_id").as("cid"), quantArr(col("embedding")).as("ce"))
     val rel = c.crossJoin(broadcast(q))
       .select(col("qid"), col("cid"),
-        aggregate(zip_with(col("qe"), col("ce"), (a, b) => a * b),
-          lit(0L), (acc, x) => acc + x).as("rel"))
+        Training.intDot(col("qe"), col("ce")).as("rel"))
     // |rel| ≤ 64·(3.2e6)² ≈ 6.5e14 < 2^53 — exact through the double-typed
     // aggregator, cast back lossless
-    val topk = udaf(new TopKPairAggregator(shortlist), Encoders.product[ScoredId])
-    val short = rel.groupBy("qid")
-      .agg(topk(col("rel").cast("double"), col("cid")).as("tops"))
-      .select(col("qid"), explode(col("tops")).as("t"))
-      .select(col("qid"), col("t.id").as("cid"), col("t.sim").cast("long").as("rel"))
+    val short = topKPerQuery(rel, "qid", "rel", "cid", shortlist)
+      .select(col("qid"), col("cid"), col("rel").cast("long").as("rel"))
     val cand = short.join(c, Seq("cid"))
       .select(col("qid"), col("cid"), col("rel"), col("ce"))
       .as[(Long, Long, Long, Seq[Long])]
@@ -791,63 +765,53 @@ object Similarity extends QueryModule {
     */
   def lateInteractionTopK(emb: DataFrame, nQ: Int = 2, groupSize: Int = 8,
                           k: Int = 10): DataFrame = {
-    def quant(c: Column) =
-      transform(c, x => floor(x.cast("double") * 1048576).cast("long"))
     val base = emb.filter(size(col("embedding")) === 64)
       .select((col("vec_id") / groupSize).cast("long").as("doc"),
-        col("vec_id").as("vid"), quant(col("embedding")).as("e"))
+        col("vec_id").as("vid"), quantArr(col("embedding")).as("e"))
     val qs = base.filter(col("doc") < nQ)
       .select(col("doc").as("qdoc"), col("vid").as("qvid"), col("e").as("qe"))
     val ds = base.filter(col("doc") >= nQ)
     val dots = ds.crossJoin(broadcast(qs))
       .select(col("qdoc"), col("qvid"), col("doc"),
-        aggregate(zip_with(col("qe"), col("e"), (a, b) => a * b),
-          lit(0L), (acc, x) => acc + x).as("dot"))
+        Training.intDot(col("qe"), col("e")).as("dot"))
     val maxes = dots.groupBy("qdoc", "qvid", "doc")
       .agg(max(col("dot")).as("mx"))
     val scored = maxes.groupBy("qdoc", "doc")
       .agg(sum(col("mx")).as("score"))
-    val topk = udaf(new TopKPairAggregator(k), Encoders.product[ScoredId])
     // |score| ≤ groupSize·64·(3.2e6)² ≈ 5e15 < 2^53 — exact in double
-    scored.groupBy("qdoc")
-      .agg(topk(col("score").cast("double"), col("doc")).as("tops"))
-      .select(col("qdoc"), posexplode(col("tops")).as(Seq("pos", "t")))
-      .select(col("qdoc"), col("t.id").as("doc"),
-        col("t.sim").cast("long").as("score"),
-        (col("pos") + 1).cast("int").as("rank"))
+    topKPerQuery(scored, "qdoc", "score", "doc", k)
+      .select(col("qdoc"), col("doc"), col("score").cast("long").as("score"),
+        col("rank"))
       .orderBy("qdoc", "rank")
   }
 
-  /** Integer Lloyd iterations over a pre-quantized (vec_id, q) frame —
-    * the [[kmeans]] core without the quantization/reporting, reused per
-    * PQ subspace. Centroids are driver state (k·dim Longs, dimension
+  /** The one integer Lloyd loop, over a pre-quantized (vec_id, q) frame:
+    * [[kmeans]] and every PQ subspace run it. Centroids init from the
+    * first `k` vectors by id and are driver state (k·dim Longs, dimension
     * class); every update stores ⌊Σq/n⌋ so the DuckDB twin replays each
     * round bit-for-bit; a cluster that loses every member keeps its
-    * previous centroid; assignment ties break to the lower cid.
+    * previous centroid; assignment ties break to the lower cid. Returns
+    * the centroids and the last round's cluster sizes.
     */
-  private def intKmeansCentroids(q: DataFrame, k: Int, iters: Int,
-                                 dim: Int): Seq[(Int, Array[Long])] = {
+  private def intKmeansCentroids(q: DataFrame, k: Int, iters: Int, dim: Int)
+      : (Seq[(Int, Array[Long])], Map[Int, Long]) = {
     var cents: Seq[(Int, Array[Long])] = q.filter(col("vec_id") < k)
       .orderBy("vec_id").collect()
       .map(r => (r.getLong(0).toInt, r.getSeq[Long](1).toArray)).toSeq
+    var sizes: Map[Int, Long] = Map.empty
     for (_ <- 1 to iters) {
-      val centArr = array(cents.map { case (cid, c) =>
-        val carr = array(c.map(lit).toIndexedSeq: _*)
-        struct(
-          aggregate(zip_with(col("q"), carr, (a, b) => (a - b) * (a - b)),
-            lit(0L), (acc, x) => acc + x).as("d2"),
-          lit(cid).as("cid"))
-      }.toIndexedSeq: _*)
       // two-step select: combining getField with posexplode in ONE
       // select makes Spark's Generate analysis drop the struct field
       // names (FIELD_NOT_FOUND col1/col2 — reproduced in PlansSpec-era
       // probing); the split is load-bearing
       val agg = q
-        .select(array_min(centArr).getField("cid").as("cid"), col("q"))
+        .select(nearestCentroid(col("q"), cents).as("cid"), col("q"))
         .select(col("cid"), posexplode(col("q")))
         .groupBy("cid", "pos")
         .agg(sum(col("col")).as("s"), count(lit(1)).as("n"))
         .collect()
+      sizes = agg.groupBy(_.getInt(0))
+        .map { case (cid, rs) => cid -> rs.head.getLong(3) }
       val updated = agg.groupBy(_.getInt(0)).map { case (cid, rs) =>
         val c = new Array[Long](dim)
         rs.foreach { r =>
@@ -858,7 +822,7 @@ object Similarity extends QueryModule {
       }
       cents = cents.map { case (cid, old) => (cid, updated.getOrElse(cid, old)) }
     }
-    cents
+    (cents, sizes)
   }
 
   /** PRODUCT QUANTIZATION + ADC retrieval (Jégou et al. 2011 — the
@@ -907,8 +871,7 @@ object Similarity extends QueryModule {
     // Results are unchanged by construction: no arithmetic crosses
     // subspaces, each future only reads the materialized cache.
     val q = emb.filter(size(col("embedding")) === m * subDim)
-      .select(col("vec_id"), transform(col("embedding"),
-        x => floor(x.cast("double") * 1048576).cast("long")).as("qv"))
+      .select(col("vec_id"), quantArr(col("embedding")).as("qv"))
       .eagerTracked()
     val books: Seq[Seq[(Int, Array[Long])]] = {
       import scala.concurrent.{Await, Future}
@@ -918,19 +881,12 @@ object Similarity extends QueryModule {
         Future(intKmeansCentroids(
           q.select(col("vec_id"),
             slice(col("qv"), sub * subDim + 1, subDim).as("q")),
-          kCent, iters, subDim))
+          kCent, iters, subDim)._1)
       }.map(Await.result(_, Duration.Inf))
     }
     val codeCols = (0 until m).map { sub =>
-      val centArr = array(books(sub).map { case (cid, c) =>
-        val carr = array(c.map(lit).toIndexedSeq: _*)
-        struct(aggregate(
-            zip_with(slice(col("qv"), sub * subDim + 1, subDim), carr,
-              (a, b) => (a - b) * (a - b)),
-            lit(0L), (acc, x) => acc + x).as("d2"),
-          lit(cid).as("cid"))
-      }.toIndexedSeq: _*)
-      array_min(centArr).getField("cid").as(s"code$sub")
+      nearestCentroid(slice(col("qv"), sub * subDim + 1, subDim), books(sub))
+        .as(s"code$sub")
     }
     val coded = q.filter(col("vec_id") >= nQ)
       .select((col("vec_id").as("doc_id") +: codeCols): _*)
@@ -951,16 +907,14 @@ object Similarity extends QueryModule {
       }
       (qid, dts(0), dts(1), dts(2), dts(3))
     }.toSeq.toDF("qid", "dt0", "dt1", "dt2", "dt3")
+    // both stages rank by NEGATED distance: nearest first
     val scored = coded.crossJoin(broadcast(dtRows))
       .select(col("qid"), col("doc_id"),
-        (0 until m).map(sub =>
-          element_at(col(s"dt$sub"), col(s"code$sub") + 1)).reduce(_ + _)
-          .as("adc_dist"))
-    val topS = udaf(new TopKPairAggregator(shortlist), Encoders.product[ScoredId])
-    val short = scored.groupBy("qid")
-      .agg(topS((-col("adc_dist")).cast("double"), col("doc_id")).as("tops"))
-      .select(col("qid"), explode(col("tops")).as("t"))
-      .select(col("qid"), col("t.id").as("doc_id"))
+        (-(0 until m).map(sub =>
+          element_at(col(s"dt$sub"), col(s"code$sub") + 1)).reduce(_ + _))
+          .as("neg_adc"))
+    val short = topKPerQuery(scored, "qid", "neg_adc", "doc_id", shortlist)
+      .select(col("qid"), col("doc_id"))
     // exact rescore of the shortlist only: query vectors ride a broadcast
     val qdf = qvecs.toSeq.map { case (qid, v) => (qid, v.toSeq) }
       .toDF("qid", "qe")
@@ -968,15 +922,10 @@ object Similarity extends QueryModule {
       .join(q.select(col("vec_id").as("doc_id"), col("qv")), Seq("doc_id"))
       .join(broadcast(qdf), Seq("qid"))
       .select(col("qid"), col("doc_id"),
-        aggregate(zip_with(col("qe"), col("qv"), (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x).as("l2_dist"))
-    val topK = udaf(new TopKPairAggregator(k), Encoders.product[ScoredId])
-    resc.groupBy("qid")
-      .agg(topK((-col("l2_dist")).cast("double"), col("doc_id")).as("tops"))
-      .select(col("qid"), posexplode(col("tops")).as(Seq("pos", "t")))
-      .select(col("qid"), col("t.id").as("doc_id"),
-        (-col("t.sim")).cast("long").as("l2_dist"),
-        (col("pos") + 1).cast("int").as("rank"))
+        (-sqDistL(col("qe"), col("qv"))).as("neg_l2"))
+    topKPerQuery(resc, "qid", "neg_l2", "doc_id", k)
+      .select(col("qid"), col("doc_id"),
+        (-col("neg_l2")).cast("long").as("l2_dist"), col("rank"))
       .orderBy("qid", "rank")
   }
 
@@ -1107,8 +1056,7 @@ object Similarity extends QueryModule {
   def calinskiHarabasz(emb: DataFrame): DataFrame = {
     val g = emb
       .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "x")))
-      .select(col("label"), col("dim"),
-        floor(col("x").cast("double") * 1048576).cast("long").as("q"))
+      .select(col("label"), col("dim"), quant(col("x")).as("q"))
       .groupBy("label", "dim")
       .agg(count(lit(1)).as("n"), sum(col("q")).as("s"),
         sum((col("q") * col("q")).cast(DecimalType(38, 0))).as("ss"))
@@ -1159,8 +1107,7 @@ object Similarity extends QueryModule {
     import graft.CacheScope.TrackedDataset
     val qv = emb
       .select(posexplode(col("embedding")).as(Seq("dim", "x")))
-      .select(col("dim"),
-        floor(col("x").cast("double") * 1048576).cast("long").as("q"))
+      .select(col("dim"), quant(col("x")).as("q"))
       .groupBy("dim", "q").agg(count(lit(1)).as("c"))
       .persistTracked()
     val tot = qv.groupBy("dim")
@@ -1175,8 +1122,9 @@ object Similarity extends QueryModule {
       .agg(min(col("q")).as("mq"))
     med.join(tot, Seq("dim"))
       .select(col("dim").cast("long").as("dim"), col("n").as("n_vectors"),
-        round(col("mq").cast("double") / 1048576.0, 6).as("median_coord"),
-        round(col("sq").cast("double") / col("n") / 1048576.0, 6)
+        round(col("mq").cast("double") / FixedScale.toDouble, 6)
+          .as("median_coord"),
+        round(col("sq").cast("double") / col("n") / FixedScale.toDouble, 6)
           .as("mean_coord"))
       .orderBy("dim")
   }
@@ -1814,7 +1762,8 @@ object Similarity extends QueryModule {
         .select(col("query_id"), col("corpus_id"),
           round(cosN(col("q_emb"), col("c_emb")), 6).as("sim"))
       val hits = exact.select("query_id", "corpus_id")
-        .intersect(topKPerQuery(rescored, 5).select("query_id", "corpus_id"))
+        .intersect(topKPerQuery(rescored, "query_id", "sim", "corpus_id", 5)
+          .select("query_id", "corpus_id"))
         .groupBy("query_id").agg(count(lit(1)).as("n_hit"))
       exact.select("query_id").distinct()
         .join(hits, Seq("query_id"), "left")
@@ -2058,17 +2007,8 @@ object Similarity extends QueryModule {
         .map { case (cid, rows) =>
           (cid, rows.sortBy(_.getInt(1)).map(_.getLong(2)).toArray)
         }.toSeq.sortBy(_._1)
-      val q = emb.select(col("vec_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * 1048576).cast("long")).as("q"))
-      val centArr = array(cents.map { case (cid, c) =>
-        val carr = array(c.map(lit).toIndexedSeq: _*)
-        struct(
-          aggregate(zip_with(col("q"), carr, (a, b) => (a - b) * (a - b)),
-            lit(0L), (acc, x) => acc + x).as("d2"),
-          lit(cid).as("cid"))
-      }.toIndexedSeq: _*)
-      q.select(col("vec_id"), array_min(centArr).getField("cid").as("cid"))
+      emb.select(col("vec_id"), quantArr(col("embedding")).as("q"))
+        .select(col("vec_id"), nearestCentroid(col("q"), cents).as("cid"))
         .groupBy("cid")
         .agg(sum(when(col("vec_id") < 400, 1L).otherwise(0L)).as("n_base"),
           sum(when(col("vec_id") >= 400, 1L).otherwise(0L)).as("n_new"))
@@ -2400,7 +2340,7 @@ object Similarity extends QueryModule {
         .select(col("label"), posexplode(col("embedding")).as(Seq("dim", "x")))
         .filter(col("dim") < 8)
         .select(col("label"), col("dim").cast("long").as("dim"),
-          floor(col("x").cast("double") * 1048576).cast("long").as("q"))
+          quant(col("x")).as("q"))
         .groupBy("label", "dim")
         .agg(count(lit(1)).as("n"), sum(col("q")).as("sum_q"))
         .orderBy("label", "dim")

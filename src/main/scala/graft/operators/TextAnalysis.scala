@@ -807,9 +807,10 @@ object TextAnalysis extends QueryModule {
     * MILLI-BITS frozen to integers via the shared
     * ⌊log2(r)·1000 + 0.5⌋ floor spell (cb ≥ 2 evidence gate, r > 1
     * positive gate — the q_ppmi_topk posture). The top-2 left singular
-    * subspace comes from orthogonal iteration on G = M·Mᵀ (the
-    * q_pca_subspace machinery verbatim: fixed v₀, Gram–Schmidt in fixed
-    * q1→q2 order, every float op a fixed-order fold), and the released
+    * subspace comes from orthogonal iteration on G = M·Mᵀ
+    * ([[Similarity.orthIter2]], shared with q_pca_subspace: fixed v₀,
+    * Gram–Schmidt in fixed q1→q2 order, every float op a fixed-order
+    * fold), and the released
     * embedding is the Levy–Goldberg W = U·Σ^½ — e_k(i) = u_k(i)·λ_k^¼,
     * via sqrt(sqrt(λ)) (sqrt is IEEE-exact; pow(·,0.25) is not).
     *
@@ -850,53 +851,8 @@ object TextAnalysis extends QueryModule {
     cells.collect().foreach { row => // ≤ v² rows
       m(row.getInt(0) - 1)(row.getInt(1) - 1) = row.getLong(2).toDouble
     }
-    val g = Array.ofDim[Double](dim, dim)
-    var gi = 0
-    while (gi < dim) {
-      var gk = 0
-      while (gk < dim) {
-        var acc = 0.0
-        var gj = 0
-        while (gj < dim) { acc += m(gi)(gj) * m(gk)(gj); gj += 1 }
-        g(gi)(gk) = acc
-        gk += 1
-      }
-      gi += 1
-    }
-    def mul(x: Array[Double]): Array[Double] = {
-      val w = new Array[Double](dim)
-      var i = 0
-      while (i < dim) {
-        var acc = 0.0
-        var j = 0
-        while (j < dim) { acc += g(i)(j) * x(j); j += 1 }
-        w(i) = acc; i += 1
-      }
-      w
-    }
-    def dot(a: Array[Double], b: Array[Double]): Double = {
-      var acc = 0.0
-      var j = 0
-      while (j < dim) { acc += a(j) * b(j); j += 1 }
-      acc
-    }
-    var v1 = Array.fill(dim)(1.0)
-    var v2 = Array.tabulate(dim)(j => if (j % 2 == 0) 1.0 else -1.0)
-    var it = 0
-    while (it < iters) {
-      val w1 = mul(v1); val w2 = mul(v2)
-      val n1 = math.sqrt(dot(w1, w1))
-      val q1 = w1.map(_ / n1)
-      val c = dot(q1, w2)
-      val w2p = new Array[Double](dim)
-      var j = 0
-      while (j < dim) { w2p(j) = w2(j) - c * q1(j); j += 1 }
-      val n2 = math.sqrt(dot(w2p, w2p))
-      v1 = q1; v2 = w2p.map(_ / n2)
-      it += 1
-    }
-    val l1 = dot(v1, mul(v1))
-    val l2 = dot(v2, mul(v2))
+    val g = m.map(Similarity.matVec(m, _)) // G = M·Mᵀ, row by row
+    val (v1, v2, l1, l2) = Similarity.orthIter2(g, iters)
     val spark = docs.sparkSession
     import spark.implicits._
     (0 until dim).map(i => (i + 1, words(i), v1(i), v2(i), l1, l2))

@@ -128,14 +128,7 @@ object Training extends QueryModule {
         round(when(col("q_n2") === 0 || col("c_n2") === 0, 0.0)
           .otherwise(intDot(col("q_codes"), col("c_codes")) /
             (sqrt(col("q_n2")) * sqrt(col("c_n2")))), 6).as("qsim"))
-    val topk = udaf(new graft.functions.TopKPairAggregator(k),
-      org.apache.spark.sql.Encoders.product[graft.functions.ScoredId])
-    scored.groupBy("query_id")
-      .agg(topk(col("qsim"), col("corpus_id").cast("long")).as("tops"))
-      .select(col("query_id"), posexplode(col("tops")).as(Seq("pos", "t")))
-      .select(col("query_id"), col("t.id").as("corpus_id"),
-        col("t.sim").as("qsim"),
-        (col("pos") + 1).cast("int").as("rank"))
+    Similarity.topKPerQuery(scored, "query_id", "qsim", "corpus_id", k)
   }
 
   // ===== embedding-space outliers =====

@@ -88,6 +88,13 @@ class DedupSimSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val want = (1L to 16L).map(i => (i, 1L)).toSet + ((30L, 30L))
     assert(got == want)
+    // INT ids take the distributed pointer-jumping loop (the driver
+    // union-find only serves LONG ids): same min-id labels
+    val intPairs = pairs.select(col("id_a").cast("int").as("id_a"),
+      col("id_b").cast("int").as("id_b"))
+    val gotInt = Dedup.componentLabelsJump(intPairs).collect()
+      .map(r => (r.getInt(0).toLong, r.getInt(1).toLong)).toSet
+    assert(gotInt == want)
   }
 
   test("survivor policy keeps the longest doc, ties to the lower id") {

@@ -241,6 +241,14 @@ class Round6Spec extends SparkSpec {
     val clusters = Dedup.dedupClusters(pairs).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(clusters.toSeq == Seq((89L, 12L, 100L)))
+    // the same chain with INT ids: the id-type gate skips the driver
+    // union-find, so the distributed min-label rounds and their
+    // checkpoint handoffs are what answer here
+    val intPairs = pairs.select(col("id_a").cast("int").as("id_a"),
+      col("id_b").cast("int").as("id_b"))
+    val intLabels = Dedup.componentLabels(intPairs).collect()
+      .map(r => (r.getInt(0).toLong, r.getInt(1).toLong)).toMap
+    assert(intLabels == labels, s"distributed loop: $intLabels")
   }
 
   test("BPE encode: empty merges, short docs, and chained merges") {
